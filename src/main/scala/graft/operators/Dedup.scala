@@ -203,31 +203,34 @@ object Dedup {
                 case Some(df) =>
                   building.remove(key); latch.countDown(); df
                 case None =>
-                  val built =
-                    try Some(build)
-                    finally { building.remove(key); latch.countDown() }
-                  val df = built.get
-                  val bytes = cachedPlanBytes(df) // measured outside the lock
-                  synchronized {
-                    m.put(key, (df, bytes))
-                    def mine = m.toSeq
-                      .filter(_._1.productElement(0) == key.productElement(0))
-                    // entry bound, oldest first — never the new entry
-                    mine.dropRight(cacheBound).foreach { case (k0, (d0, _)) =>
-                      m.remove(k0); d0.unpersist()
-                    }
-                    // byte budget, oldest first — never the new entry
-                    var resident = mine
-                    while (resident.size > 1 &&
-                        resident.map(_._2._2).sum > cacheBytesBound) {
-                      val (k0, (d0, _)) = resident.head
-                      m.remove(k0); d0.unpersist()
-                      resident = mine
-                    }
+                  // the entry is measured and inserted BEFORE the latch
+                  // is released: a woken waiter must find it in `m`, or
+                  // it rebuilds the key and one persisted table leaks
+                  try {
+                    val df = build
+                    val bytes = cachedPlanBytes(df) // outside the monitor
+                    insert(key, df, bytes)
                     df
-                  }
+                  } finally { building.remove(key); latch.countDown() }
               }
           }
+      }
+    }
+    private def insert(key: K, df: DataFrame, bytes: Long): Unit = synchronized {
+      m.put(key, (df, bytes))
+      def mine = m.toSeq
+        .filter(_._1.productElement(0) == key.productElement(0))
+      // entry bound, oldest first — never the new entry
+      mine.dropRight(cacheBound).foreach { case (k0, (d0, _)) =>
+        m.remove(k0); d0.unpersist()
+      }
+      // byte budget, oldest first — never the new entry
+      var resident = mine
+      while (resident.size > 1 &&
+          resident.map(_._2._2).sum > cacheBytesBound) {
+        val (k0, (d0, _)) = resident.head
+        m.remove(k0); d0.unpersist()
+        resident = mine
       }
     }
     def releaseSession(session: SparkSession): Unit = synchronized {

@@ -437,9 +437,12 @@ object StoreReconciler {
 }
 
 /** Compaction planning + execution (reference: pkg/compaction/compactor.go).
-  * Plan: group eligible level-L segments per partition into bins of at
-  * most maxSegments, requiring at least minSegments per bin — the
+  * [[plan]]: group eligible level-L segments per partition into bins of
+  * at most maxSegments, requiring at least minSegments per bin — the
   * greedy count-capped selection, window arithmetic only.
+  * [[leveledRun]]: the full leveled selection for one partition, a
+  * sequential greedy cut on the driver, shared by [[planLeveled]] and
+  * the store's executor.
   */
 object Compactor {
   def plan(segments: DataFrame, level: Int, minSegments: Int,
@@ -479,23 +482,38 @@ object Compactor {
       .withColumn("level", lit(level + 1))
   }
 
-  /** Full leveled-compaction planning — the reference's complete
-    * candidate-selection semantics (compactor.go getSegments,
-    * 163-230), one output segment per partition per run, expressed as
-    * window arithmetic (no driver loop, shuffles once on part_id):
+  /** One segment as the leveled planner sees it: identity, size and
+    * creation time (the reference's SegmentInfo).
+    */
+  final case class LeveledSegment(partId: Int, level: Int, startOffset: Long,
+      endOffset: Long, segBytes: Long, createdEpoch: Long)
+
+  /** One partition's leveled run: the output segment key and level,
+    * the segments counted against the caps (`inputSegments`,
+    * `inBytes`), and every segment the run consumes — those plus the
+    * contained segments before the last counted one.
+    */
+  final case class LeveledRun(partId: Int, startOffset: Long, endOffset: Long,
+      level: Int, inputSegments: Long, inBytes: Long,
+      consumed: Seq[LeveledSegment])
+
+  /** Leveled-compaction planning for ONE partition — the reference's
+    * complete candidate selection (compactor.go getSegments, 163-230),
+    * the same sequential greedy cut, run on the driver over the
+    * metadata-scale listing:
     *
     *   - segments with level < minLevel are invisible;
     *   - segments with level > maxLevel are not merged again but set
     *     the RESUME point: merging restarts after their max endOffset;
     *   - eligible segments (minLevel..maxLevel) must be at least
     *     minAgeSec old at nowEpoch (MinSegmentAge gate);
-    *   - a segment wholly below the running coverage (endOffset <=
-    *     running max) is CONSUMED but not counted — the
-    *     previously-compacted-overlap skip;
+    *   - in (start, end) order, a segment wholly below the running
+    *     coverage (endOffset <= running max) is CONSUMED but not
+    *     counted — the previously-compacted-overlap skip;
     *   - greedy accumulation stops once the run has maxSegments
     *     segments or maxBytes bytes (inclusive of the crossing
     *     segment, like egress isFull);
-    *   - a partition below minSegments / minBytes is skipped whole.
+    *   - a partition below minSegments / minBytes gets no run.
     *
     * Deviation (documented): on a coverage hole the reference errors
     * the whole run ('missing message range'); graft stops at the gap
@@ -503,76 +521,72 @@ object Compactor {
     * to GapDetector — same no-absorption guarantee, no failed run.
     *
     * `nowEpoch` is a parameter, not a clock read, so plans are
-    * deterministic and oracle-checkable.
+    * deterministic and oracle-checkable. This is the only leveled
+    * planner: [[planLeveled]] applies it per partition group and
+    * `FsSegmentStore.compactLeveled` calls it on its listing, so the
+    * oracle-gated query and the store cannot drift.
     */
-  /** Per-segment selection flags for one leveled-compaction run — the
-    * row-level view behind [[planLeveled]], shared with the store
-    * executor (`FsSegmentStore.compactLeveled`) so plan and execution
-    * cannot drift. Adds to each eligible segment: `contained` (wholly
-    * below running coverage — consumed but not counted), `included`
-    * (inside the count/byte caps), `consumed` (part of the run:
-    * everything up to the last included segment), `resume_end`.
-    */
-  def planLeveledFlags(segments: DataFrame, minLevel: Int, maxLevel: Int,
-      minAgeSec: Long, nowEpoch: Long, maxSegments: Int,
-      maxBytes: Long): DataFrame = {
-    graft.core.Configs.Compaction(minLevel = minLevel, maxLevel = maxLevel,
-      maxSegments = maxSegments, maxBytes = maxBytes,
-      minAgeSec = minAgeSec).validated
-    val resume = segments
-      .filter(col("level") > maxLevel)
-      .groupBy("part_id").agg(max("end_offset").as("resume_end"))
-    val w = Window.partitionBy("part_id").orderBy("start_offset", "end_offset")
-    val before = w.rowsBetween(Window.unboundedPreceding, -1)
-    segments
-      .filter(col("level").between(minLevel, maxLevel))
-      .filter(col("created_epoch") <= nowEpoch - minAgeSec)
-      .join(resume, Seq("part_id"), "left")
-      .withColumn("base", greatest(
-        coalesce(max("end_offset").over(before), lit(-1L)),
-        coalesce(col("resume_end"), lit(-1L))))
-      .withColumn("contained", col("end_offset") <= col("base"))
-      .withColumn("gap", col("base") >= 0 &&
-        col("start_offset") > col("base") + 1 && !col("contained"))
-      .withColumn("gaps_so_far",
-        sum(when(col("gap"), 1L).otherwise(0L))
-          .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .filter(col("gaps_so_far") === 0)
-      .withColumn("cnt_before", coalesce(
-        sum(when(!col("contained"), 1L).otherwise(0L)).over(before), lit(0L)))
-      .withColumn("bytes_before", coalesce(
-        sum(when(!col("contained"), col("seg_bytes"))).over(before), lit(0L)))
-      .withColumn("included", !col("contained") &&
-        col("cnt_before") < maxSegments && col("bytes_before") < maxBytes)
-      .withColumn("idx", row_number().over(w))
-      .withColumn("last_inc",
-        max(when(col("included"), col("idx"))).over(Window.partitionBy("part_id")))
-      .withColumn("consumed", col("idx") <= col("last_inc"))
+  def leveledRun(segments: Seq[LeveledSegment], minLevel: Int, maxLevel: Int,
+      minAgeSec: Long, nowEpoch: Long, minSegments: Long, maxSegments: Long,
+      minBytes: Long, maxBytes: Long): Option[LeveledRun] = {
+    val resumeEnd = segments.filter(_.level > maxLevel).map(_.endOffset).maxOption
+    val eligible = segments
+      .filter(s => s.level >= minLevel && s.level <= maxLevel &&
+        s.createdEpoch <= nowEpoch - minAgeSec)
+      .sortBy(s => (s.startOffset, s.endOffset, s.level))
+    val consumed = Vector.newBuilder[LeveledSegment]
+    var pending = Vector.empty[LeveledSegment] // contained, not yet consumed
+    var (base, count, bytes, first) = (resumeEnd.getOrElse(-1L), 0L, 0L, 0L)
+    val it = eligible.iterator
+    var open = true
+    while (open && it.hasNext) {
+      val s = it.next()
+      if (s.endOffset <= base) pending :+= s
+      else if ((base >= 0 && s.startOffset > base + 1) || // a gap
+          count >= maxSegments || bytes >= maxBytes) open = false
+      else {
+        consumed ++= pending :+ s
+        pending = Vector.empty
+        if (count == 0) first = s.startOffset
+        count += 1; bytes += s.segBytes; base = s.endOffset
+      }
+    }
+    val inputs = consumed.result()
+    if (count == 0 || count < minSegments || bytes < minBytes) None
+    else Some(LeveledRun(inputs.head.partId, resumeEnd.fold(first)(_ + 1),
+      base, inputs.map(_.level).max + 1, count, bytes, inputs))
   }
 
+  /** [[leveledRun]] over a segment table (`part_id`, `level`,
+    * `start_offset`, `end_offset`, `seg_bytes`, `created_epoch`): one
+    * row per partition that has a run, grouped by `part_id` and
+    * planned per group.
+    */
   def planLeveled(segments: DataFrame, minLevel: Int, maxLevel: Int,
       minAgeSec: Long, nowEpoch: Long, minSegments: Int, maxSegments: Int,
       minBytes: Long, maxBytes: Long): DataFrame = {
     graft.core.Configs.Compaction(minLevel, maxLevel, minSegments,
       maxSegments, minBytes, maxBytes, minAgeSec).validated
-    planLeveledFlags(segments, minLevel, maxLevel, minAgeSec, nowEpoch,
-      maxSegments, maxBytes)
-      .groupBy("part_id")
-      .agg(
-        sum(when(col("included"), 1L).otherwise(0L)).as("input_segments"),
-        sum(when(col("included"), col("seg_bytes"))).as("in_bytes"),
-        min(when(col("included"), col("start_offset"))).as("first_start"),
-        max(when(col("included"), col("end_offset"))).as("end_offset"),
-        max(when(col("consumed"), col("level"))).as("max_lvl"),
-        first("resume_end").as("resume_end"))
-      .filter(col("input_segments") >= minSegments && col("in_bytes") >= minBytes)
-      .withColumn("start_offset",
-        coalesce(col("resume_end") + 1, col("first_start")))
-      .select(
-        col("part_id"), col("start_offset"), col("end_offset"),
-        col("input_segments"), col("in_bytes"),
-        (col("max_lvl") + 1).cast("int").as("out_level"),
-        (col("end_offset") - col("start_offset") + 1).as("message_count"))
+    val spark = segments.sparkSession
+    import spark.implicits._
+    segments
+      .select(col("part_id").cast("int").as("partId"),
+        col("level").cast("int").as("level"),
+        col("start_offset").cast("long").as("startOffset"),
+        col("end_offset").cast("long").as("endOffset"),
+        col("seg_bytes").cast("long").as("segBytes"),
+        col("created_epoch").cast("long").as("createdEpoch"))
+      .as[LeveledSegment]
+      .groupByKey(_.partId)
+      .flatMapGroups { (_, segs) =>
+        leveledRun(segs.toVector, minLevel, maxLevel, minAgeSec, nowEpoch,
+          minSegments, maxSegments, minBytes, maxBytes).map { r =>
+          (r.partId, r.startOffset, r.endOffset, r.inputSegments, r.inBytes,
+            r.level, r.endOffset - r.startOffset + 1)
+        }
+      }
+      .toDF("part_id", "start_offset", "end_offset", "input_segments",
+        "in_bytes", "out_level", "message_count")
   }
 
   /** Merge step: pull the messages of each planned bin, dedup by offset

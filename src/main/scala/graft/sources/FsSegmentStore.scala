@@ -1,10 +1,13 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.SegmentMeta
+import graft.operators.Compactor
 
 /** Filesystem/object-store segment store
   * (reference: pkg/stores/s3_segment_store.go — key layout
@@ -23,8 +26,11 @@ import graft.core.SegmentMeta
   *   - [[open]] is ONE multi-path parquet scan for any number of
   *     segments; identity columns are derived from `input_file_name()`
   *     — no per-segment DataFrame, no N-way union, plan size O(1).
-  *   - [[compact]] plans bins from metadata, then runs ONE read +
-  *     ONE partitioned write for ALL bins — not a job pair per bin.
+  *   - [[compact]] / [[compactLeveled]] plan bins on the driver from
+  *     the metadata listing, then run ONE read + ONE partitioned write
+  *     for ALL bins — not a job pair per bin, and no planning or
+  *     counting job: each output's row count is read from its parquet
+  *     footers.
   *   - Writes use dynamic partition overwrite, so a replayed batch or
   *     re-run compaction overwrites its own segment dirs (idempotent
   *     redelivery) without touching sibling segments.
@@ -114,18 +120,72 @@ class FsSegmentStore(spark: SparkSession, val root: String) {
   /** Bulk segment write: rows already labeled with their output
     * segment (`part`, `level`, `start`, `end` columns) land in the
     * store layout via ONE dynamic-partition-overwrite job — one file
-    * per segment dir (repartition by segment key). This is the scale
-    * path shared by compaction and streaming egress.
+    * per segment dir (hash-partitioned by segment key). This is the
+    * scale path shared by compaction and streaming egress.
+    *
+    * The shuffle has `defaultParallelism` partitions, a count AQE does
+    * not coalesce: a segment write costs per file, not per byte, so a
+    * small batch of many segments is written on every core instead of
+    * by one task.
     */
   def writePartitioned(labeled: DataFrame, region: String, topic: String): Unit =
     labeled
       .withColumn("region", lit(region))
       .withColumn("topic", lit(topic))
-      .repartition(col("part"), col("start"))
+      .repartition(spark.sparkContext.defaultParallelism, col("part"), col("start"))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("region", "topic", "part", "level", "start", "end")
       .parquet(root)
+
+  /** Row count of a stored segment, summed from its parquet footers on
+    * the driver (the reference keeps messageCount in the segment's own
+    * footer): one metadata read per file, no Spark job. 0 when the
+    * segment directory does not exist.
+    */
+  private def footerCount(m: SegmentMeta): Long = {
+    val f = fs
+    val dir = new Path(segmentPath(m))
+    if (!f.exists(dir)) 0L
+    else f.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet")).map { s =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(s, spark.sparkContext.hadoopConfiguration))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
+  /** Merges every output segment's inputs into it with ONE read over
+    * all inputs + ONE partitioned write — not a job pair per output.
+    * Offsets outside an output's [start, end] are skipped (already
+    * compacted past a resume point) and each offset is kept once per
+    * output (overlapping inputs from at-least-once rewinds). Returns
+    * the outputs with `messageCount` read from the written footers; an
+    * output whose rows were all skipped writes no directory and keeps
+    * count 0.
+    */
+  private def merge(region: String, topic: String,
+      bins: Seq[(SegmentMeta, Seq[SegmentMeta])]): Seq[SegmentMeta] = {
+    val spark0 = spark
+    import spark0.implicits._
+    // (part, input start, input end) -> output segment key
+    val binMap = bins.flatMap { case (out, inputs) =>
+      inputs.map(m => (m.partId, m.startOffset, m.endOffset,
+        out.startOffset, out.endOffset, out.level))
+    }.toDF("seg_part", "start_offset", "end_offset", "out_start", "out_end",
+      "out_level")
+    writePartitioned(
+      open(region, topic, bins.flatMap(_._2))
+        .join(broadcast(binMap), Seq("seg_part", "start_offset", "end_offset"))
+        .filter(col("msg_offset").between(col("out_start"), col("out_end")))
+        .dropDuplicates("seg_part", "out_start", "msg_offset")
+        .drop("start_offset", "end_offset", "seg_level")
+        .withColumn("part", col("seg_part")).drop("seg_part")
+        .withColumnRenamed("out_level", "level")
+        .withColumnRenamed("out_start", "start")
+        .withColumnRenamed("out_end", "end"),
+      region, topic)
+    bins.map { case (out, _) => out.copy(messageCount = footerCount(out)) }
+  }
 
   /** Compact level-`level` segments of one (region, topic): merge every
     * run of up to `maxSegments` contiguous segments (at least
@@ -143,146 +203,70 @@ class FsSegmentStore(spark: SparkSession, val root: String) {
     * plus per-offset dedup.
     *
     * Execution is ONE read over all bin inputs + ONE partitioned write
-    * of all merged segments, not a driver loop of per-bin jobs.
+    * of all merged segments; counts come from the written footers.
     */
   def compact(region: String, topic: String, level: Int,
       minSegments: Int, maxSegments: Int): Seq[SegmentMeta] = {
     val inventory = list(region, topic).filter(_.level == level)
     val bins = planBins(inventory, minSegments, maxSegments)
     if (bins.isEmpty) return Seq.empty
-
-    val spark0 = spark
-    import spark0.implicits._
-    val inputs = bins.flatMap(_.inputs)
-    // (part, input start, input end) -> output segment key
-    val binMap = bins.flatMap { b =>
-      b.inputs.map(m => (m.partId, m.startOffset, m.endOffset,
-        b.startOffset, b.endOffset))
-    }.toDF("seg_part", "start_offset", "end_offset", "out_start", "out_end")
-
-    val merged = open(region, topic, inputs)
-      .join(broadcast(binMap), Seq("seg_part", "start_offset", "end_offset"))
-      .dropDuplicates("seg_part", "out_start", "msg_offset")
-      .cache() // two actions: per-bin counts + the partitioned write
-    val counts = merged.groupBy("seg_part", "out_start")
-      .agg(count(lit(1)).as("n"))
-      .collect()
-      .map(r => (r.getAs[Int]("seg_part"), r.getAs[Long]("out_start")) -> r.getAs[Long]("n"))
-      .toMap
-
-    writePartitioned(
-      merged
-        .drop("start_offset", "end_offset", "seg_level")
-        .withColumn("part", col("seg_part")).drop("seg_part")
-        .withColumn("level", lit(level + 1))
-        .withColumnRenamed("out_start", "start")
-        .withColumnRenamed("out_end", "end"),
-      region, topic)
-    merged.unpersist()
-
+    val out = merge(region, topic, bins.map { b =>
+      SegmentMeta(region, topic, b.partId, level + 1, b.startOffset,
+        b.endOffset, messageCount = 0L, sizeBytes = -1L) -> b.inputs
+    })
     bins.flatMap(_.inputs).foreach(delete)
-    bins.map { b =>
-      SegmentMeta(region, topic, b.partId, level + 1, b.startOffset, b.endOffset,
-        messageCount = counts.getOrElse((b.partId, b.startOffset), 0L),
-        sizeBytes = -1L)
-    }
+    out
   }
 
   /** Full leveled compaction against the store — the reference's
     * executable compactor (pkg/compaction/compactor.go:114-163:
     * create → copy in offset order skipping compacted offsets → close
-    * → delete inputs), with candidate selection delegated to
-    * [[graft.operators.Compactor.planLeveledFlags]] so the store
-    * executes EXACTLY the oracle-gated planner semantics: level range,
-    * MinSegmentAge, resume past higher-level coverage, contained-
-    * segment consumption, count/byte caps (inclusive crossing),
-    * min-count/min-bytes skip, stop-at-gap.
+    * → delete inputs). Candidate selection is
+    * [[Compactor.leveledRun]] on this listing, run on
+    * the driver — the same function behind the oracle-gated
+    * `Compactor.planLeveled`: level range, MinSegmentAge, resume past
+    * higher-level coverage, contained-segment consumption, count/byte
+    * caps (inclusive crossing), min-count/min-bytes skip, stop-at-gap.
+    * A call with no eligible run starts no Spark job.
     *
     * One merged segment per partition per run at
-    * level = max(consumed level) + 1. Execution stays ONE read over
-    * all consumed inputs + ONE partitioned write (no per-bin jobs);
+    * level = max(consumed level) + 1. Execution is ONE read over all
+    * consumed inputs + ONE partitioned write (no per-bin jobs);
     * messages at or below a higher-level resume point are skipped
-    * (already compacted), duplicates deduped per offset.
+    * (already compacted), duplicates deduped per offset, counts read
+    * from the written footers.
     */
   def compactLeveled(region: String, topic: String, minLevel: Int,
       maxLevel: Int, minAgeSec: Long, nowEpoch: Long, minSegments: Int,
       maxSegments: Int, minBytes: Long, maxBytes: Long,
       deleteInputs: Boolean = true): Seq[SegmentMeta] = {
-    val spark0 = spark
-    import spark0.implicits._
-    val inv = listInfo(region, topic)
-    if (inv.isEmpty) return Seq.empty
-    val segDf = inv.map { i =>
-      (i.meta.partId, i.meta.level, i.meta.startOffset, i.meta.endOffset,
-        i.meta.sizeBytes, i.createdEpoch)
-    }.toDF("part_id", "level", "start_offset", "end_offset", "seg_bytes",
-      "created_epoch")
-    val flags = graft.operators.Compactor
-      .planLeveledFlags(segDf, minLevel, maxLevel, minAgeSec, nowEpoch,
-        maxSegments, maxBytes)
-      .select("part_id", "level", "start_offset", "end_offset", "seg_bytes",
-        "resume_end", "included", "consumed")
-      .collect() // metadata-scale: one row per eligible segment
-
-    val byMeta = inv.map(i => (i.meta.partId, i.meta.level,
-      i.meta.startOffset, i.meta.endOffset) -> i.meta).toMap
-    val bins = flags.groupBy(_.getAs[Int]("part_id")).toSeq.flatMap {
-      case (partId, rows) =>
-        val included = rows.filter(_.getAs[Boolean]("included"))
-        val inBytes = included.map(_.getAs[Long]("seg_bytes")).sum
-        if (included.length < minSegments || inBytes < minBytes) None
-        else {
-          val consumed = rows.filter(_.getAs[Boolean]("consumed")).map { r =>
-            byMeta((partId, r.getAs[Int]("level"),
-              r.getAs[Long]("start_offset"), r.getAs[Long]("end_offset")))
-          }
-          val resumeEnd = rows.head.getAs[Any]("resume_end") match {
-            case null => -1L; case v: Long => v
-          }
-          val start =
-            if (resumeEnd >= 0) resumeEnd + 1
-            else included.map(_.getAs[Long]("start_offset")).min
-          val end = included.map(_.getAs[Long]("end_offset")).max
-          val outLevel = consumed.map(_.level).max + 1
-          Some(FsSegmentStore.LeveledBin(partId, start, end, outLevel,
-            consumed.toSeq))
+    graft.core.Configs.Compaction(minLevel = minLevel, maxLevel = maxLevel,
+      maxSegments = maxSegments, maxBytes = maxBytes,
+      minAgeSec = minAgeSec).validated
+    val bins = listInfo(region, topic).groupBy(_.meta.partId).toSeq.sortBy(_._1)
+      .flatMap { case (_, infos) =>
+        Compactor.leveledRun(
+          infos.map { i =>
+            Compactor.LeveledSegment(i.meta.partId, i.meta.level,
+              i.meta.startOffset, i.meta.endOffset, i.meta.sizeBytes,
+              i.createdEpoch)
+          },
+          minLevel, maxLevel, minAgeSec, nowEpoch, minSegments, maxSegments,
+          minBytes, maxBytes)
+      }
+      .map { r =>
+        SegmentMeta(region, topic, r.partId, r.level, r.startOffset, r.endOffset,
+          messageCount = 0L, sizeBytes = -1L) -> r.consumed.map { s =>
+          SegmentMeta(region, topic, s.partId, s.level, s.startOffset,
+            s.endOffset, messageCount = -1L, sizeBytes = s.segBytes)
         }
-    }
+      }
     if (bins.isEmpty) return Seq.empty
-
-    val inputs = bins.flatMap(_.inputs)
-    val binMap = bins.flatMap { b =>
-      b.inputs.map(m => (m.partId, m.startOffset, m.endOffset,
-        b.startOffset, b.endOffset, b.level))
-    }.toDF("seg_part", "start_offset", "end_offset", "out_start", "out_end",
-      "out_level")
-    val merged = open(region, topic, inputs)
-      .join(broadcast(binMap), Seq("seg_part", "start_offset", "end_offset"))
-      // skip offsets already covered by higher-level segments (resume)
-      .filter(col("msg_offset").between(col("out_start"), col("out_end")))
-      .dropDuplicates("seg_part", "msg_offset") // one bin per partition
-      .cache()
-    val counts = merged.groupBy("seg_part").agg(count(lit(1)).as("n"))
-      .collect()
-      .map(r => r.getAs[Int]("seg_part") -> r.getAs[Long]("n")).toMap
-
-    writePartitioned(
-      merged
-        .drop("start_offset", "end_offset", "seg_level")
-        .withColumn("part", col("seg_part")).drop("seg_part")
-        .withColumnRenamed("out_level", "level")
-        .withColumnRenamed("out_start", "start")
-        .withColumnRenamed("out_end", "end"),
-      region, topic)
-    merged.unpersist()
-
+    val out = merge(region, topic, bins)
     // reference Config.Delete: keeping inputs is an operator choice
     // (e.g. verify-before-delete deployments)
-    if (deleteInputs) inputs.foreach(delete)
-    bins.map { b =>
-      SegmentMeta(region, topic, b.partId, b.level, b.startOffset, b.endOffset,
-        messageCount = counts.getOrElse(b.partId, 0L), sizeBytes = -1L)
-    }
+    if (deleteInputs) bins.flatMap(_._2).foreach(delete)
+    out
   }
 
   /** Driver-side bin planning over the (metadata-scale) inventory:
@@ -313,10 +297,6 @@ object FsSegmentStore {
   /** One planned compaction bin: its output segment key + inputs. */
   case class Bin(partId: Int, startOffset: Long, endOffset: Long,
       inputs: Seq[SegmentMeta])
-
-  /** One leveled-run output: key, output level, consumed inputs. */
-  case class LeveledBin(partId: Int, startOffset: Long, endOffset: Long,
-      level: Int, inputs: Seq[SegmentMeta])
 
   /** Segment + store-side metadata (reference SegmentInfo). */
   case class SegmentInfo(meta: SegmentMeta, createdEpoch: Long)

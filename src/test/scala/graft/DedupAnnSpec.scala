@@ -748,6 +748,37 @@ class DedupAnnSpec extends SparkSuite {
     } finally pool.shutdownNow()
   }
 
+  test("dedup cache registry: N same-key callers run one build and leak no table") {
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    import spark.implicits._
+    val cache =
+      new Dedup.LruTableCache[(org.apache.spark.sql.SparkSession, String)]
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    // each build caches a distinct plan, so a second build would leave
+    // a second persisted table behind
+    def build() = {
+      val n = builds.incrementAndGet()
+      Thread.sleep(200) // every caller reaches the latch meanwhile
+      Seq(("k", n)).toDF("k", "build").cache()
+    }
+    val n = 8
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(n)
+    try {
+      val fs = (1 to n).map(_ => pool.submit(() => {
+        start.await()
+        cache.getOrElseUpdate((spark, "one"))(build())
+      }))
+      start.countDown()
+      assert(fs.map(_.get(60, TimeUnit.SECONDS).head().getInt(1)).toSet === Set(1))
+      assert(builds.get() === 1)
+    } finally pool.shutdownNow()
+    cache.releaseSession(spark) // what releaseAllCaches does per registry
+    Dedup.releaseAllCaches(spark)
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore === Set.empty)
+  }
+
   test("int8 codes: bounded, half-scale round-trip, high top-5 agreement") {
     val codes = Ann.int8Codes(emb).collect()
     assert(codes.nonEmpty)

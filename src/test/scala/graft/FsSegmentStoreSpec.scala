@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
 
 import graft.core.SegmentMeta
 import graft.operators.{MessageFraming, SegmentRoller}
@@ -44,20 +46,29 @@ class FsSegmentStoreSpec extends SparkSuite {
 
   test("compact endOffset covers overlapping inputs (rewind redelivery)") {
     import spark.implicits._
-    val store = FsSegmentStore(spark, tmpDir("store"))
-    val mk = (s0: Long, e0: Long) => {
-      val rows = (s0 to e0).map(i => (0, i, s"k$i", 2L))
-        .toDF("part_id", "msg_offset", "key", "msg_size")
-      store.write(rows, graft.core.SegmentMeta("src", "t", 0, 0, s0, e0,
-        e0 - s0 + 1, -1L))
+    // the same layout through both compactors
+    for (leveled <- Seq(false, true)) {
+      val store = FsSegmentStore(spark, tmpDir("store"))
+      val mk = (s0: Long, e0: Long) => {
+        val rows = (s0 to e0).map(i => (0, i, s"k$i", 2L))
+          .toDF("part_id", "msg_offset", "key", "msg_size")
+        store.write(rows, graft.core.SegmentMeta("src", "t", 0, 0, s0, e0,
+          e0 - s0 + 1, -1L))
+      }
+      // overlapping segments from an at-least-once rewind: the LAST one
+      // by start offset ends EARLIER than its predecessor
+      mk(0L, 9L); mk(5L, 20L); mk(10L, 15L)
+      val out =
+        if (!leveled) store.compact("src", "t", 0, minSegments = 2, maxSegments = 5)
+        else store.compactLeveled("src", "t", minLevel = 0, maxLevel = 0,
+          minAgeSec = 0L, nowEpoch = System.currentTimeMillis() / 1000L + 3600L,
+          minSegments = 2, maxSegments = 5, minBytes = 0L,
+          maxBytes = Long.MaxValue / 4)
+      assert(out.size === 1)
+      assert(out.head.endOffset === 20L) // not 15 (bin.last's end)
+      assert(out.head.messageCount === 21L) // offsets 0..20 deduped
+      assertCounts(store, out)
     }
-    // overlapping segments from an at-least-once rewind: the LAST one
-    // by start offset ends EARLIER than its predecessor
-    mk(0L, 9L); mk(5L, 20L); mk(10L, 15L)
-    val out = store.compact("src", "t", 0, minSegments = 2, maxSegments = 5)
-    assert(out.size === 1)
-    assert(out.head.endOffset === 20L) // not 15 (bin.last's end)
-    assert(out.head.messageCount === 21L) // offsets 0..20 deduped
   }
 
   test("open plans exactly ONE parquet scan regardless of segment count") {
@@ -98,6 +109,7 @@ class FsSegmentStoreSpec extends SparkSuite {
     // only the contiguous prefix merged; post-gap segments left in place
     assert(out.size === 1)
     assert(out.head.endOffset === 19L)
+    assertCounts(store, out)
     val after = store.list("src", "t")
     assert(after.count(_.level === 0) === 2)
     // the gap is still visible to the detector over the new inventory
@@ -114,6 +126,13 @@ class FsSegmentStoreSpec extends SparkSuite {
       .toDF("part_id", "msg_offset", "key", "msg_size")
     store.write(rows, SegmentMeta("src", "t", 0, level, s0, e0, e0 - s0 + 1, -1L))
   }
+
+  /** Every returned messageCount is the row count of that segment. */
+  private def assertCounts(store: FsSegmentStore, out: Seq[SegmentMeta]): Unit =
+    out.foreach { m =>
+      assert(m.messageCount === store.open(m.region, m.topic, Seq(m)).count(),
+        s"messageCount of $m")
+    }
 
   test("compactLeveled: level range + resume past higher-level coverage") {
     val store = FsSegmentStore(spark, tmpDir("store"))
@@ -133,6 +152,7 @@ class FsSegmentStoreSpec extends SparkSuite {
     assert(seg.endOffset === 59L)
     assert(seg.level === 3) // max consumed input level (2) + 1
     assert(seg.messageCount === 40L) // 20..59, compacted offsets skipped
+    assertCounts(store, out)
     val after = store.list("src", "t")
     assert(after.map(_.level).sorted === Seq(0, 3, 5)) // inputs deleted
     // the merged data is exactly offsets 20..59, once each
@@ -157,6 +177,7 @@ class FsSegmentStoreSpec extends SparkSuite {
     assert(out.size === 1)
     assert((out.head.startOffset, out.head.endOffset) === (0L, 19L))
     assert(out.head.level === 2)
+    assertCounts(store, out)
     val after = store.list("src", "t")
     assert(after.filter(_.level == 1).map(_.startOffset).sorted === Seq(20L, 30L))
   }
@@ -181,6 +202,8 @@ class FsSegmentStoreSpec extends SparkSuite {
     val r3 = run()
     assert(r3.size === 1 && r3.head.level === 3)
     assert((r3.head.startOffset, r3.head.endOffset) === (0L, 39L))
+    assert(Seq(r1, r2, r3).map(_.head.messageCount) === Seq(20L, 30L, 40L))
+    assertCounts(store, r3)
     val finalInv = store.list("src", "t")
     assert(finalInv.size === 1)
     assert(store.open("src", "t", finalInv).count() === 40L)
@@ -195,9 +218,64 @@ class FsSegmentStoreSpec extends SparkSuite {
       minAgeSec = 0L, nowEpoch = now, minSegments = 2, maxSegments = 10,
       minBytes = 0L, maxBytes = Long.MaxValue / 4, deleteInputs = false)
     assert(out.size === 1 && out.head.level === 2)
+    assertCounts(store, out)
     val after = store.list("src", "t")
     assert(after.count(_.level == 1) === 2) // inputs retained
     assert(after.count(_.level == 2) === 1)
+  }
+
+  test("compactLeveled: a run whose rows are all skipped writes nothing, count 0") {
+    import spark.implicits._
+    val store = FsSegmentStore(spark, tmpDir("store"))
+    mkLeveled(store)(5, 0L, 19L) // resume point: 0..19 already compacted
+    // keyed [10,29] but holding only 10..19: every row is at or below
+    // the resume point, so the run [20,29] has nothing to copy
+    store.write((10L to 19L).map(i => (0, i, s"k$i", 2L))
+      .toDF("part_id", "msg_offset", "key", "msg_size"),
+      SegmentMeta("src", "t", 0, 1, 10L, 29L, 10L, -1L))
+    val now = System.currentTimeMillis() / 1000L + 3600L
+    val out = store.compactLeveled("src", "t", minLevel = 1, maxLevel = 1,
+      minAgeSec = 0L, nowEpoch = now, minSegments = 1, maxSegments = 10,
+      minBytes = 0L, maxBytes = Long.MaxValue / 4)
+    assert(out.map(m => (m.startOffset, m.endOffset, m.level, m.messageCount)) ===
+      Seq((20L, 29L, 2, 0L)))
+    assert(store.list("src", "t").map(m => (m.level, m.startOffset)) === Seq((5, 0L)))
+  }
+
+  test("compactLeveled: a call with no eligible run starts no Spark job") {
+    val store = FsSegmentStore(spark, tmpDir("store"))
+    val mk = mkLeveled(store) _
+    // eligible segments, but the gap leaves a run of one, below
+    // minSegments (like the last round of a backfill)
+    mk(1, 0L, 9L); mk(1, 20L, 29L)
+    val group = s"no-run-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) jobs.add(s"job ${e.jobId}")
+        if (g == group + "-marker") marker.countDown()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "compactLeveled with no eligible run")
+      val out = store.compactLeveled("src", "t", minLevel = 1, maxLevel = 1,
+        minAgeSec = 0L, nowEpoch = System.currentTimeMillis() / 1000L + 3600L,
+        minSegments = 2, maxSegments = 10, minBytes = 0L,
+        maxBytes = Long.MaxValue / 4)
+      assert(out.isEmpty)
+      // listener events arrive in order: once the marker job is seen,
+      // every job the call started has been seen too
+      spark.sparkContext.setJobGroup(group + "-marker", "marker")
+      spark.range(1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.isEmpty, s"jobs started: $jobs")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
   }
 
   test("compactLeveled: MinSegmentAge gate skips young segments") {
@@ -228,5 +306,116 @@ class FsSegmentStoreSpec extends SparkSuite {
     // no message lost: level-1 counts sum to what the bins covered
     val mergedRows = store.open("src", "events", out.toSeq).count()
     assert(mergedRows === out.map(_.messageCount).sum)
+    assertCounts(store, out)
+  }
+
+  /** One generated store layout for the leveled-compaction property. */
+  private case class Layout(segs: Seq[(Int, Int, Long, Long, Boolean)], // part, level, start, end, young
+      minLevel: Int, maxLevel: Int, minSegments: Int, maxSegments: Int,
+      maxBytesSegs: Int)
+
+  private val layoutGen: Gen[Layout] = {
+    // one partition: an optional resume segment one level above
+    // maxLevel holding the prefix [0, r] (what earlier runs leave),
+    // then a chain whose segments overlap, contain, abut or leave a gap
+    // after their predecessor, at level 0 (below minLevel when it is 1)
+    // or inside minLevel..maxLevel
+    def partition(p: Int, minLevel: Int, maxLevel: Int) = for {
+      resume <- Gen.option(Gen.choose(0L, 12L))
+      n <- Gen.choose(1, 7)
+      steps <- Gen.listOfN(n, for {
+        kind <- Gen.frequency(5 -> "next", 2 -> "overlap", 2 -> "contained", 1 -> "gap")
+        len <- Gen.choose(1L, 12L)
+        level <- Gen.frequency(1 -> 0, 6 -> Gen.choose(minLevel, maxLevel))
+        young <- Gen.frequency(6 -> false, 1 -> true)
+      } yield (kind, len, level, young))
+    } yield {
+      var (lo, hi) = (0L, -1L) // the widest range so far
+      val chain = steps.map { case (kind, len, level, young) =>
+        val (s, e) = kind match {
+          case "overlap" => val s = math.max(0L, hi - len / 2); (s, math.max(s, hi) + len)
+          case "contained" if hi > lo => val s = lo + (hi - lo) / 3; (s, math.min(hi, s + len / 2))
+          case "gap" => (hi + 3, hi + 2 + len)
+          case _ => (hi + 1, hi + len)
+        }
+        if (e > hi) { lo = s; hi = e }
+        (p, level, s, e, young)
+      }
+      resume.map(r => (p, maxLevel + 1, 0L, r, false)).toSeq ++ chain
+    }
+    for {
+      minLevel <- Gen.choose(0, 1)
+      maxLevel <- Gen.choose(minLevel, 2)
+      p0 <- partition(0, minLevel, maxLevel)
+      p1 <- Gen.oneOf(Gen.const(Nil), partition(1, minLevel, maxLevel))
+      minSegments <- Gen.choose(1, 2)
+      maxSegments <- Gen.choose(minSegments, 5)
+      maxBytesSegs <- Gen.choose(1, 6)
+    } yield Layout(
+      (p0 ++ p1).distinctBy { case (p, l, s, e, _) => (p, l, s, e) },
+      minLevel, maxLevel, minSegments, maxSegments, maxBytesSegs)
+  }
+
+  test("property: compactLeveled leaves exactly planLeveled's runs and loses no offset") {
+    import spark.implicits._
+    val now = System.currentTimeMillis() / 1000L
+    val minAge = 600L
+    val prop = Prop.forAllNoShrink(layoutGen) { lay =>
+      val store = FsSegmentStore(spark, tmpDir("prop"))
+      // every layout in one partitioned write, then ages set on the files
+      store.writePartitioned(lay.segs.flatMap { case (p, l, s, e, _) =>
+        (s to e).map(o => (p, o, s"k$o", 2L, p, l, s, e))
+      }.toDF("part_id", "msg_offset", "key", "msg_size", "part", "level",
+        "start", "end"), "src", "t")
+      lay.segs.foreach { case (p, l, s, e, young) =>
+        val dir = new java.io.File(
+          store.segmentPath(SegmentMeta("src", "t", p, l, s, e, -1L, -1L)))
+        dir.listFiles.foreach(_.setLastModified(
+          (if (young) now else now - 10 * minAge) * 1000L))
+      }
+      val listing = store.listInfo("src", "t")
+      val segBytes = listing.map(_.meta.sizeBytes)
+      // a byte cap a few segments wide, so it binds in some layouts
+      val maxBytes = segBytes.max * lay.maxBytesSegs
+      val expected = graft.operators.Compactor.planLeveled(
+        listing.map(i => (i.meta.partId, i.meta.level, i.meta.startOffset,
+          i.meta.endOffset, i.meta.sizeBytes, i.createdEpoch))
+          .toDF("part_id", "level", "start_offset", "end_offset", "seg_bytes",
+            "created_epoch"),
+        lay.minLevel, lay.maxLevel, minAge, now, lay.minSegments,
+        lay.maxSegments, 1L, maxBytes)
+        .collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getInt(5), r.getLong(6)))
+        .toSet
+      val out = store.compactLeveled("src", "t", lay.minLevel, lay.maxLevel,
+        minAge, now, lay.minSegments, lay.maxSegments, 1L, maxBytes)
+      val got = out.map(m => (m.partId, m.startOffset, m.endOffset, m.level,
+        m.messageCount)).toSet
+      // offset copies per partition before and after the run
+      val before = lay.segs.flatMap { case (p, _, s, e, _) => (s to e).map(p -> _) }
+        .groupBy(identity).view.mapValues(_.size).toMap
+      val stored = store.open("src", "t", store.list("src", "t"))
+        .select("seg_part", "seg_level", "start_offset", "end_offset", "msg_offset")
+        .as[(Int, Int, Long, Long, Long)].collect().toSeq
+      val after = stored.map(r => (r._1, r._5)).groupBy(identity).view
+        .mapValues(_.size).toMap
+      // each output holds every offset of its range exactly once
+      val outputsExact = out.forall { m =>
+        stored.filter(r => (r._1, r._2, r._3, r._4) ==
+          (m.partId, m.level, m.startOffset, m.endOffset)).map(_._5).sorted ==
+          (m.startOffset to m.endOffset)
+      }
+      (got == expected) :| s"store runs $got != planned $expected" &&
+        (after.keySet == before.keySet) :| "an offset left the store" &&
+        after.forall { case (k, n) => n <= before(k) } :| "an offset gained a copy" &&
+        outputsExact :| "an output does not hold its range once"
+    }
+    val result = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default
+        .withMinSuccessfulTests(25)
+        .withWorkers(1)
+        .withInitialSeed(org.scalacheck.rng.Seed(20261017L)),
+      prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
   }
 }
