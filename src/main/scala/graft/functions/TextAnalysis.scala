@@ -415,46 +415,16 @@ object TextAnalysis {
         maxV = 100L) ++
         graft.core.Validation.knob("numBuckets", numBuckets.toLong,
           minV = 2L, maxV = 1048576L))
-    // Memoize the trained weight vector per (session, corpus,
-    // trainPct, numBuckets) — the Ann centroid-memo shape: training is
-    // one corpus-stratum aggregation whose deterministic, parameter-
-    // scale result (numBuckets longs) was re-derived by every consumer
-    // (t_quality_model serving AND the model-driven keeper election).
-    val fk = graft.operators.Dedup.corpusKey(docs)
-    val key = (fk._1, fk._2, trainPct, numBuckets)
-    qmLatch.getOrElseUpdate(key, new Object).synchronized {
-      val hit = qmMemo.synchronized {
-        qmMemo.remove(key).map { v => qmMemo.put(key, v); v }
-      }
-      hit.getOrElse {
-        val v = qualityModelTrainUncached(docs, trainPct, numBuckets)
-        qmMemo.synchronized {
-          qmMemo.put(key, v)
-          val mine = qmMemo.keys.filter(_._1 == key._1).toSeq
-          mine.dropRight(QmMemoBound).foreach { k0 =>
-            qmMemo.remove(k0); qmLatch.remove(k0)
-          }
-        }
-        v
-      }
-    }
+    // Memoized per (session, corpus, trainPct, numBuckets): training
+    // is one corpus-stratum aggregation whose deterministic,
+    // parameter-scale result (numBuckets longs) was re-derived by every
+    // consumer (t_quality_model serving AND the model-driven keeper
+    // election).
+    qmCache.get(docs, s"trainPct=$trainPct buckets=$numBuckets")(
+      qualityModelTrainUncached(docs, trainPct, numBuckets))
   }
 
-  /** Per-session entry bound for the quality-model memo (weights are
-    * a few KB each; the bound only caps stale keys from dead frames).
-    */
-  val QmMemoBound = 32
-  private val qmMemo = scala.collection.mutable.LinkedHashMap.empty[
-    (org.apache.spark.sql.SparkSession, String, Int, Int), Seq[Long]]
-  private val qmLatch = scala.collection.concurrent.TrieMap.empty[
-    (org.apache.spark.sql.SparkSession, String, Int, Int), Object]
-
-  /** Drop every memoized quality-model weight vector for `spark`. */
-  def releaseQualityModels(spark: org.apache.spark.sql.SparkSession): Unit =
-    qmMemo.synchronized {
-      qmMemo.keys.filter(_._1 == spark).toSeq
-        .foreach { k => qmMemo.remove(k); qmLatch.remove(k) }
-    }
+  private val qmCache = graft.core.SessionMemo.values[Seq[Long]]()
 
   private def qualityModelTrainUncached(docs: DataFrame, trainPct: Int,
       numBuckets: Int): Seq[Long] = {

@@ -481,8 +481,7 @@ object Analytics {
       .agg(count(lit(1)).as("n_distinct"))
 
   /** Per-column exact distincts, memoized per (session, corpus,
-    * column list) — the truth-memo discipline applied to the
-    * profiler: the distinct pass is the profiler's one
+    * column list): the distinct pass is the profiler's one
     * cardinality-scale shuffle, and the exact profile and its
     * approx-audit twin each ran the IDENTICAL subtree over the same
     * table. The memoized value is |cols| rows, parameter-scale, held
@@ -498,48 +497,19 @@ object Analytics {
     * counts are identical to the unpivoted form by construction.
     */
   private def exactDistincts(df: DataFrame, cs: Seq[String]): DataFrame = {
-    val ck = Dedup.corpusKey(df)
     // length-prefixed encoding: a plain mkString(",") collided
     // Seq("a,b") with Seq("a","b") (and any comma-bearing name)
-    val key = (ck._1, ck._2 + "|nd " +
-      cs.map(c => s"${c.length}:$c").mkString(","))
-    val rows = ndLatch.getOrElseUpdate(key, new Object).synchronized {
-      val hit = ndMemo.synchronized {
-        ndMemo.remove(key).map { v => ndMemo.put(key, v); v }
-      }
-      hit.getOrElse {
-        val v = graft.core.Overlap.overlapped(cs.map { c =>
-          c -> (() => exactDistinctColumnPlan(df, c)
-            .collect()(0).getLong(0))
-        }).map { case (c, n) => (c, n) }
-        ndMemo.synchronized {
-          ndMemo.put(key, v)
-          val mine = ndMemo.keys.filter(_._1 == key._1).toSeq
-          mine.dropRight(32).foreach { k0 =>
-            ndMemo.remove(k0); ndLatch.remove(k0)
-          }
-        }
-        v
-      }
+    val rows = ndCache.get(df, cs.map(c => s"${c.length}:$c").mkString(",")) {
+      graft.core.Overlap.overlapped(df.sparkSession, cs.map { c =>
+        c -> (() => exactDistinctColumnPlan(df, c).collect()(0).getLong(0))
+      })
     }
     val sp = df.sparkSession
     import sp.implicits._
     rows.toDF("col_name", "n_distinct")
   }
 
-  private val ndMemo = scala.collection.mutable.LinkedHashMap.empty[
-    (SparkSession, String), Seq[(String, Long)]]
-  private val ndLatch = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, String), Object]
-
-  /** Drop the memoized exact-distinct tables for `spark` (wired into
-    * [[Dedup.releaseAllCaches]]).
-    */
-  def releaseProfileCaches(spark: SparkSession): Unit =
-    ndMemo.synchronized {
-      ndMemo.keys.filter(_._1 == spark).toSeq
-        .foreach { k => ndMemo.remove(k); ndLatch.remove(k) }
-    }
+  private val ndCache = graft.core.SessionMemo.values[Seq[(String, Long)]]()
 
   /** Portable string rendering for profile min/max — see
     * [[columnProfile]]'s scaladoc.

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.{Overlap, SessionMemo}
 import graft.functions.{CentroidMatrix, CentroidOps, VecOps}
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -645,7 +646,7 @@ object Ann {
     }
   }
 
-  /** Memo of trained centroid sets per (session, input-frame plan, k,
+  /** Memo of trained centroid sets per (session, input frame, k,
     * iterations). The trained state is PARAMETER-scale (k × dims
     * longs, a few KB) but each training run is `iterations` Spark jobs
     * over the corpus — and the ANN family retrains constantly: the
@@ -654,133 +655,50 @@ object Ann {
     * and PQ re-trains one codebook per subspace. Production systems
     * train once and SHIP the model; the memo is that shape in-session
     * (deterministic training — seeds are fixed rows, arithmetic is
-    * integer — so memoization is invisible to results). Keys
-    * fingerprint inline-relation rows like the dedup cache registry,
-    * so two in-memory corpora with one schema cannot collide.
+    * integer — so memoization is invisible to results).
     */
-  /** Per-session entry bound for the centroid memo. Entries keyed by a
-    * `localCheckpoint` frame (fresh LogicalRDD id per call — e.g. the
-    * IVFADC residual frame) can never hit again after that call, so an
-    * unbounded map is a slow leak in a long-lived service session; the
-    * LRU bound caps it at a few KB of stale state while every
-    * live-corpus key stays resident.
-    *
-    * Sized to the full query surface, not the single-operator case:
-    * the IVFADC/IVF-SQ8 family inserts one never-hit key per call
-    * (the residual/code frames are localCheckpoint-keyed), and at 32
-    * the ~20 such inserts between `a_ann_recall_tuned` (which trains
-    * the OPQ codebooks) and `a_knn_opq` (which reuses them) could
-    * evict the OPQ entry — the r19 verdict's memo-eviction hypothesis
-    * for that row's 3× gated-median swing. 128 keeps every key of a
-    * full 149-query sweep resident at a few hundred KB of state.
-    */
-  private[this] var _centroidMemoBound: Int = 128
-  def centroidMemoBound: Int = _centroidMemoBound
-  /** Validated setter: a bound below 1 would silently disable the memo
-    * (every put immediately evicted) — reject it.
-    */
-  def centroidMemoBound_=(n: Int): Unit = {
-    require(n >= 1, s"centroidMemoBound must be >= 1, got $n")
-    _centroidMemoBound = n
-  }
-  private val centroidMemo = scala.collection.mutable.LinkedHashMap.empty[
-    (SparkSession, String, Int, Int), Seq[(Long, Seq[Long], Long)]]
-  /** Per-key training latches: concurrent same-key callers serialize on
-    * the key's latch so the corpus-scale training job runs ONCE and the
-    * second caller reads the memo (compute-once); distinct keys still
-    * train concurrently. Latches are dropped with their memo entries.
-    */
-  private val trainLatch = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, String, Int, Int), Object]
+  private val centroidCache =
+    SessionMemo.values[Seq[(Long, Seq[Long], Long)]]()
 
-  /** One keying function for every plan-keyed registry: see
-    * [[Dedup.corpusKey]] for the elided-identity fingerprints
-    * (LocalRelation rows, LogicalRDD ids) that keep same-schema
-    * corpora — including `localCheckpoint` frames like the IVFADC
-    * residuals — from colliding.
-    */
-  private def frameKey(df: DataFrame): (SparkSession, String) =
-    Dedup.corpusKey(df)
-
-  /** Drop every trained model and memoized ground-truth frame for
-    * `spark` (call when a session's ANN work is done; mirrors
+  /** Drop every trained model, memoized ground truth and recall leg
+    * for `spark` (call when a session's ANN work is done; mirrors
     * Dedup.releaseShingleCaches).
     */
-  def releaseTrainedModels(spark: SparkSession): Unit = {
-    centroidMemo.synchronized {
-      centroidMemo.keys.filter(_._1 == spark).toSeq
-        .foreach { k => centroidMemo.remove(k); trainLatch.remove(k) }
-    }
-    truthMemo.synchronized {
-      truthMemo.keys.filter(_._1 == spark).toSeq
-        .foreach { k => truthMemo.remove(k); truthLatch.remove(k) }
-    }
-    legMemo.synchronized {
-      legMemo.keys.filter(_._1 == spark).toSeq
-        .foreach { k => legMemo.remove(k); legLatch.remove(k) }
-    }
-  }
+  def releaseTrainedModels(spark: SparkSession): Unit =
+    Seq(centroidCache, truthCache, legCache).foreach(_.release(spark))
 
-  /** Memo of brute-force ground-truth frames per (session, corpus
-    * fingerprint, numQueries, k) — the centroid memo's shape applied
-    * to the recall sweeps' most expensive SHARED input: the gated
-    * a_ann_recall / a_ann_recall_tuned pair otherwise recomputes the
-    * identical exact truth (a full corpus × queries scan each). The
-    * memoized value is the COLLECTED (queries·k)-row truth — truth is
-    * request-scale by definition, so it lives driver-side like the
-    * trained centroids (a localCheckpoint memo would pin executor
-    * block storage past eviction until GC); each call rebuilds a
-    * local relation from it, dropped by [[releaseTrainedModels]].
-    * Same latch discipline as training: concurrent same-key callers
-    * compute once, distinct keys never block each other. Results are
-    * bit-identical to the unmemoized path (the truth rows are
-    * deterministic and read-only downstream).
+  /** Memo of brute-force ground truth per (session, corpus,
+    * numQueries, k): the gated a_ann_recall / a_ann_recall_tuned pair
+    * otherwise recomputes the identical exact truth (a full corpus ×
+    * queries scan each). The value is the COLLECTED (queries·k)-row
+    * truth — request-scale, so it lives driver-side like the trained
+    * centroids (a localCheckpoint memo would pin executor block
+    * storage past eviction until GC); each call rebuilds a local
+    * relation from it. Results are bit-identical to the unmemoized
+    * path (the truth rows are deterministic and read-only downstream).
     */
-  private val truthMemo = scala.collection.mutable.LinkedHashMap.empty[
-    (SparkSession, String, Int, Int), Seq[(Long, Long)]]
-  private val truthLatch = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, String, Int, Int), Object]
+  private val truthCache = SessionMemo.values[Seq[(Long, Long)]]()
 
   /** Memo of recall-harness METHOD-LEG results per (session, corpus,
-    * method, request) — the truth-memo discipline extended to the
-    * other shared input of the recall sweeps: [[annRecall]] and
-    * [[annRecallSampled]] run the SAME six method pipelines with the
-    * same arguments (sampled post-filters the results rather than
-    * forking the trained-model memo keys — see its scaladoc), so the
-    * second harness was re-running six corpus-scale scans to rebuild
-    * (queries·k)-row tables the first had already computed. The leg
-    * results are request-scale and deterministic; the memo holds the
+    * method, request): [[annRecall]] and [[annRecallSampled]] run the
+    * SAME six method pipelines with the same arguments (sampled
+    * post-filters the results rather than forking the trained-model
+    * memo keys — see its scaladoc), so the second harness was
+    * re-running six corpus-scale scans to rebuild (queries·k)-row
+    * tables the first had already computed. The memo holds the
     * projected (q_id, neighbor_id) rows driver-side and rebuilds a
     * local relation per consumer. Individual gated rows (a_knn_*)
     * deliberately do NOT read or write this memo — their executed
     * plans are part of the audited contract (PlanAuditSpec pins scan
     * pushdown and join shapes on the real pipelines).
     */
-  private val legMemo = scala.collection.mutable.LinkedHashMap.empty[
-    (SparkSession, String), Seq[(Long, Long)]]
-  private val legLatch = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, String), Object]
+  private val legCache = SessionMemo.values[Seq[(Long, Long)]]()
 
   private def legFrame(embeddings: DataFrame, tag: String)(
       build: => DataFrame): DataFrame = {
-    val fk = frameKey(embeddings)
-    val key = (fk._1, fk._2 + "|" + tag)
-    val rows = legLatch.getOrElseUpdate(key, new Object).synchronized {
-      val hit = legMemo.synchronized {
-        legMemo.remove(key).map { v => legMemo.put(key, v); v }
-      }
-      hit.getOrElse {
-        val v = build.select("q_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
-        legMemo.synchronized {
-          legMemo.put(key, v)
-          val mine = legMemo.keys.filter(_._1 == key._1).toSeq
-          mine.dropRight(centroidMemoBound).foreach { k0 =>
-            legMemo.remove(k0); legLatch.remove(k0)
-          }
-        }
-        v
-      }
+    val rows = legCache.get(embeddings, tag) {
+      build.select("q_id", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
     val sp = embeddings.sparkSession
     import sp.implicits._
@@ -789,25 +707,10 @@ object Ann {
 
   private def truthFrame(embeddings: DataFrame, numQueries: Int,
       k: Int): DataFrame = {
-    val fk = frameKey(embeddings)
-    val key = (fk._1, fk._2, numQueries, k)
-    val rows = truthLatch.getOrElseUpdate(key, new Object).synchronized {
-      val hit = truthMemo.synchronized {
-        truthMemo.remove(key).map { v => truthMemo.put(key, v); v }
-      }
-      hit.getOrElse {
-        val v = knnBruteForce(embeddings, numQueries, k)
-          .select("q_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
-        truthMemo.synchronized {
-          truthMemo.put(key, v)
-          val mine = truthMemo.keys.filter(_._1 == key._1).toSeq
-          mine.dropRight(centroidMemoBound).foreach { k0 =>
-            truthMemo.remove(k0); truthLatch.remove(k0)
-          }
-        }
-        v
-      }
+    val rows = truthCache.get(embeddings, s"nq=$numQueries k=$k") {
+      knnBruteForce(embeddings, numQueries, k)
+        .select("q_id", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
     val sp = embeddings.sparkSession
     import sp.implicits._
@@ -817,37 +720,12 @@ object Ann {
   /** The training loop alone: Lloyd-iterate from the first-k seeds and
     * return the final driver-held centroids `(c_id, components, norm²)`
     * (shared by [[kmeansTrain]] and [[kmeansProfile]]), memoized per
-    * (session, input frame, k, iterations) with an LRU bound of
-    * [[centroidMemoBound]] entries per session. Training runs OUTSIDE
-    * the memo lock (it is `iterations` Spark jobs) but UNDER the key's
-    * own latch, so two concurrent same-key callers train once and
-    * distinct keys never block each other.
+    * (session, input frame, k, iterations).
     */
   def kmeansCentroids(q: DataFrame, k: Int,
-      iterations: Int): Seq[(Long, Seq[Long], Long)] = {
-    val fk = frameKey(q)
-    val key = (fk._1, fk._2, k, iterations)
-    trainLatch.getOrElseUpdate(key, new Object).synchronized {
-      val hit = centroidMemo.synchronized {
-        centroidMemo.remove(key).map { v => centroidMemo.put(key, v); v }
-      }
-      hit.getOrElse {
-        if (sys.env.contains("GRAFT_MEMO_DEBUG"))
-          System.err.println(s"[memo] MISS k=$k iters=$iterations " +
-            s"fp=${Integer.toHexString(fk._2.hashCode)} " +
-            s"size=${centroidMemo.synchronized(centroidMemo.size)}")
-        val v = kmeansCentroidsUncached(q, k, iterations)
-        centroidMemo.synchronized {
-          centroidMemo.put(key, v)
-          val mine = centroidMemo.keys.filter(_._1 == key._1).toSeq
-          mine.dropRight(centroidMemoBound).foreach { k0 =>
-            centroidMemo.remove(k0); trainLatch.remove(k0)
-          }
-        }
-        v
-      }
-    }
-  }
+      iterations: Int): Seq[(Long, Seq[Long], Long)] =
+    centroidCache.get(q, s"k=$k iters=$iterations")(
+      kmeansCentroidsUncached(q, k, iterations))
 
   /** Seed-safe training for ARBITRARY-id corpora:
     * [[kmeansCentroidsUncached]] seeds from rows with vec_id < k —
@@ -1476,15 +1354,9 @@ object Ann {
     * jobs): a sequential collect per leg would leave most cores idle
     * in each leg's single-partition tail, where the old one-action
     * 7-arm union overlapped its arm stages for free. The brute-force
-    * truth warms its own memo in the same batch. Latched memos make
-    * concurrent same-key work compute-once; distinct keys never block.
+    * truth warms its own memo in the same batch. The memos are
+    * single-flight, so concurrent same-key work computes once.
     */
-  /** Independent named tasks as overlapped driver jobs on a dedicated
-    * bounded pool — see [[graft.core.Overlap]] (guide §2.6).
-    */
-  private def overlapped[A](tasks: Seq[(String, () => A)]): Seq[(String, A)] =
-    graft.core.Overlap.overlapped(tasks)
-
   private def recallLegDefs(embeddings: DataFrame, numQueries: Int,
       k: Int): Seq[(String, () => DataFrame)] = Seq(
       "knn_lsh" -> (() => legFrame(embeddings, s"leg lsh nq=$numQueries k=$k")(
@@ -1502,13 +1374,14 @@ object Ann {
 
   private def recallLegs(embeddings: DataFrame, numQueries: Int,
       k: Int): Seq[(String, DataFrame)] =
-    overlapped(recallLegDefs(embeddings, numQueries, k))
+    Overlap.overlapped(embeddings.sparkSession,
+      recallLegDefs(embeddings, numQueries, k))
 
   def annRecall(embeddings: DataFrame, numQueries: Int, k: Int): DataFrame = {
     // warm the exact-truth memo concurrently with the legs (one more
     // independent job for the same §2.6 overlap; memoized — the
     // recallTable call below reads it back instantly)
-    val legs = overlapped(
+    val legs = Overlap.overlapped(embeddings.sparkSession,
       ("truth" -> (() => truthFrame(embeddings, numQueries, k))) +:
         recallLegDefs(embeddings, numQueries, k))
     recallTable(embeddings, numQueries, k, legs.tail)
@@ -1541,7 +1414,7 @@ object Ann {
     // unchanged — only the submission overlaps.
     def leg(tag: String)(b: => DataFrame): () => DataFrame =
       () => legFrame(embeddings, s"leg $tag nq=$numQueries k=$k")(b)
-    val legs = overlapped(Seq(
+    val legs = Overlap.overlapped(embeddings.sparkSession, Seq(
       "truth" -> (() => truthFrame(embeddings, numQueries, k)),
       "knn_lsh_4planes" -> leg("lsh4")(
         knnLsh(embeddings, numQueries, k, planes = 4)),

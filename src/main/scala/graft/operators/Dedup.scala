@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionMemo
 import graft.functions.Portable._
 
 /** Deduplication operators for training-data curation.
@@ -88,15 +89,13 @@ object Dedup {
     * shuffle/join moves fixed-width longs instead of k-char strings.
     *
     * The shingle table is cached (the df pass and the semi-join pass
-    * both read it); all dedup queries over the same docs plan in a
-    * session share ONE cached handle via a registry keyed by the
-    * canonicalized plan, releasable with [[releaseShingleCaches]] —
-    * no per-call cache entries accumulating for the session's life.
+    * both read it); all dedup queries over the same corpus in a
+    * session share ONE cached handle through a [[SessionMemo]],
+    * releasable with [[releaseShingleCaches]].
     * The corpus count is a broadcast scalar, not a driver-side action.
     */
   def cappedShingleHashes(docs: DataFrame): DataFrame = {
-    val key = corpusKey(docs)
-    shCache.getOrElseUpdate(key)({
+    shCache.get(docs, "")({
       val nDocs = broadcast(docs.agg(count(lit(1)).as("n_docs")))
       // the shingle explode + per-shingle md5 is the CPU-heavy map
       // side of the whole dedup family — balance it across cores when
@@ -122,125 +121,28 @@ object Dedup {
     })
   }
 
-  /** Resident-table bound per session for each dedup cache registry
-    * (shingle tables and verified pair tables count separately). A
-    * long-lived service session cycling through many distinct corpora
-    * evicts and unpersists its least-recently-used cached table at the
-    * bound instead of accumulating resident tables for the session's
-    * lifetime. Tunable (`@volatile var`) so a deployment sizes it to
-    * its executor storage budget.
+  /** Per-session entry bound of every table memo ([[tableMemo]]: the
+    * dedup tables and the replicator's segment table, each memo
+    * counted separately). Tunable so a deployment sizes it to its
+    * executor storage.
     */
   @volatile var cacheBound: Int = 4
 
-  /** BYTE budget per session for each registry, alongside the entry
-    * bound: entries can be corpus-scale (cluster labels are O(docs)
-    * rows, signature tables O(docs·K)), so a count-only LRU of cached
-    * tables is an executor-storage cliff at 100 TB no matter how small
-    * the count (guide §5 — cached data competes with execution
-    * memory). Inserts evict least-recently-used entries while the
-    * session's MEASURED cached size (materialized row count × schema
-    * width — builds materialize before returning, so this is a
-    * counted size, not a planner estimate) exceeds the budget; the
-    * just-inserted entry is never evicted (a budget smaller than one
-    * table degrades to cache-nothing-extra, not to thrash). Local
-    * default sized far above anything the bench corpus produces;
-    * production deployments size it to executor storage.
+  /** Per-session byte budget of every table memo, alongside
+    * [[cacheBound]]: cluster labels are O(docs) rows and signature
+    * tables O(docs·K), so an entry count alone is no storage bound
+    * (guide §5 — cached data competes with execution memory). The
+    * default is far above anything the bench corpus produces;
+    * deployments size it to executor storage.
     */
   @volatile var cacheBytesBound: Long = 8L << 30
 
-  /** Measured size of a cached, materialized frame: row count (cheap
-    * — builds reads the cache the registry just filled) × the
-    * schema's default row width. Deterministic and
-    * estimation-garbage-free, unlike planner sizeInBytes; the
-    * InMemoryRelation byte accumulator was tried first but reads 0
-    * on this Spark build even with buffers loaded, and eviction
-    * needs honest relative magnitude, not exact bytes. 0 on failure
-    * — byte-eviction then simply doesn't fire for that entry.
-    */
-  private def cachedPlanBytes(df: DataFrame): Long =
-    try {
-      val width = df.schema.map(_.dataType.defaultSize).sum.max(1)
-      df.count() * width
-    } catch { case _: Throwable => 0L }
-
-  /** LRU registry of session-cached tables: key component 0 is the
-    * owning SparkSession; inserts past [[cacheBound]] entries or
-    * [[cacheBytesBound]] measured bytes for that session unpersist and
-    * drop its least-recently-used entries, and lookups refresh
-    * recency. The build (a corpus-scale Spark job) runs OUTSIDE the
-    * registry monitor under a per-key latch: two sessions filling
-    * caches for different corpora build concurrently, while same-key
-    * callers wait on the one in-flight build instead of duplicating it
-    * (a failed build releases its latch, so a waiter retries the fill
-    * rather than caching the failure).
-    */
-  private[graft] final class LruTableCache[K <: Product] {
-    private val m =
-      scala.collection.mutable.LinkedHashMap.empty[K, (DataFrame, Long)]
-    private val building = scala.collection.concurrent
-      .TrieMap.empty[K, java.util.concurrent.CountDownLatch]
-    @annotation.tailrec
-    def getOrElseUpdate(key: K)(build: => DataFrame): DataFrame = {
-      val hit = synchronized {
-        m.remove(key).map { e => m.put(key, e); e._1 } // re-insert = most recent
-      }
-      hit match {
-        case Some(df) => df
-        case None =>
-          val latch = new java.util.concurrent.CountDownLatch(1)
-          building.putIfAbsent(key, latch) match {
-            case Some(inFlight) =>
-              inFlight.await() // another caller is building this key
-              getOrElseUpdate(key)(build)
-            case None =>
-              // re-check under the claim: a build finishing between the
-              // miss and the claim must not be rebuilt (and its cached
-              // table must not be silently overwritten = leaked)
-              val done = synchronized {
-                m.remove(key).map { e => m.put(key, e); e._1 }
-              }
-              done match {
-                case Some(df) =>
-                  building.remove(key); latch.countDown(); df
-                case None =>
-                  // the entry is measured and inserted BEFORE the latch
-                  // is released: a woken waiter must find it in `m`, or
-                  // it rebuilds the key and one persisted table leaks
-                  try {
-                    val df = build
-                    val bytes = cachedPlanBytes(df) // outside the monitor
-                    insert(key, df, bytes)
-                    df
-                  } finally { building.remove(key); latch.countDown() }
-              }
-          }
-      }
-    }
-    private def insert(key: K, df: DataFrame, bytes: Long): Unit = synchronized {
-      m.put(key, (df, bytes))
-      def mine = m.toSeq
-        .filter(_._1.productElement(0) == key.productElement(0))
-      // entry bound, oldest first — never the new entry
-      mine.dropRight(cacheBound).foreach { case (k0, (d0, _)) =>
-        m.remove(k0); d0.unpersist()
-      }
-      // byte budget, oldest first — never the new entry
-      var resident = mine
-      while (resident.size > 1 &&
-          resident.map(_._2._2).sum > cacheBytesBound) {
-        val (k0, (d0, _)) = resident.head
-        m.remove(k0); d0.unpersist()
-        resident = mine
-      }
-    }
-    def releaseSession(session: SparkSession): Unit = synchronized {
-      m.keys.filter(_.productElement(0) == session).toSeq
-        .foreach(k => m.remove(k).foreach(_._1.unpersist()))
-    }
-  }
+  /** A memo of cached tables under [[cacheBound]]/[[cacheBytesBound]]. */
+  private[graft] def tableMemo(): SessionMemo[DataFrame] =
+    SessionMemo.tables(cacheBound, cacheBytesBound)
 
   /** Cached capped shingle table per (session, corpus plan). */
-  private val shCache = new LruTableCache[(SparkSession, String)]
+  private val shCache = tableMemo()
 
   /** Cached RANKED shingle table per (session, corpus): each
     * (doc_id, h) with its shingle's global df, the doc's rarest-first
@@ -252,11 +154,10 @@ object Dedup {
     * (query, threshold). Consumers derive their prefix with their own
     * threshold filter, a codegen projection over the cached rows.
     */
-  private val rankCache = new LruTableCache[(SparkSession, String)]
+  private val rankCache = tableMemo()
 
   private def rankedShingles(docs: DataFrame): DataFrame = {
-    val ck = corpusKey(docs)
-    rankCache.getOrElseUpdate((ck._1, ck._2 + "|rank"))({
+    rankCache.get(docs, "")({
       val sh = cappedShingleHashes(docs)
       val df_ = sh.groupBy("h").agg(count(lit(1)).as("df"))
       val byDoc = org.apache.spark.sql.expressions.Window
@@ -272,85 +173,20 @@ object Dedup {
     })
   }
 
-  /** Cache key for a corpus: the canonicalized plan text plus a
-    * fingerprint of any relation whose IDENTITY the plan text elides —
-    * inline (local) relations print only their schema, and RDD-backed
-    * scans (`localCheckpoint` frames) print only (output, isStreaming).
-    * Without the fingerprints, two distinct in-memory or checkpointed
-    * corpora with one schema would collide on one cache entry and the
-    * second would silently read the first's tables. File-backed
-    * corpora are distinguished by path in the plan text itself.
-    * Shared with the ANN trained-model memo ([[graft.operators.Ann]]),
-    * so both registries collide — or don't — identically.
+  /** Unpersist ONLY the dedup tables cached for `spark` (shingle,
+    * ranked, pair, containment, cluster-label and signature memos) —
+    * e.g. between dedup phases of a live session. For end-of-session
+    * teardown use [[releaseAllCaches]].
     */
-  private[graft] def corpusKey(docs: DataFrame): (SparkSession, String) = {
-    // ANALYZED, not logical: a bare `spark.read.parquet(dir)` logical
-    // plan in Spark 4 is an UnresolvedDataSource whose text names
-    // neither the path nor the files — logical-plan keys would collide
-    // across DIFFERENT directories of the same schema
-    val plan = docs.queryExecution.analyzed.canonicalized
-    val fp = plan.collect {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        "L" + l.data.hashCode
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        "R" + r.rdd.id
-      // file-based relations canonicalize to schema ONLY ("Relation
-      // [cols] parquet" — no path, no snapshot): fingerprint the
-      // current file listing (full paths + bytes), so a DIFFERENT
-      // directory is a different corpus and a GROWN directory (a
-      // streaming corpus between maintenance audits, a recompacted
-      // index) is a fresh cache entry. Metadata-only, no data scan.
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            // listing INCLUDING per-file length + modification time
-            // (still metadata-only — the FileIndex already holds the
-            // statuses): files rewritten in place with identical names
-            // and total size must key a FRESH entry, not serve the
-            // stale memo for the session's lifetime. Falls back to the
-            // path-only listing if a FileIndex implementation throws.
-            val files =
-              try fs.location.listFiles(Nil, Nil).iterator
-                .flatMap(_.files)
-                .map(f => f.getPath.toString + "@" + f.getLen +
-                  "@" + f.getModificationTime)
-                .toArray.sorted
-              catch { case _: Throwable => fs.location.inputFiles.sorted }
-            "F" + scala.util.hashing.MurmurHash3
-              .arrayHash(files) + ":" + fs.sizeInBytes
-          case other => "X" + other.getClass.getName
-        }
-    }
-    (docs.sparkSession, plan.toString + fp.mkString("[", ",", "]"))
-  }
+  def releaseShingleCaches(spark: SparkSession): Unit =
+    Seq(shCache, rankCache, pairCache, containCache, clusterCache, sigCache)
+      .foreach(_.release(spark))
 
-  /** Unpersist ONLY the dedup-state tables cached for `spark`
-    * (shingle, pair, containment, cluster-label and signature
-    * registries) — e.g. between dedup phases of a live session. For
-    * end-of-session teardown use [[releaseAllCaches]]. (r20 had this
-    * name releasing every other operator's registry too; callers that
-    * meant dedup-only were silently evicting unrelated hot caches.)
+  /** Session teardown: drops `spark`'s entries from every
+    * [[SessionMemo]] (dedup, ANN, profiling, hybrid search, quality
+    * model, replicator).
     */
-  def releaseShingleCaches(spark: SparkSession): Unit = {
-    shCache.releaseSession(spark)
-    rankCache.releaseSession(spark)
-    pairCache.releaseSession(spark)
-    containCache.releaseSession(spark)
-    clusterCache.releaseSession(spark)
-    sigCache.releaseSession(spark)
-  }
-
-  /** Session-wide teardown: the dedup registries plus every other
-    * operator registry that follows this cache discipline (quality
-    * models, profile memos, segment tables, hybrid lexical legs).
-    */
-  def releaseAllCaches(spark: SparkSession): Unit = {
-    releaseShingleCaches(spark)
-    graft.functions.TextAnalysis.releaseQualityModels(spark)
-    Analytics.releaseProfileCaches(spark)
-    SegmentRoller.releaseSegmentCaches(spark)
-    HybridSearch.releaseLexLegs(spark)
-  }
+  def releaseAllCaches(spark: SparkSession): Unit = SessionMemo.release(spark)
 
   /** Default blast-radius bound for [[ngramJaccard]]'s exhaustive pair
     * join: Σdf² over the capped shingle table, an upper bound on the
@@ -401,9 +237,7 @@ object Dedup {
     // the key, a permissive call would populate the entry and a later
     // stricter-cap call would silently receive pairs where its
     // documented fail-CLOSED contract promises a throw.
-    val ck = corpusKey(docs)
-    pairCache.getOrElseUpdate(
-      (ck._1, ck._2 + s"|ppjoin|cap=$maxCandidatePairs", minJaccardBp))({
+    pairCache.get(docs, s"ppjoin cap=$maxCandidatePairs bp=$minJaccardBp")({
       val sh = cappedShingleHashes(docs)
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
       // prefix = a threshold filter over the SHARED ranked table
@@ -497,9 +331,7 @@ object Dedup {
   def containmentPairs(docs: DataFrame, minContainBp: Long,
       maxCandidatePairs: Long = MaxNgramCandidatePairs): DataFrame = {
     // cap in the key for the same fail-CLOSED reason as [[ngramJaccard]]
-    val ck = corpusKey(docs)
-    containCache.getOrElseUpdate(
-      (ck._1, ck._2 + s"|cap=$maxCandidatePairs", minContainBp))({
+    containCache.get(docs, s"cap=$maxCandidatePairs bp=$minContainBp")({
       val sh = cappedShingleHashes(docs)
       val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
       // prefix = a threshold filter over the SHARED ranked table
@@ -542,10 +374,8 @@ object Dedup {
     })
   }
 
-  /** Cached containment pair table per (session, corpus, threshold) —
-    * same registry discipline as [[minhashLsh]]'s pair cache.
-    */
-  private val containCache = new LruTableCache[(SparkSession, String, Long)]
+  /** Cached containment pair table per (session, corpus, threshold). */
+  private val containCache = tableMemo()
 
   /** The exhaustive twin of [[containmentPairs]] (every directed pair
     * sharing any shingle is a candidate) — spec-pinned equal, kept as
@@ -612,20 +442,18 @@ object Dedup {
     * that share one corpus: the production-geometry signature pass
     * (128 LCG min-aggregates over the shingle table) was computed
     * once by the bucket-balance report and AGAIN by the prod pair
-    * pipeline. Registry discipline identical to the shingle cache;
-    * streaming ingest keeps calling the uncached form (per-batch
-    * frames would only churn the registry).
+    * pipeline. Streaming ingest keeps calling the uncached form
+    * (per-batch frames would only churn the memo).
     */
   def minhashSignaturesCached(sh: DataFrame,
       numHashes: Int = MinHashK): DataFrame = {
-    val ck = corpusKey(sh)
-    sigCache.getOrElseUpdate((ck._1, ck._2 + s"|sig k=$numHashes", 0L))({
+    sigCache.get(sh, s"k=$numHashes")({
       minhashSignatures(sh, numHashes).cache()
     })
   }
 
   /** Cached signature table per (session, corpus shingles, K). */
-  private val sigCache = new LruTableCache[(SparkSession, String, Long)]
+  private val sigCache = tableMemo()
 
   /** Banded minhash signatures: wide (mh0..mh{b·r−1}) → long (doc_id,
     * band, band_key); band `b` spans rows mh(b·r)..mh(b·r+r−1). The
@@ -699,9 +527,7 @@ object Dedup {
   def minhashLsh(docs: DataFrame, minJaccardBp: Long,
       bands: Int = MinHashBands, rows: Int = MinHashRows): DataFrame = {
     graft.core.Configs.LshGeometry(bands, rows, minJaccardBp).validated
-    val ck = corpusKey(docs)
-    val key = (ck._1, ck._2 + s"|lsh b=$bands r=$rows", minJaccardBp)
-    pairCache.getOrElseUpdate(key)({
+    pairCache.get(docs, s"lsh b=$bands r=$rows bp=$minJaccardBp")({
       val sh = cappedShingleHashes(docs)
       val cands = lshCandidates(minhashSignaturesCached(sh, bands * rows),
         bands, rows)
@@ -717,7 +543,7 @@ object Dedup {
   }
 
   /** Cached verified pair table per (session, corpus plan, threshold). */
-  private val pairCache = new LruTableCache[(SparkSession, String, Long)]
+  private val pairCache = tableMemo()
 
   /** SimHash width in bits. 60 keeps the value in the portable
     * non-negative i64 range (DuckDB errors on i64 overflow) while
@@ -821,15 +647,13 @@ object Dedup {
     // loop is deterministic, so memoizing is invisible to results
     // (guide §2.4: don't recompute what a prior identical pass
     // already shuffled).
-    val ck = corpusKey(docs)
-    clusterCache.getOrElseUpdate(
-      (ck._1, ck._2 + s"|cc iters=$maxIters", minJaccardBp))({
+    clusterCache.get(docs, s"iters=$maxIters bp=$minJaccardBp")({
       dedupClustersUncached(docs, minJaccardBp, maxIters).cache()
     })
   }
 
   /** Cached cluster-label table per (session, corpus, threshold). */
-  private val clusterCache = new LruTableCache[(SparkSession, String, Long)]
+  private val clusterCache = tableMemo()
 
   private def dedupClustersUncached(docs: DataFrame, minJaccardBp: Long,
       maxIters: Int): DataFrame = {

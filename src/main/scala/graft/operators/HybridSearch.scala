@@ -97,44 +97,17 @@ object HybridSearch {
     */
   private def lexLeg(docs: DataFrame, numQueries: Int,
       topN: Int): DataFrame = {
-    val ck = Dedup.corpusKey(docs)
-    val key = (ck._1, ck._2 + s"|lexleg nq=$numQueries topN=$topN")
-    val rows = lexLatch.getOrElseUpdate(key, new Object).synchronized {
-      val hit = lexMemo.synchronized {
-        lexMemo.remove(key).map { v => lexMemo.put(key, v); v }
-      }
-      hit.getOrElse {
-        val v = lexLegPlan(docs, numQueries, topN)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-          .toSeq
-        lexMemo.synchronized {
-          lexMemo.put(key, v)
-          val mine = lexMemo.keys.filter(_._1 == key._1).toSeq
-          mine.dropRight(32).foreach { k0 =>
-            lexMemo.remove(k0); lexLatch.remove(k0)
-          }
-        }
-        v
-      }
+    val rows = lexCache.get(docs, s"nq=$numQueries topN=$topN") {
+      lexLegPlan(docs, numQueries, topN)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+        .toSeq
     }
     val sp = docs.sparkSession
     import sp.implicits._
     rows.toDF("q_id", "doc_id", "lex_rank")
   }
 
-  private val lexMemo = scala.collection.mutable.LinkedHashMap.empty[
-    (org.apache.spark.sql.SparkSession, String), Seq[(Long, Long, Int)]]
-  private val lexLatch = scala.collection.concurrent.TrieMap.empty[
-    (org.apache.spark.sql.SparkSession, String), Object]
-
-  /** Drop the memoized lexical legs for `spark` (wired into
-    * [[Dedup.releaseAllCaches]]).
-    */
-  def releaseLexLegs(spark: org.apache.spark.sql.SparkSession): Unit =
-    lexMemo.synchronized {
-      lexMemo.keys.filter(_._1 == spark).toSeq
-        .foreach { k => lexMemo.remove(k); lexLatch.remove(k) }
-    }
+  private val lexCache = graft.core.SessionMemo.values[Seq[(Long, Long, Int)]]()
 
   /** Shared lexical leg + RRF fusion over a pluggable vector leg
     * (any (q_id, rnk, neighbor_id, …) top-N ranking).

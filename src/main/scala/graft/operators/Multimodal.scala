@@ -5,6 +5,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.ByteBuffer
 
 import javax.imageio.ImageIO
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -27,16 +28,16 @@ import org.apache.spark.sql.functions._
   * "object store" landing step) so the DuckDB oracle can reproduce the
   * decoded features arithmetically — the features row proves the bytes
   * really round-tripped through the codec.
+  *
+  * The dedup operators ([[imageDedupPhash]], [[imageDedup]],
+  * [[videoDedup]]) `localCheckpoint` their decoded (doc_id, phash)
+  * rows per call, so the decode pass runs once per query. Those blocks
+  * live only in executor storage: losing an executor fails the query,
+  * so these operators are unsafe under dynamic allocation. They are
+  * not session memos either — [[Dedup.releaseAllCaches]] does not
+  * free them; they go when the returned frame is garbage-collected.
   */
 object Multimodal {
-
-  // ImageIO's default stream cache backs every encode/decode with a
-  // TEMP FILE (FileCacheImageInput/OutputStream); for these
-  // in-memory byte-array payloads the disk round-trip is pure
-  // overhead serially and a same-directory file-churn contention
-  // point across parallel codec tasks. The in-memory stream cache
-  // produces byte-identical codec output.
-  ImageIO.setUseCache(false)
 
   /** A media record as it would land from an object store. */
   case class MediaFile(doc_id: Long, media_type: String, payload: Array[Byte],
@@ -55,8 +56,27 @@ object Multimodal {
     * synthesis step; decoding is the production-shaped path: parse the
     * binary payload, read dimensions and pixels from the decoded
     * raster.
+    *
+    * Every ImageIO call in [[Multimodal]] goes through [[read]] and
+    * [[write]], which wrap the bytes in in-memory image streams.
+    * ImageIO's default stream cache backs each encode/decode with a
+    * temp file, pure overhead for byte-array payloads and a file-churn
+    * contention point across parallel codec tasks; the in-memory
+    * streams give byte-identical output without changing the
+    * JVM-wide `ImageIO.setUseCache` default.
     */
   object PngCodec {
+    def read(payload: Array[Byte]): BufferedImage =
+      ImageIO.read(new MemoryCacheImageInputStream(
+        new ByteArrayInputStream(payload))) // closes the stream
+
+    def write(img: BufferedImage): Array[Byte] = {
+      val bos = new ByteArrayOutputStream()
+      val out = new MemoryCacheImageOutputStream(bos)
+      try ImageIO.write(img, "png", out) finally out.close() // flushes
+      bos.toByteArray
+    }
+
     def encode(width: Int, height: Int, rgb: Int): Array[Byte] = {
       val img = new BufferedImage(width, height, BufferedImage.TYPE_INT_RGB)
       var y = 0
@@ -65,14 +85,12 @@ object Multimodal {
         while (x < width) { img.setRGB(x, y, rgb); x += 1 }
         y += 1
       }
-      val bos = new ByteArrayOutputStream()
-      ImageIO.write(img, "png", bos)
-      bos.toByteArray
+      write(img)
     }
 
     /** (width, height, top-left RGB) read from the decoded image. */
     def decode(payload: Array[Byte]): (Int, Int, Int) = {
-      val img = ImageIO.read(new ByteArrayInputStream(payload))
+      val img = read(payload)
       (img.getWidth, img.getHeight, img.getRGB(0, 0) & 0xffffff)
     }
   }
@@ -226,16 +244,14 @@ object Multimodal {
     landed(spark, docs, Some("image"))
       .mapPartitions { batch =>
         batch.map { f =>
-          val img = ImageIO.read(new ByteArrayInputStream(f.payload))
+          val img = PngCodec.read(f.payload)
           val nw = math.max(1, img.getWidth / factor)
           val nh = math.max(1, img.getHeight / factor)
           val out = new BufferedImage(nw, nh, BufferedImage.TYPE_INT_RGB)
           val g = out.createGraphics()
           g.drawImage(img, 0, 0, nw, nh, null)
           g.dispose()
-          val bos = new ByteArrayOutputStream()
-          ImageIO.write(out, "png", bos)
-          val (w, h, rgb) = PngCodec.decode(bos.toByteArray)
+          val (w, h, rgb) = PngCodec.decode(PngCodec.write(out))
           MediaMeta(f.doc_id, f.media_type, w, h, rgb, frames = 1L)
         }
       }
@@ -532,9 +548,7 @@ object Multimodal {
           img.setRGB(i % 32, i / 32, (g << 16) | (g << 8) | g)
           i += 1
         }
-        val bos = new ByteArrayOutputStream()
-        ImageIO.write(img, "png", bos)
-        (id, bos.toByteArray)
+        (id, PngCodec.write(img))
       }
     }
   }
@@ -577,7 +591,7 @@ object Multimodal {
     // small rows; never re-derive them from the heavy payloads).
     val hashed = landedPhotos(spark, docs).mapPartitions { batch =>
       batch.map { case (id, payload) =>
-        val img = ImageIO.read(new ByteArrayInputStream(payload))
+        val img = PngCodec.read(payload)
         require(img.getWidth == 32 && img.getHeight == 32,
           s"photo $id: unexpected dims ${img.getWidth}x${img.getHeight}")
         val gray = new Array[Int](1024)

@@ -77,27 +77,16 @@ object SegmentRoller {
     * the SAME count-rolled segment table, and each re-ran the message
     * frame's per-partition rank window to rebuild it. The segment
     * table is corpus/maxMessages rows (metadata-scale relative to the
-    * stream) and the rolling is deterministic, so the dedup-registry
-    * discipline applies unchanged. Streaming paths keep calling
-    * [[byCount]] directly.
+    * stream) and the rolling is deterministic, so it is memoized like
+    * the dedup tables. Streaming paths keep calling [[byCount]]
+    * directly.
     */
-  def byCountCached(messages: DataFrame, maxMessages: Int): DataFrame = {
-    val ck = Dedup.corpusKey(messages)
-    segCache.getOrElseUpdate(
-      (ck._1, ck._2 + s"|segcount $maxMessages", 0L))({
-      byCount(messages, maxMessages).cache()
-    })
-  }
+  def byCountCached(messages: DataFrame, maxMessages: Int): DataFrame =
+    segCache.get(messages, s"maxMessages=$maxMessages")(
+      byCount(messages, maxMessages).cache())
 
   /** Cached count-rolled segment tables per (session, stream, size). */
-  private val segCache = new Dedup.LruTableCache[
-    (org.apache.spark.sql.SparkSession, String, Long)]
-
-  /** Unpersist the cached segment tables for `spark` (wired into
-    * [[Dedup.releaseAllCaches]]).
-    */
-  def releaseSegmentCaches(spark: org.apache.spark.sql.SparkSession): Unit =
-    segCache.releaseSession(spark)
+  private val segCache = Dedup.tableMemo()
 
   /** Age-based rolling: event-time buckets per partition
     * (the MaxSegmentAge path — a segment never spans more than one

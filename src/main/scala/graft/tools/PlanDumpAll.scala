@@ -46,7 +46,6 @@ object PlanDumpAll {
       }
     }
     graft.operators.Dedup.releaseAllCaches(spark)
-    graft.operators.Ann.releaseTrainedModels(spark)
     spark.stop()
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.SessionMemo
 import graft.operators.{Ann, Dedup}
 import graft.functions.TextAnalysis
 import graft.sources.Tables
@@ -721,8 +722,8 @@ class DedupAnnSpec extends SparkSuite {
   test("dedup cache registry: different-key builds run concurrently, same-key builds once") {
     import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
     import spark.implicits._
-    val cache =
-      new Dedup.LruTableCache[(org.apache.spark.sql.SparkSession, String)]
+    val cache = Dedup.tableMemo()
+    val corpus = spark.emptyDataFrame
     // both builds must be in flight at once to pass the barrier: a
     // global build lock (the old design) deadlocks here and times out
     val barrier = new CyclicBarrier(2)
@@ -734,25 +735,46 @@ class DedupAnnSpec extends SparkSuite {
     }
     val pool = Executors.newFixedThreadPool(2)
     try {
-      val fa = pool.submit(() => cache.getOrElseUpdate((spark, "a"))(build("a")))
-      val fb = pool.submit(() => cache.getOrElseUpdate((spark, "b"))(build("b")))
+      val fa = pool.submit(() => cache.get(corpus, "a")(build("a")))
+      val fb = pool.submit(() => cache.get(corpus, "b")(build("b")))
       assert(fa.get(30, TimeUnit.SECONDS).count() === 1L)
       assert(fb.get(30, TimeUnit.SECONDS).count() === 1L)
       assert(builds.get() === 2)
-      // same key again, two threads: served from the registry, no rebuild
-      val fc = pool.submit(() => cache.getOrElseUpdate((spark, "a"))(build("a")))
-      val fd = pool.submit(() => cache.getOrElseUpdate((spark, "a"))(build("a")))
+      // same key again, two threads: served from the memo, no rebuild
+      val fc = pool.submit(() => cache.get(corpus, "a")(build("a")))
+      val fd = pool.submit(() => cache.get(corpus, "a")(build("a")))
       assert(fc.get(30, TimeUnit.SECONDS).count() === 1L)
       assert(fd.get(30, TimeUnit.SECONDS).count() === 1L)
       assert(builds.get() === 2)
     } finally pool.shutdownNow()
+    // a build that throws frees its key: no latch is left, and the
+    // next caller builds exactly once
+    val values = SessionMemo.values[Seq[Int]]()
+    intercept[IllegalStateException](
+      values.get(corpus, "boom")(throw new IllegalStateException("boom")))
+    assert(values.inFlight === 0)
+    val retries = new java.util.concurrent.atomic.AtomicInteger(0)
+    assert(values.get(corpus, "boom") { retries.incrementAndGet(); Seq(1) } === Seq(1))
+    assert(values.get(corpus, "boom") { retries.incrementAndGet(); Seq(2) } === Seq(1))
+    assert(retries.get() === 1)
   }
 
   test("dedup cache registry: N same-key callers run one build and leak no table") {
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
     import spark.implicits._
-    val cache =
-      new Dedup.LruTableCache[(org.apache.spark.sql.SparkSession, String)]
+    val corpus = spark.emptyDataFrame
+    val n = 8
+    // `call` on n threads released at once
+    def race[A](call: () => A): Seq[A] = {
+      val start = new CountDownLatch(1)
+      val pool = Executors.newFixedThreadPool(n)
+      try {
+        val fs = (1 to n).map(_ => pool.submit(() => { start.await(); call() }))
+        start.countDown()
+        fs.map(_.get(60, TimeUnit.SECONDS))
+      } finally pool.shutdownNow()
+    }
+    val cache = Dedup.tableMemo()
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     // each build caches a distinct plan, so a second build would leave
@@ -762,21 +784,26 @@ class DedupAnnSpec extends SparkSuite {
       Thread.sleep(200) // every caller reaches the latch meanwhile
       Seq(("k", n)).toDF("k", "build").cache()
     }
-    val n = 8
-    val start = new CountDownLatch(1)
-    val pool = Executors.newFixedThreadPool(n)
-    try {
-      val fs = (1 to n).map(_ => pool.submit(() => {
-        start.await()
-        cache.getOrElseUpdate((spark, "one"))(build())
-      }))
-      start.countDown()
-      assert(fs.map(_.get(60, TimeUnit.SECONDS).head().getInt(1)).toSet === Set(1))
-      assert(builds.get() === 1)
-    } finally pool.shutdownNow()
-    cache.releaseSession(spark) // what releaseAllCaches does per registry
+    assert(race(() => cache.get(corpus, "one")(build()))
+      .map(_.head().getInt(1)).toSet === Set(1))
+    assert(builds.get() === 1)
+    // a driver-side value memo: one build, and every caller holds the
+    // identical object
+    val values = SessionMemo.values[Seq[Int]]()
+    val valueBuilds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val got = race(() => values.get(corpus, "one") {
+      valueBuilds.incrementAndGet(); Thread.sleep(200); Seq(1, 2, 3)
+    })
+    assert(valueBuilds.get() === 1)
+    assert(got.forall(_ eq got.head))
     Dedup.releaseAllCaches(spark)
     assert(spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore === Set.empty)
+    // the one teardown also drops Ann's trained models
+    val q = Ann.quantized(emb).select("vec_id", "v", "norm2")
+    val trained = Ann.kmeansCentroids(q, 8, 2)
+    assert(Ann.kmeansCentroids(q, 8, 2) eq trained)
+    Dedup.releaseAllCaches(spark)
+    assert(!(Ann.kmeansCentroids(q, 8, 2) eq trained))
   }
 
   test("int8 codes: bounded, half-scale round-trip, high top-5 agreement") {

@@ -226,4 +226,22 @@ class MultimodalSpec extends SparkSuite {
     assert(video.nonEmpty)
     assert(video.forall(_.payload.take(4).toSeq === "GVID".getBytes.toSeq))
   }
+
+  test("PNG codec keeps the JVM-wide ImageIO cache default and encodes stable bytes") {
+    import spark.implicits._
+    assert(Multimodal != null) // runs the object initializer
+    assert(javax.imageio.ImageIO.getUseCache, "Multimodal changed a JVM-wide ImageIO setting")
+    def sha(b: Array[Byte]) = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(b).map(x => f"$x%02x").mkString
+    // digests of the bytes the temp-file-free ImageIO path has always
+    // produced: a solid INT_RGB raster, and one landed photo of each
+    // raster type (odd ids are 3-byte BGR)
+    assert(sha(Multimodal.PngCodec.encode(5, 3, 0x336699)) ===
+      "6feb71d20dea4ca0ca308fb8100e530dca8a7af48a5204203b430db4b6cbb317")
+    val photos = Multimodal.landedPhotos(spark, Seq(1L, 2L).toDF("doc_id"))
+      .collect().sortBy(_._1).map { case (id, b) => id -> sha(b) }
+    assert(photos.toSeq === Seq(
+      1L -> "ccec2e3a1fbd189363dab99389631003715d1c5510c5e801b20c504ce10f7507",
+      2L -> "4800fb83ca764e68b9d79352c247eb965d20aa63ecac7ee42488daed4d943d82"))
+  }
 }
