@@ -8,13 +8,14 @@ import graft.functions.{HexHash60Expr, HyperplaneBucketExpr, IntDotExpr}
 
 /** Session extension registering graft's native functions with the SQL
   * parser, so `spark.sql("SELECT hex_hash60(cast(c AS binary)) ...")`
-  * works anywhere the Scala DSL does:
+  * works anywhere the Scala DSL does. Set it on a session built
+  * outside graft with
   *
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
+  *   --conf spark.sql.extensions=graft.GraftExtensions
   *
   * [[GraftExtensions.register]] does the same for an already-running
-  * session (notebooks, tests).
+  * session; [[graft.core.LocalSession]] calls it on every session it
+  * starts.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -416,16 +416,7 @@ object ScaleStress {
       if (args.length > 3) known.filter(args(3).split(",").toSet)
       else Queries
     require(queries.nonEmpty, s"no known queries in '${args(3)}'")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.register(spark)
+    val spark = graft.core.LocalSession()
 
     val out = java.nio.file.Files
       .createTempDirectory("graft-scale-").toAbsolutePath.toString

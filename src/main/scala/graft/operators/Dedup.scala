@@ -657,11 +657,6 @@ object Dedup {
 
   private def dedupClustersUncached(docs: DataFrame, minJaccardBp: Long,
       maxIters: Int): DataFrame = {
-    def dbg[A](name: String)(f: => A): A =
-      if (sys.env.contains("GRAFT_CC_DEBUG")) {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[cc] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
-      } else f
     val pairs = minhashLsh(docs, minJaccardBp).select("doc_a", "doc_b")
     // undirected edge list, both directions — exploded from ONE pass
     // over the pair pipeline (a self-union would run it twice)
@@ -679,7 +674,7 @@ object Dedup {
     // corpus's partition count pays a full task-grid of scheduling
     // overhead per round (the local analogue of a 100 TB job keeping
     // 100k reducers alive to shuffle a few thousand rows)
-    val nEdges = dbg("edges0 materialize") { edges0.count() }
+    val nEdges = edges0.count()
     val gp = math.max(1, math.min(2000, (nEdges / 50000L).toInt + 1))
     // localCheckpoint TRUNCATES the logical plan, not just the
     // computation: a self-join per round otherwise DOUBLES the plan
@@ -688,34 +683,24 @@ object Dedup {
     // tree on every action — the loop becomes driver-planning-bound.
     // (A production cluster job would use reliable checkpointing to
     // the checkpoint dir; same truncation, fault-tolerant.)
-    val edges = dbg("edges checkpoint") {
-      edges0.repartition(gp, col("doc_b")).localCheckpoint(true)
-    }
+    val edges = edges0.repartition(gp, col("doc_b")).localCheckpoint(true)
     edges0.unpersist()
     // iterate ONLY over docs that appear in the pair graph — everything
     // else is trivially its own singleton cluster (unioned at the end)
-    val edgeDocs = dbg("edgeDocs checkpoint") {
-      edges.select("doc_a").repartition(gp, col("doc_a")).distinct()
-        .withColumnRenamed("doc_a", "doc_id").localCheckpoint(true)
-    }
+    val edgeDocs = edges.select("doc_a").repartition(gp, col("doc_a")).distinct()
+      .withColumnRenamed("doc_a", "doc_id").localCheckpoint(true)
     var labels = edgeDocs.withColumn("cluster", col("doc_id"))
       .localCheckpoint(true)
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
-      val next = dbg(s"round ${i + 1} step") {
-        ccRound(edges, labels, gp).localCheckpoint(true)
-      }
-      val changed = dbg(s"round ${i + 1} changed-count") {
-        next.repartition(gp, col("doc_id"))
-          .join(labels.withColumnRenamed("cluster", "old"), Seq("doc_id"))
-          .filter(col("cluster") =!= col("old")).count()
-      }
+      val next = ccRound(edges, labels, gp).localCheckpoint(true)
+      val changed = next.repartition(gp, col("doc_id"))
+        .join(labels.withColumnRenamed("cluster", "old"), Seq("doc_id"))
+        .filter(col("cluster") =!= col("old")).count()
       labels = next
       converged = changed == 0
       i += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $i changed=$changed")
     }
     // labels is already checkpointed (tiny plan); singletons join the
     // corpus against the checkpointed edge-doc table

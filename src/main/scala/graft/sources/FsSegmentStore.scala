@@ -26,9 +26,9 @@ import graft.operators.Compactor
   *   - [[open]] is ONE multi-path parquet scan for any number of
   *     segments; identity columns are derived from `input_file_name()`
   *     — no per-segment DataFrame, no N-way union, plan size O(1).
-  *   - [[compact]] / [[compactLeveled]] plan bins on the driver from
-  *     the metadata listing, then run ONE read + ONE partitioned write
-  *     for ALL bins — not a job pair per bin, and no planning or
+  *   - [[compactLeveled]] plans its runs on the driver from the
+  *     metadata listing, then runs ONE read + ONE partitioned write
+  *     for ALL runs — not a job pair per run, and no planning or
   *     counting job: each output's row count is read from its parquet
   *     footers.
   *   - Writes use dynamic partition overwrite, so a replayed batch or
@@ -187,37 +187,6 @@ class FsSegmentStore(spark: SparkSession, val root: String) {
     bins.map { case (out, _) => out.copy(messageCount = footerCount(out)) }
   }
 
-  /** Compact level-`level` segments of one (region, topic): merge every
-    * run of up to `maxSegments` contiguous segments (at least
-    * `minSegments`) into a level+1 segment, per-offset dedup, then
-    * delete the inputs (reference: pkg/compaction/compactor.go:115-160,
-    * output level = max input level + 1, optional delete).
-    *
-    * Contiguity mirrors [[graft.operators.Compactor.plan]]: only the
-    * contiguous prefix of each partition is binned — the reference
-    * refuses to merge across a missing offset range (compactor.go:219
-    * HasOffset error), because a gap absorbed into a merged segment's
-    * [start,end] would become invisible to GapDetector. Post-gap
-    * segments stay in place until the gap resolves. Overlap
-    * (at-least-once rewinds) is tolerated: running-max(end) contiguity
-    * plus per-offset dedup.
-    *
-    * Execution is ONE read over all bin inputs + ONE partitioned write
-    * of all merged segments; counts come from the written footers.
-    */
-  def compact(region: String, topic: String, level: Int,
-      minSegments: Int, maxSegments: Int): Seq[SegmentMeta] = {
-    val inventory = list(region, topic).filter(_.level == level)
-    val bins = planBins(inventory, minSegments, maxSegments)
-    if (bins.isEmpty) return Seq.empty
-    val out = merge(region, topic, bins.map { b =>
-      SegmentMeta(region, topic, b.partId, level + 1, b.startOffset,
-        b.endOffset, messageCount = 0L, sizeBytes = -1L) -> b.inputs
-    })
-    bins.flatMap(_.inputs).foreach(delete)
-    out
-  }
-
   /** Full leveled compaction against the store — the reference's
     * executable compactor (pkg/compaction/compactor.go:114-163:
     * create → copy in offset order skipping compacted offsets → close
@@ -268,36 +237,9 @@ class FsSegmentStore(spark: SparkSession, val root: String) {
     if (deleteInputs) bins.flatMap(_._2).foreach(delete)
     out
   }
-
-  /** Driver-side bin planning over the (metadata-scale) inventory:
-    * per partition, sort by (start, end), keep only the contiguous
-    * prefix (stop at the first gap past the running max end), group
-    * greedily into runs of `maxSegments`, drop runs below
-    * `minSegments`.
-    */
-  private def planBins(inventory: Seq[SegmentMeta], minSegments: Int,
-      maxSegments: Int): Seq[FsSegmentStore.Bin] =
-    inventory.groupBy(_.partId).toSeq.sortBy(_._1).flatMap { case (partId, segs) =>
-      val sorted = segs.sortBy(m => (m.startOffset, m.endOffset))
-      var runMax = Long.MinValue
-      val prefix = sorted.takeWhile { m =>
-        val contiguous = runMax == Long.MinValue || m.startOffset <= runMax + 1
-        if (contiguous) runMax = math.max(runMax, m.endOffset)
-        contiguous
-      }
-      prefix.grouped(maxSegments)
-        .filter(_.size >= minSegments)
-        .map(run => FsSegmentStore.Bin(partId, run.head.startOffset,
-          run.map(_.endOffset).max, run))
-        .toSeq
-    }
 }
 
 object FsSegmentStore {
-  /** One planned compaction bin: its output segment key + inputs. */
-  case class Bin(partId: Int, startOffset: Long, endOffset: Long,
-      inputs: Seq[SegmentMeta])
-
   /** Segment + store-side metadata (reference SegmentInfo). */
   case class SegmentInfo(meta: SegmentMeta, createdEpoch: Long)
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.core.LocalSession
 import graft.operators.MessageFraming
 import graft.sources.{FsCheckpointStore, FsSegmentStore, Tables}
 import graft.streaming.{StreamMessage, StreamingEgress, StreamingIngress}
@@ -26,13 +27,7 @@ import graft.streaming.{StreamMessage, StreamingEgress, StreamingIngress}
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, workDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     val ok = run(spark, sfDir, workDir)
     spark.stop()
@@ -81,7 +76,9 @@ object PipelineDemo {
     println(s"[pipeline] egress rolled ${level0.size} level-0 segments from ${all.length} live messages")
 
     // --- compaction leg (runs against the live store) ---
-    val compacted = store.compact("src", "events", 0, 2, 4)
+    val compacted = store.compactLeveled("src", "events", minLevel = 0,
+      maxLevel = 0, minAgeSec = 0L, nowEpoch = System.currentTimeMillis() / 1000L,
+      minSegments = 2, maxSegments = 4, minBytes = 0L, maxBytes = Long.MaxValue / 4)
     println(s"[pipeline] compaction merged into ${compacted.size} level-1 segments")
 
     // --- ingress leg: watch the store, replay ordered past checkpoint 9,

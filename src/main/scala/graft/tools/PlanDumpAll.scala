@@ -2,17 +2,18 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-import graft.{GraftExtensions, SparkEntry}
+import graft.SparkEntry
+import graft.core.LocalSession
 
 /** Dump `.explain("formatted")` for declared queries to files.
   *
   * Usage: PlanDumpAll <outDir> <suffix> [sfDir] [q1,q2,...]
   * Writes <outDir>/<query>_<suffix>.txt for each query (all queries
-  * when no list given). Session config mirrors graft.Bench so the
-  * dumped plans are the ones the bench actually executes.
+  * when no list given). The session is graft.Bench's
+  * ([[graft.core.LocalSession]]), so the dumped plans are the ones the
+  * bench executes.
   */
 object PlanDumpAll {
   def main(args: Array[String]): Unit = {
@@ -21,16 +22,8 @@ object PlanDumpAll {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.register(spark)
     Files.createDirectories(Paths.get(outDir))
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))

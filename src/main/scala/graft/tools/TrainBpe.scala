@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.LocalSession
 
 /** One-shot BPE merge-table trainer: classic pair-frequency training
   * (count adjacent symbol pairs over the word multiset, merge the
@@ -31,12 +31,7 @@ object TrainBpe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val nMerges = if (args.length > 1) args(1).toInt else 2000
-    val spark = SparkSession.builder()
-      .appName("graft-train-bpe").master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession(8)
     val words: Map[String, Long] = spark.read
       .parquet(s"$sfDir/documents.parquet")
       .select(org.apache.spark.sql.functions.col("doc_id")

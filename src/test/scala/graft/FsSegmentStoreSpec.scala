@@ -46,30 +46,30 @@ class FsSegmentStoreSpec extends SparkSuite {
 
   test("compact endOffset covers overlapping inputs (rewind redelivery)") {
     import spark.implicits._
-    // the same layout through both compactors
-    for (leveled <- Seq(false, true)) {
-      val store = FsSegmentStore(spark, tmpDir("store"))
-      val mk = (s0: Long, e0: Long) => {
-        val rows = (s0 to e0).map(i => (0, i, s"k$i", 2L))
-          .toDF("part_id", "msg_offset", "key", "msg_size")
-        store.write(rows, graft.core.SegmentMeta("src", "t", 0, 0, s0, e0,
-          e0 - s0 + 1, -1L))
-      }
-      // overlapping segments from an at-least-once rewind: the LAST one
-      // by start offset ends EARLIER than its predecessor
-      mk(0L, 9L); mk(5L, 20L); mk(10L, 15L)
-      val out =
-        if (!leveled) store.compact("src", "t", 0, minSegments = 2, maxSegments = 5)
-        else store.compactLeveled("src", "t", minLevel = 0, maxLevel = 0,
-          minAgeSec = 0L, nowEpoch = System.currentTimeMillis() / 1000L + 3600L,
-          minSegments = 2, maxSegments = 5, minBytes = 0L,
-          maxBytes = Long.MaxValue / 4)
-      assert(out.size === 1)
-      assert(out.head.endOffset === 20L) // not 15 (bin.last's end)
-      assert(out.head.messageCount === 21L) // offsets 0..20 deduped
-      assertCounts(store, out)
+    val store = FsSegmentStore(spark, tmpDir("store"))
+    val mk = (s0: Long, e0: Long) => {
+      val rows = (s0 to e0).map(i => (0, i, s"k$i", 2L))
+        .toDF("part_id", "msg_offset", "key", "msg_size")
+      store.write(rows, graft.core.SegmentMeta("src", "t", 0, 0, s0, e0,
+        e0 - s0 + 1, -1L))
     }
+    // overlapping segments from an at-least-once rewind: the LAST one
+    // by start offset ends EARLIER than its predecessor
+    mk(0L, 9L); mk(5L, 20L); mk(10L, 15L)
+    val out = compactLevel0(store, "t", minSegments = 2, maxSegments = 5)
+    assert(out.size === 1)
+    assert(out.head.endOffset === 20L) // not 15 (bin.last's end)
+    assert(out.head.messageCount === 21L) // offsets 0..20 deduped
+    assertCounts(store, out)
   }
+
+  /** Level-0 → level-1 leveled compaction with no age or byte gate. */
+  private def compactLevel0(store: FsSegmentStore, topic: String,
+      minSegments: Int, maxSegments: Int): Seq[SegmentMeta] =
+    store.compactLeveled("src", topic, minLevel = 0, maxLevel = 0,
+      minAgeSec = 0L, nowEpoch = System.currentTimeMillis() / 1000L + 3600L,
+      minSegments = minSegments, maxSegments = maxSegments, minBytes = 0L,
+      maxBytes = Long.MaxValue / 4)
 
   test("open plans exactly ONE parquet scan regardless of segment count") {
     val store = FsSegmentStore(spark, tmpDir("store"))
@@ -105,7 +105,7 @@ class FsSegmentStoreSpec extends SparkSuite {
     }
     // [0,9],[10,19], GAP 20-29, [30,39],[40,49]
     mk(0L, 9L); mk(10L, 19L); mk(30L, 39L); mk(40L, 49L)
-    val out = store.compact("src", "t", 0, minSegments = 2, maxSegments = 10)
+    val out = compactLevel0(store, "t", minSegments = 2, maxSegments = 10)
     // only the contiguous prefix merged; post-gap segments left in place
     assert(out.size === 1)
     assert(out.head.endOffset === 19L)
@@ -295,8 +295,7 @@ class FsSegmentStoreSpec extends SparkSuite {
     val store = FsSegmentStore(spark, tmpDir("store"))
     writeRolled(store, 10)
     val before = store.list("src", "events")
-    val out = store.compact("src", "events", level = 0,
-      minSegments = 2, maxSegments = 5)
+    val out = compactLevel0(store, "events", minSegments = 2, maxSegments = 5)
     assert(out.nonEmpty)
     assert(out.forall(_.level === 1))
     val after = store.list("src", "events")

@@ -5,20 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (sbt forks one test JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"target/tmp/warehouse-${System.nanoTime()}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.LocalSession(4)
   val Sf = "/root/testdata/sf0.001"
 }
 

@@ -1,15 +1,18 @@
 #!/usr/bin/env python3
 """Render the BASELINE.md per-query table from the calm-window artifacts.
 
-Inputs: bench/bench_median_<tag>.json   (graft, tools/calmbench.py)
-        bench/baseline_duckdb_<tag>.json (DuckDB, tools/baseline.py)
+Usage: python3 tools/baseline_table.py <tag> [duckdb_tag]
+Inputs: bench/bench_median_<tag>.json          (graft, tools/calmbench.py)
+        bench/baseline_duckdb_<duckdb_tag>.json (DuckDB, tools/baseline.py;
+                                                 duckdb_tag defaults to tag)
 Prints a markdown table sorted by query name plus headline totals.
 """
 import json, sys
 
 tag = sys.argv[1] if len(sys.argv) > 1 else "r07"
 g = json.load(open(f"bench/bench_median_{tag}.json"))["queries"]
-d = json.load(open(f"bench/baseline_duckdb_{tag}.json"))["median_sec"]
+dtag = sys.argv[2] if len(sys.argv) > 2 else tag
+d = json.load(open(f"bench/baseline_duckdb_{dtag}.json"))["median_sec"]
 
 TIMEOUT = 300.0
 rows, g_tot, d_tot = [], 0.0, 0.0

@@ -62,12 +62,7 @@ def run_bench():
         "/root/repo/target/scala-2.13/classes") + ":" + ":".join(  # class files under a live probe
         
         glob.glob("/opt/spark/jars/*.jar"))
-    # pin Bench to fresh-run mode: the calm-window recorder IS the
-    # producer of the gated-median artifact Bench would otherwise
-    # overlay (self-reference once bench_median.json matches the
-    # surface)
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF, SPARK_GRAFT_CPUS="32",
-               SPARK_GRAFT_BENCH_MEDIAN="/nonexistent")
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF, SPARK_GRAFT_CPUS="32")
     r = subprocess.run(
         ["java"] + ADD_OPENS + ["-Xmx96g", "-cp", cp, "graft.Bench"],
         capture_output=True, text=True, env=env, timeout=3600)
