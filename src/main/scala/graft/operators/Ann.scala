@@ -57,6 +57,39 @@ object Ann {
     VecOps.intDot(va, vb)
       .cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
 
+  /** [[cosine]] under the shared zero-norm guard: a pair with a
+    * zero-norm side scores −2.0 (below any real cosine) instead of a
+    * 0/0 that raises DIVIDE_BY_ZERO under ANSI or sorts as NaN, whose
+    * order is engine-specific.
+    */
+  private[graft] def guardedCosine(va: Column, vb: Column, n2a: Column,
+      n2b: Column): Column =
+    when(n2a === 0 || n2b === 0, lit(-2.0))
+      .otherwise(cosine(va, vb, n2a, n2b))
+
+  /** The ranked tail of every top-k plan: per `q_id`, number the rows
+    * by `order` (ties on `tie`) into `rank` and keep ranks 1..k.
+    */
+  private[graft] def topK(scored: DataFrame, k: Int, order: Column,
+      tie: String = "vec_id", rank: String = "rnk"): DataFrame =
+    scored.withColumn(rank, row_number().over(
+        Window.partitionBy("q_id").orderBy(order, col(tie))))
+      .filter(col(rank) <= k)
+
+  /** [[topK]] projected to the neighbor schema (q_id, rnk,
+    * neighbor_id, score): a similarity `score` ranks descending and is
+    * reported as `<score>_bp` basis points, a distance (`desc = false`)
+    * ranks ascending and is reported as is.
+    */
+  private[graft] def topKNeighbors(scored: DataFrame, k: Int, score: String,
+      desc: Boolean = true): DataFrame =
+    if (desc) topK(scored, k, col(score).desc)
+      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
+        round(col(score) * 10000, 0).cast("long").as(s"${score}_bp"))
+    else topK(scored, k, col(score))
+      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
+        col(score))
+
   /** Deterministic pseudo-random hyperplane coefficient, identical in
     * SQL: coef(p,d) = ((1103515245*(p*64+d) + 12345) % 2001) - 1000.
     * This is the column-level statement of the rule
@@ -96,13 +129,9 @@ object Ann {
     val q = quantized(embeddings)
     val queries = q.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm2").as("qn2"))
-    val scored = q.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        round(col("cos") * 10000, 0).cast("long").as("cos_bp"))
+    topKNeighbors(q.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2"))),
+      k, "cos")
   }
 
   /** LSH-bucketed approximate top-k: candidates share the query's
@@ -116,14 +145,10 @@ object Ann {
     val queries = b.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("norm2").as("qn2"), col("bucket").as("qbucket"))
-    val scored = b.join(broadcast(queries),
+    topKNeighbors(b.join(broadcast(queries),
         col("bucket") === col("qbucket") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        round(col("cos") * 10000, 0).cast("long").as("cos_bp"))
+      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2"))),
+      k, "cos")
   }
 
   /** Johnson–Lindenstrauss sparse random projection (Achlioptas 2003;
@@ -181,28 +206,20 @@ object Ann {
     val pq = proj.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("pv").as("qpv"),
         col("pn2").as("qpn2"))
-    val pcos = when(col("qpn2") === 0 || col("pn2") === 0, lit(-2.0))
-      .otherwise(cosine(col("qpv"), col("pv"), col("qpn2"), col("pn2")))
-    val w1 = Window.partitionBy("q_id").orderBy(col("pcos").desc, col("vec_id"))
-    val short = proj.join(broadcast(pq), col("vec_id") =!= col("q_id"))
-      .withColumn("pcos", pcos)
-      .withColumn("prnk", row_number().over(w1))
-      .filter(col("prnk") <= shortK)
+    val short = topK(proj.join(broadcast(pq), col("vec_id") =!= col("q_id"))
+        .withColumn("pcos", guardedCosine(col("qpv"), col("pv"), col("qpn2"),
+          col("pn2"))), shortK, col("pcos").desc, rank = "prnk")
       .select(col("q_id"), col("vec_id").as("neighbor_id"))
     val q = quantized(embeddings)
     val queries = q.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("norm2").as("qn2"))
-    val w2 = Window.partitionBy("q_id").orderBy(col("cos").desc,
-      col("neighbor_id"))
-    broadcast(short)
+    topK(broadcast(short)
       .join(q.select(col("vec_id").as("neighbor_id"), col("v"),
         col("norm2")), Seq("neighbor_id"))
       .join(broadcast(queries), Seq("q_id"))
       .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"),
-        col("norm2")))
-      .withColumn("rnk", row_number().over(w2))
-      .filter(col("rnk") <= k)
+        col("norm2"))), k, col("cos").desc, tie = "neighbor_id")
       .select(col("q_id"), col("rnk"), col("neighbor_id"),
         round(col("cos") * 10000, 0).cast("long").as("cos_bp"))
   }
@@ -246,32 +263,19 @@ object Ann {
     graft.core.Configs.Ivf(kCells, iterations, probes).validated
     graft.core.Validation.validate("rp-knn",
       graft.core.Validation.knob("shortK", shortK.toLong, minV = k.toLong))
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val proj = projectRp(embeddings, outDims)
       .select(col("vec_id"), col("pv").as("v"), col("pn2").as("norm2"))
     val cent = kmeansCentroids(proj, kCells, iterations)
     val assigned = cellAssign(proj, cent)
       .select("vec_id", "v", "norm2", "cell")
-    val centDf = cent.toDF("c_id", "cv", "cn2")
-    val qw = Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))
-    val queries = proj.filter(col("vec_id") < numQueries)
-      .crossJoin(broadcast(centDf))
-      .withColumn("c_cos",
-        when(col("norm2") === 0 || col("cn2") === 0, lit(-2.0))
-          .otherwise(cosine(col("cv"), col("v"), col("cn2"), col("norm2"))))
-      .withColumn("c_rn", row_number().over(qw))
+    val queries = rankedCells(proj.filter(col("vec_id") < numQueries), cent)
       .filter(col("c_rn") <= probes)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("norm2").as("qn2"), col("c_id").as("qcell"))
-    val pcos = when(col("qn2") === 0 || col("norm2") === 0, lit(-2.0))
-      .otherwise(cosine(col("qv"), col("v"), col("qn2"), col("norm2")))
-    val w1 = Window.partitionBy("q_id").orderBy(col("pcos").desc, col("vec_id"))
-    val short = assigned.join(broadcast(queries),
+    val short = topK(assigned.join(broadcast(queries),
         col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("pcos", pcos)
-      .withColumn("prnk", row_number().over(w1))
-      .filter(col("prnk") <= shortK)
+      .withColumn("pcos", guardedCosine(col("qv"), col("v"), col("qn2"),
+        col("norm2"))), shortK, col("pcos").desc, rank = "prnk")
       .select(col("q_id"), col("vec_id").as("neighbor_id"))
     rerankExact(embeddings, short, numQueries, k)
   }
@@ -335,16 +339,9 @@ object Ann {
     val q = int8Codes(embeddings)
     val queries = q.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("c").as("qc"), col("n2q").as("qn2q"))
-    val scored = q.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .withColumn("qcos",
-        when(col("qn2q") === 0 || col("n2q") === 0, lit(-2.0))
-          .otherwise(VecOps.intDot(col("qc"), col("c")).cast("double")
-            / (sqrt(col("qn2q").cast("double")) * sqrt(col("n2q").cast("double")))))
-    val w = Window.partitionBy("q_id").orderBy(col("qcos").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        round(col("qcos") * 10000, 0).cast("long").as("qcos_bp"))
+    topKNeighbors(q.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+      .withColumn("qcos", guardedCosine(col("qc"), col("c"), col("qn2q"),
+        col("n2q"))), k, "qcos")
   }
 
   /** Exact per-label vector aggregates over quantized components:
@@ -409,14 +406,10 @@ object Ann {
       .filter(col("vec_id") < numQueries && col("c_rn") <= probes)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("norm2").as("qn2"), col("c_id").as("qcell"))
-    val scored = assigned.join(broadcast(queries),
+    topKNeighbors(assigned.join(broadcast(queries),
         col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2")))
-    val rw = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(rw))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        round(col("cos") * 10000, 0).cast("long").as("cos_bp"))
+      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2"))),
+      k, "cos")
   }
 
   /** IVF over TRAINED centroids — the A5→A3 wiring that closes
@@ -436,46 +429,88 @@ object Ann {
     * engines).
     */
   def knnIvfTrained(embeddings: DataFrame, numQueries: Int, k: Int,
-      kCells: Int = 8, iterations: Int = 2, probes: Int = 1): DataFrame = {
+      kCells: Int = 8, iterations: Int = 2, probes: Int = 1): DataFrame =
+    knnIvfTrainedImpl(embeddings, numQueries, k, None, kCells, iterations,
+      probes, escalate = false)
+
+  /** The one trained-IVF plan behind [[knnIvfTrained]],
+    * [[knnIvfTrainedFiltered]] and [[knnIvfTrainedFilteredEscalated]]:
+    * the FULL-corpus model (shared with every coarse consumer through
+    * the centroid memo), candidates assigned by [[cellAssign]] — over
+    * the `predicate`-filtered scan when one is given — each query's
+    * cells ranked by [[rankedCells]], the probe tier of [[probeTier]],
+    * and candidates scored by [[guardedCosine]], so a zero-norm query
+    * or candidate scores −2.0 exactly as the on-disk
+    * [[graft.streaming.StreamingAnn.queryIndex]] scores it.
+    */
+  private def knnIvfTrainedImpl(embeddings: DataFrame, numQueries: Int,
+      k: Int, predicate: Option[Column], kCells: Int, iterations: Int,
+      probes: Int, escalate: Boolean): DataFrame = {
     graft.core.Configs.AnnRequest(numQueries, k).validated
     graft.core.Configs.Ivf(kCells, iterations, probes).validated
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val q = quantized(embeddings)
     val cent = kmeansCentroids(q.select("vec_id", "v", "norm2"), kCells, iterations)
-    // cellAssign carries the zero-norm guard matching the oracle's
-    // CASE arm: a zero-norm CENTROID must rank worst (a raw 0/0 cosine
-    // is NaN, which is GREATEST under Spark's struct-min but sorts
-    // FIRST under the oracle's ORDER BY DESC — opposite corners); a
-    // zero-norm VECTOR gets a constant so the tie-break lands it in
-    // the lowest cell id, deterministically, in both engines
-    val assigned = cellAssign(q, cent)
+    // cellAssign's guard lands a zero-norm VECTOR in the lowest cell id
+    // and ranks a zero-norm CENTROID worst, in both engines
+    val assigned = cellAssign(predicate.fold(q)(p => quantized(embeddings.filter(p))),
+        cent)
       .select("vec_id", "v", "norm2", "cell")
-    val centDf = cent.map { case (c, cv, n2) => (c, cv, n2) }
-      .toDF("c_id", "cv", "cn2")
+    val qcells = rankedCells(q.filter(col("vec_id") < numQueries), cent)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"),
+        col("norm2").as("qn2"), col("c_id").as("qcell"), col("c_rn"))
+    val probed = probeTier(assigned, qcells, "c_rn", probes, kCells, k, escalate)
+    topKNeighbors(assigned.join(broadcast(probed),
+        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
+      .withColumn("cos", guardedCosine(col("qv"), col("v"), col("qn2"),
+        col("norm2"))), k, "cos")
+  }
+
+  /** Every query's cells ranked to FULL depth by guarded cosine DESC,
+    * ties on the smaller c_id — the trained-IVF probe rule, as column
+    * `c_rn` (1..K) next to `c_id`. `qs` carries (vec_id, v, norm2) plus
+    * any payload. The guard matches the oracle's CASE arm: −2.0 ranks a
+    * degenerate (all-zero) centroid LAST in both engines, where a raw
+    * 0/0 NaN would sort FIRST under Spark's desc and consume a probe
+    * slot the oracle never spends.
+    */
+  private def rankedCells(qs: DataFrame,
+      cent: Seq[(Long, Seq[Long], Long)]): DataFrame = {
+    val spark = qs.sparkSession
+    import spark.implicits._
     val qw = Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))
-    val queries = q.filter(col("vec_id") < numQueries)
-      .crossJoin(broadcast(centDf))
-      // zero-norm guard matching the oracle rankedc CASE arm: -2.0
-      // ranks a degenerate (all-zero) centroid LAST in both engines; a
-      // raw 0/0 NaN would sort FIRST under Spark's desc and consume a
-      // probe slot the oracle never spends
+    qs.crossJoin(broadcast(cent.toDF("c_id", "cv", "cn2")))
       .withColumn("c_cos",
         when(col("norm2") === 0 || col("cn2") === 0, lit(-2.0))
           .otherwise(cosine(col("cv"), col("v"), col("cn2"), col("norm2"))))
       .withColumn("c_rn", row_number().over(qw))
-      .filter(col("c_rn") <= probes)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("norm2").as("qn2"), col("c_id").as("qcell"))
-    val scored = assigned.join(broadcast(queries),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2")))
-    val rw = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(rw))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        round(col("cos") * 10000, 0).cast("long").as("cos_bp"))
   }
+
+  /** The batch probe tier over `qcells` (q_id, qcell, rank column
+    * `rank` 1..K): the base tier `rank <= probes`, or with `escalate`
+    * a per-query depth — a count pass joins the candidate cells
+    * (`cands`: vec_id, cell) at the base tier with no scoring, and
+    * queries that see fewer than k candidates widen to all `kCells`.
+    * The depth is a request-scale broadcast column (`probes_eff`), so
+    * satisfied queries never pay the escalated scan and return the
+    * fixed-probe sets; escalated ones rank a superset, which
+    * guarantees min(k, pool) rows (each vector lives in one cell).
+    */
+  private def probeTier(cands: DataFrame, qcells: DataFrame, rank: String,
+      probes: Int, kCells: Int, k: Int, escalate: Boolean): DataFrame =
+    if (!escalate) qcells.filter(col(rank) <= probes)
+    else {
+      val near = cands
+        .join(broadcast(qcells.filter(col(rank) <= probes)
+            .select("q_id", "qcell")),
+          col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
+        .groupBy("q_id").agg(count(lit(1)).as("n_near"))
+      val qprobes = qcells.select("q_id").distinct()
+        .join(near, Seq("q_id"), "left")
+        .select(col("q_id"),
+          when(coalesce(col("n_near"), lit(0L)) >= k, lit(probes))
+            .otherwise(lit(kCells)).as("probes_eff"))
+      qcells.join(qprobes, "q_id").filter(col(rank) <= col("probes_eff"))
+    }
 
   /** IVF-SQ8 — trained coarse cells × int8 scalar-quantized codes
     * (the FAISS `IVF,SQ8` index shape): the composition that is
@@ -502,38 +537,19 @@ object Ann {
       kCells: Int = 8, iterations: Int = 2, probes: Int = 2): DataFrame = {
     graft.core.Configs.AnnRequest(numQueries, k).validated
     graft.core.Configs.Ivf(kCells, iterations, probes).validated
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val q = quantized(embeddings)
     val cent = kmeansCentroids(q.select("vec_id", "v", "norm2"), kCells, iterations)
     val coded = withInt8Cols(cellAssign(q, cent))
       .select("vec_id", "cell", "c", "n2q")
-    val centDf = cent.toDF("c_id", "cv", "cn2")
-    val qw = Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))
-    val queries = withInt8Cols(q.filter(col("vec_id") < numQueries))
-      .crossJoin(broadcast(centDf))
-      // zero-norm guard matching the oracle's CASE arm (-2.0 ranks the
-      // degenerate cell LAST): a zero centroid would otherwise produce
-      // a NaN that sorts FIRST under desc — opposite corners between
-      // the engines
-      .withColumn("c_cos",
-        when(col("norm2") === 0 || col("cn2") === 0, lit(-2.0))
-          .otherwise(cosine(col("cv"), col("v"), col("cn2"), col("norm2"))))
-      .withColumn("c_rn", row_number().over(qw))
+    val queries = rankedCells(withInt8Cols(q.filter(col("vec_id") < numQueries)),
+        cent)
       .filter(col("c_rn") <= probes)
       .select(col("vec_id").as("q_id"), col("c").as("qc"),
         col("n2q").as("qn2q"), col("c_id").as("qcell"))
-    val scored = coded.join(broadcast(queries),
+    topKNeighbors(coded.join(broadcast(queries),
         col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("qcos",
-        when(col("qn2q") === 0 || col("n2q") === 0, lit(-2.0))
-          .otherwise(VecOps.intDot(col("qc"), col("c")).cast("double")
-            / (sqrt(col("qn2q").cast("double")) * sqrt(col("n2q").cast("double")))))
-    val rw = Window.partitionBy("q_id").orderBy(col("qcos").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(rw))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        round(col("qcos") * 10000, 0).cast("long").as("qcos_bp"))
+      .withColumn("qcos", guardedCosine(col("qc"), col("c"), col("qn2q"),
+        col("n2q"))), k, "qcos")
   }
 
   /** Lloyd's k-means over quantized embeddings, the training loop that
@@ -988,29 +1004,18 @@ object Ann {
     val books = pqCodebooksFromQ(q, pqK, iterations)
     val codes = pqEncodedFromQ(q.select("vec_id", "v"), books)
       .select("vec_id", "c0", "c1", "c2", "c3")
-    val queries = books.zipWithIndex.foldLeft(
-        q.filter(col("vec_id") < numQueries)
-          .select(col("vec_id").as("q_id"), col("v").as("qv"))) {
-      case (df, (cent, s)) =>
-        val sv = subvec(col("qv"), s)
-        val sn = VecOps.intDot(sv, sv)
-        df.withColumn(s"qd$s", map_from_arrays(
-          typedLit(cent.map(_._1)),
-          array(cent.map { case (_, cv, cn2) =>
-            sn - lit(2L) * VecOps.intDot(sv, typedLit(cv)) + lit(cn2)
-          }: _*)))
-    }.drop("qv")
-    val scored = codes.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .withColumn("est_d",
-        element_at(col("qd0"), col("c0")) + element_at(col("qd1"), col("c1"))
-          + element_at(col("qd2"), col("c2"))
-          + element_at(col("qd3"), col("c3")))
-    val w = Window.partitionBy("q_id").orderBy(col("est_d"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        col("est_d"))
+    val queries = withAdcTables(q.filter(col("vec_id") < numQueries)
+      .select(col("vec_id").as("q_id"), col("v").as("qv")), books, "qv")
+    topKNeighbors(codes.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+      .withColumn("est_d", adcEstimate), k, "est_d", desc = false)
   }
+
+  /** The ADC distance estimate: PqM table lookups, `qd<s>` keyed by
+    * the candidate's code `c<s>`.
+    */
+  private[graft] val adcEstimate: Column =
+    element_at(col("qd0"), col("c0")) + element_at(col("qd1"), col("c1")) +
+      element_at(col("qd2"), col("c2")) + element_at(col("qd3"), col("c3"))
 
   /** IVFADC (Jégou et al. 2011 §5): the composition of the trained
     * coarse quantizer (A3/A5) with the product quantizer (A8) — THE
@@ -1086,16 +1091,12 @@ object Ann {
     val q = quantized(embeddings)
     val coarse = kmeansCentroids(q.select("vec_id", "v", "norm2"),
       kCells, iterations)
-    val centMap = typedLit(coarse.map { case (c, cv, _) => c -> cv }.toMap)
     // materialize the residual frame ONCE: PQ training reads it
     // 4 subspaces × (seeds + iterations) times, and as a lazy plan
     // each of those actions would re-run the coarse argmax + residual
     // projection over the whole corpus (measured ~8 s of the query's
     // 11.5 s at sf0.1)
-    val residuals = kmeansAssign(q.select("vec_id", "v", "norm2"), coarse)
-      .select(col("vec_id"), col("cluster").as("cell"),
-        zip_with(col("v"), element_at(centMap, col("cluster")),
-          (a, b) => a - b).as("v"))
+    val residuals = pqResiduals(q.select("vec_id", "v", "norm2"), coarse)
       .localCheckpoint()
     val books = pqCodebooksFromQ(residuals.select("vec_id", "v"),
       pqK, iterations)
@@ -1103,10 +1104,7 @@ object Ann {
     // the predicate pushed to the scan and assigns/encodes under the
     // SAME trained state (training never sees the filter)
     val candRes = predicate.fold(residuals) { p =>
-      kmeansAssign(quantized(embeddings.filter(p)), coarse)
-        .select(col("vec_id"), col("cluster").as("cell"),
-          zip_with(col("v"), element_at(centMap, col("cluster")),
-            (a, b) => a - b).as("v"))
+      pqResiduals(quantized(embeddings.filter(p)), coarse)
     }
     val codes = pqEncodedFromQ(candRes, books)
       .select("vec_id", "cell", "c0", "c1", "c2", "c3")
@@ -1114,8 +1112,7 @@ object Ann {
     // ADC tables are built from the query's residual to EACH cell
     val centDf = coarse.toDF("c_id", "cv", "cn2")
     val qw = Window.partitionBy("vec_id").orderBy(col("cd"), col("c_id"))
-    // every query's cells ranked to FULL depth; the base tier is
-    // crn <= probes, escalation (below) widens dry queries to kCells
+    // every query's cells ranked to FULL depth (`crn`) for probeTier
     val qcells = q.filter(col("vec_id") < numQueries)
       .crossJoin(broadcast(centDf))
       .withColumn("cd",
@@ -1124,48 +1121,41 @@ object Ann {
       .select(col("vec_id").as("q_id"), col("c_id").as("qcell"),
         zip_with(col("v"), col("cv"), (a, b) => a - b).as("qres"),
         col("crn"))
-    val probed =
-      if (!escalate) qcells.filter(col("crn") <= probes).drop("crn")
-      else {
-        // pass 1 (count only, base tier): matching codes visible to
-        // each query at `probes` — no ADC tables, just the cell
-        // equi-join
-        val near = codes
-          .join(broadcast(qcells.filter(col("crn") <= probes)
-              .select("q_id", "qcell")),
-            col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-          .groupBy("q_id").agg(count(lit(1)).as("n_near"))
-        // per-query tier bound: base for satisfied queries, full cell
-        // coverage for dry ones — request-scale (numQueries rows)
-        val qprobes = qcells.select("q_id").distinct()
-          .join(near, Seq("q_id"), "left")
-          .select(col("q_id"),
-            when(coalesce(col("n_near"), lit(0L)) >= k, lit(probes))
-              .otherwise(lit(kCells)).as("probes_eff"))
-        qcells.join(qprobes, "q_id")
-          .filter(col("crn") <= col("probes_eff"))
-          .drop("crn", "probes_eff")
-      }
-    val tables = books.zipWithIndex.foldLeft(probed) { case (df, (cent, s)) =>
-      val sv = subvec(col("qres"), s)
+    val probed = probeTier(codes, qcells, "crn", probes, kCells, k, escalate)
+      .drop("crn", "probes_eff")
+    topKNeighbors(codes.join(broadcast(withAdcTables(probed, books, "qres")),
+        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
+      .withColumn("est_d", adcEstimate), k, "est_d", desc = false)
+  }
+
+  /** Coarse-cell residuals: (vec_id, cell, v − cent[cell], extra...)
+    * under the squared-L2 assignment of [[kmeansAssign]] — what the
+    * product quantizer trains on and encodes, in batch and on disk.
+    */
+  private[graft] def pqResiduals(q: DataFrame, cent: Seq[(Long, Seq[Long], Long)],
+      extra: Seq[String] = Nil): DataFrame = {
+    val centMap = typedLit(cent.map { case (c, cv, _) => c -> cv }.toMap)
+    kmeansAssign(q, cent)
+      .select(col("vec_id") +: col("cluster").as("cell") +:
+        zip_with(col("v"), element_at(centMap, col("cluster")),
+          (a, b) => a - b).as("v") +: extra.map(col): _*)
+  }
+
+  /** Append one ADC table per subspace (`qd<s>`: c_id → exact integer
+    * squared-L2 of the query vector `v`'s subvector against that
+    * codebook centroid) and drop `v`.
+    */
+  private def withAdcTables(df: DataFrame,
+      books: Seq[Seq[(Long, Seq[Long], Long)]], v: String): DataFrame =
+    books.zipWithIndex.foldLeft(df) { case (d, (cent, s)) =>
+      val sv = subvec(col(v), s)
       val sn = VecOps.intDot(sv, sv)
-      df.withColumn(s"qd$s", map_from_arrays(
+      d.withColumn(s"qd$s", map_from_arrays(
         typedLit(cent.map(_._1)),
         array(cent.map { case (_, cv, cn2) =>
           sn - lit(2L) * VecOps.intDot(sv, typedLit(cv)) + lit(cn2)
         }: _*)))
-    }.drop("qres")
-    val scored = codes.join(broadcast(tables),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("est_d",
-        element_at(col("qd0"), col("c0")) + element_at(col("qd1"), col("c1"))
-          + element_at(col("qd2"), col("c2")) + element_at(col("qd3"), col("c3")))
-    val w = Window.partitionBy("q_id").orderBy(col("est_d"), col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        col("est_d"))
-  }
+    }.drop(v)
 
   /** Exact-cosine rerank of an ANN shortlist — the refine stage of
     * IVFADC-R (Jégou et al. 2011 §VI): the lossy index (PQ/IVFADC)
@@ -1193,11 +1183,9 @@ object Ann {
       .join(broadcast(shortlist.select("q_id").distinct()),
         col("vec_id") === col("q_id"))
       .select(col("q_id"), col("v").as("qv"), col("norm2").as("qn2"))
-    val scored = cand.join(broadcast(qv), Seq("q_id"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    topK(cand.join(broadcast(qv), Seq("q_id"))
+      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2"))),
+      k, col("cos").desc, tie = "neighbor_id")
       .select(col("q_id"), col("rnk"), col("neighbor_id"),
         round(col("cos") * 10000, 0).cast("long").as("cos_bp"))
   }
@@ -1295,10 +1283,8 @@ object Ann {
     val x = assigned.as("x"); val y = assigned.as("y")
     val dropped = x.join(y, col("x.cell") === col("y.cell")
         && col("y.vec_id") < col("x.vec_id"))
-      .withColumn("cos",
-        when(col("x.norm2") === 0 || col("y.norm2") === 0, lit(-2.0))
-          .otherwise(cosine(col("x.v"), col("y.v"),
-            col("x.norm2"), col("y.norm2"))))
+      .withColumn("cos", guardedCosine(col("x.v"), col("y.v"),
+        col("x.norm2"), col("y.norm2")))
       .filter(round(col("cos") * 10000, 0).cast("long") >= minCosBp)
       .select(col("x.vec_id").as("vec_id")).distinct()
     assigned
@@ -1469,11 +1455,9 @@ object Ann {
       .filter(h20(col("vec_id").cast("string")) % sampleMod === 0)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("norm2").as("qn2"))
-    val scored = q.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    val truth = scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    val truth = topK(q.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2"))),
+      k, col("cos").desc)
       .select(col("q_id"), col("vec_id").as("neighbor_id"))
       .localCheckpoint() // read once per method arm
     val nQ = queries.agg(count(lit(1)).as("n_queries"))
@@ -1528,13 +1512,9 @@ object Ann {
     val queries = quantized(embeddings).filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm2").as("qn2"))
     val cand = quantized(embeddings.filter(predicate))
-    val scored = cand.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2")))
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        round(col("cos") * 10000, 0).cast("long").as("cos_bp"))
+    topKNeighbors(cand.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2"))),
+      k, "cos")
   }
 
   /** Filtered trained-IVF top-k: [[knnIvfTrained]]'s plan with the
@@ -1546,39 +1526,9 @@ object Ann {
     */
   def knnIvfTrainedFiltered(embeddings: DataFrame, numQueries: Int,
       k: Int, predicate: Column, kCells: Int = 8, iterations: Int = 2,
-      probes: Int = 1): DataFrame = {
-    graft.core.Configs.AnnRequest(numQueries, k).validated
-    graft.core.Configs.Ivf(kCells, iterations, probes).validated
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val q = quantized(embeddings)
-    // FULL-corpus model — identical centroids to the unfiltered
-    // operators, shared via the centroid memo
-    val cent = kmeansCentroids(q.select("vec_id", "v", "norm2"),
-      kCells, iterations)
-    val assigned = cellAssign(quantized(embeddings.filter(predicate)), cent)
-      .select("vec_id", "v", "norm2", "cell")
-    val centDf = cent.map { case (c, cv, n2) => (c, cv, n2) }
-      .toDF("c_id", "cv", "cn2")
-    val qw = Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))
-    val queries = q.filter(col("vec_id") < numQueries)
-      .crossJoin(broadcast(centDf))
-      .withColumn("c_cos",
-        when(col("norm2") === 0 || col("cn2") === 0, lit(-2.0))
-          .otherwise(cosine(col("cv"), col("v"), col("cn2"), col("norm2"))))
-      .withColumn("c_rn", row_number().over(qw))
-      .filter(col("c_rn") <= probes)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("norm2").as("qn2"), col("c_id").as("qcell"))
-    val scored = assigned.join(broadcast(queries),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2")))
-    val rw = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(rw))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        round(col("cos") * 10000, 0).cast("long").as("cos_bp"))
-  }
+      probes: Int = 1): DataFrame =
+    knnIvfTrainedImpl(embeddings, numQueries, k, Some(predicate), kCells,
+      iterations, probes, escalate = false)
 
   /** Filtered top-k with PROBE ESCALATION — the production fix for
     * [[knnIvfTrainedFiltered]]'s documented under-return: a selective
@@ -1602,52 +1552,9 @@ object Ann {
     */
   def knnIvfTrainedFilteredEscalated(embeddings: DataFrame,
       numQueries: Int, k: Int, predicate: Column, kCells: Int = 8,
-      iterations: Int = 2, probes: Int = 1): DataFrame = {
-    graft.core.Configs.AnnRequest(numQueries, k).validated
-    graft.core.Configs.Ivf(kCells, iterations, probes).validated
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val q = quantized(embeddings)
-    val cent = kmeansCentroids(q.select("vec_id", "v", "norm2"),
-      kCells, iterations)
-    val assigned = cellAssign(quantized(embeddings.filter(predicate)), cent)
-      .select("vec_id", "v", "norm2", "cell")
-    val centDf = cent.map { case (c, cv, n2) => (c, cv, n2) }
-      .toDF("c_id", "cv", "cn2")
-    val qw = Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("c_id"))
-    // every query's cells ranked to FULL depth — the escalation tiers
-    val qcells = q.filter(col("vec_id") < numQueries)
-      .crossJoin(broadcast(centDf))
-      .withColumn("c_cos",
-        when(col("norm2") === 0 || col("cn2") === 0, lit(-2.0))
-          .otherwise(cosine(col("cv"), col("v"), col("cn2"), col("norm2"))))
-      .withColumn("c_rn", row_number().over(qw))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("norm2").as("qn2"), col("c_id").as("qcell"), col("c_rn"))
-    // pass 1 (count only, base tier): how many matches can each query
-    // even see at `probes`?
-    val near = assigned
-      .join(broadcast(qcells.filter(col("c_rn") <= probes)),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .groupBy("q_id").agg(count(lit(1)).as("n_near"))
-    val qprobes = qcells.select("q_id").distinct()
-      .join(near, Seq("q_id"), "left")
-      .select(col("q_id"),
-        when(coalesce(col("n_near"), lit(0L)) >= k, lit(probes))
-          .otherwise(lit(kCells)).as("probes_eff"))
-    // pass 2 (scored): per-query tier bound — base for satisfied
-    // queries, full coverage for dry ones
-    val scored = assigned
-      .join(broadcast(qcells.join(qprobes, "q_id")
-          .filter(col("c_rn") <= col("probes_eff"))),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn2"), col("norm2")))
-    val rw = Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(rw))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        round(col("cos") * 10000, 0).cast("long").as("cos_bp"))
-  }
+      iterations: Int = 2, probes: Int = 1): DataFrame =
+    knnIvfTrainedImpl(embeddings, numQueries, k, Some(predicate), kCells,
+      iterations, probes, escalate = true)
 
   /** Filtered recall@k: IVF filtered search vs the filtered
     * brute-force truth, per (selectivity, probes) — the measured cost

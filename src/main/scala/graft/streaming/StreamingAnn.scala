@@ -87,8 +87,7 @@ object StreamingAnn {
       .withColumn("norm2", VecOps.intDot(col("v"), col("v")))
 
   /** Load the frozen model, or train it on this (first non-empty)
-    * batch and persist it atomically — the one train-or-load statement
-    * both ingest flavors share.
+    * batch and persist it atomically.
     */
   private def trainOrLoad(modelPath: String, qb: DataFrame, kCells: Int,
       iterations: Int): Seq[(Long, Seq[Long], Long)] =
@@ -101,31 +100,33 @@ object StreamingAnn {
       c
     }
 
-  /** Driver-side probe ranking — EXACTLY the batch query-side rule
-    * ([[Ann.knnIvfTrained]]/[[Ann.knnIvfSq]] rank cells by guarded
-    * cosine DESC, ties on the smaller cell id; the guard scores a
-    * zero-norm query/centroid pair LAST): the `probes` best cell ids
-    * for a full-precision quantized query (qv, qn2). Shared by both
-    * query flavors so the streaming index probes the same cells the
-    * batch operators probe — the recall parity contract.
+  /** Driver-side probe ranking of the cosine layouts (`full`, `sq8`)
+    * — EXACTLY the batch query-side rule ([[Ann.knnIvfTrained]] /
+    * [[Ann.knnIvfSq]] rank cells by guarded cosine DESC, ties on the
+    * smaller cell id; the guard scores a zero-norm query/centroid pair
+    * LAST): every model cell per quantized query (q_id, qv, qn2), best
+    * first, so the index probes the same cells the batch operators
+    * probe — the recall parity contract.
     */
-  private def rankCells(cent: Seq[(Long, Seq[Long], Long)], qv: Seq[Long],
-      qn2: Long, probes: Int): Seq[Long] =
-    cent.map { case (cId, cv, cn2) =>
-      val score =
-        if (qn2 == 0L || cn2 == 0L) 2.0
-        else {
-          val dot = qv.zip(cv).map { case (a, b) => a * b }.sum
-          // same op order as Ann.cosine(cv, v, cn2, norm2), negated —
-          // identical IEEE doubles, so the ranking can never diverge
-          -1.0 * (dot.toDouble /
-            (math.sqrt(cn2.toDouble) * math.sqrt(qn2.toDouble)))
-        }
-      (score, cId)
-    }.sorted.take(probes).map(_._2)
+  private def cosRanked(cent: Seq[(Long, Seq[Long], Long)],
+      qRows: Seq[(Long, Seq[Long], Long)]): Seq[(Long, Seq[Long])] =
+    qRows.map { case (qId, qv, qn2) =>
+      qId -> cent.map { case (cId, cv, cn2) =>
+        val score =
+          if (qn2 == 0L || cn2 == 0L) 2.0
+          else {
+            val dot = qv.zip(cv).map { case (a, b) => a * b }.sum
+            // same op order as Ann.cosine(cv, v, cn2, norm2), negated —
+            // identical IEEE doubles, so the ranking can never diverge
+            -1.0 * (dot.toDouble /
+              (math.sqrt(cn2.toDouble) * math.sqrt(qn2.toDouble)))
+          }
+        (score, cId)
+      }.sorted.map(_._2)
+    }
 
-  /** Escalation count pass, shared by both index layouts (it never
-    * touches the vector payload — only `vec_id`, `cell`, and the
+  /** Escalation count pass of [[queryIndexSpine]], the same for every
+    * layout (it never touches the payload — only `vec_id`, `cell`, and the
     * predicate's attribute columns): per query, how many DISTINCT
     * matching candidates (self excluded) live inside the base-tier
     * cells? Queries at ≥ k keep the base budget; the rest re-rank at
@@ -146,12 +147,9 @@ object StreamingAnn {
     val basePairs = qcells.flatMap { case (qId, cells) =>
       cells.take(probes).map(c => (qId, c)) }
     val baseDf = basePairs.toDF("q_id", "qcell")
-    val baseCells = basePairs.map(_._2).distinct
-    val idx0 = spark.read.parquet(root)
-      .filter(col("cell").isin(baseCells: _*))
-    val idx1 = visibility.fold(idx0)(idx0.filter)
-    val idx = predicate.fold(idx1)(idx1.filter)
-    val near = idx.join(broadcast(baseDf),
+    val near = probedScan(spark, root, basePairs.map(_._2).distinct,
+        visibility, predicate)
+      .join(broadcast(baseDf),
         col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
       .groupBy("q_id").agg(countDistinct(col("vec_id")).as("n_near"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -179,15 +177,13 @@ object StreamingAnn {
     manifest ++ readTombstones(indexDir).map(_._3)
   }
 
-  /** The visibility mapping both query flavors share (see
-    * [[queryIndex]]): one partition-pruning `ingest_batch` predicate
-    * excluding [[excludedBatchIds]]; None when nothing is excluded.
-    */
-  /** Takes the RESOLVED generation root (callers resolve `_current`
-    * exactly once per request and thread the same root through data
-    * scan, visibility, and model — re-resolving here would let a
-    * retrain cutover land between the reads and mix one generation's
-    * model/exclusions with another's data).
+  /** The reader visibility mapping: one partition-pruning
+    * `ingest_batch` predicate excluding [[excludedBatchIds]]; None when
+    * nothing is excluded. Takes the RESOLVED generation root (callers
+    * resolve `_current` exactly once per request and thread the same
+    * root through data scan, visibility, and model — re-resolving here
+    * would let a retrain cutover land between the reads and mix one
+    * generation's model/exclusions with another's data).
     */
   private[graft] def visibilityFilter(
       resolvedRoot: String): Option[org.apache.spark.sql.Column] = {
@@ -232,8 +228,8 @@ object StreamingAnn {
       when(-c >= EffScale, shiftright(lit(0L) - c, EffShift) - 2)
         .otherwise(lit(0L) - c - 2))
 
-  /** Newest-wins election over the JOINED candidate rows, shared by
-    * both query flavors: a vec_id can be visible in several leaves at
+  /** Newest-wins election over the JOINED candidate rows of
+    * [[queryIndexSpine]]: a vec_id can be visible in several leaves at
     * once — a replay (or a fresh-lineage re-ingest) re-materializes a
     * leaf whose rows the compacted output already holds — and without
     * this election a query would return the same neighbor twice. Per
@@ -280,44 +276,51 @@ object StreamingAnn {
   def ivfIngest(emb: DataFrame, modelPath: String, indexDir: String,
       checkpointDir: String, kCells: Int = 8,
       iterations: Int = 2, attrs: Seq[String] = Nil): StreamingQuery =
+    // serving cells use THE shared rule (Ann.cellAssign: max guarded
+    // cosine), so the on-disk index partitions exactly as the batch
+    // knnIvfTrained assigns (parity spec-pinned)
+    ingestSpine(emb, modelPath, indexDir, checkpointDir, kCells, iterations,
+      attrs, "full") { (_, qb, cent) => Ann.cellAssign(qb, cent) }
+
+  /** The one on-disk ingest loop behind [[ivfIngest]], [[ivfIngestSq]]
+    * and [[ivfIngestPq]]; only `encode` (quantized batch + frozen model
+    * → rows with `cell` and the layout's payload columns) differs.
+    * Per batch:
+    *  - resolve the serving generation, so a [[retrainIndex]] cutover
+    *    between batches flips the stream to the new generation (and
+    *    its model) with no restart;
+    *  - settle any crashed compaction BEFORE writing (the ingest IS the
+    *    owner context): a fresh lineage re-using a consumed batch id
+    *    would otherwise write rows a lingering `committed` manifest
+    *    hides and the eventual roll-forward deletes;
+    *  - skip an EMPTY batch entirely — a zero-row training set would
+    *    durably persist a degenerate model that poisons every later
+    *    batch, and there are no partitions to own;
+    *  - train-or-load the frozen model and stamp-or-verify `layout`;
+    *  - overwrite the batch's own `(cell, ingest_batch)` partitions
+    *    under [[reuseSafeBatchId]]'s id (the raw id unless a compaction
+    *    consumed it; never a file delete).
+    * `attrs` ride the leaves as plain data columns for filtered search;
+    * training stays on the bare (vec_id, v, norm2) projection.
+    */
+  private def ingestSpine(emb: DataFrame, modelPath: String, indexDir: String,
+      checkpointDir: String, kCells: Int, iterations: Int, attrs: Seq[String],
+      layout: String)(
+      encode: (String, DataFrame, Seq[(Long, Seq[Long], Long)]) => DataFrame
+  ): StreamingQuery =
     emb.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the ingest IS the owner context (compaction runs between
-        // batches from it): finish any crashed compaction BEFORE
-        // writing, or a fresh checkpoint lineage re-using a consumed
-        // batch id would write rows into directories a lingering
-        // 'committed' manifest hides from queries and the eventual
-        // roll-forward deletes. Per-batch generation resolution: a
-        // [[retrainIndex]] cutover between batches flips this stream
-        // to the new generation (and its model) with no restart
         val root = resolveRoot(indexDir)
         recoverIndex(root)
-        // attrs ride the leaves as plain data columns (filtered
-        // search: [[queryIndexFiltered]]); training stays on the bare
-        // (vec_id, v, norm2) projection — the model never sees them
         val qb = quantize(batch, attrs)
-        // an EMPTY batch must neither train (a zero-row training set
-        // would durably persist a degenerate model that poisons every
-        // later batch) nor write (no partitions to own): no-op until
-        // data arrives — the first NON-empty batch trains the model
         if (!qb.isEmpty) {
           val cent = trainOrLoad(modelFor(root, modelPath),
             qb.select("vec_id", "v", "norm2"), kCells, iterations)
-          ensureLayout(root, "full", cent.size, cent.head._2.size)
-          // a fresh lineage reuses batch ids an earlier compaction may
-          // have consumed: such a delivery lands in a fresh
-          // generation-encoded partition (never a file delete — see
-          // [[reuseSafeBatchId]]); the common path is the raw id
+          ensureLayout(root, layout, cent.size, cent.head._2.size)
+          val rows = encode(root, qb, cent)
           val diskId = reuseSafeBatchId(root, checkpointDir, batchId)
-          // serving cells use THE shared rule (Ann.cellAssign: max
-          // guarded cosine), so the on-disk index partitions exactly
-          // as the batch knnIvfTrained assigns — the recall ladder
-          // measured on the batch operators applies verbatim to this
-          // index (parity spec-pinned)
-          Ann.cellAssign(qb, cent)
-            .select(col("vec_id") +: col("v") +: col("norm2") +:
-              attrs.map(col) :+ col("cell"): _*)
+          rows.select(leafColumns(layout, attrs): _*)
             .withColumn("ingest_batch", lit(diskId))
             .write
             .option("partitionOverwriteMode", "dynamic")
@@ -345,43 +348,18 @@ object StreamingAnn {
     *
     * Training still runs on the full-precision first batch (the coarse
     * quantizer sees milli-quantized vectors, same as batch IVF-SQ8 —
-    * assignment happens before compression); [[compactIndex]] is
-    * layout-agnostic and serves both index kinds.
+    * assignment happens before compression).
     */
   def ivfIngestSq(emb: DataFrame, modelPath: String, indexDir: String,
       checkpointDir: String, kCells: Int = 8,
       iterations: Int = 2, attrs: Seq[String] = Nil): StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch generation resolution + owner recovery, as ivfIngest
-        val root = resolveRoot(indexDir)
-        recoverIndex(root)
-        // attrs ride the leaves as plain data columns (filtered
-        // search, as ivfIngest); training stays on the bare projection
-        val qb = quantize(batch, attrs)
-        if (!qb.isEmpty) {
-          val cent = trainOrLoad(modelFor(root, modelPath),
-            qb.select("vec_id", "v", "norm2"), kCells, iterations)
-          ensureLayout(root, "sq8", cent.size, cent.head._2.size)
-          // owner id-reuse, as ivfIngest: fresh path, never a delete
-          val diskId = reuseSafeBatchId(root, checkpointDir, batchId)
-          // codes from THE int8 rule (Ann.withInt8Cols), narrowed to
-          // bytes for the 4× on-disk layout; cells from THE shared
-          // serving rule (Ann.cellAssign), matching batch knnIvfSq
-          Ann.withInt8Cols(Ann.cellAssign(qb, cent))
-            .withColumn("cb", transform(col("c"), _.cast("byte")))
-            .select(col("vec_id") +: col("cb") +: col("n2q") +:
-              attrs.map(col) :+ col("cell"): _*)
-            .withColumn("ingest_batch", lit(diskId))
-            .write
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .partitionBy("cell", "ingest_batch")
-            .parquet(root)
-        }
-      }
-      .start()
+    // codes from THE int8 rule (Ann.withInt8Cols), narrowed to bytes
+    // for the 4× on-disk layout; cells from THE shared serving rule
+    ingestSpine(emb, modelPath, indexDir, checkpointDir, kCells, iterations,
+        attrs, "sq8") { (_, qb, cent) =>
+      Ann.withInt8Cols(Ann.cellAssign(qb, cent))
+        .withColumn("cb", transform(col("c"), _.cast("byte")))
+    }
 
   /** Top-k quantized-cosine query over an [[ivfIngestSq]] index: same
     * driver-side cell ranking (full-precision query vs the frozen
@@ -424,55 +402,26 @@ object StreamingAnn {
 
   private def queryIndexSqImpl(spark: SparkSession, indexDir: String,
       modelPath: String, queries: DataFrame, k: Int, probes: Int,
-      predicate: Option[Column], escalate: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val root = resolveRoot(indexDir) // serving generation (see retrainIndex)
-    requireLayout(root, "sq8", "queryIndexSq")
-    val visibility = visibilityFilter(root)
-    val model = modelFor(root, modelPath)
-    val cent = loadModel(model).getOrElse(
-      throw new IllegalStateException(s"no trained model at $model"))
-    val qRows = quantize(queries).collect().map(r =>
-      (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
-    val ranked = qRows.map { case (qId, qv, qn2) =>
-      // int8-code the query ONCE (probe-invariant, request-scale
+      predicate: Option[Column], escalate: Boolean = false): DataFrame =
+    queryIndexSpine(spark, indexDir, modelPath, queries, k, probes, predicate,
+        escalate, "sq8", "queryIndexSq") { (_, cent, qRows) =>
+      import spark.implicits._
+      // int8-code each query ONCE (probe-invariant, request-scale
       // math); HALF_UP to match the engine's `round` on negative
       // halves (math.round would round -2.5 to -2, Spark rounds to -3)
-      val maxabs = qv.map(math.abs).max
-      val qc = if (maxabs == 0) qv.map(_ => 0L)
-        else qv.map(x => BigDecimal(x * 127.0 / maxabs)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
-      val qn2q = qc.map(c => c * c).sum
-      (qId, rankCells(cent, qv, qn2, cent.size), qc, qn2q)
+      val coded = qRows.map { case (qId, qv, _) =>
+        val maxabs = qv.map(math.abs).max
+        val qc = if (maxabs == 0) qv.map(_ => 0L)
+          else qv.map(x => BigDecimal(x * 127.0 / maxabs)
+            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
+        qId -> (qc, qc.map(c => c * c).sum)
+      }.toMap
+      Probing(cosRanked(cent, qRows),
+        _.map { case (qId, c) => (qId, c, coded(qId)._1, coded(qId)._2) }
+          .toDF("q_id", "qcell", "qc", "qn2q"),
+        "qcos", Ann.guardedCosine(col("qc"), transform(col("cb"), _.cast("long")),
+          col("qn2q"), col("n2q")))
     }
-    val depth: Map[Long, Int] =
-      if (!escalate) ranked.map(r => r._1 -> probes).toMap
-      else escalatedDepths(spark, root, visibility, predicate,
-        ranked.map(r => (r._1, r._2)), k, probes)
-    val probeRows = ranked.flatMap { case (qId, cells, qc, qn2q) =>
-      cells.take(depth(qId)).map(cId => (qId, cId, qc, qn2q))
-    }.toSeq
-    val probeDf = probeRows.toDF("q_id", "qcell", "qc", "qn2q")
-    val cells = probeRows.map(_._2).distinct
-    val idx0 = spark.read.parquet(root)
-      .filter(col("cell").isin(cells: _*))
-    val idx1 = visibility.fold(idx0)(idx0.filter)
-    // attribute predicate before scoring/election, as queryIndexImpl
-    val idx = predicate.fold(idx1)(idx1.filter)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("qcos").desc, col("vec_id"))
-    newestPerCandidate(idx.join(broadcast(probeDf),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id")))
-      .withColumn("c64", transform(col("cb"), _.cast("long")))
-      .withColumn("qcos",
-        when(col("qn2q") === 0 || col("n2q") === 0, lit(-2.0))
-          .otherwise(VecOps.intDot(col("qc"), col("c64")).cast("double")
-            / (sqrt(col("qn2q").cast("double")) * sqrt(col("n2q").cast("double")))))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        round(col("qcos") * 10000, 0).cast("long").as("qcos_bp"))
-  }
 
   // ---- ST9: the PQ-coded on-disk layout (IVFADC at rest) -----------
   //
@@ -567,57 +516,34 @@ object StreamingAnn {
       indexDir: String, checkpointDir: String, kCells: Int = 8,
       pqK: Int = Ann.PqK, iterations: Int = 2,
       attrs: Seq[String] = Nil): StreamingQuery =
-    emb.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = resolveRoot(indexDir)
-        recoverIndex(root)
-        // attrs ride the leaves as plain data columns (filtered
-        // search, as ivfIngest); training stays on the bare projection
-        val qb = quantize(batch, attrs)
-        if (!qb.isEmpty) {
-          val cent = trainOrLoad(modelFor(root, modelPath),
-            qb.select("vec_id", "v", "norm2"), kCells, iterations)
-          ensureLayout(root, "pq", cent.size, cent.head._2.size)
-          val centMap = typedLit(cent.map { case (c, cv, _) => c -> cv }.toMap)
-          // residuals against the frozen coarse cells (payload columns
-          // ride through kmeansAssign's pure projection) — materialized
-          // once when they feed codebook training (read 4 subspaces ×
-          // (1 + iterations) times), lazily otherwise
-          def residuals() =
-            Ann.kmeansAssign(qb, cent)
-              .select(col("vec_id") +: col("cluster").as("cell") +:
-                zip_with(col("v"), element_at(centMap, col("cluster")),
-                  (a, b) => a - b).as("v") +: attrs.map(col): _*)
-          val bPath = booksFor(root, booksPath)
-          val books = loadBooks(bPath).getOrElse {
-            val res = residuals().localCheckpoint(eager = true)
-            // seed-safe per-subspace training (the coarse model's own
-            // discipline): identical to the batch pqCodebooksFromQ on
-            // a 0-keyed first batch, trained once, shipped thereafter
-            val b = (0 until Ann.PqM).map { s =>
-              val sv = slice(col("v"), s * Ann.PqSubDims + 1, Ann.PqSubDims)
-              Ann.kmeansCentroidsSeedSafe(
-                res.select(col("vec_id"), sv.as("v"),
-                  VecOps.intDot(sv, sv).as("norm2")), pqK, iterations)
-            }
-            saveBooks(bPath, b)
-            res.unpersist()
-            b
-          }
-          val diskId = reuseSafeBatchId(root, checkpointDir, batchId)
-          Ann.pqEncodedFromQ(residuals(), books)
-            .select(col("vec_id") +: col("cell") +: col("c0") +:
-              col("c1") +: col("c2") +: col("c3") +: attrs.map(col): _*)
-            .withColumn("ingest_batch", lit(diskId))
-            .write
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .partitionBy("cell", "ingest_batch")
-            .parquet(root)
-        }
+    ingestSpine(emb, modelPath, indexDir, checkpointDir, kCells, iterations,
+        attrs, "pq") { (root, qb, cent) =>
+      val bPath = booksFor(root, booksPath)
+      val books = loadBooks(bPath).getOrElse {
+        // residuals materialized once for training (read 4 subspaces ×
+        // (1 + iterations) times); trained once, shipped thereafter
+        val res = Ann.pqResiduals(qb, cent).localCheckpoint(eager = true)
+        val b = trainBooks(res, pqK, iterations)
+        saveBooks(bPath, b)
+        res.unpersist()
+        b
       }
-      .start()
+      Ann.pqEncodedFromQ(Ann.pqResiduals(qb, cent, attrs), books)
+    }
+
+  /** Seed-safe per-subspace PQ codebooks over residual rows (vec_id,
+    * v) — the coarse model's own discipline: identical to the batch
+    * [[Ann.pqCodebooksFromQ]] on a 0-keyed corpus, still full pqK on an
+    * index keyed at arbitrary ids.
+    */
+  private def trainBooks(res: DataFrame, pqK: Int,
+      iterations: Int): Seq[Seq[(Long, Seq[Long], Long)]] =
+    (0 until Ann.PqM).map { s =>
+      val sv = slice(col("v"), s * Ann.PqSubDims + 1, Ann.PqSubDims)
+      Ann.kmeansCentroidsSeedSafe(
+        res.select(col("vec_id"), sv.as("v"),
+          VecOps.intDot(sv, sv).as("norm2")), pqK, iterations)
+    }
 
   /** Driver-side L2 probe ranking for the pq layout — EXACTLY the
     * batch [[Ann.knnIvfPq]] query side (exact coarse squared-L2,
@@ -698,53 +624,25 @@ object StreamingAnn {
   private def queryIndexPqImpl(spark: SparkSession, indexDir: String,
       modelPath: String, booksPath: String, queries: DataFrame, k: Int,
       probes: Int, predicate: Option[Column],
-      escalate: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val root = resolveRoot(indexDir)
-    requireLayout(root, "pq", "queryIndexPq")
-    val visibility = visibilityFilter(root)
-    val cent = loadModel(modelFor(root, modelPath)).getOrElse(
-      throw new IllegalStateException(
-        s"no trained model at ${modelFor(root, modelPath)}"))
-    val books = loadBooks(booksFor(root, booksPath)).getOrElse(
-      throw new IllegalStateException(
-        s"no trained codebooks at ${booksFor(root, booksPath)}"))
-    val qRows = quantize(queries).collect().map(r =>
-      (r.getLong(0), r.getSeq[Long](1)))
-    // every query's cells ranked to FULL depth once (L2, the pq rule);
-    // per-query effective depth is the base tier, escalated to full
-    // coverage for queries the count pass found dry
-    val ranked = qRows.map { case (qId, qv) => (qId, rankCellsL2(cent, qv)) }
-    val depth: Map[Long, Int] =
-      if (!escalate) ranked.map(r => r._1 -> probes).toMap
-      else escalatedDepths(spark, root, visibility, predicate,
-        ranked.map { case (qId, cells) => (qId, cells.map(_._1)) }, k, probes)
-    val probeRows = ranked.flatMap { case (qId, cells) =>
-      cells.take(depth(qId)).map { case (cId, res) =>
-        (qId, cId, adcTable(res, 0, books(0)), adcTable(res, 1, books(1)),
-          adcTable(res, 2, books(2)), adcTable(res, 3, books(3)))
-      }
-    }.toSeq
-    val probeDf = probeRows.toDF("q_id", "qcell", "qd0", "qd1", "qd2", "qd3")
-    val cells = probeRows.map(_._2).distinct
-    val idx0 = spark.read.parquet(root)
-      .filter(col("cell").isin(cells: _*))
-    val idx1 = visibility.fold(idx0)(idx0.filter)
-    // attribute predicate before scoring/election, as queryIndexImpl
-    val idx = predicate.fold(idx1)(idx1.filter)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("est_d"), col("vec_id"))
-    newestPerCandidate(idx.join(broadcast(probeDf),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id")))
-      .withColumn("est_d",
-        element_at(col("qd0"), col("c0")) + element_at(col("qd1"), col("c1"))
-          + element_at(col("qd2"), col("c2"))
-          + element_at(col("qd3"), col("c3")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        col("est_d"))
-  }
+      escalate: Boolean = false): DataFrame =
+    queryIndexSpine(spark, indexDir, modelPath, queries, k, probes, predicate,
+        escalate, "pq", "queryIndexPq") { (root, cent, qRows) =>
+      import spark.implicits._
+      val books = loadBooks(booksFor(root, booksPath)).getOrElse(
+        throw new IllegalStateException(
+          s"no trained codebooks at ${booksFor(root, booksPath)}"))
+      // L2 ranking (the pq rule) with the query's residual to each cell
+      val ranked = qRows.map { case (qId, qv, _) => qId -> rankCellsL2(cent, qv) }
+      val residual = ranked.flatMap { case (qId, cells) =>
+        cells.map { case (c, res) => (qId, c) -> res } }.toMap
+      Probing(ranked.map { case (qId, cells) => qId -> cells.map(_._1) },
+        _.map { case (qId, c) =>
+          val res = residual((qId, c))
+          (qId, c, adcTable(res, 0, books(0)), adcTable(res, 1, books(1)),
+            adcTable(res, 2, books(2)), adcTable(res, 3, books(3)))
+        }.toDF("q_id", "qcell", "qd0", "qd1", "qd2", "qd3"),
+        "est_d", Ann.adcEstimate, desc = false)
+    }
 
   /** IVFADC-R over the on-disk index — [[Ann.knnIvfPqRefined]]'s
     * refine stage composed with [[queryIndexPq]]: the code index
@@ -770,13 +668,9 @@ object StreamingAnn {
     val qq = qv.join(broadcast(short.select("q_id").distinct()),
         col("vec_id") === col("q_id"))
       .select(col("q_id"), col("v").as("qv"), col("norm2").as("qn2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("cos").desc, col("neighbor_id"))
-    cand.join(broadcast(qq), Seq("q_id"))
+    Ann.topK(cand.join(broadcast(qq), Seq("q_id"))
       .withColumn("cos", Ann.cosine(col("qv"), col("v"), col("qn2"),
-        col("norm2")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+        col("norm2"))), k, col("cos").desc, tie = "neighbor_id")
       .select(col("q_id"), col("rnk"), col("neighbor_id"),
         round(col("cos") * 10000, 0).cast("long").as("cos_bp"))
   }
@@ -870,7 +764,7 @@ object StreamingAnn {
     val leaves = listLeaves(root)
     if (leaves.isEmpty) return None
     // a populated pre-stamp dir gets the same explicit-stamp demand as
-    // the query paths (the compactor serves two on-disk layouts and
+    // the query paths (the compactor serves every on-disk layout and
     // must never guess which one it is merging), and an unknown
     // assignment rule the same refusal — compaction preserves cells,
     // so it would launder a wrong-rule index into a fresh-looking one
@@ -1181,90 +1075,110 @@ object StreamingAnn {
     * rebuilt leaf id).
     */
   private[graft] def retrainIndexImpl(spark: SparkSession, indexDir: String,
-      kCells: Int, iterations: Int, crashPoint: Int): (Long, Long) = {
+      kCells: Int, iterations: Int, crashPoint: Int): (Long, Long) =
+    writeGeneration(spark, indexDir, kCells, iterations, crashPoint,
+        pq = false, attrs = Nil) { (visible, layout) =>
+      // elect the newest copy per vec_id over every visible leaf — the
+      // same survivor rule compaction and queries apply
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("vec_id")
+        .orderBy(col("eff").desc, col("src_batch").desc)
+      val elected = visible
+        .withColumn("src_batch", col("ingest_batch").cast("long"))
+        .withColumn("eff", effExpr(col("src_batch")))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .drop("rn", "eff", "src_batch", "ingest_batch")
+        .localCheckpoint() // training re-scans it `iterations` times
+      // full layout trains on the stored milli vectors; sq8 on the
+      // widened codes (code space — see scaladoc), its payload riding
+      // through cellAssign's pure projection
+      val trainIn =
+        if (layout == "full") elected.select("vec_id", "v", "norm2")
+        else elected
+          .withColumn("v", transform(col("cb"), _.cast("long")))
+          .withColumn("norm2", col("n2q"))
+      val cent = Ann.kmeansCentroidsSeedSafe(
+        trainIn.select("vec_id", "v", "norm2"), kCells, iterations)
+      require(cent.nonEmpty, "training produced no centroids")
+      Rebuilt(Ann.cellAssign(trainIn, cent), cent)
+    }
+
+  /** What a retrain path hands [[writeGeneration]]: the rebuilt rows
+    * (`cell` + the layout's payload), the new coarse model, the
+    * layout's codebooks if it has any, and cached frames to release
+    * once the rows are written.
+    */
+  private case class Rebuilt(rows: DataFrame,
+      cent: Seq[(Long, Seq[Long], Long)],
+      books: Option[Seq[Seq[(Long, Seq[Long], Long)]]] = None,
+      cached: Seq[DataFrame] = Nil)
+
+  /** The one generation writer behind [[retrainIndex]] (`pq = false`:
+    * self-contained layouts) and [[retrainIndexPq]] (`pq = true`): owner
+    * entry (settle a crashed compaction), layout and rule check, the
+    * visible leaves, `rebuild` (given the visibility-filtered serving
+    * index and its layout),
+    * then generation N+1 at `_gen-N`: the rebuilt rows as ONE
+    * generation-encoded leaf per cell whose eff is the max effective
+    * batch of the consumed view (later raw deliveries keep winning
+    * elections, a replay of the last delivered batch ties into the
+    * raw-beats-encoded arm), the layout stamp with the ACTUAL cell
+    * count (fewer than kCells only when the corpus has fewer vectors),
+    * the generation's `_model` (and `_pqbooks`), and last THE atomic
+    * `_current` cutover. crashPoint 1 stops after the data write, 2
+    * after the artifacts (complete but unreferenced); a crashed
+    * prior attempt's dir is deleted and rebuilt.
+    */
+  private def writeGeneration(spark: SparkSession, indexDir: String,
+      kCells: Int, iterations: Int, crashPoint: Int, pq: Boolean,
+      attrs: Seq[String])(
+      rebuild: (DataFrame, String) => Rebuilt): (Long, Long) = {
     graft.core.Validation.validate("index-maintenance",
       graft.core.Validation.knob("kCells", kCells, minV = 1L) ++
         graft.core.Validation.knob("iterations", iterations, minV = 1L))
     val cur = resolveRoot(indexDir)
     recoverIndex(indexDir) // owner entry: settle any crashed compaction
-    val (layout, _, dims) = readLayout(cur) match {
+    val layout = readLayout(cur) match {
       case None => throw new IllegalStateException(legacyLayoutMsg(cur))
-      case Some((l, _, _, r)) if r != ruleFor(l) =>
+      case Some((l, _, _, r)) if r != ruleFor(l) && (!pq || l == "pq") =>
         throw new IllegalStateException(ruleMismatchMsg(cur, r))
-      case Some((l, k, d, _)) => (l, k, d)
+      case Some((l, _, _, _)) => l
     }
-    // a pq index stores only residual ADC codes — residuals are taken
-    // against the OLD centroids, so a new model cannot re-encode them
-    // without the primary full-precision vectors, which this layout
-    // deliberately does not carry. Refuse loudly: drift maintenance
-    // for a code index is a re-ingest from the primary store under a
-    // fresh model/codebooks, never an in-place rebuild.
-    if (layout == "pq")
+    // a pq index stores only residual ADC codes taken against the OLD
+    // centroids: a new model cannot re-encode them without the primary
+    // full-precision vectors, which the layout does not carry
+    if (layout == "pq" && !pq)
       throw new IllegalStateException(
         s"index at $cur is a 'pq' (residual-code) layout: retraining " +
           "needs the primary full-precision vectors, which a code index " +
           "does not store — use retrainIndexPq to re-ingest from the " +
           "primary store under a new model instead of retraining in place")
+    if (layout != "pq" && pq)
+      throw new IllegalStateException(
+        s"index at $cur is a '$layout' layout: retrainIndexPq re-encodes " +
+          "residual-code ('pq') indexes from the primary store — use " +
+          "retrainIndex for self-contained layouts")
     val excluded = excludedBatchIds(cur)
     val visibleLeaves = listLeaves(cur).filterNot(l => excluded.contains(l._2))
     if (visibleLeaves.isEmpty)
       throw new IllegalStateException(s"nothing to retrain at $cur")
-    // elect the newest copy per vec_id over every visible leaf — the
-    // same survivor rule compaction and queries apply
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id")
-      .orderBy(col("eff").desc, col("src_batch").desc)
     val idx0 = spark.read.parquet(cur)
-    val elected = visibilityFilter(cur).fold(idx0)(idx0.filter)
-      .withColumn("src_batch", col("ingest_batch").cast("long"))
-      .withColumn("eff", effExpr(col("src_batch")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn", "eff", "src_batch", "ingest_batch")
-      .localCheckpoint() // training re-scans it `iterations` times
-    // full layout trains on the stored milli vectors; sq8 on the
-    // widened codes (code space — see scaladoc)
-    val trainIn =
-      if (layout == "full") elected.select("vec_id", "v", "norm2")
-      else elected
-        .withColumn("v", transform(col("cb"), _.cast("long")))
-        .select(col("vec_id"), col("v"), col("n2q").as("norm2"))
-    // seed-safe training (Ann.kmeansCentroidsSeedSafe): a long-lived
-    // index's visible ids need not include 0..k-1 — the k smallest
-    // ids seed by rank, so the requested kCells is always delivered
-    // when the corpus has that many vectors
-    val cent = Ann.kmeansCentroidsSeedSafe(trainIn, kCells, iterations)
-    require(cent.nonEmpty, "training produced no centroids")
-    // fewer centroids than requested happens ONLY when the corpus has
-    // fewer vectors than kCells (can't have more cells than points);
-    // the generation is stamped with the ACTUAL cell count
+    val rb = rebuild(visibilityFilter(cur).fold(idx0)(idx0.filter), layout)
     val genN = readCurrentGen(indexDir).getOrElse(0L) + 1
     val genDir = s"$indexDir/_gen-$genN"
     deleteDir(java.nio.file.Paths.get(genDir)) // a crashed prior attempt
-    // rebuilt leaves carry ONE generation-encoded id whose eff is the
-    // max effective batch of the consumed view: later raw deliveries
-    // (ids strictly above it) keep winning elections, and a replay of
-    // the last delivered batch ties into the raw-beats-encoded arm
     val outId = -(visibleLeaves.map(l => effOf(l._2)).max + 2) * EffScale
-    // cellAssign is a pure projection (extra columns pass through),
-    // so the sq8 payload rides along — no corpus-scale join back
-    val assigned =
-      if (layout == "full")
-        Ann.cellAssign(trainIn, cent)
-          .select(col("vec_id"), col("v"), col("norm2"), col("cell"))
-      else
-        Ann.cellAssign(elected
-            .withColumn("v", transform(col("cb"), _.cast("long")))
-            .withColumn("norm2", col("n2q")), cent)
-          .select(col("vec_id"), col("cb"), col("n2q"), col("cell"))
-    assigned
+    rb.rows.select(leafColumns(layout, attrs): _*)
       .withColumn("ingest_batch", lit(outId))
       .write.mode("overwrite")
       .partitionBy("cell", "ingest_batch")
       .parquet(genDir)
+    rb.cached.foreach(_.unpersist())
     if (crashPoint == 1) return (genN, outId)
-    stampIndexLayout(genDir, layout, cent.size, dims)
-    saveModel(s"$genDir/_model", cent)
+    stampIndexLayout(genDir, layout, rb.cent.size, rb.cent.head._2.size)
+    saveModel(s"$genDir/_model", rb.cent)
+    rb.books.foreach(saveBooks(s"$genDir/_pqbooks", _))
     if (crashPoint == 2) return (genN, outId)
     writeCurrentGen(indexDir, genN) // THE atomic cutover
     (genN, outId)
@@ -1317,78 +1231,29 @@ object StreamingAnn {
       indexDir: String, primary: DataFrame, kCells: Int, pqK: Int,
       iterations: Int, attrs: Seq[String],
       crashPoint: Int): (Long, Long) = {
-    graft.core.Validation.validate("index-maintenance",
-      graft.core.Validation.knob("kCells", kCells, minV = 1L) ++
-        graft.core.Validation.knob("iterations", iterations, minV = 1L))
     graft.core.Configs.Pq(pqK).validated
-    val cur = resolveRoot(indexDir)
-    recoverIndex(indexDir) // owner entry: settle any crashed compaction
-    readLayout(cur) match {
-      case None => throw new IllegalStateException(legacyLayoutMsg(cur))
-      case Some(("pq", _, _, r)) if r != ruleFor("pq") =>
-        throw new IllegalStateException(ruleMismatchMsg(cur, r))
-      case Some(("pq", _, _, _)) => ()
-      case Some((l, _, _, _)) =>
-        throw new IllegalStateException(
-          s"index at $cur is a '$l' layout: retrainIndexPq re-encodes " +
-            "residual-code ('pq') indexes from the primary store — use " +
-            "retrainIndex for self-contained layouts")
+    writeGeneration(spark, indexDir, kCells, iterations, crashPoint,
+        pq = true, attrs) { (visible, _) =>
+      // the visible ID SET is the election here: every copy of a vec_id
+      // re-encodes to the same codes under the new artifacts, so
+      // newest-wins tie-breaking among copies is moot — what matters is
+      // that invisible (tombstoned / crashed) ids stay out
+      val ids = visible.select("vec_id").distinct()
+      val corpus = quantize(primary, attrs).join(ids, Seq("vec_id"))
+        .localCheckpoint(eager = true) // read by coarse + book training
+      // EXACTLY the batch knnIvfPq training chain (seed-safe seeding —
+      // identical to the batch trainer whenever ids 0..k-1 are present,
+      // and still full-k on an index keyed at arbitrary ids)
+      val cent = Ann.kmeansCentroidsSeedSafe(
+        corpus.select("vec_id", "v", "norm2"), kCells, iterations)
+      require(cent.nonEmpty, "training produced no centroids " +
+        "(primary store shares no ids with the index?)")
+      val res = Ann.pqResiduals(corpus, cent, attrs)
+        .localCheckpoint(eager = true) // 4 subspaces × training reads
+      val books = trainBooks(res, pqK, iterations)
+      Rebuilt(Ann.pqEncodedFromQ(res, books), cent, Some(books),
+        Seq(res, corpus))
     }
-    val excluded = excludedBatchIds(cur)
-    val visibleLeaves = listLeaves(cur).filterNot(l => excluded.contains(l._2))
-    if (visibleLeaves.isEmpty)
-      throw new IllegalStateException(s"nothing to retrain at $cur")
-    // the visible ID SET is the election here: every copy of a vec_id
-    // re-encodes to the same codes under the new artifacts, so
-    // newest-wins tie-breaking among copies is moot — what matters is
-    // that invisible (tombstoned / crashed) ids stay out
-    val idx0 = spark.read.parquet(cur)
-    val ids = visibilityFilter(cur).fold(idx0)(idx0.filter)
-      .select("vec_id").distinct()
-    val corpus = quantize(primary, attrs).join(ids, Seq("vec_id"))
-      .localCheckpoint(eager = true) // read by coarse + book training
-    // EXACTLY the batch knnIvfPq training chain (seed-safe seeding —
-    // identical to the batch trainer whenever ids 0..k-1 are present,
-    // and still full-k on an index keyed at arbitrary ids)
-    val cent = Ann.kmeansCentroidsSeedSafe(
-      corpus.select("vec_id", "v", "norm2"), kCells, iterations)
-    require(cent.nonEmpty, "training produced no centroids " +
-      "(primary store shares no ids with the index?)")
-    val centMap = typedLit(cent.map { case (c, cv, _) => c -> cv }.toMap)
-    val res = Ann.kmeansAssign(corpus, cent)
-      .select(col("vec_id") +: col("cluster").as("cell") +:
-        zip_with(col("v"), element_at(centMap, col("cluster")),
-          (a, b) => a - b).as("v") +: attrs.map(col): _*)
-      .localCheckpoint(eager = true) // 4 subspaces × training reads
-    val books = (0 until Ann.PqM).map { s =>
-      val sv = slice(col("v"), s * Ann.PqSubDims + 1, Ann.PqSubDims)
-      Ann.kmeansCentroidsSeedSafe(
-        res.select(col("vec_id"), sv.as("v"),
-          VecOps.intDot(sv, sv).as("norm2")), pqK, iterations)
-    }
-    val genN = readCurrentGen(indexDir).getOrElse(0L) + 1
-    val genDir = s"$indexDir/_gen-$genN"
-    deleteDir(java.nio.file.Paths.get(genDir)) // a crashed prior attempt
-    // same generation-encoded leaf id rule as retrainIndex: eff = max
-    // effective batch of the consumed view, later deliveries keep
-    // winning elections
-    val outId = -(visibleLeaves.map(l => effOf(l._2)).max + 2) * EffScale
-    Ann.pqEncodedFromQ(res, books)
-      .select(col("vec_id") +: col("cell") +: col("c0") +: col("c1") +:
-        col("c2") +: col("c3") +: attrs.map(col): _*)
-      .withColumn("ingest_batch", lit(outId))
-      .write.mode("overwrite")
-      .partitionBy("cell", "ingest_batch")
-      .parquet(genDir)
-    res.unpersist()
-    corpus.unpersist()
-    if (crashPoint == 1) return (genN, outId)
-    stampIndexLayout(genDir, "pq", cent.size, cent.head._2.size)
-    saveModel(s"$genDir/_model", cent)
-    saveBooks(s"$genDir/_pqbooks", books)
-    if (crashPoint == 2) return (genN, outId)
-    writeCurrentGen(indexDir, genN) // THE atomic cutover
-    (genN, outId)
   }
 
   /** Codified drift cadence — the retrain analog of
@@ -1630,12 +1495,13 @@ object StreamingAnn {
   private def tombstonePath(indexDir: String) =
     java.nio.file.Paths.get(indexDir, "_tombstones")
 
-  /** The index family has two on-disk layouts sharing one compactor
-    * and one directory convention — `full` (v/norm2 full-precision
-    * vectors, [[ivfIngest]]) and `sq8` (cb/n2q int8 codes,
-    * [[ivfIngestSq]]) — so every index dir carries a `_layout` stamp
+  /** The index family has three on-disk layouts sharing one
+    * compactor and one directory convention — `full` (v/norm2
+    * full-precision vectors, [[ivfIngest]]), `sq8` (cb/n2q int8 codes,
+    * [[ivfIngestSq]]) and `pq` (c0..c3 residual codes,
+    * [[ivfIngestPq]]) — so every index dir carries a `_layout` stamp
     * `{layout, kCells, dims, rule}` written at first ingest (rule =
-    * the cell-assignment rule, [[RuleCos]]). Readers and the
+    * the layout's cell-assignment rule, [[ruleFor]]). Readers and the
     * compactor REFUSE a mismatched or missing stamp with a
     * self-explanatory error instead of failing downstream on a missing
     * column; pre-stamp (legacy) dirs are never auto-stamped — the
@@ -1657,8 +1523,7 @@ object StreamingAnn {
     }
 
   /** Explicitly stamp an index dir's layout (the legacy-dir migration
-    * path, and the write path [[ivfIngest]]/[[ivfIngestSq]] use on an
-    * empty dir). Restamping with the SAME triple is a no-op; a
+    * path, and the write path every ingest uses on an empty dir). Restamping with the SAME triple is a no-op; a
     * different triple is refused.
     */
   def stampIndexLayout(indexDir: String, layout: String, kCells: Int,
@@ -1686,7 +1551,15 @@ object StreamingAnn {
     ()
   }
 
-  private[graft] val Layouts = Set("full", "sq8", "pq")
+  /** Each layout's leaf payload columns, written next to `vec_id`, the
+    * ingest's `attrs` and the `cell` / `ingest_batch` partition keys.
+    */
+  private val Payloads = Map("full" -> Seq("v", "norm2"),
+    "sq8" -> Seq("cb", "n2q"), "pq" -> Seq("c0", "c1", "c2", "c3"))
+  private[graft] val Layouts = Payloads.keySet
+
+  private def leafColumns(layout: String, attrs: Seq[String]): Seq[Column] =
+    col("vec_id") +: (Payloads(layout) ++ attrs).map(col) :+ col("cell")
 
   /** The cell-assignment rule every current writer uses
     * ([[Ann.cellAssign]], guarded-cosine argmax) and every reader's
@@ -1799,7 +1672,7 @@ object StreamingAnn {
     }
   }
 
-  /** Operational stats of an on-disk index (either layout): per cell —
+  /** Operational stats of an on-disk index (any layout): per cell —
     * leaf count (the compaction-cadence signal: ST7's one scale defect
     * is unbounded leaf accumulation), row count, and corpus share in
     * basis points (the on-disk twin of the batch cell-balance report
@@ -1958,52 +1831,83 @@ object StreamingAnn {
 
   private def queryIndexImpl(spark: SparkSession, indexDir: String,
       modelPath: String, queries: DataFrame, k: Int, probes: Int,
-      predicate: Option[Column], escalate: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val root = resolveRoot(indexDir) // serving generation (see retrainIndex)
-    requireLayout(root, "full", "queryIndex")
+      predicate: Option[Column], escalate: Boolean = false): DataFrame =
+    queryIndexSpine(spark, indexDir, modelPath, queries, k, probes, predicate,
+        escalate, "full", "queryIndex") { (_, cent, qRows) =>
+      import spark.implicits._
+      val byId = qRows.map(r => r._1 -> r).toMap
+      Probing(cosRanked(cent, qRows),
+        _.map { case (qId, c) => (qId, c, byId(qId)._2, byId(qId)._3) }
+          .toDF("q_id", "qcell", "qv", "qn2"),
+        "cos", Ann.guardedCosine(col("qv"), col("v"), col("qn2"), col("norm2")))
+    }
+
+  /** One layout's part of an on-disk query: each query's cells ranked
+    * to FULL depth, the probe-row frame (q_id, qcell, probe payload)
+    * for the (query, cell) pairs the depth rule keeps, and the
+    * candidate score — a cosine ranked descending and reported in
+    * basis points, or (`desc = false`) an ADC distance ranked
+    * ascending.
+    */
+  private case class Probing(ranked: Seq[(Long, Seq[Long])],
+      probeRows: Seq[(Long, Long)] => DataFrame, score: String,
+      scoreExpr: Column, desc: Boolean = true)
+
+  /** The one probe-scan-elect sequence behind every `queryIndex*`
+    * entry point, whatever the layout:
+    *  - resolve the serving generation ONCE and read the layout stamp,
+    *    visibility exclusions and model from that same root, so a
+    *    retrain cutover mid-request can never mix generations;
+    *  - quantize and collect the request-scale query set, and let the
+    *    layout rank every query's cells against the frozen model
+    *    driver-side (`probing`, given the resolved root, the model and
+    *    the (q_id, v, norm2) query rows);
+    *  - per query, keep the base tier `probes`, or with `escalate` the
+    *    depth [[escalatedDepths]] decides;
+    *  - scan ONLY the probed cells: the `isin` and visibility filters
+    *    are parquet PartitionFilters (the IVF scan bound holds on disk),
+    *    the attribute predicate a pushed data filter applied before
+    *    scoring and election (copies of a vec_id are byte-identical
+    *    under the index contract, so it cannot flip an election);
+    *  - elect one copy per candidate ([[newestPerCandidate]]), score,
+    *    and keep the top k, same tie-break as the batch operators.
+    */
+  private def queryIndexSpine(spark: SparkSession, indexDir: String,
+      modelPath: String, queries: DataFrame, k: Int, probes: Int,
+      predicate: Option[Column], escalate: Boolean, layout: String,
+      caller: String)(
+      probing: (String, Seq[(Long, Seq[Long], Long)],
+        Seq[(Long, Seq[Long], Long)]) => Probing): DataFrame = {
+    val root = resolveRoot(indexDir)
+    requireLayout(root, layout, caller)
     val visibility = visibilityFilter(root)
     val model = modelFor(root, modelPath)
     val cent = loadModel(model).getOrElse(
       throw new IllegalStateException(s"no trained model at $model"))
-    val qRows = quantize(queries).collect().map(r =>
+    val qRows = quantize(queries).collect().toSeq.map(r =>
       (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
-    // every query's cells ranked to FULL depth once; the per-query
-    // effective depth is the base tier, escalated to full coverage
-    // for queries the count pass found dry (batch-operator rule)
-    val ranked = qRows.map { case (qId, qv, qn2) =>
-      (qId, rankCells(cent, qv, qn2, cent.size), qv, qn2)
-    }
+    val p = probing(root, cent, qRows)
     val depth: Map[Long, Int] =
-      if (!escalate) ranked.map(r => r._1 -> probes).toMap
-      else escalatedDepths(spark, root, visibility, predicate,
-        ranked.map(r => (r._1, r._2)), k, probes)
-    val probeRows = ranked.flatMap { case (qId, cells, qv, qn2) =>
-      cells.take(depth(qId)).map(cId => (qId, cId, qv, qn2))
-    }.toSeq
-    val probeDf = probeRows.toDF("q_id", "qcell", "qv", "qn2")
-    val cells = probeRows.map(_._2).distinct
-    val idx0 = spark.read.parquet(root)
-      .filter(col("cell").isin(cells: _*))
-    val idx1 = visibility.fold(idx0)(idx0.filter)
-    // attribute predicate: a plain data filter on the probed-cell
-    // scan — pushed to parquet, evaluated before scoring/election
-    // (copies of a vec_id are byte-identical under the index
-    // contract, so pre-election filtering cannot flip an election)
-    val idx = predicate.fold(idx1)(idx1.filter)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
-    newestPerCandidate(idx.join(broadcast(probeDf),
+      if (!escalate) p.ranked.map(r => r._1 -> probes).toMap
+      else escalatedDepths(spark, root, visibility, predicate, p.ranked, k,
+        probes)
+    val pairs = p.ranked.flatMap { case (qId, cells) =>
+      cells.take(depth(qId)).map(qId -> _) }
+    val idx = probedScan(spark, root, pairs.map(_._2).distinct, visibility,
+      predicate)
+    Ann.topKNeighbors(newestPerCandidate(idx.join(broadcast(p.probeRows(pairs)),
         col("cell") === col("qcell") && col("vec_id") =!= col("q_id")))
-      // zero-norm sentinel (as queryIndexSq and knnQuantized): a raw
-      // 0/0 is NaN — ANSI crash at the cast, or rank-1 under desc
-      .withColumn("cos",
-        when(col("qn2") === 0 || col("norm2") === 0, lit(-2.0))
-          .otherwise(Ann.cosine(col("qv"), col("v"),
-            col("qn2"), col("norm2"))))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("rnk"), col("vec_id").as("neighbor_id"),
-        round(col("cos") * 10000, 0).cast("long").as("cos_bp"))
+      .withColumn(p.score, p.scoreExpr), k, p.score, p.desc)
+  }
+
+  /** The scan of the probed cells of a resolved root: the `cell isin`
+    * and visibility filters prune partitions, the attribute predicate
+    * is a pushed data filter.
+    */
+  private def probedScan(spark: SparkSession, root: String, cells: Seq[Long],
+      visibility: Option[Column], predicate: Option[Column]): DataFrame = {
+    val idx0 = spark.read.parquet(root).filter(col("cell").isin(cells: _*))
+    val idx1 = visibility.fold(idx0)(idx0.filter)
+    predicate.fold(idx1)(idx1.filter)
   }
 }

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.operators.Ann
+import graft.streaming.StreamingAnn
 
 /** The large-K assignment path: the broadcast CentroidMatrix form must
   * be BIT-identical to the inlined-literal projection it replaces —
@@ -94,5 +96,41 @@ class CentroidAssignSpec extends SparkSuite {
     // sends k=256 x dims=64 to the broadcast matrix
     assert(8L * Ann.Dims <= Ann.literalAssignMaxTerms)
     assert(256L * Ann.Dims > Ann.literalAssignMaxTerms)
+  }
+
+  test("trained IVF scores a zero-norm candidate -2.0, as the on-disk index does") {
+    val spark0 = spark
+    import spark0.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // the fixture back in embedding form (milli-units as floats), so the
+    // all-zero vector is a candidate in every probed cell
+    val emb = corpusWithZero.select(col("vec_id"), lit(0).as("label"),
+      transform(col("v"), x => (x.cast("double") / 1000).cast("float"))
+        .as("embedding"))
+    val kCells = 8
+    val k = 600 // past the corpus size: every candidate is ranked
+    def snap(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
+    val got = snap(Ann.knnIvfTrained(emb, numQueries = 5, k = k,
+      kCells = kCells, probes = kCells))
+    val zeroPairs = got.filter(_._3 == 999999L)
+    assert(zeroPairs.map(_._1) === (0L until 5L).toSet)
+    zeroPairs.foreach { case (qId, rnk, _, bp) =>
+      assert(bp === -20000L)
+      assert(rnk === got.filter(_._1 == qId).map(_._2).max)
+    }
+    // the on-disk index ingested from the same corpus in one batch
+    // (same frozen model) returns the same rows
+    val root = tmpDir("ivf-zero-norm")
+    val rows = emb.select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1)))
+    val input = MemoryStream[(Long, Seq[Float])]
+    val q = StreamingAnn.ivfIngest(input.toDS().toDF("vec_id", "embedding"),
+      s"$root/model.txt", s"$root/index", s"$root/ckpt", kCells = kCells)
+    try { input.addData(rows.toSeq: _*); q.processAllAvailable() }
+    finally q.stop()
+    val queries = rows.filter(_._1 < 5).toSeq.toDF("vec_id", "embedding")
+    assert(snap(StreamingAnn.queryIndex(spark, s"$root/index",
+      s"$root/model.txt", queries, k = k, probes = kCells)) === got)
   }
 }

@@ -1371,31 +1371,50 @@ class StreamingAnnSpec extends SparkSuite {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val root = tmpDir("st-ann-empty")
     val rows = embRows
-    // the filter empties batch 0 AFTER it fires: the guard must skip
-    // training and persist no model
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingAnn.ivfIngest(
-      input.toDS().toDF("vec_id", "embedding").filter(col("vec_id") < 0),
-      s"$root/model.txt", s"$root/index", s"$root/ckpt")
-    try {
-      input.addData(rows.take(20).toSeq: _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(StreamingAnn.loadModel(s"$root/model.txt").isEmpty)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$root/index")))
-    // the first NON-empty batch (a fresh lineage) trains and persists
-    val input2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = StreamingAnn.ivfIngest(
-      input2.toDS().toDF("vec_id", "embedding"),
-      s"$root/model.txt", s"$root/index", s"$root/ckpt2")
-    try {
-      input2.addData(rows.take(20).toSeq: _*)
-      q2.processAllAvailable()
-    } finally q2.stop()
-    assert(StreamingAnn.loadModel(s"$root/model.txt").nonEmpty)
+    // the same empty-then-non-empty sequence through every layout's
+    // ingest: (layout, start(stream, root, checkpointDir))
+    val ingests: Seq[(String, (org.apache.spark.sql.DataFrame, String,
+        String) => org.apache.spark.sql.streaming.StreamingQuery)] = Seq(
+      "full" -> ((df, root, ckpt) => StreamingAnn.ivfIngest(df,
+        s"$root/model.txt", s"$root/index", ckpt)),
+      "sq8" -> ((df, root, ckpt) => StreamingAnn.ivfIngestSq(df,
+        s"$root/model.txt", s"$root/index", ckpt)),
+      "pq" -> ((df, root, ckpt) => StreamingAnn.ivfIngestPq(df,
+        s"$root/model.txt", s"$root/books.txt", s"$root/index", ckpt)))
+    for ((layout, ingest) <- ingests) {
+      val root = tmpDir(s"st-ann-empty-$layout")
+      def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
+      // the filter empties batch 0 AFTER it fires: the guard must skip
+      // training and persist no model
+      val input = MemoryStream[(Long, Seq[Float])]
+      val q = ingest(
+        input.toDS().toDF("vec_id", "embedding").filter(col("vec_id") < 0),
+        root, s"$root/ckpt")
+      try {
+        input.addData(rows.take(20).toSeq: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(StreamingAnn.loadModel(s"$root/model.txt").isEmpty, layout)
+      assert(!exists(s"$root/index"), layout)
+      // no codebooks either, durable or generation-local
+      assert(!exists(s"$root/books.txt") && !exists(s"$root/index/_pqbooks"),
+        layout)
+      // the first NON-empty batch (a fresh lineage) trains and persists
+      val input2 = MemoryStream[(Long, Seq[Float])]
+      val q2 = ingest(input2.toDS().toDF("vec_id", "embedding"), root,
+        s"$root/ckpt2")
+      try {
+        input2.addData(rows.take(20).toSeq: _*)
+        q2.processAllAvailable()
+      } finally q2.stop()
+      assert(StreamingAnn.loadModel(s"$root/model.txt").nonEmpty, layout)
+      assert(StreamingAnn.loadBooks(s"$root/books.txt").nonEmpty ===
+        (layout == "pq"), layout)
+      assert(StreamingAnn.readLayout(s"$root/index").map(_._1) ===
+        Some(layout))
+    }
+    val root = tmpDir("st-ann-empty")
     // torn/garbage artifacts read as None, never crash the stream
     val torn = s"$root/torn.txt"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(torn), "")
