@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
@@ -11,21 +10,22 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * take the latest record per key).
   *
   * Re-expression: an append-only parquet log of (part_id, ckpt_offset)
-  * commits under `root/commits/`; [[latest]] is the latest-per-key
-  * aggregation (exactly Kafka log-compaction semantics), [[compactLog]]
-  * is the compaction itself. Commits are metadata-scale — one row per
-  * partition per micro-batch — so the log grows with batches, not with
-  * data volume; compact it on whatever cadence a deployment likes.
+  * commits under `root/commits/` — the same log as [[FsKeyIndex]]
+  * ([[Durable.Log]]); [[latest]] is the latest-per-key aggregation
+  * (exactly Kafka log-compaction semantics), [[compactLog]] is the
+  * compaction itself, crash-safe like every log rewrite. Commits are
+  * metadata-scale — one row per partition per micro-batch — so the log
+  * grows with batches, not with data volume; compact it on whatever
+  * cadence a deployment likes.
   */
 class FsCheckpointStore(spark: SparkSession, val root: String) {
 
-  private val commitsDir = s"$root/commits"
-  private def fs =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private val schema = StructType(Seq(
+  private val log = new Durable.Log(spark, root, "commits", StructType(Seq(
     StructField("part_id", IntegerType),
-    StructField("ckpt_offset", LongType)))
+    StructField("ckpt_offset", LongType))))
+
+  private def maxPerPartition(commits: DataFrame): DataFrame =
+    commits.groupBy("part_id").agg(max("ckpt_offset").as("ckpt_offset"))
 
   /** Append one commit batch: (part_id, ckpt_offset) rows. Later
     * commits for the same partition supersede earlier ones (max wins,
@@ -33,20 +33,14 @@ class FsCheckpointStore(spark: SparkSession, val root: String) {
     * pkg/ingress/worker.go:218).
     */
   def commit(offsets: DataFrame): Unit =
-    offsets
+    log.append(offsets
       .select(col("part_id").cast("int"), col("ckpt_offset").cast("long"))
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(commitsDir)
+      .coalesce(1))
 
   /** Latest checkpoint per partition (empty result when nothing has
     * ever committed).
     */
-  def latest(): DataFrame =
-    if (!fs.exists(new Path(commitsDir)))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else
-      spark.read.schema(schema).parquet(commitsDir)
-        .groupBy("part_id").agg(max("ckpt_offset").as("ckpt_offset"))
+  def latest(): DataFrame = log.read(maxPerPartition)
 
   /** Driver-side snapshot (one row per partition — metadata-scale). */
   def latestMap(): Map[Int, Long] =
@@ -59,19 +53,7 @@ class FsCheckpointStore(spark: SparkSession, val root: String) {
     * queries; commits during compaction would be lost, so run it from
     * the same single-writer context that commits.
     */
-  def compactLog(): Unit = {
-    val snap = latest().collect().toSeq
-    if (snap.isEmpty) return
-    val spark0 = spark
-    import spark0.implicits._
-    val tmp = s"$root/commits_compact"
-    snap.map(r => (r.getAs[Int]("part_id"), r.getAs[Long]("ckpt_offset")))
-      .toDF("part_id", "ckpt_offset")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    fs.delete(new Path(commitsDir), true)
-    fs.rename(new Path(tmp), new Path(commitsDir))
-    ()
-  }
+  def compactLog(): Unit = log.rewrite(1)(maxPerPartition)
 }
 
 object FsCheckpointStore {

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -10,74 +9,28 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * an index scan instead of a corpus rescan (the incremental-ingest
   * shape: new-batch ⋈ key-index, never corpus × corpus).
   *
-  * Same design as [[FsCheckpointStore]]: an append-only parquet log of
-  * 60-bit keys under `root/keys/`; [[keys]] is the distinct view,
-  * [[add]] appends a batch's accepted keys, [[compact]] rewrites the
-  * log to one row per key. The log grows with ACCEPTED documents (one
-  * 8-byte key each), not with corpus bytes, and the distinct() is an
-  * aggregation Spark partial-aggregates map-side; compact on whatever
-  * cadence a deployment likes.
+  * Same log as [[FsCheckpointStore]] ([[Durable.Log]]): an append-only
+  * parquet log of 60-bit keys under `root/keys/`; [[keys]] is the
+  * distinct view, [[add]] appends a batch's accepted keys, [[compact]]
+  * rewrites the log to one row per key. The log grows with ACCEPTED
+  * documents (one 8-byte key each), not with corpus bytes, and the
+  * distinct() is an aggregation Spark partial-aggregates map-side;
+  * compact on whatever cadence a deployment likes.
   */
 class FsKeyIndex(spark: SparkSession, val root: String) {
 
-  private val keysDir = s"$root/keys"
-  private def fs =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private val schema = StructType(Seq(StructField("k", LongType)))
-
-  private val compactDir = s"$root/keys_compact"
-  private val backupDir = s"$root/keys_old"
-
-  /** Per-root lock: [[recover]] runs on the READ path too, so a reader
-    * racing [[compact]]'s swap window could otherwise observe `keys/`
-    * missing mid-swap and issue a competing promote rename. The lock
-    * serializes the RECOVER/PROMOTE rename window in-JVM; the lazy
-    * parquet scan [[keys]] returns executes UNLOCKED, so the
-    * single-writer contract applies in-JVM too for the scan phase — a
-    * compact() must not run concurrently with an in-flight read of a
-    * previously returned `keys()` frame (same contract ACROSS
-    * processes, as for [[FsCheckpointStore.compactLog]]).
-    */
-  private val lock = FsKeyIndex.lockFor(root)
-
-  /** Complete an interrupted [[compact]]: if `keys/` is missing but the
-    * compacted copy (or the pre-compaction backup) survives, promote it.
-    * Cheap (two existence checks) and idempotent, so every read/write
-    * entry point runs it — a crash can never silently empty the index
-    * and re-admit duplicates.
-    */
-  private def recover(): Unit = lock.synchronized {
-    if (!fs.exists(new Path(keysDir))) {
-      if (fs.exists(new Path(compactDir)))
-        fs.rename(new Path(compactDir), new Path(keysDir))
-      else if (fs.exists(new Path(backupDir)))
-        fs.rename(new Path(backupDir), new Path(keysDir))
-    }
-  }
+  private val log = new Durable.Log(spark, root, "keys",
+    StructType(Seq(StructField("k", LongType))))
 
   /** Distinct ingested keys (empty when nothing has ever ingested). */
-  def keys(): DataFrame = {
-    recover()
-    if (!fs.exists(new Path(keysDir)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(keysDir).distinct()
-  }
+  def keys(): DataFrame = log.read(_.distinct())
 
   /** Append a batch of accepted keys (column `k`: long). */
-  def add(ks: DataFrame): Unit = {
-    recover()
-    ks.select(col("k").cast("long")).write.mode(SaveMode.Append).parquet(keysDir)
-  }
+  def add(ks: DataFrame): Unit = log.append(ks.select(col("k").cast("long")))
 
   /** Rewrite the log to one row per key (run between batches from the
-    * single-writer context, like [[FsCheckpointStore.compactLog]]).
-    * Crash-safe write-then-swap: the distinct copy is fully written to
-    * `keys_compact/` BEFORE `keys/` moves aside to `keys_old/`, so at
-    * every instant at least one complete copy exists and [[recover]]
-    * can promote it (the old delete-then-rename had a window that lost
-    * the whole index).
+    * single-writer context, like [[FsCheckpointStore.compactLog]]),
+    * crash-safe via [[Durable.Log.rewrite]].
     *
     * The rewrite is coalesced to `targetFiles` output files
     * (`<= 0` = size the count from the log's own bytes at
@@ -88,21 +41,8 @@ class FsKeyIndex(spark: SparkSession, val root: String) {
     * never shrinks the count (correct results, pathological write
     * amplification).
     */
-  def compact(targetFiles: Int = 0): Unit = lock.synchronized {
-    recover() // reentrant: same monitor
-    if (!fs.exists(new Path(keysDir))) return
-    val target =
-      if (targetFiles > 0) targetFiles
-      else math.max(1L, (logBytes() + TargetFileBytes - 1) / TargetFileBytes)
-        .min(Int.MaxValue).toInt
-    fs.delete(new Path(compactDir), true)
-    keys().coalesce(target).write.mode(SaveMode.Overwrite).parquet(compactDir)
-    fs.delete(new Path(backupDir), true)
-    fs.rename(new Path(keysDir), new Path(backupDir))
-    fs.rename(new Path(compactDir), new Path(keysDir))
-    fs.delete(new Path(backupDir), true)
-    ()
-  }
+  def compact(targetFiles: Int = 0): Unit =
+    log.rewrite(if (targetFiles > 0) targetFiles else sizedFiles())(_.distinct())
 
   /** ~128 MB/file when sizing a compacted rewrite from log bytes —
     * the distinct output is never larger than the raw log, so the
@@ -110,24 +50,16 @@ class FsKeyIndex(spark: SparkSession, val root: String) {
     */
   private val TargetFileBytes = 128L * 1024 * 1024
 
-  /** Total data bytes of the append-only log (metadata-only). */
-  private def logBytes(): Long =
-    if (!fs.exists(new Path(keysDir))) 0L
-    else fs.listStatus(new Path(keysDir))
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-      .map(_.getLen).sum
+  private def sizedFiles(): Int =
+    math.max(1L, (log.dataFiles().map(_.getLen).sum + TargetFileBytes - 1) /
+      TargetFileBytes).min(Int.MaxValue).toInt
 
   /** Data-file count of the append-only log — the read-amplification
     * signal ([[add]] appends one file per written partition per batch,
     * and every [[keys]] scan opens every log file). Metadata-only
     * (one directory listing).
     */
-  def logFileCount(): Int = {
-    recover()
-    if (!fs.exists(new Path(keysDir))) 0
-    else fs.listStatus(new Path(keysDir))
-      .count(s => s.isFile && !s.getPath.getName.startsWith("_"))
-  }
+  def logFileCount(): Int = log.dataFiles().size
 
   /** Codified compaction cadence — the key-index analog of
     * [[graft.streaming.StreamingAnn.compactIfNeeded]]: rewrite the log
@@ -146,8 +78,7 @@ class FsKeyIndex(spark: SparkSession, val root: String) {
       // count can never re-trigger on the very next check; below the
       // cap, size from log bytes so a big index still gets ~128 MB
       // files rather than one giant one
-      val sized = math.max(1L, (logBytes() + TargetFileBytes - 1) / TargetFileBytes)
-      compact(math.min(maxLogFiles.toLong, sized).toInt)
+      compact(math.min(maxLogFiles, sizedFiles()))
       val after = logFileCount()
       if (after > maxLogFiles)
         throw new IllegalStateException(
@@ -161,12 +92,4 @@ class FsKeyIndex(spark: SparkSession, val root: String) {
 
 object FsKeyIndex {
   def apply(spark: SparkSession, root: String) = new FsKeyIndex(spark, root)
-
-  /** One lock object per index root (shared across instances, so two
-    * handles on the same directory still serialize the swap window).
-    */
-  private val locks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-  private[sources] def lockFor(root: String): Object =
-    locks.getOrElseUpdate(root, new Object)
 }

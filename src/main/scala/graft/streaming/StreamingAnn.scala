@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.VecOps
 import graft.operators.Ann
+import graft.sources.Durable
 
 /** ST7: continuous IVF index maintenance — the streaming form of the
   * A3/A5 vector-index pipeline (a production vector store is
@@ -46,35 +47,27 @@ object StreamingAnn {
     * temp-file rename so a crash mid-save never leaves a torn model
     * for a replayed batch to load.
     */
-  def saveModel(path: String, cent: Seq[(Long, Seq[Long], Long)]): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    val tmp = java.nio.file.Paths.get(path + ".tmp")
-    val body = cent.map { case (c, v, n2) =>
+  def saveModel(path: String, cent: Seq[(Long, Seq[Long], Long)]): Unit =
+    Durable.write(java.nio.file.Paths.get(path), cent.map { case (c, v, n2) =>
       s"$c|${v.mkString(",")}|$n2"
-    }.mkString("\n")
-    java.nio.file.Files.writeString(tmp, body)
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+    }.mkString("\n"))
 
   /** Load a persisted model; an empty or unparseable file yields None
     * (treated as "no model" — the next non-empty batch retrains and
     * atomically replaces it) instead of poisoning every later batch
     * with a parse crash.
     */
-  def loadModel(path: String): Option[Seq[(Long, Seq[Long], Long)]] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val body = java.nio.file.Files.readString(p)
-      if (body.trim.isEmpty) None
-      else try Some(body.trim.split("\n").toSeq.map { l =>
+  def loadModel(path: String): Option[Seq[(Long, Seq[Long], Long)]] =
+    readBody(path).flatMap { body =>
+      try Some(body.split("\n").toSeq.map { l =>
         val Array(c, v, n2) = l.split("\\|")
         (c.toLong, v.split(",").toSeq.map(_.toLong), n2.toLong)
       }) catch { case _: MatchError | _: NumberFormatException => None }
     }
-  }
+
+  /** A model artifact's trimmed body; None when missing or empty. */
+  private def readBody(path: String): Option[String] =
+    Durable.read(java.nio.file.Paths.get(path)).map(_.trim).filter(_.nonEmpty)
 
   /** Milli-quantized (vec_id, v, norm2) projection of an embedding
     * frame (label-free twin of [[Ann.quantized]] — streaming batches
@@ -444,18 +437,11 @@ object StreamingAnn {
     * twin of [[saveModel]].
     */
   def saveBooks(path: String,
-      books: Seq[Seq[(Long, Seq[Long], Long)]]): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    val tmp = java.nio.file.Paths.get(path + ".tmp")
-    val body = books.zipWithIndex.flatMap { case (cent, s) =>
-      cent.map { case (c, v, n2) => s"$s|$c|${v.mkString(",")}|$n2" }
-    }.mkString("\n")
-    java.nio.file.Files.writeString(tmp, body)
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+      books: Seq[Seq[(Long, Seq[Long], Long)]]): Unit =
+    Durable.write(java.nio.file.Paths.get(path),
+      books.zipWithIndex.flatMap { case (cent, s) =>
+        cent.map { case (c, v, n2) => s"$s|$c|${v.mkString(",")}|$n2" }
+      }.mkString("\n"))
 
   /** Load persisted codebooks; empty/unparseable yields None (same
     * poison-free contract as [[loadModel]]). A file that PARSES but
@@ -467,14 +453,10 @@ object StreamingAnn {
     * — and would make [[ivfIngestPq]] skip retraining on a bad
     * artifact.
     */
-  def loadBooks(path: String): Option[Seq[Seq[(Long, Seq[Long], Long)]]] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) None
-    else {
-      val body = java.nio.file.Files.readString(p)
-      if (body.trim.isEmpty) None
-      else try {
-        val rows = body.trim.split("\n").toSeq.map { l =>
+  def loadBooks(path: String): Option[Seq[Seq[(Long, Seq[Long], Long)]]] =
+    readBody(path).flatMap { body =>
+      try {
+        val rows = body.split("\n").toSeq.map { l =>
           val Array(s, c, v, n2) = l.split("\\|")
           (s.toInt, (c.toLong, v.split(",").toSeq.map(_.toLong), n2.toLong))
         }
@@ -483,7 +465,6 @@ object StreamingAnn {
         else Some((0 until Ann.PqM).map(s => bySub(s).map(_._2)))
       } catch { case _: MatchError | _: NumberFormatException => None }
     }
-  }
 
   /** The serving codebook path for a resolved generation root — the
     * generation-local `_pqbooks` when present, else the caller's
@@ -1011,24 +992,11 @@ object StreamingAnn {
   }
 
   private[graft] def readCurrentGen(indexDir: String): Option[Long] =
-    try {
-      val s = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(indexDir, "_current")).trim
-      if (s.startsWith("gen-")) Some(s.stripPrefix("gen-").toLong) else None
-    } catch {
-      case _: java.nio.file.NoSuchFileException => None
-      case _: NumberFormatException => None
-    }
+    Durable.read(java.nio.file.Paths.get(indexDir, "_current")).map(_.trim)
+      .filter(_.startsWith("gen-")).flatMap(_.stripPrefix("gen-").toLongOption)
 
-  private def writeCurrentGen(indexDir: String, n: Long): Unit = {
-    val tmp = java.nio.file.Paths.get(indexDir,
-      s"_current.tmp-${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.writeString(tmp, s"gen-$n")
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(indexDir, "_current"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+  private def writeCurrentGen(indexDir: String, n: Long): Unit =
+    Durable.write(java.nio.file.Paths.get(indexDir, "_current"), s"gen-$n")
 
   /** Retrain the coarse quantizer on the CURRENTLY VISIBLE corpus and
     * rebuild the index under the new model as generation N+1 —
@@ -1310,10 +1278,11 @@ object StreamingAnn {
     * A crashed flat-generation compaction is SETTLED first
     * ([[recoverAt]] on the flat root — its manifest encodes a
     * rollback/roll-forward that must not be skipped by blind
-    * deletion), and crashed `_current.tmp-*` pointer writes are swept
-    * in the same pass. The remnant list stays an ALLOWLIST on
-    * purpose: an artifact this code did not write (a user file
-    * dropped in the index dir) is never deleted.
+    * deletion), and crashed writes of the flat root's files (their
+    * [[Durable.write]] temp files, `_current`'s included) are swept in
+    * the same pass. The remnant list stays an ALLOWLIST on purpose: an
+    * artifact this code did not write (a user file dropped in the
+    * index dir) is never deleted.
     */
   def vacuumGenerations(indexDir: String): Int =
     readCurrentGen(indexDir) match {
@@ -1329,8 +1298,8 @@ object StreamingAnn {
           val name = p.getFileName.toString
           val oldGen = name.startsWith("_gen-") && name != s"_gen-$cur"
           val flatRemnant = name.startsWith("cell=") ||
-            name == "_tombstones" || name == "_compaction" ||
-            name == "_layout" || name.startsWith("_current.tmp-")
+            FlatFiles(name) || Durable.tempTarget(name)
+              .exists(t => FlatFiles(t) || t == "_current")
           if (oldGen || flatRemnant) {
             deleteDir(p)
             if (oldGen) n += 1
@@ -1343,18 +1312,20 @@ object StreamingAnn {
         n
     }
 
+  /** The generation-0 files [[vacuumGenerations]] reclaims at the flat
+    * root once a generation pointer exists.
+    */
+  private val FlatFiles = Set("_tombstones", "_compaction", "_layout")
+
   /** One monitor per index dir serializing ledger read-modify-writes
-    * (the FsKeyIndex.lockFor pattern). The cross-process contract is
+    * ([[Durable.lockFor]]). The cross-process contract is
     * single-owner anyway — and every interleaving of the owner ops is
     * idempotent by construction (adds dedupe on (cell, batch), vacuum
     * re-runs tolerate gone dirs, a resurrected entry only
     * over-excludes) — but in-JVM the monitor makes a stray concurrent
     * owner a provable no-op instead of an argued one.
     */
-  private val ledgerLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-  private def ledgerLock(indexDir: String): Object =
-    ledgerLocks.getOrElseUpdate(indexDir, new Object)
+  private def ledgerLock(indexDir: String): Object = Durable.lockFor(indexDir)
 
   /** Tombstone ledger: `(stamp, cell, batch)` lines at
     * `_tombstones`, stamp = the generation counter ([[vacuumIndex]]'
@@ -1364,27 +1335,21 @@ object StreamingAnn {
     */
   private[graft] def readTombstones(
       indexDir: String): Seq[(Long, Long, Long)] =
-    try {
-      val lines = java.nio.file.Files.readAllLines(tombstonePath(indexDir))
-      (0 until lines.size).map { i =>
-        val Array(s, c, b) = lines.get(i).split(",")
-        (s.toLong, c.toLong, b.toLong)
-      }
-    } catch { case _: java.nio.file.NoSuchFileException => Seq.empty }
+    readLines(tombstonePath(indexDir)).map { l =>
+      val Array(s, c, b) = l.split(",")
+      (s.toLong, c.toLong, b.toLong)
+    }
 
   private def writeTombstones(indexDir: String,
       entries: Seq[(Long, Long, Long)]): Unit =
     if (entries.isEmpty) {
       java.nio.file.Files.deleteIfExists(tombstonePath(indexDir)); ()
-    } else {
-      val tmp = java.nio.file.Paths.get(indexDir,
-        s"_tombstones.tmp-${java.util.UUID.randomUUID()}")
-      java.nio.file.Files.writeString(tmp,
-        entries.map { case (s, c, b) => s"$s,$c,$b" }.mkString("\n"))
-      java.nio.file.Files.move(tmp, tombstonePath(indexDir),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    }
+    } else Durable.write(tombstonePath(indexDir),
+      entries.map { case (s, c, b) => s"$s,$c,$b" }.mkString("\n"))
+
+  /** A manifest's lines; empty when the file is missing. */
+  private def readLines(p: java.nio.file.Path): Seq[String] =
+    Durable.read(p).toSeq.flatMap(_.linesIterator)
 
   /** Append consumed leaves under the next generation stamp.
     * Idempotent: a crashed roll-forward re-run dedupes on (cell,
@@ -1472,25 +1437,14 @@ object StreamingAnn {
     java.nio.file.Paths.get(checkpointDir, "graft-reuse-map")
 
   private[graft] def readReuseMap(checkpointDir: String): Map[Long, Long] =
-    try {
-      java.nio.file.Files.readAllLines(reuseMapPath(checkpointDir)).asScala
-        .filter(_.nonEmpty).map { l =>
-          val Array(a, b) = l.split(","); a.toLong -> b.toLong
-        }.toMap
-    } catch { case _: java.nio.file.NoSuchFileException => Map.empty }
+    readLines(reuseMapPath(checkpointDir)).filter(_.nonEmpty).map { l =>
+      val Array(a, b) = l.split(","); a.toLong -> b.toLong
+    }.toMap
 
   private def writeReuseMap(checkpointDir: String,
-      m: Map[Long, Long]): Unit = {
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(checkpointDir))
-    val tmp = java.nio.file.Paths.get(checkpointDir,
-      s"graft-reuse-map.tmp-${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.writeString(tmp,
+      m: Map[Long, Long]): Unit =
+    Durable.write(reuseMapPath(checkpointDir),
       m.toSeq.sorted.map { case (a, b) => s"$a,$b" }.mkString("\n"))
-    java.nio.file.Files.move(tmp, reuseMapPath(checkpointDir),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
 
   private def tombstonePath(indexDir: String) =
     java.nio.file.Paths.get(indexDir, "_tombstones")
@@ -1510,16 +1464,15 @@ object StreamingAnn {
     * [[StreamingCuration]]).
     */
   def readLayout(indexDir: String): Option[(String, Int, Int, String)] =
-    try {
-      val lines = java.nio.file.Files.readAllLines(layoutPath(indexDir))
-      val m = lines.asScala.map(_.split("=", 2))
+    Durable.read(layoutPath(indexDir)).flatMap { body =>
+      val m = body.linesIterator.map(_.split("=", 2))
         .collect { case Array(k, v) => k -> v }.toMap
-      Some((m("layout"), m("kcells").toInt, m("dims").toInt,
+      try Some((m("layout"), m("kcells").toInt, m("dims").toInt,
         m.getOrElse("rule", "")))
-    } catch {
-      case _: java.nio.file.NoSuchFileException => None
-      case _: NoSuchElementException => None
-      case _: NumberFormatException => None
+      catch {
+        case _: NoSuchElementException => None
+        case _: NumberFormatException => None
+      }
     }
 
   /** Explicitly stamp an index dir's layout (the legacy-dir migration
@@ -1541,14 +1494,8 @@ object StreamingAnn {
       // explicit act of asserting the cells really follow the
       // layout's rule
     }
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(indexDir))
-    val tmp = java.nio.file.Paths.get(indexDir,
-      s"_layout.tmp-${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.writeString(tmp,
+    Durable.write(layoutPath(indexDir),
       s"layout=$layout\nkcells=$kCells\ndims=$dims\nrule=${ruleFor(layout)}")
-    java.nio.file.Files.move(tmp, layoutPath(indexDir),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
   }
 
   /** Each layout's leaf payload columns, written next to `vec_id`, the
@@ -1658,19 +1605,15 @@ object StreamingAnn {
     * torn).
     */
   private[graft] def readManifest(
-      indexDir: String): Option[(String, Long, Seq[(Long, Long)])] = {
-    val p = manifestPath(indexDir)
-    try {
-      val lines = java.nio.file.Files.readAllLines(p)
-      val consumed = (2 until lines.size).map { i =>
-        val Array(c, b) = lines.get(i).split(",")
+      indexDir: String): Option[(String, Long, Seq[(Long, Long)])] =
+    Durable.read(manifestPath(indexDir)).map { body =>
+      val lines = body.linesIterator.toSeq
+      val consumed = lines.drop(2).map { l =>
+        val Array(c, b) = l.split(",")
         (c.toLong, b.toLong)
       }
-      Some((lines.get(0), lines.get(1).toLong, consumed.toSeq))
-    } catch {
-      case _: java.nio.file.NoSuchFileException => None
+      (lines(0), lines(1).toLong, consumed)
     }
-  }
 
   /** Operational stats of an on-disk index (any layout): per cell —
     * leaf count (the compaction-cadence signal: ST7's one scale defect
@@ -1735,15 +1678,9 @@ object StreamingAnn {
     java.nio.file.Paths.get(indexDir, "_compaction")
 
   private def writeManifest(indexDir: String, state: String, outId: Long,
-      consumed: Seq[(Long, Long)]): Unit = {
-    val tmp = java.nio.file.Paths.get(indexDir,
-      s"_compaction.tmp-${java.util.UUID.randomUUID()}")
-    val body = (Seq(state, outId.toString) ++
-      consumed.map { case (c, b) => s"$c,$b" }).mkString("\n")
-    java.nio.file.Files.writeString(tmp, body)
-    java.nio.file.Files.move(tmp, manifestPath(indexDir),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+      consumed: Seq[(Long, Long)]): Unit =
+    Durable.write(manifestPath(indexDir), (Seq(state, outId.toString) ++
+      consumed.map { case (c, b) => s"$c,$b" }).mkString("\n"))
 
   private def deleteDir(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {

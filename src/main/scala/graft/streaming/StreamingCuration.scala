@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.Portable._
 import graft.operators.Curation
-import graft.sources.FsKeyIndex
+import graft.sources.{Durable, FsKeyIndex}
 
 /** ST6: continuous corpus ingestion with durable cross-batch dedup —
   * the streaming form of [[Curation.incrementalDedupIndexed]]. Each
@@ -173,7 +173,7 @@ object StreamingCuration {
       graft.core.Validation.validate("near-dup-ingest",
         graft.core.Validation.knob("verifyMinJaccardBp", bp,
           minV = 1L, maxV = 10000L)))
-    ensureGeometry(index.root, bands, rows)
+    ensureGeometry(index, bands, rows)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -409,64 +409,51 @@ object StreamingCuration {
     * once, explicitly, via [[stampGeometry]] with their ORIGINAL
     * geometry.
     */
-  private[streaming] def ensureGeometry(indexRoot: String, bands: Int,
-      rows: Int): Unit = {
-    val expect = s"bands=$bands rows=$rows"
-    val p = java.nio.file.Paths.get(indexRoot, "geometry")
-    if (java.nio.file.Files.exists(p)) {
-      val body = java.nio.file.Files.readString(p).trim
-      if (body != expect)
+  private[streaming] def ensureGeometry(index: FsKeyIndex, bands: Int,
+      rows: Int): Unit =
+    checkOrStamp(index.root, bands, rows,
+      (body, expect) => s"band-key index at ${index.root} was built with " +
+        s"'$body'; refusing to probe it with '$expect' — band keys from " +
+        "different geometries are incomparable, and a mismatched probe " +
+        "would silently admit every duplicate") { expect =>
+      // the index recovers a crashed compaction before it counts, so
+      // a key log mid-swap still counts as keys
+      if (index.logFileCount() > 0)
         throw new IllegalStateException(
-          s"band-key index at $indexRoot was built with '$body'; refusing " +
-            s"to probe it with '$expect' — band keys from different " +
-            "geometries are incomparable, and a mismatched probe would " +
-            "silently admit every duplicate")
-    } else if (hasKeys(indexRoot))
-      throw new IllegalStateException(
-        s"band-key index at $indexRoot holds keys but no geometry " +
-          s"manifest (pre-manifest legacy index); refusing to assume " +
-          s"'$expect' — probing legacy keys under a guessed geometry " +
-          "yields zero collisions and silently admits every duplicate. " +
-          "Stamp it once with StreamingCuration.stampGeometry(root, " +
-          "bands, rows) using the geometry it was BUILT with.")
-    else writeGeometry(indexRoot, expect)
-
-  }
+          s"band-key index at ${index.root} holds keys but no geometry " +
+            s"manifest (pre-manifest legacy index); refusing to assume " +
+            s"'$expect' — probing legacy keys under a guessed geometry " +
+            "yields zero collisions and silently admits every duplicate. " +
+            "Stamp it once with StreamingCuration.stampGeometry(root, " +
+            "bands, rows) using the geometry it was BUILT with.")
+    }
 
   /** One-time explicit geometry stamp for a pre-manifest legacy index
     * (see [[ensureGeometry]]). Refuses to overwrite a conflicting
     * existing manifest — re-stamping with the same geometry is a no-op.
     */
-  def stampGeometry(indexRoot: String, bands: Int, rows: Int): Unit = {
+  def stampGeometry(indexRoot: String, bands: Int, rows: Int): Unit =
+    checkOrStamp(indexRoot, bands, rows,
+      (body, expect) => s"band-key index at $indexRoot is already stamped " +
+        s"'$body'; refusing to re-stamp it '$expect' — geometry is " +
+        "immutable for the life of the index (rebuild to change it)")(_ => ())
+
+  /** The shared read-compare-write of the `geometry` manifest: a
+    * present one must read `bands=B rows=R` (else `conflict(body,
+    * expected)` is thrown); an absent one is written once `beforeStamp`
+    * has accepted the stamp.
+    */
+  private def checkOrStamp(indexRoot: String, bands: Int, rows: Int,
+      conflict: (String, String) => String)(beforeStamp: String => Unit): Unit = {
     val expect = s"bands=$bands rows=$rows"
     val p = java.nio.file.Paths.get(indexRoot, "geometry")
-    if (java.nio.file.Files.exists(p)) {
-      val body = java.nio.file.Files.readString(p).trim
-      if (body != expect)
-        throw new IllegalStateException(
-          s"band-key index at $indexRoot is already stamped '$body'; " +
-            s"refusing to re-stamp it '$expect' — geometry is immutable " +
-            "for the life of the index (rebuild to change it)")
-    } else writeGeometry(indexRoot, expect)
-  }
-
-  /** Does the index root hold (or recoverably hold) a key log? Covers
-    * the mid-compact states where `keys/` is momentarily renamed aside
-    * ([[graft.sources.FsKeyIndex.compact]]'s swap window / crash
-    * remnants).
-    */
-  private def hasKeys(indexRoot: String): Boolean =
-    Seq("keys", "keys_compact", "keys_old").exists { d =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(indexRoot, d))
+    Durable.read(p).map(_.trim) match {
+      case Some(body) =>
+        if (body != expect)
+          throw new IllegalStateException(conflict(body, expect))
+      case None =>
+        beforeStamp(expect)
+        Durable.write(p, expect)
     }
-
-  private def writeGeometry(indexRoot: String, body: String): Unit = {
-    val p = java.nio.file.Paths.get(indexRoot, "geometry")
-    java.nio.file.Files.createDirectories(p.getParent)
-    val tmp = java.nio.file.Paths.get(indexRoot,
-      s"geometry.tmp-${java.util.UUID.randomUUID()}")
-    java.nio.file.Files.writeString(tmp, body)
-    java.nio.file.Files.move(tmp, p,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+
 import graft.sources.FsCheckpointStore
 
 class FsCheckpointStoreSpec extends SparkSuite {
@@ -46,5 +48,26 @@ class FsCheckpointStoreSpec extends SparkSuite {
     // commits after compaction still supersede
     store.commit(Seq((1, 99L)).toDF("part_id", "ckpt_offset"))
     assert(store.latestMap() === Map(0 -> 50L, 1 -> 99L))
+  }
+
+  test("a crash between compaction's two renames is recovered, not an empty store") {
+    import spark.implicits._
+    val root = tmpDir("ck-crash")
+    val store = FsCheckpointStore(spark, root)
+    store.commit(Seq((0, 4L), (1, 9L)).toDF("part_id", "ckpt_offset"))
+    store.commit(Seq((0, 14L)).toDF("part_id", "ckpt_offset"))
+    val before = store.latestMap()
+    assert(before === Map(0 -> 14L, 1 -> 9L))
+    // simulate the worst window of compactLog(): the compacted copy is
+    // written and commits/ is gone, but the promote rename never ran
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    store.latest().write.parquet(s"$root/commits_compact")
+    assert(fs.delete(new Path(s"$root/commits"), true))
+    // a fresh open reads the checkpoints from before the crash
+    val reopened = FsCheckpointStore(spark, root)
+    assert(reopened.latestMap() === before)
+    // and a commit made after recovery still supersedes them
+    reopened.commit(Seq((1, 99L)).toDF("part_id", "ckpt_offset"))
+    assert(reopened.latestMap() === Map(0 -> 14L, 1 -> 99L))
   }
 }

@@ -336,4 +336,22 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     assert(snap(StreamingAnn.queryIndex(spark, s"$root/index",
       s"$root/model.txt", queries, k = 3, probes = 4)).nonEmpty)
   }
+
+  test("vacuumGenerations sweeps crashed temp files at the flat root, never a user file") {
+    val index = java.nio.file.Paths.get(tmpDir("st-ann-vacuum-tmp"), "index")
+    java.nio.file.Files.createDirectories(index.resolve("_gen-1"))
+    def plant(name: String, body: String) =
+      java.nio.file.Files.writeString(index.resolve(name), body)
+    plant("_current", "gen-1")
+    plant("_layout.tmp-x", "layout=full")
+    plant("_tombstones.tmp-y", "0,1,2")
+    plant("notes.txt", "kept")
+    StreamingAnn.vacuumGenerations(index.toString)
+    def present(name: String) = java.nio.file.Files.exists(index.resolve(name))
+    assert(!present("_layout.tmp-x"))
+    assert(!present("_tombstones.tmp-y"))
+    assert(present("notes.txt"), "vacuum deleted a file the index did not write")
+    assert(present("_current") && present("_gen-1"))
+    assert(StreamingAnn.readCurrentGen(index.toString) === Some(1L))
+  }
 }
