@@ -483,28 +483,16 @@ object TextAnalysis {
     * source, elected by content-independent hash order — the
     * per-domain cap every web-scale corpus applies, deterministic
     * under reshuffling and incremental growth (a doc's rank can only
-    * move if new docs hash ahead of it). One window, no data movement
-    * beyond the source shuffle.
+    * move if new docs hash ahead of it). A [[graft.operators.TwoLevel.topK]]:
+    * a hot domain is never a one-task funnel at 100 TB.
     */
   def quotaSample(docs: DataFrame, quota: Int = 5): DataFrame = {
     graft.core.Validation.validate("quota-sample",
       graft.core.Validation.knob("quota", quota, minV = 1L))
-    // pre-reduce per (partition, source) before the global window: a
-    // row in the global top-`quota` has local rank ≤ quota in ANY
-    // partitioning (deleting rows never raises a survivor's rank), so
-    // the final per-source window sees ≤ #partitions × quota rows —
-    // a hot domain is never a one-task funnel at 100 TB
     val keyed = docs.select(col("source"), col("doc_id"),
       hexHash60(col("doc_id").cast("string")).as("hash_rank"))
-    val localW = Window.partitionBy(spark_partition_id(), col("source"))
-      .orderBy(col("hash_rank"), col("doc_id"))
-    val w = Window.partitionBy("source")
-      .orderBy(col("hash_rank"), col("doc_id"))
-    keyed
-      .withColumn("local_rnk", row_number().over(localW))
-      .filter(col("local_rnk") <= quota)
-      .withColumn("rnk", row_number().over(w).cast("int"))
-      .filter(col("rnk") <= quota)
+    graft.operators.TwoLevel.topK(keyed, Seq("source"),
+        Seq(col("hash_rank"), col("doc_id")), quota, "rnk")
       .select("source", "rnk", "doc_id")
   }
 

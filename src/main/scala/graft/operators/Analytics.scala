@@ -86,11 +86,8 @@ object Analytics {
       .limit(20)
   }
 
-  /** Top-3 parts by revenue within each brand. The global window runs
-    * over a PRE-REDUCED candidate set: each task first keeps its own
-    * per-(partition, brand) rank() ≤ 3 rows — sound because deleting
-    * rows can only lower a survivor's global rank, so every global
-    * top-3 row has local rank ≤ 3 — and the final window sees at most
+  /** Top-3 parts by revenue within each brand, ties sharing a rank:
+    * a [[TwoLevel.topK]], so the final window sees at most
     * #partitions × 3 rows per brand instead of ALL of a brand's parts
     * (at 100 TB a popular brand is otherwise a one-task funnel).
     */
@@ -101,15 +98,8 @@ object Analytics {
       .groupBy("p_brand", "p_partkey")
       .agg(cents(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))))
         .as("revenue_cents"))
-    val localW = Window.partitionBy(spark_partition_id(), col("p_brand"))
-      .orderBy(col("revenue_cents").desc, col("p_partkey"))
-    val candidates = rev
-      .withColumn("local_rank", rank().over(localW))
-      .filter(col("local_rank") <= 3)
-    val w = Window.partitionBy("p_brand")
-      .orderBy(col("revenue_cents").desc, col("p_partkey"))
-    candidates.withColumn("brand_rank", rank().over(w))
-      .filter(col("brand_rank") <= 3)
+    TwoLevel.topK(rev, Seq("p_brand"),
+        Seq(col("revenue_cents").desc, col("p_partkey")), 3, "brand_rank", rank())
       .select("p_brand", "brand_rank", "p_partkey", "revenue_cents")
       .orderBy("p_brand", "brand_rank")
   }
@@ -253,13 +243,10 @@ object Analytics {
     * buffers a whole group's values on one reducer, the classic 100 TB
     * funnel when a group dominates. This plan never does:
     *
-    *  1. range-repartition rows by (group, value) — every group spans
-    *     MANY ordered partitions, sized by Spark's range sampler;
-    *  2. partition-local ranks via a (pid, group)-keyed window (each
-    *     slice is at most one partition's worth of one group);
-    *  3. global rank = local rank + a BROADCAST per-(pid, group) offset
-    *     table (#partitions × #groups rows — metadata, not data);
-    *  4. keep ONLY the two rows straddling each target position and
+    *  1. the global rank within the group is a [[TwoLevel.rank]] over
+    *     range blocks ([[TwoLevel.Ranges]]: every group spans MANY
+    *     ordered partitions, sized by Spark's range sampler);
+    *  2. keep ONLY the two rows straddling each target position and
     *     interpolate in FIXED POINT: `pos` is held as integer TENTHS
     *     (`pos_tenths = pt·(n−1)` for pt ∈ {5, 9}), so `lo`, the
     *     tenths-remainder `m`, and the interpolated milli-cents
@@ -274,27 +261,16 @@ object Analytics {
     */
   def valueQuantiles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
     val ev = Tables.events(s, dir).select(col("event_type"), col("value"))
-    val ranged = ev.repartitionByRange(parts, col("event_type"), col("value"))
-      .withColumn("pid", spark_partition_id())
-    val local = ranged.withColumn("lr",
-      row_number().over(Window.partitionBy("pid", "event_type").orderBy("value")))
-    val counts = local.groupBy("pid", "event_type").agg(count(lit(1)).as("n"))
-    val offsets = counts
-      .withColumn("prior", coalesce(
-        sum("n").over(Window.partitionBy("event_type").orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "event_type", "prior")
-    val totals = counts.groupBy("event_type").agg(sum("n").as("n_grp"))
-    val targets = totals
+    val ranked = TwoLevel.rank(ev, Seq("event_type"), Seq(col("value")),
+      TwoLevel.Ranges, "rn")
+    val targets = ranked.totals("n_grp")
       .crossJoin(Seq(("p50", 5L), ("p90", 9L)).toDF("q", "pt"))
       .withColumn("pos_t", col("pt") * (col("n_grp") - 1))
       .select(col("event_type"), col("q"),
         expr("pos_t div 10").as("lo"), (col("pos_t") % 10).as("m"))
-    val interp = local
-      .join(broadcast(offsets), Seq("pid", "event_type"))
-      .withColumn("gr", col("lr") + col("prior") - 1)
+    val interp = ranked.rows
+      .withColumn("gr", col("rn") - 1)
       .join(broadcast(targets), Seq("event_type"))
       .filter(col("gr") === col("lo") || col("gr") === col("lo") + 1)
       .groupBy("event_type", "q", "lo", "m")

@@ -5,10 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Portable._
 
-/** Distributed BPE merge-table TRAINING — the corpus-scale twin of
-  * `graft.tools.TrainBpe` (which collects the whole corpus to the
-  * driver: fine for regenerating the embedded table, not a 100 TB
-  * shape). Training is classic pair-frequency BPE (Sennrich et al.
+/** Distributed BPE merge-table TRAINING — `graft.tools.TrainBpe`
+  * runs it to regenerate the embedded table. Training is classic pair-frequency BPE (Sennrich et al.
   * 2016): count adjacent symbol pairs over the word multiset, merge
   * the most frequent, repeat. Here the WORD TABLE stays distributed —
   * the corpus-scale pass is one token-count groupBy, and each merge
@@ -29,7 +27,7 @@ import graft.functions.Portable._
   * [a-z0-9] alphabet), so the argmax chain is verified cross-engine
   * end to end.
   *
-  * Training units match TrainBpe exactly: the corpus's normalized-text
+  * Training units: the corpus's normalized-text
   * words plus the doc_id decimal strings (the numerals supply the
   * combinatorial diversity the 31-word synthetic prose lacks —
   * see BpeMergesData). Ties on pair frequency break by MAX pair

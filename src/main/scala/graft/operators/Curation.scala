@@ -18,24 +18,6 @@ import graft.functions.Portable._
   */
 object Curation {
 
-  /** Pack documents into fixed-token-budget training sequences,
-    * GPT-style concat-then-chunk: order documents deterministically,
-    * run a cumulative token count, and assign each document to the
-    * sequence its first token lands in (`(cum - n_tok) div budget`).
-    *
-    * The per-shard ordered cumulative sum is computed as a two-level
-    * parallel prefix sum, so no task ever sorts a whole shard:
-    * the leading sort key `ord_h` is a uniform 60-bit hash, and its
-    * top `blockBits` bits split each shard into 2^blockBits ordered
-    * blocks (block id is a monotone function of the sort key — a pure
-    * projection, no range-sampling pass). Level 1 is a windowed cumsum
-    * within each (shard, block) slice — `shards·2^blockBits` concurrent
-    * groups; level 2 stitches blocks with a broadcast of per-block
-    * totals (one tiny aggregate, `shards·2^blockBits` rows). At 100 TB,
-    * raise `blockBits` so a block fits a task — the plan shape is
-    * unchanged. Output is the per-sequence manifest (doc count +
-    * token count), identical to a single global per-shard scan.
-    */
   /** Default token budget rule: THE shared whitespace rule
     * ([[graft.functions.TextAnalysis.wsTokens]] — one definition for
     * every budget consumer). Pass
@@ -46,29 +28,21 @@ object Curation {
   private[graft] val wsTokens: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
     graft.functions.TextAnalysis.wsTokens
 
+  /** Pack documents into fixed-token-budget training sequences,
+    * GPT-style concat-then-chunk: order documents deterministically,
+    * run a cumulative token count, and assign each document to the
+    * sequence its first token lands in (`(cum - n_tok) div budget`).
+    *
+    * The per-shard running token count is a [[TwoLevel.rank]] running
+    * sum keyed by the uniform 60-bit hash `ord_h`, so no task ever
+    * sorts a whole shard: at 100 TB, raise `blockBits` so a block fits
+    * a task. Output is the per-sequence manifest (doc count + token
+    * count), identical to a single global per-shard scan.
+    */
   def packSequences(docs: DataFrame, budget: Int = 256,
       shards: Int = 8, blockBits: Int = 5,
-      tokens: org.apache.spark.sql.Column => org.apache.spark.sql.Column = wsTokens): DataFrame = {
-    graft.core.Configs.Packing(budget, shards, blockBits).validated
-    val d = docs.select(col("doc_id"),
-      tokens(col("text")).as("n_tok"),
-      (hexHash20(col("doc_id").cast("string")) % shards).as("shard"),
-      hexHash60(normText(col("text"))).as("ord_h"))
-      .withColumn("blk", shiftright(col("ord_h"), 60 - blockBits))
-    val local = Window.partitionBy("shard", "blk").orderBy("ord_h", "doc_id")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val offsets = d.groupBy("shard", "blk").agg(sum("n_tok").as("blk_tot"))
-      .withColumn("offset", coalesce(
-        sum("blk_tot").over(Window.partitionBy("shard").orderBy("blk")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("shard", "blk", "offset")
-    d.withColumn("local_cum", sum("n_tok").over(local))
-      .join(broadcast(offsets), Seq("shard", "blk"))
-      .withColumn("cum", col("local_cum") + col("offset"))
-      .withColumn("seq_id", expr(s"(cum - n_tok) div ${budget.toLong}"))
-      .groupBy("shard", "seq_id")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"))
-  }
+      tokens: org.apache.spark.sql.Column => org.apache.spark.sql.Column = wsTokens): DataFrame =
+    pack(docs.withColumn("n_tok", tokens(col("text"))), budget, shards, blockBits)
 
   /** [[packSequences]] with the token-id PAYLOAD attached — the
     * trainer-consumable shard manifest: per (shard, seq_id), doc and
@@ -78,43 +52,39 @@ object Curation {
     * BPE expression whose counts drive the budget, so
     * `size(ids) == n_tokens` on every sequence by construction.
     *
-    * Scale: identical two-level prefix-sum plan as [[packSequences]]
-    * (the ids ride the same rows — no extra shuffle); the per-
-    * sequence assembly sorts only the handful of docs inside one
-    * budget window (`array_sort` over a collect_list of
-    * budget/avg-doc-tokens structs), never a shard. At 100 TB the
-    * sequence is the natural output granule — each row IS one
-    * training sequence.
+    * Scale: the same pack plan as [[packSequences]] (the ids ride the
+    * same rows — no extra shuffle); the per-sequence assembly sorts
+    * only the handful of docs inside one budget window (`array_sort`
+    * over a collect_list of budget/avg-doc-tokens structs), never a
+    * shard. At 100 TB the sequence is the natural output granule —
+    * each row IS one training sequence.
     */
   def packSequencesIds(docs: DataFrame, budget: Int = 256,
       shards: Int = 8, blockBits: Int = 5,
-      table: graft.functions.BpeTable = graft.functions.Bpe.default): DataFrame = {
+      table: graft.functions.BpeTable = graft.functions.Bpe.default): DataFrame =
+    pack(docs.withColumn("ids", graft.functions.Bpe.tokenIds(normText(col("text")), table))
+        .withColumn("n_tok", size(col("ids")).cast("long")), budget, shards, blockBits,
+      // deterministic pack order inside the sequence: struct sort on
+      // (ord_h, doc_id) — collect_list order is not guaranteed
+      flatten(transform(
+        array_sort(collect_list(struct(col("ord_h"), col("doc_id"), col("ids")))),
+        x => x.getField("ids"))).as("ids"))
+
+  /** The pack plan behind [[packSequences]] and [[packSequencesIds]]:
+    * `tok` carries each document's `n_tok`; `payload` is extra
+    * per-sequence aggregates.
+    */
+  private def pack(tok: DataFrame, budget: Int, shards: Int, blockBits: Int,
+      payload: org.apache.spark.sql.Column*): DataFrame = {
     graft.core.Configs.Packing(budget, shards, blockBits).validated
-    val d = docs.select(col("doc_id"),
-      graft.functions.Bpe.tokenIds(normText(col("text")), table).as("ids"),
-      (hexHash20(col("doc_id").cast("string")) % shards).as("shard"),
-      hexHash60(normText(col("text"))).as("ord_h"))
-      .withColumn("n_tok", size(col("ids")).cast("long"))
-      .withColumn("blk", shiftright(col("ord_h"), 60 - blockBits))
-    val local = Window.partitionBy("shard", "blk").orderBy("ord_h", "doc_id")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val offsets = d.groupBy("shard", "blk").agg(sum("n_tok").as("blk_tot"))
-      .withColumn("offset", coalesce(
-        sum("blk_tot").over(Window.partitionBy("shard").orderBy("blk")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("shard", "blk", "offset")
-    d.withColumn("local_cum", sum("n_tok").over(local))
-      .join(broadcast(offsets), Seq("shard", "blk"))
-      .withColumn("cum", col("local_cum") + col("offset"))
+    val d = tok
+      .withColumn("shard", hexHash20(col("doc_id").cast("string")) % shards)
+      .withColumn("ord_h", hexHash60(normText(col("text"))))
+    TwoLevel.rank(d, Seq("shard"), Seq(col("ord_h"), col("doc_id")),
+        TwoLevel.HashBits(blockBits), "cum", Some(col("n_tok"))).rows
       .withColumn("seq_id", expr(s"(cum - n_tok) div ${budget.toLong}"))
       .groupBy("shard", "seq_id")
-      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens"),
-        // deterministic pack order inside the sequence: struct sort on
-        // (ord_h, doc_id) — collect_list order is not guaranteed
-        flatten(transform(
-          array_sort(collect_list(struct(col("ord_h"), col("doc_id"),
-            col("ids")))),
-          x => x.getField("ids"))).as("ids"))
+      .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("n_tokens") +: payload: _*)
   }
 
   /** Packing-efficiency audit — the quality report a pipeline reads
@@ -155,10 +125,8 @@ object Curation {
     * (seed, doc_id) alone across retries and engines.
     *
     * Scale: the quality score is a per-doc projection; the within-
-    * phase ordinal uses the same two-level prefix-sum as
-    * [[globalShuffle]] (hash's top `blockBits` bits → ordered blocks,
-    * window-local ranks, broadcast block offsets), so no phase ever
-    * funnels through a single reducer — a plain
+    * phase ordinal is a [[TwoLevel.rank]] keyed by the seeded hash, so
+    * no phase ever funnels through a single reducer — a plain
     * `row_number() over (partition by phase)` would put the whole
     * phase-0 corpus on one task at 100 TB.
     */
@@ -173,17 +141,9 @@ object Curation {
     val d = q.withColumn("phase", phase.cast("int"))
       .withColumn("ck",
         hexHash60(concat(lit(seed + ":"), col("doc_id").cast("string"))))
-      .withColumn("blk", shiftright(col("ck"), 60 - blockBits))
-    val local = Window.partitionBy("phase", "blk").orderBy("ck", "doc_id")
-    val offsets = d.groupBy("phase", "blk").agg(count(lit(1)).as("blk_n"))
-      .withColumn("offset", coalesce(
-        sum("blk_n").over(Window.partitionBy("phase").orderBy("blk")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("phase", "blk", "offset")
-    d.withColumn("local_rn", row_number().over(local).cast("long"))
-      .join(broadcast(offsets), Seq("phase", "blk"))
-      .select(col("doc_id"), col("score"), col("phase"),
-        (col("local_rn") + col("offset")).as("phase_ord"))
+    TwoLevel.rank(d, Seq("phase"), Seq(col("ck"), col("doc_id")),
+        TwoLevel.HashBits(blockBits), "phase_ord").rows
+      .select("doc_id", "score", "phase", "phase_ord")
   }
 
   /** Default target language mixture, in basis points of the budget. */
@@ -231,12 +191,9 @@ object Curation {
     * (content-hash, doc_id) order, so the elected set is deterministic
     * and stable under reshuffling.
     *
-    * The per-language rank is a two-level prefix sum (same shape as
-    * [[packSequences]]): the hash's top `blockBits` bits split each
-    * language into ordered blocks, ranks are window-local within
-    * (lang, block), and block offsets come from one tiny broadcast
-    * aggregate — so no language ever funnels through a single reducer
-    * (a plain `row_number() over (partition by lang)` would put all of
+    * The per-language rank is a [[TwoLevel.rank]] keyed by the content
+    * hash, so no language ever funnels through a single reducer (a
+    * plain `row_number() over (partition by lang)` would put all of
     * `en` on one task at 100 TB).
     */
   def mixtureResampleExact(docs: DataFrame,
@@ -254,18 +211,10 @@ object Curation {
       .select("lang", "n_lang", "target_n")
     val keyed = docs.select(col("lang"), col("doc_id"),
         hexHash60(normText(col("text"))).as("h"))
-      .withColumn("blk", shiftright(col("h"), 60 - blockBits))
-    val offsets = keyed.groupBy("lang", "blk").agg(count(lit(1)).as("n"))
-      .withColumn("prior", coalesce(
-        sum("n").over(Window.partitionBy("lang").orderBy("blk")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("lang", "blk", "prior")
-    val localW = Window.partitionBy("lang", "blk").orderBy("h", "doc_id")
-    val kept = keyed
-      .withColumn("lr", row_number().over(localW))
-      .join(broadcast(offsets), Seq("lang", "blk"))
+    val kept = TwoLevel.rank(keyed, Seq("lang"), Seq(col("h"), col("doc_id")),
+        TwoLevel.HashBits(blockBits), "rn").rows
       .join(broadcast(tgt.select("lang", "target_n")), Seq("lang"))
-      .filter(col("lr") + col("prior") <= col("target_n"))
+      .filter(col("rn") <= col("target_n"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_kept"), sum("doc_id").as("kept_id_sum"))
     tgt.join(kept, Seq("lang"), "left")
@@ -452,13 +401,10 @@ object Curation {
     * shard = key mod nShards; pos = the document's ordinal within its
     * shard under (key, doc_id) order.
     *
-    * Scale: the per-shard ordinal is the same two-level prefix sum as
-    * [[packSequences]] — the top `blockBits` bits of the uniform key
-    * split each shard into ordered blocks, level 1 is a windowed
-    * row-count within (shard, block), level 2 stitches blocks with a
-    * broadcast of per-block counts. No task ever sorts a whole shard,
-    * so a shard can exceed task memory by 2^blockBits and the plan
-    * shape is unchanged — raise blockBits at 100 TB.
+    * Scale: the per-shard ordinal is a [[TwoLevel.rank]] keyed by the
+    * uniform shuffle key. No task ever sorts a whole shard, so a shard
+    * can exceed task memory by 2^blockBits and the plan shape is
+    * unchanged — raise blockBits at 100 TB.
     */
   def globalShuffle(docs: DataFrame, nShards: Int = 8,
       seed: String = "shuf1", blockBits: Int = 5): DataFrame = {
@@ -471,18 +417,9 @@ object Curation {
         hexHash60(concat(lit(seed + ":"), col("doc_id").cast("string")))
           .as("shuffle_key"))
       .withColumn("shard", pmod(col("shuffle_key"), lit(nShards.toLong)))
-      .withColumn("blk", shiftright(col("shuffle_key"), 60 - blockBits))
-    val local = Window.partitionBy("shard", "blk")
-      .orderBy("shuffle_key", "doc_id")
-    val offsets = d.groupBy("shard", "blk").agg(count(lit(1)).as("blk_n"))
-      .withColumn("offset", coalesce(
-        sum("blk_n").over(Window.partitionBy("shard").orderBy("blk")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("shard", "blk", "offset")
-    d.withColumn("local_rn", row_number().over(local).cast("long"))
-      .join(broadcast(offsets), Seq("shard", "blk"))
-      .select(col("doc_id"), col("shuffle_key"), col("shard"),
-        (col("local_rn") + col("offset")).as("pos"))
+    TwoLevel.rank(d, Seq("shard"), Seq(col("shuffle_key"), col("doc_id")),
+        TwoLevel.HashBits(blockBits), "pos").rows
+      .select("doc_id", "shuffle_key", "shard", "pos")
   }
 
   /** Corpus composition report — the dataset-card staple every data

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.functions.Portable._
 
@@ -36,40 +35,28 @@ object Sketch {
     * per-partition sketches combine associatively (here the "ALL" row
     * is exactly the merge of the per-language rows; pinned in the
     * spec). Scale: token hashes dedup via a partial-aggregating
-    * `distinct` on (grp, h); the k-th minimum per group comes from the
-    * house two-level rank (range partition → per-(pid, grp) local
-    * rank → broadcast offset table), NEVER a per-group global-sort
-    * funnel — the same skeleton as exact quantiles. The hot "ALL"
-    * group spans many range partitions; its rank work is distributed
-    * across all of them.
+    * `distinct` on (grp, h); the k-th minimum per group comes from a
+    * [[TwoLevel.rank]] over range blocks ([[TwoLevel.Ranges]]), NEVER
+    * a per-group global-sort funnel — the same plan as exact
+    * quantiles. The hot "ALL" group spans many range partitions; its
+    * rank work is distributed across all of them.
     */
   def kmvDistinctTokens(docs: DataFrame, k: Int = KmvK): DataFrame = {
     graft.core.Validation.validate("kmv",
       graft.core.Validation.knob("k", k, minV = 2L))
-    val s = docs.sparkSession
-    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
     val lh = docs.select(col("lang"),
         explode(split(normText(col("text")), " ")).as("tok"))
       .select(col("lang"), hexHash60(col("tok")).as("h"))
     val grps = lh.select(col("lang").as("grp"), col("h"))
       .unionByName(lh.select(lit("ALL").as("grp"), col("h")))
       .distinct()
-    val ranged = grps.repartitionByRange(parts, col("grp"), col("h"))
-      .withColumn("pid", spark_partition_id())
-    val local = ranged.withColumn("lr",
-      row_number().over(Window.partitionBy("pid", "grp").orderBy("h")))
-    val counts = local.groupBy("pid", "grp").agg(count(lit(1)).as("n"))
-    val offsets = counts
-      .withColumn("prior", coalesce(
-        sum("n").over(Window.partitionBy("grp").orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "grp", "prior")
-    val exact = counts.groupBy("grp").agg(sum("n").as("n_exact"))
+    val ranked = TwoLevel.rank(grps, Seq("grp"), Seq(col("h")),
+      TwoLevel.Ranges, "gr")
+    val exact = ranked.totals("n_exact")
     // (k−1)·2^60 as an exact double: k−1 ≤ 2^8 keeps the product's
     // mantissa within 53 bits, so the constant itself is lossless
     val num = (k - 1).toDouble * math.pow(2, 60)
-    local.join(broadcast(offsets), Seq("pid", "grp"))
-      .withColumn("gr", col("lr") + col("prior"))
+    ranked.rows
       .filter(col("gr") <= k)
       .groupBy("grp")
       .agg(count(lit(1)).as("k_actual"), max("h").as("h_k"))

@@ -258,7 +258,7 @@ class BpeSpec extends SparkSuite {
     val n = 40
     val out = BpeTrainer.trainMerges(docs, n).collect()
       .sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq
-    // reference: graft.tools.TrainBpe's inner loop, verbatim algorithm,
+    // reference: the classic in-memory pair-frequency loop, verbatim,
     // over the same word multiset (normText words + doc_id strings)
     val words = docs.select(col("doc_id").cast("string").as("id"),
         Portable.normText(col("text")).as("t")).collect()

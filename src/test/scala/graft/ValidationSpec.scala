@@ -194,6 +194,27 @@ class ValidationSpec extends SparkSuite {
     }
   }
 
+  test("every two-level rank caller rejects blockBits outside 0..60") {
+    // shiftright masks its distance: -4 would give one block per row (a
+    // corpus-sized offsets broadcast), 61 one block for everything
+    val docs = Tables.documents(spark, sf)
+    val low = intercept[GraftConfigException] {
+      Curation.curriculumSchedule(docs, blockBits = -4)
+    }
+    assert(violationsOf(low) === Seq("blockBits: is less than 0"))
+    val high = intercept[GraftConfigException] {
+      Curation.mixtureResampleExact(docs, blockBits = 61)
+    }
+    assert(violationsOf(high) === Seq("blockBits: is greater than 60"))
+    // the callers with their own knob bundle keep their config's name
+    assert(intercept[GraftConfigException] {
+      Curation.packSequences(docs, blockBits = 61)
+    }.config === "packing")
+    assert(intercept[GraftConfigException] {
+      Curation.globalShuffle(docs, blockBits = -4)
+    }.config === "sharding")
+  }
+
   test("streaming-index maintenance knobs speak the same language") {
     import graft.streaming.StreamingAnn
     val dir = tmpDir("validation-idx")
