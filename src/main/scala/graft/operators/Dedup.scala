@@ -173,6 +173,18 @@ object Dedup {
     })
   }
 
+  /** The PPJoin prefix at threshold `bp` (basis points): each doc's
+    * first |x| − ⌈t·|x|⌉ + 1 shingles in the rarest-first order of
+    * [[rankedShingles]], with t the round-inclusive effective threshold
+    * (2·bp − 1)/20000 (see [[ngramJaccard]]). Any pair reaching `bp`
+    * under Jaccard, and any source reaching it under containment,
+    * shares a shingle of this prefix. A threshold filter over the
+    * cached ranked rows, so the windows run once per corpus.
+    */
+  private[graft] def ppjoinPrefix(docs: DataFrame, bp: Long): DataFrame =
+    rankedShingles(docs).filter(col("rn") <= col("n_sh")
+      - expr(s"((${2 * bp - 1} * n_sh + 19999) div 20000)") + 1)
+
   /** Unpersist ONLY the dedup tables cached for `spark` (shingle,
     * ranked, pair, containment, cluster-label and signature memos) —
     * e.g. between dedup phases of a live session. For end-of-session
@@ -239,28 +251,16 @@ object Dedup {
     // documented fail-CLOSED contract promises a throw.
     pairCache.get(docs, s"ppjoin cap=$maxCandidatePairs bp=$minJaccardBp")({
       val sh = cappedShingleHashes(docs)
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      // prefix = a threshold filter over the SHARED ranked table
-      // ([[rankedShingles]], cached per corpus): the window pipeline
-      // no longer runs per (query, threshold)
-      val prefix = rankedShingles(docs)
-        .filter(col("rn") <= col("n_sh")
-          - expr(s"((${2 * minJaccardBp - 1} * n_sh + 19999) div 20000)") + 1)
-        .select("doc_id", "h", "n_sh")
-      // Fail-fast guard on the PREFIX fanout, in decimal (LongType
-      // would wrap silently under non-ANSI semantics, and the guard
-      // must fail CLOSED). Past the bound the candidate volume is
-      // genuinely pair-graph-sized-quadratic (e.g. a corpus of
-      // near-identical docs) and minhashLsh's banding is the right
-      // tool.
-      val est = prefix.groupBy("h").agg(count(lit(1)).as("pdf"))
-        .agg(coalesce(sum(col("pdf").cast("decimal(38,0)") * col("pdf")),
-          lit(java.math.BigDecimal.ZERO)).as("p"))
-        .head.getDecimal(0)
-      require(est.compareTo(java.math.BigDecimal.valueOf(maxCandidatePairs)) <= 0,
+      val prefix = ppjoinPrefix(docs, minJaccardBp).select("doc_id", "h", "n_sh")
+      // past the bound the candidate volume is genuinely
+      // pair-graph-sized-quadratic (e.g. a corpus of near-identical
+      // docs) and minhashLsh's banding is the right tool
+      requireFanout(prefix.groupBy("h").agg(count(lit(1)).as("pdf")),
+          col("pdf"), col("pdf"), maxCandidatePairs) { est =>
         s"ngramJaccard: estimated prefix-candidate fanout sum(prefix_df^2)=$est " +
           s"exceeds $maxCandidatePairs; use minhashLsh (d_minhash_lsh) — " +
-          "same pairs, bounded candidates")
+          "same pairs, bounded candidates"
+      }
       val a = prefix.as("a"); val b = prefix.as("b")
       // size filter: J ≥ t_eff forces min(|x|,|y|) ≥ t_eff·max(|x|,|y|)
       val cands = a.join(b,
@@ -269,13 +269,8 @@ object Dedup {
             && col("b.n_sh") * 20000 >= col("a.n_sh") * (2 * minJaccardBp - 1))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .distinct()
-      val inter = cands
-        .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
-        .join(sh.as("sb"), col("doc_b") === col("sb.doc_id")
-          && col("sa.h") === col("sb.h"))
-        .groupBy("doc_a", "doc_b")
-        .agg(count(lit(1)).as("inter"))
-      val result = jaccardFilter(inter, sizes, minJaccardBp).cache()
+      val result = jaccardFilter(sharedShingles(cands, sh, sh), sh, minJaccardBp)
+        .cache()
       result.count()
       result
     })
@@ -290,21 +285,18 @@ object Dedup {
   def ngramJaccardExhaustive(docs: DataFrame, minJaccardBp: Long,
       maxCandidatePairs: Long = MaxNgramCandidatePairs): DataFrame = {
     val sh = cappedShingleHashes(docs)
-    val est = sh.groupBy("h").agg(count(lit(1)).as("df"))
-      .agg(coalesce(sum(col("df").cast("decimal(38,0)") * col("df")),
-        lit(java.math.BigDecimal.ZERO)).as("p"))
-      .head.getDecimal(0)
-    require(est.compareTo(java.math.BigDecimal.valueOf(maxCandidatePairs)) <= 0,
+    requireFanout(sh.groupBy("h").agg(count(lit(1)).as("df")),
+        col("df"), col("df"), maxCandidatePairs) { est =>
       s"ngramJaccardExhaustive: estimated candidate fanout sum(df^2)=$est " +
         s"exceeds $maxCandidatePairs; use minhashLsh (d_minhash_lsh) — " +
-        "same pairs, bounded candidates")
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+        "same pairs, bounded candidates"
+    }
     val a = sh.as("a"); val b = sh.as("b")
     val inter = a.join(b,
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("inter"))
-    jaccardFilter(inter, sizes, minJaccardBp)
+    jaccardFilter(inter, sh, minJaccardBp)
   }
 
   /** Directed shingle CONTAINMENT pairs — the asymmetric complement of
@@ -333,41 +325,22 @@ object Dedup {
     // cap in the key for the same fail-CLOSED reason as [[ngramJaccard]]
     containCache.get(docs, s"cap=$maxCandidatePairs bp=$minContainBp")({
       val sh = cappedShingleHashes(docs)
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      // prefix = a threshold filter over the SHARED ranked table
-      // ([[rankedShingles]], cached per corpus — the same rows the
-      // Jaccard build filters at ITS threshold); df rides along so the
-      // fanout estimate needs no extra join
-      val prefix = rankedShingles(docs)
-        .filter(col("rn") <= col("n_sh")
-          - expr(s"((${2 * minContainBp - 1} * n_sh + 19999) div 20000)") + 1)
+      // df rides along with the prefix so the fanout estimate needs no
+      // extra join
+      val prefix = ppjoinPrefix(docs, minContainBp)
         .select(col("doc_id").as("doc_src"), col("h"), col("df"))
-      val est = prefix.groupBy("h")
-        .agg(count(lit(1)).as("pdf"), max("df").as("df"))
-        .agg(coalesce(sum(col("pdf").cast("decimal(38,0)") * col("df")),
-          lit(java.math.BigDecimal.ZERO)).as("p"))
-        .head.getDecimal(0)
-      require(est.compareTo(java.math.BigDecimal.valueOf(maxCandidatePairs)) <= 0,
+      requireFanout(prefix.groupBy("h")
+          .agg(count(lit(1)).as("pdf"), max("df").as("df")),
+          col("pdf"), col("df"), maxCandidatePairs) { est =>
         s"containmentPairs: estimated candidate fanout sum(prefix_df*df)=$est " +
           s"exceeds $maxCandidatePairs; for symmetric near-dups use " +
-          "minhashLsh (d_minhash_lsh) — bounded candidates")
+          "minhashLsh (d_minhash_lsh) — bounded candidates"
+      }
       val cands = prefix
         .join(sh.select(col("doc_id").as("doc_dst"), col("h")), Seq("h"))
         .filter(col("doc_src") =!= col("doc_dst"))
         .select("doc_src", "doc_dst").distinct()
-      val inter = cands
-        .join(sh.as("sa"), col("doc_src") === col("sa.doc_id"))
-        .join(sh.as("sb"), col("doc_dst") === col("sb.doc_id")
-          && col("sa.h") === col("sb.h"))
-        .groupBy("doc_src", "doc_dst")
-        .agg(count(lit(1)).as("inter"))
-      val result = inter
-        .join(sizes.withColumnRenamed("doc_id", "doc_src")
-          .withColumnRenamed("n_sh", "n_src"), Seq("doc_src"))
-        .withColumn("contain_bp",
-          round(col("inter") * 10000.0 / col("n_src"), 0).cast("long"))
-        .filter(col("contain_bp") >= minContainBp)
-        .select("doc_src", "doc_dst", "inter", "n_src", "contain_bp")
+      val result = containFilter(sharedShingles(cands, sh, sh), sh, minContainBp)
         .cache()
       result.count()
       result
@@ -384,26 +357,17 @@ object Dedup {
   def containmentPairsExhaustive(docs: DataFrame, minContainBp: Long,
       maxCandidatePairs: Long = MaxNgramCandidatePairs): DataFrame = {
     val sh = cappedShingleHashes(docs)
-    val est = sh.groupBy("h").agg(count(lit(1)).as("df"))
-      .agg(coalesce(sum(col("df").cast("decimal(38,0)") * col("df")),
-        lit(java.math.BigDecimal.ZERO)).as("p"))
-      .head.getDecimal(0)
-    require(est.compareTo(java.math.BigDecimal.valueOf(maxCandidatePairs)) <= 0,
+    requireFanout(sh.groupBy("h").agg(count(lit(1)).as("df")),
+        col("df"), col("df"), maxCandidatePairs) { est =>
       s"containmentPairsExhaustive: estimated candidate fanout " +
-        s"sum(df^2)=$est exceeds $maxCandidatePairs")
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+        s"sum(df^2)=$est exceeds $maxCandidatePairs"
+    }
     val inter = sh.as("a")
       .join(sh.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") =!= col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_src"), col("b.doc_id").as("doc_dst"))
       .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_src")
-        .withColumnRenamed("n_sh", "n_src"), Seq("doc_src"))
-      .withColumn("contain_bp",
-        round(col("inter") * 10000.0 / col("n_src"), 0).cast("long"))
-      .filter(col("contain_bp") >= minContainBp)
-      .select("doc_src", "doc_dst", "inter", "n_src", "contain_bp")
+    containFilter(inter, sh, minContainBp)
   }
 
   /** MinHash signatures in ONE aggregation pass: all K minima computed
@@ -531,14 +495,7 @@ object Dedup {
       val sh = cappedShingleHashes(docs)
       val cands = lshCandidates(minhashSignaturesCached(sh, bands * rows),
         bands, rows)
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      val inter = cands
-        .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
-        .join(sh.as("sb"), col("doc_b") === col("sb.doc_id")
-          && col("sa.h") === col("sb.h"))
-        .groupBy("doc_a", "doc_b")
-        .agg(count(lit(1)).as("inter"))
-      jaccardFilter(inter, sizes, minJaccardBp).cache()
+      jaccardFilter(sharedShingles(cands, sh, sh), sh, minJaccardBp).cache()
     })
   }
 
@@ -826,14 +783,7 @@ object Dedup {
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
     val benchSh = broadcast(sh.join(benchDocs, Seq("doc_id"), "left_semi"))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val inter = cands
-      .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(benchSh.as("sb"), col("doc_b") === col("sb.doc_id")
-        && col("sa.h") === col("sb.h"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("inter"))
-    jaccardFilter(inter, sizes, minJaccardBp)
+    jaccardFilter(sharedShingles(cands, sh, benchSh), sh, minJaccardBp)
   }
 
   /** Line-level exact dedup — the C4/Dolma-style sub-document pass
@@ -930,18 +880,8 @@ object Dedup {
     */
   def repeatedSpans(docs: DataFrame, w: Int = 8, stride: Int = 1): DataFrame = {
     graft.core.Configs.Chunking(w, stride).validated
-    val th = transform(split(normText(col("text")), " "), t => hexHash20(t))
-    val base = docs.select(col("doc_id"), th.as("th"))
-      .withColumn("n_toks", size(col("th")))
-    val wins = base.filter(col("n_toks") >= w)
-      .select(col("doc_id"), explode(transform(
-        // (n_toks - w) >= 0 here, so double-divide + int cast is floor
-        sequence(lit(0), ((col("n_toks") - w) / stride).cast("int")),
-        i => struct((i * stride).cast("long").as("pos"),
-          aggregate(slice(col("th"), i * stride + 1, lit(w)), lit(0L),
-            (acc, h) => (acc * 31L + h) % 2147483647L).as("h")))).as("wn"))
-      .select(col("doc_id"), col("wn.pos").as("pos"), col("wn.h").as("h"))
-    val perDoc = wins.groupBy("h", "doc_id").agg(count(lit(1)).as("n_in_doc"))
+    val perDoc = spanWindows(docs, w, stride)
+      .groupBy("h", "doc_id").agg(count(lit(1)).as("n_in_doc"))
     val stats = perDoc.groupBy("h")
       .agg(sum("n_in_doc").as("n_occ"), count(lit(1)).as("n_docs"))
     val rolled = perDoc.join(stats, Seq("h"))
@@ -971,9 +911,9 @@ object Dedup {
     * reassembly-hash discipline as [[lineDedup]] — the oracle proves
     * the rebuilt STRING, not just the counts).
     *
-    * Window rule shared verbatim with [[repeatedSpans]] (w-token
-    * rolling poly hash over 20-bit token hashes, stride 1), so the
-    * signal row and the remedy row cannot drift.
+    * Window rule shared with [[repeatedSpans]] through one generator
+    * ([[spanWindows]], stride 1), so the signal row and the remedy row
+    * cannot drift.
     *
     * Scale: window generation is the same pure projection as
     * [[repeatedSpans]]; the election is one partial-agg `groupBy(h)`
@@ -1021,14 +961,7 @@ object Dedup {
     val base = docs.select(col("doc_id"),
         split(normText(col("text")), " ").as("tk"))
       .withColumn("n_toks", size(col("tk")).cast("long"))
-    val wins = base.filter(col("n_toks") >= w)
-      .withColumn("th", transform(col("tk"), t => hexHash20(t)))
-      .select(col("doc_id"), explode(transform(
-        sequence(lit(0), (col("n_toks") - w).cast("int")),
-        i => struct(i.cast("long").as("pos"),
-          aggregate(slice(col("th"), i + 1, lit(w)), lit(0L),
-            (acc, h) => (acc * 31L + h) % 2147483647L).as("h")))).as("wn"))
-      .select(col("doc_id"), col("wn.pos").as("pos"), col("wn.h").as("h"))
+    val wins = spanWindows(docs, w, stride = 1)
     // fail-CLOSED packed-key guard (the qualityKeeper discipline): a
     // doc_id ≥ 2^42 or a position ≥ 2^20 would alias the election key
     val packed = when(col("doc_id") < 0 || col("doc_id") >= MaxDoc,
@@ -1086,6 +1019,26 @@ object Dedup {
   }
 
   // ---- helpers ----
+
+  /** The w-token span windows of [[repeatedSpans]] and [[spanMarked]]:
+    * `(doc_id, pos, h)` per window start `pos` (every `stride`-th
+    * token), `h` the polynomial rolling hash of the window's 20-bit
+    * token hashes mod 2^31−1. A pure projection plus one explode; docs
+    * shorter than one window yield no rows.
+    */
+  private[graft] def spanWindows(docs: DataFrame, w: Int, stride: Int): DataFrame = {
+    val th = transform(split(normText(col("text")), " "), t => hexHash20(t))
+    docs.select(col("doc_id"), th.as("th"))
+      .withColumn("n_toks", size(col("th")))
+      .filter(col("n_toks") >= w)
+      .select(col("doc_id"), explode(transform(
+        // (n_toks - w) >= 0 here, so double-divide + int cast is floor
+        sequence(lit(0), ((col("n_toks") - w) / stride).cast("int")),
+        i => struct((i * stride).cast("long").as("pos"),
+          aggregate(slice(col("th"), i * stride + 1, lit(w)), lit(0L),
+            (acc, h) => (acc * 31L + h) % 2147483647L).as("h")))).as("wn"))
+      .select(col("doc_id"), col("wn.pos").as("pos"), col("wn.h").as("h"))
+  }
 
   /** doc_id + distinct k-shingles of the normalized text. Docs shorter
     * than one shingle are dropped (nothing to compare).
@@ -1198,8 +1151,48 @@ object Dedup {
       .withColumn("dup_bp", expr("n_dup_docs * 10000 div n_docs"))
   }
 
-  private def jaccardFilter(inter: DataFrame, sizes: DataFrame,
-      minJaccardBp: Long): DataFrame =
+  /** Fail-CLOSED candidate-fanout guard of the shingle pair joins:
+    * Σ `f1`·`f2` over the per-key frame `perKey` (one row per shingle),
+    * summed in 38-digit decimal — a long sum would wrap silently under
+    * non-ANSI semantics and let the guard fail OPEN. Past `cap` the
+    * call throws with the operator's own `message(estimate)`.
+    */
+  private[graft] def requireFanout(perKey: DataFrame, f1: Column, f2: Column,
+      cap: Long)(message: java.math.BigDecimal => String): Unit = {
+    val est = perKey
+      .agg(coalesce(sum(f1.cast("decimal(38,0)") * f2),
+        lit(java.math.BigDecimal.ZERO)).as("p"))
+      .head().getDecimal(0)
+    require(est.compareTo(java.math.BigDecimal.valueOf(cap)) <= 0, message(est))
+  }
+
+  /** The verify join of every shingle pair operator: `inter` = shared
+    * shingles per candidate pair. `cands` holds the two doc-id columns
+    * (a side, b side); `sh` is the a side's shingle table and `shB` the
+    * b side's — the same table for a self-join, a broadcast benchmark
+    * slice for [[contaminationFuzzy]].
+    */
+  private[graft] def sharedShingles(cands: DataFrame, sh: DataFrame,
+      shB: DataFrame): DataFrame = {
+    val Seq(a, b) = cands.columns.toSeq
+    cands
+      .join(sh.as("sa"), col(a) === col("sa.doc_id"))
+      .join(shB.as("sb"), col(b) === col("sb.doc_id")
+        && col("sa.h") === col("sb.h"))
+      .groupBy(a, b)
+      .agg(count(lit(1)).as("inter"))
+  }
+
+  /** Per-doc shingle count `n_sh` of a shingle table. */
+  private def shingleCounts(sh: DataFrame): DataFrame =
+    sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+
+  /** Final Jaccard filter over (doc_a, doc_b, inter): pairs whose
+    * rounded basis-point Jaccard reaches `minJaccardBp`, sizes from `sh`.
+    */
+  private[graft] def jaccardFilter(inter: DataFrame, sh: DataFrame,
+      minJaccardBp: Long): DataFrame = {
+    val sizes = shingleCounts(sh)
     inter
       .join(sizes.withColumnRenamed("doc_id", "doc_a")
         .withColumnRenamed("n_sh", "n_a"), Seq("doc_a"))
@@ -1210,4 +1203,18 @@ object Dedup {
         round(col("inter") * 10000.0 / col("union_sh"), 0).cast("long"))
       .filter(col("jacc_bp") >= minJaccardBp)
       .select("doc_a", "doc_b", "inter", "union_sh", "jacc_bp")
+  }
+
+  /** Final containment filter over (doc_src, doc_dst, inter): directed
+    * pairs whose rounded basis-point C(src→dst) reaches `minContainBp`.
+    */
+  private[graft] def containFilter(inter: DataFrame, sh: DataFrame,
+      minContainBp: Long): DataFrame =
+    inter
+      .join(shingleCounts(sh).withColumnRenamed("doc_id", "doc_src")
+        .withColumnRenamed("n_sh", "n_src"), Seq("doc_src"))
+      .withColumn("contain_bp",
+        round(col("inter") * 10000.0 / col("n_src"), 0).cast("long"))
+      .filter(col("contain_bp") >= minContainBp)
+      .select("doc_src", "doc_dst", "inter", "n_src", "contain_bp")
 }

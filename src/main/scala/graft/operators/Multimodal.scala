@@ -157,22 +157,30 @@ object Multimodal {
       bos.toByteArray
     }
 
-    /** (parsed frame count, frame-0 width, height, top-left RGB). */
-    def decode(payload: Array[Byte]): (Int, Int, Int, Int) = {
+    /** Every frame record's PNG bytes, in container order; the magic
+      * and the header's frame count are checked against the walk.
+      */
+    private[graft] def frames(payload: Array[Byte]): IndexedSeq[Array[Byte]] = {
       val buf = ByteBuffer.wrap(payload)
       val magic = new Array[Byte](4); buf.get(magic)
       require(magic.sameElements(Magic), "not a GVID container")
       val declared = buf.getInt()
-      var counted = 0
-      var first: (Int, Int, Int) = null
+      val out = IndexedSeq.newBuilder[Array[Byte]]
       while (buf.remaining() > 4) {
-        val len = buf.getInt()
-        val frame = new Array[Byte](len); buf.get(frame)
-        if (counted == 0) first = PngCodec.decode(frame)
-        counted += 1
+        val frame = new Array[Byte](buf.getInt()); buf.get(frame)
+        out += frame
       }
-      require(counted == declared, s"frame count $counted != header $declared")
-      (counted, first._1, first._2, first._3)
+      val walked = out.result()
+      require(walked.size == declared,
+        s"frame count ${walked.size} != header $declared")
+      walked
+    }
+
+    /** (parsed frame count, frame-0 width, height, top-left RGB). */
+    def decode(payload: Array[Byte]): (Int, Int, Int, Int) = {
+      val fs = frames(payload)
+      val (w, h, rgb) = PngCodec.decode(fs.head)
+      (fs.size, w, h, rgb)
     }
   }
 
@@ -320,20 +328,11 @@ object Multimodal {
     landed(spark, docs, Some("video"))
       .mapPartitions { batch =>
         batch.flatMap { f =>
-          val buf = java.nio.ByteBuffer.wrap(f.payload)
-          buf.position(8) // magic + declared count; count re-derived below
-          var idx = 0
-          val rows = Seq.newBuilder[(Long, Long, Long, Long, Long)]
-          while (buf.remaining() > 4) {
-            val len = buf.getInt()
-            val frame = new Array[Byte](len); buf.get(frame)
-            if (idx % stride == 0) {
-              val (w, h, rgb) = PngCodec.decode(frame)
-              rows += ((f.doc_id, idx.toLong, w.toLong, h.toLong, rgb.toLong))
-            }
-            idx += 1
+          val fs = VideoPack.frames(f.payload)
+          (fs.indices by stride).map { idx =>
+            val (w, h, rgb) = PngCodec.decode(fs(idx))
+            (f.doc_id, idx.toLong, w.toLong, h.toLong, rgb.toLong)
           }
-          rows.result()
         }
       }
       .toDF("doc_id", "frame_idx", "width", "height", "pixel_rgb")
@@ -367,13 +366,10 @@ object Multimodal {
     // work), but scan splitting is BYTE-based (openCostInBytes floors
     // the split size at 4 MB), so a small metadata file plans a
     // near-SERIAL codec pass no matter how many cores exist. When the
-    // scan under-splits, re-balance the METADATA rows — doc_id,
-    // media_type, n_chars; the payload is born inside the pass, so no
-    // heavy bytes ever move (guide §8: decide placement on small
-    // rows) — across the core count, deterministic hash placement by
-    // the unique doc_id. Scale-adaptive, not a local[32] constant: at
-    // cluster scale the scan already has >= defaultParallelism splits
-    // and this branch is a no-op.
+    // scan under-splits, [[Dedup.cpuBalanced]] re-balances the METADATA
+    // rows — doc_id, media_type, n_chars; the payload is born inside
+    // the pass, so no heavy bytes ever move (guide §8: decide placement
+    // on small rows) — across the core count.
     //
     // ONLY the ImageIO-backed modalities re-balance: javax.sound's
     // provider registry serializes concurrent container probing
@@ -384,11 +380,8 @@ object Multimodal {
     // ImageIO's plugin registry is per-thread and the image/video
     // rows measured 0.5-0.8x. Audio (and the mixed-modality pass,
     // which is one-third audio) keeps the scan's layout.
-    val n = spark.sparkContext.defaultParallelism
-    val parallelSafe = only.exists(mt => mt == "image" || mt == "video")
     val balanced =
-      if (parallelSafe && base.rdd.getNumPartitions < n)
-        base.repartition(n, col("doc_id"))
+      if (only.exists(mt => mt == "image" || mt == "video")) Dedup.cpuBalanced(base)
       else base
     balanced
       .as[(Long, String, Long)]
@@ -531,12 +524,7 @@ object Multimodal {
     import spark.implicits._
     // same core-count balance as [[landed]]: the synthesis + ImageIO
     // work is ms-per-row CPU, the input is one id column
-    val ids = docs.select(col("doc_id"))
-    val n = spark.sparkContext.defaultParallelism
-    val balanced =
-      if (ids.rdd.getNumPartitions < n) ids.repartition(n, col("doc_id"))
-      else ids
-    balanced.as[Long].mapPartitions { batch =>
+    Dedup.cpuBalanced(docs.select(col("doc_id"))).as[Long].mapPartitions { batch =>
       batch.map { id =>
         val gray = photoGray(id)
         val typ = if (id % 2 == 1) BufferedImage.TYPE_3BYTE_BGR
@@ -654,23 +642,9 @@ object Multimodal {
     * partial-aggregating `groupBy` on the 12-bit key, and the keeper
     * map (≤4096 rows by construction) joins back as a broadcast.
     */
-  def imageDedup(spark: SparkSession, docs: DataFrame): DataFrame = {
-    // Materialize the decoded keys once: `imgs` feeds both the bucket
-    // aggregate and the probe side of the join, and without the
-    // checkpoint each consumer re-ran the whole PNG decode pass
-    // (2x codec work per query; MapPartitions subtrees are never
-    // reused). (doc_id, phash) is 16 bytes/doc.
-    val imgs = features(spark, docs, Some("image")).toDF()
-      .withColumn("phash", expr(
-        "(pixel_rgb div 262144) * 64 + ((width - 1) div 8) * 8 + ((height - 1) div 8)"))
-      .select("doc_id", "phash")
-      .localCheckpoint()
-    val buckets = imgs.groupBy("phash")
-      .agg(min("doc_id").as("keeper_id"), count(lit(1)).as("n_bucket"))
-    imgs.join(broadcast(buckets), Seq("phash"))
-      .withColumn("keep", (col("doc_id") === col("keeper_id")).cast("int"))
-      .select("doc_id", "phash", "keeper_id", "n_bucket", "keep")
-  }
+  def imageDedup(spark: SparkSession, docs: DataFrame): DataFrame =
+    bucketKeeper(spark, docs, "image",
+      "(pixel_rgb div 262144) * 64 + ((width - 1) div 8) * 8 + ((height - 1) div 8)")
 
   /** Video dedup over really-decoded frame packs — the video twin of
     * [[imageDedup]], keyed COARSER because video similarity is more
@@ -685,20 +659,28 @@ object Multimodal {
     * Scale: identical shape to [[imageDedup]] — batched codec pass,
     * partial-agg `groupBy` on a ≤384-value key, broadcast keeper map.
     */
-  def videoDedup(spark: SparkSession, docs: DataFrame): DataFrame = {
-    // Same single-decode materialization as [[imageDedup]]: both the
-    // bucket aggregate and the probe side read the checkpointed
-    // (doc_id, phash) rows instead of re-running the frame-pack
-    // decode pass.
-    val vids = features(spark, docs, Some("video")).toDF()
-      .withColumn("phash", expr(
-        "(pixel_rgb div 1048576) * 64 + ((width - 1) div 8) * 16 " +
-          "+ ((height - 1) div 8) * 2 + ((frames - 2) div 4)"))
+  def videoDedup(spark: SparkSession, docs: DataFrame): DataFrame =
+    bucketKeeper(spark, docs, "video",
+      "(pixel_rgb div 1048576) * 64 + ((width - 1) div 8) * 16 " +
+        "+ ((height - 1) div 8) * 2 + ((frames - 2) div 4)")
+
+  /** The shared plan of [[imageDedup]] and [[videoDedup]]: decode the
+    * `modality` rows through [[features]], key each by the SQL `key`
+    * over its decoded features, and keep the min doc_id per key.
+    * The decoded keys are materialized once: they feed both the bucket
+    * aggregate and the probe side of the join, and without the
+    * checkpoint each consumer re-ran the whole decode pass (MapPartitions
+    * subtrees are never reused). (doc_id, phash) is 16 bytes/doc.
+    */
+  private def bucketKeeper(spark: SparkSession, docs: DataFrame,
+      modality: String, key: String): DataFrame = {
+    val keyed = features(spark, docs, Some(modality)).toDF()
+      .withColumn("phash", expr(key))
       .select("doc_id", "phash")
       .localCheckpoint()
-    val buckets = vids.groupBy("phash")
+    val buckets = keyed.groupBy("phash")
       .agg(min("doc_id").as("keeper_id"), count(lit(1)).as("n_bucket"))
-    vids.join(broadcast(buckets), Seq("phash"))
+    keyed.join(broadcast(buckets), Seq("phash"))
       .withColumn("keep", (col("doc_id") === col("keeper_id")).cast("int"))
       .select("doc_id", "phash", "keeper_id", "n_bucket", "keep")
   }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
 
 import graft.functions.Portable._
 import graft.operators.Curation
@@ -192,6 +193,11 @@ object StreamingCuration {
           .withColumn("ikey", col("band_key") * bands + col("band"))
           .localCheckpoint() // read 3× below; must not re-plan after add
         val spark = batch.sparkSession
+        // verify mode's signature rows: joined 2× by the election and
+        // once more by the sigstore write
+        lazy val sigArr = sigsWide.select(col("doc_id"),
+            array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"))
+          .localCheckpoint()
         val elected = verifyMinJaccardBp match {
           case None =>
             // FAST mode (the over-drop default): any band collision
@@ -220,12 +226,11 @@ object StreamingCuration {
             // batch (a fast-mode-built index has keys but no stored
             // signatures — its collisions cannot be verified and are
             // admitted; do not mix modes on one index).
-            val sigArr = sigsWide.select(col("doc_id"),
-              array((0 until numHashes).map(i => col(s"mh$i")): _*)
-                .as("sig"))
-              .localCheckpoint() // joined 2× below
-            val priorBands = readOrEmptyBands(spark, s"${index.root}/bandstore")
-            val priorSigs = readOrEmptySigs(spark, s"${index.root}/sigstore")
+            val priorBands = readOrEmpty(spark, s"${index.root}/bandstore",
+              new StructType().add("doc_id", LongType).add("ikey", LongType))
+            val priorSigs = readOrEmpty(spark, s"${index.root}/sigstore",
+              new StructType().add("doc_id", LongType)
+                .add("sig", ArrayType(LongType)))
             val candPrior = banded
               .join(priorBands.select(col("ikey"),
                 col("doc_id").as("old_id")), Seq("ikey"))
@@ -261,14 +266,8 @@ object StreamingCuration {
         // replay stability (see scaladoc): docs already in THIS batch's
         // partition stay in it — a post-index-add replay must not
         // shrink the rewrite
-        val existing =
-          try spark.read.parquet(s"$corpusDir/ingest_batch=$batchId")
-            .select("doc_id")
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-              new org.apache.spark.sql.types.StructType()
-                .add("doc_id", org.apache.spark.sql.types.LongType))
-          }
+        val existing = readOrEmpty(spark, s"$corpusDir/ingest_batch=$batchId",
+          new StructType().add("doc_id", LongType))
         val survivors = elected.unionByName(floor).unionByName(existing)
           .distinct().localCheckpoint()
         survivors.join(batch, Seq("doc_id"))
@@ -291,11 +290,7 @@ object StreamingCuration {
             .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite").partitionBy("ingest_batch")
             .parquet(s"${index.root}/bandstore")
-          Dedup.minhashSignatures(sh, numHashes)
-            .select(col("doc_id"),
-              array((0 until numHashes).map(i => col(s"mh$i")): _*)
-                .as("sig"))
-            .join(survivors, Seq("doc_id"))
+          sigArr.join(survivors, Seq("doc_id"))
             .withColumn("ingest_batch", lit(batchId))
             .write
             .option("partitionOverwriteMode", "dynamic")
@@ -319,25 +314,14 @@ object StreamingCuration {
       "CASE WHEN x = y THEN cast(1 as bigint) ELSE cast(0 as bigint) END), " +
       s"cast(0 as bigint), (acc, v) -> acc + v) * 10000 div $numHashes")
 
-  private def readOrEmptyBands(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    try spark.read.parquet(dir).select("doc_id", "ikey")
-    catch { case _: org.apache.spark.sql.AnalysisException =>
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        new org.apache.spark.sql.types.StructType()
-          .add("doc_id", org.apache.spark.sql.types.LongType)
-          .add("ikey", org.apache.spark.sql.types.LongType))
-    }
-
-  private def readOrEmptySigs(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    try spark.read.parquet(dir).select("doc_id", "sig")
-    catch { case _: org.apache.spark.sql.AnalysisException =>
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        new org.apache.spark.sql.types.StructType()
-          .add("doc_id", org.apache.spark.sql.types.LongType)
-          .add("sig", org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType)))
+  /** The `schema` columns of the parquet table at `dir`, or an empty
+    * frame of that schema while nothing has been written there yet.
+    */
+  private def readOrEmpty(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame =
+    try spark.read.parquet(dir).select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    catch { case _: AnalysisException =>
+      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
     }
 
   /** Residual-duplication audit of a [[nearDupIngest]] corpus — the
@@ -379,7 +363,7 @@ object StreamingCuration {
     * next to a non-trivial n_docs means the audit measured an emptied
     * universe, not a clean corpus.
     */
-  def nearDupAudit(spark: org.apache.spark.sql.SparkSession,
+  def nearDupAudit(spark: SparkSession,
       corpusDir: String, minJaccardBp: Long,
       auditBands: Int = 64, auditRows: Int = 2): DataFrame = {
     import graft.operators.Dedup

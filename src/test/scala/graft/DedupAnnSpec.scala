@@ -941,6 +941,30 @@ class DedupAnnSpec extends SparkSuite {
     assert(e2.getMessage.contains("minhashLsh"))
     // the default bound leaves the gated corpus untouched
     assert(Dedup.ngramJaccard(docs, 5000L).count() > 0)
+    // every shingle pair join runs the same guard, each naming itself
+    val guarded = Seq[(String, Long => Any)](
+      "containmentPairs" -> (cap => Dedup.containmentPairs(hot, 5000L, cap)),
+      "ngramJaccardExhaustive" ->
+        (cap => Dedup.ngramJaccardExhaustive(hot, 5000L, cap)),
+      "containmentPairsExhaustive" ->
+        (cap => Dedup.containmentPairsExhaustive(hot, 5000L, cap)))
+    guarded.foreach { case (name, run) =>
+      val g = intercept[IllegalArgumentException](run(100L))
+      assert(g.getMessage.startsWith(s"requirement failed: $name: "),
+        g.getMessage)
+    }
+    // containmentPairs keys its memo on the cap too: a default-cap
+    // build fills containCache, and the strict cap still throws
+    assert(Dedup.containmentPairs(hot, 5000L).count() > 0)
+    val e3 = intercept[IllegalArgumentException] {
+      Dedup.containmentPairs(hot, 5000L, maxCandidatePairs = 100L)
+    }
+    assert(e3.getMessage.startsWith("requirement failed: containmentPairs: "))
+  }
+
+  test("the fanout sum and the shared-shingle join are each written once") {
+    assert(SourceScan.occurrences("decimal(38,0)") === 1)
+    assert(SourceScan.occurrences("""col("sa.h") === col("sb.h")""") === 1)
   }
 
   test("knn IVF multi-probe: probe-2 strictly improves recall at a cell boundary") {
@@ -991,6 +1015,15 @@ class DedupAnnSpec extends SparkSuite {
     assert(got(2L) === ((10L, 2L, 8L, h("zz yy"))))
     assert(got(3L) === ((3L, 3L, 0L, h("a b c"))))
     assert(got(4L) === ((16L, 8L, 8L, h("m n o p q r s t"))))
+    // signal and remedy agree on the sf0.001 corpus: every doc the
+    // strip cuts has a window repeatedSpans flags as repeated
+    val cut = graft.operators.Dedup.spanStrip(docs, w = 8)
+      .filter(col("dropped_tokens") > 0).select("doc_id")
+    val unflagged = cut.join(graft.operators.Dedup.repeatedSpans(docs, w = 8)
+        .filter(col("n_dup_windows") > 0), Seq("doc_id"), "left_anti")
+      .collect().map(_.getLong(0))
+    assert(cut.count() > 0)
+    assert(unflagged.isEmpty, s"stripped but not flagged: ${unflagged.take(5).toSeq}")
   }
 
   test("spanStripMaximal: overlapping marked windows merge into ONE maximal span") {

@@ -1,6 +1,5 @@
 package graft
 
-import java.io.File
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
 
@@ -52,16 +51,8 @@ class DurableSpec extends SparkSuite {
   }
 
   test("only Durable.scala moves or renames files") {
-    val root = new File("src/main/scala")
-    assert(root.isDirectory, s"no sources under ${root.getAbsolutePath}")
-    def scalaFiles(f: File): Seq[File] =
-      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
     val calls = Seq("StandardCopyOption", "Files.move", ".rename(")
-    val sites = scalaFiles(root)
-      .filter(f => calls.exists(Files.readString(f.toPath).contains))
-      .map(f => root.toPath.relativize(f.toPath).toString)
+    val sites = SourceScan.filesContaining(calls: _*)
     assert(sites === Seq("graft/sources/Durable.scala"))
   }
 }

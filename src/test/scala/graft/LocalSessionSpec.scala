@@ -1,8 +1,5 @@
 package graft
 
-import java.io.File
-import java.nio.file.Files
-
 class LocalSessionSpec extends SparkSuite {
 
   test("the test session runs under the LocalSession contract") {
@@ -17,15 +14,7 @@ class LocalSessionSpec extends SparkSuite {
   }
 
   test("SparkSession.builder appears only in LocalSession") {
-    val root = new File("src/main/scala")
-    assert(root.isDirectory, s"no sources under ${root.getAbsolutePath}")
-    def scalaFiles(f: File): Seq[File] =
-      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
-    val sites = scalaFiles(root)
-      .filter(f => Files.readString(f.toPath).contains("SparkSession.builder"))
-      .map(f => root.toPath.relativize(f.toPath).toString)
+    val sites = SourceScan.filesContaining("SparkSession.builder")
     assert(sites === Seq("graft/core/LocalSession.scala"))
   }
 }

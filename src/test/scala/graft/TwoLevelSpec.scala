@@ -1,8 +1,5 @@
 package graft
 
-import java.io.File
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,16 +92,8 @@ class TwoLevelSpec extends SparkSuite {
   }
 
   test("only TwoLevel.scala builds rank blocks or partition-local windows") {
-    val root = new File("src/main/scala")
-    assert(root.isDirectory, s"no sources under ${root.getAbsolutePath}")
-    def scalaFiles(f: File): Seq[File] =
-      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
     val calls = Seq("spark_partition_id", "60 - blockBits")
-    val sites = scalaFiles(root)
-      .filter(f => calls.exists(Files.readString(f.toPath).contains))
-      .map(f => root.toPath.relativize(f.toPath).toString)
+    val sites = SourceScan.filesContaining(calls: _*)
     assert(sites === Seq("graft/operators/TwoLevel.scala"))
   }
 }
