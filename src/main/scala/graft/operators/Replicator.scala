@@ -61,7 +61,7 @@ object SegmentRoller {
   def byCount(messages: DataFrame, maxMessages: Int): DataFrame = {
     graft.core.Configs.SegmentRoll(maxMessages = maxMessages).validated
     messages
-      .withColumn("seg_seq", (col("msg_offset") / maxMessages).cast("long"))
+      .withColumn("seg_seq", countKey(maxMessages))
       .groupBy("part_id", "seg_seq")
       .agg(
         min("msg_offset").as("start_offset"),
@@ -70,6 +70,13 @@ object SegmentRoller {
         sum("msg_size").as("seg_bytes"))
       .withColumn("level", lit(0))
   }
+
+  /** The count roll's segment key: the message's segment is
+    * `msg_offset / maxMessages` (shared by [[byCount]] and the
+    * streaming egress, `StreamingEgress.foreachBatchEgress`).
+    */
+  private[graft] def countKey(maxMessages: Int): Column =
+    (col("msg_offset") / maxMessages).cast("long")
 
   /** Session-cached [[byCount]] for the batch query surface: a dozen
     * replicator queries (checkpoints, gap/lost-range detection,
@@ -121,10 +128,9 @@ object SegmentRoller {
       .drop("seg_window")
   }
 
-  /** Size+count greedy rolling — the reference's exact `isFull` rule:
-    * a segment closes once cumulative bytes >= maxBytes OR message
-    * count == maxMessages, INCLUDING the message that crossed the
-    * threshold (reference: pkg/egress/worker.go:54,170-178).
+  /** Size+count greedy rolling — the reference's exact `isFull` rule
+    * ([[roll]]) over the whole stream, the partial tail of each
+    * partition flushed as its last segment.
     *
     * Inherently sequential per partition (the decision for message i
     * depends on all messages before it), so this is the one operator
@@ -142,26 +148,54 @@ object SegmentRoller {
     slim
       .groupByKey(_._1)
       .flatMapSortedGroups($"msg_offset") { (part, rows) =>
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, Long, Long, Long, Long, Long)]
-        var segSeq = 0L
-        var start = -1L; var end = -1L; var cnt = 0L; var bytes = 0L
-        def close(): Unit = {
-          out += ((part, segSeq, start, end, cnt, bytes))
-          segSeq += 1; start = -1L; cnt = 0L; bytes = 0L
-        }
-        for ((_, off, sz) <- rows) {
-          if (start < 0) start = off
-          end = off; cnt += 1; bytes += sz
-          if (bytes >= maxBytes || cnt == maxMessages) close()
-        }
-        if (cnt > 0) close() // partial tail segment (flush at shutdown)
-        out
+        val (closed, tail) = roll(RollState.Empty,
+          rows.map(r => (r._2, r._3)), maxMessages, maxBytes)
+        // the partial tail segment is flushed at shutdown
+        (closed ++ Option(tail).filter(_.messageCount > 0)).zipWithIndex
+          .map { case (s, seq) => (part, seq.toLong, s.startOffset,
+            s.endOffset, s.messageCount, s.sizeBytes) }
       }
       .toDF("part_id", "seg_seq", "start_offset", "end_offset",
         "message_count", "seg_bytes")
       .withColumn("level", lit(0))
   }
+
+  /** The egress roll — the reference's exact `isFull` rule: a segment
+    * closes once cumulative bytes >= maxBytes OR message count ==
+    * maxMessages, INCLUDING the message that crossed the threshold
+    * (reference: pkg/egress/worker.go:54,170-178).
+    *
+    * Folds one partition's `(offset, size)` messages, in offset order,
+    * onto the segment left `open` by earlier input; returns the
+    * segments the fold closed and the one still open. The one roll of
+    * [[bySizeGreedy]] and `StreamingEgress.statefulRoller`.
+    */
+  private[graft] def roll(open: RollState, messages: Iterator[(Long, Long)],
+      maxMessages: Long, maxBytes: Long): (Vector[RollState], RollState) = {
+    val closed = Vector.newBuilder[RollState]
+    var st = open
+    for ((off, size) <- messages) {
+      st = RollState(if (st.messageCount == 0) off else st.startOffset, off,
+        st.messageCount + 1, st.sizeBytes + size)
+      if (st.sizeBytes >= maxBytes || st.messageCount >= maxMessages) {
+        closed += st
+        st = RollState.Empty
+      }
+    }
+    (closed.result(), st)
+  }
+}
+
+/** One partition's open segment (the egress worker's mutable locals:
+  * startOffset/endOffset/sizeBytes/messageCount —
+  * reference: pkg/egress/worker.go:44-52).
+  */
+case class RollState(startOffset: Long, endOffset: Long,
+    messageCount: Long, sizeBytes: Long)
+
+object RollState {
+  /** No message yet. */
+  val Empty = RollState(-1L, -1L, 0L, 0L)
 }
 
 /** Offset-continuity audit — the egress worker's sanityChecks
@@ -201,8 +235,8 @@ object Checkpoints {
   /** Checkpoint = max endOffset over CLOSED segments, where `closed`
     * is the caller's roll rule. Count-rolled tables pass
     * [[closedByCount]]; size/age-rolled tables pass [[closedBySize]]
-    * (the reference's isFull: bytes >= max OR count == max —
-    * pkg/egress/worker.go:54) — a byte-closed segment commits too.
+    * (the [[SegmentRoller.roll]] isFull test over a segment row) — a
+    * byte-closed segment commits too.
     */
   def fromSegments(segments: DataFrame, closed: Column): DataFrame =
     segments
@@ -220,33 +254,60 @@ object Checkpoints {
     col("seg_bytes") >= maxBytes || col("message_count") >= maxMessages
 }
 
+/** Segment coverage — the reference ingress's `nextOffset =
+  * max(end) + 1` (pkg/ingress/worker.go), the one coverage rule of gap
+  * detection, ingress replay, compaction contiguity and the replay
+  * audit.
+  */
+object Coverage {
+  private val ByStart = Seq(col("start_offset"), col("end_offset"))
+
+  /** Adds `prev_end`: the RUNNING MAX of `end_offset` over the
+    * partition's earlier segments in `order` (null on its first). Not
+    * lag(): with overlapping segments (at-least-once rewinds produce
+    * them) a segment fully contained in its predecessor would shrink a
+    * lag()-based prev_end and flag ranges that are in fact covered.
+    */
+  private[graft] def withPrevEnd(segments: DataFrame, order: Column*): DataFrame =
+    segments.withColumn("prev_end", max("end_offset").over(
+      Window.partitionBy("part_id").orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, -1)))
+
+  /** The gap test over [[withPrevEnd]]: the segment starts past the
+    * prior coverage + 1, so `[prev_end + 1, start_offset - 1]` is
+    * missing.
+    */
+  private[graft] val gap: Column =
+    col("prev_end").isNotNull && col("start_offset") > col("prev_end") + 1
+
+  /** Segments in (start, end) order with `prev_end` and `island`, the
+    * number of gaps before the segment: island 0 is the partition's
+    * contiguous prefix, and the segments of one island cover one
+    * maximal contiguous range.
+    */
+  private[graft] def islands(segments: DataFrame): DataFrame =
+    withPrevEnd(segments, ByStart: _*).withColumn("island",
+      sum(when(gap, 1L).otherwise(0L)).over(Window.partitionBy("part_id")
+        .orderBy(ByStart: _*).rowsBetween(Window.unboundedPreceding, 0)))
+}
+
 /** Gap detection over the segment inventory: a partition whose next
   * expected offset is not covered by any present segment has a lost
   * range (reference: pkg/ingress/worker.go:105-130 late→lost).
   */
 object GapDetector {
   /** Input: segment table (possibly with segments missing).
-    * Output: one row per lost range (part_id, lost_start, lost_end, lost_count).
-    *
-    * `prev_end` is the RUNNING MAX of end_offset over all earlier
-    * segments, not lag(): with overlapping segments (at-least-once
-    * rewinds produce them) a segment fully contained in its
-    * predecessor would shrink a lag()-based prev_end and flag ranges
-    * that are in fact covered. The reference tracks
-    * nextOffset = max(end)+1 the same way (ingress/worker.go).
+    * Output: one row per lost range (part_id, lost_start, lost_end,
+    * lost_count) — every [[Coverage.gap]] in (start, end) order.
     */
-  def lostRanges(segments: DataFrame): DataFrame = {
-    val w = Window.partitionBy("part_id").orderBy("start_offset", "end_offset")
-    segments
-      .withColumn("prev_end",
-        max("end_offset").over(w.rowsBetween(Window.unboundedPreceding, -1)))
-      .filter(col("prev_end").isNotNull && col("start_offset") > col("prev_end") + 1)
+  def lostRanges(segments: DataFrame): DataFrame =
+    Coverage.withPrevEnd(segments, col("start_offset"), col("end_offset"))
+      .filter(Coverage.gap)
       .select(
         col("part_id"),
         (col("prev_end") + 1).as("lost_start"),
         (col("start_offset") - 1).as("lost_end"),
         (col("start_offset") - col("prev_end") - 1).as("lost_count"))
-  }
 }
 
 /** Ordered, checkpoint-aware, deduplicated replay — the ingress worker
@@ -260,11 +321,10 @@ object Ingress {
     * a per-partition contiguous replay_seq.
     *
     * Scale note: segments are first coalesced into DISJOINT coverage
-    * islands (maximal contiguous covered ranges, running-max window
-    * arithmetic), so the per-partition join fans out messages ×
-    * islands — usually ~1 per partition — instead of messages ×
-    * segments, and overlapping/contained segments cost nothing. The
-    * FILE-level replay path (FsSegmentStore.open /
+    * islands ([[Coverage.islands]]), so the per-partition join fans out
+    * messages × islands — usually ~1 per partition — instead of
+    * messages × segments, and overlapping/contained segments cost
+    * nothing. The FILE-level replay path (FsSegmentStore.open /
     * StreamingIngress.fileReplay) — which reads only each segment's
     * own rows — remains the 100 TB data path; this relational form
     * carries the checkpoint/overlap semantics over an already-loaded
@@ -272,34 +332,44 @@ object Ingress {
     */
   def replay(messages: DataFrame, presentSegments: DataFrame,
       checkpoints: DataFrame): DataFrame = {
-    val w = Window.partitionBy("part_id").orderBy("start_offset", "end_offset")
-    val islands = presentSegments
-      .select("part_id", "start_offset", "end_offset")
-      .withColumn("prev_max", max("end_offset")
-        .over(w.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("new_island",
-        when(col("prev_max").isNull ||
-          col("start_offset") > col("prev_max") + 1, 1L).otherwise(0L))
-      .withColumn("island",
-        sum("new_island").over(w.rowsBetween(Window.unboundedPreceding, 0)))
+    val islands = Coverage
+      .islands(presentSegments.select("part_id", "start_offset", "end_offset"))
       .groupBy("part_id", "island")
       .agg(min("start_offset").as("start_offset"),
         max("end_offset").as("end_offset"))
     // Messages covered by an island: islands are disjoint, so every
-    // message matches at most one — no fanout, and the dedup below
-    // only guards against duplicate input messages.
+    // message matches at most one — no fanout, and the dedup in
+    // pastCheckpoint only guards against duplicate input messages.
     val covered = messages
       .join(islands, Seq("part_id"))
       .filter(col("msg_offset").between(col("start_offset"), col("end_offset")))
       .select("part_id", "msg_offset", "key", "msg_value", "msg_size")
-      .dropDuplicates("part_id", "msg_offset")
-    val afterCkpt = covered
-      .join(broadcast(checkpoints), Seq("part_id"), "left")
-      .filter(col("ckpt_offset").isNull || col("msg_offset") > col("ckpt_offset"))
     val wSeq = Window.partitionBy("part_id").orderBy("msg_offset")
-    afterCkpt
+    pastCheckpoint(covered, checkpoints)
       .withColumn("replay_seq", row_number().over(wSeq).cast("long") - 1)
       .select("part_id", "msg_offset", "replay_seq", "key", "msg_size")
+  }
+
+  /** The ingress checkpoint skip: drops every row at or below its
+    * partition's checkpoint (`checkpoints`: part_id, ckpt_offset; a
+    * partition without one keeps every row), then keeps one row per
+    * (part_id, msg_offset). Shared by [[replay]] and
+    * `StreamingIngress.fileReplay`.
+    */
+  private[graft] def pastCheckpoint(rows: DataFrame, checkpoints: DataFrame): DataFrame =
+    rows.join(broadcast(checkpoints), Seq("part_id"), "left")
+      .filter(col("ckpt_offset").isNull || col("msg_offset") > col("ckpt_offset"))
+      .drop("ckpt_offset")
+      .dropDuplicates("part_id", "msg_offset")
+
+  /** The ingress checkpoint advance (reference: pkg/ingress/worker.go:218):
+    * `commit`s the max delivered offset per partition of `delivered`
+    * (part_id, ckpt_offset), and commits nothing when it is empty.
+    */
+  private[graft] def advance(delivered: DataFrame)(commit: DataFrame => Unit): Unit = {
+    val advanced = delivered.groupBy("part_id")
+      .agg(max("ckpt_offset").as("ckpt_offset"))
+    if (!advanced.isEmpty) commit(advanced)
   }
 }
 
@@ -438,26 +508,16 @@ object Compactor {
       maxSegments: Int): DataFrame = {
     graft.core.Configs.Compaction(minLevel = level, maxLevel = level,
       minSegments = minSegments, maxSegments = maxSegments).validated
-    val w = Window.partitionBy("part_id").orderBy("start_offset", "end_offset")
     // Contiguity: the reference refuses to compact across a missing
     // offset range (compactor.go HasOffset error). Relationally: only
-    // the contiguous prefix of each partition — everything before the
-    // first gap — is eligible this run; segments at or past a gap wait
-    // (so GapDetector keeps reporting the gap instead of compaction
-    // absorbing it). prev_end is the running max, not lag(): a
-    // contained segment must not flag a false gap (see
-    // GapDetector.lostRanges).
-    val flagged = segments
-      .filter(col("level") === level)
-      .withColumn("prev_end",
-        max("end_offset").over(w.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("gap_before",
-        when(col("prev_end").isNotNull && col("start_offset") > col("prev_end") + 1, 1L)
-          .otherwise(0L))
-      .withColumn("gaps_so_far",
-        sum("gap_before").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .filter(col("gaps_so_far") === 0)
-      .drop("prev_end", "gap_before", "gaps_so_far")
+    // the contiguous prefix of each partition — island 0, everything
+    // before the first gap — is eligible this run; segments at or past
+    // a gap wait (so GapDetector keeps reporting the gap instead of
+    // compaction absorbing it).
+    val w = Window.partitionBy("part_id").orderBy("start_offset", "end_offset")
+    val flagged = Coverage.islands(segments.filter(col("level") === level))
+      .filter(col("island") === 0)
+      .drop("prev_end", "island")
     flagged
       .withColumn("bin", ((row_number().over(w) - 1) / maxSegments).cast("long"))
       .groupBy("part_id", "bin")
@@ -608,8 +668,8 @@ object Compactor {
   *   - a REWIND is an exact redelivery: the same (partition, start,
   *     end) segment arriving again (what a failed-write rewind
   *     produces);
-  *   - a LATE event is an arrival that finds a gap open (its start is
-  *     past the running-max end + 1) — the moments the reference marks
+  *   - a LATE event is an arrival that finds a gap open
+  *     ([[Coverage.gap]] in arrival order) — the moments the reference marks
   *     a segment late and arms the backoff timer; a later backfill
   *     arrival un-marks it (and is itself neither late nor a rewind);
   *   - LOST ranges are the holes remaining in FINAL coverage
@@ -619,23 +679,17 @@ object Compactor {
 object ReplayAudit {
   /** arrivals: (part_id, arrival_seq, start_offset, end_offset). */
   def metrics(arrivals: DataFrame): DataFrame = {
-    val wArr = Window.partitionBy("part_id")
-      .orderBy("arrival_seq", "start_offset", "end_offset")
     val wDup = Window.partitionBy("part_id", "start_offset", "end_offset")
       .orderBy("arrival_seq")
-    val flagged = arrivals
-      .withColumn("prior_max", coalesce(
-        max("end_offset").over(wArr.rowsBetween(Window.unboundedPreceding, -1)),
-        lit(-1L)))
+    val flagged = Coverage.withPrevEnd(arrivals,
+        col("arrival_seq"), col("start_offset"), col("end_offset"))
       .withColumn("dup_n", row_number().over(wDup))
     val base = flagged.groupBy("part_id").agg(
       count(lit(1)).as("n_arrivals"),
       sum(when(col("dup_n") > 1, 1L).otherwise(0L)).as("segments_rewinded"),
       sum(when(col("dup_n") > 1, col("end_offset") - col("start_offset") + 1)
         .otherwise(0L)).as("messages_rewinded"),
-      sum(when(col("prior_max") >= 0 &&
-        col("start_offset") > col("prior_max") + 1, 1L).otherwise(0L))
-        .as("late_events"),
+      sum(when(Coverage.gap, 1L).otherwise(0L)).as("late_events"),
       min("start_offset").as("min_s"),
       max("end_offset").as("max_e"))
     val holes = GapDetector

@@ -3,11 +3,14 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
 
-import graft.core.SegmentMeta
-import graft.sources.FsSegmentStore
+import graft.core.{Configs, SegmentMeta}
+import graft.operators.{Ingress, RollState, SegmentRoller}
+import graft.sources.{FsCheckpointStore, FsSegmentStore}
 
 /** Continuous paths via Structured Streaming. The Kafka source is the
   * same API surface (`readStream.format("kafka")`) swapped by config;
@@ -20,18 +23,12 @@ import graft.sources.FsSegmentStore
 case class StreamMessage(partId: Int, msgOffset: Long, key: String,
     value: String, ts: Timestamp, sizeBytes: Long)
 
-/** Rolling state per partition (the egress worker's mutable locals:
-  * startOffset/endOffset/sizeBytes/messageCount —
-  * reference: pkg/egress/worker.go:44-52).
-  */
-case class RollState(startOffset: Long, endOffset: Long,
-    messageCount: Long, sizeBytes: Long)
-
 object StreamingEgress {
 
   /** Stateful segment roller — the direct streaming analogue of the
-    * reference's per-partition worker loop: accumulate until
-    * count/size is full, then emit a closed segment.
+    * reference's per-partition worker loop: each micro-batch continues
+    * the partition's open segment (the group state) with
+    * [[SegmentRoller.roll]] and emits the segments it closes.
     *
     * `ageMs > 0` arms a processing-time timeout that flushes an aged
     * partial segment (MaxSegmentAge). NOTE: an armed timeout makes the
@@ -42,33 +39,23 @@ object StreamingEgress {
   def statefulRoller(messages: Dataset[StreamMessage], region: String,
       topic: String, maxMessages: Long, maxBytes: Long,
       ageMs: Long = 60000L): Dataset[SegmentMeta] = {
+    Configs.SegmentRoll(maxMessages, maxBytes).validated
     val spark = messages.sparkSession
     import spark.implicits._
 
     def update(partId: Int, rows: Iterator[StreamMessage],
         state: GroupState[RollState]): Iterator[SegmentMeta] = {
-      var st = state.getOption.getOrElse(RollState(-1L, -1L, 0L, 0L))
-      val out = scala.collection.mutable.ArrayBuffer.empty[SegmentMeta]
-      def close(): Unit = {
-        out += SegmentMeta(region, topic, partId, level = 0,
-          st.startOffset, st.endOffset, st.messageCount, st.sizeBytes)
-        st = RollState(-1L, -1L, 0L, 0L)
-      }
-      if (state.hasTimedOut) {
-        if (st.messageCount > 0) close()
-      } else {
-        for (m <- rows.toSeq.sortBy(_.msgOffset)) {
-          val start = if (st.startOffset < 0) m.msgOffset else st.startOffset
-          st = RollState(start, m.msgOffset, st.messageCount + 1,
-            st.sizeBytes + m.sizeBytes)
-          if (st.sizeBytes >= maxBytes || st.messageCount >= maxMessages) close()
-        }
-      }
-      if (st.messageCount > 0) {
-        state.update(st)
+      val open = state.getOption.getOrElse(RollState.Empty)
+      val (closed, rest) =
+        if (state.hasTimedOut) (Vector(open).filter(_.messageCount > 0), RollState.Empty)
+        else SegmentRoller.roll(open, rows.toSeq.sortBy(_.msgOffset).iterator
+          .map(m => (m.msgOffset, m.sizeBytes)), maxMessages, maxBytes)
+      if (rest.messageCount > 0) {
+        state.update(rest)
         if (ageMs > 0) state.setTimeoutDuration(ageMs)
       } else state.remove()
-      out.iterator
+      closed.iterator.map(s => SegmentMeta(region, topic, partId, level = 0,
+        s.startOffset, s.endOffset, s.messageCount, s.sizeBytes))
     }
 
     val timeout = if (ageMs > 0) GroupStateTimeout.ProcessingTimeTimeout()
@@ -78,9 +65,9 @@ object StreamingEgress {
   }
 
   /** Micro-batch egress: every batch's messages are rolled into
-    * count-bounded segments and written to the segment store
-    * (foreachBatch = the reference's consume→write→commit cycle, with
-    * Spark's WAL providing the commit).
+    * count-bounded segments ([[SegmentRoller.countKey]]) and written to
+    * the segment store (foreachBatch = the reference's
+    * consume→write→commit cycle, with Spark's WAL providing the commit).
     *
     * ONE distributed write per batch: each row is labeled with its
     * segment key (count-roll arithmetic + a min/max window) and the
@@ -90,24 +77,33 @@ object StreamingEgress {
     */
   def foreachBatchEgress(messages: DataFrame, store: FsSegmentStore,
       region: String, topic: String, maxMessages: Int,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    messages.writeStream
+      checkpointDir: String): StreamingQuery = {
+    Configs.SegmentRoll(maxMessages = maxMessages).validated
+    eachBatch(messages, checkpointDir) { batch =>
+      if (!batch.isEmpty) {
+        val w = Window.partitionBy("part_id", "seg_seq")
+        val labeled = batch
+          .withColumn("seg_seq", SegmentRoller.countKey(maxMessages))
+          .withColumn("start", min("msg_offset").over(w))
+          .withColumn("end", max("msg_offset").over(w))
+          .drop("seg_seq")
+          .withColumn("part", col("part_id"))
+          .withColumn("level", lit(0))
+        store.writePartitioned(labeled, region, topic)
+      }
+    }
+  }
+
+  /** `f` on every micro-batch of `df`, the stream's WAL under
+    * `checkpointDir` — the one foreachBatch wiring of the egress and
+    * ingress legs.
+    */
+  private[streaming] def eachBatch(df: DataFrame, checkpointDir: String)(
+      f: DataFrame => Unit): StreamingQuery =
+    df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("part_id", "seg_seq")
-          val labeled = batch
-            .withColumn("seg_seq", (col("msg_offset") / maxMessages).cast("long"))
-            .withColumn("start", min("msg_offset").over(w))
-            .withColumn("end", max("msg_offset").over(w))
-            .drop("seg_seq")
-            .withColumn("part", col("part_id"))
-            .withColumn("level", lit(0))
-          store.writePartitioned(labeled, region, topic)
-        }
-      }
+      .foreachBatch((batch: DataFrame, _: Long) => f(batch))
       .start()
 }
 
@@ -234,26 +230,31 @@ object StreamingIngress {
     * segment). `onBatch` is the delivery hook (produce/collect).
     */
   def replayWithCommits(events: Dataset[SegmentEvent],
-      ckptStore: graft.sources.FsCheckpointStore,
+      ckptStore: FsCheckpointStore,
       firstSegmentDelayTicks: Int, maxLateRetries: Int,
       streamCheckpointDir: String)(onBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val actions = orderedReplay(events, ckptStore.latestMap(),
       firstSegmentDelayTicks, maxLateRetries)
-    actions.toDF().writeStream
-      .outputMode("append")
-      .option("checkpointLocation", streamCheckpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.persist()
+    StreamingEgress.eachBatch(actions.toDF(), streamCheckpointDir) { batch =>
+      deliver(batch, ckptStore) { b =>
         onBatch(b)
-        val delivered = b.filter(col("action") === "replay")
-          .groupBy(col("partId").as("part_id"))
-          .agg(max("endOffset").as("ckpt_offset"))
-        if (!delivered.isEmpty) ckptStore.commit(delivered)
-        b.unpersist()
-        ()
+        b.filter(col("action") === "replay")
+          .select(col("partId").as("part_id"), col("endOffset").as("ckpt_offset"))
       }
-      .start()
+    }
+  }
+
+  /** One ingress micro-batch: persists `batch`, hands it to `send`,
+    * which delivers it and returns the (part_id, ckpt_offset) offsets it
+    * delivered, and advances `ckptStore` to them ([[Ingress.advance]]).
+    * The batch is released whether or not the delivery succeeds.
+    */
+  private def deliver(batch: DataFrame, ckptStore: FsCheckpointStore)(
+      send: DataFrame => DataFrame): Unit = {
+    val b = batch.persist()
+    try Ingress.advance(send(b))(ckptStore.commit)
+    finally b.unpersist()
   }
 
   /** Per-partition meters over a (batch of the) replay-action stream —
@@ -280,10 +281,11 @@ object StreamingIngress {
     * (the file-source analogue of the reference's SQS segment events —
     * reference: pkg/stores/sqs_segment_event_source.go), then per
     * micro-batch order by (partition, offset), drop rows at or below
-    * the CURRENT checkpoint, append to the destination (a directory
-    * sink standing in for the Kafka producer; `format("kafka")` is the
-    * config swap on a real cluster), and ADVANCE the checkpoint to the
-    * batch's delivered high offsets (reference:
+    * the CURRENT checkpoint ([[Ingress.pastCheckpoint]]), append to the
+    * destination (a directory sink standing in for the Kafka producer;
+    * `format("kafka")` is the config swap on a real cluster), and
+    * ADVANCE the checkpoint to the batch's delivered high offsets
+    * ([[Ingress.advance]]; reference:
     * pkg/ingress/worker.go:155-170,218 — checkpoint committed after
     * each replayed segment).
     *
@@ -294,31 +296,19 @@ object StreamingIngress {
     */
   def fileReplay(spark: SparkSession, storeRoot: String, region: String,
       topic: String, schema: org.apache.spark.sql.types.StructType,
-      ckptStore: graft.sources.FsCheckpointStore, destDir: String,
-      streamCheckpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      ckptStore: FsCheckpointStore, destDir: String,
+      streamCheckpointDir: String): StreamingQuery = {
     val segments = spark.readStream
       .schema(schema)
       .parquet(s"$storeRoot/region=$region/topic=$topic/part=*/level=*/start=*/end=*")
-    segments.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", streamCheckpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ckpt = broadcast(ckptStore.latest())
-        val delivered = batch
-          .join(ckpt, Seq("part_id"), "left")
-          .filter(col("ckpt_offset").isNull || col("msg_offset") > col("ckpt_offset"))
-          .drop("ckpt_offset")
-          .dropDuplicates("part_id", "msg_offset")
-          .sortWithinPartitions("part_id", "msg_offset")
-          .persist()
+    StreamingEgress.eachBatch(segments, streamCheckpointDir) { batch =>
+      val pending = Ingress.pastCheckpoint(batch, ckptStore.latest())
+        .sortWithinPartitions("part_id", "msg_offset")
+      deliver(pending, ckptStore) { delivered =>
         delivered.write.mode("append").parquet(destDir)
-        val advanced = delivered.groupBy("part_id")
-          .agg(max("msg_offset").as("ckpt_offset"))
-        if (!advanced.isEmpty) ckptStore.commit(advanced)
-        delivered.unpersist()
-        ()
+        delivered.select(col("part_id"), col("msg_offset").as("ckpt_offset"))
       }
-      .start()
+    }
   }
 }
 

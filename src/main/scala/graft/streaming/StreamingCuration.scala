@@ -131,6 +131,10 @@ object StreamingCuration {
     * groupBy over the BATCH; the index probe is batch-bands ⋈ index
     * (8 bytes per band per accepted doc ever, key-partitioned); the
     * election two batch-local aggregations. Never corpus × corpus.
+    * Verify mode (below) still scans the full bandstore and sigstore
+    * on every batch: its probe joins the batch's bands against every
+    * stored band row and its candidates against every stored
+    * signature, so its per-batch cost grows with the accepted corpus.
     *
     * OPT-IN VERIFY MODE (`verifyMinJaccardBp = Some(bp)`): the
     * over-drop design trades one training document per S-curve false
@@ -239,7 +243,7 @@ object StreamingCuration {
             val verifiedHit = candPrior
               .join(sigArr, Seq("doc_id"))
               .join(priorSigs.select(col("doc_id").as("old_id"),
-                col("sig").as("old_sig")).distinct(), Seq("old_id"))
+                col("sig").as("old_sig")), Seq("old_id"))
               .withColumn("est_bp", estJaccardBp("sig", "old_sig", numHashes))
               .filter(col("est_bp") >= bp)
               .select("doc_id").distinct()

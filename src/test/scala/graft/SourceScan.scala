@@ -28,7 +28,11 @@ object SourceScan {
 
   /** How many times `needle` occurs across the main sources. */
   def occurrences(needle: String): Int =
-    sources.map { case (_, text) =>
-      text.split(java.util.regex.Pattern.quote(needle), -1).length - 1
-    }.sum
+    matches(java.util.regex.Pattern.quote(needle))
+
+  /** How many times the regular expression `regex` matches across the
+    * main sources.
+    */
+  def matches(regex: String): Int =
+    sources.map { case (_, text) => regex.r.findAllMatchIn(text).size }.sum
 }

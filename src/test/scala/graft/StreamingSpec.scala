@@ -99,6 +99,33 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("fileReplay releases its persisted batch when the delivery fails") {
+    import spark.implicits._
+    val store = graft.sources.FsSegmentStore(spark, tmpDir("failing-store"))
+    val msgs = (0L until 5L).map(i => (0, i, s"k$i", 3L))
+      .toDF("part_id", "msg_offset", "key", "msg_size")
+    store.write(msgs, graft.core.SegmentMeta("src", "t", 0, 0, 0L, 4L, 5L, -1L))
+    val ckptStore = graft.sources.FsCheckpointStore(spark, tmpDir("failing-ckstore"))
+    // the destination is an existing regular file, so the append fails
+    val dest = new java.io.File(tmpDir("failing-dest"), "dest")
+    java.nio.file.Files.writeString(dest.toPath, "not a directory")
+    // Dataset.persist registers a cache entry before any job runs; the
+    // entry count is read reflectively (the accessor is sql-private)
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def cacheEntries = cache.getClass.getMethod("numCachedEntries").invoke(cache)
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val entriesBefore = cacheEntries
+    val q = StreamingIngress.fileReplay(spark, store.root, "src", "t",
+      msgs.schema, ckptStore, dest.getAbsolutePath, tmpDir("failing-ckpt"))
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore === Set.empty)
+    assert(cacheEntries === entriesBefore)
+    assert(ckptStore.latestMap().isEmpty) // nothing delivered, nothing committed
+  }
+
   test("fileReplay restart: fresh query redelivers nothing below the advanced checkpoint") {
     import spark.implicits._
     val store = graft.sources.FsSegmentStore(spark, tmpDir("restart-store"))

@@ -2,8 +2,11 @@ package graft
 
 import graft.core.{Configs, Validation}
 import graft.core.Validation.GraftConfigException
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
 import graft.operators._
 import graft.sources.Tables
+import graft.streaming.{StreamMessage, StreamingEgress}
 
 /** The uniform config-validation front door (reference
   * utils/validation.go semantics): every §2 operator family's knob
@@ -140,6 +143,19 @@ class ValidationSpec extends SparkSuite {
         maxBytes = 100L)
     }
     intercept[GraftConfigException] { StoreReconciler.triageEvents(m, 0) }
+    // the streaming rollers validate their caps before a query starts
+    val live = MemoryStream[StreamMessage](
+      org.apache.spark.sql.Encoders.product[StreamMessage], spark.sqlContext)
+    intercept[GraftConfigException] {
+      StreamingEgress.statefulRoller(live.toDS(), "src", "t",
+        maxMessages = 0, maxBytes = 100L, ageMs = 0L)
+    }
+    intercept[GraftConfigException] {
+      StreamingEgress.foreachBatchEgress(live.toDF(),
+        graft.sources.FsSegmentStore(spark, tmpDir("validation-egress")),
+        "src", "t", maxMessages = 0,
+        checkpointDir = tmpDir("validation-egress-wal")).stop()
+    }
 
     val docs = Tables.documents(spark, sf)
     intercept[GraftConfigException] { Dedup.minhashLsh(docs, 5000L, bands = 0) }
