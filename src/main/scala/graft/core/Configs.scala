@@ -174,9 +174,10 @@ object Configs {
   }
 
   /** Streaming-index maintenance cadence (ST7/ST8:
-    * compactIfNeeded/vacuumIndex/retrainIfNeeded). grace=0 is the
-    * documented eager-delete mode; maxLeavesPerCell must leave room
-    * for one compacted leaf plus the newest tail.
+    * compactIfNeeded/vacuumGenerations/retrainIfNeeded). vacuumGrace
+    * counts the generations kept below the serving one, so 0 reclaims
+    * every older generation; maxLeavesPerCell must leave room for one
+    * compacted leaf plus the newest tail.
     */
   final case class IndexMaintenance(
       maxLeavesPerCell: Long = 2L, vacuumGrace: Long = 1L,

@@ -232,26 +232,15 @@ object StreamAudit {
   * pkg/egress/worker.go:92-116 completeSegment → commitOffset).
   */
 object Checkpoints {
-  /** Checkpoint = max endOffset over CLOSED segments, where `closed`
-    * is the caller's roll rule. Count-rolled tables pass
-    * [[closedByCount]]; size/age-rolled tables pass [[closedBySize]]
-    * (the [[SegmentRoller.roll]] isFull test over a segment row) — a
-    * byte-closed segment commits too.
+  /** Checkpoint = max endOffset over segments closed by the count cap
+    * (`message_count == maxMessages`, the count-rolled contract of
+    * [[SegmentRoller.byCount]]).
     */
-  def fromSegments(segments: DataFrame, closed: Column): DataFrame =
+  def fromSegments(segments: DataFrame, maxMessages: Int): DataFrame =
     segments
-      .filter(closed)
+      .filter(col("message_count") === maxMessages)
       .groupBy("part_id")
       .agg(max("end_offset").as("ckpt_offset"))
-
-  def fromSegments(segments: DataFrame, maxMessages: Int): DataFrame =
-    fromSegments(segments, closedByCount(maxMessages))
-
-  def closedByCount(maxMessages: Int): Column =
-    col("message_count") === maxMessages
-
-  def closedBySize(maxBytes: Long, maxMessages: Int): Column =
-    col("seg_bytes") >= maxBytes || col("message_count") >= maxMessages
 }
 
 /** Segment coverage — the reference ingress's `nextOffset =

@@ -124,24 +124,24 @@ object StreamingAnn {
     * matching candidates (self excluded) live inside the base-tier
     * cells? Queries at ≥ k keep the base budget; the rest re-rank at
     * full cell coverage. `countDistinct` is the on-disk twin of the
-    * batch operator's plain count — a vec_id can be visible in several
-    * leaves at once (replay/compaction copies, byte-identical under
-    * the index contract), and the scored pass elects one copy, so the
-    * pool the election will see is the DISTINCT candidate set. The
-    * scan is bounded by the base-tier partitions (cell `isin` +
-    * visibility PartitionFilters, predicate as a pushed data filter);
-    * the result is request-scale (≤ numQueries rows) and collects to
-    * the driver next to the cell ranking this path already holds.
+    * batch operator's plain count — a vec_id can sit in several leaves
+    * at once (a replay next to the rebuilt leaf that already holds it,
+    * byte-identical under the index contract), and the scored pass
+    * elects one copy, so the pool the election will see is the
+    * DISTINCT candidate set. The scan is bounded by the base-tier cell
+    * partitions (cell `isin` PartitionFilter, predicate as a pushed
+    * data filter); the result is request-scale (≤ numQueries rows) and
+    * collects to the driver next to the cell ranking this path already
+    * holds.
     */
   private def escalatedDepths(spark: SparkSession, root: String,
-      visibility: Option[Column], predicate: Option[Column],
-      qcells: Seq[(Long, Seq[Long])], k: Int, probes: Int): Map[Long, Int] = {
+      predicate: Option[Column], qcells: Seq[(Long, Seq[Long])], k: Int,
+      probes: Int): Map[Long, Int] = {
     import spark.implicits._
     val basePairs = qcells.flatMap { case (qId, cells) =>
       cells.take(probes).map(c => (qId, c)) }
     val baseDf = basePairs.toDF("q_id", "qcell")
-    val near = probedScan(spark, root, basePairs.map(_._2).distinct,
-        visibility, predicate)
+    val near = probedScan(spark, root, basePairs.map(_._2).distinct, predicate)
       .join(broadcast(baseDf),
         col("cell") === col("qcell") && col("vec_id") =!= col("q_id"))
       .groupBy("q_id").agg(countDistinct(col("vec_id")).as("n_near"))
@@ -151,108 +151,52 @@ object StreamingAnn {
     }.toMap
   }
 
-  /** The batch ids every reader must exclude: tombstoned leaves
-    * (logically deleted — consumed by a committed compaction, kept on
-    * disk for the vacuum grace period) plus the in-flight manifest's
-    * exclusions (under `intent` the output partitions, under
-    * `committed` the consumed leaves). Manifest is read FIRST: an
-    * owner roll-forward moves exclusions from the manifest INTO the
-    * tombstone ledger, so manifest-then-ledger can only over-exclude
-    * across that move (the union still hides every consumed leaf),
-    * never under-exclude.
+  /** A leaf's EFFECTIVE batch, the key of every newest-wins election: a
+    * delivery leaf's id is its raw batch id; a rebuilt leaf (one
+    * [[compactIndex]] or [[retrainIndex]] writes into a new generation)
+    * is `-(e + 2)` for `e` the max effective batch of the leaves it
+    * consumed ([[rebuiltId]]), so later deliveries of the lineage keep
+    * winning elections and a replay of a consumed batch ties into the
+    * raw-beats-rebuilt arm. A rebuilt id never collides with another
+    * leaf: each generation starts with its rebuilt leaves alone (plus
+    * the newest delivery a compaction keeps), and deliveries are ≥ 0.
     */
-  private[graft] def excludedBatchIds(indexDir: String): Set[Long] = {
-    val manifest = readManifest(indexDir) match {
-      case Some(("committed", _, consumed)) => consumed.map(_._2).toSet
-      case Some((_, outId, _)) => Set(outId)
-      case None => Set.empty[Long]
-    }
-    manifest ++ readTombstones(indexDir).map(_._3)
-  }
+  private[graft] def effOf(b: Long): Long = if (b >= 0) b else -b - 2
+  private def effExpr(c: Column): Column =
+    when(c >= 0, c).otherwise(lit(0L) - c - 2)
+  private def rebuiltId(consumed: Seq[Long]): Long =
+    -(consumed.map(effOf).max + 2)
 
-  /** The reader visibility mapping: one partition-pruning
-    * `ingest_batch` predicate excluding [[excludedBatchIds]]; None when
-    * nothing is excluded. Takes the RESOLVED generation root (callers
-    * resolve `_current` exactly once per request and thread the same
-    * root through data scan, visibility, and model — re-resolving here
-    * would let a retrain cutover land between the reads and mix one
-    * generation's model/exclusions with another's data).
-    */
-  private[graft] def visibilityFilter(
-      resolvedRoot: String): Option[org.apache.spark.sql.Column] = {
-    val excluded = excludedBatchIds(resolvedRoot)
-    if (excluded.isEmpty) None
-    else Some(!col("ingest_batch").isin(excluded.toSeq.sorted: _*))
-  }
-
-  /** Compacted-leaf id encoding. A compacted leaf's id must (a) decode
-    * to the max raw batch it consumed (the EFFECTIVE batch driving
-    * every newest-wins election) and (b) NEVER collide with any
-    * existing leaf — the two-phase protocol assumes the output
-    * namespace is disjoint from the inputs (a colliding output is
-    * deleted by its own consumed-leaf roll-forward, and an intent
-    * rollback would delete real input data). The old flat `-(maxRaw
-    * + 2)` satisfied only (a): a replay that re-materializes the last
-    * consumed raw batch makes the next compaction re-derive the SAME
-    * id as the previous generation's output — found by the randomized
-    * model check as silent data loss. Ids are now
-    * `-((maxRaw + 2) · 2^20 + gen)` with `gen` the first free slot
-    * among current leaves: eff decodes by division, uniqueness by
-    * construction, and the re-run after any crash re-derives the same
-    * id from the same leaf set. (Ids below 2^20 in magnitude decode
-    * via the legacy flat rule, so an old index keeps electing
-    * correctly.) Each effective slot's generation range is split:
-    * compaction outputs allocate gens from 0 upward, reuse-encoded
-    * delivery ids ([[reuseSafeBatchId]]) from [[ReuseBase]] (2^19)
-    * upward — both decode eff identically by the same division, and
-    * the two allocators can never collide.
-    */
-  private[graft] val EffShift = 20
-  private[graft] val EffScale = 1L << EffShift
-  private[graft] def effOf(b: Long): Long =
-    if (b >= 0) b
-    else if (-b >= EffScale) (-b) / EffScale - 2
-    else -b - 2
-  // shiftright = exact floor-div-by-2^20 on the positive magnitude —
-  // the double-division rewrite loses bits past 2^53 and could split
-  // election behavior between the SQL and JVM decodes
-  private def effExpr(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    when(c >= 0, c).otherwise(
-      when(-c >= EffScale, shiftright(lit(0L) - c, EffShift) - 2)
-        .otherwise(lit(0L) - c - 2))
-
-  /** Newest-wins election over the JOINED candidate rows of
-    * [[queryIndexSpine]]: a vec_id can be visible in several leaves at
-    * once — a replay (or a fresh-lineage re-ingest) re-materializes a
-    * leaf whose rows the compacted output already holds — and without
-    * this election a query would return the same neighbor twice. Per
-    * (query, candidate): keep the copy with the max effective batch
-    * (compacted leaves map back to the max raw id they consumed), raw
-    * beating compacted on ties — EXACTLY the [[compactIndex]] survivor
-    * rule, applied at read time. Runs on the post-join candidate table
-    * (request-scale: queries × probed-cell rows), never the
-    * corpus-side scan.
+  /** Newest-wins election: one copy per `keys` group — the max
+    * effective batch, raw beating rebuilt on a tie (the raw id is the
+    * larger) — with the `ingest_batch` bookkeeping dropped. Per
+    * `vec_id` it is the survivor rule of [[compactIndex]] and the
+    * retrains; per (`q_id`, `vec_id`) the read-time election of
+    * [[queryIndexSpine]] over the joined candidate rows
+    * (request-scale: queries × probed-cell rows, never the corpus-side
+    * scan). A vec_id can sit in several leaves at once — a replay (or
+    * a fresh-lineage re-ingest) re-materializes a leaf whose rows a
+    * rebuilt leaf already holds — and without the election a query
+    * would return the same neighbor twice.
     *
-    * Ordering caveat, shared with the compaction rule: "newest" is
-    * batch-id order, which is monotonic only WITHIN a checkpoint
-    * lineage. The index contract covers byte-identical re-deliveries
-    * (deterministic assignment under the frozen model), where any
-    * elected copy is correct; re-ingesting a vec_id with CHANGED
-    * values from a fresh lineage (small batch ids) is outside the
-    * contract — its copies lose the election to a compacted leaf with
-    * a larger effective id. An updatable store needs an explicit
-    * version column, not delivery order.
+    * Ordering caveat: "newest" is batch-id order, which is monotonic
+    * only WITHIN a checkpoint lineage. The index contract covers
+    * byte-identical re-deliveries (deterministic assignment under the
+    * frozen model), where any elected copy is correct; re-ingesting a
+    * vec_id with CHANGED values from a fresh lineage (small batch ids)
+    * is outside the contract — its copies lose the election to a
+    * rebuilt leaf with a larger effective id. An updatable store needs
+    * an explicit version column, not delivery order.
     */
-  private def newestPerCandidate(joined: DataFrame): DataFrame = {
+  private def newest(df: DataFrame, keys: String*): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id", "vec_id")
+      .partitionBy(keys.map(col): _*)
       .orderBy(col("eff").desc, col("src_b").desc)
-    joined
-      .withColumn("src_b", col("ingest_batch").cast("long"))
+    df.withColumn("src_b", col("ingest_batch").cast("long"))
       .withColumn("eff", effExpr(col("src_b")))
       .withColumn("copy_rn", row_number().over(w))
       .filter(col("copy_rn") === 1)
-      .drop("src_b", "eff", "copy_rn")
+      .drop("src_b", "eff", "copy_rn", "ingest_batch")
   }
 
   /** Start the index ingest: `emb` is a streaming frame with at least
@@ -279,20 +223,17 @@ object StreamingAnn {
     * and [[ivfIngestPq]]; only `encode` (quantized batch + frozen model
     * → rows with `cell` and the layout's payload columns) differs.
     * Per batch:
-    *  - resolve the serving generation, so a [[retrainIndex]] cutover
-    *    between batches flips the stream to the new generation (and
-    *    its model) with no restart;
-    *  - settle any crashed compaction BEFORE writing (the ingest IS the
-    *    owner context): a fresh lineage re-using a consumed batch id
-    *    would otherwise write rows a lingering `committed` manifest
-    *    hides and the eventual roll-forward deletes;
+    *  - resolve the serving generation, so a [[compactIndex]] or
+    *    [[retrainIndex]] cutover between batches flips the stream to the
+    *    new generation (and its model) with no restart;
     *  - skip an EMPTY batch entirely — a zero-row training set would
     *    durably persist a degenerate model that poisons every later
     *    batch, and there are no partitions to own;
     *  - train-or-load the frozen model and stamp-or-verify `layout`;
     *  - overwrite the batch's own `(cell, ingest_batch)` partitions
-    *    under [[reuseSafeBatchId]]'s id (the raw id unless a compaction
-    *    consumed it; never a file delete).
+    *    under the raw batch id (a replay rewrites its own leaf; a leaf
+    *    a cutover already folded into a rebuilt leaf lives on only in
+    *    the old generation, which this write never touches).
     * `attrs` ride the leaves as plain data columns for filtered search;
     * training stays on the bare (vec_id, v, norm2) projection.
     */
@@ -305,16 +246,13 @@ object StreamingAnn {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val root = resolveRoot(indexDir)
-        recoverIndex(root)
         val qb = quantize(batch, attrs)
         if (!qb.isEmpty) {
           val cent = trainOrLoad(modelFor(root, modelPath),
             qb.select("vec_id", "v", "norm2"), kCells, iterations)
           ensureLayout(root, layout, cent.size, cent.head._2.size)
-          val rows = encode(root, qb, cent)
-          val diskId = reuseSafeBatchId(root, checkpointDir, batchId)
-          rows.select(leafColumns(layout, attrs): _*)
-            .withColumn("ingest_batch", lit(diskId))
+          encode(root, qb, cent).select(leafColumns(layout, attrs): _*)
+            .withColumn("ingest_batch", lit(batchId))
             .write
             .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")
@@ -360,8 +298,7 @@ object StreamingAnn {
     * but candidates are scored by exact integer code dots over the
     * stored int8 codes — the query is int8-coded with the same
     * per-vector max-abs rule, so cosine's scale invariance makes the
-    * per-vector scales cancel. Same manifest visibility filter; never
-    * destructive.
+    * per-vector scales cancel. Never destructive.
     */
   def queryIndexSq(spark: SparkSession, indexDir: String, modelPath: String,
       queries: DataFrame, k: Int, probes: Int = 1): DataFrame =
@@ -423,7 +360,7 @@ object StreamingAnn {
   // residual ADC codes (~21× — four BIGINT code columns per row, no
   // vector payload at all). The batch operators [[Ann.knnIvfPq]] /
   // [[Ann.knnIvfPqRefined]] prove the math; ST7/ST8 prove the
-  // manifest/visibility machinery; this layout composes them:
+  // generation machinery; this layout composes them:
   // train-once coarse model AND train-once product codebooks (both
   // durable artifacts), L2 assignment/probe rule (the batch IVFADC's
   // own — see [[RuleL2]]), per-(query, cell) ADC tables built
@@ -484,10 +421,11 @@ object StreamingAnn {
     * IVFADC rule, stamped [[RuleL2]]), encodes its residuals under
     * the frozen codebooks ([[Ann.pqEncodedFromQ]] — a zero-shuffle
     * codegen projection), and appends ONLY the four code columns to
-    * the cell-partitioned index. Same idempotent-partition /
-    * owner-recovery / id-reuse contract as [[ivfIngest]];
-    * [[compactIndex]]/[[vacuumIndex]] serve this layout unchanged
-    * (schema-agnostic). [[retrainIndex]] REFUSES it by design —
+    * the cell-partitioned index. Same idempotent-partition contract as
+    * [[ivfIngest]]; [[compactIndex]]/[[vacuumGenerations]] serve this
+    * layout unchanged (schema-agnostic, and a compacted generation
+    * carries the serving root's `_pqbooks` when it has its own).
+    * [[retrainIndex]] REFUSES it by design —
     * residual codes cannot be re-encoded without the primary vectors;
     * drift maintenance is [[retrainIndexPq]], the
     * re-encode-from-primary rebuild under the same generation
@@ -562,8 +500,8 @@ object StreamingAnn {
     * per-(query, probed-cell) ADC tables from the frozen codebooks
     * (driver math — PqM maps of pqK integers per pair), then ONE
     * codes-only scan of the probed cell partitions: est_d is PqM map
-    * lookups per candidate, the visibility filter and newest-wins
-    * election are the shared index machinery, and the result is
+    * lookups per candidate, the newest-wins election is the shared
+    * index machinery, and the result is
     * bit-identical to [[Ann.knnIvfPq]] at the same geometry
     * (parity spec). Output: (q_id, rnk, neighbor_id, est_d).
     */
@@ -577,7 +515,7 @@ object StreamingAnn {
     * [[Ann.knnIvfPqFiltered]]: the predicate references the attribute
     * columns the ingest carried into the code leaves and applies to
     * the probed-cell scan BEFORE election and ADC ranking (a parquet
-    * data filter alongside the cell/visibility PartitionFilters),
+    * data filter alongside the cell PartitionFilter),
     * never a post-filter. Encoding is deterministic per row under the
     * frozen artifacts, so filter∘encode ≡ encode∘filter and parity
     * with the batch filtered operator is exact (spec-pinned).
@@ -659,316 +597,119 @@ object StreamingAnn {
   /** Compact aged index leaves: a long-lived ingest accumulates one
     * parquet leaf per (cell, ingest_batch) without bound, and
     * [[queryIndex]] reads every leaf of a probed cell — the one scale
-    * defect of the streaming index. This merges every AGED leaf
-    * (everything except the newest batch, which may still be the
-    * replay target of an in-flight epoch) into ONE compacted leaf per
-    * cell — the [[graft.sources.FsSegmentStore.compactLeveled]]
-    * single-read/single-write discipline: one read over the consumed
-    * leaves, one partitioned write, previous compacted leaves
+    * defect of the streaming index. This rebuilds the serving
+    * generation as generation N+1 under the SAME model: every AGED leaf
+    * (everything except the newest delivery, which may still be the
+    * replay target of an in-flight epoch) merges into ONE rebuilt leaf
+    * per cell, and the newest delivery's leaves are copied as they
+    * are — the [[graft.sources.FsSegmentStore.compactLeveled]]
+    * single-read/single-write discipline, previous rebuilt leaves
     * re-consumed (leveled re-compaction), so steady-state leaves per
-    * cell = 1 compacted + the uncompacted tail.
+    * cell = 1 rebuilt + the uncompacted tail.
     *
-    * Crash-safe via a two-phase manifest (the FsKeyIndex.compact
-    * write-then-swap idea, adapted to partition-dir granularity):
-    *  - `intent` manifest (atomic rename) BEFORE the merged write: a
-    *    crash mid-write (or post-write, pre-flip) rolls BACK —
-    *    [[recoverIndex]] deletes the compacted output, inputs
-    *    untouched;
-    *  - flipped to `committed` AFTER the write: a crash mid-delete
-    *    rolls FORWARD — recoverIndex finishes deleting the consumed
-    *    leaves. At every instant exactly one complete copy of every
-    *    row is reachable. The output id is deterministic in the
-    *    current leaf set (generation-encoded — see [[EffScale]]: eff
-    *    decodes to the max consumed raw batch, uniqueness vs every
-    *    existing leaf by construction), so a re-run after any crash
-    *    converges; the survivor election is deterministic, so a
-    *    re-merge after rollback rebuilds the same leaf.
+    * Survivor semantics: if a vec_id appears in several aged leaves (a
+    * fresh-checkpoint replay lineage can re-deliver earlier data as its
+    * own batch 0), the merge keeps the NEWEST copy ([[newest]]: max
+    * effective batch, raw beating rebuilt on a tie); every row keeps
+    * its `cell`. The rebuilt leaf's id is [[rebuiltId]] of the aged
+    * ids. Deterministic, never an arbitrary dropDuplicates pick.
     *
-    * Survivor semantics: if a vec_id appears in several consumed
-    * leaves (a fresh-checkpoint replay lineage can re-deliver earlier
-    * data as its own batch 0), the merge keeps the NEWEST copy —
-    * max effective batch per vec_id, where a compacted leaf's
-    * effective batch is the max raw batch it consumed (−outId − 2),
-    * raw beating compacted on a tie (a post-compaction replay
-    * re-materializes the newer delivery). Deterministic, never an
-    * arbitrary dropDuplicates pick.
+    * Crash safety and readers are [[retrainIndex]]'s: the generation is
+    * invisible until the one atomic `_current` rename, a crashed build
+    * is deleted and rebuilt by the next cutover, and nothing is deleted
+    * under a reader — one planned before the cutover keeps every file
+    * it listed until [[vacuumGenerations]]. The new generation carries
+    * the serving root's `_layout` stamp and, when the root has its own,
+    * its `_model`/`_pqbooks`; otherwise the caller's artifacts keep
+    * serving, as they do for generation 0. The stamp and rule refusals
+    * are every other reader's: a populated pre-stamp dir demands an
+    * explicit stamp, and an unknown assignment rule is refused
+    * (compaction preserves cells, so it would launder a wrong-rule
+    * index into a fresh-looking one).
     *
-    * Recovery is OWNER-ONLY: it runs on [[compactIndex]] entry, never
-    * from the read path — [[queryIndex]] treats the manifest as a
-    * pure VISIBILITY FILTER (under `intent` it excludes the output
-    * partitions; under `committed` it excludes the consumed leaves),
-    * so a reader racing the compactor can never delete the output the
-    * compactor is about to commit (a destructive reader could
-    * otherwise erase the merged leaf in the write→flip window and the
-    * compactor's consumed-leaf deletes would then lose those rows).
+    * Owner-context, like every maintenance pass here: one compaction or
+    * retrain at a time, run between ingest batches.
     *
-    * Single-writer contract (as [[FsKeyIndex.compact]]): one
-    * compaction at a time, run between batches from the ingest owner;
-    * concurrent READERS are safe at EVERY point — commit never deletes
-    * the consumed leaves, it TOMBSTONES them (grace-period deletes):
-    * they stay on disk, hidden from fresh readers by the visibility
-    * filter and from future merges by the ledger, until an owner
-    * [[vacuumIndex]] pass reclaims entries at least `grace`
-    * generations old. A reader whose plan-time snapshot (visibility
-    * filter + file listing) predates the compaction therefore still
-    * finds every file it listed and returns the correct
-    * pre-compaction view — the delete race that plain parquet
-    * directories cannot otherwise close (failed scan, or silently
-    * partial under `spark.sql.files.ignoreMissingFiles`) is gone; the
-    * residual exposure is a reader spanning MORE than `grace` full
-    * compaction+vacuum cycles, which the grace knob prices explicitly.
-    * (A reader that snapshots its filter microseconds before a
-    * compaction completes and lists files after can transiently see a
-    * consumed leaf AND its compacted copy — harmless: the per-query
-    * newest-wins election and [[indexStats]]' countDistinct both
-    * collapse duplicate copies.)
-    * Local/posix-rename filesystems (same assumption as the model
-    * artifact).
-    *
-    * Returns the compacted leaf's ingest_batch id, or None if fewer
-    * than `minBatches` aged leaves existed (no-op).
+    * Returns the rebuilt leaf's ingest_batch id, or None (no-op) when
+    * fewer than `minBatches` batch ids besides the newest delivery
+    * exist, or none of them is a delivery.
     */
   def compactIndex(spark: SparkSession, indexDir: String,
       minBatches: Int = 4): Option[Long] =
     compactIndexImpl(spark, indexDir, minBatches, crashPoint = 0)
 
-  /** Test seam: crashPoint 1 = stop after the intent manifest (before
-    * the merged write), 2 = stop after the merged write (before the
-    * committed flip), 3 = stop after the committed flip (before the
-    * consumed leaves are tombstoned). Production path is
-    * crashPoint = 0.
+  /** Test seam: crashPoint 1 = stop after the generation's data write,
+    * 2 = stop after its stamp and artifacts (complete but unflipped) —
+    * [[writeGeneration]]'s seams. Production path is crashPoint = 0.
     */
   private[graft] def compactIndexImpl(spark: SparkSession, indexDir: String,
-      minBatches: Int, crashPoint: Int): Option[Long] = {
-    val root = resolveRoot(indexDir) // serving generation
-    recoverIndex(root)
-    val leaves = listLeaves(root)
-    if (leaves.isEmpty) return None
-    // a populated pre-stamp dir gets the same explicit-stamp demand as
-    // the query paths (the compactor serves every on-disk layout and
-    // must never guess which one it is merging), and an unknown
-    // assignment rule the same refusal — compaction preserves cells,
-    // so it would launder a wrong-rule index into a fresh-looking one
-    readLayout(root) match {
-      case None => throw new IllegalStateException(legacyLayoutMsg(root))
-      case Some((l, _, _, r)) if r != ruleFor(l) =>
-        throw new IllegalStateException(ruleMismatchMsg(root, r))
-      case _ => ()
-    }
-    // tombstoned leaves are LOGICALLY deleted (their rows live in a
-    // compacted output): never re-consume them — merging one back in
-    // would resurrect rows a previous compaction already elected away
-    val deadIds = readTombstones(root).map(_._3).toSet
-    val live = leaves.filterNot(l => deadIds.contains(l._2))
-    if (live.isEmpty) return None
-    // the replay-target exemption protects the newest DELIVERY leaf —
-    // raw or generation-encoded reuse ([[reuseSafeBatchId]]; a reuse
-    // leaf is the newest delivery of a fresh lineage even though its
-    // encoded id is negative); compacted leaves are never replay
-    // targets. Newest by (effective batch, raw-beats-encoded) — the
-    // same ordering every election uses
-    val deliveries = live.map(_._2).filter(id => id >= 0 || isReuseId(id))
-    if (deliveries.isEmpty) return None
-    val newest = deliveries.maxBy(id => (effOf(id), id))
-    val aged = live.filter(_._2 != newest)
-    val agedIds = aged.map(_._2).distinct
-    if (agedIds.size < minBatches ||
-      !agedIds.exists(id => id >= 0 || isReuseId(id))) return None
-    // generation-encoded output id (see [[EffScale]]): eff decodes to
-    // the max EFFECTIVE batch among the consumed leaves — max over
-    // effOf, NOT max raw id: when the only aged raw leaves are
-    // replayed OLD batches, the consumed compacted leaf's effective
-    // batch exceeds every raw aged id, and labeling the merge with the
-    // raw max would UNDER-state its content's newness (its payloads
-    // then lose later elections to genuinely older raw replays —
-    // model-check-found, seed 7). The first-free-slot scan makes the
-    // id disjoint from EVERY existing leaf — a replay that
-    // re-materializes the last consumed raw batch would otherwise make
-    // this generation's id collide with the previous one's output,
-    // which the consumed-leaf deletes then destroy (model-check-found)
-    val base = -(agedIds.map(effOf).max + 2) * EffScale
-    // uniqueness vs every PHYSICAL leaf and every tombstoned id: an
-    // output colliding with a tombstoned batch would be hidden by the
-    // ledger the moment it is written
-    val existingIds = leaves.map(_._2).toSet ++ deadIds
-    // generations stay below [[ReuseBase]]: the upper half of each
-    // effective slot belongs to reuse-encoded delivery ids
-    val outId = (0L until ReuseBase).iterator.map(g => base - g)
-      .find(id => !existingIds.contains(id))
-      .getOrElse(throw new IllegalStateException(
-        s"compaction generation space exhausted at $root"))
-    val inputs = aged.map { case (c, b) =>
-      s"$root/cell=$c/ingest_batch=$b" }
-    // newest-wins survivor per vec_id (see scaladoc): effective batch
-    // maps a compacted leaf back to the max raw batch it consumed;
-    // raw beats compacted on an effective tie (raw id is larger)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id")
-      .orderBy(col("eff").desc, col("src_batch").desc)
-    // schema-agnostic: preserve whatever payload columns the index
-    // layout carries (full-precision v/norm2 or SQ8 cb/n2q) — only the
-    // bookkeeping columns are rewritten
-    val merged = spark.read.option("basePath", root)
-      .parquet(inputs: _*)
-      .withColumn("src_batch", col("ingest_batch").cast("long"))
-      .withColumn("eff", effExpr(col("src_batch")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn", "eff", "src_batch", "ingest_batch")
-      .withColumn("ingest_batch", lit(outId))
-    // materialize BEFORE the overwrite: the merged frame reads the
-    // same root it writes into; checkpointing severs that read (and a
-    // torn write can then never observe its own partial output)
-    val mat = merged.localCheckpoint()
-    writeManifest(root, "intent", outId, aged)
-    if (crashPoint == 1) return Some(outId)
-    mat.write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .partitionBy("cell", "ingest_batch")
-      .parquet(root)
-    if (crashPoint == 2) return Some(outId)
-    writeManifest(root, "committed", outId, aged)
-    if (crashPoint == 3) return Some(outId)
-    // GRACE-PERIOD deletes: commit never removes the consumed leaves —
-    // it TOMBSTONES them (hidden from every reader by the visibility
-    // filter, excluded from future merges, physically present), so a
-    // reader whose plan/file-listing snapshot predates this compaction
-    // still finds every file it expects. [[vacuumIndex]] is the later
-    // owner pass that reclaims tombstoned leaves once their grace
-    // epoch has passed.
-    addTombstones(root, aged)
-    java.nio.file.Files.deleteIfExists(manifestPath(root))
-    Some(outId)
-  }
-
-  /** Complete (or roll back) an interrupted [[compactIndex]]: an
-    * `intent` manifest deletes the compacted output (rollback); a
-    * `committed` one finishes deleting the consumed leaves (roll
-    * forward). OWNER-ONLY — runs on [[compactIndex]] entry, never from
-    * the read path ([[queryIndex]] filters on the manifest instead of
-    * acting on it). Idempotent, and tolerant of a concurrent recovery
-    * (deleteIfExists / per-entry NoSuchFile tolerance), so a stray
-    * second owner entry degrades to a no-op rather than a spurious
-    * failure.
-    */
-  def recoverIndex(indexDir: String): Unit =
-    recoverAt(resolveRoot(indexDir)) // serving generation
-
-  /** [[recoverIndex]] against an EXPLICIT generation root — the flat
-    * root after a cutover is no longer the serving generation but can
-    * still carry a crashed compaction's manifest, which must be
-    * settled by its own rollback/roll-forward protocol rather than
-    * blindly deleted ([[vacuumGenerations]]).
-    */
-  private def recoverAt(root: String): Unit =
-    readManifest(root).foreach { case (state, outId, consumed) =>
-      if (state == "committed")
-        // roll FORWARD = finish the grace-period commit: tombstone the
-        // consumed leaves (idempotent — re-runs dedupe on (cell,
-        // batch)), never delete them here
-        addTombstones(root, consumed)
-      else
-        consumed.map(_._1).distinct.foreach { c =>
-          deleteDir(java.nio.file.Paths.get(s"$root/cell=$c/ingest_batch=$outId"))
-        }
-      java.nio.file.Files.deleteIfExists(manifestPath(root))
-      ()
-    }
-
-  /** Physically reclaim tombstoned leaves whose grace period has
-    * passed — the OWNER pass that closes the loop [[compactIndex]]
-    * leaves open on purpose (commit hides consumed leaves, it never
-    * deletes them). `grace` counts tombstone GENERATIONS: each
-    * compaction stamps its tombstones with the next counter value, and
-    * a vacuum with grace g reclaims only entries at least g
-    * generations behind the newest — so a reader can span g full
-    * compactions between planning and executing before it can ever
-    * miss a file. grace=0 reclaims everything (the old eager-delete
-    * behavior, for callers that KNOW no reader is in flight); the
-    * default 1 keeps the previous generation's leaves through the next
-    * maintenance pass. Crash-safe: directories are removed before the
-    * ledger entries, and a re-run tolerates already-gone directories
-    * (an entry pointing at a reclaimed leaf only over-excludes).
-    * Returns the number of leaves reclaimed.
-    */
-  def vacuumIndex(indexDir: String, grace: Int = 1): Int = {
-    graft.core.Validation.validate("index-maintenance",
-      graft.core.Validation.knob("vacuumGrace", grace, minV = 0L,
-        requiredNonZero = false))
-    val root = resolveRoot(indexDir) // serving generation
-    ledgerLock(root).synchronized {
-      val ts = readTombstones(root)
-      if (ts.isEmpty) 0
-      else {
-        val maxStamp = ts.map(_._1).max
-        val (old, keep) = ts.partition(_._1 <= maxStamp - grace)
-        old.foreach { case (_, c, b) =>
-          deleteDir(java.nio.file.Paths.get(s"$root/cell=$c/ingest_batch=$b"))
-        }
-        if (old.nonEmpty) writeTombstones(root, keep)
-        old.size
+      minBatches: Int, crashPoint: Int): Option[Long] =
+    writeGeneration(spark, indexDir, crashPoint, _ => None) { (idx, _, ids) =>
+      ids.filter(_ >= 0).maxOption.flatMap { tail =>
+        val aged = ids.filter(_ != tail)
+        val isTail = col("ingest_batch") === tail
+        if (aged.size < minBatches || !aged.exists(_ >= 0)) None
+        else Some(Rebuilt(newest(idx.filter(!isTail), "vec_id"),
+          rebuiltId(aged), kept = Some(idx.filter(isTail))))
       }
-    }
-  }
+    }.map(_._2)
 
-  /** Codified maintenance cadence: read the (metadata-only) visible
-    * leaf counts and compact when any cell's count exceeds
-    * `maxLeavesPerCell`, then vacuum tombstones past `vacuumGrace`
-    * generations — [[indexStats]]' compaction signal turned into the
-    * trigger, so the ST7 leaf bound is enforced mechanically instead
-    * of left to the operator. Owner-context, like every maintenance
-    * pass here (run it between ingest batches / query waves). Returns
-    * the compacted leaf id when a compaction ran.
+  /** Codified maintenance cadence: read the (metadata-only) leaf counts
+    * of the serving generation and compact when any cell's count
+    * exceeds `maxLeavesPerCell`, then reclaim generations more than
+    * `vacuumGrace` below the serving one — [[indexStats]]' compaction
+    * signal turned into the trigger, so the ST7 leaf bound is enforced
+    * mechanically instead of left to the operator. Owner-context, like
+    * every maintenance pass here (run it between ingest batches / query
+    * waves). Returns the rebuilt leaf id when a compaction ran.
     */
   def compactIfNeeded(spark: SparkSession, indexDir: String,
       maxLeavesPerCell: Int, minBatches: Int = 2,
       vacuumGrace: Int = 1): Option[Long] = {
     graft.core.Configs.IndexMaintenance(maxLeavesPerCell = maxLeavesPerCell,
       vacuumGrace = vacuumGrace, minBatches = minBatches).validated
-    val root = resolveRoot(indexDir) // serving generation
-    val excluded = excludedBatchIds(root)
-    val visible = listLeaves(root).filterNot(l => excluded.contains(l._2))
-    val worst = visible.groupBy(_._1).valuesIterator
+    val worst = listLeaves(resolveRoot(indexDir)).groupBy(_._1).valuesIterator
       .map(_.size).maxOption.getOrElse(0)
     val out = if (worst > maxLeavesPerCell)
-      compactIndex(spark, root, minBatches) else None
-    vacuumIndex(root, vacuumGrace)
+      compactIndex(spark, indexDir, minBatches) else None
+    vacuumGenerations(indexDir, vacuumGrace)
     out
   }
 
-  // ---- model generations: the coarse-quantizer drift path ----------
+  // ---- generations: the one swap protocol of the index directory ---
   //
-  // The train-once frozen model is the right default (cell assignment
-  // never drifts, no global rebuilds), but a long-lived incremental
-  // store must survive CORPUS drift: as data leaves the trained
-  // distribution, cell balance degrades and recall at a fixed probe
-  // budget decays (the corollary of the measured data-dependence of
-  // the recall ladder). [[retrainIndex]] is the owner maintenance pass
-  // for that: train a NEW model generation on the currently visible
+  // Every maintenance pass that rewrites leaves writes a NEW generation
+  // and swaps it in: [[compactIndex]] (same model, aged leaves merged)
+  // and the drift path. The train-once frozen model is the right
+  // default (cell assignment never drifts, no global rebuilds), but a
+  // long-lived incremental store must survive CORPUS drift: as data
+  // leaves the trained distribution, cell balance degrades and recall
+  // at a fixed probe budget decays (the corollary of the measured
+  // data-dependence of the recall ladder). [[retrainIndex]] is the
+  // owner maintenance pass for that: train a NEW model on the serving
   // corpus, rebuild the index under it cell-by-cell, and cut over
   // atomically.
   //
   // Layout: generation N lives at `<indexDir>/_gen-N/` — a complete,
-  // self-contained index (leaves, `_layout`, its own `_model`; the
-  // `_` prefix keeps a mid-build or crashed-unflipped generation
-  // invisible to the flat generation's parquet partition discovery,
-  // which would otherwise refuse the mixed directory structure) — and
-  // `<indexDir>/_current` names the serving generation (absent =
-  // the original flat generation 0 at `indexDir` itself, so every
-  // pre-generation index keeps working unchanged). Every entry point
-  // resolves through the pointer, so ingest streams and queries flip
-  // to the new generation at their next batch/request with no restart;
-  // the gen-local `_model` takes precedence over the caller's
-  // modelPath, which is what makes the model+layout+data cutover ONE
-  // atomic rename (`_current`): there is no window where a new model
-  // is served over old cells or vice versa — the failure mode the
-  // layout stamp's assignment-rule field guards against.
+  // self-contained index (leaves, `_layout`, its own `_model` when it
+  // has one; the `_` prefix keeps a mid-build or crashed-unflipped
+  // generation invisible to the flat generation's parquet partition
+  // discovery, which would otherwise refuse the mixed directory
+  // structure) — and `<indexDir>/_current` names the serving
+  // generation (absent = the original flat generation 0 at `indexDir`
+  // itself, so every pre-generation index keeps working unchanged).
+  // Every entry point resolves through the pointer, so ingest streams
+  // and queries flip to the new generation at their next
+  // batch/request with no restart; the gen-local `_model` takes
+  // precedence over the caller's modelPath, which is what makes the
+  // model+layout+data cutover ONE atomic rename (`_current`): there is
+  // no window where a new model is served over old cells or vice
+  // versa — the failure mode the layout stamp's assignment-rule field
+  // guards against.
   //
   // Nothing is deleted at cutover: the old generation stays on disk
   // (readers planned against it keep every file they listed) until
-  // the owner reclaims it with [[vacuumGenerations]] — the same
-  // grace-priced discipline as tombstone vacuum.
+  // the owner reclaims it with [[vacuumGenerations]].
 
   /** The serving root of an index: `<indexDir>/_gen-N` per `_current`,
     * or `indexDir` itself (the flat pre-generation layout).
@@ -981,10 +722,10 @@ object StreamingAnn {
 
   /** The serving model path for an ALREADY-RESOLVED generation root:
     * the generation's own `_model` when present (written by
-    * [[retrainIndex]]), else the caller's train-once artifact. Takes
-    * the resolved root (never re-resolves) so one request's data,
-    * visibility, and model all come from the SAME generation even if
-    * a retrain cutover lands mid-request.
+    * [[retrainIndex]], carried by [[compactIndex]]), else the caller's
+    * train-once artifact. Takes the resolved root (never re-resolves)
+    * so one request's data and model come from the SAME generation
+    * even if a cutover lands mid-request.
     */
   private def modelFor(resolvedRoot: String, modelPath: String): String = {
     val genModel = java.nio.file.Paths.get(resolvedRoot, "_model")
@@ -998,35 +739,34 @@ object StreamingAnn {
   private def writeCurrentGen(indexDir: String, n: Long): Unit =
     Durable.write(java.nio.file.Paths.get(indexDir, "_current"), s"gen-$n")
 
-  /** Retrain the coarse quantizer on the CURRENTLY VISIBLE corpus and
-    * rebuild the index under the new model as generation N+1 —
-    * returning the new generation number. Owner-context (run between
-    * batches, like compaction); readers and a running ingest flip at
-    * their next request/batch through the `_current` pointer.
+  /** Retrain the coarse quantizer on the serving corpus and rebuild the
+    * index under the new model as generation N+1 — returning the new
+    * generation number. Owner-context (run between batches, like
+    * compaction); readers and a running ingest flip at their next
+    * request/batch through the `_current` pointer.
     *
-    * Mechanics: one visibility-filtered read of the serving
-    * generation elects the newest copy per vec_id (the compactor's
-    * survivor rule over every visible leaf), the elected corpus
-    * trains the new model (deterministic Lloyd's — the engine's
-    * bit-reproducible loop, so a re-run converges to the same
-    * generation), every row is re-assigned under the new model by THE
-    * shared serving rule ([[Ann.cellAssign]]), and the rebuilt leaves
-    * land in ONE generation-encoded batch per cell (eff = max
-    * effective batch of the consumed view, so later deliveries of the
-    * continuing lineage keep winning elections). The `sq8` layout
-    * retrains in CODE space (centroids over the widened int8 codes —
-    * cosine's per-vector scale invariance makes code-space directions
-    * rank like milli-space ones, the same argument as its query
-    * scoring; int8 noise is measured sub-margin on this corpus).
+    * Mechanics: one read of the serving generation elects the newest
+    * copy per vec_id (the compactor's survivor rule over every leaf),
+    * the elected corpus trains the new model (deterministic Lloyd's —
+    * the engine's bit-reproducible loop, so a re-run converges to the
+    * same generation), every row is re-assigned under the new model by
+    * THE shared serving rule ([[Ann.cellAssign]]), and the rebuilt
+    * leaves land in ONE batch per cell ([[rebuiltId]] of every consumed
+    * leaf, so later deliveries of the continuing lineage keep winning
+    * elections). The `sq8` layout retrains in CODE space (centroids
+    * over the widened int8 codes — cosine's per-vector scale
+    * invariance makes code-space directions rank like milli-space
+    * ones, the same argument as its query scoring; int8 noise is
+    * measured sub-margin on this corpus).
     *
     * Crash-safe: the new generation is invisible until the final
     * atomic `_current` rename (the ONLY commit point — model, layout
     * stamp, and data all live inside the generation dir); a crashed
-    * build leaves an unreferenced dir that the next retrain deletes
+    * build leaves an unreferenced dir that the next cutover deletes
     * and rebuilds. Nothing is ever deleted under a reader —
     * [[vacuumGenerations]] is the explicit, grace-priced reclaim.
     *
-    * Scale: cost is `iterations + 2` scans of the visible corpus
+    * Scale: cost is `iterations + 2` scans of the serving corpus
     * (election, training iterations, rebuild write) — the same O(N)
     * a compaction-style rebuild costs anywhere; run it on the drift
     * cadence (weeks), not the compaction cadence (batches). Trained
@@ -1043,20 +783,17 @@ object StreamingAnn {
     * rebuilt leaf id).
     */
   private[graft] def retrainIndexImpl(spark: SparkSession, indexDir: String,
-      kCells: Int, iterations: Int, crashPoint: Int): (Long, Long) =
-    writeGeneration(spark, indexDir, kCells, iterations, crashPoint,
-        pq = false, attrs = Nil) { (visible, layout) =>
-      // elect the newest copy per vec_id over every visible leaf — the
-      // same survivor rule compaction and queries apply
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("vec_id")
-        .orderBy(col("eff").desc, col("src_batch").desc)
-      val elected = visible
-        .withColumn("src_batch", col("ingest_batch").cast("long"))
-        .withColumn("eff", effExpr(col("src_batch")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .drop("rn", "eff", "src_batch", "ingest_batch")
+      kCells: Int, iterations: Int, crashPoint: Int): (Long, Long) = {
+    retrainKnobs(kCells, iterations)
+    // a pq index stores only residual ADC codes taken against the OLD
+    // centroids: a new model cannot re-encode them without the primary
+    // full-precision vectors, which the layout does not carry
+    writeGeneration(spark, indexDir, crashPoint, l => Option.when(l == "pq")(
+      "a 'pq' (residual-code) layout: retraining needs the primary " +
+        "full-precision vectors, which a code index does not store — use " +
+        "retrainIndexPq to re-ingest from the primary store under a new " +
+        "model instead of retraining in place")) { (idx, layout, ids) =>
+      val elected = newest(idx, "vec_id")
         .localCheckpoint() // training re-scans it `iterations` times
       // full layout trains on the stored milli vectors; sq8 on the
       // widened codes (code space — see scaladoc), its payload riding
@@ -1069,87 +806,78 @@ object StreamingAnn {
       val cent = Ann.kmeansCentroidsSeedSafe(
         trainIn.select("vec_id", "v", "norm2"), kCells, iterations)
       require(cent.nonEmpty, "training produced no centroids")
-      Rebuilt(Ann.cellAssign(trainIn, cent), cent)
-    }
+      Some(Rebuilt(Ann.cellAssign(trainIn, cent)
+        .select(leafColumns(layout, Nil): _*), rebuiltId(ids), Some(cent)))
+    }.getOrElse(throw new IllegalStateException(s"nothing to retrain at $indexDir"))
+  }
 
-  /** What a retrain path hands [[writeGeneration]]: the rebuilt rows
-    * (`cell` + the layout's payload), the new coarse model, the
-    * layout's codebooks if it has any, and cached frames to release
-    * once the rows are written.
-    */
-  private case class Rebuilt(rows: DataFrame,
-      cent: Seq[(Long, Seq[Long], Long)],
-      books: Option[Seq[Seq[(Long, Seq[Long], Long)]]] = None,
-      cached: Seq[DataFrame] = Nil)
-
-  /** The one generation writer behind [[retrainIndex]] (`pq = false`:
-    * self-contained layouts) and [[retrainIndexPq]] (`pq = true`): owner
-    * entry (settle a crashed compaction), layout and rule check, the
-    * visible leaves, `rebuild` (given the visibility-filtered serving
-    * index and its layout),
-    * then generation N+1 at `_gen-N`: the rebuilt rows as ONE
-    * generation-encoded leaf per cell whose eff is the max effective
-    * batch of the consumed view (later raw deliveries keep winning
-    * elections, a replay of the last delivered batch ties into the
-    * raw-beats-encoded arm), the layout stamp with the ACTUAL cell
-    * count (fewer than kCells only when the corpus has fewer vectors),
-    * the generation's `_model` (and `_pqbooks`), and last THE atomic
-    * `_current` cutover. crashPoint 1 stops after the data write, 2
-    * after the artifacts (complete but unreferenced); a crashed
-    * prior attempt's dir is deleted and rebuilt.
-    */
-  private def writeGeneration(spark: SparkSession, indexDir: String,
-      kCells: Int, iterations: Int, crashPoint: Int, pq: Boolean,
-      attrs: Seq[String])(
-      rebuild: (DataFrame, String) => Rebuilt): (Long, Long) = {
+  private def retrainKnobs(kCells: Int, iterations: Int): Unit =
     graft.core.Validation.validate("index-maintenance",
       graft.core.Validation.knob("kCells", kCells, minV = 1L) ++
         graft.core.Validation.knob("iterations", iterations, minV = 1L))
+
+  /** What a rebuild hands [[writeGeneration]]: the rebuilt rows (`cell`
+    * + the layout's payload, written as ONE leaf per cell under `id`),
+    * leaves `kept` as they are (with their own `ingest_batch`), the new
+    * coarse model and codebooks if the rebuild trained any (None carries
+    * the serving root's own, if it has them), and cached frames to
+    * release once the rows are written.
+    */
+  private case class Rebuilt(rows: DataFrame, id: Long,
+      cent: Option[Seq[(Long, Seq[Long], Long)]] = None,
+      books: Option[Seq[Seq[(Long, Seq[Long], Long)]]] = None,
+      kept: Option[DataFrame] = None,
+      cached: Seq[DataFrame] = Nil)
+
+  /** The one generation writer behind [[compactIndex]], [[retrainIndex]]
+    * and [[retrainIndexPq]]: resolve the serving root once, refuse a
+    * pre-stamp dir, the caller's `refusal` of the layout and an unknown
+    * assignment rule, then `rebuild` (given the serving index, its
+    * layout and its leaf ids; None = nothing to do). Generation N+1 at
+    * `_gen-N+1`: the rebuilt rows plus the kept leaves, the layout stamp
+    * (the cell count of a new model — fewer than kCells only when the
+    * corpus has fewer vectors — or the serving root's), the new or the
+    * serving root's own `_model`/`_pqbooks`, and last THE atomic
+    * `_current` cutover. crashPoint 1 stops after the data write, 2
+    * after the artifacts (complete but unreferenced); a crashed prior
+    * attempt's dir is deleted and rebuilt. An index with no leaves is
+    * None before any check. Returns (generation number, rebuilt id).
+    */
+  private def writeGeneration(spark: SparkSession, indexDir: String,
+      crashPoint: Int, refusal: String => Option[String])(
+      rebuild: (DataFrame, String, Seq[Long]) => Option[Rebuilt]
+  ): Option[(Long, Long)] = {
     val cur = resolveRoot(indexDir)
-    recoverIndex(indexDir) // owner entry: settle any crashed compaction
-    val layout = readLayout(cur) match {
+    val ids = listLeaves(cur).map(_._2).distinct
+    if (ids.isEmpty) return None
+    val (layout, k, d) = readLayout(cur) match {
       case None => throw new IllegalStateException(legacyLayoutMsg(cur))
-      case Some((l, _, _, r)) if r != ruleFor(l) && (!pq || l == "pq") =>
-        throw new IllegalStateException(ruleMismatchMsg(cur, r))
-      case Some((l, _, _, _)) => l
+      case Some((l, k, d, r)) =>
+        refusal(l).foreach(m => throw new IllegalStateException(s"index at $cur is $m"))
+        if (r != ruleFor(l)) throw new IllegalStateException(ruleMismatchMsg(cur, r))
+        (l, k, d)
     }
-    // a pq index stores only residual ADC codes taken against the OLD
-    // centroids: a new model cannot re-encode them without the primary
-    // full-precision vectors, which the layout does not carry
-    if (layout == "pq" && !pq)
-      throw new IllegalStateException(
-        s"index at $cur is a 'pq' (residual-code) layout: retraining " +
-          "needs the primary full-precision vectors, which a code index " +
-          "does not store — use retrainIndexPq to re-ingest from the " +
-          "primary store under a new model instead of retraining in place")
-    if (layout != "pq" && pq)
-      throw new IllegalStateException(
-        s"index at $cur is a '$layout' layout: retrainIndexPq re-encodes " +
-          "residual-code ('pq') indexes from the primary store — use " +
-          "retrainIndex for self-contained layouts")
-    val excluded = excludedBatchIds(cur)
-    val visibleLeaves = listLeaves(cur).filterNot(l => excluded.contains(l._2))
-    if (visibleLeaves.isEmpty)
-      throw new IllegalStateException(s"nothing to retrain at $cur")
-    val idx0 = spark.read.parquet(cur)
-    val rb = rebuild(visibilityFilter(cur).fold(idx0)(idx0.filter), layout)
-    val genN = readCurrentGen(indexDir).getOrElse(0L) + 1
-    val genDir = s"$indexDir/_gen-$genN"
-    deleteDir(java.nio.file.Paths.get(genDir)) // a crashed prior attempt
-    val outId = -(visibleLeaves.map(l => effOf(l._2)).max + 2) * EffScale
-    rb.rows.select(leafColumns(layout, attrs): _*)
-      .withColumn("ingest_batch", lit(outId))
-      .write.mode("overwrite")
-      .partitionBy("cell", "ingest_batch")
-      .parquet(genDir)
-    rb.cached.foreach(_.unpersist())
-    if (crashPoint == 1) return (genN, outId)
-    stampIndexLayout(genDir, layout, rb.cent.size, rb.cent.head._2.size)
-    saveModel(s"$genDir/_model", rb.cent)
-    rb.books.foreach(saveBooks(s"$genDir/_pqbooks", _))
-    if (crashPoint == 2) return (genN, outId)
-    writeCurrentGen(indexDir, genN) // THE atomic cutover
-    (genN, outId)
+    rebuild(spark.read.parquet(cur), layout, ids).map { rb =>
+      val genN = readCurrentGen(indexDir).getOrElse(0L) + 1
+      val genDir = s"$indexDir/_gen-$genN"
+      deleteDir(java.nio.file.Paths.get(genDir)) // a crashed prior attempt
+      val leaf = rb.rows.withColumn("ingest_batch", lit(rb.id))
+      rb.kept.fold(leaf)(leaf.unionByName(_)).write.mode("overwrite")
+        .partitionBy("cell", "ingest_batch").parquet(genDir)
+      rb.cached.foreach(_.unpersist())
+      if (crashPoint != 1) {
+        stampIndexLayout(genDir, layout, rb.cent.fold(k)(_.size),
+          rb.cent.fold(d)(_.head._2.size))
+        // the rebuild's new model/codebooks, else the serving root's own
+        def carry(name: String): Unit =
+          Durable.read(java.nio.file.Paths.get(cur, name))
+            .foreach(Durable.write(java.nio.file.Paths.get(genDir, name), _))
+        rb.cent.fold(carry("_model"))(saveModel(s"$genDir/_model", _))
+        rb.books.fold(carry("_pqbooks"))(saveBooks(s"$genDir/_pqbooks", _))
+        if (crashPoint != 2) writeCurrentGen(indexDir, genN) // THE atomic cutover
+      }
+      (genN, rb.id)
+    }
   }
 
   /** Drift maintenance for the `pq` (residual-code) layout — the
@@ -1161,22 +889,20 @@ object StreamingAnn {
     * (vec_id, embedding[, attrs...]) frame the ingest consumed —
     * the system of record the 21× index is a projection of).
     *
-    * Mechanics: one visibility-filtered read of the serving
-    * generation elects the visible vec_id set (the survivor rule —
-    * tombstoned/excluded ids never resurrect), those ids join the
-    * primary store (inner: an id the primary has dropped falls out of
-    * the rebuilt index, which is how a primary-side delete propagates
-    * at retrain), and the joined corpus retrains coarse model AND
-    * product codebooks with EXACTLY the batch [[Ann.knnIvfPq]] chain
-    * (quantize → seed-safe Lloyd's coarse → residuals against the
-    * new cells → per-subspace seed-safe codebooks → argmin encode),
-    * so a post-retrain [[queryIndexPq]] is bit-identical to the batch
-    * operator at the new geometry (parity spec). The rebuilt codes
-    * land in `_gen-N/` as ONE generation-encoded leaf with the
-    * generation's own `_model` AND `_pqbooks` (both outrank the
-    * caller's train-once artifacts — model, books, layout stamp, and
-    * data cut over in ONE atomic `_current` rename, same commit point
-    * and crash seams as [[retrainIndex]]).
+    * Mechanics: one read of the serving generation gives its vec_id
+    * set, those ids join the primary store (inner: an id the primary
+    * has dropped falls out of the rebuilt index, which is how a
+    * primary-side delete propagates at retrain), and the joined corpus
+    * retrains coarse model AND product codebooks with EXACTLY the batch
+    * [[Ann.knnIvfPq]] chain (quantize → seed-safe Lloyd's coarse →
+    * residuals against the new cells → per-subspace seed-safe codebooks
+    * → argmin encode), so a post-retrain [[queryIndexPq]] is
+    * bit-identical to the batch operator at the new geometry (parity
+    * spec). The rebuilt codes land in `_gen-N/` as ONE rebuilt leaf per
+    * cell with the generation's own `_model` AND `_pqbooks` (both
+    * outrank the caller's train-once artifacts — model, books, layout
+    * stamp, and data cut over in ONE atomic `_current` rename, same
+    * commit point and crash seams as [[retrainIndex]]).
     *
     * Scale: one scan of the code index (ids), one join against the
     * primary restricted to those ids, `iterations`-scan training, one
@@ -1200,14 +926,16 @@ object StreamingAnn {
       iterations: Int, attrs: Seq[String],
       crashPoint: Int): (Long, Long) = {
     graft.core.Configs.Pq(pqK).validated
-    writeGeneration(spark, indexDir, kCells, iterations, crashPoint,
-        pq = true, attrs) { (visible, _) =>
-      // the visible ID SET is the election here: every copy of a vec_id
+    retrainKnobs(kCells, iterations)
+    writeGeneration(spark, indexDir, crashPoint, l => Option.when(l != "pq")(
+      s"a '$l' layout: retrainIndexPq re-encodes residual-code ('pq') " +
+        "indexes from the primary store — use retrainIndex for " +
+        "self-contained layouts")) { (idx, _, ids) =>
+      // the ID SET is the election here: every copy of a vec_id
       // re-encodes to the same codes under the new artifacts, so
-      // newest-wins tie-breaking among copies is moot — what matters is
-      // that invisible (tombstoned / crashed) ids stay out
-      val ids = visible.select("vec_id").distinct()
-      val corpus = quantize(primary, attrs).join(ids, Seq("vec_id"))
+      // newest-wins tie-breaking among copies is moot
+      val corpus = quantize(primary, attrs)
+        .join(idx.select("vec_id").distinct(), Seq("vec_id"))
         .localCheckpoint(eager = true) // read by coarse + book training
       // EXACTLY the batch knnIvfPq training chain (seed-safe seeding —
       // identical to the batch trainer whenever ids 0..k-1 are present,
@@ -1219,15 +947,16 @@ object StreamingAnn {
       val res = Ann.pqResiduals(corpus, cent, attrs)
         .localCheckpoint(eager = true) // 4 subspaces × training reads
       val books = trainBooks(res, pqK, iterations)
-      Rebuilt(Ann.pqEncodedFromQ(res, books), cent, Some(books),
-        Seq(res, corpus))
-    }
+      Some(Rebuilt(Ann.pqEncodedFromQ(res, books)
+        .select(leafColumns("pq", attrs): _*), rebuiltId(ids), Some(cent),
+        Some(books), cached = Seq(res, corpus)))
+    }.getOrElse(throw new IllegalStateException(s"nothing to retrain at $indexDir"))
   }
 
   /** Codified drift cadence — the retrain analog of
     * [[compactIfNeeded]]: read the index's cell-share distribution
     * (one [[indexStats]] pass over the serving generation) and
-    * retrain when the hottest visible cell's corpus share exceeds
+    * retrain when the hottest cell's corpus share exceeds
     * `maxShareBp`. Cell-share collapse IS the measured drift signal
     * on this engine (BASELINE §ANN quality: a stale model's probe
     * bound degenerates toward one giant cell — "recall 1.0" as a
@@ -1251,8 +980,7 @@ object StreamingAnn {
     graft.core.Validation.validate("index-maintenance",
       graft.core.Validation.knob("iterations", iterations, minV = 1L))
     val root = resolveRoot(indexDir)
-    val excluded = excludedBatchIds(root)
-    if (listLeaves(root).forall(l => excluded.contains(l._2))) return None
+    if (listLeaves(root).isEmpty) return None
     val worst = indexStats(spark, indexDir)
       .agg(max(col("share_bp"))).head().getLong(0)
     if (worst > maxShareBp) {
@@ -1265,189 +993,52 @@ object StreamingAnn {
     } else None
   }
 
-  /** Reclaim non-serving generations — the grace-priced owner pass
-    * that completes [[retrainIndex]]'s cutover (which deletes
-    * nothing). Removes every `gen-N` dir other than the current one
-    * and, once a generation pointer exists, the flat generation-0
-    * remnants at the index root (its `cell=*` leaves, ledger,
-    * manifest, and layout stamp). Same operational class as
-    * [[vacuumIndex]]: run it only when no reader planned against the
-    * old generation can still be in flight. Returns the number of
-    * generation roots reclaimed.
+  /** Reclaim generations — the grace-priced owner pass that completes
+    * every cutover (which deletes nothing). Keeps the serving
+    * generation and the `grace` generations just below it (the flat
+    * root is generation 0); removes every older `_gen-N` dir and, once
+    * generation 0 is older, the flat remnants at the index root (its
+    * `cell=*` leaves and layout stamp, and crashed [[Durable.write]]
+    * temp files of those and of `_current`). An unflipped build above
+    * the serving generation (a crashed cutover) is always removed. Run
+    * it only when no reader planned against a reclaimed generation can
+    * still be in flight. Returns the number of generation roots
+    * reclaimed.
     *
-    * A crashed flat-generation compaction is SETTLED first
-    * ([[recoverAt]] on the flat root — its manifest encodes a
-    * rollback/roll-forward that must not be skipped by blind
-    * deletion), and crashed writes of the flat root's files (their
-    * [[Durable.write]] temp files, `_current`'s included) are swept in
-    * the same pass. The remnant list stays an ALLOWLIST on purpose: an
-    * artifact this code did not write (a user file dropped in the
-    * index dir) is never deleted.
+    * The remnant list stays an ALLOWLIST on purpose: an artifact this
+    * code did not write (a user file dropped in the index dir) is
+    * never deleted.
     */
-  def vacuumGenerations(indexDir: String): Int =
-    readCurrentGen(indexDir) match {
-      case None => 0 // flat layout: nothing to reclaim
-      case Some(cur) =>
-        recoverAt(indexDir) // settle any crashed flat-gen compaction
-        val root = java.nio.file.Paths.get(indexDir)
-        var n = 0
-        var flatReclaimed = false
-        val s = java.nio.file.Files.list(root)
-        val entries = try s.iterator().asScala.toSeq finally s.close()
-        entries.foreach { p =>
-          val name = p.getFileName.toString
-          val oldGen = name.startsWith("_gen-") && name != s"_gen-$cur"
-          val flatRemnant = name.startsWith("cell=") ||
-            FlatFiles(name) || Durable.tempTarget(name)
-              .exists(t => FlatFiles(t) || t == "_current")
-          if (oldGen || flatRemnant) {
-            deleteDir(p)
-            if (oldGen) n += 1
-            // the flat generation-0 counts as ONE reclaimed root no
-            // matter how many cell=* dirs it spans
-            else if (name.startsWith("cell=")) flatReclaimed = true
-          }
-        }
-        if (flatReclaimed) n += 1
-        n
+  def vacuumGenerations(indexDir: String, grace: Int = 0): Int = {
+    graft.core.Validation.validate("index-maintenance",
+      graft.core.Validation.knob("vacuumGrace", grace, minV = 0L,
+        requiredNonZero = false))
+    val root = java.nio.file.Paths.get(indexDir)
+    if (!java.nio.file.Files.isDirectory(root)) return 0
+    val cur = readCurrentGen(indexDir).getOrElse(0L)
+    def reclaimed(gen: Long) = gen > cur || gen < cur - grace
+    val s = java.nio.file.Files.list(root)
+    val entries = try s.iterator().asScala.toSeq finally s.close()
+    val gens = entries.filter { p =>
+      val name = p.getFileName.toString
+      name.startsWith("_gen-") &&
+        name.stripPrefix("_gen-").toLongOption.exists(reclaimed)
     }
+    val flat = if (!reclaimed(0L)) Nil else entries.filter { p =>
+      val name = p.getFileName.toString
+      name.startsWith("cell=") || FlatFiles(name) ||
+        Durable.tempTarget(name).exists(t => FlatFiles(t) || t == "_current")
+    }
+    (gens ++ flat).foreach(deleteDir)
+    // the flat generation 0 counts as ONE reclaimed root no matter how
+    // many cell=* dirs it spans
+    gens.size + (if (flat.exists(_.getFileName.toString.startsWith("cell="))) 1 else 0)
+  }
 
   /** The generation-0 files [[vacuumGenerations]] reclaims at the flat
-    * root once a generation pointer exists.
+    * root once generation 0 falls out of the grace window.
     */
-  private val FlatFiles = Set("_tombstones", "_compaction", "_layout")
-
-  /** One monitor per index dir serializing ledger read-modify-writes
-    * ([[Durable.lockFor]]). The cross-process contract is
-    * single-owner anyway — and every interleaving of the owner ops is
-    * idempotent by construction (adds dedupe on (cell, batch), vacuum
-    * re-runs tolerate gone dirs, a resurrected entry only
-    * over-excludes) — but in-JVM the monitor makes a stray concurrent
-    * owner a provable no-op instead of an argued one.
-    */
-  private def ledgerLock(indexDir: String): Object = Durable.lockFor(indexDir)
-
-  /** Tombstone ledger: `(stamp, cell, batch)` lines at
-    * `_tombstones`, stamp = the generation counter ([[vacuumIndex]]'
-    * grace unit). A listed leaf is logically deleted — hidden from
-    * every reader, excluded from merges, physically present until
-    * vacuumed.
-    */
-  private[graft] def readTombstones(
-      indexDir: String): Seq[(Long, Long, Long)] =
-    readLines(tombstonePath(indexDir)).map { l =>
-      val Array(s, c, b) = l.split(",")
-      (s.toLong, c.toLong, b.toLong)
-    }
-
-  private def writeTombstones(indexDir: String,
-      entries: Seq[(Long, Long, Long)]): Unit =
-    if (entries.isEmpty) {
-      java.nio.file.Files.deleteIfExists(tombstonePath(indexDir)); ()
-    } else Durable.write(tombstonePath(indexDir),
-      entries.map { case (s, c, b) => s"$s,$c,$b" }.mkString("\n"))
-
-  /** A manifest's lines; empty when the file is missing. */
-  private def readLines(p: java.nio.file.Path): Seq[String] =
-    Durable.read(p).toSeq.flatMap(_.linesIterator)
-
-  /** Append consumed leaves under the next generation stamp.
-    * Idempotent: a crashed roll-forward re-run dedupes on (cell,
-    * batch), keeping the original stamp.
-    */
-  private def addTombstones(indexDir: String,
-      consumed: Seq[(Long, Long)]): Unit =
-    ledgerLock(indexDir).synchronized {
-      val existing = readTombstones(indexDir)
-      val have = existing.map { case (_, c, b) => (c, b) }.toSet
-      val fresh = consumed.filterNot(have)
-      if (fresh.nonEmpty) {
-        val stamp = (existing.map(_._1) :+ 0L).max + 1
-        writeTombstones(indexDir,
-          existing ++ fresh.map { case (c, b) => (stamp, c, b) })
-      }
-    }
-
-  /** Owner-side batch-id reuse (a FRESH checkpoint lineage restarts at
-    * batch 0, which an earlier compaction may have consumed): the
-    * on-disk partition id the ingest writes batch `batchId` under.
-    * When the raw id is free, that IS the raw id (the common path);
-    * when it is tombstoned, the new delivery lands in a FRESH
-    * generation-encoded partition ([[reuseId]] — eff still decodes to
-    * `batchId`, so elections treat it as the raw delivery it is)
-    * instead of reclaiming the old path. The old hidden leaves stay
-    * on disk — a reader whose plan-time snapshot predates the reuse
-    * still finds every file it listed — and age out via
-    * [[vacuumIndex]]'s grace like every other tombstoned leaf, and
-    * the stale tombstones never hide the new delivery (its id is
-    * fresh by construction). NOTHING on this path deletes a file:
-    * this closed the last owner-side delete-under-reader window.
-    *
-    * The id must be STABLE across replays of the same lineage (the
-    * idempotent-partition contract: a replayed batch must rewrite its
-    * own leaf, not mint a sibling) but FRESH across lineages, so the
-    * allocation is memoized per checkpoint lineage at
-    * `<checkpointDir>/graft-reuse-map`, written atomically BEFORE the
-    * leaf — a crash at any seam re-reads the same id. The map is
-    * consulted first so a later [[vacuumIndex]] clearing the raw id's
-    * ledger entries mid-lineage cannot flip a replay back to the raw
-    * path.
-    */
-  private[graft] def reuseSafeBatchId(indexDir: String,
-      checkpointDir: String, batchId: Long): Long =
-    ledgerLock(indexDir).synchronized {
-      readReuseMap(checkpointDir).get(batchId) match {
-        case Some(id) => id
-        case None =>
-          val dead = readTombstones(indexDir).map(_._3).toSet
-          if (!dead.contains(batchId)) batchId
-          else {
-            val taken = listLeaves(indexDir).map(_._2).toSet ++ dead
-            val id = (0L until ReuseBase).iterator
-              .map(r => reuseId(batchId, r))
-              .find(cand => !taken.contains(cand))
-              .getOrElse(throw new IllegalStateException(
-                s"reuse-generation space exhausted for batch $batchId " +
-                  s"at $indexDir"))
-            writeReuseMap(checkpointDir,
-              readReuseMap(checkpointDir) + (batchId -> id))
-            id
-          }
-      }
-    }
-
-  /** Reuse-encoded delivery ids live in the upper half of each
-    * effective slot's generation range (compaction outputs allocate
-    * from the bottom, [[compactIndexImpl]] — the two allocators can
-    * never collide). Within the reuse range, allocation order r maps
-    * DOWN from the top of the offset range (`2·ReuseBase - 1 - r`),
-    * so a LATER allocation is LESS negative and compares LARGER as an
-    * id: when two successive lineage resets reuse the same raw batch,
-    * the newest delivery wins both the compaction exemption
-    * (`maxBy (eff, id)`) and the read-time election (`src_b desc`) at
-    * equal eff — the older encoding made the stale copy win.
-    */
-  private[graft] val ReuseBase = EffScale / 2
-  private[graft] def reuseId(rawId: Long, r: Long): Long =
-    -((rawId + 2) * EffScale + 2 * ReuseBase - 1 - r)
-  private[graft] def isReuseId(id: Long): Boolean =
-    id < 0 && -id >= EffScale && (-id) % EffScale >= ReuseBase
-
-  private def reuseMapPath(checkpointDir: String) =
-    java.nio.file.Paths.get(checkpointDir, "graft-reuse-map")
-
-  private[graft] def readReuseMap(checkpointDir: String): Map[Long, Long] =
-    readLines(reuseMapPath(checkpointDir)).filter(_.nonEmpty).map { l =>
-      val Array(a, b) = l.split(","); a.toLong -> b.toLong
-    }.toMap
-
-  private def writeReuseMap(checkpointDir: String,
-      m: Map[Long, Long]): Unit =
-    Durable.write(reuseMapPath(checkpointDir),
-      m.toSeq.sorted.map { case (a, b) => s"$a,$b" }.mkString("\n"))
-
-  private def tombstonePath(indexDir: String) =
-    java.nio.file.Paths.get(indexDir, "_tombstones")
+  private val FlatFiles = Set("_layout")
 
   /** The index family has three on-disk layouts sharing one
     * compactor and one directory convention — `full` (v/norm2
@@ -1598,54 +1189,25 @@ object StreamingAnn {
           throw new IllegalStateException(legacyLayoutMsg(indexDir))
     }
 
-  /** Parse the two-phase compaction manifest: (state, outId, consumed
-    * (cell, batch) leaves), or None when absent — including the window
-    * where a concurrent owner deletes it between our existence check
-    * and the read (atomic rename means a present manifest is never
-    * torn).
-    */
-  private[graft] def readManifest(
-      indexDir: String): Option[(String, Long, Seq[(Long, Long)])] =
-    Durable.read(manifestPath(indexDir)).map { body =>
-      val lines = body.linesIterator.toSeq
-      val consumed = lines.drop(2).map { l =>
-        val Array(c, b) = l.split(",")
-        (c.toLong, b.toLong)
-      }
-      (lines(0), lines(1).toLong, consumed)
-    }
-
   /** Operational stats of an on-disk index (any layout): per cell —
     * leaf count (the compaction-cadence signal: ST7's one scale defect
     * is unbounded leaf accumulation), row count, and corpus share in
     * basis points (the on-disk twin of the batch cell-balance report
     * [[Ann.cellBalance]] — a hot cell degrades the probe bound of
-    * every query against this index). Honors the same manifest
-    * visibility rules as the query paths, so stats during/after a
-    * crashed compaction describe exactly what queries see. Leaf counts
-    * from directory metadata; row counts one column-pruned scan.
+    * every query against this index), over the serving generation the
+    * query paths read. Leaf counts from directory metadata; row counts
+    * one column-pruned scan.
     */
   def indexStats(spark: SparkSession, indexDir: String): DataFrame = {
     import spark.implicits._
     val root = resolveRoot(indexDir) // serving generation
-    // ONE exclusion snapshot (manifest + tombstone ledger) drives both
-    // the leaf-level and the row-level exclusion: two reads could
-    // straddle an owner recovery and describe two different index
-    // states in one stats row
-    val excluded = excludedBatchIds(root)
-    val visibility =
-      if (excluded.isEmpty) None
-      else Some(!col("ingest_batch").isin(excluded.toSeq.sorted: _*))
-    val leaves = listLeaves(root)
-    val visible = leaves.filterNot { case (_, b) => excluded.contains(b) }
-    val leafCounts = visible.groupBy(_._1)
+    val leafCounts = listLeaves(root).groupBy(_._1)
       .map { case (c, ls) => (c, ls.size.toLong) }.toSeq
       .toDF("cell", "n_leaves")
-    val idx0 = spark.read.parquet(root)
-    val idx = visibility.fold(idx0)(idx0.filter)
-    // distinct vec_ids: a replayed leaf can transiently duplicate rows
-    // the compacted output holds — queries elect one copy
-    // (newestPerCandidate), so the stats count what queries count
+    val idx = spark.read.parquet(root)
+    // distinct vec_ids: a replayed leaf can duplicate rows a rebuilt
+    // leaf holds — queries elect one copy ([[newest]]), so the stats
+    // count what queries count
     val nTot = broadcast(idx.agg(
       countDistinct(col("vec_id")).as("n_total")))
     idx.groupBy("cell").agg(countDistinct(col("vec_id")).as("n_rows"))
@@ -1674,28 +1236,11 @@ object StreamingAnn {
       bn.stripPrefix("ingest_batch=").toLong)
   }
 
-  private def manifestPath(indexDir: String) =
-    java.nio.file.Paths.get(indexDir, "_compaction")
-
-  private def writeManifest(indexDir: String, state: String, outId: Long,
-      consumed: Seq[(Long, Long)]): Unit =
-    Durable.write(manifestPath(indexDir), (Seq(state, outId.toString) ++
-      consumed.map { case (c, b) => s"$c,$b" }).mkString("\n"))
-
   private def deleteDir(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
-      // tolerate a concurrent recoverer deleting entries mid-walk: the
-      // goal state (dir gone) is shared, so per-entry NoSuchFile is a
-      // success, not a failure
-      val s = try java.nio.file.Files.walk(p) catch {
-        case _: java.nio.file.NoSuchFileException => return
-      }
+      val s = java.nio.file.Files.walk(p)
       try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().forEachRemaining { q =>
-          try java.nio.file.Files.delete(q) catch {
-            case _: java.nio.file.NoSuchFileException => ()
-          }
-        }
+        .iterator().forEachRemaining(java.nio.file.Files.delete(_))
       finally s.close()
     }
 
@@ -1707,16 +1252,9 @@ object StreamingAnn {
     * by the storage layout. Exact cosine rerank within the probed
     * cells, same tie-break as [[Ann.knnIvfTrained]].
     *
-    * NON-DESTRUCTIVE under a crashed or in-flight compaction: the
-    * two-phase manifest is a visibility filter, not a recovery
-    * trigger — under `intent` the (possibly mid-write) compacted
-    * output is excluded and the intact consumed leaves are read;
-    * under `committed` the consumed leaves are excluded and the
-    * durable output is read. Either way exactly one complete copy of
-    * every row is visible, and the reader never deletes anything
-    * (owner-only recovery — see [[recoverIndex]]). Both exclusions
-    * are `ingest_batch` predicates, so they prune at the partition
-    * level like the cell filter.
+    * Reads the serving generation only: an unflipped build is
+    * invisible until its `_current` cutover, and the reader never
+    * deletes anything.
     */
   def queryIndex(spark: SparkSession, indexDir: String, modelPath: String,
       queries: DataFrame, k: Int, probes: Int = 1): DataFrame =
@@ -1727,7 +1265,7 @@ object StreamingAnn {
     * attribute columns the ingest carried into the leaves
     * ([[ivfIngest]]'s `attrs`) and is applied to the probed-cell scan
     * BEFORE scoring and election — a parquet data filter alongside the
-    * cell/visibility PartitionFilters, never a post-filter of the
+    * cell PartitionFilter, never a post-filter of the
     * finished top-k (which would silently under-return). Same model,
     * same probes, same election: the batch/on-disk parity contract
     * extends to the filtered pair (spec-pinned).
@@ -1754,8 +1292,8 @@ object StreamingAnn {
     * once — same driver-side footprint as the cell ranking this path
     * already does), satisfied queries never pay the escalated scan,
     * and BOTH passes keep the predicate composed into the probed-cell
-    * scan (a parquet data filter next to the cell/visibility
-    * PartitionFilters — the pass-2 `isin` widens only to the cells
+    * scan (a parquet data filter next to the cell PartitionFilter —
+    * the pass-2 `isin` widens only to the cells
     * some dry query actually needs). Result parity with the batch
     * escalated operator at the same geometry is spec-pinned, including
     * through compaction.
@@ -1792,21 +1330,21 @@ object StreamingAnn {
 
   /** The one probe-scan-elect sequence behind every `queryIndex*`
     * entry point, whatever the layout:
-    *  - resolve the serving generation ONCE and read the layout stamp,
-    *    visibility exclusions and model from that same root, so a
-    *    retrain cutover mid-request can never mix generations;
+    *  - resolve the serving generation ONCE and read the layout stamp
+    *    and model from that same root, so a cutover mid-request can
+    *    never mix generations;
     *  - quantize and collect the request-scale query set, and let the
     *    layout rank every query's cells against the frozen model
     *    driver-side (`probing`, given the resolved root, the model and
     *    the (q_id, v, norm2) query rows);
     *  - per query, keep the base tier `probes`, or with `escalate` the
     *    depth [[escalatedDepths]] decides;
-    *  - scan ONLY the probed cells: the `isin` and visibility filters
-    *    are parquet PartitionFilters (the IVF scan bound holds on disk),
+    *  - scan ONLY the probed cells: the `isin` filter is a parquet
+    *    PartitionFilter (the IVF scan bound holds on disk),
     *    the attribute predicate a pushed data filter applied before
     *    scoring and election (copies of a vec_id are byte-identical
     *    under the index contract, so it cannot flip an election);
-    *  - elect one copy per candidate ([[newestPerCandidate]]), score,
+    *  - elect one copy per candidate ([[newest]]), score,
     *    and keep the top k, same tie-break as the batch operators.
     */
   private def queryIndexSpine(spark: SparkSession, indexDir: String,
@@ -1817,7 +1355,6 @@ object StreamingAnn {
         Seq[(Long, Seq[Long], Long)]) => Probing): DataFrame = {
     val root = resolveRoot(indexDir)
     requireLayout(root, layout, caller)
-    val visibility = visibilityFilter(root)
     val model = modelFor(root, modelPath)
     val cent = loadModel(model).getOrElse(
       throw new IllegalStateException(s"no trained model at $model"))
@@ -1826,25 +1363,23 @@ object StreamingAnn {
     val p = probing(root, cent, qRows)
     val depth: Map[Long, Int] =
       if (!escalate) p.ranked.map(r => r._1 -> probes).toMap
-      else escalatedDepths(spark, root, visibility, predicate, p.ranked, k,
-        probes)
+      else escalatedDepths(spark, root, predicate, p.ranked, k, probes)
     val pairs = p.ranked.flatMap { case (qId, cells) =>
       cells.take(depth(qId)).map(qId -> _) }
-    val idx = probedScan(spark, root, pairs.map(_._2).distinct, visibility,
-      predicate)
-    Ann.topKNeighbors(newestPerCandidate(idx.join(broadcast(p.probeRows(pairs)),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id")))
+    val idx = probedScan(spark, root, pairs.map(_._2).distinct, predicate)
+    Ann.topKNeighbors(newest(idx.join(broadcast(p.probeRows(pairs)),
+        col("cell") === col("qcell") && col("vec_id") =!= col("q_id")),
+        "q_id", "vec_id")
       .withColumn(p.score, p.scoreExpr), k, p.score, p.desc)
   }
 
   /** The scan of the probed cells of a resolved root: the `cell isin`
-    * and visibility filters prune partitions, the attribute predicate
-    * is a pushed data filter.
+    * filter prunes partitions, the attribute predicate is a pushed data
+    * filter.
     */
   private def probedScan(spark: SparkSession, root: String, cells: Seq[Long],
-      visibility: Option[Column], predicate: Option[Column]): DataFrame = {
-    val idx0 = spark.read.parquet(root).filter(col("cell").isin(cells: _*))
-    val idx1 = visibility.fold(idx0)(idx0.filter)
-    predicate.fold(idx1)(idx1.filter)
+      predicate: Option[Column]): DataFrame = {
+    val idx = spark.read.parquet(root).filter(col("cell").isin(cells: _*))
+    predicate.fold(idx)(idx.filter)
   }
 }

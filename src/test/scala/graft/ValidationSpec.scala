@@ -235,7 +235,7 @@ class ValidationSpec extends SparkSuite {
     import graft.streaming.StreamingAnn
     val dir = tmpDir("validation-idx")
     val e1 = intercept[GraftConfigException] {
-      StreamingAnn.vacuumIndex(dir, grace = -1)
+      StreamingAnn.vacuumGenerations(dir, grace = -1)
     }
     assert(violationsOf(e1) === Seq("vacuumGrace: is less than 0"))
     intercept[GraftConfigException] {
