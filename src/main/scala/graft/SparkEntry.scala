@@ -450,12 +450,9 @@ object SparkEntry {
       Ann.semanticDedup(Tables.embeddings(s, dir), SemDedupCosBp,
         kCells = 32).orderBy("vec_id")),
 
-    // Large-K twin: 256 cells x 64 dims exceeds the literal-inlining
-    // bound, so the SERVING assignment (guarded-cosine argmax) rides
-    // the broadcast CentroidMatrix expression — the SemDeDup read
-    // path gated end-to-end at the K regime its own kCells ∝ corpus
-    // rule prescribes (a_kmeans_train_k256 gates the L2 training
-    // twin; this gates nearestCos).
+    // Large-K twin: the SemDeDup read path gated end-to-end at the K
+    // regime its own kCells ∝ corpus rule prescribes (256 cells; the
+    // L2 training side is a_kmeans_train_k256).
     "d_semantic_dedup_k256" -> ((s, dir) =>
       Ann.semanticDedup(Tables.embeddings(s, dir), SemDedupCosBp,
         kCells = 256).orderBy("vec_id")),
@@ -1164,7 +1161,10 @@ object SparkEntry {
   val LineBoilerMax = 4L
 
   // ------------------------------------------------------------------
-  // DuckDB oracles. Shared CTE fragments keep the two sides in lockstep.
+  // DuckDB oracles. Every fragment two oracles share is written once
+  // below, as a private builder whose scaladoc names the Spark helper
+  // it mirrors; the oracles compose those builders and keep only the
+  // SQL that is their own.
   // ------------------------------------------------------------------
 
   private val MsgCte = MessageFraming.sqlCte()
@@ -1187,6 +1187,27 @@ object SparkEntry {
        |  WHERE seg_seq < $CkptSegs AND message_count = $SegMaxMessages
        |  GROUP BY part_id
        |)""".stripMargin
+
+  /** Each segment of `src` with the running max of the earlier end
+    * offsets (mirrors graft.operators.Coverage).
+    */
+  private def prevEndCte(src: String) =
+    s"""g AS (
+       |  SELECT part_id, start_offset,
+       |         max(end_offset) OVER (PARTITION BY part_id ORDER BY start_offset, end_offset
+       |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
+       |  FROM $src
+       |)""".stripMargin
+
+  /** The offset ranges no segment of `src` covers (mirrors
+    * GapDetector.lostRanges).
+    */
+  private def lostRangesSql(src: String) =
+    s"""${prevEndCte(src)}
+       |SELECT part_id, prev_end + 1 AS lost_start, start_offset - 1 AS lost_end,
+       |       start_offset - prev_end - 1 AS lost_count
+       |FROM g WHERE prev_end IS NOT NULL AND start_offset > prev_end + 1
+       |ORDER BY part_id, lost_start""".stripMargin
 
   private val PlanCte =
     s"""plan_src AS (
@@ -1283,6 +1304,24 @@ object SparkEntry {
        |)""".stripMargin
 
   private lazy val BpeTokCte = bpeTokCteOver("norm")
+
+  /** Per-language tokenizer fit (fertility, chars per token) over the
+    * BPE chain `bpe` (mirrors TextAnalysis.tokenizerFit).
+    */
+  private def tokenizerFitSql(bpe: String) =
+    s"""WITH RECURSIVE $NormCte, $bpe
+       |SELECT d.lang, count(*)::BIGINT AS n_docs,
+       |       sum(d.n_chars)::BIGINT AS n_chars,
+       |       sum(len(string_split(n.t, ' ')))::BIGINT AS ws_tokens,
+       |       sum(b.bpe_tokens)::BIGINT AS bpe_tokens,
+       |       (CASE WHEN sum(len(string_split(n.t, ' '))) = 0 THEN NULL
+       |        ELSE sum(b.bpe_tokens) * 100 // sum(len(string_split(n.t, ' '))) END)::BIGINT
+       |         AS fertility_pct,
+       |       (CASE WHEN sum(b.bpe_tokens) = 0 THEN NULL
+       |        ELSE sum(d.n_chars) * 100 // sum(b.bpe_tokens) END)::BIGINT
+       |         AS chars_per_tok_pct
+       |FROM documents d JOIN norm n USING (doc_id) JOIN bpedoc b USING (doc_id)
+       |GROUP BY d.lang ORDER BY d.lang""".stripMargin
 
   /** Token-ID chain over the BPE fixpoint (requires [[BpeTokCte]]'s
     * `fin(w, s)` + `merges` in scope): split each word's terminal
@@ -1409,6 +1448,46 @@ object SparkEntry {
        |  FROM marked, generate_series(0, ${SpanW - 1}) g(j)
        |)""".stripMargin
 
+  /** The heuristic quality features over `norm` (mirrors
+    * TextAnalysis.qualityScore's inputs): word count, letters,
+    * stop-word hits, alphabetic and raw text length, plus the `carry`
+    * columns.
+    */
+  private def qualityFeaturesCte(name: String, carry: String = "") =
+    s"""$name AS (
+       |  SELECT doc_id,$carry
+       |    len(string_split(t, ' '))::BIGINT AS wc,
+       |    length(replace(t, ' ', ''))::BIGINT AS letters,
+       |    len(list_filter(string_split(t, ' '),
+       |      x -> x IN ('the','a','and','of','to','in','is','on','for','with')))::BIGINT AS sw_hits,
+       |    length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::BIGINT AS alpha_len,
+       |    length(text)::BIGINT AS text_len
+       |  FROM norm
+       |)""".stripMargin
+
+  /** The four-rule 0–100 heuristic score over [[qualityFeaturesCte]]'s
+    * columns (mirrors TextAnalysis.qualityScore); `p` prefixes them.
+    */
+  private def sqlQualityScore(p: String = "") =
+    s"""(CASE WHEN ${p}wc BETWEEN 20 AND 1000 THEN 25 ELSE 0 END
+       |  + CASE WHEN (${p}letters * 10 // ${p}wc) BETWEEN 30 AND 100 THEN 25 ELSE 0 END
+       |  + CASE WHEN ${p}sw_hits * 100 >= ${p}wc * 5 THEN 25 ELSE 0 END
+       |  + CASE WHEN ${p}alpha_len * 100 >= ${p}text_len * 60 THEN 25 ELSE 0 END)""".stripMargin
+
+  /** Marker-word hits per (doc, candidate language) over `tok`
+    * (mirrors TextAnalysis.langId's marker table).
+    */
+  private val LangMarkerCtes =
+    """markers(cand_lang, marker) AS (VALUES
+      |  ('en','the'),('en','a'),('en','and'),('en','of'),
+      |  ('de','der'),('de','und'),('de','das'),('de','die'),
+      |  ('fr','le'),('fr','et'),('fr','la'),('fr','les'),
+      |  ('es','el'),('es','y'),('es','los'),('es','de')),
+      |hits AS (
+      |  SELECT doc_id, cand_lang, count(*)::BIGINT AS n_hits
+      |  FROM tok JOIN markers ON tok = marker GROUP BY 1, 2
+      |)""".stripMargin
+
   /** The curation pipeline's stage CTEs (keepers / quality / langp /
     * contam / spl — mirrors Pipelines.curatedCorpus's per-stage
     * operators), shared by the `p_curated_corpus` and
@@ -1419,34 +1498,14 @@ object SparkEntry {
   private lazy val CurationStageCtes =
     s"""labels AS (SELECT doc_id, min(r) AS cluster_id FROM reach GROUP BY doc_id),
        |keepers AS (SELECT doc_id FROM labels WHERE doc_id = cluster_id),
-       |qm AS (
-       |  SELECT doc_id,
-       |    len(string_split(t, ' '))::BIGINT AS wc,
-       |    length(replace(t, ' ', ''))::BIGINT AS letters,
-       |    len(list_filter(string_split(t, ' '),
-       |      x -> x IN ('the','a','and','of','to','in','is','on','for','with')))::BIGINT AS sw_hits,
-       |    length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::BIGINT AS alpha_len,
-       |    length(text)::BIGINT AS text_len
-       |  FROM norm
-       |),
+       |${qualityFeaturesCte("qm")},
        |quality AS (
        |  SELECT doc_id,
-       |    (CASE WHEN wc BETWEEN 20 AND 1000 THEN 25 ELSE 0 END
-       |     + CASE WHEN (letters * 10 // wc) BETWEEN 30 AND 100 THEN 25 ELSE 0 END
-       |     + CASE WHEN sw_hits * 100 >= wc * 5 THEN 25 ELSE 0 END
-       |     + CASE WHEN alpha_len * 100 >= text_len * 60 THEN 25 ELSE 0 END)::INT AS score
+       |    ${sqlQualityScore()}::INT AS score
        |  FROM qm
        |),
        |$TokCte,
-       |markers(cand_lang, marker) AS (VALUES
-       |  ('en','the'),('en','a'),('en','and'),('en','of'),
-       |  ('de','der'),('de','und'),('de','das'),('de','die'),
-       |  ('fr','le'),('fr','et'),('fr','la'),('fr','les'),
-       |  ('es','el'),('es','y'),('es','los'),('es','de')),
-       |hits AS (
-       |  SELECT doc_id, cand_lang, count(*)::BIGINT AS n_hits
-       |  FROM tok JOIN markers ON tok = marker GROUP BY 1, 2
-       |),
+       |$LangMarkerCtes,
        |best AS (
        |  SELECT doc_id, cand_lang FROM (
        |    SELECT *, row_number() OVER (PARTITION BY doc_id
@@ -1473,46 +1532,77 @@ object SparkEntry {
        |        FROM documents)
        |)""".stripMargin
 
-  /** MinHash → band → verify → connected-components chain over `sh`
-    * (requires WITH RECURSIVE; mirrors Dedup.minhashLsh +
-    * dedupClusters). Ends at `reach`; consumers derive labels/keepers.
+  /** MinHash signature → band chain over `sh` (mirrors
+    * Dedup.minhashSignatures and its band key): `params(hash_id, ha,
+    * hb)` from the SAME Scala family the Spark side uses
+    * (Dedup.hashParams), per-hash minima, and `rows` minima per band
+    * combined by Dedup.bandKeyExpr. Ends at `banded`.
     */
-  private lazy val ClusterCtes =
-    s"""params(hash_id, ha, hb) AS (VALUES
-       |  (0, 952211, 37199), (1, 370259, 915583), (2, 768389, 68477),
-       |  (3, 113111, 331777), (4, 597269, 749341), (5, 286871, 55411),
-       |  (6, 851423, 426389), (7, 104729, 711871)),
+  private def bandedCtes(bands: Int, rows: Int): String = {
+    val params = Dedup.hashParams(bands * rows).zipWithIndex
+      .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
+    val mhs = (0 until rows)
+      .map(r => s"min(CASE WHEN hash_id % $rows = $r THEN minhash END)")
+    s"""params(hash_id, ha, hb) AS (VALUES $params),
        |sig AS (
        |  SELECT doc_id, hash_id,
        |         min((ha * (h % 1048576) + hb) % 1048573) AS minhash
        |  FROM sh, params GROUP BY doc_id, hash_id
        |),
        |banded AS (
-       |  SELECT doc_id, (hash_id // 2)::INT AS band,
-       |         (min(CASE WHEN hash_id % 2 = 0 THEN minhash END) * 1048583
-       |           + min(CASE WHEN hash_id % 2 = 1 THEN minhash END))::BIGINT AS band_key
-       |  FROM sig GROUP BY doc_id, (hash_id // 2)::INT
-       |),
-       |cands AS (
+       |  SELECT doc_id, (hash_id // $rows)::INT AS band,
+       |         (${Dedup.bandKeyExpr(mhs)})::BIGINT AS band_key
+       |  FROM sig GROUP BY doc_id, (hash_id // $rows)::INT
+       |)""".stripMargin
+  }
+
+  private val SzCte = "sz AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM sh GROUP BY 1)"
+
+  /** Band-collision candidates `cands(doc_a, doc_b)` (`pairPred`
+    * narrows the pair side), the shingle counts `sz` and the
+    * shared-shingle count `pairs` — the verify input of every MinHash
+    * oracle (mirrors Dedup.sharedShingles). Requires `banded`.
+    */
+  private def candPairsCtes(pairPred: String = "AND x.doc_id < y.doc_id") =
+    s"""cands AS (
        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
        |  FROM banded x JOIN banded y
-       |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id
+       |    ON x.band = y.band AND x.band_key = y.band_key $pairPred
        |),
-       |sz AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM sh GROUP BY 1),
+       |$SzCte,
        |pairs AS (
        |  SELECT c.doc_a, c.doc_b, count(*)::BIGINT AS inter
        |  FROM cands c
        |  JOIN sh sa ON sa.doc_id = c.doc_a
        |  JOIN sh sb ON sb.doc_id = c.doc_b AND sb.h = sa.h
        |  GROUP BY 1, 2
-       |),
-       |verified AS (
+       |)""".stripMargin
+
+  /** The legacy 4-band × 2-row MinHash chain through `pairs`. */
+  private lazy val MinhashCandCtes = s"${bandedCtes(4, 2)},\n${candPairsCtes()}"
+
+  /** Exact Jaccard in basis points of each candidate pair, over
+    * `pairs` and `sz` (mirrors Dedup's Jaccard filter).
+    */
+  private val JaccBpFrom =
+    """round(p.inter * 10000.0 / (x.n_sh + y.n_sh - p.inter), 0)::BIGINT AS jacc_bp
+      |  FROM pairs p JOIN sz x ON x.doc_id = p.doc_a JOIN sz y ON y.doc_id = p.doc_b""".stripMargin
+
+  private lazy val VerifiedCte =
+    s"""verified AS (
        |  SELECT doc_a, doc_b FROM (
        |    SELECT p.doc_a, p.doc_b,
-       |           round(p.inter * 10000.0 / (x.n_sh + y.n_sh - p.inter), 0)::BIGINT AS jacc_bp
-       |    FROM pairs p JOIN sz x ON x.doc_id = p.doc_a JOIN sz y ON y.doc_id = p.doc_b
+       |           $JaccBpFrom
        |  ) WHERE jacc_bp >= $NgramJaccardBp
-       |),
+       |)""".stripMargin
+
+  /** MinHash → band → verify → connected-components chain over `sh`
+    * (requires WITH RECURSIVE; mirrors Dedup.minhashLsh +
+    * dedupClusters). Ends at `reach`; consumers derive labels/keepers.
+    */
+  private lazy val ClusterCtes =
+    s"""$MinhashCandCtes,
+       |$VerifiedCte,
        |e AS (
        |  SELECT doc_a AS a, doc_b AS b FROM verified
        |  UNION ALL
@@ -1524,6 +1614,14 @@ object SparkEntry {
        |  SELECT e.b, reach.r FROM reach JOIN e ON reach.doc_id = e.a
        |)""".stripMargin
 
+  /** The unigram + `_`-joined bigram grams of a token list `a`, one row
+    * each (mirrors TextAnalysis.gramBuckets).
+    */
+  private val UniBigrams =
+    """unnest(list_concat(a,
+      |      list_transform(range(1, len(a)),
+      |        i -> a[i::INT] || '_' || a[(i+1)::INT])))""".stripMargin
+
   /** T21 learned-quality-model chain (assumes `norm` in scope): the
     * heuristic labels + hash-split stratum (`lab`), hashed n-gram
     * bucket counts over the train stratum, the integer
@@ -1533,33 +1631,19 @@ object SparkEntry {
     * cannot drift apart. Does NOT end in a comma.
     */
   private lazy val QualityModelCtes =
-    s"""qmm AS (
-       |  SELECT doc_id, t, text,
-       |    len(string_split(t, ' '))::BIGINT AS wc,
-       |    length(replace(t, ' ', ''))::BIGINT AS letters,
-       |    len(list_filter(string_split(t, ' '),
-       |      x -> x IN ('the','a','and','of','to','in','is','on','for','with')))::BIGINT AS sw_hits,
-       |    length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::BIGINT AS alpha_len,
-       |    length(text)::BIGINT AS text_len
-       |  FROM norm
-       |),
+    s"""${qualityFeaturesCte("qmm", carry = " t, text,")},
        |lab AS (
        |  SELECT doc_id,
        |    (CASE WHEN (('0x' || substr(md5(doc_id::VARCHAR),1,15))::BIGINT % 100) < 50
        |          THEN 1 ELSE 0 END)::BIGINT AS in_train,
-       |    (CASE WHEN (CASE WHEN wc BETWEEN 20 AND 1000 THEN 25 ELSE 0 END
-       |       + CASE WHEN (letters * 10 // wc) BETWEEN 30 AND 100 THEN 25 ELSE 0 END
-       |       + CASE WHEN sw_hits * 100 >= wc * 5 THEN 25 ELSE 0 END
-       |       + CASE WHEN alpha_len * 100 >= text_len * 60 THEN 25 ELSE 0 END) = 100
+       |    (CASE WHEN ${sqlQualityScore()} = 100
        |     THEN 1 ELSE 0 END)::BIGINT AS lbl
        |  FROM qmm
        |),
        |qgrams AS (
        |  SELECT doc_id, (${sqlH60("gram")} % 1024) AS g
        |  FROM (
-       |    SELECT doc_id, unnest(list_concat(a,
-       |      list_transform(range(1, len(a)),
-       |        i -> a[i::INT] || '_' || a[(i+1)::INT]))) AS gram
+       |    SELECT doc_id, $UniBigrams AS gram
        |    FROM (SELECT doc_id, string_split(t, ' ') AS a FROM norm)
        |  )
        |),
@@ -1585,6 +1669,33 @@ object SparkEntry {
 
   private def sqlH60(e: String) = graft.functions.Portable.sqlHexHash60(e)
   private def sqlH20(e: String) = graft.functions.Portable.sqlHexHash20(e)
+
+  /** Per-document packing input `d(doc_id, n_tok, shard, ord_h)` over
+    * `from` (`p` prefixes its norm columns): 8 hash shards, content-hash
+    * order (mirrors Curation.packSequences).
+    */
+  private def packDocsCte(p: String, nTok: String, from: String) =
+    s"""d AS (
+       |  SELECT ${p}doc_id, $nTok AS n_tok,
+       |         (${sqlH20(s"${p}doc_id::VARCHAR")} % 8)::BIGINT AS shard,
+       |         ${sqlH60(s"${p}t")} AS ord_h
+       |  FROM $from
+       |)""".stripMargin
+
+  /** Running token count per shard in packing order. */
+  private val PackCumCte =
+    """c AS (
+      |  SELECT shard, n_tok,
+      |         sum(n_tok) OVER (PARTITION BY shard ORDER BY ord_h, doc_id
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+      |  FROM d
+      |)""".stripMargin
+
+  /** First-fit 256-token sequences: documents and tokens per sequence. */
+  private val PackSeqsSql =
+    """SELECT shard, ((cum - n_tok) // 256)::BIGINT AS seq_id,
+      |       count(*)::BIGINT AS n_docs, sum(n_tok)::BIGINT AS n_tokens
+      |FROM c GROUP BY shard, seq_id""".stripMargin
 
   /** Target-mixture CTEs shared by both resample oracles (mirrors
     * Curation.DefaultShares + the `target_n` election).
@@ -1667,23 +1778,14 @@ object SparkEntry {
   private def semanticDedupSql(kCells: Int): String = {
     val (ctes, _, cent) = kmeansCtes(k = kCells, iterations = 2)
     s"""$ctes,
-       |rankedc AS (
-       |  SELECT qn.vec_id, qn.v, qn.norm2, c.c_id,
-       |    row_number() OVER (PARTITION BY qn.vec_id ORDER BY
-       |      (CASE WHEN c.cn2 = 0 OR qn.norm2 = 0 THEN -2.0
-       |       ELSE (list_sum(list_transform(range(1,65), i -> c.cv[i::INT]*qn.v[i::INT])))::DOUBLE
-       |        / (sqrt(c.cn2::DOUBLE) * sqrt(qn.norm2::DOUBLE)) END) DESC, c.c_id) AS c_rn
-       |  FROM qn, $cent c
-       |),
-       |cells AS (
-       |  SELECT vec_id, v, norm2, c_id AS cell FROM rankedc WHERE c_rn = 1
-       |),
+       |${rankedcCte(cent)},
+       |${assignedCte("cells")},
        |dropped AS (
        |  SELECT DISTINCT x.vec_id
        |  FROM cells x JOIN cells y
        |    ON y.cell = x.cell AND y.vec_id < x.vec_id
        |  WHERE round((CASE WHEN x.norm2 = 0 OR y.norm2 = 0 THEN -2.0
-       |    ELSE (list_sum(list_transform(range(1,65), i -> x.v[i::INT]*y.v[i::INT])))::DOUBLE
+       |    ELSE (${sqlDot("x.v", "y.v")})::DOUBLE
        |      / (sqrt(x.norm2::DOUBLE)*sqrt(y.norm2::DOUBLE)) END) * 10000)::BIGINT
        |    >= $SemDedupCosBp
        |)
@@ -1697,45 +1799,46 @@ object SparkEntry {
     * assumes a frame `src(vec_id, v, norm2)` of `dims`-dim integer
     * vectors is already in CTE scope; seeds are `vec_id < k`; training
     * assignment is squared-L2 argmin with c_id tiebreak (mirrors
-    * Ann.kmeansAssign). Returns (CTE block, final assignment CTE name,
-    * final centroid CTE name).
+    * Ann.kmeansAssign). CTEs are named `<cent>N` / `<asg>N`, `alias`
+    * is the row alias of `src`. Returns (CTE block, final assignment
+    * CTE name, final centroid CTE name).
     */
   private def kmeansChainCtes(k: Int, iterations: Int, dims: Int,
-      src: String): (String, String, String) = {
-    def dot(v: String, c: String) =
-      s"list_sum(list_transform(range(1,${dims + 1}), j -> $v[j::INT]*$c[j::INT]))"
+      src: String, asgName: String = "asg", centName: String = "cent",
+      alias: String = "s"): (String, String, String) = {
+    val a = alias
     def asg(n: Int, cent: String) =
-      s"""asg$n AS (
+      s"""$asgName$n AS (
          |  SELECT vec_id, v, norm2, c_id AS cluster, d FROM (
          |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, c_id) AS rn
          |    FROM (
-         |      SELECT s.vec_id, s.v, s.norm2, c.c_id,
-         |             (s.norm2 - 2*${dot("s.v", "c.cv")} + c.cn2)::BIGINT AS d
-         |      FROM $src s, $cent c
+         |      SELECT $a.vec_id, $a.v, $a.norm2, c.c_id,
+         |             ($a.norm2 - 2*${sqlDot(s"$a.v", "c.cv", dims, "j")} + c.cn2)::BIGINT AS d
+         |      FROM $src $a, $cent c
          |    )
          |  ) WHERE rn = 1
          |)"""
     def cent(n: Int) =
-      s"""cent$n AS (
+      s"""$centName$n AS (
          |  SELECT c_id, cv, list_sum(list_transform(cv, x -> x*x))::BIGINT AS cn2
          |  FROM (
          |    SELECT cluster AS c_id, list(comp ORDER BY dim) AS cv FROM (
          |      SELECT cluster, dim, (sum(comp)::BIGINT // count(*)::BIGINT)::BIGINT AS comp
          |      FROM (SELECT cluster, r.dim, v[(r.dim+1)::INT] AS comp
-         |            FROM asg$n, range(0, $dims) r(dim))
+         |            FROM $asgName$n, range(0, $dims) r(dim))
          |      GROUP BY cluster, dim
          |    ) GROUP BY cluster
          |  )
          |)"""
     val chain = (1 to iterations)
-      .map(i => asg(i, s"cent${i - 1}") + ",\n" + cent(i)).mkString(",\n")
-    val ctes = s"""cent0 AS (
+      .map(i => asg(i, s"$centName${i - 1}") + ",\n" + cent(i)).mkString(",\n")
+    val ctes = s"""${centName}0 AS (
        |  SELECT vec_id::BIGINT AS c_id, v AS cv, norm2 AS cn2 FROM $src
        |  WHERE vec_id < $k
        |),
        |$chain,
-       |${asg(iterations + 1, s"cent$iterations")}""".stripMargin
-    (ctes, s"asg${iterations + 1}", s"cent$iterations")
+       |${asg(iterations + 1, s"$centName$iterations")}""".stripMargin
+    (ctes, s"$asgName${iterations + 1}", s"$centName$iterations")
   }
 
   /** The shared 64-dim Lloyd chain over the embeddings table (opens
@@ -1744,85 +1847,49 @@ object SparkEntry {
     */
   private def kmeansCtes(k: Int, iterations: Int): (String, String, String) = {
     val (chain, asgN, centN) = kmeansChainCtes(k, iterations, 64, "qn")
-    val ctes = s"""WITH q AS (
-       |  SELECT vec_id, list_transform(embedding, x -> round(x*1000)::BIGINT) AS v
-       |  FROM embeddings
-       |),
-       |qn AS (
-       |  SELECT vec_id, v, (list_sum(list_transform(v, x -> x*x)))::BIGINT AS norm2
-       |  FROM q
-       |),
-       |$chain""".stripMargin
-    (ctes, asgN, centN)
+    (s"WITH $QCte,\n$QnCte,\n$chain", asgN, centN)
   }
 
   /** Per-subspace k-means chains + final assignments for the PQ
     * oracles (mirrors Ann.pqCodebooks/pqEncoded: 4 × 16-dim slices,
-    * independent Lloyd's per slice). Returns (ctes, finalAsgNames,
+    * independent Lloyd's per slice, each the [[kmeansChainCtes]]
+    * chain over its slice `subS`). Returns (ctes, finalAsgNames,
     * finalCentNames); assumes a CTE `q(vec_id, v)` with the
     * milli-quantized 64-dim vectors is in scope.
     */
   private def pqCtes(k: Int, iterations: Int,
       src: String = "q"): (String, Seq[String], Seq[String]) = {
-    def dot(v: String, c: String) =
-      s"list_sum(list_transform(range(1,17), j -> $v[j::INT]*$c[j::INT]))"
-    def chain(s: Int): String = {
+    val chains = (0 until 4).map { s =>
       val lo = s * 16 + 1; val hi = s * 16 + 16
-      def asg(n: Int, cent: String) =
-        s"""pasg$s$n AS (
-           |  SELECT vec_id, v, norm2, c_id AS cluster, d FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, c_id) AS rn
-           |    FROM (
-           |      SELECT q2.vec_id, q2.v, q2.norm2, c.c_id,
-           |             (q2.norm2 - 2*${dot("q2.v", "c.cv")} + c.cn2)::BIGINT AS d
-           |      FROM sub$s q2, $cent c
-           |    )
-           |  ) WHERE rn = 1
-           |)"""
-      def cent(n: Int) =
-        s"""pcent$s$n AS (
-           |  SELECT c_id, cv, list_sum(list_transform(cv, x -> x*x))::BIGINT AS cn2
-           |  FROM (
-           |    SELECT cluster AS c_id, list(comp ORDER BY dim) AS cv FROM (
-           |      SELECT cluster, dim, (sum(comp)::BIGINT // count(*)::BIGINT)::BIGINT AS comp
-           |      FROM (SELECT cluster, r.dim, v[(r.dim+1)::INT] AS comp
-           |            FROM pasg$s$n, range(0, 16) r(dim))
-           |      GROUP BY cluster, dim
-           |    ) GROUP BY cluster
-           |  )
-           |)"""
-      val base =
-        s"""sub$s AS (
-           |  SELECT vec_id, v[$lo:$hi] AS v,
-           |         (list_sum(list_transform(v[$lo:$hi], x -> x*x)))::BIGINT AS norm2
-           |  FROM $src
-           |),
-           |pcent${s}0 AS (
-           |  SELECT vec_id::BIGINT AS c_id, v AS cv, norm2 AS cn2 FROM sub$s
-           |  WHERE vec_id < $k
-           |)"""
-      (Seq(base) ++ (1 to iterations)
-        .map(i => asg(i, s"pcent$s${i - 1}") + ",\n" + cent(i))
-        :+ asg(iterations + 1, s"pcent$s$iterations")).mkString(",\n")
+      val (chain, asgN, centN) = kmeansChainCtes(k, iterations, 16, s"sub$s",
+        asgName = s"pasg$s", centName = s"pcent$s", alias = "q2")
+      (s"""sub$s AS (
+          |  SELECT vec_id, v[$lo:$hi] AS v,
+          |         (list_sum(list_transform(v[$lo:$hi], x -> x*x)))::BIGINT AS norm2
+          |  FROM $src
+          |),
+          |$chain""".stripMargin, asgN, centN)
     }
-    ((0 until 4).map(chain).mkString(",\n").stripMargin,
-      (0 until 4).map(s => s"pasg$s${iterations + 1}"),
-      (0 until 4).map(s => s"pcent$s$iterations"))
+    (chains.map(_._1).mkString(",\n"), chains.map(_._2), chains.map(_._3))
   }
+
+  /** Milli-quantized embeddings `q(vec_id, v)` and their squared norms
+    * `qn(vec_id, v, norm2)` (mirrors Ann.quantized).
+    */
+  private val MilliV = "list_transform(embedding, x -> round(x*1000)::BIGINT)"
+  private val QCte = s"q AS (\n  SELECT vec_id, $MilliV AS v\n  FROM embeddings\n)"
+  private val QnCte =
+    """qn AS (
+      |  SELECT vec_id, v, (list_sum(list_transform(v, x -> x*x)))::BIGINT AS norm2
+      |  FROM q
+      |)""".stripMargin
 
   /** Quantized embeddings + hyperplane buckets (mirrors Ann.bucketed;
     * `planes` is the LSH accuracy knob — fewer planes = wider buckets).
     */
   private def embCte(planes: Int): String =
-    s"""q AS (
-      |  SELECT vec_id, list_transform(embedding, x -> round(x*1000)::BIGINT) AS v
-      |  FROM embeddings
-      |),
-      |qn AS (
-      |  SELECT vec_id, v,
-      |         (list_sum(list_transform(v, x -> x*x)))::BIGINT AS norm2
-      |  FROM q
-      |),
+    s"""$QCte,
+      |$QnCte,
       |bk AS (
       |  SELECT vec_id,
       |         sum(CASE WHEN dot > 0 THEN (1::BIGINT << p) ELSE 0 END)::BIGINT AS bucket
@@ -1854,17 +1921,132 @@ object SparkEntry {
       |  FROM cq
       |)""".stripMargin
 
+  /** Exact integer dot of two `dims`-long integer lists (1-based,
+    * lambda variable `x`) — mirrors VecOps.intDot.
+    */
+  private def sqlDot(a: String, b: String, dims: Int = 64, x: String = "i") =
+    s"list_sum(list_transform(range(1,${dims + 1}), $x -> $a[$x::INT]*$b[$x::INT]))"
+
+  /** Exact portable cosine of integer vectors a and b with squared
+    * norms an2 and bn2: the integer dot over the product of the two
+    * square roots, the op order of Ann.cosine.
+    */
+  private def sqlCos(av: String, bv: String, an2: String, bn2: String,
+      dims: Int = 64) =
+    s"""(${sqlDot(av, bv, dims)})::DOUBLE
+       |  / (sqrt($an2::DOUBLE) * sqrt($bn2::DOUBLE))""".stripMargin
+
+  /** [[sqlCos]] under the IVF zero-norm guard: a degenerate pair
+    * scores -2.0 and ranks last (mirrors Ann.cellAssign's guard).
+    */
+  private def sqlGuardedCos(av: String, bv: String, an2: String,
+      bn2: String, dims: Int = 64) =
+    s"CASE WHEN $an2 = 0 OR $bn2 = 0 THEN -2.0\n  ELSE ${sqlCos(av, bv, an2, bn2, dims)} END"
+
   /** Exact portable cosine in basis points between q-vectors a and b. */
   private def sqlCosBp(av: String, bv: String, an2: String, bn2: String) =
-    s"""round((list_sum(list_transform(range(1,65), i -> $av[i::INT]*$bv[i::INT])))::DOUBLE
-       |  / (sqrt($an2::DOUBLE) * sqrt($bn2::DOUBLE)) * 10000, 0)::BIGINT""".stripMargin
+    s"round(${sqlCos(av, bv, an2, bn2)} * 10000, 0)::BIGINT"
 
-  private val JaccTail =
+  /** `scored(<ids>, cos_bp, cos)`: the exact cosine of every candidate
+    * pair `from` yields, vectors `av`/`bv` with squared norms
+    * `an2`/`bn2` (mirrors the exact-cosine rerank of Ann.rerankExact).
+    */
+  private def scoredCte(ids: String, av: String, bv: String, an2: String,
+      bn2: String, from: String) =
+    s"""scored AS (
+       |  SELECT $ids,
+       |         ${sqlCosBp(av, bv, an2, bn2)} AS cos_bp,
+       |         ${sqlCos(av, bv, an2, bn2)} AS cos
+       |  $from
+       |)""".stripMargin
+
+  /** The per-query neighbor order of every ANN method: best cosine
+    * first, ties on the smaller neighbor id (mirrors Ann.topK).
+    */
+  private val CosRank =
+    "row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id)"
+
+  /** Top-k tail over `scored`: rank each query's candidates by `rank`,
+    * keep k, emit (q_id, rnk, neighbor_id, `out`).
+    */
+  private def topKTail(k: Int, out: String = "cos_bp",
+      inner: String = "neighbor_id, cos_bp", rank: String = CosRank) =
+    s"""SELECT q_id, rnk, neighbor_id, $out FROM (
+       |  SELECT q_id, $inner,
+       |         ($rank)::INT AS rnk
+       |  FROM scored
+       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+
+  /** [[topKTail]] over the int8 codes' quantized cosine `qcos`. */
+  private def qcosTopKTail(k: Int) =
+    topKTail(k, "round(qcos * 10000, 0)::BIGINT AS qcos_bp", "neighbor_id, qcos",
+      "row_number() OVER (PARTITION BY q_id ORDER BY qcos DESC, neighbor_id)")
+
+  /** [[topKTail]] over the PQ estimated distance `est_d`, nearest first. */
+  private def estTopKTail(k: Int) =
+    topKTail(k, "est_d", "vec_id AS neighbor_id, est_d",
+      "row_number() OVER (PARTITION BY q_id ORDER BY est_d, vec_id)")
+
+  /** Serving-cell ranking `rankedc(vec_id, [v, norm2,] c_id, c_rn)`:
+    * every centroid of `cent` ranked per vector of `src` (row alias
+    * `alias`) by guarded cosine, ties on the smaller c_id — the
+    * serving rule of Ann.cellAssign; `c_rn = 1` is the vector's cell.
+    */
+  private def rankedcCte(cent: String, src: String = "qn", alias: String = "qn",
+      dims: Int = 64, payload: Boolean = true) = {
+    val a = alias
+    s"""rankedc AS (
+       |  SELECT $a.vec_id,${if (payload) s" $a.v, $a.norm2," else ""} c.c_id,
+       |    row_number() OVER (PARTITION BY $a.vec_id ORDER BY
+       |      (${sqlGuardedCos("c.cv", s"$a.v", "c.cn2", s"$a.norm2", dims)}) DESC, c.c_id) AS c_rn
+       |  FROM ${if (src == a) src else s"$src $a"}, $cent c
+       |)""".stripMargin
+  }
+
+  /** Each vector's serving cell from a cell ranking `from`. */
+  private def assignedCte(name: String = "assigned", from: String = "rankedc") =
+    s"""$name AS (
+       |  SELECT vec_id, v, norm2, c_id AS cell FROM $from WHERE c_rn = 1
+       |)""".stripMargin
+
+  /** The serving cells of the candidates that pass `pred` (mirrors the
+    * candidate-side filter of Ann.knnIvfTrainedFiltered).
+    */
+  private def filteredAssignedCte(pred: String, name: String = "assigned") =
+    s"""$name AS (
+       |  SELECT r.vec_id, r.v, r.norm2, r.c_id AS cell
+       |  FROM rankedc r JOIN embeddings e ON e.vec_id = r.vec_id
+       |  WHERE r.c_rn = 1 AND ($pred)
+       |)""".stripMargin
+
+  /** The `probes` best cells of each query vector (mirrors Ann's probe
+    * ranking over the same serving rule).
+    */
+  private def probesCte(probes: Int, name: String = "probes",
+      from: String = "rankedc") =
+    s"""$name AS (
+       |  SELECT vec_id AS q_id, v AS qv, norm2 AS qn2, c_id AS qcell
+       |  FROM $from WHERE vec_id < $KnnQueries AND c_rn <= $probes
+       |)""".stripMargin
+
+  /** Per-query probe escalation (mirrors Ann's escalated filtered
+    * search): a query whose base-tier pool `near` holds fewer than k
+    * matches probes every one of the 8 cells.
+    */
+  private def qprobesCte(k: Int, probes: Int, near: String) =
+    s"""qprobes AS (
+       |  SELECT qn.vec_id AS q_id,
+       |         CASE WHEN coalesce(n.n_near, 0) >= $k THEN $probes
+       |              ELSE 8 END AS probes_eff
+       |  FROM qn LEFT JOIN $near n ON n.q_id = qn.vec_id
+       |  WHERE qn.vec_id < $KnnQueries
+       |)""".stripMargin
+
+  private lazy val JaccTail =
     s"""SELECT doc_a, doc_b, inter, union_sh, jacc_bp FROM (
        |  SELECT p.doc_a, p.doc_b, p.inter,
        |         (x.n_sh + y.n_sh - p.inter)::BIGINT AS union_sh,
-       |         round(p.inter * 10000.0 / (x.n_sh + y.n_sh - p.inter), 0)::BIGINT AS jacc_bp
-       |  FROM pairs p JOIN sz x ON x.doc_id = p.doc_a JOIN sz y ON y.doc_id = p.doc_b
+       |         $JaccBpFrom
        |) WHERE jacc_bp >= $NgramJaccardBp ORDER BY doc_a, doc_b""".stripMargin
 
   // ---- parameterized ANN oracles (k = result depth) — the gated
@@ -1872,21 +2054,18 @@ object SparkEntry {
   // a_ann_recall oracle re-instantiates every one at RecallK so the
   // recall table measures exactly the SQL the gates run ----
 
+  /** `scored` over query vectors `q2` and candidates `c` that carry
+    * `v`/`norm2` (the brute-force, LSH and filtered-truth scans).
+    */
+  private def scoredQ2C(ids: String, from: String) =
+    scoredCte(ids, "q2.v", "c.v", "q2.norm2", "c.norm2", from)
+
+  private val BruteIds = "q2.vec_id AS q_id, c.vec_id AS neighbor_id"
+
   private def annBruteforceSql(k: Int): String =
     s"""WITH $EmbCte,
-       |scored AS (
-       |  SELECT q2.vec_id AS q_id, c.vec_id AS neighbor_id,
-       |         ${sqlCosBp("q2.v", "c.v", "q2.norm2", "c.norm2")} AS cos_bp,
-       |         (list_sum(list_transform(range(1,65), i -> q2.v[i::INT]*c.v[i::INT])))::DOUBLE
-       |           / (sqrt(q2.norm2::DOUBLE) * sqrt(c.norm2::DOUBLE)) AS cos
-       |  FROM qn q2 JOIN qn c ON c.vec_id <> q2.vec_id
-       |  WHERE q2.vec_id < $KnnQueries
-       |)
-       |SELECT q_id, rnk, neighbor_id, cos_bp FROM (
-       |  SELECT q_id, neighbor_id, cos_bp,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |${scoredQ2C(BruteIds, s"FROM qn q2 JOIN qn c ON c.vec_id <> q2.vec_id\n  WHERE q2.vec_id < $KnnQueries")}
+       |${topKTail(k)}""".stripMargin
 
   /** JL projection CTEs (mirror Ann.projectRp / VecOps.rpCoef): the
     * md5-derived Achlioptas ternary sign matrix restated through the
@@ -1933,19 +2112,15 @@ object SparkEntry {
        |             JOIN pn pb ON pb.vec_id = pd.neighbor_id
        |  ) WHERE prnk <= $shortK
        |),
-       |scored AS (
-       |  SELECT s.q_id, s.neighbor_id,
-       |         ${sqlCosBp("q2.v", "c.v", "q2.norm2", "c.norm2")} AS cos_bp,
-       |         (list_sum(list_transform(range(1,65), i -> q2.v[i::INT]*c.v[i::INT])))::DOUBLE
-       |           / (sqrt(q2.norm2::DOUBLE) * sqrt(c.norm2::DOUBLE)) AS cos
-       |  FROM short s JOIN qn q2 ON q2.vec_id = s.q_id
-       |               JOIN qn c ON c.vec_id = s.neighbor_id
-       |)
-       |SELECT q_id, rnk, neighbor_id, cos_bp FROM (
-       |  SELECT q_id, neighbor_id, cos_bp,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |$RerankShortCte
+       |${topKTail(k)}""".stripMargin
+
+  /** Exact full-dim rerank input of a `short(q_id, neighbor_id)` list
+    * (mirrors Ann.rerankExact).
+    */
+  private lazy val RerankShortCte = scoredQ2C("s.q_id, s.neighbor_id",
+    """FROM short s JOIN qn q2 ON q2.vec_id = s.q_id
+      |               JOIN qn c ON c.vec_id = s.neighbor_id""".stripMargin)
 
   /** rp→IVF composition oracle (mirrors Ann.knnRpIvf): the JL
     * projection CTEs feed a 32-dim Lloyd chain (the generic
@@ -1967,124 +2142,53 @@ object SparkEntry {
        |  JOIN pn ON pn.vec_id = pv.vec_id
        |),
        |$kchain,
-       |rankedc AS (
-       |  SELECT s.vec_id, s.v, s.norm2, c.c_id,
-       |    row_number() OVER (PARTITION BY s.vec_id ORDER BY
-       |      (CASE WHEN c.cn2 = 0 OR s.norm2 = 0 THEN -2.0
-       |       ELSE (list_sum(list_transform(range(1,${dims + 1}), i -> c.cv[i::INT]*s.v[i::INT])))::DOUBLE
-       |        / (sqrt(c.cn2::DOUBLE) * sqrt(s.norm2::DOUBLE)) END) DESC, c.c_id) AS c_rn
-       |  FROM pqn s, $kcent c
-       |),
-       |assigned AS (
-       |  SELECT vec_id, v, norm2, c_id AS cell FROM rankedc WHERE c_rn = 1
-       |),
-       |probed AS (
-       |  SELECT vec_id AS q_id, v AS qv, norm2 AS qn2, c_id AS qcell
-       |  FROM rankedc WHERE vec_id < $KnnQueries AND c_rn <= $probes
-       |),
+       |${rankedcCte(kcent, src = "pqn", alias = "s", dims = dims)},
+       |${assignedCte()},
+       |${probesCte(probes, name = "probed")},
        |short AS (
        |  SELECT q_id, neighbor_id FROM (
        |    SELECT p.q_id, c.vec_id AS neighbor_id,
        |      row_number() OVER (PARTITION BY p.q_id ORDER BY
-       |        (CASE WHEN p.qn2 = 0 OR c.norm2 = 0 THEN -2.0
-       |         ELSE (list_sum(list_transform(range(1,${dims + 1}), i -> p.qv[i::INT]*c.v[i::INT])))::DOUBLE
-       |          / (sqrt(p.qn2::DOUBLE) * sqrt(c.norm2::DOUBLE)) END) DESC, c.vec_id) AS prnk
+       |        (${sqlGuardedCos("p.qv", "c.v", "p.qn2", "c.norm2", dims)}) DESC, c.vec_id) AS prnk
        |    FROM probed p JOIN assigned c ON c.cell = p.qcell AND c.vec_id <> p.q_id
        |  ) WHERE prnk <= $shortK
        |),
-       |scored AS (
-       |  SELECT s.q_id, s.neighbor_id,
-       |         ${sqlCosBp("q2.v", "c.v", "q2.norm2", "c.norm2")} AS cos_bp,
-       |         (list_sum(list_transform(range(1,65), i -> q2.v[i::INT]*c.v[i::INT])))::DOUBLE
-       |           / (sqrt(q2.norm2::DOUBLE) * sqrt(c.norm2::DOUBLE)) AS cos
-       |  FROM short s JOIN qn q2 ON q2.vec_id = s.q_id
-       |               JOIN qn c ON c.vec_id = s.neighbor_id
-       |)
-       |SELECT q_id, rnk, neighbor_id, cos_bp FROM (
-       |  SELECT q_id, neighbor_id, cos_bp,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |$RerankShortCte
+       |${topKTail(k)}""".stripMargin
   }
 
   /** Recall spine over the three JL points (mirrors Ann.annRecallRp,
     * same join/aggregate shape as [[annRecallSql]]).
     */
-  private def annRpRecallSql(k: Int): String = {
-    val denom = KnnQueries * k
-    val subs = Seq(
-      "knn_rp_proj" -> annRpSql(k, shortK = k),
-      "knn_rp_rerank" -> annRpSql(k),
-      "knn_rp_ivf" -> annRpIvfSql(k))
-    val ctes = subs.zipWithIndex.map { case ((_, sql), i) =>
-      s"r$i AS (SELECT q_id, neighbor_id FROM (\n$sql\n) t$i)"
-    }.mkString(",\n")
-    val arms = subs.zipWithIndex.map { case ((m, _), i) =>
-      s"""SELECT '$m' AS method,
-         |  (SELECT count(*) FROM r$i)::BIGINT AS n_retrieved,
-         |  (SELECT count(*) FROM r$i JOIN truth USING (q_id, neighbor_id))::BIGINT AS n_hits"""
-    }.mkString("\nUNION ALL\n")
-    s"""WITH truth AS (SELECT q_id, neighbor_id FROM (
-       |${annBruteforceSql(k)}
-       |) tt),
-       |$ctes,
-       |m AS (
-       |$arms
-       |)
-       |SELECT method, n_retrieved, n_hits,
-       |       (n_hits * 10000 // $denom)::BIGINT AS recall_bp
-       |FROM m ORDER BY method""".stripMargin
-  }
+  private def annRpRecallSql(k: Int): String = recallTableSql(k, Seq(
+    "knn_rp_proj" -> annRpSql(k, shortK = k),
+    "knn_rp_rerank" -> annRpSql(k),
+    "knn_rp_ivf" -> annRpIvfSql(k)))
 
   private def annLshSql(k: Int, planes: Int = Ann.NumPlanes): String =
     s"""WITH ${embCte(planes)},
        |qq AS (SELECT qn.vec_id, qn.v, qn.norm2, bk.bucket
        |       FROM qn JOIN bk ON qn.vec_id = bk.vec_id),
-       |scored AS (
-       |  SELECT q2.vec_id AS q_id, c.vec_id AS neighbor_id,
-       |         ${sqlCosBp("q2.v", "c.v", "q2.norm2", "c.norm2")} AS cos_bp,
-       |         (list_sum(list_transform(range(1,65), i -> q2.v[i::INT]*c.v[i::INT])))::DOUBLE
-       |           / (sqrt(q2.norm2::DOUBLE) * sqrt(c.norm2::DOUBLE)) AS cos
-       |  FROM qq q2 JOIN qq c ON c.bucket = q2.bucket AND c.vec_id <> q2.vec_id
-       |  WHERE q2.vec_id < $KnnQueries
-       |)
-       |SELECT q_id, rnk, neighbor_id, cos_bp FROM (
-       |  SELECT q_id, neighbor_id, cos_bp,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |${scoredQ2C(BruteIds, "FROM qq q2 JOIN qq c ON c.bucket = q2.bucket " +
+           s"AND c.vec_id <> q2.vec_id\n  WHERE q2.vec_id < $KnnQueries")}
+       |${topKTail(k)}""".stripMargin
+
+  /** `scored` over the probed cells: each query of `probes` against
+    * the candidates `assigned` to its probed cells.
+    */
+  private lazy val ProbedScoredCte = scoredCte("q2.q_id, c.vec_id AS neighbor_id",
+    "q2.qv", "c.v", "q2.qn2", "c.norm2",
+    """FROM probes q2 JOIN assigned c
+      |    ON c.cell = q2.qcell AND c.vec_id <> q2.q_id""".stripMargin)
 
   private def annIvfTrainedSql(k: Int, probes: Int = 1): String = {
     val (ctes, _, cent) = kmeansCtes(k = 8, iterations = 2)
     s"""$ctes,
-       |rankedc AS (
-       |  SELECT qn.vec_id, qn.v, qn.norm2, c.c_id,
-       |    row_number() OVER (PARTITION BY qn.vec_id ORDER BY
-       |      (CASE WHEN c.cn2 = 0 OR qn.norm2 = 0 THEN -2.0
-       |       ELSE (list_sum(list_transform(range(1,65), i -> c.cv[i::INT]*qn.v[i::INT])))::DOUBLE
-       |        / (sqrt(c.cn2::DOUBLE) * sqrt(qn.norm2::DOUBLE)) END) DESC, c.c_id) AS c_rn
-       |  FROM qn, $cent c
-       |),
-       |assigned AS (
-       |  SELECT vec_id, v, norm2, c_id AS cell FROM rankedc WHERE c_rn = 1
-       |),
-       |probes AS (
-       |  SELECT vec_id AS q_id, v AS qv, norm2 AS qn2, c_id AS qcell
-       |  FROM rankedc WHERE vec_id < $KnnQueries AND c_rn <= $probes
-       |),
-       |scored AS (
-       |  SELECT q2.q_id, c.vec_id AS neighbor_id,
-       |         ${sqlCosBp("q2.qv", "c.v", "q2.qn2", "c.norm2")} AS cos_bp,
-       |         (list_sum(list_transform(range(1,65), i -> q2.qv[i::INT]*c.v[i::INT])))::DOUBLE
-       |           / (sqrt(q2.qn2::DOUBLE) * sqrt(c.norm2::DOUBLE)) AS cos
-       |  FROM probes q2 JOIN assigned c
-       |    ON c.cell = q2.qcell AND c.vec_id <> q2.q_id
-       |)
-       |SELECT q_id, rnk, neighbor_id, cos_bp FROM (
-       |  SELECT q_id, neighbor_id, cos_bp,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |${rankedcCte(cent)},
+       |${assignedCte()},
+       |${probesCte(probes)},
+       |$ProbedScoredCte
+       |${topKTail(k)}""".stripMargin
   }
 
   /** pHash oracle (mirrors Multimodal.imageDedupPhash): the seeded
@@ -2179,23 +2283,18 @@ object SparkEntry {
     */
   private def annBruteforceFilteredSql(k: Int, pred: String): String =
     s"""WITH $EmbCte,
-       |qf AS (
+       |${filteredQCte(pred)},
+       |${scoredQ2C(BruteIds, s"FROM qn q2 JOIN qf c ON c.vec_id <> q2.vec_id\n  WHERE q2.vec_id < $KnnQueries")}
+       |${topKTail(k)}""".stripMargin
+
+  /** The quantized candidates that pass `pred` (mirrors the
+    * candidate-side filter of Ann.knnBruteForceFiltered).
+    */
+  private def filteredQCte(pred: String, name: String = "qf") =
+    s"""$name AS (
        |  SELECT qn.vec_id, qn.v, qn.norm2
        |  FROM qn JOIN embeddings e ON e.vec_id = qn.vec_id WHERE ($pred)
-       |),
-       |scored AS (
-       |  SELECT q2.vec_id AS q_id, c.vec_id AS neighbor_id,
-       |         ${sqlCosBp("q2.v", "c.v", "q2.norm2", "c.norm2")} AS cos_bp,
-       |         (list_sum(list_transform(range(1,65), i -> q2.v[i::INT]*c.v[i::INT])))::DOUBLE
-       |           / (sqrt(q2.norm2::DOUBLE) * sqrt(c.norm2::DOUBLE)) AS cos
-       |  FROM qn q2 JOIN qf c ON c.vec_id <> q2.vec_id
-       |  WHERE q2.vec_id < $KnnQueries
-       |)
-       |SELECT q_id, rnk, neighbor_id, cos_bp FROM (
-       |  SELECT q_id, neighbor_id, cos_bp,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |)""".stripMargin
 
   /** Filtered trained-IVF oracle (mirrors Ann.knnIvfTrainedFiltered):
     * annIvfTrainedSql's chain with the predicate on the assigned
@@ -2205,36 +2304,11 @@ object SparkEntry {
       pred: String): String = {
     val (ctes, _, cent) = kmeansCtes(k = 8, iterations = 2)
     s"""$ctes,
-       |rankedc AS (
-       |  SELECT qn.vec_id, qn.v, qn.norm2, c.c_id,
-       |    row_number() OVER (PARTITION BY qn.vec_id ORDER BY
-       |      (CASE WHEN c.cn2 = 0 OR qn.norm2 = 0 THEN -2.0
-       |       ELSE (list_sum(list_transform(range(1,65), i -> c.cv[i::INT]*qn.v[i::INT])))::DOUBLE
-       |        / (sqrt(c.cn2::DOUBLE) * sqrt(qn.norm2::DOUBLE)) END) DESC, c.c_id) AS c_rn
-       |  FROM qn, $cent c
-       |),
-       |assigned AS (
-       |  SELECT r.vec_id, r.v, r.norm2, r.c_id AS cell
-       |  FROM rankedc r JOIN embeddings e ON e.vec_id = r.vec_id
-       |  WHERE r.c_rn = 1 AND ($pred)
-       |),
-       |probes AS (
-       |  SELECT vec_id AS q_id, v AS qv, norm2 AS qn2, c_id AS qcell
-       |  FROM rankedc WHERE vec_id < $KnnQueries AND c_rn <= $probes
-       |),
-       |scored AS (
-       |  SELECT q2.q_id, c.vec_id AS neighbor_id,
-       |         ${sqlCosBp("q2.qv", "c.v", "q2.qn2", "c.norm2")} AS cos_bp,
-       |         (list_sum(list_transform(range(1,65), i -> q2.qv[i::INT]*c.v[i::INT])))::DOUBLE
-       |           / (sqrt(q2.qn2::DOUBLE) * sqrt(c.norm2::DOUBLE)) AS cos
-       |  FROM probes q2 JOIN assigned c
-       |    ON c.cell = q2.qcell AND c.vec_id <> q2.q_id
-       |)
-       |SELECT q_id, rnk, neighbor_id, cos_bp FROM (
-       |  SELECT q_id, neighbor_id, cos_bp,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |${rankedcCte(cent)},
+       |${filteredAssignedCte(pred)},
+       |${probesCte(probes)},
+       |$ProbedScoredCte
+       |${topKTail(k)}""".stripMargin
   }
 
   /** Escalated filtered-IVF oracle (mirrors
@@ -2247,19 +2321,8 @@ object SparkEntry {
       pred: String): String = {
     val (ctes, _, cent) = kmeansCtes(k = 8, iterations = 2)
     s"""$ctes,
-       |rankedc AS (
-       |  SELECT qn.vec_id, qn.v, qn.norm2, c.c_id,
-       |    row_number() OVER (PARTITION BY qn.vec_id ORDER BY
-       |      (CASE WHEN c.cn2 = 0 OR qn.norm2 = 0 THEN -2.0
-       |       ELSE (list_sum(list_transform(range(1,65), i -> c.cv[i::INT]*qn.v[i::INT])))::DOUBLE
-       |        / (sqrt(c.cn2::DOUBLE) * sqrt(qn.norm2::DOUBLE)) END) DESC, c.c_id) AS c_rn
-       |  FROM qn, $cent c
-       |),
-       |assigned AS (
-       |  SELECT r.vec_id, r.v, r.norm2, r.c_id AS cell
-       |  FROM rankedc r JOIN embeddings e ON e.vec_id = r.vec_id
-       |  WHERE r.c_rn = 1 AND ($pred)
-       |),
+       |${rankedcCte(cent)},
+       |${filteredAssignedCte(pred)},
        |near AS (
        |  SELECT q2.vec_id AS q_id, count(*)::BIGINT AS n_near
        |  FROM rankedc q2 JOIN assigned c
@@ -2267,27 +2330,11 @@ object SparkEntry {
        |  WHERE q2.vec_id < $KnnQueries AND q2.c_rn <= $probes
        |  GROUP BY 1
        |),
-       |qprobes AS (
-       |  SELECT qn.vec_id AS q_id,
-       |         CASE WHEN coalesce(n.n_near, 0) >= $k THEN $probes
-       |              ELSE 8 END AS probes_eff
-       |  FROM qn LEFT JOIN near n ON n.q_id = qn.vec_id
-       |  WHERE qn.vec_id < $KnnQueries
-       |),
-       |scored AS (
-       |  SELECT q2.vec_id AS q_id, c.vec_id AS neighbor_id,
-       |         ${sqlCosBp("q2.v", "c.v", "q2.norm2", "c.norm2")} AS cos_bp,
-       |         (list_sum(list_transform(range(1,65), i -> q2.v[i::INT]*c.v[i::INT])))::DOUBLE
-       |           / (sqrt(q2.norm2::DOUBLE) * sqrt(c.norm2::DOUBLE)) AS cos
-       |  FROM rankedc q2
-       |  JOIN qprobes pe ON pe.q_id = q2.vec_id AND q2.c_rn <= pe.probes_eff
-       |  JOIN assigned c ON c.cell = q2.c_id AND c.vec_id <> q2.vec_id
-       |)
-       |SELECT q_id, rnk, neighbor_id, cos_bp FROM (
-       |  SELECT q_id, neighbor_id, cos_bp,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |${qprobesCte(k, probes, "near")},
+       |${scoredQ2C(BruteIds, "FROM rankedc q2\n" +
+           "  JOIN qprobes pe ON pe.q_id = q2.vec_id AND q2.c_rn <= pe.probes_eff\n" +
+           "  JOIN assigned c ON c.cell = q2.c_id AND c.vec_id <> q2.vec_id")}
+       |${topKTail(k)}""".stripMargin
   }
 
   /** Filtered recall oracle (mirrors Ann.annRecallFiltered): per
@@ -2301,29 +2348,20 @@ object SparkEntry {
     val (ctes, _, cent) = kmeansCtes(k = 8, iterations = 2)
     val perSel = preds.map { case (sel, pred) =>
       val selCtes =
-        s"""qf_$sel AS (
-           |  SELECT qn.vec_id, qn.v, qn.norm2
-           |  FROM qn JOIN embeddings e ON e.vec_id = qn.vec_id WHERE ($pred)
-           |),
+        s"""${filteredQCte(pred, s"qf_$sel")},
            |truth_$sel AS (
            |  SELECT q_id, neighbor_id FROM (
            |    SELECT q2.vec_id AS q_id, c.vec_id AS neighbor_id,
            |      row_number() OVER (PARTITION BY q2.vec_id ORDER BY
-           |        (list_sum(list_transform(range(1,65), i -> q2.v[i::INT]*c.v[i::INT])))::DOUBLE
-           |          / (sqrt(q2.norm2::DOUBLE) * sqrt(c.norm2::DOUBLE)) DESC, c.vec_id) AS rnk
+           |        ${sqlCos("q2.v", "c.v", "q2.norm2", "c.norm2")} DESC, c.vec_id) AS rnk
            |    FROM qn q2 JOIN qf_$sel c ON c.vec_id <> q2.vec_id
            |    WHERE q2.vec_id < $KnnQueries
            |  ) WHERE rnk <= $k
            |),
-           |asg_$sel AS (
-           |  SELECT r.vec_id, r.v, r.norm2, r.c_id AS cell
-           |  FROM rankedc r JOIN embeddings e ON e.vec_id = r.vec_id
-           |  WHERE r.c_rn = 1 AND ($pred)
-           |),
+           |${filteredAssignedCte(pred, s"asg_$sel")},
            |scored_$sel AS (
            |  SELECT q2.vec_id AS q_id, q2.c_rn, c.vec_id AS neighbor_id,
-           |         (list_sum(list_transform(range(1,65), i -> q2.v[i::INT]*c.v[i::INT])))::DOUBLE
-           |           / (sqrt(q2.norm2::DOUBLE) * sqrt(c.norm2::DOUBLE)) AS cos
+           |         ${sqlCos("q2.v", "c.v", "q2.norm2", "c.norm2")} AS cos
            |  FROM rankedc q2 JOIN asg_$sel c
            |    ON c.cell = q2.c_id AND c.vec_id <> q2.vec_id
            |  WHERE q2.vec_id < $KnnQueries AND q2.c_rn <= ${probesList.max}
@@ -2336,7 +2374,7 @@ object SparkEntry {
            |FROM (
            |  SELECT q_id, neighbor_id FROM (
            |    SELECT q_id, neighbor_id,
-           |      row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) AS rnk
+           |      $CosRank AS rnk
            |    FROM scored_$sel WHERE c_rn <= $p
            |  ) WHERE rnk <= $k
            |) i LEFT JOIN truth_$sel t
@@ -2347,14 +2385,7 @@ object SparkEntry {
     val allCtes = perSel.map(_._1).mkString(",\n")
     val allRows = perSel.flatMap(_._2).mkString("\nUNION ALL\n")
     s"""$ctes,
-       |rankedc AS (
-       |  SELECT qn.vec_id, qn.v, qn.norm2, c.c_id,
-       |    row_number() OVER (PARTITION BY qn.vec_id ORDER BY
-       |      (CASE WHEN c.cn2 = 0 OR qn.norm2 = 0 THEN -2.0
-       |       ELSE (list_sum(list_transform(range(1,65), i -> c.cv[i::INT]*qn.v[i::INT])))::DOUBLE
-       |        / (sqrt(c.cn2::DOUBLE) * sqrt(qn.norm2::DOUBLE)) END) DESC, c.c_id) AS c_rn
-       |  FROM qn, $cent c
-       |),
+       |${rankedcCte(cent)},
        |$allCtes
        |SELECT sel, method, n_retrieved, n_hits, n_truth,
        |       (n_hits * 10000 // n_truth) AS recall_bp
@@ -2372,14 +2403,7 @@ object SparkEntry {
     val (ctes, _, cent) = kmeansCtes(k = 8, iterations = 2)
     s"""$ctes,
        |$Int8Cte,
-       |rankedc AS (
-       |  SELECT qn.vec_id, c.c_id,
-       |    row_number() OVER (PARTITION BY qn.vec_id ORDER BY
-       |      (CASE WHEN c.cn2 = 0 OR qn.norm2 = 0 THEN -2.0
-       |       ELSE (list_sum(list_transform(range(1,65), i -> c.cv[i::INT]*qn.v[i::INT])))::DOUBLE
-       |        / (sqrt(c.cn2::DOUBLE) * sqrt(qn.norm2::DOUBLE)) END) DESC, c.c_id) AS c_rn
-       |  FROM qn, $cent c
-       |),
+       |${rankedcCte(cent, payload = false)},
        |assigned AS (
        |  SELECT r.vec_id, cdb.c, cdb.n2q, r.c_id AS cell
        |  FROM rankedc r JOIN cqn cdb ON cdb.vec_id = r.vec_id
@@ -2392,34 +2416,22 @@ object SparkEntry {
        |),
        |scored AS (
        |  SELECT q2.q_id, cdb.vec_id AS neighbor_id,
-       |         CASE WHEN q2.qn2q = 0 OR cdb.n2q = 0 THEN -2.0
-       |           ELSE (list_sum(list_transform(range(1,65), i -> q2.qc[i::INT]*cdb.c[i::INT])))::DOUBLE
-       |             / (sqrt(q2.qn2q::DOUBLE) * sqrt(cdb.n2q::DOUBLE)) END AS qcos
+       |         ${sqlGuardedCos("q2.qc", "cdb.c", "q2.qn2q", "cdb.n2q")} AS qcos
        |  FROM probesq q2 JOIN assigned cdb
        |    ON cdb.cell = q2.qcell AND cdb.vec_id <> q2.q_id
        |)
-       |SELECT q_id, rnk, neighbor_id, round(qcos * 10000, 0)::BIGINT AS qcos_bp FROM (
-       |  SELECT q_id, neighbor_id, qcos,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY qcos DESC, neighbor_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |${qcosTopKTail(k)}""".stripMargin
   }
 
   private def annQuantizedSql(k: Int): String =
     s"""WITH $EmbCte, $Int8Cte,
        |scored AS (
        |  SELECT q2.vec_id AS q_id, cdb.vec_id AS neighbor_id,
-       |         CASE WHEN q2.n2q = 0 OR cdb.n2q = 0 THEN -2.0
-       |           ELSE (list_sum(list_transform(range(1,65), i -> q2.c[i::INT]*cdb.c[i::INT])))::DOUBLE
-       |             / (sqrt(q2.n2q::DOUBLE) * sqrt(cdb.n2q::DOUBLE)) END AS qcos
+       |         ${sqlGuardedCos("q2.c", "cdb.c", "q2.n2q", "cdb.n2q")} AS qcos
        |  FROM cqn q2 JOIN cqn cdb ON cdb.vec_id <> q2.vec_id
        |  WHERE q2.vec_id < $KnnQueries
        |)
-       |SELECT q_id, rnk, neighbor_id, round(qcos * 10000, 0)::BIGINT AS qcos_bp FROM (
-       |  SELECT q_id, neighbor_id, qcos,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY qcos DESC, neighbor_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |${qcosTopKTail(k)}""".stripMargin
 
   private def annPqSql(k: Int, pqK: Int = Ann.PqK,
       srcCtes: String = "", src: String = "q"): String = {
@@ -2427,23 +2439,16 @@ object SparkEntry {
     val qds = (0 until 4).map { s =>
       s"""qd$s AS (
          |  SELECT t.vec_id AS q_id, c.c_id,
-         |         (t.norm2 - 2*list_sum(list_transform(range(1,17),
-         |             j -> t.v[j::INT]*c.cv[j::INT])) + c.cn2)::BIGINT AS d
+         |         (t.norm2 - 2*${sqlDot("t.v", "c.cv", 16, "j")} + c.cn2)::BIGINT AS d
          |  FROM sub$s t, ${cents(s)} c WHERE t.vec_id < $KnnQueries
          |)"""
     }.mkString(",\n")
-    s"""WITH q AS (
-       |  SELECT vec_id, list_transform(embedding, x -> round(x*1000)::BIGINT) AS v
-       |  FROM embeddings
-       |)$srcCtes,
+    s"""WITH $QCte$srcCtes,
        |$ctes,
        |codes AS (
        |  SELECT a0.vec_id, a0.cluster AS c0, a1.cluster AS c1,
        |         a2.cluster AS c2, a3.cluster AS c3
-       |  FROM ${asgs(0)} a0
-       |  JOIN ${asgs(1)} a1 ON a1.vec_id = a0.vec_id
-       |  JOIN ${asgs(2)} a2 ON a2.vec_id = a0.vec_id
-       |  JOIN ${asgs(3)} a3 ON a3.vec_id = a0.vec_id
+       |  ${pqCodeJoin(asgs)}
        |),
        |$qds,
        |scored AS (
@@ -2455,12 +2460,15 @@ object SparkEntry {
        |  JOIN qd3 q3 ON q3.c_id = x.c3 AND q3.q_id = q0.q_id
        |  WHERE x.vec_id <> q0.q_id
        |)
-       |SELECT q_id, rnk, neighbor_id, est_d FROM (
-       |  SELECT q_id, vec_id AS neighbor_id, est_d,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY est_d, vec_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |${estTopKTail(k)}""".stripMargin
   }
+
+  /** The four per-subspace final assignments joined on vec_id as
+    * `a0`..`a3` (mirrors Ann.pqEncodedFromQ's code columns).
+    */
+  private def pqCodeJoin(asgs: Seq[String]) =
+    s"FROM ${asgs(0)} a0\n" + (1 to 3).map(s =>
+      s"JOIN ${asgs(s)} a$s ON a$s.vec_id = a0.vec_id").mkString("\n")
 
   /** OPQ-permutation prefix CTEs (mirrors Ann.opqPermutation /
     * Ann.knnPqOpq): integer per-dim variance surrogate
@@ -2518,10 +2526,7 @@ object SparkEntry {
        |codes AS (
        |  SELECT a0.vec_id, co.cell, a0.cluster AS c0, a1.cluster AS c1,
        |         a2.cluster AS c2, a3.cluster AS c3
-       |  FROM ${pasgs(0)} a0
-       |  JOIN ${pasgs(1)} a1 ON a1.vec_id = a0.vec_id
-       |  JOIN ${pasgs(2)} a2 ON a2.vec_id = a0.vec_id
-       |  JOIN ${pasgs(3)} a3 ON a3.vec_id = a0.vec_id
+       |  ${pqCodeJoin(pasgs)}
        |  JOIN cellof co ON co.vec_id = a0.vec_id
        |  ${if (candPred.isEmpty) ""
          else s"JOIN embeddings e ON e.vec_id = a0.vec_id WHERE ($candPred)"}
@@ -2529,8 +2534,7 @@ object SparkEntry {
        |qcells AS (
        |  SELECT qn.vec_id AS q_id, c.c_id AS cell,
        |         row_number() OVER (PARTITION BY qn.vec_id
-       |           ORDER BY (qn.norm2 - 2*list_sum(list_transform(range(1,65),
-       |             j -> qn.v[j::INT]*c.cv[j::INT])) + c.cn2), c.c_id) AS crn,
+       |           ORDER BY (qn.norm2 - 2*${sqlDot("qn.v", "c.cv", x = "j")} + c.cn2), c.c_id) AS crn,
        |         list_transform(range(1,65), j -> qn.v[j::INT] - c.cv[j::INT]) AS qres
        |  FROM qn, $kcent c WHERE qn.vec_id < $KnnQueries
        |),
@@ -2543,13 +2547,7 @@ object SparkEntry {
               |  WHERE p.crn <= $probes
               |  GROUP BY 1
               |),
-              |qprobes AS (
-              |  SELECT qn.vec_id AS q_id,
-              |         CASE WHEN coalesce(n.n_near, 0) >= $k THEN $probes
-              |              ELSE 8 END AS probes_eff
-              |  FROM qn LEFT JOIN nearq n ON n.q_id = qn.vec_id
-              |  WHERE qn.vec_id < $KnnQueries
-              |),
+              |${qprobesCte(k, probes, "nearq")},
               |probed AS (
               |  SELECT qc.q_id, qc.cell, qc.qres
               |  FROM qcells qc JOIN qprobes pe
@@ -2565,11 +2563,7 @@ object SparkEntry {
        |  JOIN qd3 q3 ON q3.c_id = x.c3 AND q3.q_id = q0.q_id AND q3.cell = q0.cell
        |  WHERE x.vec_id <> q0.q_id
        |)
-       |SELECT q_id, rnk, neighbor_id, est_d FROM (
-       |  SELECT q_id, vec_id AS neighbor_id, est_d,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY est_d, vec_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |${estTopKTail(k)}""".stripMargin
   }
 
   /** IVFADC-R refine oracle (mirrors Ann.rerankExact): the nested ADC
@@ -2582,28 +2576,11 @@ object SparkEntry {
     s"""WITH short AS (SELECT q_id, neighbor_id FROM (
        |$adcSql
        |) s),
-       |q AS (
-       |  SELECT vec_id, list_transform(embedding, x -> round(x*1000)::BIGINT) AS v
-       |  FROM embeddings
-       |),
-       |qn AS (
-       |  SELECT vec_id, v, (list_sum(list_transform(v, x -> x*x)))::BIGINT AS norm2
-       |  FROM q
-       |),
-       |scored AS (
-       |  SELECT sh.q_id, sh.neighbor_id,
-       |         ${sqlCosBp("a.v", "b.v", "a.norm2", "b.norm2")} AS cos_bp,
-       |         (list_sum(list_transform(range(1,65), i -> a.v[i::INT]*b.v[i::INT])))::DOUBLE
-       |           / (sqrt(a.norm2::DOUBLE) * sqrt(b.norm2::DOUBLE)) AS cos
-       |  FROM short sh
-       |  JOIN qn a ON a.vec_id = sh.q_id
-       |  JOIN qn b ON b.vec_id = sh.neighbor_id
-       |)
-       |SELECT q_id, rnk, neighbor_id, cos_bp FROM (
-       |  SELECT q_id, neighbor_id, cos_bp,
-       |         (row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id))::INT AS rnk
-       |  FROM scored
-       |) WHERE rnk <= $k ORDER BY q_id, rnk""".stripMargin
+       |$QCte,
+       |$QnCte,
+       |${scoredCte("sh.q_id, sh.neighbor_id", "a.v", "b.v", "a.norm2", "b.norm2",
+           "FROM short sh\n  JOIN qn a ON a.vec_id = sh.q_id\n  JOIN qn b ON b.vec_id = sh.neighbor_id")}
+       |${topKTail(k)}""".stripMargin
 
   /** Cell-population balance over the trained cosine cell assignment
     * (mirrors Ann.cellBalance; same assignment CTE shape as the
@@ -2612,14 +2589,7 @@ object SparkEntry {
   private def cellBalanceSql(kCells: Int = 8): String = {
     val (ctes, _, cent) = kmeansCtes(k = kCells, iterations = 2)
     s"""$ctes,
-       |rankedc AS (
-       |  SELECT qn.vec_id, c.c_id,
-       |    row_number() OVER (PARTITION BY qn.vec_id ORDER BY
-       |      (CASE WHEN c.cn2 = 0 OR qn.norm2 = 0 THEN -2.0
-       |       ELSE (list_sum(list_transform(range(1,65), i -> c.cv[i::INT]*qn.v[i::INT])))::DOUBLE
-       |        / (sqrt(c.cn2::DOUBLE) * sqrt(qn.norm2::DOUBLE)) END) DESC, c.c_id) AS c_rn
-       |  FROM qn, $cent c
-       |),
+       |${rankedcCte(cent, payload = false)},
        |pop AS (
        |  SELECT c_id AS cell, count(*)::BIGINT AS n_vecs
        |  FROM rankedc WHERE c_rn = 1 GROUP BY c_id
@@ -2636,23 +2606,40 @@ object SparkEntry {
     * truth on (q_id, neighbor_id); recall is integer basis points
     * over the queries·k ground-truth slots.
     */
-  private def annRecallSql(k: Int): String = {
-    val denom = KnnQueries * k
-    val subs = Seq(
-      "knn_lsh" -> annLshSql(k),
-      "knn_ivf_trained" -> annIvfTrainedSql(k),
-      "knn_quantized" -> annQuantizedSql(k),
-      "knn_pq" -> annPqSql(k),
-      "knn_ivfpq" -> annIvfPqSql(k),
-      "knn_ivfsq" -> annIvfSqSql(k))
-    val ctes = subs.zipWithIndex.map { case ((_, sql), i) =>
-      s"r$i AS (SELECT q_id, neighbor_id FROM (\n$sql\n) t$i)"
-    }.mkString(",\n")
-    val arms = subs.zipWithIndex.map { case ((m, _), i) =>
-      s"""SELECT '$m' AS method,
+  private def annRecallSql(k: Int): String = recallTableSql(k, recallLegsSql(k))
+
+  /** The six method chains at depth k that [[annRecallSql]] and
+    * [[annRecallSampledSql]] measure (mirrors Ann.recallLegs).
+    */
+  private def recallLegsSql(k: Int): Seq[(String, String)] = Seq(
+    "knn_lsh" -> annLshSql(k),
+    "knn_ivf_trained" -> annIvfTrainedSql(k),
+    "knn_quantized" -> annQuantizedSql(k),
+    "knn_pq" -> annPqSql(k),
+    "knn_ivfpq" -> annIvfPqSql(k),
+    "knn_ivfsq" -> annIvfSqSql(k))
+
+  /** One `rI` result CTE per method chain (each `where`-filtered), and
+    * one count arm per method: `extra` columns, then n_retrieved and
+    * n_hits against `truth` (mirrors Ann's recall hit-count tail).
+    */
+  private def recallArms(subs: Seq[(String, String)], where: String = "",
+      extra: String = ""): (String, String) = (
+    subs.zipWithIndex.map { case ((_, sql), i) =>
+      s"r$i AS (SELECT q_id, neighbor_id FROM (\n$sql\n) t$i$where)"
+    }.mkString(",\n"),
+    subs.zipWithIndex.map { case ((m, _), i) =>
+      s"""SELECT '$m' AS method,$extra
          |  (SELECT count(*) FROM r$i)::BIGINT AS n_retrieved,
-         |  (SELECT count(*) FROM r$i JOIN truth USING (q_id, neighbor_id))::BIGINT AS n_hits"""
-    }.mkString("\nUNION ALL\n")
+         |  (SELECT count(*) FROM r$i JOIN truth USING (q_id, neighbor_id))::BIGINT AS n_hits""".stripMargin
+    }.mkString("\nUNION ALL\n"))
+
+  /** The recall table spine of [[annRecallSql]], [[annRpRecallSql]]
+    * and [[annRecallTunedSql]] (mirrors Ann.recallTable): integer
+    * basis points over the queries·k brute-force truth slots.
+    */
+  private def recallTableSql(k: Int, subs: Seq[(String, String)]): String = {
+    val (ctes, arms) = recallArms(subs)
     s"""WITH truth AS (SELECT q_id, neighbor_id FROM (
        |${annBruteforceSql(k)}
        |) tt),
@@ -2661,7 +2648,7 @@ object SparkEntry {
        |$arms
        |)
        |SELECT method, n_retrieved, n_hits,
-       |       (n_hits * 10000 // $denom)::BIGINT AS recall_bp
+       |       (n_hits * 10000 // ${KnnQueries * k})::BIGINT AS recall_bp
        |FROM m ORDER BY method""".stripMargin
   }
 
@@ -2672,23 +2659,9 @@ object SparkEntry {
     */
   private def annRecallSampledSql(k: Int, sampleMod: Int): String = {
     val elect = (e: String) => s"${sqlH20(e)} % $sampleMod = 0"
-    val subs = Seq(
-      "knn_lsh" -> annLshSql(k),
-      "knn_ivf_trained" -> annIvfTrainedSql(k),
-      "knn_quantized" -> annQuantizedSql(k),
-      "knn_pq" -> annPqSql(k),
-      "knn_ivfpq" -> annIvfPqSql(k),
-      "knn_ivfsq" -> annIvfSqSql(k))
-    val ctes = subs.zipWithIndex.map { case ((_, sql), i) =>
-      s"""r$i AS (SELECT q_id, neighbor_id FROM (\n$sql\n) t$i
-         |  WHERE ${elect("q_id::VARCHAR")})""".stripMargin
-    }.mkString(",\n")
-    val arms = subs.zipWithIndex.map { case ((m, _), i) =>
-      s"""SELECT '$m' AS method,
-         |  (SELECT n FROM nq)::BIGINT AS n_queries,
-         |  (SELECT count(*) FROM r$i)::BIGINT AS n_retrieved,
-         |  (SELECT count(*) FROM r$i JOIN truth USING (q_id, neighbor_id))::BIGINT AS n_hits"""
-    }.mkString("\nUNION ALL\n")
+    val (ctes, arms) = recallArms(recallLegsSql(k),
+      where = s"\n  WHERE ${elect("q_id::VARCHAR")}",
+      extra = "\n  (SELECT n FROM nq)::BIGINT AS n_queries,")
     s"""WITH truth AS (SELECT q_id, neighbor_id FROM (
        |${annBruteforceSql(k)}
        |) tt WHERE ${elect("q_id::VARCHAR")}),
@@ -2708,36 +2681,126 @@ object SparkEntry {
     * spine over the TUNED per-method chains (4-plane LSH, probe-2
     * IVF, 4-bit PQ, probe-4 IVFADC with 4-bit codebooks).
     */
-  private def annRecallTunedSql(k: Int): String = {
-    val denom = KnnQueries * k
-    val subs = Seq(
-      "knn_lsh_4planes" -> annLshSql(k, planes = 4),
-      "knn_ivf_probe2" -> annIvfTrainedSql(k, probes = 2),
-      "knn_pq_4bit" -> annPqSql(k, pqK = 16),
-      "knn_pq_opq" -> annPqSql(k, srcCtes = OpqPermCtes, src = "qp"),
-      "knn_ivfpq_p4_4bit" -> annIvfPqSql(k, pqK = 16, probes = 4),
-      "knn_pq_rerank" -> annRerankSql(annPqSql(k * 10), k),
-      "knn_ivfpq_rerank" -> annRerankSql(annIvfPqSql(k * 10), k),
-      "knn_ivfsq_p4" -> annIvfSqSql(k, probes = 4))
-    val ctes = subs.zipWithIndex.map { case ((_, sql), i) =>
-      s"r$i AS (SELECT q_id, neighbor_id FROM (\n$sql\n) t$i)"
-    }.mkString(",\n")
-    val arms = subs.zipWithIndex.map { case ((m, _), i) =>
-      s"""SELECT '$m' AS method,
-         |  (SELECT count(*) FROM r$i)::BIGINT AS n_retrieved,
-         |  (SELECT count(*) FROM r$i JOIN truth USING (q_id, neighbor_id))::BIGINT AS n_hits"""
-    }.mkString("\nUNION ALL\n")
-    s"""WITH truth AS (SELECT q_id, neighbor_id FROM (
-       |${annBruteforceSql(k)}
-       |) tt),
-       |$ctes,
-       |m AS (
-       |$arms
-       |)
-       |SELECT method, n_retrieved, n_hits,
-       |       (n_hits * 10000 // $denom)::BIGINT AS recall_bp
-       |FROM m ORDER BY method""".stripMargin
+  private def annRecallTunedSql(k: Int): String = recallTableSql(k, Seq(
+    "knn_lsh_4planes" -> annLshSql(k, planes = 4),
+    "knn_ivf_probe2" -> annIvfTrainedSql(k, probes = 2),
+    "knn_pq_4bit" -> annPqSql(k, pqK = 16),
+    "knn_pq_opq" -> annPqSql(k, srcCtes = OpqPermCtes, src = "qp"),
+    "knn_ivfpq_p4_4bit" -> annIvfPqSql(k, pqK = 16, probes = 4),
+    "knn_pq_rerank" -> annRerankSql(annPqSql(k * 10), k),
+    "knn_ivfpq_rerank" -> annRerankSql(annIvfPqSql(k * 10), k),
+    "knn_ivfsq_p4" -> annIvfSqSql(k, probes = 4)))
+
+  /** Lexical leg of the hybrid oracles over `tok` (mirrors
+    * HybridSearch's lexical leg): IDF-weighted token overlap, each
+    * query's top 20 documents as `lex(q_id, doc_id, lex_rank)`.
+    */
+  private lazy val HybridLexCtes =
+    s"""ts AS (SELECT DISTINCT doc_id, tok FROM tok),
+       |dfs AS (SELECT tok, count(*)::BIGINT AS df FROM ts GROUP BY tok),
+       |wt AS (SELECT ts.doc_id, ts.tok, (1000000 // dfs.df)::BIGINT AS w
+       |       FROM ts JOIN dfs USING (tok)),
+       |lexs AS (
+       |  SELECT qq.doc_id AS q_id, cc.doc_id AS doc_id,
+       |         sum(cc.w)::BIGINT AS lex_score
+       |  FROM wt qq JOIN wt cc ON cc.tok = qq.tok AND cc.doc_id <> qq.doc_id
+       |  WHERE qq.doc_id < $KnnQueries GROUP BY 1, 2
+       |),
+       |lex AS (SELECT q_id, doc_id, lex_rank FROM (
+       |  SELECT q_id, doc_id, row_number() OVER (PARTITION BY q_id
+       |    ORDER BY lex_score DESC, doc_id) AS lex_rank
+       |  FROM lexs) WHERE lex_rank <= 20)""".stripMargin
+
+  /** Reciprocal-rank fusion of `lex` and the vector leg `vecs` (each
+    * top 20) to each query's top 10 (mirrors HybridSearch's fusion).
+    */
+  private val HybridFusedTail =
+    """vec AS (SELECT q_id, doc_id, vec_rank FROM vecs WHERE vec_rank <= 20),
+      |fused AS (
+      |  SELECT coalesce(l.q_id, v.q_id) AS q_id,
+      |         coalesce(l.doc_id, v.doc_id) AS doc_id,
+      |         l.lex_rank, v.vec_rank,
+      |         (coalesce(1000000000000 // (60 + l.lex_rank), 0)
+      |          + coalesce(1000000000000 // (60 + v.vec_rank), 0))::BIGINT AS rrf_score
+      |  FROM lex l FULL OUTER JOIN vec v
+      |    ON v.q_id = l.q_id AND v.doc_id = l.doc_id
+      |)
+      |SELECT q_id, rnk, doc_id, rrf_score,
+      |       coalesce(lex_rank, -1)::BIGINT AS lex_rank,
+      |       coalesce(vec_rank, -1)::BIGINT AS vec_rank
+      |FROM (SELECT *, (row_number() OVER (PARTITION BY q_id
+      |        ORDER BY rrf_score DESC, doc_id))::INT AS rnk FROM fused)
+      |WHERE rnk <= 10 ORDER BY q_id, rnk""".stripMargin
+
+  /** Each document's synthetic media type by source (mirrors
+    * Multimodal.features' media_type cycle).
+    */
+  private val MediaCte =
+    """m AS (
+      |  SELECT doc_id,
+      |         (['image','audio','video'])[((replace(source, 'src', '')::INT) % 3) + 1] AS media_type
+      |  FROM documents
+      |)""".stripMargin
+
+  /** Count-Min params from the SAME Scala seq the Spark projection
+    * uses (Sketch.cmsParams), so the two engines cannot drift.
+    */
+  private lazy val CmsParamsCte = {
+    val params = Sketch.cmsParams().map { case (i, a, b, d) =>
+      s"($i, $a, $b, $d)" }.mkString(", ")
+    s"params(hash_id, ha, hb, sdiv) AS (VALUES $params)"
   }
+
+  /** The Count-Min cell of hash `h` under the params row `p` (mirrors
+    * Sketch's cell arithmetic; `//` is DuckDB integer division, the
+    * Spark side's `div`).
+    */
+  private def cmsBucket(h: String, p: String = "") =
+    s"((${p}ha * (($h // ${p}sdiv) % 1048576) + ${p}hb) % ${Dedup.MinHashPrime})" +
+      s" % ${Sketch.CmsWidth}"
+
+  /** The params plus the sketch cells `cms(hash_id, bucket, cnt)` over `occ`. */
+  private lazy val CmsCtes =
+    s"""$CmsParamsCte,
+       |cms AS (
+       |  SELECT hash_id,
+       |         ${cmsBucket("h")} AS bucket,
+       |         count(*)::BIGINT AS cnt
+       |  FROM occ, params GROUP BY 1, 2
+       |)""".stripMargin
+
+  /** Keeper election over `ph(doc_id, phash)`: the smallest doc_id of
+    * each hash bucket keeps (mirrors Multimodal's bucket-keeper plan).
+    */
+  private val PhashKeeperTail =
+    """bk AS (
+      |  SELECT phash, min(doc_id)::BIGINT AS keeper_id,
+      |         count(*)::BIGINT AS n_bucket
+      |  FROM ph GROUP BY 1
+      |)
+      |SELECT p.doc_id, p.phash, b.keeper_id, b.n_bucket,
+      |       (CASE WHEN p.doc_id = b.keeper_id THEN 1 ELSE 0 END)::INT AS keep
+      |FROM ph p JOIN bk b USING (phash)
+      |ORDER BY p.doc_id""".stripMargin
+
+  /** The lineitem columns both column-profile oracles cover. */
+  private val ProfileCols = Seq("l_orderkey", "l_partkey", "l_suppkey",
+    "l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax",
+    "l_returnflag", "l_linestatus", "l_shipdate")
+
+  /** Stride-IVF centroids: every 50th quantized vector (mirrors Ann.knnIvf). */
+  private val StrideCentCte =
+    """cent AS (SELECT vec_id AS c_id, v AS cv, norm2 AS cn2 FROM qn
+      |         WHERE vec_id % 50 = 0)""".stripMargin
+
+  /** Stride-IVF cell ranking over the `cent` sample (mirrors Ann.knnIvf:
+    * unguarded cosine, ties on the smaller c_id).
+    */
+  private lazy val StrideRankedSelect =
+    s"""SELECT qn.vec_id, qn.v, qn.norm2, cent.c_id,
+       |    row_number() OVER (PARTITION BY qn.vec_id ORDER BY
+       |      ${sqlCos("cent.cv", "qn.v", "cent.cn2", "qn.norm2")} DESC, cent.c_id) AS c_rn
+       |  FROM qn, cent""".stripMargin
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
@@ -2751,7 +2814,7 @@ object SparkEntry {
 
     "d_ngram_jaccard" ->
       s"""WITH $NormCte, $ShCte,
-         |sz AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM sh GROUP BY 1),
+         |$SzCte,
          |pairs AS (
          |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS inter
          |  FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id
@@ -2761,34 +2824,7 @@ object SparkEntry {
 
     "d_minhash_lsh" ->
       s"""WITH $NormCte, $ShCte,
-         |params(hash_id, ha, hb) AS (VALUES
-         |  (0, 952211, 37199), (1, 370259, 915583), (2, 768389, 68477),
-         |  (3, 113111, 331777), (4, 597269, 749341), (5, 286871, 55411),
-         |  (6, 851423, 426389), (7, 104729, 711871)),
-         |sig AS (
-         |  SELECT doc_id, hash_id,
-         |         min((ha * (h % 1048576) + hb) % 1048573) AS minhash
-         |  FROM sh, params GROUP BY doc_id, hash_id
-         |),
-         |banded AS (
-         |  SELECT doc_id, (hash_id // 2)::INT AS band,
-         |         (min(CASE WHEN hash_id % 2 = 0 THEN minhash END) * 1048583
-         |           + min(CASE WHEN hash_id % 2 = 1 THEN minhash END))::BIGINT AS band_key
-         |  FROM sig GROUP BY doc_id, (hash_id // 2)::INT
-         |),
-         |cands AS (
-         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM banded x JOIN banded y
-         |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-         |),
-         |sz AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM sh GROUP BY 1),
-         |pairs AS (
-         |  SELECT c.doc_a, c.doc_b, count(*)::BIGINT AS inter
-         |  FROM cands c
-         |  JOIN sh sa ON sa.doc_id = c.doc_a
-         |  JOIN sh sb ON sb.doc_id = c.doc_b AND sb.h = sa.h
-         |  GROUP BY 1, 2
-         |)
+         |$MinhashCandCtes
          |$JaccTail""".stripMargin,
 
     // D17 bucket balance at the production geometry: the banded CTE is
@@ -2796,24 +2832,9 @@ object SparkEntry {
     // bandKeyExpr generators), aggregated to per-band bucket stats
     // instead of joined — cand_pairs is the exact Σ n·(n−1) div 2 the
     // candidate join would face
-    "d_bucket_balance" -> {
-      val rows = Dedup.ProdRows
-      val params = Dedup.hashParams(Dedup.ProdBands * rows).zipWithIndex
-        .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
-      val mhs = (0 until rows)
-        .map(r => s"min(CASE WHEN hash_id % $rows = $r THEN minhash END)")
+    "d_bucket_balance" ->
       s"""WITH $NormCte, $ShCte,
-         |params(hash_id, ha, hb) AS (VALUES $params),
-         |sig AS (
-         |  SELECT doc_id, hash_id,
-         |         min((ha * (h % 1048576) + hb) % 1048573) AS minhash
-         |  FROM sh, params GROUP BY doc_id, hash_id
-         |),
-         |banded AS (
-         |  SELECT doc_id, (hash_id // $rows)::INT AS band,
-         |         (${Dedup.bandKeyExpr(mhs)})::BIGINT AS band_key
-         |  FROM sig GROUP BY doc_id, (hash_id // $rows)::INT
-         |),
+         |${bandedCtes(Dedup.ProdBands, Dedup.ProdRows)},
          |bkt AS (
          |  SELECT band, band_key, count(*)::BIGINT AS n
          |  FROM banded GROUP BY band, band_key
@@ -2822,46 +2843,17 @@ object SparkEntry {
          |       sum(CASE WHEN n = 1 THEN 1 ELSE 0 END)::BIGINT AS n_singletons,
          |       max(n)::BIGINT AS max_bucket,
          |       (sum(n * (n - 1)) // 2)::BIGINT AS cand_pairs
-         |FROM bkt GROUP BY band ORDER BY band""".stripMargin
-    },
+         |FROM bkt GROUP BY band ORDER BY band""".stripMargin,
 
     // production geometry: 64-hash param family (first 8 = the legacy
     // literals, 8+ LCG-extended — generated from the SAME Scala Seq
     // the Spark side uses) and the shared band-key combiner text from
     // Dedup.bandKeyExpr, so neither side can drift
-    "d_minhash_lsh_prod" -> {
-      val rows = Dedup.ProdRows
-      val params = Dedup.hashParams(Dedup.ProdBands * rows).zipWithIndex
-        .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
-      val mhs = (0 until rows)
-        .map(r => s"min(CASE WHEN hash_id % $rows = $r THEN minhash END)")
+    "d_minhash_lsh_prod" ->
       s"""WITH $NormCte, $ShCte,
-         |params(hash_id, ha, hb) AS (VALUES $params),
-         |sig AS (
-         |  SELECT doc_id, hash_id,
-         |         min((ha * (h % 1048576) + hb) % 1048573) AS minhash
-         |  FROM sh, params GROUP BY doc_id, hash_id
-         |),
-         |banded AS (
-         |  SELECT doc_id, (hash_id // $rows)::INT AS band,
-         |         (${Dedup.bandKeyExpr(mhs)})::BIGINT AS band_key
-         |  FROM sig GROUP BY doc_id, (hash_id // $rows)::INT
-         |),
-         |cands AS (
-         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM banded x JOIN banded y
-         |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-         |),
-         |sz AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM sh GROUP BY 1),
-         |pairs AS (
-         |  SELECT c.doc_a, c.doc_b, count(*)::BIGINT AS inter
-         |  FROM cands c
-         |  JOIN sh sa ON sa.doc_id = c.doc_a
-         |  JOIN sh sb ON sb.doc_id = c.doc_b AND sb.h = sa.h
-         |  GROUP BY 1, 2
-         |)
-         |$JaccTail""".stripMargin
-    },
+         |${bandedCtes(Dedup.ProdBands, Dedup.ProdRows)},
+         |${candPairsCtes()}
+         |$JaccTail""".stripMargin,
 
     "d_simhash" ->
       s"""WITH $NormCte, $TokCte,
@@ -2975,8 +2967,7 @@ object SparkEntry {
     // keep-first = no smaller-id within-cell neighbor at cos >= tau
     "d_semantic_dedup" -> semanticDedupSql(kCells = 32),
 
-    // Same chain at the large-K regime (the Spark side's broadcast
-    // serving-assignment path) — SQL identical but for k
+    // Same chain at the large-K regime — SQL identical but for k
     "d_semantic_dedup_k256" -> semanticDedupSql(kCells = 256),
 
     "a_knn_bruteforce" -> annBruteforceSql(5),
@@ -2988,63 +2979,26 @@ object SparkEntry {
 
     "a_knn_ivf" ->
       s"""WITH $EmbCte,
-         |cent AS (SELECT vec_id AS c_id, v AS cv, norm2 AS cn2 FROM qn
-         |         WHERE vec_id % 50 = 0),
+         |$StrideCentCte,
          |assigned AS (
          |  SELECT vec_id, v, norm2, c_id AS cell FROM (
-         |    SELECT qn.vec_id, qn.v, qn.norm2, cent.c_id,
-         |      row_number() OVER (PARTITION BY qn.vec_id ORDER BY
-         |        (list_sum(list_transform(range(1,65), i -> cent.cv[i::INT]*qn.v[i::INT])))::DOUBLE
-         |          / (sqrt(cent.cn2::DOUBLE) * sqrt(qn.norm2::DOUBLE)) DESC, cent.c_id) AS c_rn
-         |    FROM qn, cent
+         |    $StrideRankedSelect
          |  ) WHERE c_rn = 1
          |),
-         |scored AS (
-         |  SELECT q2.vec_id AS q_id, c.vec_id AS neighbor_id,
-         |         ${sqlCosBp("q2.v", "c.v", "q2.norm2", "c.norm2")} AS cos_bp,
-         |         (list_sum(list_transform(range(1,65), i -> q2.v[i::INT]*c.v[i::INT])))::DOUBLE
-         |           / (sqrt(q2.norm2::DOUBLE) * sqrt(c.norm2::DOUBLE)) AS cos
-         |  FROM assigned q2 JOIN assigned c
-         |    ON c.cell = q2.cell AND c.vec_id <> q2.vec_id
-         |  WHERE q2.vec_id < $KnnQueries
-         |)
-         |SELECT q_id, rnk, neighbor_id, cos_bp FROM (
-         |  SELECT q_id, neighbor_id, cos_bp,
-         |         (row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id))::INT AS rnk
-         |  FROM scored
-         |) WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin,
+         |${scoredQ2C(BruteIds, "FROM assigned q2 JOIN assigned c\n" +
+             s"    ON c.cell = q2.cell AND c.vec_id <> q2.vec_id\n  WHERE q2.vec_id < $KnnQueries")}
+         |${topKTail(3)}""".stripMargin,
 
     "a_knn_ivf_probe2" ->
       s"""WITH $EmbCte,
-         |cent AS (SELECT vec_id AS c_id, v AS cv, norm2 AS cn2 FROM qn
-         |         WHERE vec_id % 50 = 0),
+         |$StrideCentCte,
          |ranked AS (
-         |  SELECT qn.vec_id, qn.v, qn.norm2, cent.c_id,
-         |    row_number() OVER (PARTITION BY qn.vec_id ORDER BY
-         |      (list_sum(list_transform(range(1,65), i -> cent.cv[i::INT]*qn.v[i::INT])))::DOUBLE
-         |        / (sqrt(cent.cn2::DOUBLE) * sqrt(qn.norm2::DOUBLE)) DESC, cent.c_id) AS c_rn
-         |  FROM qn, cent
+         |  $StrideRankedSelect
          |),
-         |assigned AS (
-         |  SELECT vec_id, v, norm2, c_id AS cell FROM ranked WHERE c_rn = 1
-         |),
-         |probes AS (
-         |  SELECT vec_id AS q_id, v AS qv, norm2 AS qn2, c_id AS qcell
-         |  FROM ranked WHERE vec_id < $KnnQueries AND c_rn <= 2
-         |),
-         |scored AS (
-         |  SELECT q2.q_id, c.vec_id AS neighbor_id,
-         |         ${sqlCosBp("q2.qv", "c.v", "q2.qn2", "c.norm2")} AS cos_bp,
-         |         (list_sum(list_transform(range(1,65), i -> q2.qv[i::INT]*c.v[i::INT])))::DOUBLE
-         |           / (sqrt(q2.qn2::DOUBLE) * sqrt(c.norm2::DOUBLE)) AS cos
-         |  FROM probes q2 JOIN assigned c
-         |    ON c.cell = q2.qcell AND c.vec_id <> q2.q_id
-         |)
-         |SELECT q_id, rnk, neighbor_id, cos_bp FROM (
-         |  SELECT q_id, neighbor_id, cos_bp,
-         |         (row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id))::INT AS rnk
-         |  FROM scored
-         |) WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin,
+         |${assignedCte(from = "ranked")},
+         |${probesCte(2, from = "ranked")},
+         |$ProbedScoredCte
+         |${topKTail(3)}""".stripMargin,
 
     // trained-IVF: the unrolled k-means chain supplies the centroid
     // CTE; cell assignment/probing then mirror the stride-IVF oracle
@@ -3066,18 +3020,12 @@ object SparkEntry {
     // exact integer sum of per-subspace assignment distances
     "a_pq_codes" -> {
       val (ctes, asgs, _) = pqCtes(k = Ann.PqK, iterations = 2)
-      s"""WITH q AS (
-         |  SELECT vec_id, list_transform(embedding, x -> round(x*1000)::BIGINT) AS v
-         |  FROM embeddings
-         |),
+      s"""WITH $QCte,
          |$ctes
          |SELECT a0.vec_id, a0.cluster AS c0, a1.cluster AS c1,
          |       a2.cluster AS c2, a3.cluster AS c3,
          |       (a0.d + a1.d + a2.d + a3.d)::BIGINT AS recon_err
-         |FROM ${asgs(0)} a0
-         |JOIN ${asgs(1)} a1 ON a1.vec_id = a0.vec_id
-         |JOIN ${asgs(2)} a2 ON a2.vec_id = a0.vec_id
-         |JOIN ${asgs(3)} a3 ON a3.vec_id = a0.vec_id
+         |${pqCodeJoin(asgs)}
          |ORDER BY a0.vec_id""".stripMargin
     },
 
@@ -3131,45 +3079,16 @@ object SparkEntry {
     // A15: hybrid RRF — all-BIGINT scoring, FULL OUTER rank fusion
     "a_hybrid_search" ->
       s"""WITH $NormCte, $TokCte,
-         |ts AS (SELECT DISTINCT doc_id, tok FROM tok),
-         |dfs AS (SELECT tok, count(*)::BIGINT AS df FROM ts GROUP BY tok),
-         |wt AS (SELECT ts.doc_id, ts.tok, (1000000 // dfs.df)::BIGINT AS w
-         |       FROM ts JOIN dfs USING (tok)),
-         |lexs AS (
-         |  SELECT qq.doc_id AS q_id, cc.doc_id AS doc_id,
-         |         sum(cc.w)::BIGINT AS lex_score
-         |  FROM wt qq JOIN wt cc ON cc.tok = qq.tok AND cc.doc_id <> qq.doc_id
-         |  WHERE qq.doc_id < $KnnQueries GROUP BY 1, 2
-         |),
-         |lex AS (SELECT q_id, doc_id, lex_rank FROM (
-         |  SELECT q_id, doc_id, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY lex_score DESC, doc_id) AS lex_rank
-         |  FROM lexs) WHERE lex_rank <= 20),
+         |$HybridLexCtes,
          |$EmbCte,
          |vecs AS (
          |  SELECT q2.vec_id AS q_id, c.vec_id AS doc_id,
          |    row_number() OVER (PARTITION BY q2.vec_id ORDER BY
-         |      (list_sum(list_transform(range(1,65), i -> q2.v[i::INT]*c.v[i::INT])))::DOUBLE
-         |        / (sqrt(q2.norm2::DOUBLE) * sqrt(c.norm2::DOUBLE)) DESC, c.vec_id) AS vec_rank
+         |      ${sqlCos("q2.v", "c.v", "q2.norm2", "c.norm2")} DESC, c.vec_id) AS vec_rank
          |  FROM qn q2 JOIN qn c ON c.vec_id <> q2.vec_id
          |  WHERE q2.vec_id < $KnnQueries
          |),
-         |vec AS (SELECT q_id, doc_id, vec_rank FROM vecs WHERE vec_rank <= 20),
-         |fused AS (
-         |  SELECT coalesce(l.q_id, v.q_id) AS q_id,
-         |         coalesce(l.doc_id, v.doc_id) AS doc_id,
-         |         l.lex_rank, v.vec_rank,
-         |         (coalesce(1000000000000 // (60 + l.lex_rank), 0)
-         |          + coalesce(1000000000000 // (60 + v.vec_rank), 0))::BIGINT AS rrf_score
-         |  FROM lex l FULL OUTER JOIN vec v
-         |    ON v.q_id = l.q_id AND v.doc_id = l.doc_id
-         |)
-         |SELECT q_id, rnk, doc_id, rrf_score,
-         |       coalesce(lex_rank, -1)::BIGINT AS lex_rank,
-         |       coalesce(vec_rank, -1)::BIGINT AS vec_rank
-         |FROM (SELECT *, (row_number() OVER (PARTITION BY q_id
-         |        ORDER BY rrf_score DESC, doc_id))::INT AS rnk FROM fused)
-         |WHERE rnk <= 10 ORDER BY q_id, rnk""".stripMargin,
+         |$HybridFusedTail""".stripMargin,
 
     // A15/IVF: same lexical leg + fusion, vector leg replayed through
     // the SAME Lloyd's-chain + probe-ranking CTEs the a_knn_ivf_trained
@@ -3177,60 +3096,19 @@ object SparkEntry {
     "a_hybrid_search_ivf" -> {
       val (ctes, _, cent) = kmeansCtes(k = 8, iterations = 2)
       s"""WITH $NormCte, $TokCte,
-         |ts AS (SELECT DISTINCT doc_id, tok FROM tok),
-         |dfs AS (SELECT tok, count(*)::BIGINT AS df FROM ts GROUP BY tok),
-         |wt AS (SELECT ts.doc_id, ts.tok, (1000000 // dfs.df)::BIGINT AS w
-         |       FROM ts JOIN dfs USING (tok)),
-         |lexs AS (
-         |  SELECT qq.doc_id AS q_id, cc.doc_id AS doc_id,
-         |         sum(cc.w)::BIGINT AS lex_score
-         |  FROM wt qq JOIN wt cc ON cc.tok = qq.tok AND cc.doc_id <> qq.doc_id
-         |  WHERE qq.doc_id < $KnnQueries GROUP BY 1, 2
-         |),
-         |lex AS (SELECT q_id, doc_id, lex_rank FROM (
-         |  SELECT q_id, doc_id, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY lex_score DESC, doc_id) AS lex_rank
-         |  FROM lexs) WHERE lex_rank <= 20),
+         |$HybridLexCtes,
          |${ctes.stripPrefix("WITH ")},
-         |rankedc AS (
-         |  SELECT qn.vec_id, qn.v, qn.norm2, c.c_id,
-         |    row_number() OVER (PARTITION BY qn.vec_id ORDER BY
-         |      (CASE WHEN c.cn2 = 0 OR qn.norm2 = 0 THEN -2.0
-         |       ELSE (list_sum(list_transform(range(1,65), i -> c.cv[i::INT]*qn.v[i::INT])))::DOUBLE
-         |        / (sqrt(c.cn2::DOUBLE) * sqrt(qn.norm2::DOUBLE)) END) DESC, c.c_id) AS c_rn
-         |  FROM qn, $cent c
-         |),
-         |assigned AS (
-         |  SELECT vec_id, v, norm2, c_id AS cell FROM rankedc WHERE c_rn = 1
-         |),
-         |probes AS (
-         |  SELECT vec_id AS q_id, v AS qv, norm2 AS qn2, c_id AS qcell
-         |  FROM rankedc WHERE vec_id < $KnnQueries AND c_rn <= 1
-         |),
+         |${rankedcCte(cent)},
+         |${assignedCte()},
+         |${probesCte(1)},
          |vecs AS (
          |  SELECT q2.q_id, c.vec_id AS doc_id,
          |    row_number() OVER (PARTITION BY q2.q_id ORDER BY
-         |      (list_sum(list_transform(range(1,65), i -> q2.qv[i::INT]*c.v[i::INT])))::DOUBLE
-         |        / (sqrt(q2.qn2::DOUBLE) * sqrt(c.norm2::DOUBLE)) DESC, c.vec_id) AS vec_rank
+         |      ${sqlCos("q2.qv", "c.v", "q2.qn2", "c.norm2")} DESC, c.vec_id) AS vec_rank
          |  FROM probes q2 JOIN assigned c
          |    ON c.cell = q2.qcell AND c.vec_id <> q2.q_id
          |),
-         |vec AS (SELECT q_id, doc_id, vec_rank FROM vecs WHERE vec_rank <= 20),
-         |fused AS (
-         |  SELECT coalesce(l.q_id, v.q_id) AS q_id,
-         |         coalesce(l.doc_id, v.doc_id) AS doc_id,
-         |         l.lex_rank, v.vec_rank,
-         |         (coalesce(1000000000000 // (60 + l.lex_rank), 0)
-         |          + coalesce(1000000000000 // (60 + v.vec_rank), 0))::BIGINT AS rrf_score
-         |  FROM lex l FULL OUTER JOIN vec v
-         |    ON v.q_id = l.q_id AND v.doc_id = l.doc_id
-         |)
-         |SELECT q_id, rnk, doc_id, rrf_score,
-         |       coalesce(lex_rank, -1)::BIGINT AS lex_rank,
-         |       coalesce(vec_rank, -1)::BIGINT AS vec_rank
-         |FROM (SELECT *, (row_number() OVER (PARTITION BY q_id
-         |        ORDER BY rrf_score DESC, doc_id))::INT AS rnk FROM fused)
-         |WHERE rnk <= 10 ORDER BY q_id, rnk""".stripMargin
+         |$HybridFusedTail""".stripMargin
     },
 
     "t_top_tokens" ->
@@ -3241,9 +3119,9 @@ object SparkEntry {
          |ORDER BY n_occurrences DESC, tok LIMIT 20""".stripMargin,
 
     "e_label_centroids" ->
-      """WITH q AS (
+      s"""WITH q AS (
         |  SELECT vec_id, label,
-        |         list_transform(embedding, x -> round(x*1000)::BIGINT) AS v
+        |         $MilliV AS v
         |  FROM embeddings
         |),
         |per_dim AS (
@@ -3262,15 +3140,7 @@ object SparkEntry {
 
     "t_lang_id" ->
       s"""WITH $NormCte, $TokCte,
-         |markers(cand_lang, marker) AS (VALUES
-         |  ('en','the'),('en','a'),('en','and'),('en','of'),
-         |  ('de','der'),('de','und'),('de','das'),('de','die'),
-         |  ('fr','le'),('fr','et'),('fr','la'),('fr','les'),
-         |  ('es','el'),('es','y'),('es','los'),('es','de')),
-         |hits AS (
-         |  SELECT doc_id, cand_lang, count(*)::BIGINT AS n_hits
-         |  FROM tok JOIN markers ON tok = marker GROUP BY 1, 2
-         |),
+         |$LangMarkerCtes,
          |best AS (
          |  SELECT doc_id, cand_lang, n_hits FROM (
          |    SELECT *, row_number() OVER (PARTITION BY doc_id
@@ -3285,22 +3155,10 @@ object SparkEntry {
 
     "t_source_quality" ->
       s"""WITH $NormCte,
-         |m AS (
-         |  SELECT doc_id,
-         |    len(string_split(t, ' '))::BIGINT AS wc,
-         |    length(replace(t, ' ', ''))::BIGINT AS letters,
-         |    len(list_filter(string_split(t, ' '),
-         |      x -> x IN ('the','a','and','of','to','in','is','on','for','with')))::BIGINT AS sw_hits,
-         |    length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::BIGINT AS alpha_len,
-         |    length(text)::BIGINT AS text_len
-         |  FROM norm
-         |),
+         |${qualityFeaturesCte("m")},
          |scored AS (
          |  SELECT d.source, m.wc,
-         |    (CASE WHEN m.wc BETWEEN 20 AND 1000 THEN 25 ELSE 0 END
-         |     + CASE WHEN (m.letters * 10 // m.wc) BETWEEN 30 AND 100 THEN 25 ELSE 0 END
-         |     + CASE WHEN m.sw_hits * 100 >= m.wc * 5 THEN 25 ELSE 0 END
-         |     + CASE WHEN m.alpha_len * 100 >= m.text_len * 60 THEN 25 ELSE 0 END)::INT AS score
+         |    ${sqlQualityScore("m.")}::INT AS score
          |  FROM m JOIN documents d ON d.doc_id = m.doc_id
          |)
          |SELECT source, count(*)::BIGINT AS n_docs,
@@ -3313,21 +3171,9 @@ object SparkEntry {
 
     "t_quality_score" ->
       s"""WITH $NormCte,
-         |m AS (
-         |  SELECT doc_id,
-         |    len(string_split(t, ' '))::BIGINT AS wc,
-         |    length(replace(t, ' ', ''))::BIGINT AS letters,
-         |    len(list_filter(string_split(t, ' '),
-         |      x -> x IN ('the','a','and','of','to','in','is','on','for','with')))::BIGINT AS sw_hits,
-         |    length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::BIGINT AS alpha_len,
-         |    length(text)::BIGINT AS text_len
-         |  FROM norm
-         |)
+         |${qualityFeaturesCte("m")}
          |SELECT doc_id, wc, sw_hits, (letters * 10 // wc)::BIGINT AS avg_wlen_x10,
-         |  (CASE WHEN wc BETWEEN 20 AND 1000 THEN 25 ELSE 0 END
-         |   + CASE WHEN (letters * 10 // wc) BETWEEN 30 AND 100 THEN 25 ELSE 0 END
-         |   + CASE WHEN sw_hits * 100 >= wc * 5 THEN 25 ELSE 0 END
-         |   + CASE WHEN alpha_len * 100 >= text_len * 60 THEN 25 ELSE 0 END)::INT AS score
+         |  ${sqlQualityScore()}::INT AS score
          |FROM m ORDER BY doc_id""".stripMargin,
 
     "t_token_count" ->
@@ -3418,35 +3264,9 @@ object SparkEntry {
          |SELECT doc_id, bpe_tokens FROM bpedoc
          |ORDER BY doc_id""".stripMargin,
 
-    "t_tokenizer_fit" ->
-      s"""WITH RECURSIVE $NormCte, $BpeTokCte
-         |SELECT d.lang, count(*)::BIGINT AS n_docs,
-         |       sum(d.n_chars)::BIGINT AS n_chars,
-         |       sum(len(string_split(n.t, ' ')))::BIGINT AS ws_tokens,
-         |       sum(b.bpe_tokens)::BIGINT AS bpe_tokens,
-         |       (CASE WHEN sum(len(string_split(n.t, ' '))) = 0 THEN NULL
-         |        ELSE sum(b.bpe_tokens) * 100 // sum(len(string_split(n.t, ' '))) END)::BIGINT
-         |         AS fertility_pct,
-         |       (CASE WHEN sum(b.bpe_tokens) = 0 THEN NULL
-         |        ELSE sum(d.n_chars) * 100 // sum(b.bpe_tokens) END)::BIGINT
-         |         AS chars_per_tok_pct
-         |FROM documents d JOIN norm n USING (doc_id) JOIN bpedoc b USING (doc_id)
-         |GROUP BY d.lang ORDER BY d.lang""".stripMargin,
+    "t_tokenizer_fit" -> tokenizerFitSql(BpeTokCte),
 
-    "t_tokenizer_fit_d50" ->
-      s"""WITH RECURSIVE $NormCte, ${bpeTokCteOver("norm", depth = 50)}
-         |SELECT d.lang, count(*)::BIGINT AS n_docs,
-         |       sum(d.n_chars)::BIGINT AS n_chars,
-         |       sum(len(string_split(n.t, ' ')))::BIGINT AS ws_tokens,
-         |       sum(b.bpe_tokens)::BIGINT AS bpe_tokens,
-         |       (CASE WHEN sum(len(string_split(n.t, ' '))) = 0 THEN NULL
-         |        ELSE sum(b.bpe_tokens) * 100 // sum(len(string_split(n.t, ' '))) END)::BIGINT
-         |         AS fertility_pct,
-         |       (CASE WHEN sum(b.bpe_tokens) = 0 THEN NULL
-         |        ELSE sum(d.n_chars) * 100 // sum(b.bpe_tokens) END)::BIGINT
-         |         AS chars_per_tok_pct
-         |FROM documents d JOIN norm n USING (doc_id) JOIN bpedoc b USING (doc_id)
-         |GROUP BY d.lang ORDER BY d.lang""".stripMargin,
+    "t_tokenizer_fit_d50" -> tokenizerFitSql(bpeTokCteOver("norm", depth = 50)),
 
     "t_tokenize_ids" ->
       s"""WITH RECURSIVE $NormCte, $BpeTokCte, $BpeIdsCte
@@ -3455,12 +3275,7 @@ object SparkEntry {
 
     "p_pack_sequences_ids" ->
       s"""WITH RECURSIVE $NormCte, $BpeTokCte, $BpeIdsCte,
-         |d AS (
-         |  SELECT n.doc_id, b.bpe_tokens AS n_tok,
-         |         (${sqlH20("n.doc_id::VARCHAR")} % 8)::BIGINT AS shard,
-         |         ${sqlH60("n.t")} AS ord_h
-         |  FROM norm n JOIN bpedoc b USING (doc_id)
-         |),
+         |${packDocsCte("n.", "b.bpe_tokens", "norm n JOIN bpedoc b USING (doc_id)")},
          |c AS (
          |  SELECT doc_id, shard, ord_h, n_tok,
          |         sum(n_tok) OVER (PARTITION BY shard ORDER BY ord_h, doc_id
@@ -3495,21 +3310,9 @@ object SparkEntry {
 
     "p_pack_sequences_bpe" ->
       s"""WITH RECURSIVE $NormCte, $BpeTokCte,
-         |d AS (
-         |  SELECT n.doc_id, b.bpe_tokens AS n_tok,
-         |         (${sqlH20("n.doc_id::VARCHAR")} % 8)::BIGINT AS shard,
-         |         ${sqlH60("n.t")} AS ord_h
-         |  FROM norm n JOIN bpedoc b USING (doc_id)
-         |),
-         |c AS (
-         |  SELECT shard, n_tok,
-         |         sum(n_tok) OVER (PARTITION BY shard ORDER BY ord_h, doc_id
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM d
-         |)
-         |SELECT shard, ((cum - n_tok) // 256)::BIGINT AS seq_id,
-         |       count(*)::BIGINT AS n_docs, sum(n_tok)::BIGINT AS n_tokens
-         |FROM c GROUP BY shard, seq_id ORDER BY shard, seq_id""".stripMargin,
+         |${packDocsCte("n.", "b.bpe_tokens", "norm n JOIN bpedoc b USING (doc_id)")},
+         |$PackCumCte
+         |$PackSeqsSql ORDER BY shard, seq_id""".stripMargin,
 
     "t_quota_sample" ->
       """SELECT source, rnk, doc_id FROM (
@@ -3530,9 +3333,7 @@ object SparkEntry {
          |         (CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS is_tgt,
          |         (${sqlH60("gram")} % 1024) AS g
          |  FROM (
-         |    SELECT doc_id, lang, unnest(list_concat(a,
-         |      list_transform(range(1, len(a)),
-         |        i -> a[i::INT] || '_' || a[(i+1)::INT]))) AS gram
+         |    SELECT doc_id, lang, $UniBigrams AS gram
          |    FROM toks
          |  )
          |),
@@ -3604,35 +3405,8 @@ object SparkEntry {
     // exact-Jaccard verify tail
     "d_contamination_fuzzy" ->
       s"""WITH $NormCte, $ShCte,
-         |params(hash_id, ha, hb) AS (VALUES
-         |  (0, 952211, 37199), (1, 370259, 915583), (2, 768389, 68477),
-         |  (3, 113111, 331777), (4, 597269, 749341), (5, 286871, 55411),
-         |  (6, 851423, 426389), (7, 104729, 711871)),
-         |sig AS (
-         |  SELECT doc_id, hash_id,
-         |         min((ha * (h % 1048576) + hb) % 1048573) AS minhash
-         |  FROM sh, params GROUP BY doc_id, hash_id
-         |),
-         |banded AS (
-         |  SELECT doc_id, (hash_id // 2)::INT AS band,
-         |         (min(CASE WHEN hash_id % 2 = 0 THEN minhash END) * 1048583
-         |           + min(CASE WHEN hash_id % 2 = 1 THEN minhash END))::BIGINT AS band_key
-         |  FROM sig GROUP BY doc_id, (hash_id // 2)::INT
-         |),
-         |cands AS (
-         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM banded x JOIN banded y
-         |    ON x.band = y.band AND x.band_key = y.band_key
-         |  WHERE x.doc_id % 10 <> 7 AND y.doc_id % 10 = 7
-         |),
-         |sz AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM sh GROUP BY 1),
-         |pairs AS (
-         |  SELECT c.doc_a, c.doc_b, count(*)::BIGINT AS inter
-         |  FROM cands c
-         |  JOIN sh sa ON sa.doc_id = c.doc_a
-         |  JOIN sh sb ON sb.doc_id = c.doc_b AND sb.h = sa.h
-         |  GROUP BY 1, 2
-         |)
+         |${bandedCtes(4, 2)},
+         |${candPairsCtes("WHERE x.doc_id % 10 <> 7 AND y.doc_id % 10 = 7")}
          |$JaccTail""".stripMargin,
 
     "t_sample_split" ->
@@ -3720,11 +3494,7 @@ object SparkEntry {
     // params; Spark's values come from REALLY decoding the PNG bytes,
     // so equality proves the decode round-trips. audio/video: md5 stub.
     "x_multimodal_features" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |         (['image','audio','video'])[((replace(source, 'src', '')::INT) % 3) + 1] AS media_type
-        |  FROM documents
-        |)
+      s"""WITH $MediaCte
         |SELECT doc_id, media_type,
         |       (CASE media_type
         |          WHEN 'image' THEN doc_id % 64 + 1
@@ -3744,11 +3514,7 @@ object SparkEntry {
         |FROM m ORDER BY doc_id""".stripMargin,
 
     "x_resize" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |         (['image','audio','video'])[((replace(source, 'src', '')::INT) % 3) + 1] AS media_type
-        |  FROM documents
-        |)
+      s"""WITH $MediaCte
         |SELECT doc_id,
         |       greatest(1, (doc_id % 64 + 1) // 2)::BIGINT AS width,
         |       greatest(1, (doc_id % 48 + 1) // 2)::BIGINT AS height,
@@ -3756,11 +3522,7 @@ object SparkEntry {
         |FROM m WHERE media_type = 'image' ORDER BY doc_id""".stripMargin,
 
     "x_frame_sample" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |         (['image','audio','video'])[((replace(source, 'src', '')::INT) % 3) + 1] AS media_type
-        |  FROM documents
-        |),
+      s"""WITH $MediaCte,
         |v AS (SELECT doc_id, doc_id % 8 + 2 AS n FROM m WHERE media_type = 'video')
         |SELECT doc_id, (2 * t.i)::BIGINT AS frame_idx,
         |       (doc_id % 32 + 1)::BIGINT AS width,
@@ -3771,11 +3533,7 @@ object SparkEntry {
         |ORDER BY doc_id, frame_idx""".stripMargin,
 
     "x_audio_resample" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |         (['image','audio','video'])[((replace(source, 'src', '')::INT) % 3) + 1] AS media_type
-        |  FROM documents
-        |)
+      s"""WITH $MediaCte
         |SELECT doc_id,
         |       (([8000,11025,16000,22050])[(doc_id % 4)::INT + 1] // 2)::BIGINT AS width,
         |       (doc_id % 2 + 1)::BIGINT AS height,
@@ -4037,41 +3795,8 @@ object SparkEntry {
 
     "d_edit_distance" ->
       s"""WITH $NormCte, $ShCte,
-         |params(hash_id, ha, hb) AS (VALUES
-         |  (0, 952211, 37199), (1, 370259, 915583), (2, 768389, 68477),
-         |  (3, 113111, 331777), (4, 597269, 749341), (5, 286871, 55411),
-         |  (6, 851423, 426389), (7, 104729, 711871)),
-         |sig AS (
-         |  SELECT doc_id, hash_id,
-         |         min((ha * (h % 1048576) + hb) % 1048573) AS minhash
-         |  FROM sh, params GROUP BY doc_id, hash_id
-         |),
-         |banded AS (
-         |  SELECT doc_id, (hash_id // 2)::INT AS band,
-         |         (min(CASE WHEN hash_id % 2 = 0 THEN minhash END) * 1048583
-         |           + min(CASE WHEN hash_id % 2 = 1 THEN minhash END))::BIGINT AS band_key
-         |  FROM sig GROUP BY doc_id, (hash_id // 2)::INT
-         |),
-         |cands AS (
-         |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-         |  FROM banded x JOIN banded y
-         |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id
-         |),
-         |sz AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM sh GROUP BY 1),
-         |pairs AS (
-         |  SELECT c.doc_a, c.doc_b, count(*)::BIGINT AS inter
-         |  FROM cands c
-         |  JOIN sh sa ON sa.doc_id = c.doc_a
-         |  JOIN sh sb ON sb.doc_id = c.doc_b AND sb.h = sa.h
-         |  GROUP BY 1, 2
-         |),
-         |verified AS (
-         |  SELECT doc_a, doc_b FROM (
-         |    SELECT p.doc_a, p.doc_b,
-         |           round(p.inter * 10000.0 / (x.n_sh + y.n_sh - p.inter), 0)::BIGINT AS jacc_bp
-         |    FROM pairs p JOIN sz x ON x.doc_id = p.doc_a JOIN sz y ON y.doc_id = p.doc_b
-         |  ) WHERE jacc_bp >= $NgramJaccardBp
-         |),
+         |$MinhashCandCtes,
+         |$VerifiedCte,
          |pfx AS (SELECT doc_id, substr(t, 1, 100) AS prefix FROM norm)
          |SELECT v.doc_a, v.doc_b,
          |       levenshtein(a.prefix, b.prefix)::INT AS edit_dist
@@ -4201,16 +3926,7 @@ object SparkEntry {
 
     "r_gap_detection" ->
       s"""WITH $MsgCte, $SegCte, $PresentSegCte,
-         |g AS (
-         |  SELECT part_id, start_offset,
-         |         max(end_offset) OVER (PARTITION BY part_id ORDER BY start_offset, end_offset
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-         |  FROM present
-         |)
-         |SELECT part_id, prev_end + 1 AS lost_start, start_offset - 1 AS lost_end,
-         |       start_offset - prev_end - 1 AS lost_count
-         |FROM g WHERE prev_end IS NOT NULL AND start_offset > prev_end + 1
-         |ORDER BY part_id, lost_start""".stripMargin,
+         |${lostRangesSql("present")}""".stripMargin,
 
     "r_lost_ranges" ->
       s"""WITH $MsgCte, $SegCte, $PresentSegCte,
@@ -4220,16 +3936,7 @@ object SparkEntry {
          |  SELECT part_id, start_offset + 10, start_offset + 40 FROM present
          |  WHERE seg_seq % 5 = 1 AND message_count = $SegMaxMessages
          |),
-         |g AS (
-         |  SELECT part_id, start_offset,
-         |         max(end_offset) OVER (PARTITION BY part_id ORDER BY start_offset, end_offset
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-         |  FROM aug
-         |)
-         |SELECT part_id, prev_end + 1 AS lost_start, start_offset - 1 AS lost_end,
-         |       start_offset - prev_end - 1 AS lost_count
-         |FROM g WHERE prev_end IS NOT NULL AND start_offset > prev_end + 1
-         |ORDER BY part_id, lost_start""".stripMargin,
+         |${lostRangesSql("aug")}""".stripMargin,
 
     "r_ingress_replay" ->
       s"""WITH $MsgCte, $SegCte, $PresentSegCte, $CkptCte,
@@ -4462,12 +4169,7 @@ object SparkEntry {
          |    min(start_offset) AS min_s, max(end_offset) AS max_e
          |  FROM f GROUP BY part_id
          |),
-         |g AS (
-         |  SELECT part_id, start_offset,
-         |         max(end_offset) OVER (PARTITION BY part_id ORDER BY start_offset, end_offset
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-         |  FROM arr
-         |),
+         |${prevEndCte("arr")},
          |holes AS (
          |  SELECT part_id, count(*)::BIGINT AS lost_ranges,
          |         sum(start_offset - prev_end - 1)::BIGINT AS messages_lost
@@ -4524,40 +4226,16 @@ object SparkEntry {
 
     "p_pack_sequences" ->
       s"""WITH $NormCte,
-         |d AS (
-         |  SELECT doc_id, len(string_split(t, ' '))::BIGINT AS n_tok,
-         |         (${sqlH20("doc_id::VARCHAR")} % 8)::BIGINT AS shard,
-         |         ${sqlH60("t")} AS ord_h
-         |  FROM norm
-         |),
-         |c AS (
-         |  SELECT shard, n_tok,
-         |         sum(n_tok) OVER (PARTITION BY shard ORDER BY ord_h, doc_id
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM d
-         |)
-         |SELECT shard, ((cum - n_tok) // 256)::BIGINT AS seq_id,
-         |       count(*)::BIGINT AS n_docs, sum(n_tok)::BIGINT AS n_tokens
-         |FROM c GROUP BY shard, seq_id ORDER BY shard, seq_id""".stripMargin,
+         |${packDocsCte("", "len(string_split(t, ' '))::BIGINT", "norm")},
+         |$PackCumCte
+         |$PackSeqsSql ORDER BY shard, seq_id""".stripMargin,
 
     "p_pack_audit" ->
       s"""WITH $NormCte,
-         |d AS (
-         |  SELECT doc_id, len(string_split(t, ' '))::BIGINT AS n_tok,
-         |         (${sqlH20("doc_id::VARCHAR")} % 8)::BIGINT AS shard,
-         |         ${sqlH60("t")} AS ord_h
-         |  FROM norm
-         |),
-         |c AS (
-         |  SELECT shard, n_tok,
-         |         sum(n_tok) OVER (PARTITION BY shard ORDER BY ord_h, doc_id
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM d
-         |),
+         |${packDocsCte("", "len(string_split(t, ' '))::BIGINT", "norm")},
+         |$PackCumCte,
          |seqs AS (
-         |  SELECT shard, ((cum - n_tok) // 256)::BIGINT AS seq_id,
-         |         count(*)::BIGINT AS n_docs, sum(n_tok)::BIGINT AS n_tokens
-         |  FROM c GROUP BY shard, seq_id
+         |  $PackSeqsSql
          |)
          |SELECT shard, count(*)::BIGINT AS n_seqs, sum(n_docs)::BIGINT AS n_docs,
          |       sum(n_tokens)::BIGINT AS n_tokens,
@@ -4568,22 +4246,10 @@ object SparkEntry {
 
     "p_curriculum" ->
       s"""WITH $NormCte,
-         |m AS (
-         |  SELECT doc_id,
-         |    len(string_split(t, ' '))::BIGINT AS wc,
-         |    length(replace(t, ' ', ''))::BIGINT AS letters,
-         |    len(list_filter(string_split(t, ' '),
-         |      x -> x IN ('the','a','and','of','to','in','is','on','for','with')))::BIGINT AS sw_hits,
-         |    length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::BIGINT AS alpha_len,
-         |    length(text)::BIGINT AS text_len
-         |  FROM norm
-         |),
+         |${qualityFeaturesCte("m")},
          |scored AS (
          |  SELECT doc_id,
-         |    (CASE WHEN wc BETWEEN 20 AND 1000 THEN 25 ELSE 0 END
-         |     + CASE WHEN (letters * 10 // wc) BETWEEN 30 AND 100 THEN 25 ELSE 0 END
-         |     + CASE WHEN sw_hits * 100 >= wc * 5 THEN 25 ELSE 0 END
-         |     + CASE WHEN alpha_len * 100 >= text_len * 60 THEN 25 ELSE 0 END)::INT AS score
+         |    ${sqlQualityScore()}::INT AS score
          |  FROM m
          |),
          |ph AS (
@@ -4682,36 +4348,23 @@ object SparkEntry {
     // SAME Scala seq (Sketch.cmsParams) the Spark projection uses, so
     // the two engines cannot drift; `//` is DuckDB integer division,
     // matching the Spark side's `div`
-    "t_cms_sketch" -> {
-      val params = Sketch.cmsParams().map { case (i, a, b, d) =>
-        s"($i, $a, $b, $d)" }.mkString(", ")
+    "t_cms_sketch" ->
       s"""WITH $NormCte, $TokCte,
          |occ AS (SELECT ${sqlH60("tok")} AS h FROM tok),
-         |params(hash_id, ha, hb, sdiv) AS (VALUES $params)
+         |$CmsParamsCte
          |SELECT hash_id,
-         |       ((ha * ((h // sdiv) % 1048576) + hb) % ${Dedup.MinHashPrime})
-         |         % ${Sketch.CmsWidth} AS bucket,
+         |       ${cmsBucket("h")} AS bucket,
          |       count(*)::BIGINT AS cnt
-         |FROM occ, params GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
+         |FROM occ, params GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
 
     // T15b: heavy hitters decoded through the sketch — est(tok) is the
     // min over the depth cells the token hashes to (every one of which
     // the token itself incremented, so the join always finds all
     // depth rows); threshold compared in integer cross-multiplied form
-    "t_cms_heavy_hitters" -> {
-      val params = Sketch.cmsParams().map { case (i, a, b, d) =>
-        s"($i, $a, $b, $d)" }.mkString(", ")
+    "t_cms_heavy_hitters" ->
       s"""WITH $NormCte, $TokCte,
          |occ AS (SELECT tok, ${sqlH60("tok")} AS h FROM tok),
-         |params(hash_id, ha, hb, sdiv) AS (VALUES $params),
-         |cms AS (
-         |  SELECT hash_id,
-         |         ((ha * ((h // sdiv) % 1048576) + hb) % ${Dedup.MinHashPrime})
-         |           % ${Sketch.CmsWidth} AS bucket,
-         |         count(*)::BIGINT AS cnt
-         |  FROM occ, params GROUP BY 1, 2
-         |),
+         |$CmsCtes,
          |exact AS (
          |  SELECT tok, min(h) AS h, count(*)::BIGINT AS n_exact
          |  FROM occ GROUP BY tok
@@ -4722,32 +4375,21 @@ object SparkEntry {
          |  FROM exact e
          |  JOIN params p ON true
          |  JOIN cms c ON c.hash_id = p.hash_id
-         |    AND c.bucket = ((p.ha * ((e.h // p.sdiv) % 1048576) + p.hb)
-         |                     % ${Dedup.MinHashPrime}) % ${Sketch.CmsWidth}
+         |    AND c.bucket = ${cmsBucket("e.h", "p.")}
          |  GROUP BY e.tok, e.n_exact
          |)
          |SELECT tok, n_exact, est_count,
          |       (est_count - n_exact)::BIGINT AS overcount
          |FROM est, total
          |WHERE est_count * 10000 >= n * ${Sketch.HeavyHitterShareBp}
-         |ORDER BY tok""".stripMargin
-    },
+         |ORDER BY tok""".stripMargin,
 
     // T15c: pure-sketch serving — same cells CTE, candidates = the
     // stratum's distinct vocabulary, NO exact counts anywhere
-    "t_cms_estimate" -> {
-      val params = Sketch.cmsParams().map { case (i, a, b, d) =>
-        s"($i, $a, $b, $d)" }.mkString(", ")
+    "t_cms_estimate" ->
       s"""WITH $NormCte, $TokCte,
          |occ AS (SELECT ${sqlH60("tok")} AS h FROM tok),
-         |params(hash_id, ha, hb, sdiv) AS (VALUES $params),
-         |cms AS (
-         |  SELECT hash_id,
-         |         ((ha * ((h // sdiv) % 1048576) + hb) % ${Dedup.MinHashPrime})
-         |           % ${Sketch.CmsWidth} AS bucket,
-         |         count(*)::BIGINT AS cnt
-         |  FROM occ, params GROUP BY 1, 2
-         |),
+         |$CmsCtes,
          |total AS (SELECT count(*)::BIGINT AS n FROM occ),
          |cand AS (
          |  SELECT DISTINCT tok, ${sqlH60("tok")} AS h
@@ -4758,14 +4400,12 @@ object SparkEntry {
          |  FROM cand c0
          |  JOIN params p ON true
          |  JOIN cms c ON c.hash_id = p.hash_id
-         |    AND c.bucket = ((p.ha * ((c0.h // p.sdiv) % 1048576) + p.hb)
-         |                     % ${Dedup.MinHashPrime}) % ${Sketch.CmsWidth}
+         |    AND c.bucket = ${cmsBucket("c0.h", "p.")}
          |  GROUP BY c0.tok
          |)
          |SELECT tok, est_count,
          |       (est_count * 10000 // n)::BIGINT AS share_bp
-         |FROM est, total ORDER BY tok""".stripMargin
-    },
+         |FROM est, total ORDER BY tok""".stripMargin,
 
     "d_incremental_dedup" -> IncrementalDedupSql,
     "d_incremental_dedup_indexed" -> IncrementalDedupSql,
@@ -4773,7 +4413,7 @@ object SparkEntry {
 
     "d_containment_pairs" ->
       s"""WITH $NormCte, $ShCte,
-         |sz AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM sh GROUP BY 1),
+         |$SzCte,
          |it AS (
          |  SELECT sa.doc_id AS doc_src, sb.doc_id AS doc_dst,
          |         count(*)::BIGINT AS inter
@@ -4880,7 +4520,7 @@ object SparkEntry {
          |ORDER BY source, lang""".stripMargin,
 
     "x_video_dedup" ->
-      """WITH vid AS (
+      s"""WITH vid AS (
         |  SELECT doc_id,
         |         (doc_id % 32 + 1)::BIGINT AS width,
         |         (doc_id % 24 + 1)::BIGINT AS height,
@@ -4896,15 +4536,7 @@ object SparkEntry {
         |           AS phash
         |  FROM vid
         |),
-        |bk AS (
-        |  SELECT phash, min(doc_id)::BIGINT AS keeper_id,
-        |         count(*)::BIGINT AS n_bucket
-        |  FROM ph GROUP BY 1
-        |)
-        |SELECT p.doc_id, p.phash, b.keeper_id, b.n_bucket,
-        |       (CASE WHEN p.doc_id = b.keeper_id THEN 1 ELSE 0 END)::INT AS keep
-        |FROM ph p JOIN bk b USING (phash)
-        |ORDER BY p.doc_id""".stripMargin,
+        |$PhashKeeperTail""".stripMargin,
 
     // one UNION ALL stanza per lineitem column, same aggregates as the
     // single-pass Spark profile
@@ -4924,10 +4556,7 @@ object SparkEntry {
         |ORDER BY event_type, q""".stripMargin,
 
     "q_column_profile_audit" -> {
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-      cols.map { c =>
+      ProfileCols.map { c =>
         s"""SELECT '$c' AS col_name,
            |  count(DISTINCT $c::VARCHAR)::BIGINT AS n_distinct_exact,
            |  2000::BIGINT AS bound_bp, 1::BIGINT AS within_bound
@@ -4937,10 +4566,7 @@ object SparkEntry {
 
     "q_column_profile" -> {
       val doubles = Set("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-      cols.map { c =>
+      ProfileCols.map { c =>
         val mm = if (doubles(c)) s"::DECIMAL(38,6)::VARCHAR" else "::VARCHAR"
         s"""SELECT '$c' AS col_name, count(*)::BIGINT AS n_rows,
            |  (count(*) - count($c))::BIGINT AS n_null,
@@ -4953,7 +4579,7 @@ object SparkEntry {
     // image synthesis params reproduced arithmetically (the Spark side
     // derives the same values by really decoding the PNG payloads)
     "x_image_dedup" ->
-      """WITH img AS (
+      s"""WITH img AS (
         |  SELECT doc_id,
         |         (doc_id % 64 + 1)::BIGINT AS width,
         |         (doc_id % 48 + 1)::BIGINT AS height,
@@ -4967,15 +4593,7 @@ object SparkEntry {
         |           + ((height - 1) // 8))::BIGINT AS phash
         |  FROM img
         |),
-        |bk AS (
-        |  SELECT phash, min(doc_id)::BIGINT AS keeper_id,
-        |         count(*)::BIGINT AS n_bucket
-        |  FROM ph GROUP BY 1
-        |)
-        |SELECT p.doc_id, p.phash, b.keeper_id, b.n_bucket,
-        |       (CASE WHEN p.doc_id = b.keeper_id THEN 1 ELSE 0 END)::INT AS keep
-        |FROM ph p JOIN bk b USING (phash)
-        |ORDER BY p.doc_id""".stripMargin,
+        |$PhashKeeperTail""".stripMargin,
 
     // real DCT pHash: raster synthesis + fixed-point DCT + median
     // threshold + banded Hamming dedup replayed integer-exactly (the

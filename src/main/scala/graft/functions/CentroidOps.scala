@@ -9,49 +9,41 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.SqlBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 
-/** Large-K centroid assignment: the broadcast-matrix twin of the
-  * inlined-literal argmin projections in [[graft.operators.Ann]].
+/** Nearest-centroid assignment: the one kernel behind every k-means,
+  * IVF, PQ and SemDeDup argmin in [[graft.operators.Ann]].
   *
-  * The literal form inlines k·dims literal longs into ONE projection
-  * expression tree — perfect at k ≤ a few hundred (bytes of plan, full
-  * whole-stage codegen), but past k·dims ≈ 10⁵ the tree itself is the
-  * bottleneck: analysis/optimization walk k·dims nodes, the generated
-  * function splits, and the JVM constant pool fills. SemDeDup's own
-  * scale rule (kCells ∝ corpus, ~10⁵ cells at web scale) walks straight
-  * into that regime, so the trained family needs an assignment path
-  * whose PLAN cost is O(1) in k.
-  *
-  * This is that path: centroids live in ONE flat `long[]` matrix,
-  * shipped once per executor as a spark Broadcast (the expression
-  * serializes only the handle — the plan stays bytes, the matrix moves
+  * Centroids live in ONE flat `long[]` matrix, shipped once per
+  * executor as a spark Broadcast (the expression serializes only the
+  * handle — the plan stays bytes and O(1) in k, and the matrix moves
   * over the torrent protocol exactly once per executor, not once per
   * task). The argmin is a tight generated loop over primitive arrays —
-  * still a pure projection, zero shuffle, zero join, inside
-  * whole-stage codegen (`defineCodeGen`), so the corpus-side plan
-  * shape is IDENTICAL to the literal form at any k that fits executor
-  * memory (10⁵ cells × 64 dims = 51 MB — a small broadcast).
+  * a pure projection, zero shuffle, zero join, inside whole-stage
+  * codegen (`defineCodeGen`), at any k that fits executor memory
+  * (10⁵ cells × 64 dims = 51 MB — a small broadcast). An inlined
+  * literal expression tree, by contrast, grows with k·dims: past
+  * k·dims ≈ 10⁵ analysis, optimization and the JVM constant pool
+  * become the bottleneck, and SemDeDup's own scale rule (kCells ∝
+  * corpus) walks straight into that regime.
   *
-  * Semantics are pinned bit-identical to the literal projections
-  * (specs compare both paths element-for-element):
-  *  - [[CentroidOps.nearestL2]] ≡ `array_min` over per-centroid
-  *    `struct(norm2 − 2·dot + cn2, c_id)` structs: exact long
-  *    arithmetic (Java wrap-around, as Spark non-ANSI), ties on the
-  *    smaller centroid id (the matrix is id-sorted and the scan
-  *    replaces only on a STRICT improvement).
-  *  - [[CentroidOps.nearestCos]] ≡ `array_min` over
-  *    `struct(CASE WHEN norm2=0 OR cn2=0 THEN 2.0 ELSE −cos END, c_id)`:
-  *    the zero-norm guard ranks degenerate pairs LAST, and the double
+  * Semantics (the DuckDB oracles restate both rules, and
+  * CentroidAssignSpec checks them against a plain-Scala argmin):
+  *  - [[CentroidOps.nearestL2]]: min of `norm2 − 2·dot + cn2` in
+  *    exact long arithmetic (Java wrap-around, as Spark non-ANSI),
+  *    ties on the smaller centroid id (the matrix is id-sorted and the
+  *    scan replaces only on a STRICT improvement).
+  *  - [[CentroidOps.nearestCos]]: min of
+  *    `CASE WHEN norm2=0 OR cn2=0 THEN 2.0 ELSE −cos END`: the
+  *    zero-norm guard ranks degenerate pairs LAST, and the double
   *    arithmetic is the same op sequence as [[graft.operators.Ann.cosine]]
   *    (`dot / (sqrt(cn2) · sqrt(norm2))`, then one negation), so every
   *    score is the same IEEE bit pattern. Comparison uses primitive
-  *    `<`/`==` — Spark's struct ordering treats −0.0 == 0.0
-  *    (SQLOrderingUtil) and no NaN can arise under the guard, so the
-  *    tie-break agrees too.
+  *    `<`, so −0.0 and 0.0 tie and the smaller id wins; no NaN can
+  *    arise under the guard.
   */
 object CentroidOps {
 
-  /** Min-squared-L2 centroid: returns struct(d: long, c_id: long) —
-    * bit-equal to the literal `array_min` form (see object doc).
+  /** Min-squared-L2 centroid: returns struct(d: long, c_id: long)
+    * (see object doc).
     */
   def nearestL2(m: CentroidMatrix, v: ArrayData, norm2: Long): InternalRow = {
     val dims = m.dims
@@ -74,8 +66,7 @@ object CentroidOps {
 
   /** Max-cosine centroid with the shared zero-norm guard: returns
     * struct(nc: double, c_id: long) where nc is the MINIMIZED score
-    * (−cos, or the 2.0 ranks-last sentinel) — bit-equal to the literal
-    * `array_min` form used by the serving-cell assignments.
+    * (−cos, or the 2.0 ranks-last sentinel) — the serving-cell rule.
     */
   def nearestCos(m: CentroidMatrix, v: ArrayData, norm2: Long): InternalRow = {
     val dims = m.dims

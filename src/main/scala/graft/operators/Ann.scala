@@ -419,10 +419,10 @@ object Ann {
     * trained cell set from [[kmeansCentroids]] is K = CONST regardless
     * of corpus size. Corpus→cell assignment is then the same
     * zero-shuffle codegen projection as [[kmeansAssign]] (argmax
-    * cosine via `array_min` over per-centroid (−cos, c_id) literal
-    * structs — K·dims literal longs, bytes not data), so the only
-    * corpus-wide ops are that projection and the final per-cell
-    * equi-join against the broadcast query probes. Multi-probe ranks
+    * guarded cosine over a broadcast K·dims centroid matrix — bytes,
+    * not data), so the only corpus-wide ops are that projection and
+    * the final per-cell equi-join against the broadcast query probes.
+    * Multi-probe ranks
     * the K-row centroid table per QUERY only (|queries|·K rows,
     * driver-scale). Tie-break matches the oracle: max cos, then min
     * c_id (−cos sorts ascending; −0.0 and 0.0 compare equal in both
@@ -520,7 +520,7 @@ object Ann {
     * codes whose quantization noise is BELOW the corpus' rank margins
     * (98% recall@10 at full scan vs PQ's 27%, a_ann_recall). Cell
     * assignment happens at ingest on the full-precision vectors (the
-    * same zero-shuffle literal-argmax projection as
+    * same zero-shuffle argmax projection as
     * [[knnIvfTrained]]); what each cell STORES is the 4×-compressed
     * int8 codes + one scale per vector ([[int8Codes]] layout), and the
     * probe scan scores candidates by scale-free quantized cosine —
@@ -529,7 +529,7 @@ object Ann {
     * noise is sub-margin), at 1/4 the scan bytes of [[knnIvfTrained]].
     *
     * Scale: identical shape to [[knnIvfTrained]] — trained state is
-    * K·dims driver literals, corpus ops are one codegen projection
+    * K·dims driver-held longs, corpus ops are one codegen projection
     * (cell + codes) and one per-cell equi-join against the broadcast
     * query probes; the shuffle key is the cell id.
     */
@@ -563,9 +563,9 @@ object Ann {
     *
     * Scale (the MLlib k-means dataflow): centroids live on the driver
     * — K·dims longs, bytes not data — and each assignment is a PURE
-    * PROJECTION over the corpus: per-centroid (distance, id) structs
-    * from literal arrays, `array_min` for the argmin, all inside
-    * whole-stage codegen. Zero corpus shuffle, zero join per
+    * PROJECTION over the corpus: one generated argmin loop over the
+    * broadcast centroid matrix ([[kmeansAssign]]), inside whole-stage
+    * codegen. Zero corpus shuffle, zero join per
     * iteration (the old relational form window-sorted k×|corpus| rows
     * per iteration). The update is one partial-aggregated shuffle on
     * (cluster, dim) — K·dims groups regardless of corpus size — and
@@ -574,64 +574,24 @@ object Ann {
     * plan explosion at iterations=10). Deterministic seeding: the
     * first k vectors; argmin ties break on centroid id.
     */
-  /** k·dims bound above which centroid assignment switches from the
-    * inlined-literal `array_min` projection to the broadcast-matrix
-    * codegen expression ([[graft.functions.CentroidOps]]). The literal
-    * form is ideal at small k (bytes of plan, zero setup) but its
-    * expression TREE is O(k·dims) — at SemDeDup's web-scale knob
-    * (~10⁵ cells) analysis alone walks millions of literal nodes. The
-    * broadcast form's plan cost is O(1) in k (one expression holding a
-    * Broadcast handle); both are pure zero-shuffle projections and the
-    * two paths are spec-pinned bit-identical. Default 8192 terms keeps
-    * every small-k gated query on the (proven) literal plan while
-    * k ≥ 129 at dims=64 rides the broadcast matrix.
-    */
-  private[this] var _literalAssignMaxTerms: Int = 8192
-  def literalAssignMaxTerms: Int = _literalAssignMaxTerms
-  /** Validated setter (specs force one path or the other with it). */
-  def literalAssignMaxTerms_=(n: Int): Unit = {
-    require(n >= 1, s"literalAssignMaxTerms must be >= 1, got $n")
-    _literalAssignMaxTerms = n
-  }
-
   /** One k-means assignment pass over (vec_id, v, norm2) rows for
     * driver-held centroids `(c_id, components, norm²)`: min squared-L2,
     * ties on the smaller centroid id — a pure codegen projection, zero
     * shuffle/join (public so the plan audit can pin the zero-Exchange
-    * shape). Two bit-identical physical forms, auto-selected on
-    * [[literalAssignMaxTerms]]:
-    *  - k·dims ≤ bound: per-centroid (distance, id) structs from
-    *    literal arrays + `array_min` argmin (k·dims literal longs
-    *    inlined into the projection — trivial at k=8/dims=64).
-    *  - past the bound: ONE [[graft.functions.NearestCentroidL2]]
-    *    expression over a broadcast [[graft.functions.CentroidMatrix]]
-    *    — the plan stays O(1) in k, the matrix ships once per executor,
-    *    and the generated loop runs the same exact long arithmetic.
-    * Driver-held centroid state is the standard MLlib dataflow at any
-    * k that fits driver memory (10⁵ cells × 64 dims = 51 MB).
+    * shape). The centroids ship once per executor as a broadcast
+    * [[graft.functions.CentroidMatrix]] and ONE
+    * [[graft.functions.NearestCentroidL2]] expression runs the argmin
+    * as exact long arithmetic, so the plan stays O(1) in k. Driver-held
+    * centroid state is the standard MLlib dataflow at any k that fits
+    * driver memory (10⁵ cells × 64 dims = 51 MB).
     */
   def kmeansAssign(q: DataFrame,
-      cent: Seq[(Long, Seq[Long], Long)]): DataFrame = {
-    val dims = cent.headOption.map(_._2.size).getOrElse(0)
-    if (cent.size.toLong * dims > literalAssignMaxTerms) {
-      val bc = q.sparkSession.sparkContext.broadcast(CentroidMatrix(cent))
-      q.withColumn("best", CentroidOps.nearestL2(col("v"), col("norm2"), bc))
-        .withColumn("cluster", col("best").getField("c_id"))
-        .withColumn("d", col("best").getField("d"))
-        .drop("best")
-    } else {
-      val scored = cent.map { case (cId, cv, cn2) =>
-        struct(
-          (col("norm2") - lit(2L) * VecOps.intDot(col("v"), typedLit(cv))
-            + lit(cn2)).as("d"),
-          lit(cId).as("c_id"))
-      }
-      q.withColumn("best", array_min(array(scored: _*)))
-        .withColumn("cluster", col("best").getField("c_id"))
-        .withColumn("d", col("best").getField("d"))
-        .drop("best")
-    }
-  }
+      cent: Seq[(Long, Seq[Long], Long)]): DataFrame =
+    q.withColumn("best",
+        CentroidOps.nearestL2(col("v"), col("norm2"), centroidBc(q, cent)))
+      .withColumn("cluster", col("best").getField("c_id"))
+      .withColumn("d", col("best").getField("d"))
+      .drop("best")
 
   /** SERVING-cell assignment (max cosine with the shared zero-norm
     * guard — degenerate vector/centroid pairs rank LAST, ties on the
@@ -639,28 +599,20 @@ object Ann {
     * [[knnIvfTrained]], [[knnIvfSq]], [[cellBalance]],
     * [[semanticDedup]], and the streaming index ingest. Adds column
     * `cell` to `q` (which must carry `v` and `norm2`); payload columns
-    * ride through. Same literal/broadcast auto-selection as
-    * [[kmeansAssign]] — both forms bit-identical, both zero-shuffle
-    * projections — so SemDeDup's kCells ∝ corpus rule holds past the
-    * literal plan's k·dims comfort zone.
+    * ride through. Same broadcast-matrix projection as
+    * [[kmeansAssign]] ([[graft.functions.NearestCentroidCos]]), so
+    * SemDeDup's kCells ∝ corpus rule holds at any k.
     */
   def cellAssign(q: DataFrame,
-      cent: Seq[(Long, Seq[Long], Long)]): DataFrame = {
-    val dims = cent.headOption.map(_._2.size).getOrElse(0)
-    if (cent.size.toLong * dims > literalAssignMaxTerms) {
-      val bc = q.sparkSession.sparkContext.broadcast(CentroidMatrix(cent))
-      q.withColumn("cell",
-        CentroidOps.nearestCos(col("v"), col("norm2"), bc).getField("c_id"))
-    } else {
-      val cellScores = cent.map { case (cId, cv, cn2) =>
-        struct(when(col("norm2") === 0 || lit(cn2) === 0, lit(2.0))
-          .otherwise(lit(-1.0) *
-            cosine(typedLit(cv), col("v"), lit(cn2), col("norm2")))
-          .as("nc"), lit(cId).as("c_id"))
-      }
-      q.withColumn("cell", array_min(array(cellScores: _*)).getField("c_id"))
-    }
-  }
+      cent: Seq[(Long, Seq[Long], Long)]): DataFrame =
+    q.withColumn("cell", CentroidOps.nearestCos(col("v"), col("norm2"),
+      centroidBc(q, cent)).getField("c_id"))
+
+  /** `cent` as a broadcast matrix for the nearest-centroid kernels
+    * (an empty set fails in [[CentroidMatrix]]).
+    */
+  private def centroidBc(q: DataFrame, cent: Seq[(Long, Seq[Long], Long)]) =
+    q.sparkSession.sparkContext.broadcast(CentroidMatrix(cent))
 
   /** Memo of trained centroid sets per (session, input frame, k,
     * iterations). The trained state is PARAMETER-scale (k × dims
@@ -902,12 +854,8 @@ object Ann {
     books.zipWithIndex.foldLeft(q) {
       case (df, (cent, s)) =>
         val sv = subvec(col("v"), s)
-        val sn = VecOps.intDot(sv, sv)
-        val scored = cent.map { case (cId, cv, cn2) =>
-          struct((sn - lit(2L) * VecOps.intDot(sv, typedLit(cv)) + lit(cn2))
-            .as("d"), lit(cId).as("c_id"))
-        }
-        df.withColumn(s"best$s", array_min(array(scored: _*)))
+        df.withColumn(s"best$s", CentroidOps.nearestL2(sv,
+            VecOps.intDot(sv, sv), centroidBc(q, cent)))
           .withColumn(s"c$s", col(s"best$s").getField("c_id"))
           .withColumn(s"d$s", col(s"best$s").getField("d"))
           .drop(s"best$s")
@@ -918,8 +866,8 @@ object Ann {
     * Σ_s ‖v_s − cent_s[c_s]‖² (the PQ analogue of
     * [[int8QuantAudit]]'s round-trip error — what the 170×
     * compression pays, exactly, per vector). Encoding is a pure
-    * zero-shuffle codegen projection: per subspace an argmin over
-    * PqK·PqSubDims literal longs, the same shape as [[kmeansAssign]].
+    * zero-shuffle codegen projection: per subspace an argmin over the
+    * PqK·PqSubDims codebook matrix, the same kernel as [[kmeansAssign]].
     */
   def pqCodes(embeddings: DataFrame, k: Int = PqK,
       iterations: Int = 2): DataFrame = {
@@ -1020,7 +968,7 @@ object Ann {
   /** IVFADC (Jégou et al. 2011 §5): the composition of the trained
     * coarse quantizer (A3/A5) with the product quantizer (A8) — THE
     * web-scale ANN architecture. Corpus vectors are assigned to a
-    * trained coarse cell (zero-shuffle literal-argmin projection) and
+    * trained coarse cell (zero-shuffle argmin projection) and
     * PQ-encode their RESIDUAL v − cent[cell] (one product quantizer
     * pooled across cells, per the paper); a query ranks cells by exact
     * coarse distance, and within each of its `probes` cells runs ADC
@@ -1255,7 +1203,7 @@ object Ann {
     * semantic duplicates concentrate inside trained clusters, so the
     * pair join never leaves a cell.
     *
-    * Scale: centroids are driver-held (K·dims literals) and cell
+    * Scale: centroids are driver-held (K·dims longs) and cell
     * assignment is the same zero-shuffle codegen argmax projection as
     * [[knnIvfTrained]]; the only corpus-wide shuffle is the
     * within-cell self-equi-join on `cell`. Per-cell pair volume is
@@ -1321,15 +1269,21 @@ object Ann {
     val truth = truthFrame(embeddings, numQueries, k)
     val denom = numQueries.toLong * k
     methods.map { case (m, res) =>
-      res.select("q_id", "neighbor_id")
-        .join(truth.withColumn("hit", lit(1L)),
-          Seq("q_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_retrieved"),
-          coalesce(sum("hit"), lit(0L)).as("n_hits"))
+      hitCounts(res, truth)
         .select(lit(m).as("method"), col("n_retrieved"), col("n_hits"),
           expr(s"n_hits * 10000 div $denom").as("recall_bp"))
     }.reduce(_ unionByName _)
   }
+
+  /** One method's (q_id, neighbor_id) result against the `truth`
+    * pairs: a single (n_retrieved, n_hits) row — the hit-count tail of
+    * every recall harness.
+    */
+  private def hitCounts(res: DataFrame, truth: DataFrame): DataFrame =
+    res.select("q_id", "neighbor_id")
+      .join(truth.withColumn("hit", lit(1L)), Seq("q_id", "neighbor_id"), "left")
+      .agg(count(lit(1)).as("n_retrieved"),
+        coalesce(sum("hit"), lit(0L)).as("n_hits"))
 
   /** The six shared method legs of [[annRecall]] and
     * [[annRecallSampled]], each through the leg memo (identical
@@ -1463,11 +1417,7 @@ object Ann {
     val nQ = queries.agg(count(lit(1)).as("n_queries"))
     val elected = h20(col("q_id").cast("string")) % sampleMod === 0
     recallLegs(embeddings, numQueries, k).map { case (m, res) =>
-      res.filter(elected).select("q_id", "neighbor_id")
-        .join(truth.withColumn("hit", lit(1L)),
-          Seq("q_id", "neighbor_id"), "left")
-        .agg(count(lit(1)).as("n_retrieved"),
-          coalesce(sum("hit"), lit(0L)).as("n_hits"))
+      hitCounts(res.filter(elected), truth)
         .crossJoin(nQ) // 1×1 rows
         .select(lit(m).as("method"), col("n_queries"), col("n_retrieved"),
           col("n_hits"),
@@ -1576,13 +1526,8 @@ object Ann {
         .localCheckpoint() // read once per probes row, plus the count
       val nTruth = truth.agg(count(lit(1)).as("n_truth"))
       probesList.map { probes =>
-        knnIvfTrainedFiltered(embeddings, numQueries, k, p,
-          kCells, iterations, probes)
-          .select("q_id", "neighbor_id")
-          .join(truth.withColumn("hit", lit(1L)),
-            Seq("q_id", "neighbor_id"), "left")
-          .agg(count(lit(1)).as("n_retrieved"),
-            coalesce(sum("hit"), lit(0L)).as("n_hits"))
+        hitCounts(knnIvfTrainedFiltered(embeddings, numQueries, k, p,
+            kCells, iterations, probes), truth)
           .crossJoin(nTruth) // 1×1 rows
           .select(lit(sel).as("sel"),
             lit(s"ivf_filtered_p$probes").as("method"),

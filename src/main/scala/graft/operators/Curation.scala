@@ -150,6 +150,23 @@ object Curation {
   val DefaultShares: Seq[(String, Long)] =
     Seq("en" -> 3000L, "es" -> 2000L, "fr" -> 2000L, "de" -> 1500L, "zh" -> 1500L)
 
+  /** Per-language mixture targets `(lang, n_lang, target_n)`:
+    * `target_n = min(n_lang, total * share_bp / 20000)` — shares are
+    * bp of a half-corpus budget. One tiny aggregate, the corpus total
+    * and the shares broadcast in.
+    */
+  private def mixtureTargets(docs: DataFrame,
+      shares: Seq[(String, Long)]): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.groupBy("lang").agg(count(lit(1)).as("n_lang"))
+      .join(broadcast(shares.toDF("lang", "share_bp")), Seq("lang"))
+      .crossJoin(broadcast(docs.agg(count(lit(1)).as("n_total"))))
+      .withColumn("target_n",
+        least(col("n_lang"), expr("(n_total * share_bp) div 20000")))
+      .select("lang", "n_lang", "target_n")
+  }
+
   /** Resample the corpus toward a target language mixture: each
     * language gets `target_n = min(n_lang, total * share_bp / 20000)`
     * documents (shares are bp of a half-corpus budget), and documents
@@ -167,16 +184,7 @@ object Curation {
     */
   def mixtureResample(docs: DataFrame,
       shares: Seq[(String, Long)] = DefaultShares): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sharesDf = shares.toDF("lang", "share_bp")
-    val total = docs.agg(count(lit(1)).as("n_total"))
-    val tgt = docs.groupBy("lang").agg(count(lit(1)).as("n_lang"))
-      .join(broadcast(sharesDf), Seq("lang"))
-      .crossJoin(broadcast(total))
-      .withColumn("target_n",
-        least(col("n_lang"), expr("(n_total * share_bp) div 20000")))
-      .select("lang", "n_lang", "target_n")
+    val tgt = mixtureTargets(docs, shares)
     val kept = docs.select(col("lang"), hexHash20(normText(col("text"))).as("h"))
       .join(broadcast(tgt), Seq("lang"))
       .filter(col("h") * col("n_lang") < lit(1048576L) * col("target_n"))
@@ -199,16 +207,7 @@ object Curation {
   def mixtureResampleExact(docs: DataFrame,
       shares: Seq[(String, Long)] = DefaultShares,
       blockBits: Int = 5): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sharesDf = shares.toDF("lang", "share_bp")
-    val total = docs.agg(count(lit(1)).as("n_total"))
-    val tgt = docs.groupBy("lang").agg(count(lit(1)).as("n_lang"))
-      .join(broadcast(sharesDf), Seq("lang"))
-      .crossJoin(broadcast(total))
-      .withColumn("target_n",
-        least(col("n_lang"), expr("(n_total * share_bp) div 20000")))
-      .select("lang", "n_lang", "target_n")
+    val tgt = mixtureTargets(docs, shares)
     val keyed = docs.select(col("lang"), col("doc_id"),
         hexHash60(normText(col("text"))).as("h"))
     val kept = TwoLevel.rank(keyed, Seq("lang"), Seq(col("h"), col("doc_id")),

@@ -48,7 +48,7 @@ private[graft] object Durable {
     if (i > 0) Some(name.substring(0, i)) else None
   }
 
-  /** One monitor per key (a log or index directory), shared across
+  /** One monitor per key (a log, index or queue directory), shared across
     * handles, so two handles on one directory still serialize.
     */
   private val locks = scala.collection.concurrent.TrieMap.empty[String, Object]

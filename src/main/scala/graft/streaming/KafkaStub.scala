@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sources.Durable
+
 /** In-process Kafka test double. The sandbox has no broker or
   * connector jar, so this file-backed queue stands in for one: the
   * producer appends records with per-partition monotonic offsets in
@@ -41,11 +43,14 @@ object KafkaStub {
     * offsets contiguously after its current high watermark — one call
     * is one acked produce batch (reference: pkg/kafka/producer.go
     * semantics: per-partition append order). Records order by
-    * (ts, key) within the batch, deterministically.
+    * (ts, key) within the batch, deterministically. produce() is a
+    * read-modify-write of the high watermarks, so it holds the queue
+    * directory's lock ([[Durable.lockFor]]): unsynchronized concurrent
+    * producers would observe the same watermark and assign colliding
+    * offsets.
     */
   def produce(spark: SparkSession, dir: String, topic: String,
-      records: DataFrame): Unit = locks.getOrElseUpdate(dir, new Object)
-    .synchronized {
+      records: DataFrame): Unit = Durable.lockFor(dir).synchronized {
     val w = Window.partitionBy("part_id").orderBy("ts", "key")
     records
       .withColumn("seq", row_number().over(w).cast("long"))
@@ -60,15 +65,6 @@ object KafkaStub {
         lit(0).as("timestampType"))
       .write.mode("append").parquet(dir)
   }
-
-  /** One lock per queue dir: produce() is a read-modify-write of the
-    * high watermarks, so unsynchronized concurrent producers to the
-    * same queue would observe the same watermark and assign colliding
-    * offsets, breaking the per-partition monotonic-offset contract the
-    * wire schema promises.
-    */
-  private val locks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
 
   /** Current per-partition high offset (empty for a fresh queue). */
   def highWatermarks(spark: SparkSession, dir: String): DataFrame =

@@ -27,8 +27,8 @@ import graft.sources.Durable
   *  - **Per-batch assignment is a zero-shuffle projection**: the
   *    guarded-cosine argmax over driver-held centroids
   *    ([[Ann.cellAssign]] — the SAME serving rule as the batch
-  *    [[Ann.knnIvfTrained]]/[[Ann.knnIvfSq]], literal or broadcast
-  *    matrix by k·dims) — no join, no corpus shuffle, cost linear in
+  *    [[Ann.knnIvfTrained]]/[[Ann.knnIvfSq]], over one broadcast
+  *    centroid matrix) — no join, no corpus shuffle, cost linear in
   *    the batch.
   *  - **The index is a cell-partitioned table**: rows land in
   *    `cell=<c>/ingest_batch=<b>` parquet partitions. Queries touch

@@ -7,23 +7,17 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.operators.Ann
 import graft.streaming.StreamingAnn
 
-/** The large-K assignment path: the broadcast CentroidMatrix form must
-  * be BIT-identical to the inlined-literal projection it replaces —
-  * same clusters, same distances, same guarded-cosine cells, same
-  * trained centroids — and keep the literal form's zero-Exchange plan
-  * shape. (The literal path is the one every oracle gate proved; the
-  * broadcast path inherits that proof through these pins.)
+/** The nearest-centroid kernels behind every k-means, IVF, PQ and
+  * SemDeDup assignment ([[graft.functions.CentroidOps]] through
+  * Ann.kmeansAssign / Ann.cellAssign) against a plain-Scala argmin
+  * written here — squared-L2 and guarded cosine, both with ties to the
+  * smaller centroid id — over the corpus plus a zero vector and a zero
+  * centroid; training against a plain-Scala Lloyd loop; and the
+  * zero-Exchange plan shape.
   */
 class CentroidAssignSpec extends SparkSuite {
 
-  /** Run `body` with the threshold forced low enough that ANY
-    * assignment takes the broadcast path, restoring the default after.
-    */
-  private def onBroadcastPath[A](body: => A): A = {
-    val saved = Ann.literalAssignMaxTerms
-    Ann.literalAssignMaxTerms = 1
-    try body finally Ann.literalAssignMaxTerms = saved
-  }
+  private type Cent = (Long, Seq[Long], Long)
 
   private def corpus: DataFrame =
     Ann.quantized(graft.sources.Tables.embeddings(spark, sf))
@@ -32,9 +26,8 @@ class CentroidAssignSpec extends SparkSuite {
   /** A centroid set that exercises the guards: trained centroids plus
     * one all-zero centroid (zero cn2) at a fresh id.
     */
-  private def centsWithZero: Seq[(Long, Seq[Long], Long)] =
-    Ann.kmeansCentroids(corpus, 8, 2) :+
-      ((99L, Seq.fill(Ann.Dims)(0L), 0L))
+  private def centsWithZero: Seq[Cent] =
+    Ann.kmeansCentroids(corpus, 8, 2) :+ ((99L, Seq.fill(Ann.Dims)(0L), 0L))
 
   /** The corpus plus one all-zero VECTOR (zero norm2) at a fresh id. */
   private def corpusWithZero: DataFrame = {
@@ -44,58 +37,88 @@ class CentroidAssignSpec extends SparkSuite {
       Seq((999999L, Seq.fill(Ann.Dims)(0L), 0L)).toDF("vec_id", "v", "norm2"))
   }
 
-  test("kmeansAssign: broadcast matrix path is bit-equal to the literal path") {
-    val cents = centsWithZero
-    val q = corpusWithZero
-    def snap(df: DataFrame) = df.select("vec_id", "cluster", "d").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val literal = snap(Ann.kmeansAssign(q, cents))
-    val broadcastForm = onBroadcastPath(snap(Ann.kmeansAssign(q, cents)))
-    assert(broadcastForm === literal)
+  private def rows(df: DataFrame): Seq[Cent] =
+    df.select("vec_id", "v", "norm2").collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2))).toSeq
+
+  private def dot(a: Seq[Long], b: Seq[Long]): Long =
+    a.zip(b).map { case (x, y) => x * y }.sum
+
+  /** Argmin of `score` over `cents`, ties to the smaller centroid id:
+    * (best score, its id).
+    */
+  private def argmin[S](cents: Seq[Cent])(score: Cent => S)(
+      implicit num: Numeric[S]): (S, Long) = {
+    val scored = cents.map(c => (score(c), c._1))
+    val best = scored.map(_._1).reduce((a, b) => if (num.lt(b, a)) b else a)
+    (best, scored.filter(s => num.equiv(s._1, best)).map(_._2).min)
   }
 
-  test("cellAssign: broadcast cosine path is bit-equal, including both zero-norm guards") {
+  /** Reference squared-L2 assignment: (d, cluster). */
+  private def refL2(v: Seq[Long], n2: Long, cents: Seq[Cent]): (Long, Long) =
+    argmin(cents) { case (_, cv, cn2) => n2 - 2 * dot(v, cv) + cn2 }
+
+  /** Reference serving cell: −cos, or 2.0 for a zero vector or centroid. */
+  private def refCell(v: Seq[Long], n2: Long, cents: Seq[Cent]): Long =
+    argmin(cents) { case (_, cv, cn2) =>
+      if (n2 == 0 || cn2 == 0) 2.0
+      else -1.0 * (dot(v, cv).toDouble / (math.sqrt(cn2.toDouble) * math.sqrt(n2.toDouble)))
+    }._2
+
+  test("kmeansAssign matches a squared-L2 argmin with ties to the smaller id") {
     val cents = centsWithZero
     val q = corpusWithZero
-    def snap(df: DataFrame) = df.select("vec_id", "cell").collect()
+    val got = Ann.kmeansAssign(q, cents).select("vec_id", "cluster", "d")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val want = rows(q).map { case (id, v, n2) =>
+      val (d, c) = refL2(v, n2, cents)
+      (id, c, d)
+    }.toSet
+    assert(got === want)
+  }
+
+  test("cellAssign matches a guarded-cosine argmin, both zero-norm guards included") {
+    val cents = centsWithZero
+    val q = corpusWithZero
+    val got = Ann.cellAssign(q, cents).select("vec_id", "cell").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val literal = snap(Ann.cellAssign(q, cents))
-    val broadcastForm = onBroadcastPath(snap(Ann.cellAssign(q, cents)))
-    assert(broadcastForm === literal)
-    // the zero-norm VECTOR must hit the guard identically on both
-    // paths: constant score on every cell -> tie-break -> lowest c_id
-    val zeroCell = literal.find(_._1 === 999999L).get._2
-    assert(zeroCell === cents.map(_._1).min)
+    val want = rows(q).map { case (id, v, n2) => (id, refCell(v, n2, cents)) }.toSet
+    assert(got === want)
+    // the zero-norm VECTOR scores 2.0 on every cell -> lowest c_id
+    assert(got.find(_._1 === 999999L).get._2 === cents.map(_._1).min)
   }
 
   test("trained centroids are identical when training rides the broadcast path") {
+    // a plain-Scala Lloyd loop: seeds are the first k vectors, each
+    // update is the per-dimension truncating mean of the members
     val q = corpus
-    val literal = Ann.kmeansCentroidsUncached(q, 8, 2)
-    val broadcastForm = onBroadcastPath(Ann.kmeansCentroidsUncached(q, 8, 2))
-    assert(broadcastForm === literal)
+    val data = rows(q)
+    val seeds = data.filter(_._1 < 8).sortBy(_._1)
+    val want = (1 to 2).foldLeft(seeds) { (cents, _) =>
+      data.groupBy { case (_, v, n2) => refL2(v, n2, cents)._2 }.toSeq
+        .map { case (c, members) =>
+          val cv = members.map(_._2).transpose.map(xs => xs.sum / xs.size)
+          (c, cv, cv.map(x => x * x).sum)
+        }.sortBy(_._1)
+    }
+    assert(Ann.kmeansCentroidsUncached(q, 8, 2) === want)
   }
 
   test("broadcast assignment stays a zero-Exchange projection") {
-    // the whole point: plan cost O(1) in k, still a pure projection —
-    // and whole-stage codegen compiles the generated matrix-loop call
+    // plan cost O(1) in k, still a pure projection — and whole-stage
+    // codegen compiles the generated matrix-loop call
     val q = corpus
     val cents = Ann.kmeansCentroids(q, 8, 2)
-    onBroadcastPath {
-      val assigned = Ann.kmeansAssign(q, cents)
-      val p = assigned.queryExecution.executedPlan.toString
-      assert(p.contains("nearest_centroid_l2"), p.take(1500))
-      assert(!p.contains("Exchange"), p.take(1500))
-      val cells = Ann.cellAssign(q, cents)
-      val pc = cells.queryExecution.executedPlan.toString
-      assert(pc.contains("nearest_centroid_cos"), pc.take(1500))
-      assert(!pc.contains("Exchange"), pc.take(1500))
-      assert(assigned.count() === q.count())
-      assert(cells.select("cell").distinct().count() >= 1L)
-    }
-    // the default threshold keeps small k on the literal plan and
-    // sends k=256 x dims=64 to the broadcast matrix
-    assert(8L * Ann.Dims <= Ann.literalAssignMaxTerms)
-    assert(256L * Ann.Dims > Ann.literalAssignMaxTerms)
+    val assigned = Ann.kmeansAssign(q, cents)
+    val p = assigned.queryExecution.executedPlan.toString
+    assert(p.contains("nearest_centroid_l2"), p.take(1500))
+    assert(!p.contains("Exchange"), p.take(1500))
+    val cells = Ann.cellAssign(q, cents)
+    val pc = cells.queryExecution.executedPlan.toString
+    assert(pc.contains("nearest_centroid_cos"), pc.take(1500))
+    assert(!pc.contains("Exchange"), pc.take(1500))
+    assert(assigned.count() === q.count())
+    assert(cells.select("cell").distinct().count() >= 1L)
   }
 
   test("trained IVF scores a zero-norm candidate -2.0, as the on-disk index does") {

@@ -250,8 +250,8 @@ class PlanAuditSpec extends SparkSuite {
 
   test("k-means assignment is a pure projection: zero exchanges") {
     // the round-6 cure for the per-iteration k×corpus window shuffle:
-    // centroids are driver-held literals, argmin is array_min over
-    // per-centroid structs — nothing may shuffle or broadcast
+    // centroids ship as one broadcast matrix and the argmin is one
+    // generated loop per row — nothing may shuffle
     val q = graft.operators.Ann.quantized(
       graft.sources.Tables.embeddings(spark, sf)).select("vec_id", "v", "norm2")
     val cents = Seq(
@@ -261,8 +261,7 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("large-K gated queries ride the broadcast argmin; never a cartesian") {
-    // at sf0.001 only ~50 seeds exist, so trained K < the switch bound
-    // and the gated queries would exercise the literal plan — audit at
+    // at sf0.001 only ~50 seeds exist, so trained K < 256 — audit at
     // sf0.01 where K really is 256 (the gate's own scale)
     val sf01 = "/root/testdata/sf0.01"
     val p1 = plan(SparkEntry.queries("a_kmeans_train_k256")(spark, sf01))
@@ -326,7 +325,7 @@ class PlanAuditSpec extends SparkSuite {
 
   test("trained IVF: corpus never cartesians; probes broadcast at K=const rows") {
     // the scale fix over stride-IVF (K = n/stride): cell assignment is
-    // a literal-argmax projection, so the CORPUS side may never plan a
+    // an argmax projection, so the CORPUS side may never plan a
     // CartesianProduct, and every broadcast in the plan is probe/
     // centroid-scale (numQueries·K rows at most), never corpus-scale
     val df = SparkEntry.queries("a_knn_ivf_trained")(spark, sf)
@@ -335,7 +334,7 @@ class PlanAuditSpec extends SparkSuite {
     // the candidate join is an equi-join on the cell key; the probe
     // ranking's tiny cross join (|queries|·K rows) broadcasts too
     assert(p.contains("BroadcastHashJoin"), p.take(2000))
-    // corpus-side cell assignment is a literal-argmax projection: the
+    // corpus-side cell assignment is an argmax projection: the
     // only shuffles left are the probe/result windows + output order,
     // never a corpus re-key per centroid
     val exchanges = p.linesIterator.count(_.trim.startsWith("+- Exchange"))
@@ -386,7 +385,7 @@ class PlanAuditSpec extends SparkSuite {
     assert(p.contains("partial_"), p.take(2000))
   }
 
-  test("semantic dedup: cell assignment is literal-argmax; pair join is equi on cell") {
+  test("semantic dedup: cell assignment is a projection; pair join is equi on cell") {
     val p = plan(SparkEntry.queries("d_semantic_dedup")(spark, sf))
     // within-cell pairs come from an equi-join on the cell id — an
     // all-pairs formulation would plan a CartesianProduct
@@ -399,7 +398,7 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("PQ: encoding is a pure projection; ADC scan never dots the corpus") {
-    // pqCodes = 4 literal-argmin subspace assignments on one scan —
+    // pqCodes = 4 argmin subspace projections on one scan —
     // zero exchanges except the output sort
     val books = graft.operators.Ann.pqCodebooks(
       graft.sources.Tables.embeddings(spark, sf))
