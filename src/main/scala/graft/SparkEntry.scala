@@ -1615,7 +1615,7 @@ object SparkEntry {
        |)""".stripMargin
 
   /** The unigram + `_`-joined bigram grams of a token list `a`, one row
-    * each (mirrors TextAnalysis.gramBuckets).
+    * each (mirrors TextAnalysis.gramList).
     */
   private val UniBigrams =
     """unnest(list_concat(a,

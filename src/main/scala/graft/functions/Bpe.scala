@@ -230,16 +230,24 @@ object Bpe {
     */
   def countTokensBytes(s: String, table: BpeTable): Long = {
     var total = 0L
+    eachWord(s)((i, j) =>
+      total += tokenizeSymsCount(byteSymbols(s.substring(i, j)), table))
+    total
+  }
+
+  /** Calls `f(i, j)` for every non-empty whitespace word `s[i, j)`, in
+    * order: the word walk of [[countTokens]], [[countTokensBytes]] and
+    * [[tokenizeIds]].
+    */
+  private def eachWord(s: String)(f: (Int, Int) => Unit): Unit = {
     var i = 0
     val n = s.length
     while (i < n) {
       var j = i
       while (j < n && s.charAt(j) != ' ') j += 1
-      if (j > i)
-        total += tokenizeSymsCount(byteSymbols(s.substring(i, j)), table)
+      if (j > i) f(i, j)
       i = j + 1
     }
-    total
   }
 
   def parseMerges(lines: Iterator[String]): BpeTable =
@@ -258,14 +266,7 @@ object Bpe {
     */
   def countTokens(s: String, table: BpeTable): Long = {
     var total = 0L
-    var i = 0
-    val n = s.length
-    while (i < n) {
-      var j = i
-      while (j < n && s.charAt(j) != ' ') j += 1
-      if (j > i) total += tokenizeWordCount(s.substring(i, j), table)
-      i = j + 1
-    }
+    eachWord(s)((i, j) => total += tokenizeWordCount(s.substring(i, j), table))
     total
   }
 
@@ -332,23 +333,16 @@ object Bpe {
       if (n == ids.length) ids = java.util.Arrays.copyOf(ids, n * 2)
       ids(n) = v; n += 1
     }
-    var i = 0
-    val len = s.length
-    while (i < len) {
-      var j = i
-      while (j < len && s.charAt(j) != ' ') j += 1
-      if (j > i) {
-        val wlen = j - i
-        val syms = new Array[String](wlen)
-        var k = 0
-        while (k < wlen) { syms(k) = String.valueOf(s.charAt(i + k)); k += 1 }
-        // the count loop merges in place: the surviving prefix IS the
-        // terminal symbol sequence
-        val m = tokenizeSymsCount(syms, table)
-        k = 0
-        while (k < m) { push(table.idOf(syms(k))); k += 1 }
-      }
-      i = j + 1
+    eachWord(s) { (i, j) =>
+      val wlen = j - i
+      val syms = new Array[String](wlen)
+      var k = 0
+      while (k < wlen) { syms(k) = String.valueOf(s.charAt(i + k)); k += 1 }
+      // the count loop merges in place: the surviving prefix IS the
+      // terminal symbol sequence
+      val m = tokenizeSymsCount(syms, table)
+      k = 0
+      while (k < m) { push(table.idOf(syms(k))); k += 1 }
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(
       java.util.Arrays.copyOf(ids, n))

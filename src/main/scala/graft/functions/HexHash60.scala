@@ -55,7 +55,4 @@ object HexHash60 {
   /** Column wrapper: 60-bit portable hash of a string/binary column. */
   def hash60(c: Column): Column =
     SqlBridge.column(HexHash60Expr(SqlBridge.expression(c.cast("binary"))))
-
-  /** 20-bit variant used by minhash/simhash/fingerprints. */
-  def hash20(c: Column): Column = hash60(c) % 1048576L
 }

@@ -317,17 +317,13 @@ object TextAnalysis {
   def dsirSelect(docs: DataFrame, targetLang: String = "en",
       numBuckets: Int = 1024): DataFrame = {
     val S = 1000000000L
-    val a = split(normText(col("text")), " ")
-    val bigrams = zip_with(
-      slice(a, lit(1), size(a) - 1), slice(a, lit(2), size(a) - 1),
-      (x, y) => concat(x, lit("_"), y))
     // the gram explode + per-gram md5 below is the operator's
     // dominant CPU cost — balance it across cores when the doc scan
     // under-splits (Dedup.cpuBalanced: no-op at cluster scale)
     val grams = graft.operators.Dedup.cpuBalanced(docs)
       .select(col("doc_id"),
         (col("lang") === targetLang).cast("long").as("is_tgt"),
-        explode(concat(a, bigrams)).as("gram"))
+        explode(gramList).as("gram"))
       .select(col("doc_id"), col("is_tgt"),
         (hexHash60(col("gram")) % numBuckets).as("g"))
     // materialize the (doc, bucket) counts ONCE: three consumers
@@ -366,12 +362,18 @@ object TextAnalysis {
     * universe without the explode), so consumers can reduce over it
     * in one codegen pass.
     */
-  private def gramBuckets(numBuckets: Int): Column = {
+  private def gramBuckets(numBuckets: Int): Column =
+    transform(gramList, g => hexHash60(g) % numBuckets)
+
+  /** The gram list of a document: its normalized tokens, then each
+    * adjacent pair joined by `_` (the Spark twin of the oracle
+    * fragment `SparkEntry.UniBigrams`).
+    */
+  private def gramList: Column = {
     val a = split(normText(col("text")), " ")
-    val bigrams = zip_with(
+    concat(a, zip_with(
       slice(a, lit(1), size(a) - 1), slice(a, lit(2), size(a) - 1),
-      (x, y) => concat(x, lit("_"), y))
-    transform(concat(a, bigrams), g => hexHash60(g) % numBuckets)
+      (x, y) => concat(x, lit("_"), y)))
   }
 
   /** T21: train the learned quality classifier (the FineWeb-Edu

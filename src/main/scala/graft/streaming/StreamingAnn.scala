@@ -200,11 +200,12 @@ object StreamingAnn {
   }
 
   /** Start the index ingest: `emb` is a streaming frame with at least
-    * (vec_id: long, embedding: array<float>). The first batch trains
-    * and persists the model at `modelPath` (skipped if one already
-    * exists — a pre-trained model is honored); every batch assigns
-    * against the frozen model and appends to the cell-partitioned
-    * index at `indexDir`.
+    * (vec_id: long, embedding: array<float>). The first non-empty batch
+    * trains and persists the model at `modelPath` (skipped if one
+    * already exists — a pre-trained model is honored) and starts
+    * generation 0 of the index at `indexDir` with it; every batch
+    * assigns against the serving generation's frozen model and appends
+    * to its cell-partitioned leaves.
     *
     * Contract: like the curation ingests, `indexDir` is owned by one
     * checkpoint lineage (batch ids key the idempotent partitions);
@@ -220,16 +221,21 @@ object StreamingAnn {
       attrs, "full") { (_, qb, cent) => Ann.cellAssign(qb, cent) }
 
   /** The one on-disk ingest loop behind [[ivfIngest]], [[ivfIngestSq]]
-    * and [[ivfIngestPq]]; only `encode` (quantized batch + frozen model
-    * → rows with `cell` and the layout's payload columns) differs.
-    * Per batch:
-    *  - resolve the serving generation, so a [[compactIndex]] or
-    *    [[retrainIndex]] cutover between batches flips the stream to the
-    *    new generation (and its model) with no restart;
+    * and [[ivfIngestPq]]; only `encode` (serving root, quantized batch
+    * and its frozen model → rows with `cell` and the layout's payload
+    * columns) and `books` (the codebooks a new index starts with, pq
+    * only) differ. Per batch:
     *  - skip an EMPTY batch entirely — a zero-row training set would
     *    durably persist a degenerate model that poisons every later
     *    batch, and there are no partitions to own;
-    *  - train-or-load the frozen model and stamp-or-verify `layout`;
+    *  - resolve the serving generation, so a [[compactIndex]] or
+    *    [[retrainIndex]] cutover between batches flips the stream to the
+    *    new generation (and its model) with no restart. A dir with no
+    *    `_current` gets generation 0: the model (and books) are
+    *    train-or-loaded from the caller's artifacts and committed into
+    *    `gen-0` ([[commitGeneration]]) before any leaf is written;
+    *  - refuse a batch whose layout or vector length differs from the
+    *    generation's stamp;
     *  - overwrite the batch's own `(cell, ingest_batch)` partitions
     *    under the raw batch id (a replay rewrites its own leaf; a leaf
     *    a cutover already folded into a rebuilt leaf lives on only in
@@ -239,19 +245,24 @@ object StreamingAnn {
     */
   private def ingestSpine(emb: DataFrame, modelPath: String, indexDir: String,
       checkpointDir: String, kCells: Int, iterations: Int, attrs: Seq[String],
-      layout: String)(
+      layout: String, books: (DataFrame, Seq[(Long, Seq[Long], Long)]) =>
+        Option[Seq[Seq[(Long, Seq[Long], Long)]]] = (_, _) => None)(
       encode: (String, DataFrame, Seq[(Long, Seq[Long], Long)]) => DataFrame
   ): StreamingQuery =
     emb.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val root = resolveRoot(indexDir)
         val qb = quantize(batch, attrs)
-        if (!qb.isEmpty) {
-          val cent = trainOrLoad(modelFor(root, modelPath),
-            qb.select("vec_id", "v", "norm2"), kCells, iterations)
-          ensureLayout(root, layout, cent.size, cent.head._2.size)
-          encode(root, qb, cent).select(leafColumns(layout, attrs): _*)
+        qb.select(size(col("v"))).head(1).foreach { first =>
+          val root = genDir(indexDir, readCurrentGen(indexDir).getOrElse {
+            val cent = trainOrLoad(modelPath, qb.select("vec_id", "v", "norm2"),
+              kCells, iterations)
+            deleteDir(java.nio.file.Paths.get(genDir(indexDir, 0))) // a crashed start
+            commitGeneration(indexDir, 0, layout, cent, books(qb, cent))
+            0L
+          })
+          ensureLayout(root, layout, first.getInt(0))
+          encode(root, qb, modelOf(root)).select(leafColumns(layout, attrs): _*)
             .withColumn("ingest_batch", lit(batchId))
             .write
             .option("partitionOverwriteMode", "dynamic")
@@ -300,19 +311,18 @@ object StreamingAnn {
     * per-vector max-abs rule, so cosine's scale invariance makes the
     * per-vector scales cancel. Never destructive.
     */
-  def queryIndexSq(spark: SparkSession, indexDir: String, modelPath: String,
+  def queryIndexSq(spark: SparkSession, indexDir: String,
       queries: DataFrame, k: Int, probes: Int = 1): DataFrame =
-    queryIndexSqImpl(spark, indexDir, modelPath, queries, k, probes, None)
+    queryIndexSqImpl(spark, indexDir, queries, k, probes, None)
 
   /** Filtered SQ8 index query — [[queryIndexFiltered]]'s discipline
     * (predicate into the probed-cell scan, never a post-filter) over
     * the int8-coded layout.
     */
   def queryIndexSqFiltered(spark: SparkSession, indexDir: String,
-      modelPath: String, queries: DataFrame, k: Int, predicate: Column,
+      queries: DataFrame, k: Int, predicate: Column,
       probes: Int = 1): DataFrame =
-    queryIndexSqImpl(spark, indexDir, modelPath, queries, k, probes,
-      Some(predicate))
+    queryIndexSqImpl(spark, indexDir, queries, k, probes, Some(predicate))
 
   /** Probe-escalated filtered query over the SQ8 layout —
     * [[queryIndexFilteredEscalated]]'s semantics (count pass at the
@@ -325,15 +335,15 @@ object StreamingAnn {
     * [[queryIndexSq]]).
     */
   def queryIndexSqFilteredEscalated(spark: SparkSession, indexDir: String,
-      modelPath: String, queries: DataFrame, k: Int, predicate: Column,
+      queries: DataFrame, k: Int, predicate: Column,
       probes: Int = 1): DataFrame =
-    queryIndexSqImpl(spark, indexDir, modelPath, queries, k, probes,
-      Some(predicate), escalate = true)
+    queryIndexSqImpl(spark, indexDir, queries, k, probes, Some(predicate),
+      escalate = true)
 
   private def queryIndexSqImpl(spark: SparkSession, indexDir: String,
-      modelPath: String, queries: DataFrame, k: Int, probes: Int,
+      queries: DataFrame, k: Int, probes: Int,
       predicate: Option[Column], escalate: Boolean = false): DataFrame =
-    queryIndexSpine(spark, indexDir, modelPath, queries, k, probes, predicate,
+    queryIndexSpine(spark, indexDir, queries, k, probes, predicate,
         escalate, "sq8", "queryIndexSq") { (_, cent, qRows) =>
       import spark.implicits._
       // int8-code each query ONCE (probe-invariant, request-scale
@@ -362,8 +372,8 @@ object StreamingAnn {
   // [[Ann.knnIvfPqRefined]] prove the math; ST7/ST8 prove the
   // generation machinery; this layout composes them:
   // train-once coarse model AND train-once product codebooks (both
-  // durable artifacts), L2 assignment/probe rule (the batch IVFADC's
-  // own — see [[RuleL2]]), per-(query, cell) ADC tables built
+  // generation artifacts), L2 assignment/probe rule (the batch
+  // IVFADC's own), per-(query, cell) ADC tables built
   // driver-side from the frozen artifacts, codes-only probed-cell
   // scans, and the exact-rerank refine fetching full vectors from the
   // PRIMARY store by id (request-scale — the index itself never
@@ -403,29 +413,22 @@ object StreamingAnn {
       } catch { case _: MatchError | _: NumberFormatException => None }
     }
 
-  /** The serving codebook path for a resolved generation root — the
-    * generation-local `_pqbooks` when present, else the caller's
-    * durable artifact (mirrors [[modelFor]]).
-    */
-  private def booksFor(resolvedRoot: String, booksPath: String): String = {
-    val genBooks = java.nio.file.Paths.get(resolvedRoot, "_pqbooks")
-    if (java.nio.file.Files.exists(genBooks)) genBooks.toString else booksPath
-  }
-
   /** ST9 ingest — the streaming form of the batch IVFADC encode
     * ([[Ann.knnIvfPq]]'s corpus side): the first non-empty batch
     * trains the coarse model (persisted at `modelPath`) AND the
     * product codebooks over that batch's COARSE RESIDUALS (persisted
-    * at `booksPath`); every batch then assigns cells by the frozen
-    * model's squared-L2 argmin ([[Ann.kmeansAssign]] — the batch
-    * IVFADC rule, stamped [[RuleL2]]), encodes its residuals under
-    * the frozen codebooks ([[Ann.pqEncodedFromQ]] — a zero-shuffle
-    * codegen projection), and appends ONLY the four code columns to
-    * the cell-partitioned index. Same idempotent-partition contract as
-    * [[ivfIngest]]; [[compactIndex]]/[[vacuumGenerations]] serve this
-    * layout unchanged (schema-agnostic, and a compacted generation
-    * carries the serving root's `_pqbooks` when it has its own).
-    * [[retrainIndex]] REFUSES it by design —
+    * at `booksPath`; either is loaded instead when it already exists),
+    * and generation 0 starts with both; every batch then assigns cells
+    * by the frozen model's squared-L2 argmin ([[Ann.kmeansAssign]] —
+    * the batch IVFADC rule: residuals are taken against the nearest
+    * centroid in the metric the codebooks are trained under), encodes
+    * its residuals under the generation's codebooks
+    * ([[Ann.pqEncodedFromQ]] — a zero-shuffle codegen projection), and
+    * appends ONLY the four code columns to the cell-partitioned index.
+    * Same idempotent-partition contract as [[ivfIngest]];
+    * [[compactIndex]]/[[vacuumGenerations]] serve this layout unchanged
+    * (schema-agnostic, and a compacted generation carries its source's
+    * `_pqbooks`). [[retrainIndex]] REFUSES it by design —
     * residual codes cannot be re-encoded without the primary vectors;
     * drift maintenance is [[retrainIndexPq]], the
     * re-encode-from-primary rebuild under the same generation
@@ -436,18 +439,16 @@ object StreamingAnn {
       pqK: Int = Ann.PqK, iterations: Int = 2,
       attrs: Seq[String] = Nil): StreamingQuery =
     ingestSpine(emb, modelPath, indexDir, checkpointDir, kCells, iterations,
-        attrs, "pq") { (root, qb, cent) =>
-      val bPath = booksFor(root, booksPath)
-      val books = loadBooks(bPath).getOrElse {
-        // residuals materialized once for training (read 4 subspaces ×
-        // (1 + iterations) times); trained once, shipped thereafter
-        val res = Ann.pqResiduals(qb, cent).localCheckpoint(eager = true)
-        val b = trainBooks(res, pqK, iterations)
-        saveBooks(bPath, b)
-        res.unpersist()
-        b
-      }
-      Ann.pqEncodedFromQ(Ann.pqResiduals(qb, cent, attrs), books)
+        attrs, "pq", (qb, cent) => Some(loadBooks(booksPath).getOrElse {
+          // residuals materialized once for training (read 4 subspaces ×
+          // (1 + iterations) times); trained once, shipped thereafter
+          val res = Ann.pqResiduals(qb, cent).localCheckpoint(eager = true)
+          val b = trainBooks(res, pqK, iterations)
+          saveBooks(booksPath, b)
+          res.unpersist()
+          b
+        })) { (root, qb, cent) =>
+      Ann.pqEncodedFromQ(Ann.pqResiduals(qb, cent, attrs), booksOf(root))
     }
 
   /** Seed-safe per-subspace PQ codebooks over residual rows (vec_id,
@@ -506,10 +507,8 @@ object StreamingAnn {
     * (parity spec). Output: (q_id, rnk, neighbor_id, est_d).
     */
   def queryIndexPq(spark: SparkSession, indexDir: String,
-      modelPath: String, booksPath: String, queries: DataFrame, k: Int,
-      probes: Int = 2): DataFrame =
-    queryIndexPqImpl(spark, indexDir, modelPath, booksPath, queries, k,
-      probes, None)
+      queries: DataFrame, k: Int, probes: Int = 2): DataFrame =
+    queryIndexPqImpl(spark, indexDir, queries, k, probes, None)
 
   /** Filtered (attribute-constrained) ADC query — the on-disk form of
     * [[Ann.knnIvfPqFiltered]]: the predicate references the attribute
@@ -521,10 +520,9 @@ object StreamingAnn {
     * with the batch filtered operator is exact (spec-pinned).
     */
   def queryIndexPqFiltered(spark: SparkSession, indexDir: String,
-      modelPath: String, booksPath: String, queries: DataFrame, k: Int,
-      predicate: Column, probes: Int = 2): DataFrame =
-    queryIndexPqImpl(spark, indexDir, modelPath, booksPath, queries, k,
-      probes, Some(predicate))
+      queries: DataFrame, k: Int, predicate: Column,
+      probes: Int = 2): DataFrame =
+    queryIndexPqImpl(spark, indexDir, queries, k, probes, Some(predicate))
 
   /** Probe-escalated filtered ADC query — the on-disk form of
     * [[Ann.knnIvfPqFilteredEscalated]], completing the escalation
@@ -535,21 +533,18 @@ object StreamingAnn {
     * pool) rows; satisfied queries return the fixed-probe sets.
     */
   def queryIndexPqFilteredEscalated(spark: SparkSession, indexDir: String,
-      modelPath: String, booksPath: String, queries: DataFrame, k: Int,
-      predicate: Column, probes: Int = 2): DataFrame =
-    queryIndexPqImpl(spark, indexDir, modelPath, booksPath, queries, k,
-      probes, Some(predicate), escalate = true)
+      queries: DataFrame, k: Int, predicate: Column,
+      probes: Int = 2): DataFrame =
+    queryIndexPqImpl(spark, indexDir, queries, k, probes, Some(predicate),
+      escalate = true)
 
   private def queryIndexPqImpl(spark: SparkSession, indexDir: String,
-      modelPath: String, booksPath: String, queries: DataFrame, k: Int,
-      probes: Int, predicate: Option[Column],
+      queries: DataFrame, k: Int, probes: Int, predicate: Option[Column],
       escalate: Boolean = false): DataFrame =
-    queryIndexSpine(spark, indexDir, modelPath, queries, k, probes, predicate,
+    queryIndexSpine(spark, indexDir, queries, k, probes, predicate,
         escalate, "pq", "queryIndexPq") { (root, cent, qRows) =>
       import spark.implicits._
-      val books = loadBooks(booksFor(root, booksPath)).getOrElse(
-        throw new IllegalStateException(
-          s"no trained codebooks at ${booksFor(root, booksPath)}"))
+      val books = booksOf(root)
       // L2 ranking (the pq rule) with the query's residual to each cell
       val ranked = qRows.map { case (qId, qv, _) => qId -> rankCellsL2(cent, qv) }
       val residual = ranked.flatMap { case (qId, cells) =>
@@ -575,12 +570,11 @@ object StreamingAnn {
     * to [[Ann.knnIvfPqRefined]] at the same geometry (parity spec).
     */
   def queryIndexPqRefined(spark: SparkSession, indexDir: String,
-      modelPath: String, booksPath: String, queries: DataFrame,
-      vectors: DataFrame, k: Int, refine: Int = 10,
+      queries: DataFrame, vectors: DataFrame, k: Int, refine: Int = 10,
       probes: Int = 2): DataFrame = {
     graft.core.Configs.Pq(Ann.PqK, refine).validated
-    val short = queryIndexPq(spark, indexDir, modelPath, booksPath,
-      queries, k * refine, probes).select("q_id", "neighbor_id")
+    val short = queryIndexPq(spark, indexDir, queries, k * refine, probes)
+      .select("q_id", "neighbor_id")
     val qv = quantize(vectors)
     val cand = qv.join(broadcast(short), col("vec_id") === col("neighbor_id"))
       .select(col("q_id"), col("neighbor_id"), col("v"), col("norm2"))
@@ -619,13 +613,7 @@ object StreamingAnn {
     * is deleted and rebuilt by the next cutover, and nothing is deleted
     * under a reader — one planned before the cutover keeps every file
     * it listed until [[vacuumGenerations]]. The new generation carries
-    * the serving root's `_layout` stamp and, when the root has its own,
-    * its `_model`/`_pqbooks`; otherwise the caller's artifacts keep
-    * serving, as they do for generation 0. The stamp and rule refusals
-    * are every other reader's: a populated pre-stamp dir demands an
-    * explicit stamp, and an unknown assignment rule is refused
-    * (compaction preserves cells, so it would launder a wrong-rule
-    * index into a fresh-looking one).
+    * the serving generation's layout, `_model` and `_pqbooks`.
     *
     * Owner-context, like every maintenance pass here: one compaction or
     * retrain at a time, run between ingest batches.
@@ -668,7 +656,7 @@ object StreamingAnn {
       vacuumGrace: Int = 1): Option[Long] = {
     graft.core.Configs.IndexMaintenance(maxLeavesPerCell = maxLeavesPerCell,
       vacuumGrace = vacuumGrace, minBatches = minBatches).validated
-    val worst = listLeaves(resolveRoot(indexDir)).groupBy(_._1).valuesIterator
+    val worst = servingLeaves(indexDir).groupBy(_._1).valuesIterator
       .map(_.size).maxOption.getOrElse(0)
     val out = if (worst > maxLeavesPerCell)
       compactIndex(spark, indexDir, minBatches) else None
@@ -678,59 +666,59 @@ object StreamingAnn {
 
   // ---- generations: the one swap protocol of the index directory ---
   //
-  // Every maintenance pass that rewrites leaves writes a NEW generation
-  // and swaps it in: [[compactIndex]] (same model, aged leaves merged)
-  // and the drift path. The train-once frozen model is the right
-  // default (cell assignment never drifts, no global rebuilds), but a
-  // long-lived incremental store must survive CORPUS drift: as data
-  // leaves the trained distribution, cell balance degrades and recall
-  // at a fixed probe budget decays (the corollary of the measured
-  // data-dependence of the recall ladder). [[retrainIndex]] is the
-  // owner maintenance pass for that: train a NEW model on the serving
-  // corpus, rebuild the index under it cell-by-cell, and cut over
-  // atomically.
+  // Every generation N is a complete, self-contained index at
+  // `<indexDir>/gen-N/`: its leaves, its `_layout` stamp, its frozen
+  // `_model` and, for `pq`, its `_pqbooks`. `<indexDir>/_current` names
+  // the serving generation; a dir without it holds no index. The first
+  // non-empty ingest batch writes `gen-0` (model and books train-or-load
+  // from the caller's artifacts); every maintenance pass that rewrites
+  // leaves writes generation N+1 and swaps it in: [[compactIndex]]
+  // (same model, aged leaves merged) and the drift path. The
+  // train-once frozen model is the right default (cell assignment
+  // never drifts, no global rebuilds), but a long-lived incremental
+  // store must survive CORPUS drift: as data leaves the trained
+  // distribution, cell balance degrades and recall at a fixed probe
+  // budget decays (the corollary of the measured data-dependence of
+  // the recall ladder). [[retrainIndex]] is the owner maintenance pass
+  // for that: train a NEW model on the serving corpus, rebuild the
+  // index under it cell-by-cell, and cut over atomically.
   //
-  // Layout: generation N lives at `<indexDir>/_gen-N/` — a complete,
-  // self-contained index (leaves, `_layout`, its own `_model` when it
-  // has one; the `_` prefix keeps a mid-build or crashed-unflipped
-  // generation invisible to the flat generation's parquet partition
-  // discovery, which would otherwise refuse the mixed directory
-  // structure) — and `<indexDir>/_current` names the serving
-  // generation (absent = the original flat generation 0 at `indexDir`
-  // itself, so every pre-generation index keeps working unchanged).
-  // Every entry point resolves through the pointer, so ingest streams
-  // and queries flip to the new generation at their next
-  // batch/request with no restart; the gen-local `_model` takes
-  // precedence over the caller's modelPath, which is what makes the
-  // model+layout+data cutover ONE atomic rename (`_current`): there is
-  // no window where a new model is served over old cells or vice
-  // versa — the failure mode the layout stamp's assignment-rule field
-  // guards against.
+  // Every entry point resolves through the pointer once and reads data,
+  // stamp and model from that one generation, so ingest streams and
+  // queries flip at their next batch/request with no restart, and the
+  // model+layout+data cutover is ONE atomic rename (`_current`): there
+  // is no window where a new model is served over old cells or vice
+  // versa.
   //
   // Nothing is deleted at cutover: the old generation stays on disk
   // (readers planned against it keep every file they listed) until
   // the owner reclaims it with [[vacuumGenerations]].
 
-  /** The serving root of an index: `<indexDir>/_gen-N` per `_current`,
-    * or `indexDir` itself (the flat pre-generation layout).
+  private def genDir(indexDir: String, n: Long): String = s"$indexDir/gen-$n"
+
+  /** The serving generation's root, `<indexDir>/gen-N` per `_current`;
+    * a dir with no `_current` holds no index and is refused.
     */
   private[graft] def resolveRoot(indexDir: String): String =
-    readCurrentGen(indexDir) match {
-      case Some(n) => s"$indexDir/_gen-$n"
-      case None => indexDir
-    }
+    readCurrentGen(indexDir).map(genDir(indexDir, _)).getOrElse(
+      throw new IllegalStateException(
+        s"no index at $indexDir: it has no _current generation"))
 
-  /** The serving model path for an ALREADY-RESOLVED generation root:
-    * the generation's own `_model` when present (written by
-    * [[retrainIndex]], carried by [[compactIndex]]), else the caller's
-    * train-once artifact. Takes the resolved root (never re-resolves)
-    * so one request's data and model come from the SAME generation
-    * even if a cutover lands mid-request.
+  /** The serving generation's (cell, ingest_batch) leaves; none when the
+    * dir holds no index yet.
     */
-  private def modelFor(resolvedRoot: String, modelPath: String): String = {
-    val genModel = java.nio.file.Paths.get(resolvedRoot, "_model")
-    if (java.nio.file.Files.exists(genModel)) genModel.toString else modelPath
-  }
+  private def servingLeaves(indexDir: String): Seq[(Long, Long)] =
+    readCurrentGen(indexDir).toSeq.flatMap(n => listLeaves(genDir(indexDir, n)))
+
+  /** A generation's own frozen model. */
+  private def modelOf(root: String): Seq[(Long, Seq[Long], Long)] =
+    loadModel(s"$root/_model").getOrElse(
+      throw new IllegalStateException(s"no trained model in $root"))
+
+  /** A `pq` generation's own product codebooks. */
+  private def booksOf(root: String): Seq[Seq[(Long, Seq[Long], Long)]] =
+    loadBooks(s"$root/_pqbooks").getOrElse(
+      throw new IllegalStateException(s"no trained codebooks in $root"))
 
   private[graft] def readCurrentGen(indexDir: String): Option[Long] =
     Durable.read(java.nio.file.Paths.get(indexDir, "_current")).map(_.trim)
@@ -738,6 +726,24 @@ object StreamingAnn {
 
   private def writeCurrentGen(indexDir: String, n: Long): Unit =
     Durable.write(java.nio.file.Paths.get(indexDir, "_current"), s"gen-$n")
+
+  /** Write generation `n`'s artifacts — `_model`, `_pqbooks` when given,
+    * and the `_layout` stamp (the layout plus the model's cell count and
+    * dims) — then, unless the crashPoint 2 test seam stops here, THE
+    * atomic `_current` cutover to it. The one commit of [[ingestSpine]]
+    * (generation 0) and [[writeGeneration]] (every later one).
+    */
+  private[graft] def commitGeneration(indexDir: String, n: Long,
+      layout: String, cent: Seq[(Long, Seq[Long], Long)],
+      books: Option[Seq[Seq[(Long, Seq[Long], Long)]]],
+      crashPoint: Int = 0): Unit = {
+    val root = genDir(indexDir, n)
+    saveModel(s"$root/_model", cent)
+    books.foreach(saveBooks(s"$root/_pqbooks", _))
+    Durable.write(layoutPath(root),
+      s"layout=$layout\nkcells=${cent.size}\ndims=${cent.head._2.size}")
+    if (crashPoint != 2) writeCurrentGen(indexDir, n)
+  }
 
   /** Retrain the coarse quantizer on the serving corpus and rebuild the
     * index under the new model as generation N+1 — returning the new
@@ -777,7 +783,7 @@ object StreamingAnn {
     retrainIndexImpl(spark, indexDir, kCells, iterations, crashPoint = 0)._1
 
   /** Test seam: crashPoint 1 = stop after the rebuilt data write
-    * (before the stamp/model), 2 = stop after stamp+model (before the
+    * (before the model/stamp), 2 = stop after model+stamp (before the
     * `_current` flip — the generation is complete but unreferenced).
     * Production path is crashPoint = 0. Returns (generation number,
     * rebuilt leaf id).
@@ -820,8 +826,8 @@ object StreamingAnn {
     * + the layout's payload, written as ONE leaf per cell under `id`),
     * leaves `kept` as they are (with their own `ingest_batch`), the new
     * coarse model and codebooks if the rebuild trained any (None carries
-    * the serving root's own, if it has them), and cached frames to
-    * release once the rows are written.
+    * the serving generation's), and cached frames to release once the
+    * rows are written.
     */
   private case class Rebuilt(rows: DataFrame, id: Long,
       cent: Option[Seq[(Long, Seq[Long], Long)]] = None,
@@ -830,53 +836,38 @@ object StreamingAnn {
       cached: Seq[DataFrame] = Nil)
 
   /** The one generation writer behind [[compactIndex]], [[retrainIndex]]
-    * and [[retrainIndexPq]]: resolve the serving root once, refuse a
-    * pre-stamp dir, the caller's `refusal` of the layout and an unknown
-    * assignment rule, then `rebuild` (given the serving index, its
-    * layout and its leaf ids; None = nothing to do). Generation N+1 at
-    * `_gen-N+1`: the rebuilt rows plus the kept leaves, the layout stamp
-    * (the cell count of a new model — fewer than kCells only when the
-    * corpus has fewer vectors — or the serving root's), the new or the
-    * serving root's own `_model`/`_pqbooks`, and last THE atomic
-    * `_current` cutover. crashPoint 1 stops after the data write, 2
-    * after the artifacts (complete but unreferenced); a crashed prior
-    * attempt's dir is deleted and rebuilt. An index with no leaves is
-    * None before any check. Returns (generation number, rebuilt id).
+    * and [[retrainIndexPq]]: resolve the serving generation N once,
+    * refuse the caller's `refusal` of its layout, then `rebuild` (given
+    * the serving index, its layout and its leaf ids; None = nothing to
+    * do). Generation N+1 at `gen-N+1`: the rebuilt rows plus the kept
+    * leaves, then [[commitGeneration]] with the rebuild's new model and
+    * codebooks or generation N's. crashPoint 1 stops after the data
+    * write, 2 after the artifacts (complete but unreferenced); a crashed
+    * prior attempt's dir is deleted and rebuilt. A dir with no index or
+    * no leaves is None before any check. Returns (generation number,
+    * rebuilt id).
     */
   private def writeGeneration(spark: SparkSession, indexDir: String,
       crashPoint: Int, refusal: String => Option[String])(
       rebuild: (DataFrame, String, Seq[Long]) => Option[Rebuilt]
   ): Option[(Long, Long)] = {
-    val cur = resolveRoot(indexDir)
-    val ids = listLeaves(cur).map(_._2).distinct
+    val ids = servingLeaves(indexDir).map(_._2).distinct
     if (ids.isEmpty) return None
-    val (layout, k, d) = readLayout(cur) match {
-      case None => throw new IllegalStateException(legacyLayoutMsg(cur))
-      case Some((l, k, d, r)) =>
-        refusal(l).foreach(m => throw new IllegalStateException(s"index at $cur is $m"))
-        if (r != ruleFor(l)) throw new IllegalStateException(ruleMismatchMsg(cur, r))
-        (l, k, d)
-    }
+    val cur = resolveRoot(indexDir)
+    val layout = stampOf(cur)._1
+    refusal(layout).foreach(m => throw new IllegalStateException(s"index at $cur is $m"))
     rebuild(spark.read.parquet(cur), layout, ids).map { rb =>
-      val genN = readCurrentGen(indexDir).getOrElse(0L) + 1
-      val genDir = s"$indexDir/_gen-$genN"
-      deleteDir(java.nio.file.Paths.get(genDir)) // a crashed prior attempt
+      val next = readCurrentGen(indexDir).get + 1
+      val root = genDir(indexDir, next)
+      deleteDir(java.nio.file.Paths.get(root)) // a crashed prior attempt
       val leaf = rb.rows.withColumn("ingest_batch", lit(rb.id))
       rb.kept.fold(leaf)(leaf.unionByName(_)).write.mode("overwrite")
-        .partitionBy("cell", "ingest_batch").parquet(genDir)
+        .partitionBy("cell", "ingest_batch").parquet(root)
       rb.cached.foreach(_.unpersist())
-      if (crashPoint != 1) {
-        stampIndexLayout(genDir, layout, rb.cent.fold(k)(_.size),
-          rb.cent.fold(d)(_.head._2.size))
-        // the rebuild's new model/codebooks, else the serving root's own
-        def carry(name: String): Unit =
-          Durable.read(java.nio.file.Paths.get(cur, name))
-            .foreach(Durable.write(java.nio.file.Paths.get(genDir, name), _))
-        rb.cent.fold(carry("_model"))(saveModel(s"$genDir/_model", _))
-        rb.books.fold(carry("_pqbooks"))(saveBooks(s"$genDir/_pqbooks", _))
-        if (crashPoint != 2) writeCurrentGen(indexDir, genN) // THE atomic cutover
-      }
-      (genN, rb.id)
+      if (crashPoint != 1)
+        commitGeneration(indexDir, next, layout, rb.cent.getOrElse(modelOf(cur)),
+          rb.books.orElse(loadBooks(s"$cur/_pqbooks")), crashPoint)
+      (next, rb.id)
     }
   }
 
@@ -898,11 +889,10 @@ object StreamingAnn {
     * residuals against the new cells → per-subspace seed-safe codebooks
     * → argmin encode), so a post-retrain [[queryIndexPq]] is
     * bit-identical to the batch operator at the new geometry (parity
-    * spec). The rebuilt codes land in `_gen-N/` as ONE rebuilt leaf per
-    * cell with the generation's own `_model` AND `_pqbooks` (both
-    * outrank the caller's train-once artifacts — model, books, layout
-    * stamp, and data cut over in ONE atomic `_current` rename, same
-    * commit point and crash seams as [[retrainIndex]]).
+    * spec). The rebuilt codes land in `gen-N/` as ONE rebuilt leaf per
+    * cell next to the generation's new `_model` AND `_pqbooks` — model,
+    * books, layout stamp, and data cut over in ONE atomic `_current`
+    * rename, same commit point and crash seams as [[retrainIndex]].
     *
     * Scale: one scan of the code index (ids), one join against the
     * primary restricted to those ids, `iterations`-scan training, one
@@ -979,12 +969,11 @@ object StreamingAnn {
       kCells = kCells).validated
     graft.core.Validation.validate("index-maintenance",
       graft.core.Validation.knob("iterations", iterations, minV = 1L))
-    val root = resolveRoot(indexDir)
-    if (listLeaves(root).isEmpty) return None
+    if (servingLeaves(indexDir).isEmpty) return None
     val worst = indexStats(spark, indexDir)
       .agg(max(col("share_bp"))).head().getLong(0)
     if (worst > maxShareBp) {
-      val isPq = readLayout(root).exists(_._1 == "pq")
+      val isPq = stampOf(resolveRoot(indexDir))._1 == "pq"
       Some(primary match {
         case Some(p) if isPq =>
           retrainIndexPq(spark, indexDir, p, kCells, pqK, iterations)
@@ -995,19 +984,14 @@ object StreamingAnn {
 
   /** Reclaim generations — the grace-priced owner pass that completes
     * every cutover (which deletes nothing). Keeps the serving
-    * generation and the `grace` generations just below it (the flat
-    * root is generation 0); removes every older `_gen-N` dir and, once
-    * generation 0 is older, the flat remnants at the index root (its
-    * `cell=*` leaves and layout stamp, and crashed [[Durable.write]]
-    * temp files of those and of `_current`). An unflipped build above
-    * the serving generation (a crashed cutover) is always removed. Run
-    * it only when no reader planned against a reclaimed generation can
-    * still be in flight. Returns the number of generation roots
-    * reclaimed.
-    *
-    * The remnant list stays an ALLOWLIST on purpose: an artifact this
-    * code did not write (a user file dropped in the index dir) is
-    * never deleted.
+    * generation and the `grace` generations just below it; removes
+    * every older `gen-N` dir, every unflipped build above the serving
+    * one (a crashed cutover; with no `_current` every `gen-N` is one)
+    * and crashed [[Durable.write]] temp files of `_current`. Run it
+    * only when no reader planned against a reclaimed generation can
+    * still be in flight. Returns the number of generations reclaimed.
+    * Nothing else in the dir is touched: a file this code did not
+    * write (a user file dropped in the index dir) is never deleted.
     */
   def vacuumGenerations(indexDir: String, grace: Int = 0): Int = {
     graft.core.Validation.validate("index-maintenance",
@@ -1015,179 +999,83 @@ object StreamingAnn {
         requiredNonZero = false))
     val root = java.nio.file.Paths.get(indexDir)
     if (!java.nio.file.Files.isDirectory(root)) return 0
-    val cur = readCurrentGen(indexDir).getOrElse(0L)
-    def reclaimed(gen: Long) = gen > cur || gen < cur - grace
+    val cur = readCurrentGen(indexDir).getOrElse(-1L)
     val s = java.nio.file.Files.list(root)
     val entries = try s.iterator().asScala.toSeq finally s.close()
     val gens = entries.filter { p =>
       val name = p.getFileName.toString
-      name.startsWith("_gen-") &&
-        name.stripPrefix("_gen-").toLongOption.exists(reclaimed)
+      name.startsWith("gen-") &&
+        name.stripPrefix("gen-").toLongOption.exists(g => g > cur || g < cur - grace)
     }
-    val flat = if (!reclaimed(0L)) Nil else entries.filter { p =>
-      val name = p.getFileName.toString
-      name.startsWith("cell=") || FlatFiles(name) ||
-        Durable.tempTarget(name).exists(t => FlatFiles(t) || t == "_current")
-    }
-    (gens ++ flat).foreach(deleteDir)
-    // the flat generation 0 counts as ONE reclaimed root no matter how
-    // many cell=* dirs it spans
-    gens.size + (if (flat.exists(_.getFileName.toString.startsWith("cell="))) 1 else 0)
+    (gens ++ entries.filter(p =>
+      Durable.tempTarget(p.getFileName.toString).contains("_current"))
+    ).foreach(deleteDir)
+    gens.size
   }
-
-  /** The generation-0 files [[vacuumGenerations]] reclaims at the flat
-    * root once generation 0 falls out of the grace window.
-    */
-  private val FlatFiles = Set("_layout")
 
   /** The index family has three on-disk layouts sharing one
     * compactor and one directory convention — `full` (v/norm2
     * full-precision vectors, [[ivfIngest]]), `sq8` (cb/n2q int8 codes,
     * [[ivfIngestSq]]) and `pq` (c0..c3 residual codes,
-    * [[ivfIngestPq]]) — so every index dir carries a `_layout` stamp
-    * `{layout, kCells, dims, rule}` written at first ingest (rule =
-    * the layout's cell-assignment rule, [[ruleFor]]). Readers and the
-    * compactor REFUSE a mismatched or missing stamp with a
-    * self-explanatory error instead of failing downstream on a missing
-    * column; pre-stamp (legacy) dirs are never auto-stamped — the
-    * operator verifies the layout and stamps once, explicitly (the
-    * same contract as the near-dup geometry manifest in
-    * [[StreamingCuration]]).
+    * [[ivfIngestPq]]) — so every generation carries a `_layout` stamp
+    * `(layout, kCells, dims)` next to its model. Readers and the
+    * ingest REFUSE a mismatched stamp with a self-explanatory error
+    * instead of failing downstream on a missing column. `root` is a
+    * generation root (`<indexDir>/gen-N`); None when it has no stamp.
     */
-  def readLayout(indexDir: String): Option[(String, Int, Int, String)] =
-    Durable.read(layoutPath(indexDir)).flatMap { body =>
+  def readLayout(root: String): Option[(String, Int, Int)] =
+    Durable.read(layoutPath(root)).flatMap { body =>
       val m = body.linesIterator.map(_.split("=", 2))
         .collect { case Array(k, v) => k -> v }.toMap
-      try Some((m("layout"), m("kcells").toInt, m("dims").toInt,
-        m.getOrElse("rule", "")))
+      try Some((m("layout"), m("kcells").toInt, m("dims").toInt))
       catch {
         case _: NoSuchElementException => None
         case _: NumberFormatException => None
       }
     }
 
-  /** Explicitly stamp an index dir's layout (the legacy-dir migration
-    * path, and the write path every ingest uses on an empty dir). Restamping with the SAME triple is a no-op; a
-    * different triple is refused.
-    */
-  def stampIndexLayout(indexDir: String, layout: String, kCells: Int,
-      dims: Int): Unit = {
-    require(Layouts.contains(layout),
-      s"unknown index layout '$layout' (expected one of ${Layouts.mkString("|")})")
-    readLayout(indexDir).foreach { case (l, k, d, r) =>
-      require((l, k, d) == ((layout, kCells, dims)),
-        s"index at $indexDir is already stamped layout=$l kCells=$k dims=$d; " +
-          s"refusing to restamp as layout=$layout kCells=$kCells dims=$dims")
-      require(r.isEmpty || r == ruleFor(layout),
-        s"index at $indexDir is stamped with assignment rule '$r' but " +
-          s"layout=$layout is served under rule=${ruleFor(layout)}")
-      // r.isEmpty: a pre-rule stamp being upgraded — the operator's
-      // explicit act of asserting the cells really follow the
-      // layout's rule
-    }
-    Durable.write(layoutPath(indexDir),
-      s"layout=$layout\nkcells=$kCells\ndims=$dims\nrule=${ruleFor(layout)}")
-  }
+  private def stampOf(root: String): (String, Int, Int) =
+    readLayout(root).getOrElse(
+      throw new IllegalStateException(s"generation $root has no layout stamp"))
 
   /** Each layout's leaf payload columns, written next to `vec_id`, the
     * ingest's `attrs` and the `cell` / `ingest_batch` partition keys.
     */
   private val Payloads = Map("full" -> Seq("v", "norm2"),
     "sq8" -> Seq("cb", "n2q"), "pq" -> Seq("c0", "c1", "c2", "c3"))
-  private[graft] val Layouts = Payloads.keySet
 
   private def leafColumns(layout: String, attrs: Seq[String]): Seq[Column] =
     col("vec_id") +: (Payloads(layout) ++ attrs).map(col) :+ col("cell")
 
-  /** The cell-assignment rule every current writer uses
-    * ([[Ann.cellAssign]], guarded-cosine argmax) and every reader's
-    * probe ranking assumes. The stamp records it so an index whose
-    * partitions were assigned under a DIFFERENT rule (e.g. an L2-argmin
-    * index written before the rule change) can never be served with
-    * cosine-ranked probes silently — that combination degrades recall
-    * with no error. Such an index must be RE-INGESTED, not stamped:
-    * [[stampIndexLayout]] asserts the layout's own rule.
+  private def layoutPath(root: String) =
+    java.nio.file.Paths.get(root, "_layout")
+
+  /** Write-side check: an ingest never appends another layout's rows,
+    * or vectors of another length, to a generation.
     */
-  private[graft] val RuleCos = "cos"
-
-  /** The `pq` layout's assignment rule: squared-L2 argmin — EXACTLY
-    * the batch IVFADC's coarse quantizer ([[Ann.knnIvfPq]] assigns via
-    * kmeansAssign and ranks probes by exact coarse L2), which is what
-    * makes residual encoding meaningful (residuals are taken against
-    * the NEAREST centroid in L2, the metric the codebooks are trained
-    * under). The rule field keeps an l2-assigned code index from ever
-    * being served with cosine-ranked probes, and vice versa.
-    */
-  private[graft] val RuleL2 = "l2"
-
-  /** Each layout's one legitimate assignment rule — the pairing every
-    * stamp write asserts and every reader/compactor checks.
-    */
-  private[graft] def ruleFor(layout: String): String =
-    if (layout == "pq") RuleL2 else RuleCos
-
-  private def ruleMismatchMsg(indexDir: String, rule: String) =
-    s"index at $indexDir is stamped with assignment rule " +
-      s"'${if (rule.isEmpty) "<missing>" else rule}' but its layout is " +
-      s"served under ${Layouts.map(l => s"$l=rule:${ruleFor(l)}").toSeq.sorted
-        .mkString(", ")}: if the index really was written by the matching " +
-      "ingest, restamp it with StreamingAnn.stampIndexLayout (which asserts " +
-      "the layout's own rule); an index whose cells were assigned under a " +
-      "different rule must be re-ingested — serving it with mismatched " +
-      "probe ranking would silently degrade recall"
-
-  private def layoutPath(indexDir: String) =
-    java.nio.file.Paths.get(indexDir, "_layout")
-
-  private def legacyLayoutMsg(indexDir: String) =
-    s"index at $indexDir predates layout stamps: verify which ingest " +
-      "wrote it and run StreamingAnn.stampIndexLayout(indexDir, " +
-      "\"full\"|\"sq8\", kCells, dims) once, explicitly — a populated " +
-      "unstamped dir is never auto-stamped. Stamping asserts the cells " +
-      "were assigned by the guarded-cosine rule (rule=cos); an index " +
-      "written before that rule (L2-argmin cells) must be re-ingested, " +
-      "not stamped"
-
-  /** Write-side stamp-or-verify (first non-empty batch). */
-  private def ensureLayout(indexDir: String, layout: String, kCells: Int,
-      dims: Int): Unit =
-    readLayout(indexDir) match {
-      case Some((l, k, d, r)) =>
-        if ((l, k, d) != ((layout, kCells, dims)))
-          throw new IllegalStateException(
-            s"index at $indexDir is stamped layout=$l kCells=$k dims=$d; " +
-              s"this ingest writes layout=$layout kCells=$kCells dims=$dims " +
-              "— refusing to mix layouts in one index dir")
-        if (r != ruleFor(layout))
-          // never append rows into partitions whose existing
-          // assignment rule is unknown/different
-          throw new IllegalStateException(ruleMismatchMsg(indexDir, r))
-      case None =>
-        if (listLeaves(indexDir).nonEmpty)
-          throw new IllegalStateException(legacyLayoutMsg(indexDir))
-        else stampIndexLayout(indexDir, layout, kCells, dims)
-    }
+  private def ensureLayout(root: String, layout: String, dims: Int): Unit = {
+    val (l, k, d) = stampOf(root)
+    if ((l, d) != ((layout, dims)))
+      throw new IllegalStateException(
+        s"index at $root is stamped layout=$l kCells=$k dims=$d; " +
+          s"this ingest writes layout=$layout dims=$dims " +
+          "— refusing to mix layouts or geometries in one index dir")
+  }
 
   /** Read-side flavor check: a wrong-flavor query is refused with the
     * stamp's own description rather than a missing-column analysis
     * error three operators deep.
     */
-  private def requireLayout(indexDir: String, expected: String,
-      caller: String): Unit =
-    readLayout(indexDir) match {
-      case Some((l, _, _, r)) if l == expected && r == ruleFor(expected) => ()
-      case Some((l, _, _, r)) if l == expected =>
-        throw new IllegalStateException(ruleMismatchMsg(indexDir, r))
-      case Some((l, k, d, _)) =>
-        throw new IllegalStateException(
-          s"$caller expects a '$expected' index but $indexDir is stamped " +
-            s"layout=$l (kCells=$k, dims=$d); use " +
-            s"${if (l == "sq8") "queryIndexSq"
-              else if (l == "pq") "queryIndexPq" else "queryIndex"}")
-      case None =>
-        if (listLeaves(indexDir).nonEmpty)
-          throw new IllegalStateException(legacyLayoutMsg(indexDir))
-    }
+  private def requireLayout(root: String, expected: String,
+      caller: String): Unit = {
+    val (l, k, d) = stampOf(root)
+    if (l != expected)
+      throw new IllegalStateException(
+        s"$caller expects a '$expected' index but $root is stamped " +
+          s"layout=$l (kCells=$k, dims=$d); use " +
+          s"${if (l == "sq8") "queryIndexSq"
+            else if (l == "pq") "queryIndexPq" else "queryIndex"}")
+  }
 
   /** Operational stats of an on-disk index (any layout): per cell —
     * leaf count (the compaction-cadence signal: ST7's one scale defect
@@ -1256,9 +1144,9 @@ object StreamingAnn {
     * invisible until its `_current` cutover, and the reader never
     * deletes anything.
     */
-  def queryIndex(spark: SparkSession, indexDir: String, modelPath: String,
+  def queryIndex(spark: SparkSession, indexDir: String,
       queries: DataFrame, k: Int, probes: Int = 1): DataFrame =
-    queryIndexImpl(spark, indexDir, modelPath, queries, k, probes, None)
+    queryIndexImpl(spark, indexDir, queries, k, probes, None)
 
   /** Filtered (attribute-constrained) index query — the on-disk form
     * of [[Ann.knnIvfTrainedFiltered]]: the predicate references the
@@ -1271,10 +1159,9 @@ object StreamingAnn {
     * extends to the filtered pair (spec-pinned).
     */
   def queryIndexFiltered(spark: SparkSession, indexDir: String,
-      modelPath: String, queries: DataFrame, k: Int, predicate: Column,
+      queries: DataFrame, k: Int, predicate: Column,
       probes: Int = 1): DataFrame =
-    queryIndexImpl(spark, indexDir, modelPath, queries, k, probes,
-      Some(predicate))
+    queryIndexImpl(spark, indexDir, queries, k, probes, Some(predicate))
 
   /** Filtered index query with PROBE ESCALATION — the on-disk serving
     * form of [[graft.operators.Ann.knnIvfTrainedFilteredEscalated]]:
@@ -1299,15 +1186,15 @@ object StreamingAnn {
     * through compaction.
     */
   def queryIndexFilteredEscalated(spark: SparkSession, indexDir: String,
-      modelPath: String, queries: DataFrame, k: Int, predicate: Column,
+      queries: DataFrame, k: Int, predicate: Column,
       probes: Int = 1): DataFrame =
-    queryIndexImpl(spark, indexDir, modelPath, queries, k, probes,
-      Some(predicate), escalate = true)
+    queryIndexImpl(spark, indexDir, queries, k, probes, Some(predicate),
+      escalate = true)
 
   private def queryIndexImpl(spark: SparkSession, indexDir: String,
-      modelPath: String, queries: DataFrame, k: Int, probes: Int,
+      queries: DataFrame, k: Int, probes: Int,
       predicate: Option[Column], escalate: Boolean = false): DataFrame =
-    queryIndexSpine(spark, indexDir, modelPath, queries, k, probes, predicate,
+    queryIndexSpine(spark, indexDir, queries, k, probes, predicate,
         escalate, "full", "queryIndex") { (_, cent, qRows) =>
       import spark.implicits._
       val byId = qRows.map(r => r._1 -> r).toMap
@@ -1334,9 +1221,9 @@ object StreamingAnn {
     *    and model from that same root, so a cutover mid-request can
     *    never mix generations;
     *  - quantize and collect the request-scale query set, and let the
-    *    layout rank every query's cells against the frozen model
-    *    driver-side (`probing`, given the resolved root, the model and
-    *    the (q_id, v, norm2) query rows);
+    *    layout rank every query's cells against the generation's frozen
+    *    model driver-side (`probing`, given the resolved root, the model
+    *    and the (q_id, v, norm2) query rows);
     *  - per query, keep the base tier `probes`, or with `escalate` the
     *    depth [[escalatedDepths]] decides;
     *  - scan ONLY the probed cells: the `isin` filter is a parquet
@@ -1348,16 +1235,14 @@ object StreamingAnn {
     *    and keep the top k, same tie-break as the batch operators.
     */
   private def queryIndexSpine(spark: SparkSession, indexDir: String,
-      modelPath: String, queries: DataFrame, k: Int, probes: Int,
+      queries: DataFrame, k: Int, probes: Int,
       predicate: Option[Column], escalate: Boolean, layout: String,
       caller: String)(
       probing: (String, Seq[(Long, Seq[Long], Long)],
         Seq[(Long, Seq[Long], Long)]) => Probing): DataFrame = {
     val root = resolveRoot(indexDir)
     requireLayout(root, layout, caller)
-    val model = modelFor(root, modelPath)
-    val cent = loadModel(model).getOrElse(
-      throw new IllegalStateException(s"no trained model at $model"))
+    val cent = modelOf(root)
     val qRows = quantize(queries).collect().toSeq.map(r =>
       (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
     val p = probing(root, cent, qRows)

@@ -154,6 +154,6 @@ class CentroidAssignSpec extends SparkSuite {
     finally q.stop()
     val queries = rows.filter(_._1 < 5).toSeq.toDF("vec_id", "embedding")
     assert(snap(StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = k, probes = kCells)) === got)
+      queries, k = k, probes = kCells)) === got)
   }
 }

@@ -49,11 +49,11 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     val gen = StreamingAnn.retrainIndex(spark, s"$root/index",
       kCells = 8, iterations = 2)
     assert(gen === 1L)
-    // the retrained generation serves through the ORIGINAL modelPath
-    // argument (gen-local model takes precedence) and must equal the
-    // batch operator trained on the same corpus at equal geometry
+    // the retrained generation serves under its own model and must
+    // equal the batch operator trained on the same corpus at equal
+    // geometry
     val got = snap(StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 2))
+      queries, k = 3, probes = 2))
     val want = snap(Ann.knnIvfTrained(emb, numQueries = 5, k = 3,
       kCells = 8, iterations = 2, probes = 2))
     assert(got === want)
@@ -67,14 +67,14 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     try { input2.addData(extra.toSeq: _*); q2.processAllAvailable() }
     finally q2.stop()
     val genRoot = StreamingAnn.resolveRoot(s"$root/index")
-    assert(genRoot.endsWith("_gen-1"))
+    assert(genRoot.endsWith("/gen-1"))
     assert(StreamingAnn.listLeaves(genRoot).exists(_._2 >= 0L),
       "post-retrain delivery did not land in the new generation")
     // the fresh rows are byte copies of vecs 0-9: querying the
     // ORIGINALS must return their fresh twins at cos 1.0 — proof the
     // new generation serves the post-retrain delivery
     val fq = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", rows.take(2).toSeq.toDF("vec_id", "embedding"),
+      rows.take(2).toSeq.toDF("vec_id", "embedding"),
       k = 5, probes = 8).collect()
     val twins = fq.filter(r => r.getLong(2) >= 90000L)
     assert(twins.nonEmpty, "fresh twins not served")
@@ -107,15 +107,15 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     } finally q.stop()
     // drift maintenance for a codes-only index: re-encode from the
     // primary store at a NEW geometry (12 cells) — elected ids join
-    // the primary, coarse + books retrain, _gen-1 cuts over atomically
+    // the primary, coarse + books retrain, gen-1 cuts over atomically
     val gen = StreamingAnn.retrainIndexPq(spark, s"$root/index", emb,
       kCells = 12, iterations = 2)
     assert(gen === 1L)
     // post-retrain ADC queries are bit-identical to the batch IVFADC
-    // trained on the same corpus at the same (new) geometry; the
-    // gen-local _model/_pqbooks outrank the caller's artifact paths
+    // trained on the same corpus at the same (new) geometry, under
+    // the generation's own _model/_pqbooks
     val got = snap(StreamingAnn.queryIndexPq(spark, s"$root/index",
-      s"$root/model.txt", s"$root/books.txt", queries, k = 3, probes = 2))
+      queries, k = 3, probes = 2))
     val want = snap(Ann.knnIvfPq(emb, numQueries = 5, k = 3, kCells = 12,
       iterations = 2, probes = 2))
     assert(got === want)
@@ -130,13 +130,12 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     try { input2.addData(extra.toSeq: _*); q2.processAllAvailable() }
     finally q2.stop()
     val genRoot = StreamingAnn.resolveRoot(s"$root/index")
-    assert(genRoot.endsWith("_gen-1"))
+    assert(genRoot.endsWith("/gen-1"))
     assert(StreamingAnn.listLeaves(genRoot).exists(_._2 >= 0L),
       "post-retrain delivery did not land in the new generation")
     // byte-copy twins encode to the SAME codes under the frozen
     // artifacts: a deep query over the originals must surface them
     val fq = StreamingAnn.queryIndexPq(spark, s"$root/index",
-      s"$root/model.txt", s"$root/books.txt",
       rows.take(2).toSeq.toDF("vec_id", "embedding"), k = 8, probes = 12)
       .collect()
     assert(fq.exists(_.getLong(2) >= 90000L), "fresh twins not served")
@@ -149,7 +148,6 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     // 90000+ twins are not primary rows, so the gen-2 rebuild drops
     // them — a primary-side delete propagates at retrain
     val fq2 = StreamingAnn.queryIndexPq(spark, s"$root/index",
-      s"$root/model.txt", s"$root/books.txt",
       rows.take(2).toSeq.toDF("vec_id", "embedding"), k = 8, probes = 12)
       .collect()
     assert(!fq2.exists(_.getLong(2) >= 90000L),
@@ -211,7 +209,7 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     // and the retrained generation still answers correctly: a piled
     // vector's rank-1 neighbor is a byte-identical twin at cos 1.0
     val fq = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", cone.take(2).toSeq.toDF("vec_id", "embedding"),
+      cone.take(2).toSeq.toDF("vec_id", "embedding"),
       k = 5, probes = 4).collect()
     assert(fq.nonEmpty)
     assert(fq.filter(_.getInt(1) == 1).forall(_.getLong(3) === 10000L),
@@ -237,11 +235,11 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     StreamingAnn.retrainIndex(spark, s"$root/index", kCells = 8, iterations = 1)
     val genRoot = StreamingAnn.resolveRoot(s"$root/index")
     assert(StreamingAnn.readLayout(genRoot)
-      .exists { case (_, k, _, _) => k == 8 },
+      .exists { case (_, k, _) => k == 8 },
       s"stamped layout ${StreamingAnn.readLayout(genRoot)}")
     assert(StreamingAnn.loadModel(s"$genRoot/_model").exists(_.size == 8))
     // and the generation serves
-    assert(StreamingAnn.queryIndex(spark, s"$root/index", s"$root/model.txt",
+    assert(StreamingAnn.queryIndex(spark, s"$root/index",
       rows.take(2).toSeq.toDF("vec_id", "embedding"), k = 3, probes = 8)
       .collect().nonEmpty)
   }
@@ -297,44 +295,43 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     try { input.addData(rows.take(60).toSeq: _*); q.processAllAvailable() }
     finally q.stop()
     val before = snap(StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 8))
+      queries, k = 3, probes = 8))
     // crash after the data write (no stamp, no model, no flip)
     StreamingAnn.retrainIndexImpl(spark, s"$root/index",
       kCells = 4, iterations = 1, crashPoint = 1)
-    assert(StreamingAnn.readCurrentGen(s"$root/index").isEmpty)
+    assert(StreamingAnn.readCurrentGen(s"$root/index") === Some(0L))
     assert(snap(StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 8)) === before,
+      queries, k = 3, probes = 8)) === before,
       "a crashed (unflipped) retrain changed query results")
     // crash after stamp+model (complete but unreferenced generation)
     StreamingAnn.retrainIndexImpl(spark, s"$root/index",
       kCells = 4, iterations = 1, crashPoint = 2)
-    assert(StreamingAnn.readCurrentGen(s"$root/index").isEmpty)
+    assert(StreamingAnn.readCurrentGen(s"$root/index") === Some(0L))
     assert(snap(StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 8)) === before)
+      queries, k = 3, probes = 8)) === before)
     // the re-run converges: deletes the partial build, commits gen-1
     val gen = StreamingAnn.retrainIndex(spark, s"$root/index",
       kCells = 4, iterations = 1)
     assert(gen === 1L)
     assert(StreamingAnn.readCurrentGen(s"$root/index") === Some(1L))
     val after = snap(StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 4))
+      queries, k = 3, probes = 4))
     assert(after.nonEmpty)
-    // cutover deleted nothing: the flat generation's leaves are intact
-    assert(StreamingAnn.listLeaves(s"$root/index").nonEmpty,
+    // cutover deleted nothing: generation 0's leaves are intact
+    def genDir(n: Int) = java.nio.file.Paths.get(s"$root/index/gen-$n")
+    assert(StreamingAnn.listLeaves(genDir(0).toString).nonEmpty,
       "cutover deleted the old generation's leaves")
     // a second retrain chains generations
     val gen2 = StreamingAnn.retrainIndex(spark, s"$root/index",
       kCells = 4, iterations = 1)
     assert(gen2 === 2L)
     assert(StreamingAnn.resolveRoot(s"$root/index").endsWith("gen-2"))
-    // vacuumGenerations reclaims the flat gen-0 remnants and gen-1,
-    // keeps gen-2 serving
+    // vacuumGenerations reclaims gen-0 and gen-1, keeps gen-2 serving
     assert(StreamingAnn.vacuumGenerations(s"$root/index") > 0)
-    assert(StreamingAnn.listLeaves(s"$root/index").isEmpty)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$root/index/_gen-1")))
+    assert(!java.nio.file.Files.exists(genDir(0)))
+    assert(!java.nio.file.Files.exists(genDir(1)))
     val served = snap(StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 4))
+      queries, k = 3, probes = 4))
     assert(served.nonEmpty)
 
     // compaction cuts over through the same seams: the serving
@@ -352,47 +349,46 @@ class StreamingAnnRetrainSpec extends SparkSuite {
       }
     } finally q2.stop()
     val beforeCompact = snap(StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 4))
+      queries, k = 3, probes = 4))
     Seq(1, 2).foreach { cp =>
       assert(StreamingAnn.compactIndexImpl(spark, s"$root/index", 2,
         crashPoint = cp).nonEmpty)
       assert(StreamingAnn.readCurrentGen(s"$root/index") === Some(2L))
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/index/_gen-3")))
+      assert(java.nio.file.Files.exists(genDir(3)))
       assert(snap(StreamingAnn.queryIndex(spark, s"$root/index",
-        s"$root/model.txt", queries, k = 3, probes = 4)) === beforeCompact,
+        queries, k = 3, probes = 4)) === beforeCompact,
         s"an unflipped compaction (seam $cp) changed query results")
     }
     val out = StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2)
     assert(out.nonEmpty)
     assert(StreamingAnn.readCurrentGen(s"$root/index") === Some(3L))
     // the compacted generation keeps gen-2's retrained model and layout
-    assert(StreamingAnn.loadModel(s"$root/index/_gen-3/_model")
-      === StreamingAnn.loadModel(s"$root/index/_gen-2/_model"))
-    assert(StreamingAnn.readLayout(s"$root/index/_gen-3")
-      === StreamingAnn.readLayout(s"$root/index/_gen-2"))
+    assert(StreamingAnn.loadModel(s"$root/index/gen-3/_model")
+      === StreamingAnn.loadModel(s"$root/index/gen-2/_model"))
+    assert(StreamingAnn.readLayout(s"$root/index/gen-3")
+      === StreamingAnn.readLayout(s"$root/index/gen-2"))
     assert(snap(StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 4)) === beforeCompact)
+      queries, k = 3, probes = 4)) === beforeCompact)
     val leaves = StreamingAnn.listLeaves(StreamingAnn.resolveRoot(s"$root/index"))
     assert(leaves.map(_._2).toSet === Set(out.get, 1L))
   }
 
-  test("vacuumGenerations sweeps crashed temp files at the flat root, never a user file") {
+  test("vacuumGenerations sweeps crashed _current temp files, never a user file") {
     val index = java.nio.file.Paths.get(tmpDir("st-ann-vacuum-tmp"), "index")
-    java.nio.file.Files.createDirectories(index.resolve("_gen-1"))
+    java.nio.file.Files.createDirectories(index.resolve("gen-1"))
     def plant(name: String, body: String) =
       java.nio.file.Files.writeString(index.resolve(name), body)
     plant("_current", "gen-1")
-    plant("_layout.tmp-x", "layout=full")
+    plant("_current.tmp-x", "gen-2")
     plant("_tombstones.tmp-y", "0,1,2")
     plant("notes.txt", "kept")
     StreamingAnn.vacuumGenerations(index.toString)
     def present(name: String) = java.nio.file.Files.exists(index.resolve(name))
-    assert(!present("_layout.tmp-x"))
+    assert(!present("_current.tmp-x"))
     // not a file the index writes: kept like any user file
     assert(present("_tombstones.tmp-y") && present("notes.txt"),
       "vacuum deleted a file the index did not write")
-    assert(present("_current") && present("_gen-1"))
+    assert(present("_current") && present("gen-1"))
     assert(StreamingAnn.readCurrentGen(index.toString) === Some(1L))
   }
 }

@@ -20,6 +20,17 @@ class StreamingAnnSpec extends SparkSuite {
     e.map(r => (r.getLong(0), r.getSeq[Float](1)))
   }
 
+  /** A hand-built index: generation 0 committed with a `kCells`-cell
+    * one-hot model of `dims`-long vectors, as an ingest's first batch
+    * leaves it before writing its leaves.
+    */
+  private def handBuiltGen0(indexDir: String, layout: String, kCells: Int,
+      dims: Int): Unit =
+    StreamingAnn.commitGeneration(indexDir, 0, layout,
+      (0 until kCells).map(c => (c.toLong,
+        Seq.tabulate(dims)(i => if (i == c % dims) 1000L else 0L), 1000000L)),
+      books = None)
+
   test("ivf ingest: frozen first-batch model, every vector indexed once") {
     val spark0 = spark
     import spark0.implicits._
@@ -36,7 +47,7 @@ class StreamingAnnSpec extends SparkSuite {
         q.processAllAvailable()
       }
     } finally q.stop()
-    val idx = spark.read.parquet(s"$root/index")
+    val idx = spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
     assert(idx.count() === rows.length.toLong)
     assert(idx.select("vec_id").distinct().count() === rows.length.toLong)
     // the model is trained on the FIRST batch only (vec_id % 3 == 0)
@@ -63,7 +74,7 @@ class StreamingAnnSpec extends SparkSuite {
     // full-scan reference over the same frozen model
     val queries = rows.filter(_._1 < 5).toSeq.toDF("vec_id", "embedding")
     val res = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 2)
+      queries, k = 3, probes = 2)
     val p = res.queryExecution.executedPlan.toString
     val scanLine = p.linesIterator.find(_.contains("PartitionFilters"))
     assert(scanLine.exists(_.contains("cell")), p.take(2500))
@@ -72,7 +83,7 @@ class StreamingAnnSpec extends SparkSuite {
     val got = res.collect().map(r =>
       (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val probeRef = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 8) // probe ALL cells
+      queries, k = 3, probes = 8) // probe ALL cells
     // with probes = kCells the scan is the whole index; the top-3 of a
     // probe-2 query must be a subset drawn from its 2 best cells —
     // verify probe-2 results appear in the all-cells ranking with
@@ -102,7 +113,8 @@ class StreamingAnnSpec extends SparkSuite {
       input2.addData(rows.filter(_._1 % 3 == 0).toSeq: _*)
       q2.processAllAvailable()
     } finally q2.stop()
-    assert(spark.read.parquet(s"$root/index").collect().toSet === before)
+    assert(spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
+      .collect().toSet === before)
   }
 
   test("recall parity: streaming index queries equal the batch operators bit-for-bit") {
@@ -132,7 +144,7 @@ class StreamingAnnSpec extends SparkSuite {
     try { input.addData(rows.toSeq: _*); q.processAllAvailable() }
     finally q.stop()
     val gotFull = snap(StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 2))
+      queries, k = 3, probes = 2))
     val wantFull = snap(Ann.knnIvfTrained(emb, numQueries = 5, k = 3,
       kCells = 8, iterations = 2, probes = 2))
     assert(gotFull === wantFull)
@@ -145,7 +157,7 @@ class StreamingAnnSpec extends SparkSuite {
     try { inputSq.addData(rows.toSeq: _*); qSq.processAllAvailable() }
     finally qSq.stop()
     val gotSq = snap(StreamingAnn.queryIndexSq(spark, s"$root/index-sq",
-      s"$root/model-sq.txt", queries, k = 3, probes = 2))
+      queries, k = 3, probes = 2))
     val wantSq = snap(Ann.knnIvfSq(emb, numQueries = 5, k = 3,
       kCells = 8, iterations = 2, probes = 2))
     assert(gotSq === wantSq)
@@ -169,10 +181,10 @@ class StreamingAnnSpec extends SparkSuite {
     } finally q.stop()
     val queries = rows.filter(_._1 < 5).toSeq.toDF("vec_id", "embedding")
     def snap() = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 2).collect()
+      queries, k = 3, probes = 2).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val before = snap()
-    val leavesBefore = StreamingAnn.listLeaves(s"$root/index")
+    val leavesBefore = StreamingAnn.listLeaves(StreamingAnn.resolveRoot(s"$root/index"))
     assert(leavesBefore.map(_._2).distinct.size === 5)
     val out = StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2)
     assert(out.nonEmpty)
@@ -207,6 +219,26 @@ class StreamingAnnSpec extends SparkSuite {
     assert(out2.nonEmpty)
     assert(StreamingAnn.readCurrentGen(s"$root/index") === Some(2L))
     assert(snap() === before)
+    // generations are self-contained: after ingest → compaction →
+    // retrain the query names no model, and runs under the serving
+    // generation's own _model — here the batch operator's full-corpus
+    // model at the same geometry, so it equals knnIvfTrained
+    assert(StreamingAnn.retrainIndex(spark, s"$root/index", kCells = 8,
+      iterations = 2) === 3L)
+    val served = StreamingAnn.resolveRoot(s"$root/index")
+    assert(served === s"$root/index/gen-3")
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    assert(StreamingAnn.loadModel(s"$served/_model") === Some(Ann.kmeansCentroids(
+      Ann.quantized(emb).select("vec_id", "v", "norm2"), 8, 2)))
+    assert(snap() === Ann.knnIvfTrained(emb, numQueries = 5, k = 3, kCells = 8,
+      iterations = 2, probes = 2).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet)
+    // every generation dir is gen-N; the pointer is the only other entry
+    val entries = {
+      val ls = java.nio.file.Files.list(java.nio.file.Paths.get(s"$root/index"))
+      try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+    }
+    assert(entries === Set("_current", "gen-1", "gen-2", "gen-3"))
   }
 
   test("effective-batch decode: raw and rebuilt ids") {
@@ -221,7 +253,7 @@ class StreamingAnnSpec extends SparkSuite {
     val spark0 = spark
     import spark0.implicits._
     val root = tmpDir("st-ann-survivor")
-    val dims = 4
+    handBuiltGen0(s"$root/index", "full", kCells = 1, dims = 4)
     // hand-build an index with one vec_id duplicated across leaves
     // with DIFFERENT payloads: batch 0 says v=(1,0,0,0), batch 1
     // re-ingests vec 7 as v=(0,2,0,0) — newest-wins must keep batch 1
@@ -236,7 +268,6 @@ class StreamingAnnSpec extends SparkSuite {
     leaf(0L, Seq((7L, Seq(1000L, 0L, 0L, 0L)), (8L, Seq(0L, 0L, 1000L, 0L))))
     leaf(1L, Seq((7L, Seq(0L, 2000L, 0L, 0L)), (9L, Seq(0L, 0L, 0L, 1000L))))
     leaf(2L, Seq((10L, Seq(500L, 500L, 0L, 0L)))) // newest: not compacted
-    StreamingAnn.stampIndexLayout(s"$root/index", "full", 1, dims)
     val out = StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2)
     assert(out.nonEmpty)
     StreamingAnn.vacuumGenerations(s"$root/index", grace = 0)
@@ -282,7 +313,7 @@ class StreamingAnnSpec extends SparkSuite {
     // the reader plans NOW (resolved root + file listing), executes later
     val queries = rows.filter(_._1 < 5).toSeq.toDF("vec_id", "embedding")
     def freshQ() = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 2)
+      queries, k = 3, probes = 2)
     def toSet(rs: Array[org.apache.spark.sql.Row]) = rs
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val before = toSet(freshQ().collect())
@@ -311,12 +342,12 @@ class StreamingAnnSpec extends SparkSuite {
     // (c) the fresh delivery is a raw leaf 0 of the serving generation,
     // visible to new readers next to every old row
     val served = StreamingAnn.resolveRoot(s"$root/index")
-    assert(served.endsWith("_gen-1"))
+    assert(served.endsWith("/gen-1"))
     assert(StreamingAnn.listLeaves(served).exists(_._2 == 0L))
     assert(spark.read.parquet(served).count()
       === rows.length.toLong + freshRows.length)
     val fq = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", freshRows.take(3).toSeq.toDF("vec_id", "embedding"),
+      freshRows.take(3).toSeq.toDF("vec_id", "embedding"),
       k = 5, probes = 8).collect()
     assert(fq.map(_.getLong(2)).exists(_ >= 50000L),
       "fresh-lineage rows invisible to queries")
@@ -346,7 +377,7 @@ class StreamingAnnSpec extends SparkSuite {
         q.processAllAvailable()
       }
     } finally q.stop()
-    val idx = spark.read.parquet(s"$root/index")
+    val idx = spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
     assert(idx.count() === rows.length.toLong)
     // codes really are bytes on disk (the 4x layout claim), and every
     // code is a valid int8 quantization level
@@ -361,7 +392,7 @@ class StreamingAnnSpec extends SparkSuite {
     // that pair — cell bounding changes candidates, never scores
     val queries = rows.filter(_._1 < 5).toSeq.toDF("vec_id", "embedding")
     val res = StreamingAnn.queryIndexSq(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 2)
+      queries, k = 3, probes = 2)
     val p = res.queryExecution.executedPlan.toString
     assert(p.linesIterator.find(_.contains("PartitionFilters"))
       .exists(_.contains("cell")), p.take(2500))
@@ -369,14 +400,14 @@ class StreamingAnnSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
     assert(got.nonEmpty)
     val allScores = StreamingAnn.queryIndexSq(spark, s"$root/index",
-      s"$root/model.txt", queries, k = Int.MaxValue, probes = 8)
+      queries, k = Int.MaxValue, probes = 8)
       .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(3)).toMap
     got.foreach { case (qid, nid, cos) =>
       assert(allScores((qid, nid)) === cos, s"q=$qid n=$nid")
     }
     // compaction is layout-agnostic: same results, bounded leaves
     def snap() = StreamingAnn.queryIndexSq(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 2).collect()
+      queries, k = 3, probes = 2).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val before = snap()
     val out = StreamingAnn.compactIndex(spark, s"$root/index", minBatches = 2)
@@ -439,17 +470,16 @@ class StreamingAnnSpec extends SparkSuite {
     } finally qy.stop()
     // the 21x claim: leaves carry ONLY the four code columns + keys —
     // no vector payload of any kind
-    val idx = spark.read.parquet(s"$root/index")
+    val idx = spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
     assert(idx.columns.toSet ===
       Set("vec_id", "c0", "c1", "c2", "c3", "cell", "ingest_batch"),
       idx.schema.treeString)
     assert(idx.count() === rows.length.toLong)
-    // stamped pq + rule l2; wrong-flavor queries refused both ways
-    assert(StreamingAnn.readLayout(s"$root/index")
-      .map { case (l, _, _, r) => (l, r) } === Some(("pq", "l2")))
+    // stamped pq; wrong-flavor queries refused
+    assert(StreamingAnn.readLayout(StreamingAnn.resolveRoot(s"$root/index"))
+      .map(_._1) === Some("pq"))
     val exFlavor = intercept[IllegalStateException](
-      StreamingAnn.queryIndex(spark, s"$root/index", s"$root/model.txt",
-        queries, k = 3))
+      StreamingAnn.queryIndex(spark, s"$root/index", queries, k = 3))
     assert(exFlavor.getMessage.contains("queryIndexPq"))
     // retrain REFUSES a codes-only index (residuals can't re-encode
     // without the primary vectors)
@@ -458,11 +488,11 @@ class StreamingAnnSpec extends SparkSuite {
     assert(exRetrain.getMessage.contains("re-ingest"))
 
     def snapAdc() = StreamingAnn.queryIndexPq(spark, s"$root/index",
-      s"$root/model.txt", s"$root/books.txt", queries, k = 3, probes = 2)
+      queries, k = 3, probes = 2)
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     def snapRef() = StreamingAnn.queryIndexPqRefined(spark, s"$root/index",
-      s"$root/model.txt", s"$root/books.txt", queries, emb, k = 3,
+      queries, emb, k = 3,
       refine = 10, probes = 2).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val wantAdc = Ann.knnIvfPq(emb, numQueries = 5, k = 3, kCells = 8,
@@ -475,7 +505,7 @@ class StreamingAnnSpec extends SparkSuite {
     assert(snapRef() === wantRef)
     // the probed-cell scan is partition-pruned on cell, like ST7/ST8
     val plan = StreamingAnn.queryIndexPq(spark, s"$root/index",
-      s"$root/model.txt", s"$root/books.txt", queries, k = 3, probes = 2)
+      queries, k = 3, probes = 2)
       .queryExecution.executedPlan.toString
     assert(plan.linesIterator.find(_.contains("PartitionFilters"))
       .exists(_.contains("cell")), plan.take(2500))
@@ -537,13 +567,13 @@ class StreamingAnnSpec extends SparkSuite {
     val wantF = snap(Ann.knnIvfPqFiltered(emb, numQueries = 5, k = 5,
       pred, probes = 2))
     assert(snap(StreamingAnn.queryIndexPqFiltered(spark, s"$root/index",
-      s"$root/model.txt", s"$root/books.txt", queries, k = 5, pred,
+      queries, k = 5, pred,
       probes = 2)) === wantF)
     // escalated parity at probes = 1 (escalation genuinely fires)
     val wantE = snap(Ann.knnIvfPqFilteredEscalated(emb, numQueries = 5,
       k = 5, pred, probes = 1))
     def gotE() = snap(StreamingAnn.queryIndexPqFilteredEscalated(spark,
-      s"$root/index", s"$root/model.txt", s"$root/books.txt", queries,
+      s"$root/index", queries,
       k = 5, pred, probes = 1))
     assert(gotE() === wantE)
     // forced-dry: a 3-id pool with k = 5 — every query escalates to
@@ -552,7 +582,7 @@ class StreamingAnnSpec extends SparkSuite {
     val ids = Seq(10L, 11L, 12L)
     val predSmall = col("vec_id").isInCollection(ids)
     val dry = StreamingAnn.queryIndexPqFilteredEscalated(spark,
-      s"$root/index", s"$root/model.txt", s"$root/books.txt", queries,
+      s"$root/index", queries,
       k = 5, predSmall, probes = 1).collect()
     val byQ = dry.groupBy(_.getAs[Long]("q_id"))
     (0L until 5L).foreach { qid =>
@@ -590,8 +620,8 @@ class StreamingAnnSpec extends SparkSuite {
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     // recount from the raw leaves
-    val leaves = StreamingAnn.listLeaves(s"$root/index")
-    val idx = spark.read.parquet(s"$root/index")
+    val leaves = StreamingAnn.listLeaves(StreamingAnn.resolveRoot(s"$root/index"))
+    val idx = spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
     val rowsPerCell = idx.groupBy("cell").count().collect()
       .map(r => (r.get(0).toString.toLong, r.getLong(1))).toMap
     assert(stats.keySet === rowsPerCell.keySet)
@@ -638,7 +668,7 @@ class StreamingAnnSpec extends SparkSuite {
     } finally q.stop()
     val queries = rows.filter(_._1 < 5).toSeq.toDF("vec_id", "embedding")
     def fresh() = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 2)
+      queries, k = 3, probes = 2)
     def toSet(rs: Array[org.apache.spark.sql.Row]) = rs
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val before = toSet(fresh().collect())
@@ -665,7 +695,7 @@ class StreamingAnnSpec extends SparkSuite {
     val spark0 = spark
     import spark0.implicits._
     val root = tmpDir("st-ann-grace")
-    val dims = 4
+    handBuiltGen0(s"$root/index", "full", kCells = 1, dims = 4)
     def leaf(batch: Long, vecs: Seq[Long]): Unit =
       vecs.map(v => (v, Seq(v * 1000L, 0L, 0L, 0L)))
         .toDF("vec_id", "v")
@@ -675,10 +705,8 @@ class StreamingAnnSpec extends SparkSuite {
         .write.option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").partitionBy("cell", "ingest_batch")
         .parquet(StreamingAnn.resolveRoot(s"$root/index"))
-    def gen(n: Int) = java.nio.file.Paths.get(s"$root/index/_gen-$n")
-    def flat() = StreamingAnn.listLeaves(s"$root/index")
+    def gen(n: Int) = java.nio.file.Paths.get(s"$root/index/gen-$n")
     leaf(0L, Seq(1L)); leaf(1L, Seq(2L)); leaf(2L, Seq(3L))
-    StreamingAnn.stampIndexLayout(s"$root/index", "full", 1, dims)
     // generation 1, then 2 — each compaction keeps the newest delivery
     assert(StreamingAnn.compactIndex(spark, s"$root/index",
       minBatches = 2).nonEmpty)
@@ -690,14 +718,14 @@ class StreamingAnnSpec extends SparkSuite {
     StreamingAnn.compactIndexImpl(spark, s"$root/index", 2, crashPoint = 2)
     assert(StreamingAnn.readCurrentGen(s"$root/index") === Some(2L))
     assert(java.nio.file.Files.exists(gen(3)))
-    // grace=2 keeps generations 1 and 0 (the flat root); the unflipped
-    // build is always reclaimed
+    // grace=2 keeps generations 1 and 0; the unflipped build is always
+    // reclaimed
     assert(StreamingAnn.vacuumGenerations(s"$root/index", grace = 2) === 1)
     assert(!java.nio.file.Files.exists(gen(3)))
-    assert(java.nio.file.Files.exists(gen(1)) && flat().nonEmpty)
+    assert(java.nio.file.Files.exists(gen(1)) && java.nio.file.Files.exists(gen(0)))
     // grace=1: generation 0 reclaimed, generation 1 kept
     assert(StreamingAnn.vacuumGenerations(s"$root/index", grace = 1) === 1)
-    assert(flat().isEmpty && java.nio.file.Files.exists(gen(1)))
+    assert(!java.nio.file.Files.exists(gen(0)) && java.nio.file.Files.exists(gen(1)))
     // grace=1 again with no new generation: nothing more to reclaim
     assert(StreamingAnn.vacuumGenerations(s"$root/index", grace = 1) === 0)
     // grace=0 clears the rest; the serving generation holds every vec
@@ -707,7 +735,7 @@ class StreamingAnnSpec extends SparkSuite {
       .select("vec_id").distinct().count() === 7L)
   }
 
-  test("layout stamps: wrong-flavor queries refused; legacy dirs demand an explicit stamp") {
+  test("layout stamps: wrong-flavor queries and ingests refused; a dir with no _current holds no index") {
     val spark0 = spark
     import spark0.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -720,82 +748,38 @@ class StreamingAnnSpec extends SparkSuite {
       s"$root/model.txt", s"$root/index", s"$root/ckpt")
     try { input.addData(rows.take(30).toSeq: _*); q.processAllAvailable() }
     finally q.stop()
-    assert(StreamingAnn.readLayout(s"$root/index")
-      .exists { case (l, k, d, r) => l == "full" && k == 8 && d == 64 && r == "cos" })
+    assert(StreamingAnn.readLayout(StreamingAnn.resolveRoot(s"$root/index"))
+      === Some(("full", 8, 64)))
     val queries = rows.filter(_._1 < 3).toSeq.toDF("vec_id", "embedding")
     // wrong flavor: refused with the stamp's own description
     val e1 = intercept[IllegalStateException] {
-      StreamingAnn.queryIndexSq(spark, s"$root/index",
-        s"$root/model.txt", queries, k = 3)
+      StreamingAnn.queryIndexSq(spark, s"$root/index", queries, k = 3)
     }
     assert(e1.getMessage.contains("layout=full"), e1.getMessage)
     assert(e1.getMessage.contains("queryIndex"), e1.getMessage)
-    // a LEGACY dir (leaves, no stamp): queries, compaction, and ingest
-    // all demand the explicit stamp
-    val legacy = s"$root/legacy"
-    rows.take(10).toSeq.toDF("vec_id", "embedding")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => round(x * 1000, 0).cast("long")).as("v"))
-      .withColumn("norm2", graft.functions.VecOps.intDot(col("v"), col("v")))
-      .withColumn("cell", lit(0L)).withColumn("ingest_batch", lit(0L))
-      .write.mode("overwrite").partitionBy("cell", "ingest_batch")
-      .parquet(legacy)
-    val e2 = intercept[IllegalStateException] {
-      StreamingAnn.queryIndex(spark, legacy, s"$root/model.txt", queries, k = 3)
+    // an ingest of another layout, or of vectors of another length,
+    // never appends to the generation
+    for ((tag, ingest, data) <- Seq(
+        ("sq8", StreamingAnn.ivfIngestSq _, rows.take(5).toSeq),
+        ("dims", StreamingAnn.ivfIngest _,
+          rows.take(5).toSeq.map { case (id, e) => (id, e.take(32)) }))) {
+      val input2 = MemoryStream[(Long, Seq[Float])]
+      val q2 = ingest(input2.toDS().toDF("vec_id", "embedding"),
+        s"$root/model.txt", s"$root/index", s"$root/ckpt-$tag", 8, 2, Nil)
+      val e2 = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        try { input2.addData(data: _*); q2.processAllAvailable() }
+        finally q2.stop()
+      }
+      assert(e2.getMessage.contains("refusing to mix"), s"$tag: ${e2.getMessage}")
     }
-    assert(e2.getMessage.contains("stampIndexLayout"), e2.getMessage)
+    // a dir with no _current holds no index, whatever else sits in it:
+    // the query is refused with a message that names the dir
+    val bare = s"$root/bare"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(bare, "gen-0"))
     val e3 = intercept[IllegalStateException] {
-      StreamingAnn.compactIndex(spark, legacy, minBatches = 1)
+      StreamingAnn.queryIndex(spark, bare, queries, k = 3)
     }
-    assert(e3.getMessage.contains("stampIndexLayout"), e3.getMessage)
-    val input2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = StreamingAnn.ivfIngest(
-      input2.toDS().toDF("vec_id", "embedding"),
-      s"$root/model.txt", legacy, s"$root/ckpt-legacy")
-    val e4 = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      try { input2.addData(rows.take(5).toSeq: _*); q2.processAllAvailable() }
-      finally q2.stop()
-    }
-    assert(e4.getMessage.contains("stampIndexLayout"), e4.getMessage)
-    // the explicit stamp rehabilitates the dir for its real layout
-    StreamingAnn.stampIndexLayout(legacy, "full", 8, 64)
-    assert(StreamingAnn.queryIndex(spark, legacy, s"$root/model.txt",
-      queries, k = 3, probes = 8).collect().nonEmpty)
-    // restamping with a DIFFERENT layout is refused
-    val e5 = intercept[IllegalArgumentException] {
-      StreamingAnn.stampIndexLayout(legacy, "sq8", 8, 64)
-    }
-    assert(e5.getMessage.contains("already stamped"), e5.getMessage)
-    // a PRE-RULE stamp ({layout,kcells,dims} only, written before the
-    // assignment-rule field): queries and compaction refuse — the cells
-    // may be L2-assigned, and cosine-ranked probes over them would
-    // silently degrade recall
-    val preRule = s"$root/pre-rule"
-    rows.take(10).toSeq.toDF("vec_id", "embedding")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => round(x * 1000, 0).cast("long")).as("v"))
-      .withColumn("norm2", graft.functions.VecOps.intDot(col("v"), col("v")))
-      .withColumn("cell", lit(0L)).withColumn("ingest_batch", lit(0L))
-      .write.mode("overwrite").partitionBy("cell", "ingest_batch")
-      .parquet(preRule)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(preRule, "_layout"),
-      "layout=full\nkcells=8\ndims=64")
-    val e6 = intercept[IllegalStateException] {
-      StreamingAnn.queryIndex(spark, preRule, s"$root/model.txt", queries, k = 3)
-    }
-    assert(e6.getMessage.contains("rule"), e6.getMessage)
-    assert(e6.getMessage.contains("re-ingested"), e6.getMessage)
-    val e7 = intercept[IllegalStateException] {
-      StreamingAnn.compactIndex(spark, preRule, minBatches = 1)
-    }
-    assert(e7.getMessage.contains("rule"), e7.getMessage)
-    // the explicit restamp (same triple) is the operator's verified
-    // upgrade path: it asserts rule=cos and the index serves again
-    StreamingAnn.stampIndexLayout(preRule, "full", 8, 64)
-    assert(StreamingAnn.readLayout(preRule).exists(_._4 == "cos"))
-    assert(StreamingAnn.queryIndex(spark, preRule, s"$root/model.txt",
-      queries, k = 3, probes = 8).collect().nonEmpty)
+    assert(e3.getMessage.contains(bare), e3.getMessage)
   }
 
   test("compactIfNeeded: indexStats' leaf signal drives the compaction cadence") {
@@ -831,7 +815,7 @@ class StreamingAnnSpec extends SparkSuite {
     // results intact through the whole maintenance cadence
     val queries = rows.filter(_._1 < 5).toSeq.toDF("vec_id", "embedding")
     val res = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 8).collect()
+      queries, k = 3, probes = 8).collect()
     assert(res.nonEmpty)
     assert(spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
       .select("vec_id").distinct().count() === rows.length.toLong)
@@ -855,7 +839,7 @@ class StreamingAnnSpec extends SparkSuite {
     } finally q.stop()
     val queries = rows.filter(_._1 < 5).toSeq.toDF("vec_id", "embedding")
     def snap() = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, probes = 2).collect()
+      queries, k = 3, probes = 2).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val before = snap()
     assert(StreamingAnn.compactIndex(spark, s"$root/index",
@@ -879,7 +863,7 @@ class StreamingAnnSpec extends SparkSuite {
     // results, and no neighbor ever appears twice however deep k goes
     assert(snap() === before)
     val deep = StreamingAnn.queryIndex(spark, s"$root/index",
-      s"$root/model.txt", queries, k = Int.MaxValue, probes = 8).collect()
+      queries, k = Int.MaxValue, probes = 8).collect()
       .map(r => (r.getLong(0), r.getLong(2)))
     assert(deep.length === deep.distinct.length,
       "a duplicated candidate surfaced twice in one query's ranking")
@@ -918,11 +902,11 @@ class StreamingAnnSpec extends SparkSuite {
     // decode to the max batch that delivered it
     def payload(vec: Long, b: Long): Seq[Long] =
       Seq(vec * 1000L, b * 1000L, 0L, 0L)
-    // the serving generation root — compaction and retrain ops flip it
+    // hand-built generation 0 (a fixed 2-cell "model"); compaction and
+    // retrain ops flip the serving generation root
+    handBuiltGen0(s"$root/index", layout, kCells = 2, dims = dims)
     def idxRoot(): String = StreamingAnn.resolveRoot(s"$root/index")
-    def genOf(r: String): Long =
-      if (r == s"$root/index") 0L else r.split("_gen-").last.toLong
-    var stamped = false
+    def genOf(r: String): Long = r.stripPrefix(s"$root/index/gen-").toLong
     // the pq mode writes the CODE leaf schema (c0..c3 + a `pl`
     // attribute column): the machinery under test is schema-agnostic,
     // and `pl` — which the real [[StreamingAnn.retrainIndexPq]] carries
@@ -944,11 +928,6 @@ class StreamingAnnSpec extends SparkSuite {
         .write.option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").partitionBy("cell", "ingest_batch")
         .parquet(idxRoot()) // the resolved serving generation
-      // hand-built index: explicit stamp (compaction refuses unstamped)
-      if (!stamped) {
-        StreamingAnn.stampIndexLayout(s"$root/index", layout, 2, dims)
-        stamped = true
-      }
     }
     // the reader's view, exactly as the query paths build it: every
     // leaf of the serving generation, then the newest-wins election the
@@ -1005,7 +984,7 @@ class StreamingAnnSpec extends SparkSuite {
     val batchContents = scala.collection.mutable.Map.empty[Long, Seq[Long]]
     var nextBatch = 0L
     def expect(): Unit = {
-      if (perLeaf.isEmpty) return // nothing ingested yet — no dir
+      if (perLeaf.isEmpty) return // nothing ingested yet — no leaves
       assert(StreamingAnn.listLeaves(idxRoot()).map(_._2).toSet
         === perLeaf.keySet, s"seed $seed")
       // the keySet equality is election-independent: no vec is ever
@@ -1040,7 +1019,7 @@ class StreamingAnnSpec extends SparkSuite {
       else {
         val s = java.nio.file.Files.list(dir)
         try s.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("_gen-")).map(_.stripPrefix("_gen-").toLong).toSeq
+          .filter(_.startsWith("gen-")).map(_.stripPrefix("gen-").toLong).toSeq
         finally s.close()
       }
     }
@@ -1185,7 +1164,7 @@ class StreamingAnnSpec extends SparkSuite {
       assert(StreamingAnn.loadModel(s"$root/model.txt").isEmpty, layout)
       assert(!exists(s"$root/index"), layout)
       // no codebooks either, durable or generation-local
-      assert(!exists(s"$root/books.txt") && !exists(s"$root/index/_pqbooks"),
+      assert(!exists(s"$root/books.txt") && !exists(s"$root/index/gen-0/_pqbooks"),
         layout)
       // the first NON-empty batch (a fresh lineage) trains and persists
       val input2 = MemoryStream[(Long, Seq[Float])]
@@ -1198,8 +1177,8 @@ class StreamingAnnSpec extends SparkSuite {
       assert(StreamingAnn.loadModel(s"$root/model.txt").nonEmpty, layout)
       assert(StreamingAnn.loadBooks(s"$root/books.txt").nonEmpty ===
         (layout == "pq"), layout)
-      assert(StreamingAnn.readLayout(s"$root/index").map(_._1) ===
-        Some(layout))
+      assert(StreamingAnn.readLayout(StreamingAnn.resolveRoot(s"$root/index"))
+        .map(_._1) === Some(layout))
     }
     val root = tmpDir("st-ann-empty")
     // torn/garbage artifacts read as None, never crash the stream
@@ -1234,14 +1213,15 @@ class StreamingAnnSpec extends SparkSuite {
     finally q.stop()
 
     // the leaf schema carries the attribute
-    assert(spark.read.parquet(s"$root/index").columns.contains("label"))
+    assert(spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index"))
+      .columns.contains("label"))
 
     // filtered on-disk query == batch filtered operator, bit-for-bit,
     // at both selectivity shapes
     for ((pred, probes) <- Seq(
         (col("label") === 7, 2), (col("label") < 5, 1))) {
       val got = StreamingAnn.queryIndexFiltered(spark, s"$root/index",
-        s"$root/model.txt", queries, k = 3, pred, probes = probes)
+        queries, k = 3, pred, probes = probes)
       val want = Ann.knnIvfTrainedFiltered(emb, numQueries = 5, k = 3,
         pred, kCells = 8, iterations = 2, probes = probes)
       assert(snap(got) === snap(want), s"pred=$pred probes=$probes")
@@ -1251,7 +1231,7 @@ class StreamingAnnSpec extends SparkSuite {
     // NEXT TO the cell PartitionFilters — filter-then-score, never a
     // post-filter of the finished top-k
     val plan = StreamingAnn.queryIndexFiltered(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 3, col("label") === 7, probes = 2)
+      queries, k = 3, col("label") === 7, probes = 2)
       .queryExecution.executedPlan.toString
     val scanLine = plan.linesIterator.find(_.contains("PushedFilters"))
     assert(scanLine.exists(_.contains("label")), plan.take(2500))
@@ -1274,18 +1254,18 @@ class StreamingAnnSpec extends SparkSuite {
       }
     } finally q2.stop()
     val un0 = snap(StreamingAnn.queryIndex(spark, s"$root/index2",
-      s"$root/model2.txt", queries, k = 3, probes = 2))
+      queries, k = 3, probes = 2))
     val f0 = snap(StreamingAnn.queryIndexFiltered(spark, s"$root/index2",
-      s"$root/model2.txt", queries, k = 3, col("label") === 7, probes = 2))
+      queries, k = 3, col("label") === 7, probes = 2))
     assert(StreamingAnn.compactIndex(spark, s"$root/index2",
       minBatches = 2).nonEmpty)
     StreamingAnn.vacuumGenerations(s"$root/index2", grace = 0)
     assert(spark.read.parquet(StreamingAnn.resolveRoot(s"$root/index2"))
       .columns.contains("label"))
     assert(snap(StreamingAnn.queryIndex(spark, s"$root/index2",
-      s"$root/model2.txt", queries, k = 3, probes = 2)) === un0)
+      queries, k = 3, probes = 2)) === un0)
     assert(snap(StreamingAnn.queryIndexFiltered(spark, s"$root/index2",
-      s"$root/model2.txt", queries, k = 3, col("label") === 7,
+      queries, k = 3, col("label") === 7,
       probes = 2)) === f0)
   }
 
@@ -1322,9 +1302,9 @@ class StreamingAnnSpec extends SparkSuite {
     ingest("only7", rows.filter(_._3 == 7).toSeq, attrs = Nil) // reuses it
 
     val got = snap(StreamingAnn.queryIndexSqFiltered(spark, s"$root/full",
-      s"$root/model.txt", queries, k = 3, col("label") === 7, probes = 2))
+      queries, k = 3, col("label") === 7, probes = 2))
     val want = snap(StreamingAnn.queryIndexSq(spark, s"$root/only7",
-      s"$root/model.txt", queries, k = 3, probes = 2))
+      queries, k = 3, probes = 2))
     assert(got === want)
     assert(got.nonEmpty)
   }
@@ -1359,7 +1339,7 @@ class StreamingAnnSpec extends SparkSuite {
     val pred = col("label") === 7
     for (probes <- Seq(1, 2)) {
       val got = StreamingAnn.queryIndexFilteredEscalated(spark,
-        s"$root/index", s"$root/model.txt", queries, k = 8, pred,
+        s"$root/index", queries, k = 8, pred,
         probes = probes)
       val want = Ann.knnIvfTrainedFilteredEscalated(emb, numQueries = 5,
         k = 8, pred, kCells = 8, iterations = 2, probes = probes)
@@ -1374,7 +1354,7 @@ class StreamingAnnSpec extends SparkSuite {
       .map(_._1).toSet
     assert(dryPool.nonEmpty && dryPool.size < 10)
     val dry = StreamingAnn.queryIndexFilteredEscalated(spark,
-      s"$root/index", s"$root/model.txt", queries, k = 10, dryPred,
+      s"$root/index", queries, k = 10, dryPred,
       probes = 1).collect()
     val perQ = dry.groupBy(_.getLong(0)).view.mapValues(_.length).toMap
     for (qId <- 0L until 5L) {
@@ -1385,14 +1365,14 @@ class StreamingAnnSpec extends SparkSuite {
       assert(ids === (dryPool - qId), s"q=$qId")
     }
     val fixedDry = StreamingAnn.queryIndexFiltered(spark, s"$root/index",
-      s"$root/model.txt", queries, k = 10, dryPred, probes = 1)
+      queries, k = 10, dryPred, probes = 1)
     assert(fixedDry.count() < dry.length.toLong)
 
     // the predicate stays a pushed data filter on the SCORED pass next
     // to the cell PartitionFilters (the count pass is audited by the
     // parity + dry results above — same helper, same scan shape)
     val plan = StreamingAnn.queryIndexFilteredEscalated(spark,
-      s"$root/index", s"$root/model.txt", queries, k = 8, pred,
+      s"$root/index", queries, k = 8, pred,
       probes = 1).queryExecution.executedPlan.toString
     assert(plan.linesIterator.exists(l =>
       l.contains("PushedFilters") && l.contains("label")), plan.take(2500))
@@ -1416,13 +1396,13 @@ class StreamingAnnSpec extends SparkSuite {
       }
     } finally q2.stop()
     val e0 = snap(StreamingAnn.queryIndexFilteredEscalated(spark,
-      s"$root/index2", s"$root/model2.txt", queries, k = 8, pred,
+      s"$root/index2", queries, k = 8, pred,
       probes = 1))
     assert(StreamingAnn.compactIndex(spark, s"$root/index2",
       minBatches = 2).nonEmpty)
     StreamingAnn.vacuumGenerations(s"$root/index2", grace = 0)
     assert(snap(StreamingAnn.queryIndexFilteredEscalated(spark,
-      s"$root/index2", s"$root/model2.txt", queries, k = 8, pred,
+      s"$root/index2", queries, k = 8, pred,
       probes = 1)) === e0)
   }
 
@@ -1459,10 +1439,10 @@ class StreamingAnnSpec extends SparkSuite {
 
     val pred = col("label") === 7
     val got = snap(StreamingAnn.queryIndexSqFilteredEscalated(spark,
-      s"$root/full", s"$root/model.txt", queries, k = 8, pred,
+      s"$root/full", queries, k = 8, pred,
       probes = 1))
     val want = snap(StreamingAnn.queryIndexSqFilteredEscalated(spark,
-      s"$root/only7", s"$root/model.txt", queries, k = 8, pred,
+      s"$root/only7", queries, k = 8, pred,
       probes = 1))
     assert(got === want)
     assert(got.nonEmpty)
@@ -1473,7 +1453,7 @@ class StreamingAnnSpec extends SparkSuite {
     val dryPool = rows.filter(t => t._3 == 7 && t._1 % 7 == 0)
       .map(_._1).toSet
     val dry = StreamingAnn.queryIndexSqFilteredEscalated(spark,
-      s"$root/full", s"$root/model.txt", queries, k = 10, dryPred,
+      s"$root/full", queries, k = 10, dryPred,
       probes = 1).collect()
     for (qId <- 0L until 5L) {
       val ids = dry.filter(_.getLong(0) == qId).map(_.getLong(2)).toSet
@@ -1490,6 +1470,13 @@ class StreamingAnnSpec extends SparkSuite {
     // bare word)
     Seq("_tombstones", "\"_compaction\"", "graft-reuse-map", "EffScale",
       "closedBySize").foreach { needle =>
+      assert(SourceScan.occurrences(needle) === 0, needle)
+    }
+    // every generation is a self-contained gen-N dir: no flat generation
+    // 0 or hidden `_gen-N` roots, no caller model or codebook paths on
+    // the query side, no legacy stamp formats or migration call
+    Seq("_gen-", "FlatFiles", "modelFor(", "booksFor(", "legacyLayoutMsg",
+      "ruleMismatchMsg", "stampIndexLayout", "rule=").foreach { needle =>
       assert(SourceScan.occurrences(needle) === 0, needle)
     }
     // and one cutover: the `_current` pointer is written at one site
