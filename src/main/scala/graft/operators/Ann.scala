@@ -298,11 +298,11 @@ object Ann {
 
   /** THE single statement of the int8 code rule — append (maxabs, c,
     * n2q) to any frame with a milli-quantized `v`. Every consumer
-    * (batch int8 ANN, IVF-SQ8, the SQ8 streaming index) derives its
-    * codes from this one expression; the driver-side query coder in
-    * [[graft.streaming.StreamingAnn.queryIndexSq]] mirrors it in
-    * Scala (HALF_UP), and index/query agreement rests on the two
-    * staying bit-identical.
+    * (batch int8 ANN, IVF-SQ8, and both sides of the `sq8` streaming
+    * index: its leaf codes and the query codes
+    * [[graft.streaming.StreamingAnn.queryIndex]] collects) derives its
+    * codes from this one expression, so index and query codes agree by
+    * construction.
     */
   private[graft] def withInt8Cols(df: DataFrame): DataFrame = df
     .withColumn("maxabs", array_max(transform(col("v"), x => abs(x))))
@@ -441,7 +441,8 @@ object Ann {
     * cells ranked by [[rankedCells]], the probe tier of [[probeTier]],
     * and candidates scored by [[guardedCosine]], so a zero-norm query
     * or candidate scores −2.0 exactly as the on-disk
-    * [[graft.streaming.StreamingAnn.queryIndex]] scores it.
+    * [[graft.streaming.StreamingAnn.queryIndex]] scores it on a `full`
+    * generation.
     */
   private def knnIvfTrainedImpl(embeddings: DataFrame, numQueries: Int,
       k: Int, predicate: Option[Column], kCells: Int, iterations: Int,
@@ -1008,7 +1009,8 @@ object Ann {
 
   /** Filtered IVFADC with PROBE ESCALATION — the same under-return fix
     * [[knnIvfTrainedFilteredEscalated]] gives the full-precision layout
-    * (and StreamingAnn gives both on-disk layouts), completing the
+    * (and StreamingAnn's `escalate` query option gives every on-disk
+    * layout), completing the
     * escalation discipline across the filtered family: a selective
     * filter can leave fewer than k matching code rows inside the base
     * probe tier, and a fixed budget then silently under-returns. Pass 1

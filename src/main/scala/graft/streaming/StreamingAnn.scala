@@ -39,6 +39,12 @@ import graft.sources.Durable
   *    assignment under the frozen model ⇒ a replayed batch rewrites
   *    its partitions bit-identically (same discipline as
   *    [[StreamingCuration.dedupIngest]]).
+  *  - **One verb per operation**: the ingest picks one of three
+  *    on-disk layouts (`full` milli vectors, `sq8` int8 codes, `pq`
+  *    residual product codes — a [[Layout]]) and every generation is
+  *    stamped with it; [[queryIndex]], [[retrainIndex]] and the
+  *    maintenance passes read the stamp, so no caller names a layout
+  *    again. Each layout's rules are written once, in [[Layouts]].
   */
 object StreamingAnn {
 
@@ -93,32 +99,123 @@ object StreamingAnn {
       c
     }
 
+  /** The on-disk layout an ingest writes, stamped into every generation:
+    *  - [[Full]] (the default) stores the milli-quantized vectors
+    *    (`v`, `norm2`) — the streaming form of [[Ann.knnIvfTrained]];
+    *  - [[Sq8]] stores int8 codes (`cb`: one byte per component, 4×
+    *    smaller, plus the code self-dot `n2q`) — the streaming form of
+    *    [[Ann.knnIvfSq]]. Queries score by quantized cosine; the recall
+    *    cost is measured sub-margin (BASELINE §ANN quality), and with
+    *    no full-precision vectors in the index there is no rerank to
+    *    buy losses back — use `Full` when the margins demand one;
+    *  - [[Pq]] stores only the four 12-bit residual ADC codes (~21×,
+    *    no vector payload at all) — IVFADC at rest, the streaming form
+    *    of [[Ann.knnIvfPq]]. Its product codebooks train-or-load at
+    *    `booksPath` with the first batch, as the coarse model does at
+    *    the ingest's `modelPath`.
+    */
+  sealed abstract class Layout(val name: String)
+  case object Full extends Layout("full")
+  case object Sq8 extends Layout("sq8")
+  final case class Pq(booksPath: String, pqK: Int = Ann.PqK) extends Layout("pq")
+
+  /** A [[queryIndex]] refine stage over a `pq` generation: the code
+    * index ranks a `k·factor` shortlist, and the shortlist's
+    * full-precision vectors from the PRIMARY store `vectors`
+    * (vec_id, embedding) rerank it to k by exact cosine.
+    */
+  final case class Refine(vectors: DataFrame, factor: Int = 10)
+
+  /** A quantized query row: its milli vector and self-dot, and its int8
+    * codes and code self-dot under THE int8 rule ([[Ann.withInt8Cols]]).
+    */
+  private case class QueryRow(id: Long, v: Seq[Long], norm2: Long,
+      c: Seq[Long], n2q: Long)
+
+  /** One on-disk layout's rules, written once:
+    *  - `payload`: the leaf columns written next to `vec_id`, the
+    *    ingest's `attrs` and the `cell` / `ingest_batch` partition keys;
+    *  - `encode`: (generation root, quantized batch with its attrs, the
+    *    generation's frozen model, attrs) → rows with `cell` and the
+    *    payload;
+    *  - `probing`: the query side — each query's cells ranked against
+    *    the model, its probe rows and the candidate score ([[Probing]]);
+    *  - `inPlace`: the training view an in-place retrain runs Lloyd's
+    *    over (`v`, `norm2` in the layout's own space), or None for a
+    *    layout whose codes are a projection of the primary store: it
+    *    retrains by re-encoding from `primary`, and only its shortlist
+    *    takes a [[Refine]].
+    */
+  private case class Rules(payload: Seq[String],
+      encode: (String, DataFrame, Seq[(Long, Seq[Long], Long)], Seq[String]) => DataFrame,
+      probing: (SparkSession, String, Seq[(Long, Seq[Long], Long)], Seq[QueryRow]) => Probing,
+      inPlace: Option[DataFrame => DataFrame])
+
+  /** Every layout's [[Rules]], keyed by the stamp name. Cells always
+    * come from THE shared assignment rule of the batch twin
+    * ([[Ann.cellAssign]]'s max guarded cosine for `full`/`sq8`,
+    * [[Ann.kmeansAssign]]'s squared-L2 argmin under [[Ann.pqResiduals]]
+    * for `pq`), so the on-disk index partitions exactly as the batch
+    * operator assigns (parity spec-pinned). The `sq8` codes come from
+    * THE int8 rule ([[Ann.withInt8Cols]]), narrowed to bytes, and it
+    * retrains in CODE space (cosine's per-vector scale invariance makes
+    * code-space directions rank like milli-space ones, the same
+    * argument as its query scoring).
+    */
+  private val Layouts: Map[String, Rules] = Map(
+    "full" -> Rules(Seq("v", "norm2"),
+      (_, qb, cent, _) => Ann.cellAssign(qb, cent),
+      (spark, _, cent, qs) => cosProbing(spark, cent, qs, q => (q.v, q.norm2),
+        "cos", Ann.guardedCosine(col("qv"), col("v"), col("qn2"), col("norm2"))),
+      inPlace = Some(identity)),
+    "sq8" -> Rules(Seq("cb", "n2q"),
+      (_, qb, cent, _) => Ann.withInt8Cols(Ann.cellAssign(qb, cent))
+        .withColumn("cb", transform(col("c"), _.cast("byte"))),
+      (spark, _, cent, qs) => cosProbing(spark, cent, qs, q => (q.c, q.n2q),
+        "qcos", Ann.guardedCosine(col("qv"), transform(col("cb"), _.cast("long")),
+          col("qn2"), col("n2q"))),
+      inPlace = Some(_.withColumn("v", transform(col("cb"), _.cast("long")))
+        .withColumn("norm2", col("n2q")))),
+    "pq" -> Rules(Seq("c0", "c1", "c2", "c3"),
+      (root, qb, cent, attrs) =>
+        Ann.pqEncodedFromQ(Ann.pqResiduals(qb, cent, attrs), booksOf(root)),
+      pqProbing, inPlace = None))
+
   /** Driver-side probe ranking of the cosine layouts (`full`, `sq8`)
     * — EXACTLY the batch query-side rule ([[Ann.knnIvfTrained]] /
     * [[Ann.knnIvfSq]] rank cells by guarded cosine DESC, ties on the
     * smaller cell id; the guard scores a zero-norm query/centroid pair
-    * LAST): every model cell per quantized query (q_id, qv, qn2), best
-    * first, so the index probes the same cells the batch operators
-    * probe — the recall parity contract.
+    * LAST): every model cell per quantized query, best first, so the
+    * index probes the same cells the batch operators probe — the
+    * recall parity contract. The probe rows carry the query in the
+    * layout's own space (`qv`: milli vector or int8 codes, `qn2` its
+    * self-dot), scored by `scoreExpr` — the per-vector code scales
+    * cancel under cosine's scale invariance.
     */
-  private def cosRanked(cent: Seq[(Long, Seq[Long], Long)],
-      qRows: Seq[(Long, Seq[Long], Long)]): Seq[(Long, Seq[Long])] =
-    qRows.map { case (qId, qv, qn2) =>
-      qId -> cent.map { case (cId, cv, cn2) =>
-        val score =
-          if (qn2 == 0L || cn2 == 0L) 2.0
+  private def cosProbing(spark: SparkSession, cent: Seq[(Long, Seq[Long], Long)],
+      qs: Seq[QueryRow], space: QueryRow => (Seq[Long], Long), score: String,
+      scoreExpr: Column): Probing = {
+    import spark.implicits._
+    val ranked = qs.map { q =>
+      q.id -> cent.map { case (cId, cv, cn2) =>
+        val s =
+          if (q.norm2 == 0L || cn2 == 0L) 2.0
           else {
-            val dot = qv.zip(cv).map { case (a, b) => a * b }.sum
+            val dot = q.v.zip(cv).map { case (a, b) => a * b }.sum
             // same op order as Ann.cosine(cv, v, cn2, norm2), negated —
             // identical IEEE doubles, so the ranking can never diverge
             -1.0 * (dot.toDouble /
-              (math.sqrt(cn2.toDouble) * math.sqrt(qn2.toDouble)))
+              (math.sqrt(cn2.toDouble) * math.sqrt(q.norm2.toDouble)))
           }
-        (score, cId)
+        (s, cId)
       }.sorted.map(_._2)
     }
+    val byId = qs.map(q => q.id -> space(q)).toMap
+    Probing(ranked, _.map { case (qId, c) => (qId, c, byId(qId)._1, byId(qId)._2) }
+      .toDF("q_id", "qcell", "qv", "qn2"), score, scoreExpr)
+  }
 
-  /** Escalation count pass of [[queryIndexSpine]], the same for every
+  /** Escalation count pass of [[queryIndex]], the same for every
     * layout (it never touches the payload — only `vec_id`, `cell`, and the
     * predicate's attribute columns): per query, how many DISTINCT
     * matching candidates (self excluded) live inside the base-tier
@@ -171,8 +268,8 @@ object StreamingAnn {
     * effective batch, raw beating rebuilt on a tie (the raw id is the
     * larger) — with the `ingest_batch` bookkeeping dropped. Per
     * `vec_id` it is the survivor rule of [[compactIndex]] and the
-    * retrains; per (`q_id`, `vec_id`) the read-time election of
-    * [[queryIndexSpine]] over the joined candidate rows
+    * in-place retrain; per (`q_id`, `vec_id`) the read-time election of
+    * [[queryIndex]] over the joined candidate rows
     * (request-scale: queries × probed-cell rows, never the corpus-side
     * scan). A vec_id can sit in several leaves at once — a replay (or
     * a fresh-lineage re-ingest) re-materializes a leaf whose rows a
@@ -200,31 +297,17 @@ object StreamingAnn {
   }
 
   /** Start the index ingest: `emb` is a streaming frame with at least
-    * (vec_id: long, embedding: array<float>). The first non-empty batch
-    * trains and persists the model at `modelPath` (skipped if one
-    * already exists — a pre-trained model is honored) and starts
-    * generation 0 of the index at `indexDir` with it; every batch
-    * assigns against the serving generation's frozen model and appends
-    * to its cell-partitioned leaves.
-    *
-    * Contract: like the curation ingests, `indexDir` is owned by one
-    * checkpoint lineage (batch ids key the idempotent partitions);
-    * the model artifact is durable across lineages.
-    */
-  def ivfIngest(emb: DataFrame, modelPath: String, indexDir: String,
-      checkpointDir: String, kCells: Int = 8,
-      iterations: Int = 2, attrs: Seq[String] = Nil): StreamingQuery =
-    // serving cells use THE shared rule (Ann.cellAssign: max guarded
-    // cosine), so the on-disk index partitions exactly as the batch
-    // knnIvfTrained assigns (parity spec-pinned)
-    ingestSpine(emb, modelPath, indexDir, checkpointDir, kCells, iterations,
-      attrs, "full") { (_, qb, cent) => Ann.cellAssign(qb, cent) }
-
-  /** The one on-disk ingest loop behind [[ivfIngest]], [[ivfIngestSq]]
-    * and [[ivfIngestPq]]; only `encode` (serving root, quantized batch
-    * and its frozen model → rows with `cell` and the layout's payload
-    * columns) and `books` (the codebooks a new index starts with, pq
-    * only) differ. Per batch:
+    * (vec_id: long, embedding: array<float>) plus the `attrs` columns,
+    * which ride the leaves as plain data columns for filtered search
+    * (training stays on the bare (vec_id, v, norm2) projection). The
+    * first non-empty batch trains and persists the model at `modelPath`
+    * (skipped if one already exists — a pre-trained model is honored),
+    * and for [[Pq]] the codebooks over its coarse residuals at
+    * `booksPath` (same rule), and starts generation 0 of the index at
+    * `indexDir` with them; every batch encodes under the serving
+    * generation's frozen artifacts by the `layout`'s rules
+    * ([[Layouts]]) and appends to its cell-partitioned leaves. Per
+    * batch:
     *  - skip an EMPTY batch entirely — a zero-row training set would
     *    durably persist a degenerate model that poisons every later
     *    batch, and there are no partitions to own;
@@ -240,15 +323,14 @@ object StreamingAnn {
     *    under the raw batch id (a replay rewrites its own leaf; a leaf
     *    a cutover already folded into a rebuilt leaf lives on only in
     *    the old generation, which this write never touches).
-    * `attrs` ride the leaves as plain data columns for filtered search;
-    * training stays on the bare (vec_id, v, norm2) projection.
+    *
+    * Contract: like the curation ingests, `indexDir` is owned by one
+    * checkpoint lineage (batch ids key the idempotent partitions);
+    * the model and codebook artifacts are durable across lineages.
     */
-  private def ingestSpine(emb: DataFrame, modelPath: String, indexDir: String,
-      checkpointDir: String, kCells: Int, iterations: Int, attrs: Seq[String],
-      layout: String, books: (DataFrame, Seq[(Long, Seq[Long], Long)]) =>
-        Option[Seq[Seq[(Long, Seq[Long], Long)]]] = (_, _) => None)(
-      encode: (String, DataFrame, Seq[(Long, Seq[Long], Long)]) => DataFrame
-  ): StreamingQuery =
+  def ivfIngest(emb: DataFrame, modelPath: String, indexDir: String,
+      checkpointDir: String, kCells: Int = 8, iterations: Int = 2,
+      attrs: Seq[String] = Nil, layout: Layout = Full): StreamingQuery =
     emb.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -258,11 +340,13 @@ object StreamingAnn {
             val cent = trainOrLoad(modelPath, qb.select("vec_id", "v", "norm2"),
               kCells, iterations)
             deleteDir(java.nio.file.Paths.get(genDir(indexDir, 0))) // a crashed start
-            commitGeneration(indexDir, 0, layout, cent, books(qb, cent))
+            commitGeneration(indexDir, 0, layout.name, cent,
+              startBooks(layout, qb, cent, iterations))
             0L
           })
-          ensureLayout(root, layout, first.getInt(0))
-          encode(root, qb, modelOf(root)).select(leafColumns(layout, attrs): _*)
+          ensureLayout(root, layout.name, first.getInt(0))
+          Layouts(layout.name).encode(root, qb, modelOf(root), attrs)
+            .select(leafColumns(layout.name, attrs): _*)
             .withColumn("ingest_batch", lit(batchId))
             .write
             .option("partitionOverwriteMode", "dynamic")
@@ -273,95 +357,24 @@ object StreamingAnn {
       }
       .start()
 
-  /** ST8 — the SQ8-coded streaming index (the streaming form of the
-    * batch IVF-SQ8 operator, [[Ann.knnIvfSq]]): identical train-once /
-    * frozen-model / idempotent-partition contract as [[ivfIngest]],
-    * but each cell STORES int8 codes (`cb`: array<tinyint>, one byte
-    * per component in parquet — 4× smaller index than the
-    * full-precision layout) plus the integer code self-dot. Queries
-    * score by scale-free quantized cosine over the codes; the recall
-    * cost is measured sub-margin (int8 noise ≪ the corpus' rank
-    * margins — 98–100% at full scan, AT the probe ceiling under IVF,
-    * BASELINE §ANN quality), which is exactly why this layout ships
-    * where the PQ family's margins can't. The tradeoff is explicit:
-    * no full-precision vectors live in the index, so there is no
-    * rerank stage to buy back losses — use [[ivfIngest]] when the
-    * corpus' margins demand one.
-    *
-    * Training still runs on the full-precision first batch (the coarse
-    * quantizer sees milli-quantized vectors, same as batch IVF-SQ8 —
-    * assignment happens before compression).
+  /** The codebooks a new [[Pq]] index starts with: loaded from its
+    * `booksPath`, or trained over the first batch's coarse residuals
+    * under `cent` and persisted there; None for the other layouts.
     */
-  def ivfIngestSq(emb: DataFrame, modelPath: String, indexDir: String,
-      checkpointDir: String, kCells: Int = 8,
-      iterations: Int = 2, attrs: Seq[String] = Nil): StreamingQuery =
-    // codes from THE int8 rule (Ann.withInt8Cols), narrowed to bytes
-    // for the 4× on-disk layout; cells from THE shared serving rule
-    ingestSpine(emb, modelPath, indexDir, checkpointDir, kCells, iterations,
-        attrs, "sq8") { (_, qb, cent) =>
-      Ann.withInt8Cols(Ann.cellAssign(qb, cent))
-        .withColumn("cb", transform(col("c"), _.cast("byte")))
-    }
-
-  /** Top-k quantized-cosine query over an [[ivfIngestSq]] index: same
-    * driver-side cell ranking (full-precision query vs the frozen
-    * model) and same probed-cell PartitionFilters as [[queryIndex]],
-    * but candidates are scored by exact integer code dots over the
-    * stored int8 codes — the query is int8-coded with the same
-    * per-vector max-abs rule, so cosine's scale invariance makes the
-    * per-vector scales cancel. Never destructive.
-    */
-  def queryIndexSq(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, probes: Int = 1): DataFrame =
-    queryIndexSqImpl(spark, indexDir, queries, k, probes, None)
-
-  /** Filtered SQ8 index query — [[queryIndexFiltered]]'s discipline
-    * (predicate into the probed-cell scan, never a post-filter) over
-    * the int8-coded layout.
-    */
-  def queryIndexSqFiltered(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, predicate: Column,
-      probes: Int = 1): DataFrame =
-    queryIndexSqImpl(spark, indexDir, queries, k, probes, Some(predicate))
-
-  /** Probe-escalated filtered query over the SQ8 layout —
-    * [[queryIndexFilteredEscalated]]'s semantics (count pass at the
-    * base tier, dry queries re-ranked at full cell coverage,
-    * min(k, pool) rows guaranteed) over int8-coded candidates. The
-    * count pass is layout-agnostic (shared helper — it never reads the
-    * code column), so the escalation decision is IDENTICAL to the
-    * full-precision index's at the same geometry; only the scoring of
-    * the final candidate set differs (quantized cosine, as
-    * [[queryIndexSq]]).
-    */
-  def queryIndexSqFilteredEscalated(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, predicate: Column,
-      probes: Int = 1): DataFrame =
-    queryIndexSqImpl(spark, indexDir, queries, k, probes, Some(predicate),
-      escalate = true)
-
-  private def queryIndexSqImpl(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, probes: Int,
-      predicate: Option[Column], escalate: Boolean = false): DataFrame =
-    queryIndexSpine(spark, indexDir, queries, k, probes, predicate,
-        escalate, "sq8", "queryIndexSq") { (_, cent, qRows) =>
-      import spark.implicits._
-      // int8-code each query ONCE (probe-invariant, request-scale
-      // math); HALF_UP to match the engine's `round` on negative
-      // halves (math.round would round -2.5 to -2, Spark rounds to -3)
-      val coded = qRows.map { case (qId, qv, _) =>
-        val maxabs = qv.map(math.abs).max
-        val qc = if (maxabs == 0) qv.map(_ => 0L)
-          else qv.map(x => BigDecimal(x * 127.0 / maxabs)
-            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong)
-        qId -> (qc, qc.map(c => c * c).sum)
-      }.toMap
-      Probing(cosRanked(cent, qRows),
-        _.map { case (qId, c) => (qId, c, coded(qId)._1, coded(qId)._2) }
-          .toDF("q_id", "qcell", "qc", "qn2q"),
-        "qcos", Ann.guardedCosine(col("qc"), transform(col("cb"), _.cast("long")),
-          col("qn2q"), col("n2q")))
-    }
+  private def startBooks(layout: Layout, qb: DataFrame,
+      cent: Seq[(Long, Seq[Long], Long)],
+      iterations: Int): Option[Seq[Seq[(Long, Seq[Long], Long)]]] = layout match {
+    case Pq(booksPath, pqK) => Some(loadBooks(booksPath).getOrElse {
+      // residuals materialized once for training (read 4 subspaces ×
+      // (1 + iterations) times); trained once, shipped thereafter
+      val res = Ann.pqResiduals(qb, cent).localCheckpoint(eager = true)
+      val b = trainBooks(res, pqK, iterations)
+      saveBooks(booksPath, b)
+      res.unpersist()
+      b
+    })
+    case _ => None
+  }
 
   // ---- ST9: the PQ-coded on-disk layout (IVFADC at rest) -----------
   //
@@ -397,8 +410,7 @@ object StreamingAnn {
     * is also None: consumers index `books(0..PqM-1)` positionally, so
     * returning a short/sparse Seq would trade the clean "no trained
     * codebooks" failure for an IndexOutOfBounds deep in query planning
-    * — and would make [[ivfIngestPq]] skip retraining on a bad
-    * artifact.
+    * — and would make the ingest skip retraining on a bad artifact.
     */
   def loadBooks(path: String): Option[Seq[Seq[(Long, Seq[Long], Long)]]] =
     readBody(path).flatMap { body =>
@@ -411,44 +423,6 @@ object StreamingAnn {
         if (bySub.keySet != (0 until Ann.PqM).toSet) None
         else Some((0 until Ann.PqM).map(s => bySub(s).map(_._2)))
       } catch { case _: MatchError | _: NumberFormatException => None }
-    }
-
-  /** ST9 ingest — the streaming form of the batch IVFADC encode
-    * ([[Ann.knnIvfPq]]'s corpus side): the first non-empty batch
-    * trains the coarse model (persisted at `modelPath`) AND the
-    * product codebooks over that batch's COARSE RESIDUALS (persisted
-    * at `booksPath`; either is loaded instead when it already exists),
-    * and generation 0 starts with both; every batch then assigns cells
-    * by the frozen model's squared-L2 argmin ([[Ann.kmeansAssign]] —
-    * the batch IVFADC rule: residuals are taken against the nearest
-    * centroid in the metric the codebooks are trained under), encodes
-    * its residuals under the generation's codebooks
-    * ([[Ann.pqEncodedFromQ]] — a zero-shuffle codegen projection), and
-    * appends ONLY the four code columns to the cell-partitioned index.
-    * Same idempotent-partition contract as [[ivfIngest]];
-    * [[compactIndex]]/[[vacuumGenerations]] serve this layout unchanged
-    * (schema-agnostic, and a compacted generation carries its source's
-    * `_pqbooks`). [[retrainIndex]] REFUSES it by design —
-    * residual codes cannot be re-encoded without the primary vectors;
-    * drift maintenance is [[retrainIndexPq]], the
-    * re-encode-from-primary rebuild under the same generation
-    * machinery.
-    */
-  def ivfIngestPq(emb: DataFrame, modelPath: String, booksPath: String,
-      indexDir: String, checkpointDir: String, kCells: Int = 8,
-      pqK: Int = Ann.PqK, iterations: Int = 2,
-      attrs: Seq[String] = Nil): StreamingQuery =
-    ingestSpine(emb, modelPath, indexDir, checkpointDir, kCells, iterations,
-        attrs, "pq", (qb, cent) => Some(loadBooks(booksPath).getOrElse {
-          // residuals materialized once for training (read 4 subspaces ×
-          // (1 + iterations) times); trained once, shipped thereafter
-          val res = Ann.pqResiduals(qb, cent).localCheckpoint(eager = true)
-          val b = trainBooks(res, pqK, iterations)
-          saveBooks(booksPath, b)
-          res.unpersist()
-          b
-        })) { (root, qb, cent) =>
-      Ann.pqEncodedFromQ(Ann.pqResiduals(qb, cent, attrs), booksOf(root))
     }
 
   /** Seed-safe per-subspace PQ codebooks over residual rows (vec_id,
@@ -465,20 +439,33 @@ object StreamingAnn {
           VecOps.intDot(sv, sv).as("norm2")), pqK, iterations)
     }
 
-  /** Driver-side L2 probe ranking for the pq layout — EXACTLY the
-    * batch [[Ann.knnIvfPq]] query side (exact coarse squared-L2,
-    * ties on the smaller cell id), returning the ranked cells WITH
-    * the query's residual to each (the ADC tables are per-(query,
-    * cell) — built from the residual TO THAT CELL).
+  /** The `pq` layout's probing — EXACTLY the batch [[Ann.knnIvfPq]]
+    * query side: cells ranked by exact coarse squared-L2 against the
+    * frozen model (ties on the smaller cell id), then per (query,
+    * probed cell) one ADC table per subspace, built driver-side from
+    * the query's residual TO THAT CELL and the generation's frozen
+    * codebooks (PqM maps of pqK integers per pair). A candidate's
+    * `est_d` is PqM map lookups over its codes, ranked ascending.
     */
-  private def rankCellsL2(cent: Seq[(Long, Seq[Long], Long)],
-      qv: Seq[Long]): Seq[(Long, Seq[Long])] = {
-    val qn2 = qv.map(x => x * x).sum
-    cent.map { case (cId, cv, cn2) =>
-      val dot = qv.zip(cv).map { case (a, b) => a * b }.sum
-      ((qn2 - 2 * dot + cn2, cId), cId,
-        qv.zip(cv).map { case (a, b) => a - b })
-    }.sortBy(_._1).map { case (_, cId, res) => (cId, res) }
+  private def pqProbing(spark: SparkSession, root: String,
+      cent: Seq[(Long, Seq[Long], Long)], qs: Seq[QueryRow]): Probing = {
+    import spark.implicits._
+    val books = booksOf(root)
+    val ranked = qs.map { q =>
+      q.id -> cent.map { case (cId, cv, cn2) =>
+        val dot = q.v.zip(cv).map { case (a, b) => a * b }.sum
+        ((q.norm2 - 2 * dot + cn2, cId), cId, q.v.zip(cv).map { case (a, b) => a - b })
+      }.sortBy(_._1).map { case (_, cId, res) => (cId, res) }
+    }
+    val residual = ranked.flatMap { case (qId, cells) =>
+      cells.map { case (c, res) => (qId, c) -> res } }.toMap
+    Probing(ranked.map { case (qId, cells) => qId -> cells.map(_._1) },
+      _.map { case (qId, c) =>
+        val res = residual((qId, c))
+        (qId, c, adcTable(res, 0, books(0)), adcTable(res, 1, books(1)),
+          adcTable(res, 2, books(2)), adcTable(res, 3, books(3)))
+      }.toDF("q_id", "qcell", "qd0", "qd1", "qd2", "qd3"),
+      "est_d", Ann.adcEstimate, desc = false)
   }
 
   /** One subspace's ADC table for a query residual: c_id → exact
@@ -496,86 +483,15 @@ object StreamingAnn {
     }.toMap
   }
 
-  /** ADC top-k over an [[ivfIngestPq]] index: cells ranked by exact
-    * coarse L2 against the frozen model (driver-side, request-scale),
-    * per-(query, probed-cell) ADC tables from the frozen codebooks
-    * (driver math — PqM maps of pqK integers per pair), then ONE
-    * codes-only scan of the probed cell partitions: est_d is PqM map
-    * lookups per candidate, the newest-wins election is the shared
-    * index machinery, and the result is
-    * bit-identical to [[Ann.knnIvfPq]] at the same geometry
-    * (parity spec). Output: (q_id, rnk, neighbor_id, est_d).
-    */
-  def queryIndexPq(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, probes: Int = 2): DataFrame =
-    queryIndexPqImpl(spark, indexDir, queries, k, probes, None)
-
-  /** Filtered (attribute-constrained) ADC query — the on-disk form of
-    * [[Ann.knnIvfPqFiltered]]: the predicate references the attribute
-    * columns the ingest carried into the code leaves and applies to
-    * the probed-cell scan BEFORE election and ADC ranking (a parquet
-    * data filter alongside the cell PartitionFilter),
-    * never a post-filter. Encoding is deterministic per row under the
-    * frozen artifacts, so filter∘encode ≡ encode∘filter and parity
-    * with the batch filtered operator is exact (spec-pinned).
-    */
-  def queryIndexPqFiltered(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, predicate: Column,
-      probes: Int = 2): DataFrame =
-    queryIndexPqImpl(spark, indexDir, queries, k, probes, Some(predicate))
-
-  /** Probe-escalated filtered ADC query — the on-disk form of
-    * [[Ann.knnIvfPqFilteredEscalated]], completing the escalation
-    * discipline across all THREE on-disk layouts: the shared
-    * layout-agnostic count pass (base-tier cells only, never the code
-    * columns) decides each query's effective depth; dry queries
-    * re-rank at full cell coverage, guaranteeing min(k, matching
-    * pool) rows; satisfied queries return the fixed-probe sets.
-    */
-  def queryIndexPqFilteredEscalated(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, predicate: Column,
-      probes: Int = 2): DataFrame =
-    queryIndexPqImpl(spark, indexDir, queries, k, probes, Some(predicate),
-      escalate = true)
-
-  private def queryIndexPqImpl(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, probes: Int, predicate: Option[Column],
-      escalate: Boolean = false): DataFrame =
-    queryIndexSpine(spark, indexDir, queries, k, probes, predicate,
-        escalate, "pq", "queryIndexPq") { (root, cent, qRows) =>
-      import spark.implicits._
-      val books = booksOf(root)
-      // L2 ranking (the pq rule) with the query's residual to each cell
-      val ranked = qRows.map { case (qId, qv, _) => qId -> rankCellsL2(cent, qv) }
-      val residual = ranked.flatMap { case (qId, cells) =>
-        cells.map { case (c, res) => (qId, c) -> res } }.toMap
-      Probing(ranked.map { case (qId, cells) => qId -> cells.map(_._1) },
-        _.map { case (qId, c) =>
-          val res = residual((qId, c))
-          (qId, c, adcTable(res, 0, books(0)), adcTable(res, 1, books(1)),
-            adcTable(res, 2, books(2)), adcTable(res, 3, books(3)))
-        }.toDF("q_id", "qcell", "qd0", "qd1", "qd2", "qd3"),
-        "est_d", Ann.adcEstimate, desc = false)
-    }
-
-  /** IVFADC-R over the on-disk index — [[Ann.knnIvfPqRefined]]'s
-    * refine stage composed with [[queryIndexPq]]: the code index
-    * RANKS a k·refine shortlist (ADC, codes only), and the
-    * shortlist's full-precision vectors rerank it to k by exact
-    * cosine. `vectors` is the PRIMARY embedding store
-    * (vec_id, embedding) — the index stores no vectors, so the
+  /** The refine stage of [[Ann.knnIvfPqRefined]] over an on-disk
+    * shortlist (q_id, neighbor_id): the index stores no vectors, so the
     * refine fetch is a request-scale broadcast equi-join against the
-    * store (queries × k·refine ids), exactly the batch operator's
-    * plan. Output: (q_id, rnk, neighbor_id, cos_bp), bit-identical
-    * to [[Ann.knnIvfPqRefined]] at the same geometry (parity spec).
+    * PRIMARY store (queries × k·factor ids), exactly the batch
+    * operator's plan, reranked to k by exact cosine. Output: (q_id,
+    * rnk, neighbor_id, cos_bp).
     */
-  def queryIndexPqRefined(spark: SparkSession, indexDir: String,
-      queries: DataFrame, vectors: DataFrame, k: Int, refine: Int = 10,
-      probes: Int = 2): DataFrame = {
-    graft.core.Configs.Pq(Ann.PqK, refine).validated
-    val short = queryIndexPq(spark, indexDir, queries, k * refine, probes)
-      .select("q_id", "neighbor_id")
-    val qv = quantize(vectors)
+  private def refined(short: DataFrame, r: Refine, k: Int): DataFrame = {
+    val qv = quantize(r.vectors)
     val cand = qv.join(broadcast(short), col("vec_id") === col("neighbor_id"))
       .select(col("q_id"), col("neighbor_id"), col("v"), col("norm2"))
     val qq = qv.join(broadcast(short.select("q_id").distinct()),
@@ -632,7 +548,7 @@ object StreamingAnn {
     */
   private[graft] def compactIndexImpl(spark: SparkSession, indexDir: String,
       minBatches: Int, crashPoint: Int): Option[Long] =
-    writeGeneration(spark, indexDir, crashPoint, _ => None) { (idx, _, ids) =>
+    writeGeneration(spark, indexDir, crashPoint) { (idx, _, ids) =>
       ids.filter(_ >= 0).maxOption.flatMap { tail =>
         val aged = ids.filter(_ != tail)
         val isTail = col("ingest_batch") === tail
@@ -730,7 +646,7 @@ object StreamingAnn {
   /** Write generation `n`'s artifacts — `_model`, `_pqbooks` when given,
     * and the `_layout` stamp (the layout plus the model's cell count and
     * dims) — then, unless the crashPoint 2 test seam stops here, THE
-    * atomic `_current` cutover to it. The one commit of [[ingestSpine]]
+    * atomic `_current` cutover to it. The one commit of [[ivfIngest]]
     * (generation 0) and [[writeGeneration]] (every later one).
     */
   private[graft] def commitGeneration(indexDir: String, n: Long,
@@ -749,38 +665,55 @@ object StreamingAnn {
     * index under the new model as generation N+1 — returning the new
     * generation number. Owner-context (run between batches, like
     * compaction); readers and a running ingest flip at their next
-    * request/batch through the `_current` pointer.
+    * request/batch through the `_current` pointer. The attribute
+    * columns the serving leaves carry (every column but `vec_id`, the
+    * layout's payload and the partition keys) ride into the rebuilt
+    * leaves, so filtered search keeps working across the cutover.
     *
-    * Mechanics: one read of the serving generation elects the newest
-    * copy per vec_id (the compactor's survivor rule over every leaf),
-    * the elected corpus trains the new model (deterministic Lloyd's —
-    * the engine's bit-reproducible loop, so a re-run converges to the
-    * same generation), every row is re-assigned under the new model by
-    * THE shared serving rule ([[Ann.cellAssign]]), and the rebuilt
-    * leaves land in ONE batch per cell ([[rebuiltId]] of every consumed
-    * leaf, so later deliveries of the continuing lineage keep winning
-    * elections). The `sq8` layout retrains in CODE space (centroids
-    * over the widened int8 codes — cosine's per-vector scale
-    * invariance makes code-space directions rank like milli-space
-    * ones, the same argument as its query scoring; int8 noise is
-    * measured sub-margin on this corpus).
+    * Mechanics by the serving generation's layout ([[Rules]]`.inPlace`):
+    *  - `full` / `sq8` retrain IN PLACE and refuse a `primary`: one read
+    *    of the serving generation elects the newest copy per vec_id (the
+    *    compactor's survivor rule over every leaf), the elected corpus
+    *    trains the new model in the layout's training view
+    *    (deterministic Lloyd's — the engine's bit-reproducible loop, so
+    *    a re-run converges to the same generation), and every row is
+    *    re-assigned under it by THE shared serving rule
+    *    ([[Ann.cellAssign]]);
+    *  - `pq` stores only residual ADC codes taken against the OLD
+    *    centroids, which a new model cannot re-encode, so it re-encodes
+    *    from `primary` — the (vec_id, embedding, attrs...) frame the
+    *    ingest consumed, the system of record the 21× index is a
+    *    projection of — and refuses to run without one. The serving
+    *    vec_id set joins the primary (inner: an id the primary has
+    *    dropped falls out of the rebuilt index, which is how a
+    *    primary-side delete propagates at retrain), and the joined
+    *    corpus retrains coarse model AND product codebooks with EXACTLY
+    *    the batch [[Ann.knnIvfPq]] chain (quantize → seed-safe Lloyd's
+    *    coarse → residuals against the new cells → per-subspace
+    *    seed-safe codebooks → argmin encode), so a post-retrain query is
+    *    bit-identical to the batch operator at the new geometry.
+    * Either way the rebuilt leaves land in ONE batch per cell
+    * ([[rebuiltId]] of every consumed leaf, so later deliveries of the
+    * continuing lineage keep winning elections).
     *
     * Crash-safe: the new generation is invisible until the final
-    * atomic `_current` rename (the ONLY commit point — model, layout
-    * stamp, and data all live inside the generation dir); a crashed
-    * build leaves an unreferenced dir that the next cutover deletes
-    * and rebuilds. Nothing is ever deleted under a reader —
+    * atomic `_current` rename (the ONLY commit point — model, books,
+    * layout stamp, and data all live inside the generation dir); a
+    * crashed build leaves an unreferenced dir that the next cutover
+    * deletes and rebuilds. Nothing is ever deleted under a reader —
     * [[vacuumGenerations]] is the explicit, grace-priced reclaim.
     *
     * Scale: cost is `iterations + 2` scans of the serving corpus
-    * (election, training iterations, rebuild write) — the same O(N)
-    * a compaction-style rebuild costs anywhere; run it on the drift
-    * cadence (weeks), not the compaction cadence (batches). Trained
-    * state stays driver/broadcast-scale.
+    * (election or primary join, training iterations, rebuild write) —
+    * the same O(N) a compaction-style rebuild costs anywhere; run it on
+    * the drift cadence (weeks), not the compaction cadence (batches).
+    * Trained state stays driver/broadcast-scale.
     */
   def retrainIndex(spark: SparkSession, indexDir: String, kCells: Int,
-      iterations: Int = 2): Long =
-    retrainIndexImpl(spark, indexDir, kCells, iterations, crashPoint = 0)._1
+      iterations: Int = 2, primary: Option[DataFrame] = None,
+      pqK: Int = Ann.PqK): Long =
+    retrainIndexImpl(spark, indexDir, kCells, iterations, primary, pqK,
+      crashPoint = 0)._1
 
   /** Test seam: crashPoint 1 = stop after the rebuilt data write
     * (before the model/stamp), 2 = stop after model+stamp (before the
@@ -789,38 +722,58 @@ object StreamingAnn {
     * rebuilt leaf id).
     */
   private[graft] def retrainIndexImpl(spark: SparkSession, indexDir: String,
-      kCells: Int, iterations: Int, crashPoint: Int): (Long, Long) = {
-    retrainKnobs(kCells, iterations)
-    // a pq index stores only residual ADC codes taken against the OLD
-    // centroids: a new model cannot re-encode them without the primary
-    // full-precision vectors, which the layout does not carry
-    writeGeneration(spark, indexDir, crashPoint, l => Option.when(l == "pq")(
-      "a 'pq' (residual-code) layout: retraining needs the primary " +
-        "full-precision vectors, which a code index does not store — use " +
-        "retrainIndexPq to re-ingest from the primary store under a new " +
-        "model instead of retraining in place")) { (idx, layout, ids) =>
-      val elected = newest(idx, "vec_id")
-        .localCheckpoint() // training re-scans it `iterations` times
-      // full layout trains on the stored milli vectors; sq8 on the
-      // widened codes (code space — see scaladoc), its payload riding
-      // through cellAssign's pure projection
-      val trainIn =
-        if (layout == "full") elected.select("vec_id", "v", "norm2")
-        else elected
-          .withColumn("v", transform(col("cb"), _.cast("long")))
-          .withColumn("norm2", col("n2q"))
-      val cent = Ann.kmeansCentroidsSeedSafe(
-        trainIn.select("vec_id", "v", "norm2"), kCells, iterations)
-      require(cent.nonEmpty, "training produced no centroids")
-      Some(Rebuilt(Ann.cellAssign(trainIn, cent)
-        .select(leafColumns(layout, Nil): _*), rebuiltId(ids), Some(cent)))
-    }.getOrElse(throw new IllegalStateException(s"nothing to retrain at $indexDir"))
-  }
-
-  private def retrainKnobs(kCells: Int, iterations: Int): Unit =
+      kCells: Int, iterations: Int, primary: Option[DataFrame] = None,
+      pqK: Int = Ann.PqK, crashPoint: Int): (Long, Long) = {
     graft.core.Validation.validate("index-maintenance",
       graft.core.Validation.knob("kCells", kCells, minV = 1L) ++
         graft.core.Validation.knob("iterations", iterations, minV = 1L))
+    graft.core.Configs.Pq(pqK).validated
+    writeGeneration(spark, indexDir, crashPoint) { (idx, layout, ids) =>
+      val rules = Layouts(layout)
+      val attrs = idx.columns.toSeq.filterNot(
+        (Seq("vec_id", "cell", "ingest_batch") ++ rules.payload).contains)
+      def refuse(why: String) =
+        throw new IllegalStateException(s"index at $indexDir is stamped layout=$layout: $why")
+      Some((rules.inPlace, primary) match {
+        case (Some(view), None) =>
+          val trainIn = view(newest(idx, "vec_id")
+            .localCheckpoint()) // training re-scans it `iterations` times
+          val cent = Ann.kmeansCentroidsSeedSafe(
+            trainIn.select("vec_id", "v", "norm2"), kCells, iterations)
+          require(cent.nonEmpty, "training produced no centroids")
+          Rebuilt(Ann.cellAssign(trainIn, cent).select(leafColumns(layout, attrs): _*),
+            rebuiltId(ids), Some(cent))
+        case (None, Some(p)) =>
+          val missing = attrs.filterNot(p.columns.contains)
+          require(missing.isEmpty, "the primary store lacks the index's " +
+            s"attribute columns ${missing.mkString(", ")}")
+          // the ID SET is the election here: every copy of a vec_id
+          // re-encodes to the same codes under the new artifacts, so
+          // newest-wins tie-breaking among copies is moot
+          val corpus = quantize(p, attrs)
+            .join(idx.select("vec_id").distinct(), Seq("vec_id"))
+            .localCheckpoint(eager = true) // read by coarse + book training
+          // EXACTLY the batch knnIvfPq training chain (seed-safe seeding —
+          // identical to the batch trainer whenever ids 0..k-1 are present,
+          // and still full-k on an index keyed at arbitrary ids)
+          val cent = Ann.kmeansCentroidsSeedSafe(
+            corpus.select("vec_id", "v", "norm2"), kCells, iterations)
+          require(cent.nonEmpty, "training produced no centroids " +
+            "(primary store shares no ids with the index?)")
+          val res = Ann.pqResiduals(corpus, cent, attrs)
+            .localCheckpoint(eager = true) // 4 subspaces × training reads
+          val books = trainBooks(res, pqK, iterations)
+          Rebuilt(Ann.pqEncodedFromQ(res, books).select(leafColumns(layout, attrs): _*),
+            rebuiltId(ids), Some(cent), Some(books), cached = Seq(res, corpus))
+        case (Some(_), Some(_)) => refuse("it retrains in place from its own " +
+          "leaves and takes no primary store")
+        case (None, None) => refuse("its residual codes cannot be re-encoded " +
+          "under a new model without the primary full-precision vectors, " +
+          "which a code index does not store — pass primary = Some(store) " +
+          "to re-ingest from the primary store instead of retraining in place")
+      })
+    }.getOrElse(throw new IllegalStateException(s"nothing to retrain at $indexDir"))
+  }
 
   /** What a rebuild hands [[writeGeneration]]: the rebuilt rows (`cell`
     * + the layout's payload, written as ONE leaf per cell under `id`),
@@ -835,27 +788,24 @@ object StreamingAnn {
       kept: Option[DataFrame] = None,
       cached: Seq[DataFrame] = Nil)
 
-  /** The one generation writer behind [[compactIndex]], [[retrainIndex]]
-    * and [[retrainIndexPq]]: resolve the serving generation N once,
-    * refuse the caller's `refusal` of its layout, then `rebuild` (given
-    * the serving index, its layout and its leaf ids; None = nothing to
-    * do). Generation N+1 at `gen-N+1`: the rebuilt rows plus the kept
-    * leaves, then [[commitGeneration]] with the rebuild's new model and
-    * codebooks or generation N's. crashPoint 1 stops after the data
-    * write, 2 after the artifacts (complete but unreferenced); a crashed
-    * prior attempt's dir is deleted and rebuilt. A dir with no index or
-    * no leaves is None before any check. Returns (generation number,
-    * rebuilt id).
+  /** The one generation writer behind [[compactIndex]] and
+    * [[retrainIndex]]: resolve the serving generation N once, then
+    * `rebuild` (given the serving index, its layout and its leaf ids;
+    * None = nothing to do). Generation N+1 at `gen-N+1`: the rebuilt
+    * rows plus the kept leaves, then [[commitGeneration]] with the
+    * rebuild's new model and codebooks or generation N's. crashPoint 1
+    * stops after the data write, 2 after the artifacts (complete but
+    * unreferenced); a crashed prior attempt's dir is deleted and
+    * rebuilt. A dir with no index or no leaves is None before any
+    * rebuild. Returns (generation number, rebuilt id).
     */
   private def writeGeneration(spark: SparkSession, indexDir: String,
-      crashPoint: Int, refusal: String => Option[String])(
-      rebuild: (DataFrame, String, Seq[Long]) => Option[Rebuilt]
+      crashPoint: Int)(rebuild: (DataFrame, String, Seq[Long]) => Option[Rebuilt]
   ): Option[(Long, Long)] = {
     val ids = servingLeaves(indexDir).map(_._2).distinct
     if (ids.isEmpty) return None
     val cur = resolveRoot(indexDir)
     val layout = stampOf(cur)._1
-    refusal(layout).foreach(m => throw new IllegalStateException(s"index at $cur is $m"))
     rebuild(spark.read.parquet(cur), layout, ids).map { rb =>
       val next = readCurrentGen(indexDir).get + 1
       val root = genDir(indexDir, next)
@@ -871,78 +821,6 @@ object StreamingAnn {
     }
   }
 
-  /** Drift maintenance for the `pq` (residual-code) layout — the
-    * re-ingest-from-primary path [[retrainIndex]]'s refusal points
-    * at, under the SAME generation machinery. A code index stores
-    * only residual ADC codes, so a new coarse model cannot re-encode
-    * them in place; what it CAN do is re-encode from the primary
-    * full-precision vector store (`primary`: the same
-    * (vec_id, embedding[, attrs...]) frame the ingest consumed —
-    * the system of record the 21× index is a projection of).
-    *
-    * Mechanics: one read of the serving generation gives its vec_id
-    * set, those ids join the primary store (inner: an id the primary
-    * has dropped falls out of the rebuilt index, which is how a
-    * primary-side delete propagates at retrain), and the joined corpus
-    * retrains coarse model AND product codebooks with EXACTLY the batch
-    * [[Ann.knnIvfPq]] chain (quantize → seed-safe Lloyd's coarse →
-    * residuals against the new cells → per-subspace seed-safe codebooks
-    * → argmin encode), so a post-retrain [[queryIndexPq]] is
-    * bit-identical to the batch operator at the new geometry (parity
-    * spec). The rebuilt codes land in `gen-N/` as ONE rebuilt leaf per
-    * cell next to the generation's new `_model` AND `_pqbooks` — model,
-    * books, layout stamp, and data cut over in ONE atomic `_current`
-    * rename, same commit point and crash seams as [[retrainIndex]].
-    *
-    * Scale: one scan of the code index (ids), one join against the
-    * primary restricted to those ids, `iterations`-scan training, one
-    * rebuild write — the O(N) any rebuild costs; trained state stays
-    * driver/broadcast-scale. `attrs` columns ride from the PRIMARY
-    * frame into the rebuilt leaves (filtered search keeps working
-    * across the cutover).
-    */
-  def retrainIndexPq(spark: SparkSession, indexDir: String,
-      primary: DataFrame, kCells: Int, pqK: Int = Ann.PqK,
-      iterations: Int = 2, attrs: Seq[String] = Nil): Long =
-    retrainIndexPqImpl(spark, indexDir, primary, kCells, pqK, iterations,
-      attrs, crashPoint = 0)._1
-
-  /** Test seam, same contract as [[retrainIndexImpl]]: crashPoint 1 =
-    * stop after the rebuilt data write, 2 = stop after stamp + model +
-    * books (complete but unreferenced), 0 = production (cutover).
-    */
-  private[graft] def retrainIndexPqImpl(spark: SparkSession,
-      indexDir: String, primary: DataFrame, kCells: Int, pqK: Int,
-      iterations: Int, attrs: Seq[String],
-      crashPoint: Int): (Long, Long) = {
-    graft.core.Configs.Pq(pqK).validated
-    retrainKnobs(kCells, iterations)
-    writeGeneration(spark, indexDir, crashPoint, l => Option.when(l != "pq")(
-      s"a '$l' layout: retrainIndexPq re-encodes residual-code ('pq') " +
-        "indexes from the primary store — use retrainIndex for " +
-        "self-contained layouts")) { (idx, _, ids) =>
-      // the ID SET is the election here: every copy of a vec_id
-      // re-encodes to the same codes under the new artifacts, so
-      // newest-wins tie-breaking among copies is moot
-      val corpus = quantize(primary, attrs)
-        .join(idx.select("vec_id").distinct(), Seq("vec_id"))
-        .localCheckpoint(eager = true) // read by coarse + book training
-      // EXACTLY the batch knnIvfPq training chain (seed-safe seeding —
-      // identical to the batch trainer whenever ids 0..k-1 are present,
-      // and still full-k on an index keyed at arbitrary ids)
-      val cent = Ann.kmeansCentroidsSeedSafe(
-        corpus.select("vec_id", "v", "norm2"), kCells, iterations)
-      require(cent.nonEmpty, "training produced no centroids " +
-        "(primary store shares no ids with the index?)")
-      val res = Ann.pqResiduals(corpus, cent, attrs)
-        .localCheckpoint(eager = true) // 4 subspaces × training reads
-      val books = trainBooks(res, pqK, iterations)
-      Some(Rebuilt(Ann.pqEncodedFromQ(res, books)
-        .select(leafColumns("pq", attrs): _*), rebuiltId(ids), Some(cent),
-        Some(books), cached = Seq(res, corpus)))
-    }.getOrElse(throw new IllegalStateException(s"nothing to retrain at $indexDir"))
-  }
-
   /** Codified drift cadence — the retrain analog of
     * [[compactIfNeeded]]: read the index's cell-share distribution
     * (one [[indexStats]] pass over the serving generation) and
@@ -953,12 +831,8 @@ object StreamingAnn {
     * full scan in disguise); the balanced ideal is 10000/kCells bp,
     * so a bound of a few × that is a sound default. Owner-context,
     * like every maintenance pass. Returns the new generation number
-    * when a retrain ran.
-    *
-    * The `pq` layout retrains through [[retrainIndexPq]] when
-    * `primary` is supplied (the re-encode-from-primary path — a code
-    * index has no vectors to retrain from); a pq index with no
-    * primary trips [[retrainIndex]]'s loud refusal rather than
+    * when a retrain ran. `primary` and `pqK` go to [[retrainIndex]]:
+    * a `pq` index with no primary trips its loud refusal rather than
     * silently skipping the drift signal.
     */
   def retrainIfNeeded(spark: SparkSession, indexDir: String,
@@ -972,14 +846,8 @@ object StreamingAnn {
     if (servingLeaves(indexDir).isEmpty) return None
     val worst = indexStats(spark, indexDir)
       .agg(max(col("share_bp"))).head().getLong(0)
-    if (worst > maxShareBp) {
-      val isPq = stampOf(resolveRoot(indexDir))._1 == "pq"
-      Some(primary match {
-        case Some(p) if isPq =>
-          retrainIndexPq(spark, indexDir, p, kCells, pqK, iterations)
-        case _ => retrainIndex(spark, indexDir, kCells, iterations)
-      })
-    } else None
+    Option.when(worst > maxShareBp)(
+      retrainIndex(spark, indexDir, kCells, iterations, primary, pqK))
   }
 
   /** Reclaim generations — the grace-priced owner pass that completes
@@ -1013,15 +881,13 @@ object StreamingAnn {
     gens.size
   }
 
-  /** The index family has three on-disk layouts sharing one
-    * compactor and one directory convention — `full` (v/norm2
-    * full-precision vectors, [[ivfIngest]]), `sq8` (cb/n2q int8 codes,
-    * [[ivfIngestSq]]) and `pq` (c0..c3 residual codes,
-    * [[ivfIngestPq]]) — so every generation carries a `_layout` stamp
-    * `(layout, kCells, dims)` next to its model. Readers and the
-    * ingest REFUSE a mismatched stamp with a self-explanatory error
-    * instead of failing downstream on a missing column. `root` is a
-    * generation root (`<indexDir>/gen-N`); None when it has no stamp.
+  /** Every generation carries a `_layout` stamp `(layout, kCells,
+    * dims)` next to its model: the [[Layout]] its ingest writes
+    * (`full`, `sq8` or `pq`), which picks the [[Layouts]] rules every
+    * query, retrain and rebuild applies to it, so no caller names a
+    * layout after the ingest. The ingest REFUSES to append to a
+    * mismatched stamp. `root` is a generation root
+    * (`<indexDir>/gen-N`); None when it has no stamp.
     */
   def readLayout(root: String): Option[(String, Int, Int)] =
     Durable.read(layoutPath(root)).flatMap { body =>
@@ -1038,14 +904,11 @@ object StreamingAnn {
     readLayout(root).getOrElse(
       throw new IllegalStateException(s"generation $root has no layout stamp"))
 
-  /** Each layout's leaf payload columns, written next to `vec_id`, the
-    * ingest's `attrs` and the `cell` / `ingest_batch` partition keys.
+  /** A leaf's columns: `vec_id`, the layout's payload, the attrs and
+    * `cell` (the write adds `ingest_batch`).
     */
-  private val Payloads = Map("full" -> Seq("v", "norm2"),
-    "sq8" -> Seq("cb", "n2q"), "pq" -> Seq("c0", "c1", "c2", "c3"))
-
   private def leafColumns(layout: String, attrs: Seq[String]): Seq[Column] =
-    col("vec_id") +: (Payloads(layout) ++ attrs).map(col) :+ col("cell")
+    col("vec_id") +: (Layouts(layout).payload ++ attrs).map(col) :+ col("cell")
 
   private def layoutPath(root: String) =
     java.nio.file.Paths.get(root, "_layout")
@@ -1060,21 +923,6 @@ object StreamingAnn {
         s"index at $root is stamped layout=$l kCells=$k dims=$d; " +
           s"this ingest writes layout=$layout dims=$dims " +
           "— refusing to mix layouts or geometries in one index dir")
-  }
-
-  /** Read-side flavor check: a wrong-flavor query is refused with the
-    * stamp's own description rather than a missing-column analysis
-    * error three operators deep.
-    */
-  private def requireLayout(root: String, expected: String,
-      caller: String): Unit = {
-    val (l, k, d) = stampOf(root)
-    if (l != expected)
-      throw new IllegalStateException(
-        s"$caller expects a '$expected' index but $root is stamped " +
-          s"layout=$l (kCells=$k, dims=$d); use " +
-          s"${if (l == "sq8") "queryIndexSq"
-            else if (l == "pq") "queryIndexPq" else "queryIndex"}")
   }
 
   /** Operational stats of an on-disk index (any layout): per cell —
@@ -1132,77 +980,76 @@ object StreamingAnn {
       finally s.close()
     }
 
-  /** Top-k cosine query over the accumulated index: ranks cells for
-    * each query against the frozen model DRIVER-side (the query set
-    * is request-scale by definition; k·dims integer math), then scans
-    * ONLY the probed cell partitions — the `isin` filter becomes a
-    * parquet PartitionFilter, so the 1/kCells scan bound is enforced
-    * by the storage layout. Exact cosine rerank within the probed
-    * cells, same tie-break as [[Ann.knnIvfTrained]].
+  /** Top-k query over the accumulated index, whatever its layout —
+    * the on-disk form of the batch trained-IVF family
+    * ([[Ann.knnIvfTrained]] on `full`, [[Ann.knnIvfSq]] on `sq8`,
+    * [[Ann.knnIvfPq]] on `pq`, and their `Filtered` / `FilteredEscalated`
+    * / `Refined` twins), bit-identical to the batch operator at the
+    * same geometry (parity specs). The serving generation's stamp picks
+    * the [[Layouts]] rules; then:
+    *  - resolve the serving generation ONCE and read the stamp, model
+    *    (and codebooks) from that same root, so a cutover mid-request
+    *    can never mix generations; an unflipped build is invisible
+    *    until its `_current` cutover, and the reader never deletes
+    *    anything;
+    *  - quantize and collect the request-scale query set once (the int8
+    *    codes ride the same collect, by THE int8 rule), and rank every
+    *    query's cells against the frozen model DRIVER-side (k·dims
+    *    integer math);
+    *  - per query, keep the base tier `probes`, or with `escalate` the
+    *    depth [[escalatedDepths]] decides: a selective `predicate` can
+    *    leave fewer than k matching rows inside the probed cells, and
+    *    the dry queries then re-rank at FULL cell coverage, which
+    *    guarantees `min(k, matching pool)` rows per query while
+    *    satisfied queries never pay the escalated scan (escalation is a
+    *    probe-depth option, as in progressive similarity search);
+    *  - scan ONLY the probed cells: the `isin` filter is a parquet
+    *    PartitionFilter (the 1/kCells scan bound holds on disk), the
+    *    attribute `predicate` (over the ingest's `attrs` columns) a
+    *    pushed data filter applied before scoring and election — never
+    *    a post-filter of the finished top-k, which would silently
+    *    under-return (copies of a vec_id are byte-identical under the
+    *    index contract, so it cannot flip an election);
+    *  - elect one copy per candidate ([[newest]]), score by the layout
+    *    (guarded cosine on `full`, quantized cosine over the int8 codes
+    *    on `sq8`, ADC `est_d` on `pq`), and keep the top k, same
+    *    tie-break as the batch operators;
+    *  - with `refine` (a `pq` generation only; any other stamp is
+    *    refused), keep a k·factor shortlist and rerank it by exact
+    *    cosine against the primary vectors ([[refined]]).
     *
-    * Reads the serving generation only: an unflipped build is
-    * invisible until its `_current` cutover, and the reader never
-    * deletes anything.
+    * Output: (q_id, rnk, neighbor_id, score) — `cos_bp` (full,
+    * refined), `qcos_bp` (sq8) or `est_d` (pq).
     */
-  def queryIndex(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, probes: Int = 1): DataFrame =
-    queryIndexImpl(spark, indexDir, queries, k, probes, None)
-
-  /** Filtered (attribute-constrained) index query — the on-disk form
-    * of [[Ann.knnIvfTrainedFiltered]]: the predicate references the
-    * attribute columns the ingest carried into the leaves
-    * ([[ivfIngest]]'s `attrs`) and is applied to the probed-cell scan
-    * BEFORE scoring and election — a parquet data filter alongside the
-    * cell PartitionFilter, never a post-filter of the
-    * finished top-k (which would silently under-return). Same model,
-    * same probes, same election: the batch/on-disk parity contract
-    * extends to the filtered pair (spec-pinned).
-    */
-  def queryIndexFiltered(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, predicate: Column,
-      probes: Int = 1): DataFrame =
-    queryIndexImpl(spark, indexDir, queries, k, probes, Some(predicate))
-
-  /** Filtered index query with PROBE ESCALATION — the on-disk serving
-    * form of [[graft.operators.Ann.knnIvfTrainedFilteredEscalated]]:
-    * a selective predicate can leave fewer than k matching rows inside
-    * the probed cells, and [[queryIndexFiltered]]'s fixed probe budget
-    * then silently under-returns. This variant counts each query's
-    * matching candidates at the base tier first (a cell equi-join with
-    * no scoring — the cheap pass, over ONLY the base-tier cell
-    * partitions), and only queries whose pool came up short re-rank at
-    * FULL cell coverage, which guarantees exactly `min(k, matching
-    * pool)` rows per query.
-    *
-    * Scale shape is the batch operator's: the per-query effective
-    * probe depth is request-scale state (numQueries counts, collected
-    * once — same driver-side footprint as the cell ranking this path
-    * already does), satisfied queries never pay the escalated scan,
-    * and BOTH passes keep the predicate composed into the probed-cell
-    * scan (a parquet data filter next to the cell PartitionFilter —
-    * the pass-2 `isin` widens only to the cells
-    * some dry query actually needs). Result parity with the batch
-    * escalated operator at the same geometry is spec-pinned, including
-    * through compaction.
-    */
-  def queryIndexFilteredEscalated(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, predicate: Column,
-      probes: Int = 1): DataFrame =
-    queryIndexImpl(spark, indexDir, queries, k, probes, Some(predicate),
-      escalate = true)
-
-  private def queryIndexImpl(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, probes: Int,
-      predicate: Option[Column], escalate: Boolean = false): DataFrame =
-    queryIndexSpine(spark, indexDir, queries, k, probes, predicate,
-        escalate, "full", "queryIndex") { (_, cent, qRows) =>
-      import spark.implicits._
-      val byId = qRows.map(r => r._1 -> r).toMap
-      Probing(cosRanked(cent, qRows),
-        _.map { case (qId, c) => (qId, c, byId(qId)._2, byId(qId)._3) }
-          .toDF("q_id", "qcell", "qv", "qn2"),
-        "cos", Ann.guardedCosine(col("qv"), col("v"), col("qn2"), col("norm2")))
+  def queryIndex(spark: SparkSession, indexDir: String, queries: DataFrame,
+      k: Int, probes: Int = 1, predicate: Option[Column] = None,
+      escalate: Boolean = false, refine: Option[Refine] = None): DataFrame = {
+    val root = resolveRoot(indexDir)
+    val layout = stampOf(root)._1
+    val rules = Layouts(layout)
+    refine.foreach { r =>
+      if (rules.inPlace.nonEmpty) throw new IllegalStateException(
+        s"refine reranks a residual-code ('pq') shortlist, but $root is " +
+          s"stamped layout=$layout")
+      graft.core.Configs.Pq(Ann.PqK, r.factor).validated
     }
+    val qs = Ann.withInt8Cols(quantize(queries))
+      .select("vec_id", "v", "norm2", "c", "n2q").collect().toSeq
+      .map(r => QueryRow(r.getLong(0), r.getSeq[Long](1), r.getLong(2),
+        r.getSeq[Long](3), r.getLong(4)))
+    val p = rules.probing(spark, root, modelOf(root), qs)
+    val depth: Map[Long, Int] =
+      if (!escalate) p.ranked.map(r => r._1 -> probes).toMap
+      else escalatedDepths(spark, root, predicate, p.ranked, k, probes)
+    val pairs = p.ranked.flatMap { case (qId, cells) =>
+      cells.take(depth(qId)).map(qId -> _) }
+    val idx = probedScan(spark, root, pairs.map(_._2).distinct, predicate)
+    val top = Ann.topKNeighbors(newest(idx.join(broadcast(p.probeRows(pairs)),
+        col("cell") === col("qcell") && col("vec_id") =!= col("q_id")),
+        "q_id", "vec_id")
+      .withColumn(p.score, p.scoreExpr), refine.fold(k)(k * _.factor), p.score, p.desc)
+    refine.fold(top)(refined(top.select("q_id", "neighbor_id"), _, k))
+  }
 
   /** One layout's part of an on-disk query: each query's cells ranked
     * to FULL depth, the probe-row frame (q_id, qcell, probe payload)
@@ -1214,49 +1061,6 @@ object StreamingAnn {
   private case class Probing(ranked: Seq[(Long, Seq[Long])],
       probeRows: Seq[(Long, Long)] => DataFrame, score: String,
       scoreExpr: Column, desc: Boolean = true)
-
-  /** The one probe-scan-elect sequence behind every `queryIndex*`
-    * entry point, whatever the layout:
-    *  - resolve the serving generation ONCE and read the layout stamp
-    *    and model from that same root, so a cutover mid-request can
-    *    never mix generations;
-    *  - quantize and collect the request-scale query set, and let the
-    *    layout rank every query's cells against the generation's frozen
-    *    model driver-side (`probing`, given the resolved root, the model
-    *    and the (q_id, v, norm2) query rows);
-    *  - per query, keep the base tier `probes`, or with `escalate` the
-    *    depth [[escalatedDepths]] decides;
-    *  - scan ONLY the probed cells: the `isin` filter is a parquet
-    *    PartitionFilter (the IVF scan bound holds on disk),
-    *    the attribute predicate a pushed data filter applied before
-    *    scoring and election (copies of a vec_id are byte-identical
-    *    under the index contract, so it cannot flip an election);
-    *  - elect one copy per candidate ([[newest]]), score,
-    *    and keep the top k, same tie-break as the batch operators.
-    */
-  private def queryIndexSpine(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, probes: Int,
-      predicate: Option[Column], escalate: Boolean, layout: String,
-      caller: String)(
-      probing: (String, Seq[(Long, Seq[Long], Long)],
-        Seq[(Long, Seq[Long], Long)]) => Probing): DataFrame = {
-    val root = resolveRoot(indexDir)
-    requireLayout(root, layout, caller)
-    val cent = modelOf(root)
-    val qRows = quantize(queries).collect().toSeq.map(r =>
-      (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
-    val p = probing(root, cent, qRows)
-    val depth: Map[Long, Int] =
-      if (!escalate) p.ranked.map(r => r._1 -> probes).toMap
-      else escalatedDepths(spark, root, predicate, p.ranked, k, probes)
-    val pairs = p.ranked.flatMap { case (qId, cells) =>
-      cells.take(depth(qId)).map(qId -> _) }
-    val idx = probedScan(spark, root, pairs.map(_._2).distinct, predicate)
-    Ann.topKNeighbors(newest(idx.join(broadcast(p.probeRows(pairs)),
-        col("cell") === col("qcell") && col("vec_id") =!= col("q_id")),
-        "q_id", "vec_id")
-      .withColumn(p.score, p.scoreExpr), k, p.score, p.desc)
-  }
 
   /** The scan of the probed cells of a resolved root: the `cell isin`
     * filter prunes partitions, the attribute predicate is a pushed data

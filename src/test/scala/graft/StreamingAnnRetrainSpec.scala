@@ -95,10 +95,11 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     // the geometry) the batch operator uses, so pre-retrain parity
     // cannot hold
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingAnn.ivfIngestPq(
+    val q = StreamingAnn.ivfIngest(
       input.toDS().toDF("vec_id", "embedding"),
-      s"$root/model.txt", s"$root/books.txt", s"$root/index",
-      s"$root/ckpt", kCells = 8, iterations = 2)
+      s"$root/model.txt", s"$root/index",
+      s"$root/ckpt", kCells = 8, iterations = 2,
+      layout = StreamingAnn.Pq(s"$root/books.txt"))
     try {
       input.addData(rows.filter(_._1 < 30).toSeq: _*)
       q.processAllAvailable()
@@ -108,13 +109,13 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     // drift maintenance for a codes-only index: re-encode from the
     // primary store at a NEW geometry (12 cells) — elected ids join
     // the primary, coarse + books retrain, gen-1 cuts over atomically
-    val gen = StreamingAnn.retrainIndexPq(spark, s"$root/index", emb,
-      kCells = 12, iterations = 2)
+    val gen = StreamingAnn.retrainIndex(spark, s"$root/index",
+      kCells = 12, iterations = 2, primary = Some(emb))
     assert(gen === 1L)
     // post-retrain ADC queries are bit-identical to the batch IVFADC
     // trained on the same corpus at the same (new) geometry, under
     // the generation's own _model/_pqbooks
-    val got = snap(StreamingAnn.queryIndexPq(spark, s"$root/index",
+    val got = snap(StreamingAnn.queryIndex(spark, s"$root/index",
       queries, k = 3, probes = 2))
     val want = snap(Ann.knnIvfPq(emb, numQueries = 5, k = 3, kCells = 12,
       iterations = 2, probes = 2))
@@ -123,10 +124,10 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     // 12-cell artifacts, no restart bookkeeping
     val extra = rows.take(10).map { case (id, e) => (id + 90000L, e) }
     val input2 = MemoryStream[(Long, Seq[Float])]
-    val q2 = StreamingAnn.ivfIngestPq(
+    val q2 = StreamingAnn.ivfIngest(
       input2.toDS().toDF("vec_id", "embedding"),
-      s"$root/model.txt", s"$root/books.txt", s"$root/index",
-      s"$root/ckpt-post")
+      s"$root/model.txt", s"$root/index",
+      s"$root/ckpt-post", layout = StreamingAnn.Pq(s"$root/books.txt"))
     try { input2.addData(extra.toSeq: _*); q2.processAllAvailable() }
     finally q2.stop()
     val genRoot = StreamingAnn.resolveRoot(s"$root/index")
@@ -135,7 +136,7 @@ class StreamingAnnRetrainSpec extends SparkSuite {
       "post-retrain delivery did not land in the new generation")
     // byte-copy twins encode to the SAME codes under the frozen
     // artifacts: a deep query over the originals must surface them
-    val fq = StreamingAnn.queryIndexPq(spark, s"$root/index",
+    val fq = StreamingAnn.queryIndex(spark, s"$root/index",
       rows.take(2).toSeq.toDF("vec_id", "embedding"), k = 8, probes = 12)
       .collect()
     assert(fq.exists(_.getLong(2) >= 90000L), "fresh twins not served")
@@ -147,7 +148,7 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     // re-encode is an INNER join against the primary: the synthetic
     // 90000+ twins are not primary rows, so the gen-2 rebuild drops
     // them — a primary-side delete propagates at retrain
-    val fq2 = StreamingAnn.queryIndexPq(spark, s"$root/index",
+    val fq2 = StreamingAnn.queryIndex(spark, s"$root/index",
       rows.take(2).toSeq.toDF("vec_id", "embedding"), k = 8, probes = 12)
       .collect()
     assert(!fq2.exists(_.getLong(2) >= 90000L),
@@ -156,7 +157,63 @@ class StreamingAnnRetrainSpec extends SparkSuite {
     // (never silently skip maintenance)
     val ex = intercept[IllegalStateException](StreamingAnn.retrainIfNeeded(
       spark, s"$root/index", maxShareBp = 1L, kCells = 12))
-    assert(ex.getMessage.contains("retrainIndexPq"), ex.getMessage)
+    assert(ex.getMessage.contains("primary = Some"), ex.getMessage)
+  }
+
+  test("retrain keeps the ingest's attribute columns on every layout") {
+    val spark0 = spark
+    import spark0.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+    val rows = emb.select("vec_id", "embedding", "label").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1), r.getInt(2)))
+    val queries = rows.filter(_._1 < 5).toSeq
+      .map(t => (t._1, t._2)).toDF("vec_id", "embedding")
+    val pred = col("label") === 7
+    val label7 = rows.filter(_._3 == 7).map(_._1).toSet
+    // `label` rides the leaves of two deliveries
+    def ingested(layout: StreamingAnn.Layout): String = {
+      val root = tmpDir(s"st-ann-retrain-attrs-${layout.name}")
+      val input = MemoryStream[(Long, Seq[Float], Int)]
+      val q = StreamingAnn.ivfIngest(
+        input.toDS().toDF("vec_id", "embedding", "label"),
+        s"$root/model.txt", s"$root/index", s"$root/ckpt",
+        kCells = 8, iterations = 2, attrs = Seq("label"), layout = layout)
+      try (0 until 2).foreach { b =>
+        input.addData(rows.filter(_._1 % 2 == b).toSeq: _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      s"$root/index"
+    }
+    def servesLabel(index: String): Unit = {
+      assert(spark.read.parquet(StreamingAnn.resolveRoot(index))
+        .columns.contains("label"), index)
+      val got = StreamingAnn.queryIndex(spark, index, queries, k = 3,
+        probes = 2, predicate = Some(pred)).collect()
+      assert(got.nonEmpty && got.forall(r => label7.contains(r.getLong(2))), index)
+    }
+    // full: the retrained generation keeps `label`, and a filtered
+    // query equals the batch filtered operator on the retrained model
+    val full = ingested(StreamingAnn.Full)
+    assert(StreamingAnn.retrainIndex(spark, full, kCells = 8) === 1L)
+    servesLabel(full)
+    assert(snap(StreamingAnn.queryIndex(spark, full, queries, k = 3,
+      probes = 2, predicate = Some(pred))) === snap(Ann.knnIvfTrainedFiltered(
+      emb, 5, 3, pred, kCells = 8, iterations = 2, probes = 2)))
+    // sq8 retrains in code space and keeps `label` the same way
+    val sq = ingested(StreamingAnn.Sq8)
+    assert(StreamingAnn.retrainIndex(spark, sq, kCells = 8) === 1L)
+    servesLabel(sq)
+    // pq re-encodes from the primary, which must carry the leaves'
+    // attribute columns: one without `label` is refused, naming it
+    val pq = ingested(StreamingAnn.Pq(s"${tmpDir("st-ann-retrain-attrs-books")}/books.txt"))
+    val ex = intercept[IllegalArgumentException](StreamingAnn.retrainIndex(
+      spark, pq, kCells = 8, primary = Some(emb.select("vec_id", "embedding"))))
+    assert(ex.getMessage.contains("label"), ex.getMessage)
+    assert(StreamingAnn.readCurrentGen(pq) === Some(0L))
+    assert(StreamingAnn.retrainIfNeeded(spark, pq, maxShareBp = 1L,
+      kCells = 8, primary = Some(emb)) === Some(1L))
+    servesLabel(pq)
   }
 
   test("drift: concentration collapses the scan bound; retrain at grown kCells restores it") {

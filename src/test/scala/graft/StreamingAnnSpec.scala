@@ -150,13 +150,13 @@ class StreamingAnnSpec extends SparkSuite {
     assert(gotFull === wantFull)
 
     val inputSq = MemoryStream[(Long, Seq[Float])]
-    val qSq = StreamingAnn.ivfIngestSq(
+    val qSq = StreamingAnn.ivfIngest(
       inputSq.toDS().toDF("vec_id", "embedding"),
       s"$root/model-sq.txt", s"$root/index-sq", s"$root/ckpt-sq",
-      kCells = 8, iterations = 2)
+      kCells = 8, iterations = 2, layout = StreamingAnn.Sq8)
     try { inputSq.addData(rows.toSeq: _*); qSq.processAllAvailable() }
     finally qSq.stop()
-    val gotSq = snap(StreamingAnn.queryIndexSq(spark, s"$root/index-sq",
+    val gotSq = snap(StreamingAnn.queryIndex(spark, s"$root/index-sq",
       queries, k = 3, probes = 2))
     val wantSq = snap(Ann.knnIvfSq(emb, numQueries = 5, k = 3,
       kCells = 8, iterations = 2, probes = 2))
@@ -368,9 +368,10 @@ class StreamingAnnSpec extends SparkSuite {
     val root = tmpDir("st-ann-sq")
     val rows = embRows
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = StreamingAnn.ivfIngestSq(
+    val q = StreamingAnn.ivfIngest(
       input.toDS().toDF("vec_id", "embedding"),
-      s"$root/model.txt", s"$root/index", s"$root/ckpt")
+      s"$root/model.txt", s"$root/index", s"$root/ckpt",
+      layout = StreamingAnn.Sq8)
     try {
       (0 until 4).foreach { b =>
         input.addData(rows.filter(_._1 % 4 == b).toSeq: _*)
@@ -391,7 +392,7 @@ class StreamingAnnSpec extends SparkSuite {
     // carries exactly the score a probe-ALL (full corpus) scan gives
     // that pair — cell bounding changes candidates, never scores
     val queries = rows.filter(_._1 < 5).toSeq.toDF("vec_id", "embedding")
-    val res = StreamingAnn.queryIndexSq(spark, s"$root/index",
+    val res = StreamingAnn.queryIndex(spark, s"$root/index",
       queries, k = 3, probes = 2)
     val p = res.queryExecution.executedPlan.toString
     assert(p.linesIterator.find(_.contains("PartitionFilters"))
@@ -399,14 +400,14 @@ class StreamingAnnSpec extends SparkSuite {
     val got = res.collect()
       .map(r => (r.getLong(0), r.getLong(2), r.getLong(3)))
     assert(got.nonEmpty)
-    val allScores = StreamingAnn.queryIndexSq(spark, s"$root/index",
+    val allScores = StreamingAnn.queryIndex(spark, s"$root/index",
       queries, k = Int.MaxValue, probes = 8)
       .collect().map(r => (r.getLong(0), r.getLong(2)) -> r.getLong(3)).toMap
     got.foreach { case (qid, nid, cos) =>
       assert(allScores((qid, nid)) === cos, s"q=$qid n=$nid")
     }
     // compaction is layout-agnostic: same results, bounded leaves
-    def snap() = StreamingAnn.queryIndexSq(spark, s"$root/index",
+    def snap() = StreamingAnn.queryIndex(spark, s"$root/index",
       queries, k = 3, probes = 2).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val before = snap()
@@ -459,9 +460,10 @@ class StreamingAnnSpec extends SparkSuite {
     assert(StreamingAnn.loadBooks(s"$root/books_trunc.txt").isEmpty)
 
     val input = MemoryStream[(Long, Seq[Float])]
-    val qy = StreamingAnn.ivfIngestPq(
+    val qy = StreamingAnn.ivfIngest(
       input.toDS().toDF("vec_id", "embedding"),
-      s"$root/model.txt", s"$root/books.txt", s"$root/index", s"$root/ckpt")
+      s"$root/model.txt", s"$root/index", s"$root/ckpt",
+      layout = StreamingAnn.Pq(s"$root/books.txt"))
     try {
       (0 until 4).foreach { b =>
         input.addData(rows.filter(_._1 % 4 == b).toSeq: _*)
@@ -475,25 +477,28 @@ class StreamingAnnSpec extends SparkSuite {
       Set("vec_id", "c0", "c1", "c2", "c3", "cell", "ingest_batch"),
       idx.schema.treeString)
     assert(idx.count() === rows.length.toLong)
-    // stamped pq; wrong-flavor queries refused
+    // stamped pq; the one query verb serves it by the stamp's rules
+    // (L2 cell ranking + ADC), here at its default single probe
     assert(StreamingAnn.readLayout(StreamingAnn.resolveRoot(s"$root/index"))
       .map(_._1) === Some("pq"))
-    val exFlavor = intercept[IllegalStateException](
-      StreamingAnn.queryIndex(spark, s"$root/index", queries, k = 3))
-    assert(exFlavor.getMessage.contains("queryIndexPq"))
+    assert(StreamingAnn.queryIndex(spark, s"$root/index", queries, k = 3)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+      .toSet === Ann.knnIvfPq(emb, numQueries = 5, k = 3, kCells = 8,
+        iterations = 2, probes = 1).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet)
     // retrain REFUSES a codes-only index (residuals can't re-encode
     // without the primary vectors)
     val exRetrain = intercept[IllegalStateException](
       StreamingAnn.retrainIndex(spark, s"$root/index", kCells = 8))
     assert(exRetrain.getMessage.contains("re-ingest"))
 
-    def snapAdc() = StreamingAnn.queryIndexPq(spark, s"$root/index",
+    def snapAdc() = StreamingAnn.queryIndex(spark, s"$root/index",
       queries, k = 3, probes = 2)
       .collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    def snapRef() = StreamingAnn.queryIndexPqRefined(spark, s"$root/index",
-      queries, emb, k = 3,
-      refine = 10, probes = 2).collect()
+    def snapRef() = StreamingAnn.queryIndex(spark, s"$root/index",
+      queries, k = 3, probes = 2,
+      refine = Some(StreamingAnn.Refine(emb, 10))).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
     val wantAdc = Ann.knnIvfPq(emb, numQueries = 5, k = 3, kCells = 8,
       iterations = 2, probes = 2).collect()
@@ -504,7 +509,7 @@ class StreamingAnnSpec extends SparkSuite {
     assert(snapAdc() === wantAdc)
     assert(snapRef() === wantRef)
     // the probed-cell scan is partition-pruned on cell, like ST7/ST8
-    val plan = StreamingAnn.queryIndexPq(spark, s"$root/index",
+    val plan = StreamingAnn.queryIndex(spark, s"$root/index",
       queries, k = 3, probes = 2)
       .queryExecution.executedPlan.toString
     assert(plan.linesIterator.find(_.contains("PartitionFilters"))
@@ -547,10 +552,10 @@ class StreamingAnnSpec extends SparkSuite {
       Ann.pqCodebooksFromQ(residuals, Ann.PqK, 2))
 
     val input = MemoryStream[(Long, Seq[Float], Int)]
-    val qy = StreamingAnn.ivfIngestPq(
+    val qy = StreamingAnn.ivfIngest(
       input.toDS().toDF("vec_id", "embedding", "label"),
-      s"$root/model.txt", s"$root/books.txt", s"$root/index", s"$root/ckpt",
-      attrs = Seq("label"))
+      s"$root/model.txt", s"$root/index", s"$root/ckpt",
+      attrs = Seq("label"), layout = StreamingAnn.Pq(s"$root/books.txt"))
     try {
       (0 until 4).foreach { b =>
         input.addData(rows.filter(_._1 % 4 == b).toSeq: _*)
@@ -566,24 +571,24 @@ class StreamingAnnSpec extends SparkSuite {
     val pred = col("label") === 7
     val wantF = snap(Ann.knnIvfPqFiltered(emb, numQueries = 5, k = 5,
       pred, probes = 2))
-    assert(snap(StreamingAnn.queryIndexPqFiltered(spark, s"$root/index",
-      queries, k = 5, pred,
+    assert(snap(StreamingAnn.queryIndex(spark, s"$root/index",
+      queries, k = 5, predicate = Some(pred),
       probes = 2)) === wantF)
     // escalated parity at probes = 1 (escalation genuinely fires)
     val wantE = snap(Ann.knnIvfPqFilteredEscalated(emb, numQueries = 5,
       k = 5, pred, probes = 1))
-    def gotE() = snap(StreamingAnn.queryIndexPqFilteredEscalated(spark,
+    def gotE() = snap(StreamingAnn.queryIndex(spark,
       s"$root/index", queries,
-      k = 5, pred, probes = 1))
+      k = 5, predicate = Some(pred), escalate = true, probes = 1))
     assert(gotE() === wantE)
     // forced-dry: a 3-id pool with k = 5 — every query escalates to
     // full coverage and returns exactly the pool (minus itself), the
     // same SET as the batch forced-dry construction
     val ids = Seq(10L, 11L, 12L)
     val predSmall = col("vec_id").isInCollection(ids)
-    val dry = StreamingAnn.queryIndexPqFilteredEscalated(spark,
+    val dry = StreamingAnn.queryIndex(spark,
       s"$root/index", queries,
-      k = 5, predSmall, probes = 1).collect()
+      k = 5, predicate = Some(predSmall), escalate = true, probes = 1).collect()
     val byQ = dry.groupBy(_.getAs[Long]("q_id"))
     (0L until 5L).foreach { qid =>
       val pool = ids.count(_ != qid)
@@ -751,21 +756,28 @@ class StreamingAnnSpec extends SparkSuite {
     assert(StreamingAnn.readLayout(StreamingAnn.resolveRoot(s"$root/index"))
       === Some(("full", 8, 64)))
     val queries = rows.filter(_._1 < 3).toSeq.toDF("vec_id", "embedding")
-    // wrong flavor: refused with the stamp's own description
+    // the pq-only options are refused on a full generation with the
+    // stamp's own description: a query refine and a retrain primary
     val e1 = intercept[IllegalStateException] {
-      StreamingAnn.queryIndexSq(spark, s"$root/index", queries, k = 3)
+      StreamingAnn.queryIndex(spark, s"$root/index", queries, k = 3,
+        refine = Some(StreamingAnn.Refine(queries)))
     }
     assert(e1.getMessage.contains("layout=full"), e1.getMessage)
-    assert(e1.getMessage.contains("queryIndex"), e1.getMessage)
+    val eRetrain = intercept[IllegalStateException] {
+      StreamingAnn.retrainIndex(spark, s"$root/index", kCells = 8,
+        primary = Some(rows.toSeq.toDF("vec_id", "embedding")))
+    }
+    assert(eRetrain.getMessage.contains("layout=full"), eRetrain.getMessage)
+    assert(StreamingAnn.readCurrentGen(s"$root/index") === Some(0L))
     // an ingest of another layout, or of vectors of another length,
     // never appends to the generation
-    for ((tag, ingest, data) <- Seq(
-        ("sq8", StreamingAnn.ivfIngestSq _, rows.take(5).toSeq),
-        ("dims", StreamingAnn.ivfIngest _,
+    for ((tag, layout, data) <- Seq(
+        ("sq8", StreamingAnn.Sq8, rows.take(5).toSeq),
+        ("dims", StreamingAnn.Full,
           rows.take(5).toSeq.map { case (id, e) => (id, e.take(32)) }))) {
       val input2 = MemoryStream[(Long, Seq[Float])]
-      val q2 = ingest(input2.toDS().toDF("vec_id", "embedding"),
-        s"$root/model.txt", s"$root/index", s"$root/ckpt-$tag", 8, 2, Nil)
+      val q2 = StreamingAnn.ivfIngest(input2.toDS().toDF("vec_id", "embedding"),
+        s"$root/model.txt", s"$root/index", s"$root/ckpt-$tag", 8, 2, Nil, layout)
       val e2 = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         try { input2.addData(data: _*); q2.processAllAvailable() }
         finally q2.stop()
@@ -879,11 +891,11 @@ class StreamingAnnSpec extends SparkSuite {
 
   test("randomized model check over a pq-stamped index: same invariant, real re-encode retrain") {
     // the pq layout shares every piece of index machinery (compaction,
-    // generations, vacuum) but is stamped rule=l2 and refuses IN-PLACE
-    // retrain — the op sequence runs against real code-schema leaves,
-    // and the retrain op asserts the in-place refusal then exercises
-    // the REAL re-encode-from-primary path (retrainIndexPq) with random
-    // crash seams
+    // generations, vacuum) but ranks and assigns by squared L2 and
+    // refuses IN-PLACE retrain — the op sequence runs against real
+    // code-schema leaves, and the retrain op asserts the in-place
+    // refusal then exercises the REAL re-encode-from-primary path
+    // (retrainIndex with a primary) with random crash seams
     val seeds = sys.env.getOrElse("GRAFT_MODEL_SEEDS", "42")
       .split(",").toSeq.map(_.trim.toLong)
     seeds.foreach(runModelCheck(_, layout = "pq"))
@@ -909,8 +921,8 @@ class StreamingAnnSpec extends SparkSuite {
     def genOf(r: String): Long = r.stripPrefix(s"$root/index/gen-").toLong
     // the pq mode writes the CODE leaf schema (c0..c3 + a `pl`
     // attribute column): the machinery under test is schema-agnostic,
-    // and `pl` — which the real [[StreamingAnn.retrainIndexPq]] carries
-    // through from the primary store as an attr — is what keeps the
+    // and `pl` — which the real re-encode retrain carries through from
+    // the primary store as an attr — is what keeps the
     // delivering batch decodable across a real re-encode rebuild
     // (post-retrain c0..c3 are genuine ADC codes, opaque by design)
     def writeLeaf(b: Long, vecs: Seq[Long]): Unit = {
@@ -1100,9 +1112,9 @@ class StreamingAnnSpec extends SparkSuite {
                 b * 1000L)
             }.toDF("vec_id", "embedding", "pl")
             val cp = rnd.nextInt(3) // 0 = cutover, 1..2 = crash seams
-            val (_, outId) = StreamingAnn.retrainIndexPqImpl(spark,
-              s"$root/index", primary, kCells = 2, pqK = 4,
-              iterations = 1, attrs = Seq("pl"), crashPoint = cp)
+            val (_, outId) = StreamingAnn.retrainIndexImpl(spark,
+              s"$root/index", kCells = 2, iterations = 1,
+              primary = Some(primary), pqK = 4, crashPoint = cp)
             if (cp == 0) {
               // the new generation holds exactly the elected view
               // under ONE rebuilt leaf id; nothing deleted
@@ -1144,10 +1156,11 @@ class StreamingAnnSpec extends SparkSuite {
         String) => org.apache.spark.sql.streaming.StreamingQuery)] = Seq(
       "full" -> ((df, root, ckpt) => StreamingAnn.ivfIngest(df,
         s"$root/model.txt", s"$root/index", ckpt)),
-      "sq8" -> ((df, root, ckpt) => StreamingAnn.ivfIngestSq(df,
-        s"$root/model.txt", s"$root/index", ckpt)),
-      "pq" -> ((df, root, ckpt) => StreamingAnn.ivfIngestPq(df,
-        s"$root/model.txt", s"$root/books.txt", s"$root/index", ckpt)))
+      "sq8" -> ((df, root, ckpt) => StreamingAnn.ivfIngest(df,
+        s"$root/model.txt", s"$root/index", ckpt, layout = StreamingAnn.Sq8)),
+      "pq" -> ((df, root, ckpt) => StreamingAnn.ivfIngest(df,
+        s"$root/model.txt", s"$root/index", ckpt,
+        layout = StreamingAnn.Pq(s"$root/books.txt"))))
     for ((layout, ingest) <- ingests) {
       val root = tmpDir(s"st-ann-empty-$layout")
       def exists(p: String) = java.nio.file.Files.exists(java.nio.file.Paths.get(p))
@@ -1220,8 +1233,8 @@ class StreamingAnnSpec extends SparkSuite {
     // at both selectivity shapes
     for ((pred, probes) <- Seq(
         (col("label") === 7, 2), (col("label") < 5, 1))) {
-      val got = StreamingAnn.queryIndexFiltered(spark, s"$root/index",
-        queries, k = 3, pred, probes = probes)
+      val got = StreamingAnn.queryIndex(spark, s"$root/index",
+        queries, k = 3, predicate = Some(pred), probes = probes)
       val want = Ann.knnIvfTrainedFiltered(emb, numQueries = 5, k = 3,
         pred, kCells = 8, iterations = 2, probes = probes)
       assert(snap(got) === snap(want), s"pred=$pred probes=$probes")
@@ -1230,8 +1243,8 @@ class StreamingAnnSpec extends SparkSuite {
     // the predicate reaches the parquet scan as a pushed data filter
     // NEXT TO the cell PartitionFilters — filter-then-score, never a
     // post-filter of the finished top-k
-    val plan = StreamingAnn.queryIndexFiltered(spark, s"$root/index",
-      queries, k = 3, col("label") === 7, probes = 2)
+    val plan = StreamingAnn.queryIndex(spark, s"$root/index",
+      queries, k = 3, predicate = Some(col("label") === 7), probes = 2)
       .queryExecution.executedPlan.toString
     val scanLine = plan.linesIterator.find(_.contains("PushedFilters"))
     assert(scanLine.exists(_.contains("label")), plan.take(2500))
@@ -1255,8 +1268,8 @@ class StreamingAnnSpec extends SparkSuite {
     } finally q2.stop()
     val un0 = snap(StreamingAnn.queryIndex(spark, s"$root/index2",
       queries, k = 3, probes = 2))
-    val f0 = snap(StreamingAnn.queryIndexFiltered(spark, s"$root/index2",
-      queries, k = 3, col("label") === 7, probes = 2))
+    val f0 = snap(StreamingAnn.queryIndex(spark, s"$root/index2",
+      queries, k = 3, predicate = Some(col("label") === 7), probes = 2))
     assert(StreamingAnn.compactIndex(spark, s"$root/index2",
       minBatches = 2).nonEmpty)
     StreamingAnn.vacuumGenerations(s"$root/index2", grace = 0)
@@ -1264,8 +1277,8 @@ class StreamingAnnSpec extends SparkSuite {
       .columns.contains("label"))
     assert(snap(StreamingAnn.queryIndex(spark, s"$root/index2",
       queries, k = 3, probes = 2)) === un0)
-    assert(snap(StreamingAnn.queryIndexFiltered(spark, s"$root/index2",
-      queries, k = 3, col("label") === 7,
+    assert(snap(StreamingAnn.queryIndex(spark, s"$root/index2",
+      queries, k = 3, predicate = Some(col("label") === 7),
       probes = 2)) === f0)
   }
 
@@ -1291,19 +1304,19 @@ class StreamingAnnSpec extends SparkSuite {
     def ingest(tag: String, data: Seq[(Long, Seq[Float], Int)],
         attrs: Seq[String]): Unit = {
       val input = MemoryStream[(Long, Seq[Float], Int)]
-      val q = graft.streaming.StreamingAnn.ivfIngestSq(
+      val q = graft.streaming.StreamingAnn.ivfIngest(
         input.toDS().toDF("vec_id", "embedding", "label"),
         s"$root/model.txt", s"$root/$tag", s"$root/ckpt-$tag",
-        kCells = 8, iterations = 2, attrs = attrs)
+        kCells = 8, iterations = 2, attrs = attrs, layout = StreamingAnn.Sq8)
       try { input.addData(data: _*); q.processAllAvailable() }
       finally q.stop()
     }
     ingest("full", rows.toSeq, attrs = Seq("label"))   // trains the model
     ingest("only7", rows.filter(_._3 == 7).toSeq, attrs = Nil) // reuses it
 
-    val got = snap(StreamingAnn.queryIndexSqFiltered(spark, s"$root/full",
-      queries, k = 3, col("label") === 7, probes = 2))
-    val want = snap(StreamingAnn.queryIndexSq(spark, s"$root/only7",
+    val got = snap(StreamingAnn.queryIndex(spark, s"$root/full",
+      queries, k = 3, predicate = Some(col("label") === 7), probes = 2))
+    val want = snap(StreamingAnn.queryIndex(spark, s"$root/only7",
       queries, k = 3, probes = 2))
     assert(got === want)
     assert(got.nonEmpty)
@@ -1338,8 +1351,8 @@ class StreamingAnnSpec extends SparkSuite {
     // exercised in one comparison
     val pred = col("label") === 7
     for (probes <- Seq(1, 2)) {
-      val got = StreamingAnn.queryIndexFilteredEscalated(spark,
-        s"$root/index", queries, k = 8, pred,
+      val got = StreamingAnn.queryIndex(spark,
+        s"$root/index", queries, k = 8, predicate = Some(pred), escalate = true,
         probes = probes)
       val want = Ann.knnIvfTrainedFilteredEscalated(emb, numQueries = 5,
         k = 8, pred, kCells = 8, iterations = 2, probes = probes)
@@ -1353,8 +1366,8 @@ class StreamingAnnSpec extends SparkSuite {
     val dryPool = rows.filter(t => t._3 == 7 && t._1 % 7 == 0)
       .map(_._1).toSet
     assert(dryPool.nonEmpty && dryPool.size < 10)
-    val dry = StreamingAnn.queryIndexFilteredEscalated(spark,
-      s"$root/index", queries, k = 10, dryPred,
+    val dry = StreamingAnn.queryIndex(spark,
+      s"$root/index", queries, k = 10, predicate = Some(dryPred), escalate = true,
       probes = 1).collect()
     val perQ = dry.groupBy(_.getLong(0)).view.mapValues(_.length).toMap
     for (qId <- 0L until 5L) {
@@ -1364,15 +1377,15 @@ class StreamingAnnSpec extends SparkSuite {
       val ids = dry.filter(_.getLong(0) == qId).map(_.getLong(2)).toSet
       assert(ids === (dryPool - qId), s"q=$qId")
     }
-    val fixedDry = StreamingAnn.queryIndexFiltered(spark, s"$root/index",
-      queries, k = 10, dryPred, probes = 1)
+    val fixedDry = StreamingAnn.queryIndex(spark, s"$root/index",
+      queries, k = 10, predicate = Some(dryPred), probes = 1)
     assert(fixedDry.count() < dry.length.toLong)
 
     // the predicate stays a pushed data filter on the SCORED pass next
     // to the cell PartitionFilters (the count pass is audited by the
     // parity + dry results above — same helper, same scan shape)
-    val plan = StreamingAnn.queryIndexFilteredEscalated(spark,
-      s"$root/index", queries, k = 8, pred,
+    val plan = StreamingAnn.queryIndex(spark,
+      s"$root/index", queries, k = 8, predicate = Some(pred), escalate = true,
       probes = 1).queryExecution.executedPlan.toString
     assert(plan.linesIterator.exists(l =>
       l.contains("PushedFilters") && l.contains("label")), plan.take(2500))
@@ -1395,14 +1408,14 @@ class StreamingAnnSpec extends SparkSuite {
         q2.processAllAvailable()
       }
     } finally q2.stop()
-    val e0 = snap(StreamingAnn.queryIndexFilteredEscalated(spark,
-      s"$root/index2", queries, k = 8, pred,
+    val e0 = snap(StreamingAnn.queryIndex(spark,
+      s"$root/index2", queries, k = 8, predicate = Some(pred), escalate = true,
       probes = 1))
     assert(StreamingAnn.compactIndex(spark, s"$root/index2",
       minBatches = 2).nonEmpty)
     StreamingAnn.vacuumGenerations(s"$root/index2", grace = 0)
-    assert(snap(StreamingAnn.queryIndexFilteredEscalated(spark,
-      s"$root/index2", queries, k = 8, pred,
+    assert(snap(StreamingAnn.queryIndex(spark,
+      s"$root/index2", queries, k = 8, predicate = Some(pred), escalate = true,
       probes = 1)) === e0)
   }
 
@@ -1427,10 +1440,10 @@ class StreamingAnnSpec extends SparkSuite {
 
     def ingest(tag: String, data: Seq[(Long, Seq[Float], Int)]): Unit = {
       val input = MemoryStream[(Long, Seq[Float], Int)]
-      val q = StreamingAnn.ivfIngestSq(
+      val q = StreamingAnn.ivfIngest(
         input.toDS().toDF("vec_id", "embedding", "label"),
         s"$root/model.txt", s"$root/$tag", s"$root/ckpt-$tag",
-        kCells = 8, iterations = 2, attrs = Seq("label"))
+        kCells = 8, iterations = 2, attrs = Seq("label"), layout = StreamingAnn.Sq8)
       try { input.addData(data: _*); q.processAllAvailable() }
       finally q.stop()
     }
@@ -1438,11 +1451,11 @@ class StreamingAnnSpec extends SparkSuite {
     ingest("only7", rows.filter(_._3 == 7).toSeq)     // reuses it
 
     val pred = col("label") === 7
-    val got = snap(StreamingAnn.queryIndexSqFilteredEscalated(spark,
-      s"$root/full", queries, k = 8, pred,
+    val got = snap(StreamingAnn.queryIndex(spark,
+      s"$root/full", queries, k = 8, predicate = Some(pred), escalate = true,
       probes = 1))
-    val want = snap(StreamingAnn.queryIndexSqFilteredEscalated(spark,
-      s"$root/only7", queries, k = 8, pred,
+    val want = snap(StreamingAnn.queryIndex(spark,
+      s"$root/only7", queries, k = 8, predicate = Some(pred), escalate = true,
       probes = 1))
     assert(got === want)
     assert(got.nonEmpty)
@@ -1452,8 +1465,8 @@ class StreamingAnnSpec extends SparkSuite {
     val dryPred = pred && col("vec_id") % 7 === 0
     val dryPool = rows.filter(t => t._3 == 7 && t._1 % 7 == 0)
       .map(_._1).toSet
-    val dry = StreamingAnn.queryIndexSqFilteredEscalated(spark,
-      s"$root/full", queries, k = 10, dryPred,
+    val dry = StreamingAnn.queryIndex(spark,
+      s"$root/full", queries, k = 10, predicate = Some(dryPred), escalate = true,
       probes = 1).collect()
     for (qId <- 0L until 5L) {
       val ids = dry.filter(_.getLong(0) == qId).map(_.getLong(2)).toSet
@@ -1481,5 +1494,21 @@ class StreamingAnnSpec extends SparkSuite {
     }
     // and one cutover: the `_current` pointer is written at one site
     assert(SourceScan.matches("""(?<!def )writeCurrentGen\(""") === 1)
+    // one on-disk verb per operation: ingest, query and retrain read the
+    // layout from the generation's stamp, so no per-layout entry point
+    // or wrong-flavor check returns
+    Seq("ivfIngestSq", "ivfIngestPq", "queryIndexSq", "queryIndexPq",
+      "queryIndexFiltered", "retrainIndexPq", "requireLayout").foreach { needle =>
+      assert(SourceScan.occurrences(needle) === 0, needle)
+    }
+    // escalation is a query option, and the sq8 query codes come from
+    // Ann.withInt8Cols rather than a driver-side copy of the int8 rule
+    // (the batch `Ann.*FilteredEscalated` operators are not on-disk verbs)
+    val streamingAnn = SourceScan.sources
+      .collectFirst { case (path, text) if path.endsWith("StreamingAnn.scala") => text }
+    assert(streamingAnn.nonEmpty)
+    Seq("FilteredEscalated(", "HALF_UP").foreach { needle =>
+      assert(!streamingAnn.get.contains(needle), needle)
+    }
   }
 }
